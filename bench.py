@@ -609,7 +609,10 @@ def main() -> None:
             sys.exit(3)
         return
 
-    from mape_calculation_and_anonymization_spark.session import get_spark
+    from mape_calculation_and_anonymization_spark.session import (
+        get_spark,
+        resolve_cpus,
+    )
 
     import __spark_entry__ as entrymod
 
@@ -819,8 +822,7 @@ def main() -> None:
     # driver's scaling pass runs at 8) must be distinguishable and
     # must never overwrite the 32-core per-query map or be judged
     # against the 32-core history.
-    cpus_env = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    cpus = os.cpu_count() if cpus_env in ("", "*") else int(cpus_env)
+    cpus = resolve_cpus() or os.cpu_count()
     payload = {
         "metric": "total_query_time",
         "value": total,

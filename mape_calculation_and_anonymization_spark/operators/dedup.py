@@ -364,62 +364,6 @@ def gated_cluster_representatives(
     )
 
 
-def cluster_representatives_scorecard(
-    members: DataFrame,
-    cluster_col: str = "cluster",
-    id_col: str = "doc_id",
-    quality_col: str = "quality",
-    passed_col: str = "passed",
-) -> DataFrame:
-    """BOTH representative decisions per near-dup cluster in ONE hash
-    aggregate — the fusion of the plain keep-best pick and
-    :func:`gated_cluster_representatives` (round-17-ready; the same
-    capacity-ceiling move as ``drift_scorecard``): per cluster, the
-    ungated winner (``kept_id``/``kept_quality`` — highest quality,
-    id tie-break; always present) AND the gate-aware winner
-    (``kept_id_gated``/``kept_quality_gated`` — NULL = explicit
-    whole-cluster drop), plus ``n_members``/``n_pass``.
-
-    Shape: where each parent pays a cluster-partitioned WINDOW (hash
-    exchange + sort), the fusion is a single map-side-combinable
-    ``groupBy(cluster)`` — both winners come from ``max_by`` over
-    ordering structs ((quality, −id) and (passed, quality, −id)), so
-    there is no sort at all and the two decisions share one exchange.
-    Unique ids make the ordering structs unique, so the picks are
-    deterministic and equal the parents' row_number-1 rows exactly
-    (pinned in tests). NULL ``passed_col`` is coalesced to FAIL (the
-    parents' upstream convention, enforced here defensively)."""
-    passed = F.coalesce(F.col(passed_col), F.lit(False))
-    ord_best = F.struct(
-        F.col(quality_col).alias("q"), (-F.col(id_col)).alias("nid")
-    )
-    ord_gated = F.struct(
-        passed.cast("int").alias("p"),
-        F.col(quality_col).alias("q"),
-        (-F.col(id_col)).alias("nid"),
-    )
-    agg = members.groupBy(cluster_col).agg(
-        F.max_by(F.col(id_col), ord_best).alias("kept_id"),
-        F.max_by(F.col(quality_col), ord_best).alias("kept_quality"),
-        F.max_by(F.col(id_col), ord_gated).alias("_gid"),
-        F.max_by(F.col(quality_col), ord_gated).alias("_gq"),
-        F.max(passed).alias("_any_pass"),
-        F.count(F.lit(1)).alias("n_members"),
-        F.sum(passed.cast("long")).alias("n_pass"),
-    )
-    return agg.select(
-        cluster_col,
-        "kept_id",
-        "kept_quality",
-        F.when(F.col("_any_pass"), F.col("_gid")).alias("kept_id_gated"),
-        F.when(F.col("_any_pass"), F.col("_gq")).alias(
-            "kept_quality_gated"
-        ),
-        "n_members",
-        "n_pass",
-    )
-
-
 def _bloom_probes(df: DataFrame, col: str, num_bits: int, num_hashes: int):
     """Per-row Bloom probe positions: ``num_hashes`` independent
     64-bit hashes (xxhash64 seeded by a literal salt column) mapped

@@ -72,117 +72,6 @@ def rrf_fuse(
     )
 
 
-def rescore_top_k(
-    candidates: DataFrame,
-    texts: DataFrame,
-    embeddings: DataFrame,
-    query_col: str = "query_id",
-    id_col: str = "doc_id",
-    text_id_col: str = "doc_id",
-    text_col: str = "text",
-    vec_id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n: int = 3,
-    alpha: float = 0.5,
-    k: int = 5,
-    round_scale: int | None = 6,
-) -> DataFrame:
-    """Exact re-scoring rerank over a fused shortlist — the stage a
-    production stack runs where a cross-encoder would go when the
-    shortlist is already answer-sized: recompute BOTH retrieval
-    features exactly for every (query, candidate) pair and re-rank on
-    their blend ``alpha·cosine + (1−alpha)·jaccard``. The point over
-    :func:`rrf_fuse` alone: a candidate surfaced by only ONE leg has
-    no score from the other (RRF sees only its single reciprocal);
-    the rerank completes the missing feature on the shortlist, where
-    it costs |queries|·k pair evaluations instead of a corpus pass.
-
-    ``candidates`` carries (query_col, id_col) — answer-sized by
-    contract (a fused top-k per query). ``texts`` and ``embeddings``
-    are corpus tables; both ids of every pair must resolve in both
-    (inner-join contract — the aligned doc/vec fixtures; a production
-    caller left-joins defaults upstream if its corpus is partial).
-
-    Scale shape: four broadcast-hash joins of the answer-sized frame
-    against the corpus tables (two text lookups, two vector lookups)
-    — zero CORPUS shuffles (the one exchange this stage adds is the
-    per-query rank window over the answer-sized scored frame), zero
-    corpus×corpus products, and the per-pair math
-    (``array_intersect`` on distinct n-gram arrays, element-order
-    ``dot``) is whole-stage-codegen JVM. The blend keeps the exact
-    expression shape the DuckDB twin uses (element-order dot ↔
-    ``list_dot_product``; int-exact set sizes), so ranking on the
-    UNROUNDED score is engine-portable; display columns round after
-    ranking."""
-    from mape_calculation_and_anonymization_spark.operators.dedup import (
-        word_ngrams,
-    )
-    from mape_calculation_and_anonymization_spark.operators.similarity import (
-        cosine,
-    )
-
-    cand = candidates.select(query_col, id_col)
-    toks = texts.select(
-        F.col(text_id_col).alias("_tid"),
-        word_ngrams(text_col, n).alias("_toks"),
-    )
-    qt = toks.select(
-        F.col("_tid").alias(query_col), F.col("_toks").alias("_qt")
-    )
-    dt = toks.select(
-        F.col("_tid").alias(id_col), F.col("_toks").alias("_dt")
-    )
-    vecs = embeddings.select(
-        F.col(vec_id_col).alias("_vid"), F.col(vec_col).alias("_vec")
-    )
-    qv = vecs.select(
-        F.col("_vid").alias(query_col), F.col("_vec").alias("_qv")
-    )
-    dv = vecs.select(F.col("_vid").alias(id_col), F.col("_vec").alias("_dv"))
-    inter = F.size(F.array_intersect("_qt", "_dt")).cast("double")
-    jac = F.try_divide(
-        inter,
-        F.size("_qt").cast("double") + F.size("_dt").cast("double") - inter,
-    )
-    # lexical feature first, projected to a scalar so the later
-    # broadcasts never carry token arrays
-    lex = (
-        dt.join(
-            F.broadcast(qt.join(F.broadcast(cand), query_col)), id_col
-        )
-        .select(query_col, id_col, jac.alias("_jac"))
-    )
-    scored = dv.join(
-        F.broadcast(qv.join(F.broadcast(lex), query_col)), id_col
-    ).select(
-        query_col,
-        id_col,
-        "_jac",
-        cosine(F.col("_qv"), F.col("_dv")).alias("_cos"),
-    )
-    blend = F.lit(float(alpha)) * F.col("_cos") + F.lit(
-        1.0 - float(alpha)
-    ) * F.col("_jac")
-    w = Window.partitionBy(query_col).orderBy(
-        blend.desc(), F.col(id_col).asc()
-    )
-    out = scored.withColumn("rerank", F.row_number().over(w)).filter(
-        F.col("rerank") <= k
-    )
-
-    def rounded(c):
-        return F.round(c, round_scale) if round_scale is not None else c
-
-    return out.select(
-        query_col,
-        id_col,
-        rounded(F.col("_cos")).alias("cosine_sim"),
-        rounded(F.col("_jac")).alias("jaccard_sim"),
-        rounded(blend).alias("rerank_score"),
-        "rerank",
-    )
-
-
 def jaccard_top_k(
     queries: DataFrame,
     corpus: DataFrame,

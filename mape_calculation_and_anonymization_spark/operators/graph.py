@@ -266,18 +266,22 @@ def pagerank(
     sym_w = sym.join(deg, "u").select(
         "u", "v", (F.lit(1.0) / F.col("deg")).alias("w")
     ).persist()
-    sym_w.count()
-    ranks = deg.select("u", F.lit(1.0 / n).alias("rank"))
-    for i in range(iterations):
-        contrib = sym_w.join(ranks, "u").select(
-            F.col("v").alias("u"), (F.col("rank") * F.col("w")).alias("c")
-        )
-        ranks = contrib.groupBy("u").agg(
-            (F.lit(base) + F.lit(damping) * F.sum("c")).alias("rank")
-        )
-        if (i + 1) % checkpoint_every == 0 or i + 1 == iterations:
-            ranks = ranks.localCheckpoint(eager=True)
-    # the final ranks checkpoint is materialized — the cache has no
-    # remaining consumer (don't leak it into the caller's session)
-    sym_w.unpersist()
+    try:
+        sym_w.count()
+        ranks = deg.select("u", F.lit(1.0 / n).alias("rank"))
+        for i in range(iterations):
+            contrib = sym_w.join(ranks, "u").select(
+                F.col("v").alias("u"),
+                (F.col("rank") * F.col("w")).alias("c"),
+            )
+            ranks = contrib.groupBy("u").agg(
+                (F.lit(base) + F.lit(damping) * F.sum("c")).alias("rank")
+            )
+            if (i + 1) % checkpoint_every == 0 or i + 1 == iterations:
+                ranks = ranks.localCheckpoint(eager=True)
+    finally:
+        # the final ranks checkpoint is materialized — the cache has no
+        # remaining consumer on any exit path (don't leak it into the
+        # caller's session)
+        sym_w.unpersist()
     return ranks.select(F.col("u").alias("id"), "rank")

@@ -451,98 +451,3 @@ def leakage_safe_split(
     return joined.withColumn(
         "split", hash_split(F.col("_leak_cluster"), fractions, salt=salt)
     ).withColumnRenamed("_leak_cluster", cluster_col)
-
-
-def leakage_safe_split_incremental(
-    standing: DataFrame,
-    new_docs: DataFrame,
-    clusters: DataFrame,
-    fractions: dict[str, float],
-    id_col: str = "doc_id",
-    cluster_col: str = "cluster",
-    split_col: str = "split",
-    salt: str = "split",
-) -> DataFrame:
-    """Daily-drop face of :func:`leakage_safe_split` under the
-    frozen-standing contract (round-17-ready; the same contract as
-    ``semantic_dedup_incremental`` / ``minhash_incremental_pairs``,
-    applied to splits): yesterday's split assignments are FROZEN — a
-    doc already routed to test must never migrate to train just
-    because today's drop re-shaped its near-dup cluster (eval-set
-    stability is the whole point of a content-keyed split) — and
-    every NEW doc takes the split that keeps near-dup pairs from
-    straddling boundaries wherever one exists.
-
-    ``standing`` carries (id_col, split_col) — yesterday's ledger.
-    ``new_docs`` carries id_col. ``clusters`` is the UPDATED near-dup
-    map over standing ∪ new (the graph operator's (id, component-min
-    cluster) convention; docs absent from the map are singletons —
-    the parent's COALESCE rule). Assignment per updated cluster:
-
-    * standing docs keep their standing split verbatim (frozen);
-    * new docs in a cluster with standing members inherit the split
-      of the cluster's MINIMUM-ID standing member (a deterministic
-      anchor — under the component-min convention the anchor is the
-      cluster representative whenever that representative is
-      standing);
-    * new docs in an all-new cluster take the parent's md5-band rule
-      on the cluster id — so on an empty standing ledger the
-      operator degenerates to :func:`leakage_safe_split` exactly;
-    * ``leak_flag`` marks every doc of a cluster whose STANDING
-      members already disagree on split — the one case freezing
-      cannot repair: today's drop bridged two standing clusters that
-      sat on opposite sides of a boundary, so some cross-split
-      near-dup pair now exists no matter what the new docs are
-      assigned. The flag is the quarantine signal; the assignment
-      itself stays deterministic (the anchor rule).
-
-    Scale shape: one hash join of the union ledger to the cluster
-    map, one map-side-combinable per-cluster profile aggregate
-    (min_by anchor + distinct-split count — cluster-count-sized
-    output), one hash join back on the cluster key; the second join
-    reuses the profile aggregate's partitioning. Nothing quadratic,
-    nothing collected.
-
-    Output: (id_col, cluster_col, split_col, is_new, leak_flag),
-    one row per doc in standing ∪ new."""
-    std = standing.select(
-        F.col(id_col),
-        F.lit(False).alias("is_new"),
-        F.col(split_col).alias("_std_split"),
-    )
-    new = new_docs.select(
-        F.col(id_col),
-        F.lit(True).alias("is_new"),
-        F.lit(None).cast("string").alias("_std_split"),
-    )
-    cmap = clusters.select(
-        F.col(id_col), F.col(cluster_col).alias("_cl")
-    )
-    j = (
-        std.unionByName(new)
-        .join(cmap, id_col, "left")
-        .withColumn("_cl", F.coalesce(F.col("_cl"), F.col(id_col)))
-    )
-    prof = (
-        j.filter(~F.col("is_new"))
-        .groupBy("_cl")
-        .agg(
-            F.min_by("_std_split", F.col(id_col)).alias("_anchor"),
-            F.countDistinct("_std_split").alias("_n_std_splits"),
-        )
-    )
-    out = j.join(prof, "_cl", "left")
-    assigned = (
-        F.when(~F.col("is_new"), F.col("_std_split"))
-        .when(F.col("_anchor").isNotNull(), F.col("_anchor"))
-        .otherwise(hash_split(F.col("_cl"), fractions, salt=salt))
-    )
-    return out.select(
-        id_col,
-        F.col("_cl").alias(cluster_col),
-        assigned.alias(split_col),
-        "is_new",
-        F.coalesce(F.col("_n_std_splits") > 1, F.lit(False)).alias(
-            "leak_flag"
-        ),
-    )

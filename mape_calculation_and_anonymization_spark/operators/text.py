@@ -288,9 +288,7 @@ def chunk_documents(
     )
 
 
-def ngram_repetition_stats(
-    df, id_col: str, text_col: str, n: int = 3, join_to=None
-):
+def ngram_repetition_stats(df, id_col: str, text_col: str, n: int = 3):
     """Corpus-scale form of :func:`ngram_repetition_ratio`: explode the
     n-grams and hash-aggregate count vs distinct-count per document,
     then join back (docs shorter than ``n`` tokens score 0).
@@ -301,11 +299,7 @@ def ngram_repetition_stats(
     codegen'd aggregation with map-side partials — the same
     inline-vs-explode duality as minhash_signature/minhash_signatures.
 
-    Output: (id_col, rep{n}: double). ``join_to`` (round 16) lets a
-    caller that already holds a per-doc frame keyed by ``id_col``
-    (e.g. the fused text scorecard's metric projection) receive the
-    stats onto THAT frame instead of a bare id projection — one fewer
-    corpus scan; with the default None the output is unchanged."""
+    Output: (id_col, rep{n}: double)."""
     from .rebalance import ensure_min_partitions
 
     toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
@@ -334,11 +328,11 @@ def ngram_repetition_stats(
         F.count(F.lit(1)).alias("_total"),
         F.countDistinct("_gram").alias("_distinct"),
     )
-    target = df.select(id_col) if join_to is None else join_to
     return (
-        target.join(agg, on=id_col, how="left")
+        df.select(id_col)
+        .join(agg, on=id_col, how="left")
         .select(
-            *[F.col(c) for c in target.columns],
+            F.col(id_col),
             F.coalesce(
                 F.lit(1.0) - F.col("_distinct").cast("double") / F.col("_total"),
                 F.lit(0.0),

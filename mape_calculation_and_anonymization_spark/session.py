@@ -16,6 +16,24 @@ import os
 from pyspark.sql import SparkSession
 
 
+def resolve_cpus(cpus: str | int | None = None) -> int | None:
+    """Local core count from ``cpus``, else $SPARK_GRAFT_CPUS.
+
+    ``''`` and ``'*'`` (and an unset variable) mean all local cores and
+    return None; a positive integer means that many. Anything else
+    raises ValueError naming the variable."""
+    if cpus is None:
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    text = str(cpus)
+    if text in ("", "*"):
+        return None
+    if text.isdigit() and int(text) > 0:
+        return int(text)
+    raise ValueError(
+        f"SPARK_GRAFT_CPUS must be '*', empty, or a positive integer, got {cpus!r}"
+    )
+
+
 def get_spark(
     app_name: str = "mape_anonymization_spark",
     cpus: str | int | None = None,
@@ -26,13 +44,12 @@ def get_spark(
 
     ``cpus`` defaults to $SPARK_GRAFT_CPUS, else all local cores.
     """
-    if cpus is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    n_cpus = resolve_cpus(cpus)
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
     builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        SparkSession.builder.master(f"local[{n_cpus or '*'}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")

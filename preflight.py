@@ -84,14 +84,7 @@ def main(argv: list[str]) -> int:
         sf_dir, argv = argv[1], argv[2:]
         default_sf = False
     qs = entrymod.queries()
-    # oracle_sql() is pinned to the driver's sf0.01; --sf sweeps need
-    # the sf-embedded paths (K2's CSV sidecar) re-derived for the
-    # requested scale factor (VERDICT r9 item 7)
-    oracles = (
-        entrymod.oracle_sql()
-        if default_sf
-        else entrymod.oracle_sql_at(sf_dir)
-    )
+    oracles = entrymod.oracle_sql_at(sf_dir)
 
     if argv and argv[0] == "--plan-window":
         return plan_window()
@@ -111,19 +104,14 @@ def main(argv: list[str]) -> int:
         print(f"  --changed: {len(names)} stale of {len(qs)}",
               file=sys.stderr)
     elif argv:
-        # explicit names: validate up front so a typo or a built-but-
-        # not-yet-registered operator ("round-N-ready") reports
+        # explicit names: validate up front so a typo reports
         # usefully instead of surfacing as a bare KeyError mid-loop
-        # (VERDICT r9 "What's wrong" #2)
         unknown = [n for n in argv if n not in qs]
         if unknown:
             known = ", ".join(sorted(qs))
             for n in unknown:
                 print(
-                    f"preflight: {n!r} is not in the queries() registry "
-                    "(built but not registered yet — round-N-ready?). "
-                    "Register it in __spark_entry__.py, or pick one of "
-                    "the registered names.",
+                    f"preflight: {n!r} is not in the queries() registry.",
                     file=sys.stderr,
                 )
             print(f"registered names: {known}", file=sys.stderr)
@@ -193,13 +181,15 @@ def plan_window() -> int:
          docstring);
       3. the remaining oldest-green queries, oldest first.
 
-    Emits the ordered 50 names as ready-to-paste dict lines plus a
-    category summary. The registry itself stays hand-ordered (the
-    driver reads a static dict), so this is a planning aid, not a
-    runtime mutation — run it at the START of a round, paste, and let
-    test_rotation_hygiene confirm."""
+    Emits the ordered 50 names as ready-to-paste registry rows (the
+    entry file's own (name, builder, oracle) row, re-tagged with its
+    last green round) plus a category summary. The registry itself
+    stays hand-ordered (the driver reads a static table), so this is a
+    planning aid, not a runtime mutation — run it at the START of a
+    round, paste, and let test_rotation_hygiene confirm."""
     import glob
     import os
+    import re
 
     import __spark_entry__ as entrymod
 
@@ -245,10 +235,15 @@ def plan_window() -> int:
     print(f"# window plan for round {upcoming} "
           f"({len(candidates)} oracle-backed; {len(must)} must-include "
           f"this round{'; OVERFLOW — more must-includes than slots: ' + str(dropped_must) if dropped_must else ''})")
+    with open(entrymod.__file__) as fh:
+        rows = {
+            m.group(2): m.group(1)
+            for m in re.finditer(r'^    (\("(\w+)", [^#]*\),)', fh.read(), re.M)
+        }
     for n in window:
         lg = last_green.get(n)
         tag = "never" if lg is None else f"r{lg}"
-        print(f'        "{n}": _q_{n},  # last green: {tag}')
+        print(f"    {rows[n]}  # last green: {tag}")
     print(f"# below window: {len(overflow)} oracle-backed "
           f"(newest-green) + rows-only entries")
     return 1 if dropped_must else 0

@@ -780,3 +780,52 @@ def test_minhash_incremental_equals_full_restriction(spark):
     # the planted (standing doc 5, drop doc 9001) pair is the
     # guaranteed new_standing detection
     assert any(t == "new_standing" for _, t in got.values())
+
+
+def test_exactsubstr_cut_conservation(spark):
+    """Per-doc conservation + answer sanity at sf0.001: removed +
+    clean == original token count, and the planted dup density of the
+    testdata yields at least one cut document."""
+    import __spark_entry__ as e
+
+    sf = e.SF0001
+
+    rows = e._q_exactsubstr_cut(spark, sf).collect()
+    docs = {
+        r["doc_id"]: len(r["text"].strip().lower().split())
+        for r in e.load_table(spark, sf, "documents")
+        .select("doc_id", "text")
+        .collect()
+        if r["text"] is not None
+    }
+    assert len(rows) == len(docs)
+    assert any(r["action"] == "cut" for r in rows)
+    for r in rows:
+        # re.split-vs-str.split parity only diverges on empty text,
+        # which this fixture does not contain
+        assert r["tokens_removed"] + r["n_tokens_clean"] == docs[r["doc_id"]]
+
+
+def test_minhash_incremental_answer_shape(spark):
+    """Every planted twin pairs with its original as new_standing
+    (jaccard well above 0.6 for multi-gram docs), and the answer is
+    exactly the registered full-pipeline query's pairs restricted to
+    twin-touching ones."""
+    import __spark_entry__ as e
+
+    sf = e.SF0001
+
+    rows = e._q_minhash_incremental(spark, sf).collect()
+    assert rows
+    got = {(r["id_a"], r["id_b"]): r["pair_type"] for r in rows}
+    full = {
+        (r["id_a"], r["id_b"])
+        for r in e._q_dedup_minhash_pairs(spark, sf).collect()
+        if r["id_a"] >= 1_000_000 or r["id_b"] >= 1_000_000
+    }
+    assert set(got) == full
+    for (ia, ib), t in got.items():
+        assert t == (
+            "new_new" if ia >= 1_000_000 and ib >= 1_000_000
+            else "new_standing"
+        )

@@ -701,3 +701,151 @@ def test_ivf_rebalance_empty_cell_keeps_old_centroid(spark):
     assert got[7] == [9.0, 9.0]  # memberless: old centroid retained
     # both vectors stay nearer the refreshed cell-0 centroid
     assert {r["cluster"] for r in a2.collect()} == {0}
+
+
+def test_semantic_dedup_gated_keep_semantics(spark):
+    """Pipeline-level pins at sf0.001: every gate-passing original
+    survives (its known-bad twin can never dominate it), every twin
+    drops, and originals failing their own gates drop with their twin
+    (whole-group drop) — so kept == the passing originals exactly."""
+    import __spark_entry__ as e
+
+    sf = e.SF0001
+
+    rows = {r["vec_id"]: r for r in e._q_semantic_dedup_gated(spark, sf).collect()}
+    originals = {v: r for v, r in rows.items() if v < 1_000_000}
+    twins = {v: r for v, r in rows.items() if v >= 1_000_000}
+    assert originals and twins
+    assert not any(r["kept"] for r in twins.values())
+    for v, r in originals.items():
+        assert r["kept"] == r["passed"], v
+    assert any(r["kept"] for r in originals.values())
+    assert any(not r["passed"] for r in originals.values()), (
+        "fixture should contain at least one gate-failing doc or the "
+        "whole-group-drop branch is untested"
+    )
+
+
+def test_hybrid_search_rrf_shape(spark):
+    """Every query emits a fused top-10, ranks are contiguous from 1,
+    and a doc present in BOTH legs at rank 1 dominates any
+    single-leg doc (2/(60+1) > 1/(60+1) ≥ any single reciprocal)."""
+    import __spark_entry__ as e
+
+    sf = e.SF0001
+
+    rows = e._q_hybrid_search_rrf(spark, sf).collect()
+    by_q = {}
+    for r in rows:
+        by_q.setdefault(r["query_id"], []).append(r)
+    assert by_q  # non-degenerate
+    for q, rs in by_q.items():
+        ranks = sorted(r["fused_rank"] for r in rs)
+        assert ranks == list(range(1, len(ranks) + 1)), (q, ranks)
+        scores = [r["rrf_score"] for r in sorted(rs, key=lambda r: r["fused_rank"])]
+        assert scores == sorted(scores, reverse=True)
+
+
+def test_rrf_fuse_both_lists_dominate(spark):
+    """Operator contract: a doc at rank 1 in BOTH lists outscores a
+    doc at rank 1 in only one list; absent-from-one-list docs get
+    exactly the single reciprocal; id breaks score ties."""
+    from mape_calculation_and_anonymization_spark.operators.fusion import rrf_fuse
+
+    a = spark.createDataFrame(
+        [(1, 10, 1), (1, 11, 2)], ["query_id", "doc_id", "rank"]
+    )
+    b = spark.createDataFrame(
+        [(1, 10, 1), (1, 12, 1)], ["query_id", "doc_id", "rank"]
+    )
+    out = {
+        r["doc_id"]: (r["rrf_score"], r["fused_rank"])
+        for r in rrf_fuse(a, b, k=10).collect()
+    }
+    assert out[10][1] == 1  # in both lists at rank 1 → wins
+    # scores are rounded to 6 decimals in the projection
+    assert abs(out[10][0] - 2 / 61) < 1e-6
+    assert abs(out[12][0] - 1 / 61) < 1e-6
+    assert abs(out[11][0] - 1 / 62) < 1e-6
+    # 12 (1/61) beats 11 (1/62); ties would fall back to id asc
+    assert out[12][1] == 2 and out[11][1] == 3
+
+
+def test_jaccard_top_k_self_excluded_and_ranked(spark):
+    from mape_calculation_and_anonymization_spark.operators.fusion import (
+        jaccard_top_k,
+    )
+
+    docs = spark.createDataFrame(
+        [
+            (0, "alpha beta gamma delta"),
+            (1, "alpha beta gamma epsilon"),
+            (2, "zeta eta theta iota"),
+            (3, "alpha beta gamma delta extra"),
+        ],
+        ["doc_id", "text"],
+    )
+    q = docs.filter(F.col("doc_id") == 0)
+    got = {
+        r["doc_id"]: r["rank"]
+        for r in jaccard_top_k(q, docs, n=3, k=10).collect()
+    }
+    assert 0 not in got  # self excluded
+    assert got[3] == 1 and got[1] == 2  # 3 shares 2 grams, 1 shares 1
+    assert 2 not in got  # no shared shingle → no candidate row
+
+
+def test_semantic_dedup_incremental_fates(spark):
+    """The three planted drop fates land exactly: every ×1.01 twin
+    dropped against its kept standing original (frozen-standing rule),
+    every ×1.02 twin dropped (its ×1.01 sibling precedes it in-drop),
+    every negated copy kept (cosine −1 to its original)."""
+    import __spark_entry__ as e
+
+    sf = e.SF0001
+
+    rows = e._q_semantic_dedup_incremental(spark, sf).collect()
+    by_bucket = {}
+    for r in rows:
+        by_bucket.setdefault(r["vec_id"] // 1_000_000, []).append(r["kept"])
+    assert set(by_bucket) == {1, 2, 3}
+    assert not any(by_bucket[1]) and len(by_bucket[1]) > 0
+    assert not any(by_bucket[2]) and len(by_bucket[2]) > 0
+    assert all(by_bucket[3]) and len(by_bucket[3]) > 0
+
+
+def test_semantic_dedup_incremental_empty_standing_equals_full(spark):
+    """With an empty standing corpus the incremental rule degenerates
+    to semantic_dedup of the drop exactly."""
+    import __spark_entry__ as e
+    from mape_calculation_and_anonymization_spark.fixtures import load_table
+    from mape_calculation_and_anonymization_spark.operators.similarity import (
+        semantic_dedup,
+        semantic_dedup_incremental,
+    )
+
+    sf = e.SF0001
+
+    _, centroids = e._ivf_index_cached(spark, sf, n_clusters=48)
+    emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
+    twins = emb.select(
+        (F.col("vec_id") + F.lit(1_000_000)).alias("vec_id"),
+        F.transform(F.col("embedding"), lambda x: x * F.lit(1.01)).alias(
+            "embedding"
+        ),
+    )
+    drop = emb.unionByName(twins)
+    empty = spark.createDataFrame([], drop.schema).withColumn(
+        "kept", F.lit(True)
+    )
+    inc = {
+        r["vec_id"]: (r["cluster"], r["centroid_sim"], r["kept"])
+        for r in semantic_dedup_incremental(
+            empty, drop, centroids, threshold=0.98
+        ).collect()
+    }
+    full = {
+        r["vec_id"]: (r["cluster"], r["centroid_sim"], r["kept"])
+        for r in semantic_dedup(drop, centroids, threshold=0.98).collect()
+    }
+    assert inc == full and len(inc) > 0

@@ -517,3 +517,22 @@ def test_decontaminate_corpus_two_spans(spark):
     r = decontaminate_corpus(train, bench, n=3, drop_threshold=0.9).collect()[0]
     assert (r["action"], r["n_spans_cut"], r["tokens_removed"]) == ("cut", 2, 6)
     assert r["n_tokens_clean"] == 3  # filler words tail
+
+
+def test_repetition_stats_columns_and_ratios(spark):
+    """ngram_repetition_stats returns (id, rep{n}) for every input row:
+    1 - distinct/total over the exploded grams, 0 for docs shorter
+    than ``n`` tokens and for NULL text."""
+    from mape_calculation_and_anonymization_spark.operators.text import (
+        ngram_repetition_stats,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "a b c a b c"), (2, "x y"), (3, None)], ["doc_id", "text"]
+    )
+    out = ngram_repetition_stats(df, "doc_id", "text", 3)
+    assert out.columns == ["doc_id", "rep3"]
+    rows = {r["doc_id"]: r["rep3"] for r in out.collect()}
+    # "a b c a b c": grams [abc,bca,cab,abc] → 1 - 3/4
+    assert abs(rows[1] - 0.25) < 1e-9
+    assert rows[2] == 0.0 and rows[3] == 0.0

@@ -1,21 +1,25 @@
-"""Round-18 optimization tooling — tools_r17 plus two round-18 needs:
+"""Query inspection tooling: capture plans, count jobs and time
+queries in isolation (outside the full-suite neighborhood, per the
+bench methodology note that registry order moves state-cleanup tax
+between queries).
 
+* ``explain``: the formatted physical plan of each query.
 * ``explain-full``: like ``explain``, but with ``localCheckpoint``
   monkeypatched to identity while the query CONSTRUCTS, so the dump
   shows the whole lineage instead of a checkpoint-truncated
-  ``Scan ExistingRDD`` (VERDICT r17 item 2: the minhash-family dumps
-  proved nothing). Capture-only: the patch lives for the duration of
-  the construction call and never touches a timed or verified run.
+  ``Scan ExistingRDD``. Capture-only: the patch lives for the
+  duration of the construction call and never touches a timed or
+  verified run.
+* ``time``: median wall time of ``runs`` noop-sink drains after one
+  untimed warm pass.
 * ``jobs``: count Spark JOBS a query launches (construction +
-  noop-sink write), via the monotone job-id counter — the §1
-  methodology for the materialization-chain audits (VERDICT r17
-  items 4/5/8).
+  noop-sink write), via the monotone job-id counter.
 
 Usage:
-  python tools_r18.py explain <out_dir> <query> [<query> ...]
-  python tools_r18.py explain-full <out_dir> <query> [<query> ...]
-  python tools_r18.py time <runs> <query> [<query> ...]
-  python tools_r18.py jobs <query> [<query> ...]
+  python tools.py explain <out_dir> <query> [<query> ...]
+  python tools.py explain-full <out_dir> <query> [<query> ...]
+  python tools.py time <runs> <query> [<query> ...]
+  python tools.py jobs <query> [<query> ...]
 
 All use $SPARK_GRAFT_SF_DIR (default sf0.1) and the same get_spark
 session the bench uses.
@@ -35,7 +39,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def _spark():
     from mape_calculation_and_anonymization_spark.session import get_spark
 
-    spark = get_spark(app_name="tools_r18")
+    spark = get_spark(app_name="tools")
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 
@@ -73,7 +77,7 @@ def cmd_explain(out_dir: str, names: list[str], full: bool = False) -> None:
             from pyspark.sql.classic.dataframe import DataFrame as _DF
 
             orig = _DF.localCheckpoint
-            _DF.localCheckpoint = lambda self, eager=True: self
+            _DF.localCheckpoint = lambda self, *a, **k: self
             try:
                 df = qs[name](spark, SF_DIR)
                 plan = _explain(df)
