@@ -2870,8 +2870,9 @@ def _q_s3_latest_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_parquet,
     )
 
-    if not os.path.isdir(os.path.join(_PARTITIONED_FIXTURE, "2024-02-01")):
-        os.makedirs(_PARTITIONED_FIXTURE, exist_ok=True)
+    # The marker FILE is invisible to latest_partition, which lists
+    # only directories.
+    if not _fixture_ready(_PARTITIONED_FIXTURE):
         nation = load_table(spark, sf_dir, "nation")
         nation.filter(F.col("n_nationkey") < 5).coalesce(1).write.mode(
             "overwrite"
@@ -2879,6 +2880,7 @@ def _q_s3_latest_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
         nation.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(_PARTITIONED_FIXTURE, "2024-02-01")
         )
+        _mark_fixture_ready(_PARTITIONED_FIXTURE)
     folder = latest_partition(_PARTITIONED_FIXTURE)
     df = read_parquet(spark, f"{_PARTITIONED_FIXTURE}/{folder}")
     return df.select("n_nationkey", "n_name", "n_regionkey")
@@ -2987,238 +2989,74 @@ def bench_reset(sf_dir: str) -> None:
     import os
     import shutil
 
-    root = _inc_agg_fixture_root(sf_dir)
-    shutil.rmtree(os.path.join(root, "table"), ignore_errors=True)
-    try:
-        os.remove(os.path.join(root, "_COMPLETE"))
-    except FileNotFoundError:
-        pass
+    shutil.rmtree(
+        os.path.join(_inc_agg_fixture_root(sf_dir), "table"),
+        ignore_errors=True,
+    )
 
 
-# path -> held lock fd: _fixture_ready(p) == False acquires p's build
-# lock; the matching _mark_fixture_ready(p) releases it
+# path -> fd holding the flock on <path>.lock: _fixture_ready(p) ==
+# False takes p's build lock; the matching _mark_fixture_ready(p)
+# releases it
 _FIXTURE_BUILD_LOCKS: dict[str, int] = {}
 
-# A build lock older than this is presumed abandoned (holder crashed
-# mid-build) and is broken. Generous: the largest fixture build (the
-# jaccard index at sf0.1) completes in well under a minute — and the
-# keepalive thread below refreshes held locks every
-# _FIXTURE_LOCK_KEEPALIVE_S, so "stale" means "no heartbeat for
-# 600s", not "build took longer than 600s" (ADVICE r9: a legitimate
-# long build at a larger sf must never have its lock broken and its
-# half-built dir wiped mid-write).
-_FIXTURE_LOCK_STALE_S = 600.0
-_FIXTURE_LOCK_KEEPALIVE_S = 60.0
-_FIXTURE_KEEPALIVE_STARTED = False
-
-
-def _ensure_fixture_lock_keepalive() -> None:
-    """Start (once) a daemon thread that touches every lock this
-    session holds, so waiters' staleness clock measures holder
-    LIVENESS rather than build duration."""
-    global _FIXTURE_KEEPALIVE_STARTED
-    if _FIXTURE_KEEPALIVE_STARTED:
-        return
-    import os
-    import threading
-    import time
-
-    def _beat() -> None:
-        while True:
-            time.sleep(_FIXTURE_LOCK_KEEPALIVE_S)
-            for p in list(_FIXTURE_BUILD_LOCKS):
-                fd = _FIXTURE_BUILD_LOCKS.get(p)
-                if fd is None:
-                    continue
-                try:
-                    # touch the held FD's inode, never the path: if a
-                    # pathological break/restore cycle left another
-                    # session's lock at the path, a path-utime would
-                    # heartbeat THEIR lock on our behalf
-                    os.utime(fd)
-                except (OSError, TypeError):
-                    try:
-                        os.utime(p.rstrip("/") + ".lock")
-                    except OSError:
-                        pass
-
-    threading.Thread(
-        target=_beat, name="fixture-lock-keepalive", daemon=True
-    ).start()
-    _FIXTURE_KEEPALIVE_STARTED = True
-
-
-def _lock_holder_alive(lock: str) -> bool:
-    """Best-effort same-host holder-liveness probe: the lock file's
-    first line is the holder's pid (written at acquire). Returns True
-    when in doubt — breaking a live lock is the expensive mistake."""
-    import os
-
-    try:
-        with open(lock) as fh:
-            pid = int(fh.readline().strip() or "0")
-    except (OSError, ValueError):
-        return True
-    if pid <= 0:
-        return True
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True
-    return True
+# Longest wait for another session's build before giving up (the
+# largest build, the jaccard index at sf0.1, takes well under a minute).
+_FIXTURE_LOCK_WAIT_S = 3600.0
 
 
 def _fixture_ready(path: str) -> bool:
-    """Crash-idempotent, CONCURRENCY-SAFE fixture guard: True iff the
-    fixture at ``path`` was built to COMPLETION (marker written last).
-    A dir without the marker is a crashed half-build — e.g. k5's v0
-    written but not v1 — which a bare ``isdir`` check would treat as
-    done and then fail on every later run; wipe it so the caller
-    rebuilds from scratch.
-
-    ADVICE r8: the r8 version rmtree'd an incomplete dir with no
-    cross-process coordination, so two sessions sharing
-    /tmp/mape_spark_fixtures (bench + pytest) could wipe each other's
-    in-progress builds and race overwrite writes. Now returning False
-    first acquires an O_EXCL ``<path>.lock`` build lock (released by
-    the caller's matching ``_mark_fixture_ready``); a second session
-    arriving mid-build blocks on the lock, then sees ``_COMPLETE``
-    and reads the finished fixture instead of wiping it. A lock whose
-    holder crashed is broken after _FIXTURE_LOCK_STALE_S. The
-    ``_``-prefixed marker is invisible to Spark's parquet reader
-    (metadata-file convention, like ``_SUCCESS``)."""
+    """True iff the fixture at ``path`` was built to completion (its
+    ``_COMPLETE`` marker is written last; ``_`` hides it from Spark's
+    readers). Otherwise take an exclusive ``flock`` on ``<path>.lock``
+    until the caller's ``_mark_fixture_ready``, wipe any half-build and
+    return False. A session that waited re-checks the marker and reuses
+    the finished build. The kernel drops the lock when its holder dies;
+    lock files are never unlinked, since a lock on an unlinked file
+    excludes nobody."""
+    import fcntl
     import os
     import shutil
     import time
 
-    if os.path.exists(os.path.join(path, "_COMPLETE")):
+    marker = os.path.join(path, "_COMPLETE")
+    if os.path.exists(marker):
         return True
-    if path in _FIXTURE_BUILD_LOCKS:
-        # this session already holds the build lock (a prior build
-        # attempt raised and the query was retried): keep it and let
-        # the caller rebuild rather than deadlocking on our own lock
-        shutil.rmtree(path, ignore_errors=True)
-        return False
-    lock = path.rstrip("/") + ".lock"
-    os.makedirs(os.path.dirname(lock), exist_ok=True)
-    # The soft deadline restarts whenever the holder's heartbeat is
-    # fresh — a legitimate build may run far past one stale window
-    # (the keepalive refreshes mtime every _FIXTURE_LOCK_KEEPALIVE_S,
-    # so waiters must not give up while beats keep landing). The hard
-    # deadline bounds the pathological wedged-but-alive holder.
-    deadline = time.monotonic() + _FIXTURE_LOCK_STALE_S + 60.0
-    hard_deadline = time.monotonic() + 6.0 * _FIXTURE_LOCK_STALE_S
-    while True:
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.write(fd, f"{os.getpid()}\n".encode())
-            _FIXTURE_BUILD_LOCKS[path] = fd
-            _ensure_fixture_lock_keepalive()
-            break
-        except FileExistsError:
+    # a path held already is this process retrying its own failed build
+    if path not in _FIXTURE_BUILD_LOCKS:
+        lock = path.rstrip("/") + ".lock"
+        os.makedirs(os.path.dirname(lock), exist_ok=True)
+        fd = os.open(lock, os.O_CREAT | os.O_RDWR)
+        deadline = time.monotonic() + _FIXTURE_LOCK_WAIT_S
+        while True:
             try:
-                age = time.time() - os.stat(lock).st_mtime
-            except FileNotFoundError:
-                continue  # holder just released; retry immediately
-            if age <= _FIXTURE_LOCK_STALE_S:
-                # fresh heartbeat: the holder is making progress —
-                # restart the soft deadline (ADVICE follow-up: the
-                # fixed deadline timed out waiters on exactly the
-                # long builds the keepalive was added to protect)
-                deadline = time.monotonic() + _FIXTURE_LOCK_STALE_S + 60.0
-            if age > _FIXTURE_LOCK_STALE_S and not _lock_holder_alive(lock):
-                # Abandoned lock: no heartbeat for the stale window AND
-                # the recorded holder pid is gone. Break it ATOMICALLY
-                # via rename — exactly one of N concurrent breakers wins
-                # the rename; losers see FileNotFoundError and re-enter
-                # the O_EXCL race on the now-absent path. (ADVICE r9: a
-                # bare os.remove here could delete a FRESH lock that the
-                # first breaker re-created between its remove and
-                # create, letting two sessions build concurrently.)
-                grave = f"{lock}.stale.{os.getpid()}"
-                try:
-                    os.rename(lock, grave)
-                except OSError:
-                    continue
-                try:
-                    fresh = (
-                        time.time() - os.stat(grave).st_mtime
-                        <= _FIXTURE_LOCK_STALE_S
-                    )
-                except OSError:
-                    fresh = False
-                if fresh:
-                    # pathological stat→rename race: a live lock landed
-                    # on the path in between — restore it via LINK
-                    # (atomic, fails on collision) and keep waiting.
-                    # A rename-back could CLOBBER a brand-new lock a
-                    # third racer just won via O_EXCL, re-enabling the
-                    # two-concurrent-builders bug this protocol exists
-                    # to prevent; on EEXIST the displaced holder's
-                    # release is pid-checked, so nothing is deleted
-                    # out from under the new owner.
-                    try:
-                        os.link(grave, lock)
-                        os.remove(grave)
-                    except OSError:
-                        pass
-                    time.sleep(0.2)
-                    continue
-                try:
-                    os.remove(grave)
-                except OSError:
-                    pass
-                continue
-            if (
-                time.monotonic() > deadline
-                or time.monotonic() > hard_deadline
-            ):
-                raise TimeoutError(
-                    f"fixture build lock {lock} held past the stale "
-                    f"threshold without completing — investigate the "
-                    f"holder (pid in the lock file) or remove the lock"
-                )
-            time.sleep(0.2)
-    # lock held: another session may have completed the build while we
-    # waited — re-check before declaring a rebuild necessary
-    if os.path.exists(os.path.join(path, "_COMPLETE")):
-        _release_fixture_lock(path)
-        return True
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                break
+            except BlockingIOError:
+                if time.monotonic() > deadline:
+                    os.close(fd)
+                    raise TimeoutError(
+                        f"fixture build lock {lock} held for more than "
+                        f"{_FIXTURE_LOCK_WAIT_S:.0f}s by a live session"
+                    ) from None
+                time.sleep(0.1)
+        if os.path.exists(marker):
+            os.close(fd)
+            return True
+        _FIXTURE_BUILD_LOCKS[path] = fd
     shutil.rmtree(path, ignore_errors=True)
     return False
 
 
-def _release_fixture_lock(path: str) -> None:
-    import os
-
-    fd = _FIXTURE_BUILD_LOCKS.pop(path, None)
-    if fd is not None:
-        os.close(fd)
-        lock = path.rstrip("/") + ".lock"
-        try:
-            # pid-checked removal: after a pathological break/restore
-            # cycle the path may hold ANOTHER session's lock — deleting
-            # it would let a third session acquire mid-build. Only the
-            # recorded owner removes.
-            with open(lock) as fh:
-                owner = int(fh.readline().strip() or "0")
-            if owner == os.getpid():
-                os.remove(lock)
-        except (OSError, ValueError):
-            pass
-
-
 def _mark_fixture_ready(path: str) -> None:
-    """Write the completion marker LAST, then release the build lock
-    acquired by the ``_fixture_ready(path) == False`` that gated this
-    build (see its docstring for the cross-process protocol)."""
+    """Write the marker, then release the lock ``_fixture_ready`` took."""
     import os
 
     with open(os.path.join(path, "_COMPLETE"), "w") as fh:
         fh.write("ok\n")
-    _release_fixture_lock(path)
+    fd = _FIXTURE_BUILD_LOCKS.pop(path, None)
+    if fd is not None:
+        os.close(fd)
 
 
 def _k1_fixture_path(sf_dir: str) -> str:
@@ -3231,15 +3069,16 @@ def _k1_fixture_path(sf_dir: str) -> str:
 
 
 def _k2_workbook_path(sf_dir: str) -> str:
-    # The sheet compare is fixture-to-fixture (stale-consistent), but
-    # the sheet CONTENT derives from events via the mape pipeline —
-    # fingerprinting keeps a stale workbook from surviving a source
-    # regeneration that also changed the sheet schema. oracle_sql()
-    # builds the oracle path through this same function in the same
-    # round, so query and oracle always agree on the token.
+    """The guarded directory holding K2's ``report.xlsx`` and its
+    ``daily.csv`` sidecar. The sheet compare is fixture-to-fixture
+    (stale-consistent), but the sheet CONTENT derives from events via
+    the mape pipeline — fingerprinting keeps a stale workbook from
+    surviving a source regeneration that also changed the sheet
+    schema. The oracle builds its path through this same function, so
+    query and oracle always agree on the token."""
     return (
         f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"mape_report_{_source_token(sf_dir, 'events')}.xlsx"
+        f"mape_report_{_source_token(sf_dir, 'events')}"
     )
 
 
@@ -3271,27 +3110,25 @@ def _q_k2_excel_sheets(spark: SparkSession, sf_dir: str) -> DataFrame:
     content exactly across formats (DuckDB 1.0 cannot read xlsx in
     this container). Sheet inputs are post-aggregation tables
     (≤ thousands of rows) — the only kind this driver-side sink
-    accepts by design. Crash-idempotent: marker written last."""
+    accepts by design. Crash-idempotent fixture."""
     import os
 
     from mape_calculation_and_anonymization_spark.sources.readers import (
         read_xlsx_sheet,
     )
 
-    workbook = _k2_workbook_path(sf_dir)
-    sidecar = workbook + ".daily.csv"
-    marker = workbook + "._COMPLETE"
-    if not os.path.exists(marker):
-        os.makedirs(os.path.dirname(workbook), exist_ok=True)
+    root = _k2_workbook_path(sf_dir)
+    workbook = os.path.join(root, "report.xlsx")
+    if not _fixture_ready(root):
+        os.makedirs(root)
         daily_pdf = _q_mape_daily_portfolio(spark, sf_dir).toPandas()
         write_excel_workbook(
             workbook,
             daily=daily_pdf,
             hourly=_q_mape_hourly_portfolio(spark, sf_dir),
         )
-        daily_pdf.to_csv(sidecar, index=False)
-        with open(marker, "w") as fh:
-            fh.write("ok\n")
+        daily_pdf.to_csv(os.path.join(root, "daily.csv"), index=False)
+        _mark_fixture_ready(root)
     df = read_xlsx_sheet(spark, workbook, "daily")
     return df.agg(
         F.count(F.lit(1)).alias("n_days"),
@@ -3309,7 +3146,7 @@ def _k2_oracle(sf_dir: str) -> str:
     SELECT COUNT(*) AS n_days,
            ROUND(SUM(forecast_mape), 6) AS sum_forecast_mape,
            ROUND(SUM(settlement), 2) AS sum_settlement
-    FROM read_csv_auto('{_k2_workbook_path(sf_dir)}.daily.csv')
+    FROM read_csv_auto('{_k2_workbook_path(sf_dir)}/daily.csv')
 """
 
 
@@ -4315,10 +4152,8 @@ def _q_stream_key_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     digest-anchor unit test (DuckDB has no blake2b); the oracle checks
     the uid set the stream discovered."""
     import os
-    import shutil
 
     from mape_calculation_and_anonymization_spark.operators.keys import (
-        key_table_path,
         load_key_table,
     )
     from mape_calculation_and_anonymization_spark.streaming import (
@@ -4329,25 +4164,16 @@ def _q_stream_key_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
         f"stream_key_{_source_token(sf_dir, 'events')}"
     )
-    # Guard on a completion marker, not mere table existence: foreachBatch
-    # commits the key table per micro-batch, so a timed-out/interrupted
-    # ingest leaves a PARTIAL table behind. Without the marker every later
-    # run (including the driver's) would skip ingestion and return an
-    # incomplete uid set with no hint the fixture is stale.
-    done_marker = os.path.join(key_dir, "_INGEST_COMPLETE")
-    if not os.path.exists(done_marker):
-        table_path = key_table_path(key_dir, "user_id")
-        shutil.rmtree(table_path, ignore_errors=True)
-        try:
-            stream_key_table_upsert(
-                read_events_stream(spark, sf_dir), key_dir, col="user_id"
-            )
-        except BaseException:
-            shutil.rmtree(table_path, ignore_errors=True)
-            raise
+    # Guard on the completion marker, not mere table existence:
+    # foreachBatch commits the key table per micro-batch, so an
+    # interrupted ingest leaves a PARTIAL table that every later run
+    # would otherwise read as an incomplete uid set.
+    if not _fixture_ready(key_dir):
+        stream_key_table_upsert(
+            read_events_stream(spark, sf_dir), key_dir, col="user_id"
+        )
         os.makedirs(key_dir, exist_ok=True)
-        with open(done_marker, "w") as fh:
-            fh.write("ok\n")
+        _mark_fixture_ready(key_dir)
     return (
         load_key_table(spark, key_dir, "user_id")
         .select("user_id")
@@ -7350,9 +7176,6 @@ def _q_stream_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     — equality proves the sink landed every row exactly once. Stateless
     stream (projection only), so append mode emits everything; fixture
     is per-sf with a completion marker, partial landings deleted."""
-    import os
-    import shutil
-
     from mape_calculation_and_anonymization_spark.streaming import (
         run_stream_to_parquet,
     )
@@ -7361,19 +7184,12 @@ def _q_stream_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
         f"stream_sink_{_source_token(sf_dir, 'events')}"
     )
-    done_marker = sink_dir + ".__COMPLETE"
-    if not os.path.exists(done_marker):
-        shutil.rmtree(sink_dir, ignore_errors=True)
+    if not _fixture_ready(sink_dir):
         stream = read_events_stream(spark, sf_dir).select(
             "event_id", "ts", "user_id", "event_type", "value"
         )
-        try:
-            run_stream_to_parquet(stream, sink_dir, shuffle_partitions=8)
-        except BaseException:
-            shutil.rmtree(sink_dir, ignore_errors=True)
-            raise
-        with open(done_marker, "w") as fh:
-            fh.write("ok\n")
+        run_stream_to_parquet(stream, sink_dir, shuffle_partitions=8)
+        _mark_fixture_ready(sink_dir)
     landed = spark.read.parquet(sink_dir)
     return landed.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -9593,7 +9409,8 @@ def _sentinel_stream_fixture(spark: SparkSession, sf_dir: str) -> str:
     historical (the sentinel used to run as its own micro-batch via
     maxFilesPerTrigger=1); since round 10 the consumer drains
     everything in ONE data batch and lets the no-data flush batch
-    emit the outer rows — same rows, one fewer micro-batch."""
+    emit the outer rows — same rows, one fewer micro-batch. The
+    stream lists ``all``; the guard's marker sits beside it."""
     import datetime
     import glob
     import os
@@ -9604,8 +9421,9 @@ def _sentinel_stream_fixture(spark: SparkSession, sf_dir: str) -> str:
         f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
         f"sentinel_stream_{_source_token(sf_dir, 'events')}"
     )
-    if os.path.isdir(os.path.join(path, "all")):
-        return os.path.join(path, "all")
+    all_dir = os.path.join(path, "all")
+    if _fixture_ready(path):
+        return all_dir
     ev = load_events(spark, sf_dir).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -9616,20 +9434,18 @@ def _sentinel_stream_fixture(spark: SparkSession, sf_dir: str) -> str:
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double",
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "b2"))
-    tmp = os.path.join(path, "all.tmp")
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
+    os.makedirs(all_dir)
     for i, f in enumerate(
         sorted(glob.glob(os.path.join(path, "b1", "part-*.parquet")))
     ):
-        shutil.copy(f, os.path.join(tmp, f"a{i}.parquet"))
+        shutil.copy(f, os.path.join(all_dir, f"a{i}.parquet"))
     time.sleep(1.1)  # mtime granularity: sentinel must sort strictly later
     for i, f in enumerate(
         sorted(glob.glob(os.path.join(path, "b2", "part-*.parquet")))
     ):
-        shutil.copy(f, os.path.join(tmp, f"b{i}.parquet"))
-    os.rename(tmp, os.path.join(path, "all"))
-    return os.path.join(path, "all")
+        shutil.copy(f, os.path.join(all_dir, f"b{i}.parquet"))
+    _mark_fixture_ready(path)
+    return all_dir
 
 
 def _q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9952,57 +9768,41 @@ def _q_stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_incremental_agg,
     )
 
+    # Two guarded directories: ``input`` holds the input files (setup,
+    # like the testdata itself), ``table`` the drained aggregate (the
+    # OPERATOR's output). bench_reset removes only ``table`` so the
+    # timed pass measures the drain, not a tiny parquet read. The
+    # stream lists ``input/files``, so the input marker sits beside it.
     root = _inc_agg_fixture_root(sf_dir)
-    src, table = os.path.join(root, "src"), os.path.join(root, "table")
-    # two-phase markers: _SRC_COMPLETE gates the input-file build
-    # (setup, like the testdata itself); _COMPLETE gates the drained
-    # table (the OPERATOR's output). bench.py resets only the second
-    # so the timed pass measures the drain, not a tiny parquet read.
-    src_marker = os.path.join(root, "_SRC_COMPLETE")
-    marker = os.path.join(root, "_COMPLETE")
-    if not os.path.exists(src_marker):
-        # src is being (re)built: any drained table from an older
-        # single-marker layout is stale — drop it with the marker
-        shutil.rmtree(table, ignore_errors=True)
-        if os.path.exists(marker):
-            os.remove(marker)
+    inp, table = os.path.join(root, "input"), os.path.join(root, "table")
+    files = os.path.join(inp, "files")
+    if not _fixture_ready(inp):
         ev = load_events(spark, sf_dir).select(
             "event_id", "event_type", "value"
         )
         for tag, pred in (("h0", 0), ("h1", 1)):
             ev.filter(F.col("event_id") % 2 == pred).coalesce(1).write.mode(
                 "overwrite"
-            ).parquet(os.path.join(root, tag))
-        tmp = src + ".tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(tmp)
+            ).parquet(os.path.join(inp, tag))
+        os.makedirs(files)
         for tag, prefix in (("h0", "a"), ("h1", "b")):
             for i, f in enumerate(
-                sorted(glob.glob(os.path.join(root, tag, "part-*.parquet")))
+                sorted(glob.glob(os.path.join(inp, tag, "part-*.parquet")))
             ):
-                shutil.copy(f, os.path.join(tmp, f"{prefix}{i}.parquet"))
+                shutil.copy(f, os.path.join(files, f"{prefix}{i}.parquet"))
             time.sleep(1.1)  # mtime order fixes batch order
-        shutil.rmtree(src, ignore_errors=True)
-        os.rename(tmp, src)
-        with open(src_marker, "w") as fh:
-            fh.write("ok\n")
-    if not os.path.exists(marker):
-        shutil.rmtree(table, ignore_errors=True)
+        _mark_fixture_ready(inp)
+    if not _fixture_ready(table):
         stream = (
             spark.readStream.schema(
                 "event_id long, event_type string, value double"
             )
             .option("maxFilesPerTrigger", "1")
             .option("latestFirst", "false")
-            .parquet(src)
+            .parquet(files)
         )
-        try:
-            stream_incremental_agg(stream, table, key="event_type")
-        except BaseException:
-            shutil.rmtree(table, ignore_errors=True)
-            raise
-        with open(marker, "w") as fh:
-            fh.write("ok\n")
+        stream_incremental_agg(stream, table, key="event_type")
+        _mark_fixture_ready(table)
     return spark.read.parquet(table).select(
         "event_type",
         "n_events",

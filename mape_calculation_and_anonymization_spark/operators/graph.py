@@ -145,9 +145,13 @@ def cooccurrence_edges(
     graph). The aggregate is localCheckpointed — bucket-count-sized —
     so the drop-count probe and the expansion share one derivation.
     ``None`` disables the guard (exact small-scale semantics — what
-    the DuckDB oracles re-derive). Per-row memory for the collected
-    set is members × 8-ish bytes; the caps keep it bounded exactly as
-    in the LSH banding paths.
+    the DuckDB oracles re-derive). The cap bounds the pair expansion,
+    not the aggregation: the count and the member set are built in the
+    same pass, so an over-cap bucket is still collected whole into one
+    aggregation buffer (members × 8-ish bytes, O(bucket) memory) and
+    checkpointed before the filter drops it. A count probe and
+    semi-join ahead of the collect would bound that too, at the cost
+    of the shuffles the single aggregate removed.
     """
     import logging
 

@@ -1,19 +1,36 @@
-"""Cross-process fixture build lock (ADVICE r8): concurrent sessions
-sharing /tmp/mape_spark_fixtures (bench + pytest) must not wipe each
-other's in-progress builds. ``_fixture_ready`` returning False holds
-an O_EXCL ``<path>.lock`` until the matching ``_mark_fixture_ready``;
-racers block, then observe ``_COMPLETE`` and reuse the finished
-fixture. No SparkSession needed — the guard is pure filesystem."""
+"""Cross-process fixture build lock: concurrent sessions sharing
+/tmp/mape_spark_fixtures (bench + pytest) must not wipe each other's
+in-progress builds. ``_fixture_ready`` returning False holds an
+exclusive ``flock`` on ``<path>.lock`` until the matching
+``_mark_fixture_ready``; racers wait, then observe ``_COMPLETE`` and
+reuse the finished fixture. The kernel releases the lock of a holder
+that dies. No SparkSession needed — the guard is pure filesystem."""
 
+import fcntl
 import multiprocessing
 import os
+import signal
 import time
+
+import pytest
 
 import __spark_entry__ as entrymod
 
 
+def _lock_is_free(path):
+    """Non-blocking probe from a fresh open file description, so it
+    also sees a lock this very process holds."""
+    fd = os.open(path + ".lock", os.O_CREAT | os.O_RDWR)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+    except BlockingIOError:
+        return False
+    finally:
+        os.close(fd)
+    return True
+
+
 def _racer(path, build_sleep, q):
-    # re-import in the child for a clean _FIXTURE_BUILD_LOCKS
     import __spark_entry__ as e
 
     if not e._fixture_ready(path):
@@ -27,23 +44,26 @@ def _racer(path, build_sleep, q):
         q.put("reused")
 
 
-def test_exactly_one_builder_wins_the_race(tmp_path):
-    path = str(tmp_path / "fx")
+def _race(path, n):
     q = multiprocessing.Queue()
     procs = [
         multiprocessing.Process(target=_racer, args=(path, 0.5, q))
-        for _ in range(3)
+        for _ in range(n)
     ]
     for p in procs:
         p.start()
     for p in procs:
         p.join(30)
-    results = sorted(q.get(timeout=5) for _ in procs)
-    assert results == ["built", "reused", "reused"], results
+    return sorted(q.get(timeout=5) for _ in procs)
+
+
+def test_exactly_one_builder_wins_the_race(tmp_path):
+    path = str(tmp_path / "fx")
+    assert _race(path, 3) == ["built", "reused", "reused"]
     # the winner's build survived intact and the lock was released
     assert open(os.path.join(path, "data")).read() == "built\n"
     assert os.path.exists(os.path.join(path, "_COMPLETE"))
-    assert not os.path.exists(path + ".lock")
+    assert _lock_is_free(path)
 
 
 def test_half_build_is_wiped_and_lock_cycle_is_reentrant(tmp_path):
@@ -54,115 +74,100 @@ def test_half_build_is_wiped_and_lock_cycle_is_reentrant(tmp_path):
         fh.write("junk\n")
     assert entrymod._fixture_ready(path) is False
     assert not os.path.exists(os.path.join(path, "partial"))  # wiped
-    assert os.path.exists(path + ".lock")  # build lock held
+    assert not _lock_is_free(path)  # build lock held
     # same-process retry after a failed build must not self-deadlock
     assert entrymod._fixture_ready(path) is False
     os.makedirs(path, exist_ok=True)
     entrymod._mark_fixture_ready(path)
-    assert not os.path.exists(path + ".lock")
+    assert _lock_is_free(path)
     assert entrymod._fixture_ready(path) is True
 
 
-def test_stale_lock_from_crashed_holder_is_broken(tmp_path):
-    path = str(tmp_path / "fx3")
-    lock = path + ".lock"
-    os.makedirs(os.path.dirname(lock), exist_ok=True)
-    with open(lock, "w") as fh:
-        fh.write("99999999\n")
-    stale = time.time() - entrymod._FIXTURE_LOCK_STALE_S - 5
-    os.utime(lock, (stale, stale))
-    t0 = time.monotonic()
-    assert entrymod._fixture_ready(path) is False  # broke the stale lock
-    assert time.monotonic() - t0 < 5
-    os.makedirs(path, exist_ok=True)
-    entrymod._mark_fixture_ready(path)
-    assert entrymod._fixture_ready(path) is True
-
-
-def _stale_breaker(path, q):
-    # each child tries to break the same pre-staged stale lock, then
-    # runs the normal acquire-build-release cycle
+def _holder(path, held, done):
+    """Take the build lock, leave a partial build, and wait."""
     import __spark_entry__ as e
 
-    if not e._fixture_ready(path):
-        os.makedirs(path, exist_ok=True)
-        time.sleep(0.3)  # widen the break/acquire race window
-        with open(os.path.join(path, "data"), "w") as fh:
-            fh.write("built\n")
-        e._mark_fixture_ready(path)
-        q.put("built")
-    else:
-        q.put("reused")
+    assert e._fixture_ready(path) is False
+    os.makedirs(path)
+    with open(os.path.join(path, "partial"), "w") as fh:
+        fh.write("junk\n")
+    held.set()
+    done.wait(60)
+    e._mark_fixture_ready(path)
 
 
-def test_concurrent_stale_break_is_atomic(tmp_path):
-    """ADVICE r9: two waiters that both observe a stale lock must not
-    both remove it — the second remove could delete the first
-    breaker's freshly created lock, letting two builders run
-    concurrently. The rename-based break arbitrates: exactly one
-    builder wins even when every racer starts in the break path."""
-    path = str(tmp_path / "fx4")
-    lock = path + ".lock"
-    os.makedirs(os.path.dirname(lock), exist_ok=True)
-    with open(lock, "w") as fh:
-        fh.write("99999999\n")  # dead holder pid
-    stale = time.time() - entrymod._FIXTURE_LOCK_STALE_S - 5
-    os.utime(lock, (stale, stale))
-    q = multiprocessing.Queue()
-    procs = [
-        multiprocessing.Process(target=_stale_breaker, args=(path, q))
-        for _ in range(4)
-    ]
-    for p in procs:
-        p.start()
-    for p in procs:
-        p.join(30)
-    results = sorted(q.get(timeout=5) for _ in procs)
-    assert results == ["built", "reused", "reused", "reused"], results
+def test_killed_holder_frees_lock_and_half_build_is_wiped(tmp_path):
+    """A builder killed mid-build leaves no lock behind: the next
+    session takes the lock at once and wipes the partial files, and
+    a race after that still has exactly one builder."""
+    path = str(tmp_path / "fx3")
+    held, done = multiprocessing.Event(), multiprocessing.Event()
+    child = multiprocessing.Process(target=_holder, args=(path, held, done))
+    child.start()
+    assert held.wait(30)
+    os.kill(child.pid, signal.SIGKILL)
+    child.join(30)
+    t0 = time.monotonic()
+    assert entrymod._fixture_ready(path) is False
+    assert time.monotonic() - t0 < 5
+    assert not os.path.exists(os.path.join(path, "partial"))
+    # abandon this build without a marker, as a crashed session would
+    os.close(entrymod._FIXTURE_BUILD_LOCKS.pop(path))
+    assert _race(path, 4) == ["built", "reused", "reused", "reused"]
     assert open(os.path.join(path, "data")).read() == "built\n"
-    assert not os.path.exists(lock)
+    assert _lock_is_free(path)
 
 
-def test_stale_aged_lock_with_live_holder_is_not_broken(tmp_path):
-    """ADVICE r9 second half: a lock whose mtime is past the stale
-    threshold but whose recorded holder pid is ALIVE (keepalive thread
-    wedged, clock skew) must not be broken — liveness is checked
-    before the rename."""
-    path = str(tmp_path / "fx5")
-    lock = path + ".lock"
-    os.makedirs(os.path.dirname(lock), exist_ok=True)
-    with open(lock, "w") as fh:
-        fh.write(f"{os.getpid()}\n")  # this very test process: alive
-    stale = time.time() - entrymod._FIXTURE_LOCK_STALE_S - 5
-    os.utime(lock, (stale, stale))
-    assert entrymod._lock_holder_alive(lock) is True
-    before = os.stat(lock).st_mtime
-    # directly exercise the break predicate rather than _fixture_ready
-    # (which would legitimately wait out the full deadline)
-    assert not (
-        time.time() - before > entrymod._FIXTURE_LOCK_STALE_S
-        and not entrymod._lock_holder_alive(lock)
-    )
-    os.remove(lock)
+def test_live_holder_times_out_waiter_without_taking_lock(
+    tmp_path, monkeypatch
+):
+    """A lock held by a live session is never broken, however old its
+    file looks: the waiter gives up after _FIXTURE_LOCK_WAIT_S with
+    TimeoutError and leaves the holder's lock and build alone."""
+    path = str(tmp_path / "fx4")
+    held, done = multiprocessing.Event(), multiprocessing.Event()
+    child = multiprocessing.Process(target=_holder, args=(path, held, done))
+    child.start()
+    try:
+        assert held.wait(30)
+        old = time.time() - 3600
+        os.utime(path + ".lock", (old, old))
+        monkeypatch.setattr(entrymod, "_FIXTURE_LOCK_WAIT_S", 0.5)
+        with pytest.raises(TimeoutError):
+            entrymod._fixture_ready(path)
+        assert path not in entrymod._FIXTURE_BUILD_LOCKS
+        assert not _lock_is_free(path)
+        assert os.path.exists(os.path.join(path, "partial"))
+    finally:
+        done.set()
+        child.join(30)
+    assert child.exitcode == 0
+    assert _lock_is_free(path)
+    assert entrymod._fixture_ready(path) is True
 
 
-def test_keepalive_refreshes_held_lock_mtime(tmp_path, monkeypatch):
-    """ADVICE r9: the holder must refresh the lock mtime during long
-    builds so a legitimate >600s build never gets its lock broken and
-    its half-built dir wiped mid-write."""
-    monkeypatch.setattr(entrymod, "_FIXTURE_LOCK_KEEPALIVE_S", 0.1)
-    monkeypatch.setattr(entrymod, "_FIXTURE_KEEPALIVE_STARTED", False)
-    path = str(tmp_path / "fx6")
-    assert entrymod._fixture_ready(path) is False  # lock held + thread up
-    lock = path + ".lock"
-    old = time.time() - 3600
-    os.utime(lock, (old, old))
-    deadline = time.monotonic() + 5
-    while time.monotonic() < deadline:
-        if time.time() - os.stat(lock).st_mtime < 1800:
-            break
-        time.sleep(0.05)
-    refreshed_age = time.time() - os.stat(lock).st_mtime
-    os.makedirs(path, exist_ok=True)
-    entrymod._mark_fixture_ready(path)
-    assert refreshed_age < 1800, "keepalive never touched the held lock"
+def test_every_marker_gated_fixture_uses_the_one_guard():
+    """One fixture protocol: no string naming a completion marker
+    appears in the entry file outside _fixture_ready and
+    _mark_fixture_ready, so no fixture gates on a marker of its own
+    that bypasses the build lock."""
+    import ast
+
+    with open(entrymod.__file__) as fh:
+        tree = ast.parse(fh.read())
+    guard = set()
+    for node in tree.body:
+        if isinstance(node, ast.FunctionDef) and node.name in (
+            "_fixture_ready",
+            "_mark_fixture_ready",
+        ):
+            guard.update(id(n) for n in ast.walk(node))
+    stray = [
+        (node.lineno, node.value)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and "COMPLETE" in node.value
+        and id(node) not in guard
+    ]
+    assert stray == []

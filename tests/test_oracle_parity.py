@@ -240,9 +240,20 @@ def test_fixture_ready_wipes_incomplete(tmp_path):
     assert (d / "part-0.parquet").exists() is False  # only the marker
 
 
+def test_s3_torn_partition_fixture_is_rebuilt(spark, tmp_path, monkeypatch):
+    """A Spark write that crashed leaves the newest dated folder
+    holding only _temporary/: the fixture guard must rebuild it, not
+    read the torn folder as the newest partition."""
+    root = tmp_path / "dated"
+    (root / "2024-02-01" / "_temporary").mkdir(parents=True)
+    monkeypatch.setattr(entrymod, "_PARTITIONED_FIXTURE", str(root))
+    rows = entrymod._q_s3_latest_partition(spark, entrymod.SF0001).collect()
+    assert sorted(r.n_nationkey for r in rows) == list(range(25))
+
+
 def test_bench_reset_removes_only_the_drained_table():
     """bench_reset must delete exactly the drained aggregate table and
-    its marker (the query's OUTPUT) while leaving the source files and
+    its marker (the query's OUTPUT) while leaving the input files and
     their marker (input setup) in place — the contract bench.py's
     timed pass relies on."""
     import os
@@ -250,19 +261,18 @@ def test_bench_reset_removes_only_the_drained_table():
 
     sf = "/root/testdata/sf0.001"
     root = entrymod._inc_agg_fixture_root(sf)
+    table, inp = os.path.join(root, "table"), os.path.join(root, "input")
     shutil.rmtree(root, ignore_errors=True)
     try:
-        os.makedirs(os.path.join(root, "table"))
-        os.makedirs(os.path.join(root, "src"))
-        for m in ("_COMPLETE", "_SRC_COMPLETE"):
-            with open(os.path.join(root, m), "w") as fh:
-                fh.write("ok\n")
+        os.makedirs(table)
+        os.makedirs(os.path.join(inp, "files"))
+        entrymod._mark_fixture_ready(table)
+        entrymod._mark_fixture_ready(inp)
         entrymod.bench_reset(sf)
-        assert not os.path.exists(os.path.join(root, "table"))
-        assert not os.path.exists(os.path.join(root, "_COMPLETE"))
-        assert os.path.isdir(os.path.join(root, "src"))
-        assert os.path.exists(os.path.join(root, "_SRC_COMPLETE"))
+        assert not os.path.exists(table)  # with its marker inside
+        assert os.path.isdir(os.path.join(inp, "files"))
+        assert os.path.exists(os.path.join(inp, "_COMPLETE"))
     finally:
-        # the dummy src must never be mistaken for a real fixture —
+        # the dummy input must never be mistaken for a real fixture —
         # force a clean rebuild for the next consumer
         shutil.rmtree(root, ignore_errors=True)
