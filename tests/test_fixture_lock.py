@@ -96,29 +96,47 @@ def _holder(path, held, done):
     e._mark_fixture_ready(path)
 
 
-def test_killed_holder_frees_lock_and_half_build_is_wiped(tmp_path):
-    """A builder killed mid-build leaves no lock behind: the next
-    session takes the lock at once and wipes the partial files, and
-    a race after that still has exactly one builder."""
-    path = str(tmp_path / "fx3")
+def _kill_holder_mid_build(path):
+    """Start a child that takes the build lock and leaves a partial
+    build, then SIGKILL it, as a crashed session would."""
     held, done = multiprocessing.Event(), multiprocessing.Event()
     child = multiprocessing.Process(target=_holder, args=(path, held, done))
     child.start()
     assert held.wait(30)
     os.kill(child.pid, signal.SIGKILL)
     child.join(30)
+    assert os.path.exists(os.path.join(path, "partial"))
+
+
+def test_stale_lock_from_crashed_holder_is_broken(tmp_path):
+    """A builder killed mid-build leaves no lock behind: the kernel
+    frees it, so the next session takes the lock at once and wipes
+    the partial files before rebuilding."""
+    path = str(tmp_path / "fx3")
+    _kill_holder_mid_build(path)
     t0 = time.monotonic()
     assert entrymod._fixture_ready(path) is False
     assert time.monotonic() - t0 < 5
     assert not os.path.exists(os.path.join(path, "partial"))
-    # abandon this build without a marker, as a crashed session would
-    os.close(entrymod._FIXTURE_BUILD_LOCKS.pop(path))
+    assert not _lock_is_free(path)  # the new builder holds it
+    os.makedirs(path, exist_ok=True)
+    entrymod._mark_fixture_ready(path)
+    assert _lock_is_free(path)
+    assert entrymod._fixture_ready(path) is True
+
+
+def test_concurrent_stale_break_is_atomic(tmp_path):
+    """After a holder is killed mid-build, racing sessions still get
+    exactly one builder; the others reuse its finished fixture."""
+    path = str(tmp_path / "fx5")
+    _kill_holder_mid_build(path)
     assert _race(path, 4) == ["built", "reused", "reused", "reused"]
     assert open(os.path.join(path, "data")).read() == "built\n"
+    assert not os.path.exists(os.path.join(path, "partial"))
     assert _lock_is_free(path)
 
 
-def test_live_holder_times_out_waiter_without_taking_lock(
+def test_stale_aged_lock_with_live_holder_is_not_broken(
     tmp_path, monkeypatch
 ):
     """A lock held by a live session is never broken, however old its
