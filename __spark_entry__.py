@@ -982,6 +982,13 @@ def _docs_with_planted_twins(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.unionByName(twins)
 
 
+def _minhash_sigs_fixture_root(sf_dir: str) -> str:
+    return (
+        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
+        f"minhash_sigs_{_source_token(sf_dir, 'documents')}"
+    )
+
+
 def _minhash_sigs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signature frame (doc → 32 hashes) as a disk fixture
     keyed by the documents source fingerprint — the same
@@ -1003,10 +1010,7 @@ def _minhash_sigs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         ensure_min_partitions,
     )
 
-    root = (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"minhash_sigs_{_source_token(sf_dir, 'documents')}"
-    )
+    root = _minhash_sigs_fixture_root(sf_dir)
     if not _fixture_ready(root):
         corpus = _docs_with_planted_twins(spark, sf_dir)
         sh = ensure_min_partitions(corpus).select(
@@ -1071,12 +1075,7 @@ def _minhash_sigs_glob(sf_dir: str) -> str:
     class as the IVF cells and PQ codebook twins)."""
     import os
 
-    return os.path.join(
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"minhash_sigs_{_source_token(sf_dir, 'documents')}",
-        "sigs",
-        "*.parquet",
-    )
+    return os.path.join(_minhash_sigs_fixture_root(sf_dir), "sigs", "*.parquet")
 
 
 def _dedup_minhash_oracle(sf_dir: str) -> str:
@@ -1361,6 +1360,13 @@ def _stream_minhash_oracle(sf_dir: str) -> str:
     )
 
 
+def _simhash_sigs_fixture_root(sf_dir: str) -> str:
+    return (
+        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
+        f"simhash_sigs_{_source_token(sf_dir, 'documents')}"
+    )
+
+
 def _simhash_sigs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """blake2b SimHash signature frame (``_id``, ``sim``) as a disk
     fixture keyed by the documents source fingerprint — the same
@@ -1382,10 +1388,7 @@ def _simhash_sigs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         ensure_min_partitions,
     )
 
-    root = (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"simhash_sigs_{_source_token(sf_dir, 'documents')}"
-    )
+    root = _simhash_sigs_fixture_root(sf_dir)
     if not _fixture_ready(root):
         corpus = _docs_with_planted_twins(spark, sf_dir)
         sig_udf = make_simhash64_udf(3, "blake2b")
@@ -1425,12 +1428,7 @@ def _simhash_sigs_glob(sf_dir: str) -> str:
     class as the MinHash-signature and PQ-codebook twins)."""
     import os
 
-    return os.path.join(
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"simhash_sigs_{_source_token(sf_dir, 'documents')}",
-        "sigs",
-        "*.parquet",
-    )
+    return os.path.join(_simhash_sigs_fixture_root(sf_dir), "sigs", "*.parquet")
 
 
 def _dedup_simhash_oracle(sf_dir: str) -> str:
@@ -1617,6 +1615,13 @@ def _ensure_pq_codebook_parquet(cb, path: str) -> None:
     os.replace(tmp, path)
 
 
+def _ivf_fixture_root(sf_dir: str, n_clusters: int) -> str:
+    return (
+        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
+        f"ivf_{_source_token(sf_dir, 'embeddings')}_k{n_clusters}"
+    )
+
+
 def _ivf_index_cached(spark: SparkSession, sf_dir: str, n_clusters: int):
     """IVF coarse index (cell assignment + centroids) as a disk
     fixture — same offline-index-build argument as the PQ codebooks.
@@ -1630,10 +1635,7 @@ def _ivf_index_cached(spark: SparkSession, sf_dir: str, n_clusters: int):
         build_ivf_index,
     )
 
-    root = (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"ivf_{_source_token(sf_dir, 'embeddings')}_k{n_clusters}"
-    )
+    root = _ivf_fixture_root(sf_dir, n_clusters)
     if not _fixture_ready(root):
         assigned, centroids = build_ivf_index(
             load_table(spark, sf_dir, "embeddings"), n_clusters=n_clusters
@@ -2123,7 +2125,7 @@ def _q_stream_stateful_wape(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # final_flush=False: NoTimeout stateful transform — the trailing
-    # no-data batch invokes no user code (run_stream_to_memory doc)
+    # no-data batch invokes no user code (streaming/windows.py:_drain doc)
     out = run_stream_to_memory(
         running_zone_wape(read_events_stream(spark, sf_dir)),
         output_mode="update",
@@ -3633,7 +3635,7 @@ def _q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per partition per micro-batch, the dominant fixed cost at local
     # volume (measured 3.0s @ 8 → 2.1s @ 4 → 1.7s @ 2, same rows);
     # production sizes this to cluster parallelism
-    # (run_stream_to_memory doc).
+    # (streaming/windows.py:_drain doc).
     # final_flush=False: INNER join rows emit in the batch that
     # matches them; the flush batch only evicts state (contrast
     # stream_outer_join, whose NULL-click rows exist only after the
@@ -9001,50 +9003,6 @@ _FIXED_SAMPLE_ORACLE = """
 """
 
 
-def _q_stream_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """transformWithStateInPandas (the Spark 4 arbitrary-state API):
-    per-user running totals in a ValueState plus a MapState acting as
-    the distinct-event-type set. The final update per user equals the
-    batch aggregate — which is exactly what the oracle recomputes.
-
-    NOT in the registry: the API's state-server handshake imports
-    protobuf (StateMessage_pb2), absent from this container; see
-    streaming/stateful.py:user_activity_totals. Kept callable for
-    protobuf-equipped environments and exercised by the skip-gated
-    test in tests/test_ivf_stateful.py."""
-    from pyspark.sql import Window as W
-
-    from mape_calculation_and_anonymization_spark.streaming.stateful import (
-        user_activity_totals,
-    )
-
-    out = run_stream_to_memory(
-        user_activity_totals(read_events_stream(spark, sf_dir)),
-        output_mode="update",
-        shuffle_partitions=8,
-    )
-    w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    final = out.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") == 1
-    )
-    return final.select(
-        "user_id",
-        "n_events",
-        "n_distinct_types",
-        F.round("volume", 6).alias("volume"),
-    )
-
-
-_STREAM_USER_ACTIVITY_ORACLE = """
-    SELECT user_id,
-           COUNT(*) AS n_events,
-           COUNT(DISTINCT event_type) AS n_distinct_types,
-           ROUND(SUM(value), 6) AS volume
-    FROM events
-    GROUP BY user_id
-"""
-
-
 def _q_bigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-LM quality scoring: per-document average add-one-smoothed
     bigram log-probability under the corpus's own bigram model — the
@@ -10568,6 +10526,13 @@ _TOUCH_ATTRIBUTION_ORACLE = """
 """
 
 
+def _bpe_merges_fixture_root(sf_dir: str) -> str:
+    return (
+        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
+        f"bpe_merges12_{_source_token(sf_dir, 'documents')}"
+    )
+
+
 def _bpe_merges_cached(spark: SparkSession, sf_dir: str):
     """The trained 12-merge BPE list as a disk fixture (offline
     tokenizer training, the PQ-codebook posture: the artifact
@@ -10582,10 +10547,7 @@ def _bpe_merges_cached(spark: SparkSession, sf_dir: str):
         word_frequencies,
     )
 
-    root = (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"bpe_merges12_{_source_token(sf_dir, 'documents')}"
-    )
+    root = _bpe_merges_fixture_root(sf_dir)
     if not _fixture_ready(root):
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
         words = word_frequencies(docs, limit=2000)
@@ -10601,12 +10563,7 @@ def _bpe_merges_glob(sf_dir: str) -> str:
     reads (sf-keyed fixture path)."""
     import os
 
-    return os.path.join(
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"bpe_merges12_{_source_token(sf_dir, 'documents')}",
-        "merges",
-        "*.parquet",
-    )
+    return os.path.join(_bpe_merges_fixture_root(sf_dir), "merges", "*.parquet")
 
 
 def _q_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10914,12 +10871,7 @@ def _ivf_fixture_glob(sf_dir: str, n_clusters: int, part: str) -> str:
     fixture and this path together)."""
     import os
 
-    return os.path.join(
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"ivf_{_source_token(sf_dir, 'embeddings')}_k{n_clusters}",
-        part,
-        "*.parquet",
-    )
+    return os.path.join(_ivf_fixture_root(sf_dir, n_clusters), part, "*.parquet")
 
 
 def _semantic_dedup_cells(sf_dir: str = _ORACLE_SF_DIR) -> str:
@@ -11551,59 +11503,108 @@ _REGISTRY: list[
         str | Callable[[str], str] | None,
     ]
 ] = [
-    ("distinct_agg_brand", _q_distinct_agg_brand, _DISTINCT_AGG_ORACLE),  # last green: r14
-    ("doc_length_histogram", _q_doc_length_histogram, _LENGTH_HIST_ORACLE),  # last green: r14
-    ("dq_expectations", _q_dq_expectations, _DQ_ORACLE),  # last green: r14
-    ("events_variant_props", _q_events_variant_props, _EVENTS_VARIANT_ORACLE),  # last green: r14
-    ("f4_unmatched_uids", _q_f4_unmatched_uids, _F4_ORACLE),  # last green: r14
-    ("funnel_conversion", _q_funnel_conversion, _FUNNEL_ORACLE),  # last green: r14
-    ("grouping_sets_revenue", _q_grouping_sets_revenue, _GROUPING_SETS_ORACLE),  # last green: r14
-    ("ivf_ann_topk", _q_ivf_ann_topk, _ANN_ORACLE),  # last green: r14
-    ("k1_parquet_roundtrip", _q_k1_parquet_roundtrip, _K1_ORACLE),  # last green: r14
-    ("median_length_filter", _q_median_length_filter, _MEDIAN_FILTER_ORACLE),  # last green: r14
-    ("q15_top_supplier", _q_q15_top_supplier, _Q15_ORACLE),  # last green: r14
-    ("q16_supplier_variety", _q_q16_supplier_variety, _Q16_ORACLE),  # last green: r14
-    ("q18_large_volume_customers", _q_q18_large_volume_customers, _Q18_ORACLE),  # last green: r14
-    ("q19_disjunctive_revenue", _q_q19_disjunctive_revenue, _Q19_ORACLE),  # last green: r14
-    ("q1_pricing_summary", _q_q1_pricing_summary, _Q1_ORACLE),  # last green: r14
-    ("q20_excess_parts", _q_q20_excess_parts, _Q20_ORACLE),  # last green: r14
-    ("q21_waiting_suppliers", _q_q21_waiting_suppliers, _Q21_ORACLE),  # last green: r14
-    ("q22_idle_balances", _q_q22_idle_balances, _Q22_ORACLE),  # last green: r14
-    ("q2_min_cost_supplier", _q_q2_min_cost_supplier, _Q2_ORACLE),  # last green: r14
-    ("q4_priority_check", _q_q4_priority_check, _Q4_ORACLE),  # last green: r14
-    ("q6_forecast_revenue", _q_q6_forecast_revenue, _Q6_ORACLE),  # last green: r14
-    ("q7_volume_shipping", _q_q7_volume_shipping, _Q7_ORACLE),  # last green: r14
-    ("q8_market_share", _q_q8_market_share, _Q8_ORACLE),  # last green: r14
-    ("q9_product_profit", _q_q9_product_profit, _Q9_ORACLE),  # last green: r14
-    ("quality_gate_funnel", _q_quality_gate_funnel, _QUALITY_FUNNEL_ORACLE),  # last green: r14
-    ("shuffle_manifest", _q_shuffle_manifest, _SHUFFLE_MANIFEST_ORACLE),  # last green: r14
-    ("source_mixture_weights", _q_source_mixture_weights, _MIXTURE_ORACLE),  # last green: r14
-    ("tcloseness_audit", _q_tcloseness_audit, _TCLOSENESS_ORACLE),  # last green: r14
-    ("token_budget_by_source", _q_token_budget_by_source, _TOKEN_BUDGET_ORACLE),  # last green: r14
-    ("touch_attribution", _q_touch_attribution, _TOUCH_ATTRIBUTION_ORACLE),  # last green: r14
-    ("vocab_top_terms", _q_vocab_top_terms, _VOCAB_ORACLE),  # last green: r14
-    ("weekday_seasonality", _q_weekday_seasonality, _WEEKDAY_ORACLE),  # last green: r14
-    ("weighted_sample_docs", _q_weighted_sample_docs, _WEIGHTED_SAMPLE_ORACLE),  # last green: r14
-    ("winsorized_stats", _q_winsorized_stats, _WINSORIZED_ORACLE),  # last green: r14
-    ("x3_perturb_values", _q_x3_perturb_values, _X3_ORACLE),  # last green: r14
-    ("x4_label_anonymization", _q_x4_label_anonymization, _X4_ORACLE),  # last green: r14
-    ("x5_uid_pseudonym", _q_x5_uid_pseudonym, _x5_pseudonym_oracle),  # last green: r14
-    ("zone_unpivot", _q_zone_unpivot, _ZONE_UNPIVOT_ORACLE),  # last green: r14
-    ("contamination_near_dup", _q_contamination_near_dup, _CONTAMINATION_NEAR_DUP_ORACLE),  # last green: r16
-    ("curation_fates", _q_curation_fates, _curation_fates_oracle()),  # last green: r17
-    ("hybrid_search_rrf", _q_hybrid_search_rrf, _HYBRID_RRF_ORACLE),  # last green: r16
-    ("ivf_incremental_topk", _q_ivf_incremental_topk, _ANN_ORACLE),  # last green: r15
-    ("minhash_incremental", _q_minhash_incremental, _minhash_incremental_oracle),  # last green: r15
-    ("ngram_novelty", _q_ngram_novelty, _NGRAM_NOVELTY_ORACLE),  # last green: r17
-    ("triangle_count", _q_triangle_count, _TRIANGLE_ORACLE),  # last green: r15
-    ("pagerank_influencers", _q_pagerank_influencers, _pagerank_oracle()),  # last green: r15
-    ("semantic_dedup", _q_semantic_dedup, _semantic_dedup_oracle),  # last green: r16
-    ("semantic_dedup_gated", _q_semantic_dedup_gated, _semantic_dedup_gated_oracle),  # last green: r15
-    ("semantic_dedup_incremental", _q_semantic_dedup_incremental, _semantic_dedup_incremental_oracle),  # last green: r16
-    ("stream_minhash_pairs", _q_stream_minhash_pairs, _stream_minhash_oracle),  # last green: r15
-    # ---- below the driver's 50-row window ----
-    ("dp_noisy_counts", _q_dp_noisy_counts, _dp_noisy_counts_oracle()),  # last green: r17
+    ("ann_cosine_topk", _q_ann_cosine_topk, _ANN_ORACLE),  # last green: r17
     ("embedding_near_dup", _q_embedding_near_dup, _EMBEDDING_NEAR_DUP_ORACLE),  # last green: r17
+    ("ann_recall_eval", _q_ann_recall_eval, _ann_recall_oracle),  # last green: r15
+    ("anomaly_counts", _q_anomaly_counts, _ANOMALY_ORACLE),  # last green: r15
+    ("anonymization_fates", _q_anonymization_fates, _anonymization_fates_oracle),  # last green: r15
+    ("asof_tolerance_rates", _q_asof_tolerance_rates, _ASOF_TOLERANCE_ORACLE),  # last green: r15
+    ("batch_sessionize", _q_batch_sessionize, _BATCH_SESSIONIZE_ORACLE),  # last green: r15
+    ("bigram_logprob_scores", _q_bigram_logprob_scores, _BIGRAM_LM_ORACLE),  # last green: r15
+    ("bpe_token_stats", _q_bpe_token_stats, _bpe_token_stats_oracle),  # last green: r15
+    ("bpe_vocab_merges", _q_bpe_vocab_merges, _bpe_training_oracle_sql()),  # last green: r15
+    ("contamination_check", _q_contamination_check, _CONTAMINATION_ORACLE),  # last green: r15
+    ("corpus_datacard", _q_corpus_datacard, _CORPUS_DATACARD_ORACLE),  # last green: r15
+    ("dedup_clusters", _q_dedup_clusters, _DEDUP_CLUSTERS_ORACLE),  # last green: r15
+    ("dedup_exact_groups", _q_dedup_exact_groups, _DEDUP_EXACT_ORACLE),  # last green: r15
+    ("dedup_jaccard_pairs", _q_dedup_jaccard_pairs, _DEDUP_JACCARD_ORACLE),  # last green: r15
+    ("dedup_minhash_pairs", _q_dedup_minhash_pairs, _dedup_minhash_oracle),  # last green: r15
+    ("dedup_simhash_md5_pairs", _q_dedup_simhash_md5_pairs, _DEDUP_SIMHASH_MD5_ORACLE),  # last green: r15
+    ("exactsubstr_cut", _q_exactsubstr_cut, _EXACTSUBSTR_CUT_ORACLE),  # last green: r15
+    ("multimodal_frames", _q_multimodal_frames, _MULTIMODAL_FRAMES_ORACLE),  # last green: r15
+    ("multimodal_metadata", _q_multimodal_metadata, _MULTIMODAL_META_ORACLE),  # last green: r15
+    ("normalized_dedup_groups", _q_normalized_dedup_groups, _NORM_DEDUP_ORACLE),  # last green: r15
+    ("o1_top_revenue", _q_o1_top_revenue, _O1_ORACLE),  # last green: r15
+    ("outer_join_order_distribution", _q_outer_join_order_distribution, _OUTER_DIST_ORACLE),  # last green: r15
+    ("percentile_order_prices", _q_percentile_order_prices, _PERCENTILE_ORACLE),  # last green: r15
+    ("profile_orders_approx", _q_profile_orders_approx, _PROFILE_APPROX_ORACLE),  # last green: r15
+    ("q12_priority_returns", _q_q12_priority_returns, _Q12_ORACLE),  # last green: r15
+    ("q3_shipping_priority", _q_q3_shipping_priority, _Q3_ORACLE),  # last green: r15
+    ("q5_nation_volume", _q_q5_nation_volume, _Q5_ORACLE),  # last green: r15
+    ("range_join_price_bands", _q_range_join_price_bands, _RANGE_JOIN_ORACLE),  # last green: r15
+    ("rank_window_top_parts", _q_rank_window_top_parts, _RANK_WINDOW_ORACLE),  # last green: r15
+    ("retention_cohorts", _q_retention_cohorts, _RETENTION_ORACLE),  # last green: r15
+    ("s1_csv_scan", _q_s1_csv_scan, _S1_ORACLE),  # last green: r15
+    ("s3_latest_partition", _q_s3_latest_partition, _S3_ORACLE),  # last green: r15
+    ("s5_jsonl_scan", _q_s5_jsonl_scan, _S5_ORACLE),  # last green: r15
+    ("salted_join_revenue", _q_salted_join_revenue, _SALTED_JOIN_ORACLE),  # last green: r15
+    ("sample_stratified_docs", _q_sample_stratified_docs, _SAMPLE_ORACLE),  # last green: r15
+    ("semi_join_late_orders", _q_semi_join_late_orders, _SEMI_JOIN_ORACLE),  # last green: r15
+    ("set_intersect_except", _q_set_intersect_except, _SET_ORACLE),  # last green: r15
+    ("small_qty_revenue", _q_small_qty_revenue, _SMALL_QTY_ORACLE),  # last green: r15
+    ("stream_hourly_wape", _q_stream_hourly_wape, _STREAM_HOURLY_ORACLE),  # last green: r15
+    ("stream_stateful_wape", _q_stream_stateful_wape, _STREAM_STATEFUL_ORACLE),  # last green: r15
+    ("stream_static_enrich", _q_stream_static_enrich, _STREAM_ENRICH_ORACLE),  # last green: r15
+    ("stream_stream_join", _q_stream_stream_join, _STREAM_STREAM_JOIN_ORACLE),  # last green: r15
+    ("text_pii_redaction", _q_text_pii_redaction, _PII_ORACLE),  # last green: r15
+    ("text_repetition", _q_text_repetition, _REPETITION_ORACLE),  # last green: r15
+    ("x6_stamp_metadata", _q_x6_stamp_metadata, _X6_ORACLE),  # last green: r15
+    ("agg_cube_counts", _q_agg_cube_counts, _CUBE_ORACLE),  # last green: r16
+    ("approx_stats_events", _q_approx_stats_events, _APPROX_STATS_ORACLE),  # last green: r16
+    ("backtest_persistence_wape", _q_backtest_persistence_wape, _BACKTEST_ORACLE),  # last green: r16
+    ("bucketed_join_orders", _q_bucketed_join_orders, _BUCKETED_JOIN_ORACLE),  # last green: r16
+    # ---- below the driver's 50-row window ----
+    ("distinct_agg_brand", _q_distinct_agg_brand, _DISTINCT_AGG_ORACLE),  # last green: r18
+    ("doc_length_histogram", _q_doc_length_histogram, _LENGTH_HIST_ORACLE),  # last green: r18
+    ("dq_expectations", _q_dq_expectations, _DQ_ORACLE),  # last green: r18
+    ("events_variant_props", _q_events_variant_props, _EVENTS_VARIANT_ORACLE),  # last green: r18
+    ("f4_unmatched_uids", _q_f4_unmatched_uids, _F4_ORACLE),  # last green: r18
+    ("funnel_conversion", _q_funnel_conversion, _FUNNEL_ORACLE),  # last green: r18
+    ("grouping_sets_revenue", _q_grouping_sets_revenue, _GROUPING_SETS_ORACLE),  # last green: r18
+    ("ivf_ann_topk", _q_ivf_ann_topk, _ANN_ORACLE),  # last green: r18
+    ("k1_parquet_roundtrip", _q_k1_parquet_roundtrip, _K1_ORACLE),  # last green: r18
+    ("median_length_filter", _q_median_length_filter, _MEDIAN_FILTER_ORACLE),  # last green: r18
+    ("q15_top_supplier", _q_q15_top_supplier, _Q15_ORACLE),  # last green: r18
+    ("q16_supplier_variety", _q_q16_supplier_variety, _Q16_ORACLE),  # last green: r18
+    ("q18_large_volume_customers", _q_q18_large_volume_customers, _Q18_ORACLE),  # last green: r18
+    ("q19_disjunctive_revenue", _q_q19_disjunctive_revenue, _Q19_ORACLE),  # last green: r18
+    ("q1_pricing_summary", _q_q1_pricing_summary, _Q1_ORACLE),  # last green: r18
+    ("q20_excess_parts", _q_q20_excess_parts, _Q20_ORACLE),  # last green: r18
+    ("q21_waiting_suppliers", _q_q21_waiting_suppliers, _Q21_ORACLE),  # last green: r18
+    ("q22_idle_balances", _q_q22_idle_balances, _Q22_ORACLE),  # last green: r18
+    ("q2_min_cost_supplier", _q_q2_min_cost_supplier, _Q2_ORACLE),  # last green: r18
+    ("q4_priority_check", _q_q4_priority_check, _Q4_ORACLE),  # last green: r18
+    ("q6_forecast_revenue", _q_q6_forecast_revenue, _Q6_ORACLE),  # last green: r18
+    ("q7_volume_shipping", _q_q7_volume_shipping, _Q7_ORACLE),  # last green: r18
+    ("q8_market_share", _q_q8_market_share, _Q8_ORACLE),  # last green: r18
+    ("q9_product_profit", _q_q9_product_profit, _Q9_ORACLE),  # last green: r18
+    ("quality_gate_funnel", _q_quality_gate_funnel, _QUALITY_FUNNEL_ORACLE),  # last green: r18
+    ("shuffle_manifest", _q_shuffle_manifest, _SHUFFLE_MANIFEST_ORACLE),  # last green: r18
+    ("source_mixture_weights", _q_source_mixture_weights, _MIXTURE_ORACLE),  # last green: r18
+    ("tcloseness_audit", _q_tcloseness_audit, _TCLOSENESS_ORACLE),  # last green: r18
+    ("token_budget_by_source", _q_token_budget_by_source, _TOKEN_BUDGET_ORACLE),  # last green: r18
+    ("touch_attribution", _q_touch_attribution, _TOUCH_ATTRIBUTION_ORACLE),  # last green: r18
+    ("vocab_top_terms", _q_vocab_top_terms, _VOCAB_ORACLE),  # last green: r18
+    ("weekday_seasonality", _q_weekday_seasonality, _WEEKDAY_ORACLE),  # last green: r18
+    ("weighted_sample_docs", _q_weighted_sample_docs, _WEIGHTED_SAMPLE_ORACLE),  # last green: r18
+    ("winsorized_stats", _q_winsorized_stats, _WINSORIZED_ORACLE),  # last green: r18
+    ("x3_perturb_values", _q_x3_perturb_values, _X3_ORACLE),  # last green: r18
+    ("x4_label_anonymization", _q_x4_label_anonymization, _X4_ORACLE),  # last green: r18
+    ("x5_uid_pseudonym", _q_x5_uid_pseudonym, _x5_pseudonym_oracle),  # last green: r18
+    ("zone_unpivot", _q_zone_unpivot, _ZONE_UNPIVOT_ORACLE),  # last green: r18
+    ("contamination_near_dup", _q_contamination_near_dup, _CONTAMINATION_NEAR_DUP_ORACLE),  # last green: r18
+    ("curation_fates", _q_curation_fates, _curation_fates_oracle()),  # last green: r18
+    ("hybrid_search_rrf", _q_hybrid_search_rrf, _HYBRID_RRF_ORACLE),  # last green: r18
+    ("ivf_incremental_topk", _q_ivf_incremental_topk, _ANN_ORACLE),  # last green: r18
+    ("minhash_incremental", _q_minhash_incremental, _minhash_incremental_oracle),  # last green: r18
+    ("ngram_novelty", _q_ngram_novelty, _NGRAM_NOVELTY_ORACLE),  # last green: r18
+    ("triangle_count", _q_triangle_count, _TRIANGLE_ORACLE),  # last green: r18
+    ("pagerank_influencers", _q_pagerank_influencers, _pagerank_oracle()),  # last green: r18
+    ("semantic_dedup", _q_semantic_dedup, _semantic_dedup_oracle),  # last green: r18
+    ("semantic_dedup_gated", _q_semantic_dedup_gated, _semantic_dedup_gated_oracle),  # last green: r18
+    ("semantic_dedup_incremental", _q_semantic_dedup_incremental, _semantic_dedup_incremental_oracle),  # last green: r18
+    ("stream_minhash_pairs", _q_stream_minhash_pairs, _stream_minhash_oracle),  # last green: r18
+    ("dp_noisy_counts", _q_dp_noisy_counts, _dp_noisy_counts_oracle()),  # last green: r17
     ("exact_substring_spans", _q_exact_substring_spans, _EXACT_SUBSTRING_ORACLE),  # last green: r17
     ("forecast_metrics_by_zone", _q_forecast_metrics_by_zone, _FORECAST_METRICS_ORACLE),  # last green: r17
     ("k8_targeted_delete", _q_k8_targeted_delete, _K8_ORACLE),  # last green: r17
@@ -11641,7 +11642,6 @@ _REGISTRY: list[
     ("w1_rolling_hourly", _q_w1_rolling_hourly, _W1_ORACLE),  # last green: r17
     ("x5_idempotent_rerun", _q_x5_idempotent_rerun, _X5_IDEMPOTENT_ORACLE),  # last green: r17
     ("agg_rollup_revenue", _q_agg_rollup_revenue, _ROLLUP_ORACLE),  # last green: r17
-    ("ann_cosine_topk", _q_ann_cosine_topk, _ANN_ORACLE),  # last green: r17
     ("anti_join_idle_customers", _q_anti_join_idle_customers, _ANTI_JOIN_ORACLE),  # last green: r17
     ("argmax_user_events", _q_argmax_user_events, _ARGMAX_ORACLE),  # last green: r17
     ("asof_join_rates", _q_asof_join_rates, _ASOF_ORACLE),  # last green: r17
@@ -11650,50 +11650,6 @@ _REGISTRY: list[
     ("cdc_latest_events", _q_cdc_latest_events, _CDC_LATEST_ORACLE),  # last green: r17
     ("decile_revenue_share", _q_decile_revenue_share, _DECILE_ORACLE),  # last green: r17
     ("decontamination_removal", _q_decontamination_removal, _DECONTAMINATION_REMOVAL_ORACLE),  # last green: r17
-    ("exactsubstr_cut", _q_exactsubstr_cut, _EXACTSUBSTR_CUT_ORACLE),  # last green: r15
-    ("anonymization_fates", _q_anonymization_fates, _anonymization_fates_oracle),  # last green: r15
-    ("multimodal_frames", _q_multimodal_frames, _MULTIMODAL_FRAMES_ORACLE),  # last green: r15
-    ("multimodal_metadata", _q_multimodal_metadata, _MULTIMODAL_META_ORACLE),  # last green: r15
-    ("normalized_dedup_groups", _q_normalized_dedup_groups, _NORM_DEDUP_ORACLE),  # last green: r15
-    ("o1_top_revenue", _q_o1_top_revenue, _O1_ORACLE),  # last green: r15
-    ("outer_join_order_distribution", _q_outer_join_order_distribution, _OUTER_DIST_ORACLE),  # last green: r15
-    ("percentile_order_prices", _q_percentile_order_prices, _PERCENTILE_ORACLE),  # last green: r15
-    ("profile_orders_approx", _q_profile_orders_approx, _PROFILE_APPROX_ORACLE),  # last green: r15
-    ("q12_priority_returns", _q_q12_priority_returns, _Q12_ORACLE),  # last green: r15
-    ("q3_shipping_priority", _q_q3_shipping_priority, _Q3_ORACLE),  # last green: r15
-    ("q5_nation_volume", _q_q5_nation_volume, _Q5_ORACLE),  # last green: r15
-    ("range_join_price_bands", _q_range_join_price_bands, _RANGE_JOIN_ORACLE),  # last green: r15
-    ("rank_window_top_parts", _q_rank_window_top_parts, _RANK_WINDOW_ORACLE),  # last green: r15
-    ("retention_cohorts", _q_retention_cohorts, _RETENTION_ORACLE),  # last green: r15
-    ("s1_csv_scan", _q_s1_csv_scan, _S1_ORACLE),  # last green: r15
-    ("s3_latest_partition", _q_s3_latest_partition, _S3_ORACLE),  # last green: r15
-    ("s5_jsonl_scan", _q_s5_jsonl_scan, _S5_ORACLE),  # last green: r15
-    ("salted_join_revenue", _q_salted_join_revenue, _SALTED_JOIN_ORACLE),  # last green: r15
-    ("sample_stratified_docs", _q_sample_stratified_docs, _SAMPLE_ORACLE),  # last green: r15
-    ("semi_join_late_orders", _q_semi_join_late_orders, _SEMI_JOIN_ORACLE),  # last green: r15
-    ("set_intersect_except", _q_set_intersect_except, _SET_ORACLE),  # last green: r15
-    ("small_qty_revenue", _q_small_qty_revenue, _SMALL_QTY_ORACLE),  # last green: r15
-    ("stream_hourly_wape", _q_stream_hourly_wape, _STREAM_HOURLY_ORACLE),  # last green: r15
-    ("stream_stateful_wape", _q_stream_stateful_wape, _STREAM_STATEFUL_ORACLE),  # last green: r15
-    ("stream_static_enrich", _q_stream_static_enrich, _STREAM_ENRICH_ORACLE),  # last green: r15
-    ("stream_stream_join", _q_stream_stream_join, _STREAM_STREAM_JOIN_ORACLE),  # last green: r15
-    ("text_pii_redaction", _q_text_pii_redaction, _PII_ORACLE),  # last green: r15
-    ("text_repetition", _q_text_repetition, _REPETITION_ORACLE),  # last green: r15
-    ("x6_stamp_metadata", _q_x6_stamp_metadata, _X6_ORACLE),  # last green: r15
-    ("ann_recall_eval", _q_ann_recall_eval, _ann_recall_oracle),  # last green: r15
-    ("anomaly_counts", _q_anomaly_counts, _ANOMALY_ORACLE),  # last green: r15
-    ("asof_tolerance_rates", _q_asof_tolerance_rates, _ASOF_TOLERANCE_ORACLE),  # last green: r15
-    ("batch_sessionize", _q_batch_sessionize, _BATCH_SESSIONIZE_ORACLE),  # last green: r15
-    ("bigram_logprob_scores", _q_bigram_logprob_scores, _BIGRAM_LM_ORACLE),  # last green: r15
-    ("bpe_token_stats", _q_bpe_token_stats, _bpe_token_stats_oracle),  # last green: r15
-    ("bpe_vocab_merges", _q_bpe_vocab_merges, _bpe_training_oracle_sql()),  # last green: r15
-    ("contamination_check", _q_contamination_check, _CONTAMINATION_ORACLE),  # last green: r15
-    ("corpus_datacard", _q_corpus_datacard, _CORPUS_DATACARD_ORACLE),  # last green: r15
-    ("dedup_clusters", _q_dedup_clusters, _DEDUP_CLUSTERS_ORACLE),  # last green: r15
-    ("dedup_exact_groups", _q_dedup_exact_groups, _DEDUP_EXACT_ORACLE),  # last green: r15
-    ("dedup_jaccard_pairs", _q_dedup_jaccard_pairs, _DEDUP_JACCARD_ORACLE),  # last green: r15
-    ("dedup_minhash_pairs", _q_dedup_minhash_pairs, _dedup_minhash_oracle),  # last green: r15
-    ("dedup_simhash_md5_pairs", _q_dedup_simhash_md5_pairs, _DEDUP_SIMHASH_MD5_ORACLE),  # last green: r15
     ("leakage_safe_split", _q_leakage_safe_split, _leakage_split_oracle()),  # last green: r16
     ("drift_events_scorecard", _q_drift_events_scorecard, _DRIFT_SCORECARD_ORACLE),  # last green: r16
     ("drift_embedding_psi", _q_drift_embedding_psi, _EMB_DRIFT_ORACLE),  # last green: r16
@@ -11730,10 +11686,6 @@ _REGISTRY: list[
     ("token_budget_repetition", _q_token_budget_repetition, _TOKEN_BUDGET_REPETITION_ORACLE),  # last green: r16
     ("training_pipeline", _q_training_pipeline, _training_pipeline_oracle()),  # last green: r16
     ("user_event_sequences", _q_user_event_sequences, _USER_SEQ_ORACLE),  # last green: r16
-    ("agg_cube_counts", _q_agg_cube_counts, _CUBE_ORACLE),  # last green: r16
-    ("approx_stats_events", _q_approx_stats_events, _APPROX_STATS_ORACLE),  # last green: r16
-    ("backtest_persistence_wape", _q_backtest_persistence_wape, _BACKTEST_ORACLE),  # last green: r16
-    ("bucketed_join_orders", _q_bucketed_join_orders, _BUCKETED_JOIN_ORACLE),  # last green: r16
     ("dedup_bloom_prefilter", _q_dedup_bloom_prefilter, _DEDUP_BLOOM_ORACLE),  # last green: r16
     ("dedup_incremental", _q_dedup_incremental, _DEDUP_INCREMENTAL_ORACLE),  # last green: r16
     ("dedup_keep_best", _q_dedup_keep_best, _keep_best_oracle()),  # last green: r16
@@ -11745,13 +11697,6 @@ _REGISTRY: list[
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # stream_user_activity (transformWithStateInPandas) is NOT
-    # registered: the Spark 4 arbitrary-state API needs the protobuf
-    # wheel, which this container lacks (state-server handshake
-    # imports StateMessage_pb2; re-verified round 14). The operator
-    # ships import-gated in streaming/stateful.py with a skip-gated
-    # test; applyInPandasWithState (stream_stateful_wape) covers the
-    # custom-stateful slot in this environment.
     return {name: builder for name, builder, _ in _REGISTRY}
 
 

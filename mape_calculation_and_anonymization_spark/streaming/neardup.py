@@ -46,8 +46,6 @@ fixture scales the cap never binds: max observed bucket is 6 vs the
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -60,6 +58,7 @@ from ..operators.dedup import (
     word_ngrams,
 )
 from ..operators.rebalance import ensure_min_partitions
+from .windows import _drain
 
 
 def streaming_minhash_ingest(
@@ -86,19 +85,18 @@ def streaming_minhash_ingest(
     state dir to resume ingest against yesterday's index.
 
     ``shuffle_partitions`` right-sizes the per-micro-batch exchanges
-    (the run_stream_to_memory discipline): the incremental pipeline
-    runs ~10 jobs per batch with several materialization points, and
-    at local volumes that FIXED per-batch cost dominates — measured
-    at sf0.1 the per-batch wall (~5s) is flat whether the batch
-    carries 2 500 docs or 5 000, and shrinking the drop does not
-    shrink the drain. That is the right shape for scale (real drops
-    amortize the fixed cost over millions of docs; the data-dependent
-    terms are all drop- or answer-proportional) but makes the local
-    two-batch drain the bench suite's slowest entry by construction.
-    Production sizes partitions to cluster parallelism. The session
-    value is restored after the drain; like run_stream_to_memory,
-    this makes the helper single-runner-per-session for the
-    duration."""
+    (the ``windows._drain`` knob): the incremental pipeline runs ~10
+    jobs per batch with several materialization points, and at local
+    volumes that FIXED per-batch cost dominates — measured at sf0.1
+    the per-batch wall (~5s) is flat whether the batch carries 2 500
+    docs or 5 000, and shrinking the drop does not shrink the drain.
+    That is the right shape for scale (real drops amortize the fixed
+    cost over millions of docs; the data-dependent terms are all
+    drop- or answer-proportional) but makes the local two-batch drain
+    the bench suite's slowest entry by construction. Production sizes
+    partitions to cluster parallelism. A drain that times out raises
+    TimeoutError: the pairs ledger under ``state_dir`` is then
+    incomplete."""
     spark = docs_stream.sparkSession
     docs_dir = os.path.join(state_dir, "docs")
     sigs_dir = os.path.join(state_dir, "sigs")
@@ -189,40 +187,8 @@ def streaming_minhash_ingest(
             sigs.unpersist()
             batch.unpersist()
 
-    ckpt_root = (
-        "/dev/shm" if os.path.isdir("/dev/shm") else state_dir
-    )
-    ckpt = os.path.join(
-        ckpt_root, "mape_spark_ckpt", f"neardup_{uuid.uuid4().hex[:10]}"
-    )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions)
-        )
-    query = (
-        docs_stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        # awaitTermination(timeout) returns False on timeout with the
-        # query still running (ADVICE r15): silently returning would
-        # hand the caller a PARTIAL pairs ledger — whatever batches
-        # happened to drain — with no error. Fail loudly instead; the
-        # finally block still stops the query and restores conf.
-        if not query.awaitTermination(timeout_s):
-            raise TimeoutError(
-                "streaming_minhash_ingest: availableNow drain did not "
-                f"finish within {timeout_s}s; pairs ledger at "
-                f"{pairs_dir} is incomplete"
-            )
-    finally:
-        if query.isActive:
-            query.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    writer = docs_stream.writeStream.foreachBatch(_ingest)
+    _drain(writer, spark, "neardup", timeout_s, shuffle_partitions)
     if not os.path.isdir(pairs_dir):  # empty stream: no pairs ever
         return spark.createDataFrame(
             [],

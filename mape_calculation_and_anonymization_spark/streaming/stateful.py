@@ -81,94 +81,3 @@ def running_zone_wape(events: DataFrame) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4 arbitrary-state API)
-# ---------------------------------------------------------------------------
-
-USER_ACTIVITY_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("n_distinct_types", T.LongType()),
-        T.StructField("volume", T.DoubleType()),
-    ]
-)
-
-
-def user_activity_totals(events: DataFrame) -> DataFrame:
-    """Per-user running activity via ``transformWithStateInPandas`` —
-    the Spark 4 successor to applyInPandasWithState, exercised here
-    with BOTH state primitives: a ValueState for the running
-    (count, volume) pair and a MapState as the distinct-event-type
-    set (per-key state the old API could only fake by packing into
-    one struct). Each micro-batch emits the refreshed totals per user
-    seen; the final update per user equals the batch aggregate, which
-    is what the oracle checks.
-
-    State is O(users × event-type-universe) — both dimension-sized;
-    at 100 TB the state store shards by the grouping key exactly like
-    the shuffle it replaces.
-
-    ENVIRONMENT GATE: the transformWithState state-server handshake
-    imports protobuf (pyspark/sql/streaming/proto/StateMessage_pb2);
-    without the protobuf wheel the Python runner crashes at
-    PRE_INIT. Raise eagerly here with a clear message instead."""
-    try:
-        from google.protobuf import descriptor as _descriptor  # noqa: F401
-    except ImportError as exc:
-        raise ImportError(
-            "transformWithStateInPandas requires the protobuf package "
-            "(pyspark's StateMessage_pb2 state-server protocol); it is "
-            "not installed in this environment — use "
-            "applyInPandasWithState (running_zone_wape) instead"
-        ) from exc
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _UserActivity(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n LONG, volume DOUBLE"
-            )
-            self._types = handle.getMapState(
-                "types", "t STRING", "seen BOOLEAN"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, vol = (
-                self._totals.get() if self._totals.exists() else (0, 0.0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                vol += float(pdf["value"].sum())
-                for t in pdf["event_type"].unique():
-                    if not self._types.containsKey((t,)):
-                        self._types.updateValue((t,), (True,))
-            self._totals.update((n, vol))
-            n_types = sum(1 for _ in self._types.keys())
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "n_distinct_types": [n_types],
-                    "volume": [vol],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.select("user_id", "event_type", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_UserActivity(),
-            outputStructType=USER_ACTIVITY_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )

@@ -18,13 +18,12 @@ query, so the read-modify-swap is single-writer by construction.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import blake2b_10hex
 from ..operators.keys import load_key_table, save_key_table
+from .windows import _drain
 
 
 def upsert_batch_into_key_table(
@@ -59,21 +58,8 @@ def stream_key_table_upsert(
     def _upsert(batch_df: DataFrame, _batch_id: int) -> None:
         upsert_batch_into_key_table(batch_df, key_dir, col)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_upsert)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="key_upsert_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(timeout_s)
-    finally:
-        if q.isActive:
-            q.stop()
-    if not finished:
-        raise TimeoutError(
-            f"key-table upsert stream did not finish within {timeout_s}s"
-        )
+    writer = stream_df.writeStream.foreachBatch(_upsert)
+    _drain(writer, stream_df.sparkSession, "key_upsert", timeout_s)
 
 
 # ---------------------------------------------------------------------------
@@ -141,23 +127,9 @@ def stream_incremental_agg(
     micro-batch's partial aggregate into the running table. After the
     stream finishes the table equals the batch aggregate over
     everything delivered — exactness pinned by the registry oracle."""
-    import tempfile as _tf
 
     def _merge(batch_df: DataFrame, _batch_id: int) -> None:
         merge_partial_aggregate(batch_df, table_path, key)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", _tf.mkdtemp(prefix="inc_agg_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(timeout_s)
-    finally:
-        if q.isActive:
-            q.stop()
-    if not finished:
-        raise TimeoutError(
-            f"incremental-agg stream did not finish within {timeout_s}s"
-        )
+    writer = stream_df.writeStream.foreachBatch(_merge)
+    _drain(writer, stream_df.sparkSession, "inc_agg", timeout_s)

@@ -22,6 +22,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..fixtures import events_batch_schema, normalize_event_ts
 from ..operators.dedup import normalized_fingerprint
@@ -242,8 +243,8 @@ def unload_ephemeral_state(spark) -> None:
     unload them all at drain end. ``StateStore.stop()`` also stops the
     maintenance thread; the next streaming query restarts it lazily
     (``startMaintenanceIfNeeded``), so this is safe between sequential
-    drains — which is the helper contract already (single runner per
-    session, see :func:`run_stream_to_memory`)."""
+    drains — which is the drain contract already (single runner per
+    session, see :func:`_drain`)."""
     try:
         jvm = spark._jvm
         jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
@@ -253,17 +254,29 @@ def unload_ephemeral_state(spark) -> None:
         pass
 
 
-def run_stream_to_memory(
-    stream_df: DataFrame,
-    output_mode: str = "append",
-    timeout_s: int = 300,
+_PARTS_CONF = "spark.sql.shuffle.partitions"
+_FLUSH_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+
+def _drain(
+    writer: DataStreamWriter,
+    spark: SparkSession,
+    name: str,
+    timeout_s: int,
     shuffle_partitions: int | None = None,
     final_flush: bool = True,
-) -> DataFrame:
-    """Execute a streaming DataFrame with Trigger.AvailableNow into a
-    memory sink, block until done, return the materialized batch
-    DataFrame. (The pattern the driver's batch-shaped contract needs;
-    production sinks would be kafka/parquet/delta writeStream.)
+) -> None:
+    """Run ``writer`` (a configured sink) once with
+    Trigger.AvailableNow and block until the source is drained — the
+    one drain every streaming sink in this package goes through.
+
+    The checkpoint is ephemeral BY CONTRACT: nothing ever restarts
+    from it (every drain gets a fresh directory), so its offset-log
+    and state-store writes are pure overhead I/O. It goes under one
+    root, ``/dev/shm/mape_spark_ckpt`` (``<tempdir>/mape_spark_ckpt``
+    without tmpfs), and is removed on every exit path. A production
+    writeStream that must resume keeps its checkpoint on durable
+    storage instead.
 
     ``shuffle_partitions`` right-sizes the STATE partition count for
     this query: every stateful operator opens one state-store instance
@@ -272,17 +285,7 @@ def run_stream_to_memory(
     over sf0.1 runs 12.8s at 32 partitions, 2.4s at 4 — same rows).
     Streaming state partitioning is pinned at the first checkpoint, so
     this is a per-query decision made at start; production queries
-    size it to cluster parallelism, local runs to data volume. The
-    session value is restored after the run.
-
-    Checkpoints go to tmpfs (``/dev/shm``) when available: an
-    AvailableNow drain into a memory sink is ephemeral BY CONTRACT —
-    nothing ever restarts from its checkpoint — so the offset-log and
-    state-store writes are pure overhead I/O; memory-speed is the
-    right price for them. (A production writeStream with a durable
-    sink must keep its checkpoint on durable storage — exactly what
-    the restartable sinks in upsert.py do.) The per-query checkpoint
-    dir is deleted after the run either way.
+    size it to cluster parallelism, local runs to data volume.
 
     ``final_flush=False`` skips the trailing NO-DATA micro-batch
     (``spark.sql.streaming.noDataMicroBatches.enabled``) that Spark
@@ -309,55 +312,75 @@ def run_stream_to_memory(
     arriving and closes windows; the flush batch matters only for
     drain-and-stop runs like AvailableNow.)
 
-    Both knobs work by setting a SESSION conf for the duration of the
-    run and restoring it after (shuffle-partition count and the
-    no-data-batch toggle have no per-query writeStream option). That
-    makes this helper single-runner-per-session by contract — don't
-    start concurrent streaming queries on the same SparkSession from
-    other threads while one is draining, or they may capture each
-    other's settings."""
+    Both knobs work by setting a SESSION conf before ``start()`` and
+    restoring it afterwards (shuffle-partition count and the
+    no-data-batch toggle have no per-query writeStream option);
+    ``None``/``True`` leave the session as it is. That makes every
+    drain single-runner-per-session by contract — don't start
+    concurrent streaming queries on the same SparkSession from other
+    threads while one is draining, or they may capture each other's
+    settings.
+
+    On every exit path the query is stopped if still active, both
+    confs are restored, the checkpoint is removed and the state-store
+    providers are unloaded (:func:`unload_ephemeral_state`). A drain
+    that does not finish within ``timeout_s`` has only partially
+    drained the source, so it raises TimeoutError instead of handing
+    the caller a truncated sink."""
     import os
     import shutil
     import tempfile
 
-    spark = stream_df.sparkSession
-    name = f"mem_{uuid.uuid4().hex[:10]}"
-    ckpt_root = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-    ckpt = os.path.join(ckpt_root, "mape_spark_ckpt", name)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    _FLUSH_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
+    root = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
+    ckpt = os.path.join(root, "mape_spark_ckpt", f"{name}_{uuid.uuid4().hex[:10]}")
+    prev_parts = spark.conf.get(_PARTS_CONF)
     prev_flush = spark.conf.get(_FLUSH_CONF)
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    if not final_flush:
-        spark.conf.set(_FLUSH_CONF, "false")
+    query = None
     try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .outputMode(output_mode)
+        if shuffle_partitions is not None:
+            spark.conf.set(_PARTS_CONF, str(shuffle_partitions))
+        if not final_flush:
+            spark.conf.set(_FLUSH_CONF, "false")
+        query = (
+            writer.option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
-        try:
-            finished = q.awaitTermination(timeout_s)
-        finally:
-            if q.isActive:
-                q.stop()
+        finished = query.awaitTermination(timeout_s)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        if query is not None and query.isActive:
+            query.stop()
+        spark.conf.set(_PARTS_CONF, prev_parts)
         spark.conf.set(_FLUSH_CONF, prev_flush)
         shutil.rmtree(ckpt, ignore_errors=True)
         unload_ephemeral_state(spark)
     if not finished:
-        # A timed-out AvailableNow run has only partially drained the
-        # source; returning the memory table would silently ship
-        # truncated results. Fail loudly instead.
         raise TimeoutError(
-            f"streaming query {name!r} did not finish within {timeout_s}s"
+            f"streaming drain {name!r} did not finish within {timeout_s}s"
         )
-    return stream_df.sparkSession.table(name)
+
+
+def run_stream_to_memory(
+    stream_df: DataFrame,
+    output_mode: str = "append",
+    timeout_s: int = 300,
+    shuffle_partitions: int | None = None,
+    final_flush: bool = True,
+) -> DataFrame:
+    """Drain a streaming DataFrame into a memory sink and return the
+    materialized batch DataFrame. (The pattern the driver's
+    batch-shaped contract needs; production sinks would be
+    kafka/parquet/delta writeStream.) ``shuffle_partitions`` and
+    ``final_flush`` are :func:`_drain`'s."""
+    name = f"mem_{uuid.uuid4().hex[:10]}"
+    spark = stream_df.sparkSession
+    writer = (
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+    )
+    _drain(writer, spark, name, timeout_s, shuffle_partitions, final_flush)
+    return spark.table(name)
 
 
 def run_stream_to_parquet(
@@ -375,37 +398,14 @@ def run_stream_to_parquet(
     input row exactly once regardless of micro-batch boundaries.
     Raises TimeoutError on an unfinished run (partially-landed files
     are the caller's cue to discard the directory)."""
-    import tempfile
-
-    spark = stream_df.sparkSession
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            stream_df.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option(
-                "checkpointLocation",
-                tempfile.mkdtemp(prefix="parquet_sink_ckpt_"),
-            )
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            finished = q.awaitTermination(timeout_s)
-        finally:
-            if q.isActive:
-                q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        unload_ephemeral_state(spark)
-    if not finished:
-        raise TimeoutError(
-            f"parquet-sink stream into {out_dir!r} did not finish "
-            f"within {timeout_s}s"
-        )
+    writer = (
+        stream_df.writeStream.format("parquet")
+        .option("path", out_dir)
+        .outputMode("append")
+    )
+    _drain(
+        writer, stream_df.sparkSession, "parquet_sink", timeout_s, shuffle_partitions
+    )
 
 
 def stream_static_enrich(

@@ -167,6 +167,27 @@ def main(argv: list[str]) -> int:
     return 1 if failures else 0
 
 
+def changed_plans(repo: str, last_green: dict[str, int]) -> set[str]:
+    """Queries whose plan dump changed in the newest ``plans/rN/``
+    (``<q>_before.txt`` differs from ``<q>_after.txt``) and whose last
+    green driver round is before N: their new plan is unproved, so they
+    belong in the next window."""
+    import glob
+
+    dirs = glob.glob(os.path.join(repo, "plans", "r[0-9]*"))
+    if not dirs:
+        return set()
+    n = max(int(os.path.basename(d)[1:]) for d in dirs)
+    changed = set()
+    for before in glob.glob(os.path.join(repo, "plans", f"r{n}", "*_before.txt")):
+        q = os.path.basename(before)[: -len("_before.txt")]
+        after = before[: -len("before.txt")] + "after.txt"
+        with open(before) as fb, open(after) as fa:
+            if fb.read() != fa.read() and last_green.get(q, 0) < n:
+                changed.add(q)
+    return changed
+
+
 def plan_window() -> int:
     """Derive the NEXT round's 50-slot window mechanically from the
     CORRECTNESS_r*.json history — the planning step the rotation-
@@ -175,11 +196,14 @@ def plan_window() -> int:
 
       1. oracle-backed queries with NO green driver row (new
          additions and regressions — always debut/return first);
-      2. everything at or past the hygiene limit (staleness would
+      2. changed plans: a query whose ``<q>_before.txt`` and
+         ``<q>_after.txt`` differ in the newest ``plans/rN/`` dump and
+         that has not been green since round N;
+      3. everything at or past the hygiene limit (staleness would
          exceed the 3-round budget — skipping them would fail the
          test next round; capacity math in test_rotation_hygiene's
          docstring);
-      3. the remaining oldest-green queries, oldest first.
+      4. the remaining oldest-green queries, oldest first.
 
     Emits the ordered 50 names as ready-to-paste registry rows (the
     entry file's own (name, builder, oracle) row, re-tagged with its
@@ -215,21 +239,25 @@ def plan_window() -> int:
                 last_green[q] = max(last_green.get(q, 0), rnd)
     upcoming = (max(rounds) + 1) if rounds else 1
     candidates = [n for n in qs if n in oracles]
+    changed = changed_plans(repo, last_green)
 
     def prio(name: str) -> tuple:
         lg = last_green.get(name)
         if lg is None:
             return (0, 0, name)  # never verified: first
-        return (1, lg, name)  # then oldest green first
+        if name in changed:
+            return (1, lg, name)  # then plans changed since last green
+        return (2, lg, name)  # then oldest green first
 
     ordered = sorted(candidates, key=prio)
     window, overflow = ordered[:50], ordered[50:]
     # exactly the hygiene test's violation predicate: never-verified,
-    # or a window skip would push staleness past the 3-round budget
+    # a changed plan, or a window skip would push staleness past the
+    # 3-round budget
     must = [
         n
         for n in candidates
-        if n not in last_green or upcoming - last_green[n] > 3
+        if n not in last_green or n in changed or upcoming - last_green[n] > 3
     ]
     dropped_must = [n for n in must if n not in window]
     print(f"# window plan for round {upcoming} "

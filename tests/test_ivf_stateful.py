@@ -94,50 +94,3 @@ def test_stateful_running_wape_equals_batch(spark):
         assert final[z]["forecast_wape"] == pytest.approx(
             batch[z]["f_abs"] / batch[z]["s_abs"]
         )
-
-
-def test_transform_with_state_user_activity(spark):
-    """transformWithStateInPandas per-user totals == batch aggregate.
-    Skips where the protobuf wheel (pyspark's state-server protocol)
-    is absent — the operator raises a clear ImportError there, which
-    the second assert pins."""
-    import pytest
-
-    from mape_calculation_and_anonymization_spark.streaming.stateful import (
-        user_activity_totals,
-    )
-
-    try:
-        import google.protobuf  # noqa: F401
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
-
-    if not has_protobuf:
-        with pytest.raises(ImportError, match="protobuf"):
-            user_activity_totals(read_events_stream(spark, SF))
-        pytest.skip("protobuf not installed; gate behavior verified")
-
-    from pyspark.sql import functions as F
-
-    from mape_calculation_and_anonymization_spark.fixtures import load_events
-
-    out = run_stream_to_memory(
-        user_activity_totals(read_events_stream(spark, SF)),
-        output_mode="update",
-    )
-    final = {
-        r["user_id"]: (r["n_events"], r["n_distinct_types"])
-        for r in out.orderBy("n_events").collect()
-    }  # last update per user wins in the dict
-    batch = {
-        r["user_id"]: (r["n"], r["d"])
-        for r in load_events(spark, SF)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct("event_type").alias("d"),
-        )
-        .collect()
-    }
-    assert final == batch

@@ -41,9 +41,7 @@ def test_oracle_parity_sf0001(spark, name):
 
 def test_every_query_def_is_registered():
     """A query lands registered or not at all: every top-level _q_*
-    def in the entry file is a registry builder. The one exception is
-    stream_user_activity, which needs the protobuf wheel (see the
-    comment in queries())."""
+    def in the entry file is a registry builder."""
     import ast
 
     with open(entrymod.__file__) as fh:
@@ -54,7 +52,7 @@ def test_every_query_def_is_registered():
         if isinstance(node, ast.FunctionDef) and node.name.startswith("_q_")
     }
     registered = {fn.__name__ for fn in _QUERIES.values()}
-    assert defs - registered == {"_q_stream_user_activity"}
+    assert defs - registered == set()
     assert registered <= defs
 
 
@@ -179,7 +177,12 @@ def test_rotation_hygiene():
     to 200, leaving ~50 slots of genuine growth headroom while still
     guaranteeing every oracle-backed query fresh driver evidence at
     most 4 rounds old. Relaxing further would let evidence go stale
-    for most of the build's remaining rounds — don't."""
+    for most of the build's remaining rounds — don't.
+
+    Changed-plan rule: a query whose plan dump changed in the newest
+    plans/rN/ (<q>_before.txt differs from <q>_after.txt) and that
+    has not been green since round N must be in the window — its new
+    plan is unproved."""
     import glob
     import json
     import os
@@ -206,13 +209,29 @@ def test_rotation_hygiene():
     if not rounds:
         pytest.skip("no CORRECTNESS history yet (round 1)")
     upcoming = max(rounds) + 1
+    plan_round = max(
+        int(os.path.basename(d)[1:])
+        for d in glob.glob(os.path.join(repo, "plans", "r[0-9]*"))
+    )
+    changed = set()
+    for before in glob.glob(
+        os.path.join(repo, "plans", f"r{plan_round}", "*_before.txt")
+    ):
+        after = before[: -len("before.txt")] + "after.txt"
+        if open(before).read() != open(after).read():
+            changed.add(os.path.basename(before)[: -len("_before.txt")])
     names = list(_QUERIES)
     window = set(names[:50])
     violations = []
     for q in names:
         if q not in _ORACLES or q in window:
             continue
-        if q not in last_green:
+        if q in changed and last_green.get(q, 0) < plan_round:
+            violations.append(
+                f"{q}: plan changed in plans/r{plan_round}, "
+                f"not green since"
+            )
+        elif q not in last_green:
             violations.append(f"{q}: oracle-backed but never driver-verified")
         elif upcoming - last_green[q] > 3:
             violations.append(

@@ -26,7 +26,7 @@ def test_final_flush_skip_is_output_equal_and_restores_conf(spark):
     (a) leave the session's noDataMicroBatches conf exactly as it was
     and (b) produce the identical result for an eligible shape — a
     complete-mode aggregation, whose last data batch already rewrote
-    the full table (run_stream_to_memory doc)."""
+    the full table (streaming/windows.py:_drain doc)."""
     conf_key = "spark.sql.streaming.noDataMicroBatches.enabled"
     before = spark.conf.get(conf_key)
 
@@ -49,7 +49,7 @@ def test_final_flush_skip_is_output_equal_and_restores_conf(spark):
 
 def test_final_flush_skip_is_output_equal_for_join_and_dedup(spark):
     """Same equality pin for the OTHER two eligible shape classes
-    (run_stream_to_memory doc): an append-mode INNER stream-stream
+    (streaming/windows.py:_drain doc): an append-mode INNER stream-stream
     interval join (rows emit in the batch that matches them) and
     streaming dedup (rows emit when first seen) — the flush batch
     only evicts state in both."""
@@ -360,25 +360,117 @@ def test_stream_key_upsert_incremental_and_idempotent(spark, tmp_path):
     assert third == second
 
 
-def test_stream_checkpoint_lands_on_tmpfs_and_is_cleaned(spark):
-    """Ephemeral AvailableNow checkpoints go under the tmpfs root and
-    are deleted after the drain — the run must not accumulate
-    checkpoint dirs across queries."""
+def test_stream_checkpoint_lands_on_tmpfs_and_is_cleaned(spark, tmp_path):
+    """Every AvailableNow drain — the five public sinks — checkpoints
+    under the one tmpfs root and removes the checkpoint on exit: no
+    drain may leave a new entry under the root or under the temp
+    dir."""
     import os
+    import tempfile
+
+    from mape_calculation_and_anonymization_spark.streaming.neardup import (
+        streaming_minhash_ingest,
+    )
+    from mape_calculation_and_anonymization_spark.streaming.upsert import (
+        stream_incremental_agg,
+        stream_key_table_upsert,
+    )
+    from mape_calculation_and_anonymization_spark.streaming.windows import (
+        read_documents_stream,
+        run_stream_to_parquet,
+    )
 
     root = (
         "/dev/shm/mape_spark_ckpt"
         if os.path.isdir("/dev/shm")
-        else os.path.join(os.environ.get("TMPDIR", "/tmp"), "mape_spark_ckpt")
+        else os.path.join(tempfile.gettempdir(), "mape_spark_ckpt")
     )
-    before = set(os.listdir(root)) if os.path.isdir(root) else set()
-    out = run_stream_to_memory(
-        read_events_stream(spark, SF)
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n")),
-        output_mode="complete",
-        shuffle_partitions=2,
-    )
-    assert out.count() > 0
-    after = set(os.listdir(root)) if os.path.isdir(root) else set()
-    assert after <= before  # no new leftover checkpoint dirs
+    dirs = (root, tempfile.gettempdir())
+
+    def listing():
+        return {d: set(os.listdir(d)) if os.path.isdir(d) else set() for d in dirs}
+
+    drains = {
+        "run_stream_to_memory": lambda: run_stream_to_memory(
+            read_events_stream(spark, SF)
+            .groupBy("event_type")
+            .agg(F.count(F.lit(1)).alias("n")),
+            output_mode="complete",
+            shuffle_partitions=2,
+        ).count(),
+        "run_stream_to_parquet": lambda: run_stream_to_parquet(
+            read_events_stream(spark, SF), str(tmp_path / "parquet")
+        ),
+        "stream_key_table_upsert": lambda: stream_key_table_upsert(
+            read_events_stream(spark, SF), str(tmp_path / "key")
+        ),
+        "stream_incremental_agg": lambda: stream_incremental_agg(
+            read_events_stream(spark, SF), str(tmp_path / "agg")
+        ),
+        "streaming_minhash_ingest": lambda: streaming_minhash_ingest(
+            read_documents_stream(spark, SF),
+            str(tmp_path / "neardup"),
+            shuffle_partitions=2,
+        ).count(),
+    }
+    # the first drain of a session unpacks the JVM's native codecs and
+    # its artifact dir into the temp dir; only drain leftovers count
+    drains["run_stream_to_memory"]()
+    leaks = {}
+    for name, drain in drains.items():
+        before = listing()
+        drain()
+        after = listing()
+        new = {d: sorted(after[d] - before[d]) for d in dirs if after[d] - before[d]}
+        if new:
+            leaks[name] = new
+    assert not leaks, f"drains left checkpoint entries behind: {leaks}"
+
+
+def test_drain_protocol_is_written_once():
+    """The AvailableNow drain protocol (trigger, awaitTermination, the
+    checkpointLocation option) appears only inside
+    streaming/windows.py:_drain — no sink carries its own copy. AST
+    scan of the package and the entry file; starts no Spark."""
+    import ast
+    import glob
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(repo, "mape_calculation_and_anonymization_spark")
+    drain_file = os.path.join(pkg, "streaming", "windows.py")
+    files = glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)
+    files.append(os.path.join(repo, "__spark_entry__.py"))
+
+    def protocol_calls(tree):
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+            ):
+                continue
+            attr = node.func.attr
+            if attr in ("trigger", "awaitTermination") or (
+                attr == "option"
+                and node.args
+                and isinstance(node.args[0], ast.Constant)
+                and node.args[0].value == "checkpointLocation"
+            ):
+                yield node
+
+    outside, inside = [], []
+    for path in files:
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        drain = [
+            n
+            for n in tree.body
+            if path == drain_file
+            and isinstance(n, ast.FunctionDef)
+            and n.name == "_drain"
+        ]
+        in_drain = {id(c) for d in drain for c in protocol_calls(d)}
+        for call in protocol_calls(tree):
+            where = f"{os.path.relpath(path, repo)}:{call.lineno} .{call.func.attr}"
+            (inside if id(call) in in_drain else outside).append(where)
+    assert not outside, f"drain protocol outside windows._drain: {outside}"
+    assert len(inside) == 3, inside

@@ -131,3 +131,36 @@ def test_streaming_resumes_against_standing_state(spark, corpus, full_pairs, tmp
     day2_total = _pair_set(_run_stream(spark, day2_src, state))
     assert day1 <= day2_total
     assert day2_total == full_pairs
+
+
+def test_drain_start_failure_restores_session(spark, tmp_path):
+    """A drain whose start fails leaves the session as it found it:
+    the shuffle-partition conf is back at its old value and no
+    streaming query stays active. Covers a start that fails before
+    the drain (a batch frame has no writeStream) and one that fails
+    inside it (complete mode without an aggregation)."""
+    from pyspark.errors import AnalysisException
+
+    from mape_calculation_and_anonymization_spark.streaming.windows import (
+        read_events_stream,
+        run_stream_to_memory,
+    )
+
+    parts = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(parts)
+    with pytest.raises(AnalysisException):
+        streaming_minhash_ingest(
+            spark.range(3).selectExpr("id AS doc_id", "'x' AS text"),
+            str(tmp_path / "state"),
+            shuffle_partitions=3,
+        )
+    assert spark.conf.get(parts) == before
+    assert spark.streams.active == []
+    with pytest.raises(AnalysisException):
+        run_stream_to_memory(
+            read_events_stream(spark, SF),
+            output_mode="complete",
+            shuffle_partitions=3,
+        )
+    assert spark.conf.get(parts) == before
+    assert spark.streams.active == []
