@@ -1,8 +1,24 @@
-"""SPARK_GRAFT_CPUS parsing (no Spark session needed)."""
+"""Session settings and the class-data-sharing archive.
+
+Everything here runs without a Spark session except
+``test_archive_lifecycle_in_a_fresh_interpreter``, which starts its own
+in a subprocess (the tier-1 session is already up in this one)."""
+
+import os
+import subprocess
+import sys
+import types
 
 import pytest
 
-from mape_calculation_and_anonymization_spark.session import resolve_cpus
+from mape_calculation_and_anonymization_spark import session
+from mape_calculation_and_anonymization_spark.session import (
+    resolve_cpus,
+    resolve_driver_memory,
+    resolve_shuffle_partitions,
+)
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.mark.parametrize(
@@ -29,3 +45,245 @@ def test_resolve_cpus_rejects_invalid(monkeypatch, value):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", value)
     with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
         resolve_cpus()
+
+
+@pytest.mark.parametrize("value, expected", [(None, 32), ("1", 1), ("200", 200)])
+def test_resolve_shuffle_partitions_env(monkeypatch, value, expected):
+    if value is None:
+        monkeypatch.delenv("SPARK_GRAFT_SHUFFLE", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", value)
+    assert resolve_shuffle_partitions() == expected
+    assert resolve_shuffle_partitions(8) == 8
+
+
+@pytest.mark.parametrize("value", ["0", "-4", "abc", "", "2.5", " 8"])
+def test_resolve_shuffle_partitions_rejects_invalid(monkeypatch, value):
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", value)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_SHUFFLE"):
+        resolve_shuffle_partitions()
+
+
+@pytest.mark.parametrize("value, expected", [(None, "8g"), ("512m", "512m"), ("2g", "2g"),
+                                             ("1048576", "1048576")])
+def test_resolve_driver_memory_env(monkeypatch, value, expected):
+    if value is None:
+        monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", value)
+    assert resolve_driver_memory() == expected
+
+
+@pytest.mark.parametrize("value", ["", "8 g", "8gb", "g", "-1g", "1.5g", "8G; rm"])
+def test_resolve_driver_memory_rejects_invalid(monkeypatch, value):
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", value)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_DRIVER_MEM"):
+        resolve_driver_memory()
+
+
+# --- the class-data-sharing archive --------------------------------------
+
+
+@pytest.fixture
+def homes(tmp_path, monkeypatch):
+    """A fake JDK and Spark home, the archive root under ``tmp_path``."""
+    jdk = tmp_path / "jdk"
+    (jdk / "bin").mkdir(parents=True)
+    (jdk / "bin" / "java").write_text("")
+    (jdk / "release").write_text('JAVA_VERSION="17.0.20"\n')
+    spark = tmp_path / "spark"
+    (spark / "jars").mkdir(parents=True)
+    (spark / "conf").mkdir()
+    (spark / "conf" / "spark-defaults.conf.template").write_text("")
+    for name in ("a.jar", "b.jar"):
+        (spark / "jars" / name).write_bytes(b"x" * 10)
+    monkeypatch.setenv("JAVA_HOME", str(jdk))
+    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    for var in session._CLASSPATH_ENV:
+        monkeypatch.delenv(var, raising=False)
+    monkeypatch.setattr(session, "_find_spark_home", lambda: str(spark))
+    monkeypatch.setattr(session, "_CDS_ROOT", str(tmp_path / "cds"))
+    return types.SimpleNamespace(jdk=jdk, spark=spark, root=tmp_path / "cds")
+
+
+def test_cds_key_tracks_jars_and_java_release(homes):
+    java, spark = session._java(), str(homes.spark)
+    jar = homes.spark / "jars" / "a.jar"
+    base = session._cds_key(java, spark)
+    assert session._cds_key(java, spark) == base
+
+    st = jar.stat()
+    jar.write_bytes(b"x" * 11)
+    os.utime(jar, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert session._cds_key(java, spark) != base  # size
+    jar.write_bytes(b"x" * 10)
+    os.utime(jar, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert session._cds_key(java, spark) == base
+
+    os.utime(jar, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert session._cds_key(java, spark) != base  # mtime
+    os.utime(jar, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert session._cds_key(java, spark) == base
+
+    (homes.jdk / "release").write_text('JAVA_VERSION="17.0.21"\n')
+    assert session._cds_key(java, spark) != base
+
+
+class _FakeBuilder:
+    """Stands in for ``SparkSession.builder``: records the conf, and
+    ``$SPARK_CONF_DIR`` as the launcher would see it."""
+
+    def __init__(self):
+        self.conf = {}
+        self.conf_dir_at_launch = "unset"
+
+    def master(self, _):
+        return self
+
+    def appName(self, _):
+        return self
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def getOrCreate(self):
+        self.conf_dir_at_launch = os.environ.get("SPARK_CONF_DIR")
+        return types.SimpleNamespace(
+            conf=types.SimpleNamespace(set=self.conf.__setitem__),
+            sparkContext=types.SimpleNamespace(setLogLevel=lambda _: None,
+                                               _gateway=types.SimpleNamespace()),
+        )
+
+
+@pytest.fixture
+def fake_launch(monkeypatch):
+    """``get_spark`` as if no JVM were running yet, launching nothing."""
+    builder = _FakeBuilder()
+    monkeypatch.setattr(session, "SparkSession", types.SimpleNamespace(builder=builder))
+    monkeypatch.setattr(session, "SparkContext", types.SimpleNamespace(_gateway=None))
+    monkeypatch.setattr(session, "_cds_outcome", lambda spark, plan: plan.state if plan else "off")
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    return builder
+
+
+@pytest.mark.parametrize("via_env", [False, True])
+def test_user_conf_dir_disables_the_archive(homes, fake_launch, monkeypatch, tmp_path, via_env):
+    conf = homes.spark / "conf"
+    if via_env:
+        conf = tmp_path / "myconf"
+        conf.mkdir()
+        monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
+    (conf / "spark-defaults.conf").write_text("spark.driver.cores 2\n")
+    session.get_spark(extra_conf={"spark.driver.extraJavaOptions": "-Dx=1"})
+    expected = str(conf) if via_env else None
+    assert fake_launch.conf_dir_at_launch == expected
+    assert os.environ.get("SPARK_CONF_DIR") == expected
+    assert "spark.driver.defaultJavaOptions" not in fake_launch.conf
+    assert fake_launch.conf["spark.driver.extraJavaOptions"] == "-Dx=1"
+    assert fake_launch.conf["spark.graft.cds"] == "off"
+
+
+def test_caller_java_options_keep_the_archive_flags(homes, fake_launch):
+    session.get_spark(extra_conf={"spark.driver.extraJavaOptions": "-Djava.io.tmpdir=/w"})
+    conf = fake_launch.conf
+    assert conf["spark.driver.extraJavaOptions"] == "-Djava.io.tmpdir=/w"
+    opts = conf["spark.driver.defaultJavaOptions"].split()
+    candidate = [o for o in opts if o.startswith("-XX:ArchiveClassesAtExit=")]
+    assert candidate == [f"-XX:ArchiveClassesAtExit={homes.root}/"
+                         f"{session._cds_key(session._java(), str(homes.spark))}.jsa.{os.getpid()}"]
+    assert "-Xlog:cds*=off" in opts
+    assert conf["spark.graft.cds"] == "dumping"
+    # the empty conf dir only while the JVM launches
+    assert fake_launch.conf_dir_at_launch == str(homes.root / "conf")
+    assert os.listdir(homes.root / "conf") == []
+    assert "SPARK_CONF_DIR" not in os.environ
+
+
+def _dead_pid() -> int:
+    proc = subprocess.Popen(["true"])
+    proc.wait()
+    return proc.pid
+
+
+def _dump(java: str, classpath: str, path) -> None:
+    subprocess.run(
+        [java, f"-XX:ArchiveClassesAtExit={path}", "-Xlog:cds*=off", "-cp", classpath, "-version"],
+        check=True, stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
+    )
+    assert os.path.getsize(path) > 8192
+
+
+@pytest.fixture
+def real_java(tmp_path):
+    java = session._java()
+    if java is None:
+        pytest.skip("no java")
+    root = tmp_path / "root"
+    (root / "conf").mkdir(parents=True)
+    jars = tmp_path / "spark" / "jars"
+    jars.mkdir(parents=True)
+    return java, root, session._cds_classpath(str(root / "conf"), str(tmp_path / "spark"))
+
+
+def test_publish_leaves_a_live_writers_candidate_alone(real_java):
+    java, root, cp = real_java
+    live = root / f"k.jsa.{os.getpid()}"
+    live.write_bytes(b"\0" * 4096)  # junk: it would fail a probe
+    archive = session._publish_cds(str(root), "k", java, cp, "1g")
+    assert archive == str(root / "k.jsa")
+    assert sorted(os.listdir(root)) == ["conf", live.name]
+
+
+def test_publish_deletes_a_truncated_candidate_and_renames_a_good_one(real_java, tmp_path):
+    java, root, cp = real_java
+    good = tmp_path / "good.jsa"
+    _dump(java, cp, good)
+    truncated = root / f"k.jsa.{_dead_pid()}"
+    with open(truncated, "wb") as out:
+        subprocess.run(["head", "-c", str(good.stat().st_size // 2), str(good)],
+                       stdout=out, check=True)
+    session._publish_cds(str(root), "k", java, cp, "1g")
+    assert sorted(os.listdir(root)) == ["conf"]  # deleted, never renamed
+
+    candidate = root / f"k.jsa.{_dead_pid()}"
+    os.rename(good, candidate)
+    (root / "other.jsa").write_bytes(b"\0")  # another key's archive
+    (root / f"other.jsa.{_dead_pid()}").write_bytes(b"\0")
+    archive = session._publish_cds(str(root), "k", java, cp, "1g")
+    assert sorted(os.listdir(root)) == ["conf", "k.jsa"]
+    assert os.path.getsize(archive) > 8192
+
+
+_START = """
+import sys
+from mape_calculation_and_anonymization_spark import session
+session._CDS_ROOT = sys.argv[1]
+spark = session.get_spark(app_name="cds", cpus=2)
+print("RESULT", spark.conf.get("spark.graft.cds"), spark.range(10).count())
+"""
+
+
+def test_archive_lifecycle_in_a_fresh_interpreter(tmp_path):
+    root = tmp_path / "cds"
+    env = dict(os.environ, PYTHONPATH=REPO, SPARK_GRAFT_DRIVER_MEM="1g")
+
+    def start() -> list[str]:
+        out = subprocess.run([sys.executable, "-c", _START, str(root)], env=env, cwd=tmp_path,
+                             capture_output=True, text=True, timeout=600)
+        assert out.returncode == 0, out.stderr[-3000:]
+        [line] = [ln for ln in out.stdout.splitlines() if ln.startswith("RESULT")]
+        assert "[cds" not in out.stdout + out.stderr
+        return line.split()[1:]
+
+    assert start() == ["dumping", "10"]
+    [candidate] = [n for n in os.listdir(root) if ".jsa." in n]
+    key = candidate.partition(".jsa")[0]
+
+    assert start() == ["mapped", "10"]
+    assert sorted(os.listdir(root)) == sorted(["conf", f"{key}.jsa"])
+
+    (root / f"{key}.jsa").write_bytes(os.urandom(4096))
+    assert start() == ["off", "10"]
+    assert os.listdir(root) == ["conf"]  # the junk is gone; the next start dumps
+    assert not [n for n in os.listdir(tmp_path) if n.startswith("hs_err")]
