@@ -34,12 +34,15 @@ The JDK refuses to dump with a non-empty directory on the classpath, so
 ``SPARK_CONF_DIR`` points at the empty ``<root>/conf`` while the JVM
 launches. If the effective conf dir holds anything but ``*.template``
 files, or the classpath is changed by the environment, no archive is
-used: user config is never dropped. The flags go in
+used: user config is never dropped. The archive is code the JVM maps,
+so no archive is used either unless ``<root>`` (created mode 0700) is a
+real directory of this user that no one else can write to. The flags go in
 ``spark.driver.defaultJavaOptions``, which the launcher puts before a
 caller's ``spark.driver.extraJavaOptions``. The outcome is recorded in
 the session conf as ``spark.graft.cds``: ``mapped`` (the JVM maps
-``<key>.jsa``), ``dumping`` or ``off``. ``rm -rf /tmp/mape_spark_cds``
-resets it.
+``<key>.jsa``), ``dumping`` or ``off``; a session whose JVM was started
+elsewhere (``$PYSPARK_GATEWAY_PORT``, or another builder first) reports
+``off``. ``rm -rf /tmp/mape_spark_cds`` resets it.
 """
 
 from __future__ import annotations
@@ -50,6 +53,7 @@ import hashlib
 import os
 import re
 import shutil
+import stat
 import subprocess
 from typing import NamedTuple
 
@@ -65,6 +69,7 @@ _CLASSPATH_ENV = (
     "SPARK_TESTING", "SPARK_SQL_TESTING", "SPARK_CONNECT_BEELINE",
 )
 _CDS_LOG_OFF = "-Xlog:cds*=off"  # a dump prints ~70 warnings; a mismatch one more
+_cds_state = "off"  # spark.graft.cds of the JVM get_spark launched in this interpreter
 
 
 def resolve_cpus(cpus: str | int | None = None) -> int | None:
@@ -100,11 +105,12 @@ def resolve_shuffle_partitions(n: str | int | None = None) -> int:
 def resolve_driver_memory(mem: str | None = None) -> str:
     """Driver heap from ``mem``, else $SPARK_GRAFT_DRIVER_MEM, else ``8g``.
 
-    Digits with an optional ``k``/``m``/``g``/``t`` suffix; anything else
-    raises ValueError naming the variable."""
+    Digits with an optional ``k``/``m``/``g``/``t`` suffix in either case,
+    as ``-Xmx`` takes them; anything else raises ValueError naming the
+    variable."""
     if mem is None:
         mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
-    if re.fullmatch(r"\d+[kmgt]?", str(mem)):
+    if re.fullmatch(r"\d+[kmgt]?", str(mem), re.IGNORECASE):
         return str(mem)
     raise ValueError(
         f"SPARK_GRAFT_DRIVER_MEM must be digits with an optional k/m/g/t suffix, got {mem!r}"
@@ -116,6 +122,19 @@ def _java() -> str | None:
     home = os.environ.get("JAVA_HOME")
     java = os.path.join(home, "bin", "java") if home else shutil.which("java")
     return os.path.realpath(java) if java else None
+
+
+def _private_root(root: str) -> bool:
+    """Create ``root`` (mode 0700) if missing; True only if it is a real
+    directory of this user that no one else can write to, so no other user
+    can plant an archive in it or a symlink where a candidate will go."""
+    os.makedirs(root, mode=0o700, exist_ok=True)
+    st = os.lstat(root)
+    return (
+        stat.S_ISDIR(st.st_mode)
+        and st.st_uid == os.getuid()
+        and not st.st_mode & (stat.S_IWGRP | stat.S_IWOTH)
+    )
 
 
 def _cds_key(java: str, spark_home: str) -> str:
@@ -215,8 +234,10 @@ def _cds_plan(driver_mem: str, extra_conf: dict[str, str]) -> _CdsPlan | None:
             n.endswith(".template") for n in os.listdir(conf_dir)
         ):
             return None  # user config: never drop it
+        if not _private_root(_CDS_ROOT):
+            return None
         key = _cds_key(java, spark_home)
-        os.makedirs(empty_conf, exist_ok=True)
+        os.makedirs(empty_conf, mode=0o700, exist_ok=True)
         if os.listdir(empty_conf):
             return None
         classpath = _cds_classpath(empty_conf, spark_home)
@@ -288,6 +309,7 @@ def get_spark(
     call in an interpreter launches the driver JVM from the class-data
     archive (module docstring).
     """
+    global _cds_state
     n_cpus = resolve_cpus(cpus)
     shuffle_partitions = resolve_shuffle_partitions(shuffle_partitions)
     driver_mem = resolve_driver_memory()
@@ -318,9 +340,8 @@ def get_spark(
         builder = builder.config(k, v)
     with _env("SPARK_CONF_DIR", plan and plan.conf_dir):
         spark = builder.getOrCreate()
-    gateway = spark.sparkContext._gateway  # one per interpreter, outlives stop()
-    if launching:
-        gateway.graft_cds = _cds_outcome(spark, plan)
-    spark.conf.set("spark.graft.cds", getattr(gateway, "graft_cds", "off"))
+    if launching:  # the gateway JVM outlives stop(), so the state holds until exit
+        _cds_state = _cds_outcome(spark, plan)
+    spark.conf.set("spark.graft.cds", _cds_state)
     spark.sparkContext.setLogLevel("WARN")
     return spark

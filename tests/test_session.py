@@ -65,7 +65,7 @@ def test_resolve_shuffle_partitions_rejects_invalid(monkeypatch, value):
 
 
 @pytest.mark.parametrize("value, expected", [(None, "8g"), ("512m", "512m"), ("2g", "2g"),
-                                             ("1048576", "1048576")])
+                                             ("8G", "8G"), ("1048576", "1048576")])
 def test_resolve_driver_memory_env(monkeypatch, value, expected):
     if value is None:
         monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
@@ -152,8 +152,15 @@ class _FakeBuilder:
         return types.SimpleNamespace(
             conf=types.SimpleNamespace(set=self.conf.__setitem__),
             sparkContext=types.SimpleNamespace(setLogLevel=lambda _: None,
-                                               _gateway=types.SimpleNamespace()),
+                                               _gateway=_Py4jLikeGateway()),
         )
+
+
+class _Py4jLikeGateway:
+    """Like py4j's JavaGateway, answers any unknown attribute with a JVM member."""
+
+    def __getattr__(self, name):
+        return lambda *args: None
 
 
 @pytest.fixture
@@ -163,8 +170,63 @@ def fake_launch(monkeypatch):
     monkeypatch.setattr(session, "SparkSession", types.SimpleNamespace(builder=builder))
     monkeypatch.setattr(session, "SparkContext", types.SimpleNamespace(_gateway=None))
     monkeypatch.setattr(session, "_cds_outcome", lambda spark, plan: plan.state if plan else "off")
+    monkeypatch.setattr(session, "_cds_state", "off")  # this interpreter's real one is restored
     monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
     return builder
+
+
+def _assert_no_archive(builder, root) -> None:
+    assert "spark.driver.defaultJavaOptions" not in builder.conf
+    assert builder.conf_dir_at_launch is None
+    assert builder.conf["spark.graft.cds"] == "off"
+    assert not os.path.exists(root / "conf")
+
+
+@pytest.mark.parametrize("started_by", ["gateway_port", "other_builder"])
+def test_a_jvm_started_elsewhere_reports_off(homes, fake_launch, monkeypatch, started_by):
+    if started_by == "gateway_port":  # spark-submit, the pyspark shell, notebooks
+        monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "12345")
+    else:
+        monkeypatch.setattr(session.SparkContext, "_gateway", _Py4jLikeGateway())
+    session.get_spark()
+    _assert_no_archive(fake_launch, homes.root)
+    session.get_spark()
+    assert fake_launch.conf["spark.graft.cds"] == "off"
+
+
+def test_later_calls_report_the_launch_outcome(homes, fake_launch, monkeypatch):
+    session.get_spark()
+    assert fake_launch.conf["spark.graft.cds"] == "dumping"
+    monkeypatch.setattr(session.SparkContext, "_gateway", _Py4jLikeGateway())
+    del fake_launch.conf["spark.graft.cds"]
+    session.get_spark()
+    assert fake_launch.conf["spark.graft.cds"] == "dumping"
+
+
+@pytest.mark.parametrize("root_is", ["world_writable", "group_writable", "another_users",
+                                     "a_symlink"])
+def test_a_root_others_can_write_gets_no_archive(homes, fake_launch, monkeypatch, tmp_path,
+                                                 root_is):
+    if root_is == "a_symlink":
+        (tmp_path / "elsewhere").mkdir(mode=0o700)
+        homes.root.symlink_to(tmp_path / "elsewhere")
+    else:
+        homes.root.mkdir(mode=0o700)
+    if root_is == "world_writable":
+        homes.root.chmod(0o1777)
+    elif root_is == "group_writable":
+        homes.root.chmod(0o770)
+    elif root_is == "another_users":
+        uid = homes.root.stat().st_uid
+        monkeypatch.setattr(session.os, "getuid", lambda: uid + 1)
+    session.get_spark()
+    _assert_no_archive(fake_launch, homes.root)
+
+
+def test_the_root_is_created_private(homes, fake_launch):
+    session.get_spark()
+    assert fake_launch.conf["spark.graft.cds"] == "dumping"
+    assert homes.root.stat().st_mode & 0o077 == 0
 
 
 @pytest.mark.parametrize("via_env", [False, True])
