@@ -39,6 +39,7 @@ from mape_calculation_and_anonymization_spark.operators.anonymize import (
 )
 from mape_calculation_and_anonymization_spark.operators.graph import duplicate_clusters
 from mape_calculation_and_anonymization_spark.operators.rebalance import (
+    checkpoint,
     ensure_min_partitions,
 )
 from mape_calculation_and_anonymization_spark.operators.joins import salted_join
@@ -511,12 +512,15 @@ def _q_dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text"
     )
-    base = docs.select(
-        "doc_id",
-        "lang",
-        fp(F.col("text")).alias("fp_plain"),
-        fp(F.concat(F.col("text"), F.lit("  "))).alias("fp_spaced"),
-    ).localCheckpoint(eager=True)
+    base = checkpoint(
+        docs.select(
+            "doc_id",
+            "lang",
+            fp(F.col("text")).alias("fp_plain"),
+            fp(F.concat(F.col("text"), F.lit("  "))).alias("fp_spaced"),
+        ),
+        "query.dedup_bloom_prefilter.base",
+    )
     even = base.filter(F.col("doc_id") % 2 == 0)
     odd = base.filter(F.col("doc_id") % 2 == 1)
     store = even.select(F.col("fp_plain").alias("fp")).distinct()
@@ -586,12 +590,15 @@ def _q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exercised, not assumed) land in a compact checkpointed frame
     # (~80 B/row); the store and all three increment branches derive
     # from it without re-reading text.
-    base = docs.select(
-        "doc_id",
-        "lang",
-        fp(F.col("text")).alias("fp_plain"),
-        fp(F.concat(F.col("text"), F.lit("  "))).alias("fp_spaced"),
-    ).localCheckpoint(eager=True)
+    base = checkpoint(
+        docs.select(
+            "doc_id",
+            "lang",
+            fp(F.col("text")).alias("fp_plain"),
+            fp(F.concat(F.col("text"), F.lit("  "))).alias("fp_spaced"),
+        ),
+        "query.dedup_incremental.base",
+    )
     even = base.filter(F.col("doc_id") % 2 == 0)
     odd = base.filter(F.col("doc_id") % 2 == 1)
     store = even.select(F.col("fp_plain").alias("fp")).distinct()
@@ -1342,7 +1349,9 @@ def _q_stream_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             shingle_mode="word",
             shuffle_partitions=4,
         )
-        out = pairs.orderBy("id_a", "id_b").localCheckpoint(eager=True)
+        out = checkpoint(
+            pairs.orderBy("id_a", "id_b"), "query.stream_minhash_pairs.pairs"
+        )
     finally:
         shutil.rmtree(state_dir, ignore_errors=True)
     return out
@@ -4351,14 +4360,14 @@ def _q_x5_idempotent_rerun(spark: SparkSession, sf_dir: str) -> DataFrame:
     key_dir = tempfile.mkdtemp(prefix="x5_idem_")
     try:
         uid_anonymization("c_custkey", cust, key_dir)  # run 1 (fresh)
-        key1 = (
-            spark.read.parquet(key_table_path(key_dir, "c_custkey"))
-            .localCheckpoint(eager=True)
+        key1 = checkpoint(
+            spark.read.parquet(key_table_path(key_dir, "c_custkey")),
+            "query.x5_idempotent_rerun.key1",
         )
         uid_anonymization("c_custkey", cust, key_dir)  # run 2 (reuse)
-        key2 = (
-            spark.read.parquet(key_table_path(key_dir, "c_custkey"))
-            .localCheckpoint(eager=True)
+        key2 = checkpoint(
+            spark.read.parquet(key_table_path(key_dir, "c_custkey")),
+            "query.x5_idempotent_rerun.key2",
         )
     finally:
         shutil.rmtree(key_dir, ignore_errors=True)
@@ -4482,7 +4491,7 @@ def _q_anonymization_fates(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # the uid path's key-table write is the only materialized
         # state; force it before the key_dir is removed
-        out = out.localCheckpoint(eager=True)
+        out = checkpoint(out, "query.anonymization_fates.out")
     finally:
         shutil.rmtree(key_dir, ignore_errors=True)
     return out.select(
@@ -9492,9 +9501,10 @@ def _cooc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.date_trunc("minute", "ts").alias("m"),
     )
-    return cooccurrence_edges(
-        ev, "user_id", ["event_type", "m"], max_bucket_size=256
-    ).localCheckpoint(eager=True)
+    return checkpoint(
+        cooccurrence_edges(ev, "user_id", ["event_type", "m"], max_bucket_size=256),
+        "query.cooc_edges.edges",
+    )
 
 
 def _q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -60,8 +60,6 @@ import re
 import sys
 import time
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def _sf_from_dir(d: str) -> float:
     m = re.search(r"sf([0-9.]+)", d)
@@ -583,12 +581,21 @@ def main() -> None:
         print(json.dumps(report, indent=1))
         return
 
-    if "--scale-stress" in sys.argv:
-        from mape_calculation_and_anonymization_spark.session import get_spark
+    from mape_calculation_and_anonymization_spark.session import (
+        get_spark,
+        resolve_bench_runs,
+        resolve_cpus,
+        resolve_sf_dir,
+        resolve_warmup_sf_dir,
+    )
 
+    import __spark_entry__ as entrymod
+
+    sf_dir = resolve_sf_dir(os.path.join(os.path.dirname(entrymod.SF0001), "sf0.1"))
+    if "--scale-stress" in sys.argv:
         spark = get_spark(app_name="scale-stress")
-        sf = _sf_from_dir(SF_DIR)
-        results = run_scale_stress(spark, SF_DIR)
+        sf = _sf_from_dir(sf_dir)
+        results = run_scale_stress(spark, sf_dir)
         violations = check_stress_envelope(results)
         payload = {
             "metric": "scale_stress",
@@ -609,13 +616,8 @@ def main() -> None:
             sys.exit(3)
         return
 
-    from mape_calculation_and_anonymization_spark.session import (
-        get_spark,
-        resolve_cpus,
-    )
-
-    import __spark_entry__ as entrymod
-
+    n_runs = resolve_bench_runs()
+    warm_sf = resolve_warmup_sf_dir(entrymod.SF0001)
     spark = get_spark(app_name="bench")
 
     from pyspark.sql import functions as F
@@ -623,7 +625,7 @@ def main() -> None:
     # warm the JVM (codegen, parquet reader, shuffle machinery) so the
     # first query's timing isn't session bootstrap
     spark.range(1_000_000).groupBy(F.col("id") % 7).count().collect()
-    spark.read.parquet(f"{SF_DIR}/region.parquet").count()
+    spark.read.parquet(f"{sf_dir}/region.parquet").count()
     # first-touch the fact/corpus tables through the engine reader:
     # footer parsing, schema adaptation (nanos ts probe), and file
     # listing otherwise land entirely on whichever query the registry
@@ -631,7 +633,7 @@ def main() -> None:
     from mape_calculation_and_anonymization_spark.fixtures import load_table
 
     for t in ("events", "documents", "lineitem", "orders", "embeddings"):
-        load_table(spark, SF_DIR, t).count()
+        load_table(spark, sf_dir, t).count()
     # ... and the noop sink + broadcast-join machinery (ServiceLoader
     # scan and broadcast thread pool init are one-time session costs)
     warm = spark.range(10_000).withColumn("k", F.col("id") % 100)
@@ -659,10 +661,7 @@ def main() -> None:
     # leak into the timed numbers: only compiled code and warmed pools
     # carry over — exactly the steady state a long-lived cluster
     # session has. Set SPARK_GRAFT_WARMUP_SF_DIR="" to disable.
-    warm_sf = os.environ.get(
-        "SPARK_GRAFT_WARMUP_SF_DIR", "/root/testdata/sf0.001"
-    )
-    if warm_sf and warm_sf != SF_DIR:
+    if warm_sf and warm_sf != sf_dir:
         for name, fn in entrymod.queries().items():
             try:
                 fn(spark, warm_sf).write.format("noop").mode(
@@ -723,7 +722,7 @@ def main() -> None:
         if fn is None:
             continue
         try:
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         except Exception:
             pass
         spark.catalog.clearCache()
@@ -745,23 +744,16 @@ def main() -> None:
     # runs per-query against the run's own median ratio, never
     # headline-to-headline: a genuine regression is ONE query whose
     # ratio departs from its siblings', not a uniform scale shift.
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    if n_runs < 1:
-        raise ValueError(
-            f"SPARK_GRAFT_BENCH_RUNS={n_runs}: at least one timed pass is "
-            "required — a zero-run bench would emit a plausible-looking "
-            "0-second artifact"
-        )
     samples: dict[str, list[float]] = {}
     for _ in range(n_runs):
         if hasattr(entrymod, "bench_reset"):
-            entrymod.bench_reset(SF_DIR)
+            entrymod.bench_reset(sf_dir)
         for name, fn in entrymod.queries().items():
             # fn() is inside the timed region: streaming queries execute
             # during construction (AvailableNow into a memory sink), and
             # several operators do dimension-sized metadata jobs there.
             t0 = time.perf_counter()
-            df = fn(spark, SF_DIR)
+            df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             samples.setdefault(name, []).append(time.perf_counter() - t0)
             # operators that persist intermediates (minhash shingles) must
@@ -787,7 +779,7 @@ def main() -> None:
         for name, vals in samples.items()
     }
     total = round(sum(timings.values()), 2)
-    sf = _sf_from_dir(SF_DIR)
+    sf = _sf_from_dir(sf_dir)
     print(
         json.dumps(
             {

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .rebalance import checkpoint
+
 
 def word_frequencies(
     docs: DataFrame, text_col: str = "text", limit: int | None = None
@@ -144,10 +146,13 @@ def bpe_merges(
     merge list a tokenizer replays at encode time. Stops early if no
     adjacent pair remains (tiny vocabularies)."""
     spark = words.sparkSession
-    tbl = words.select(
-        F.col(freq_col).alias("freq"),
-        F.split(F.col(word_col), "").alias("syms"),
-    ).localCheckpoint(eager=True)
+    tbl = checkpoint(
+        words.select(
+            F.col(freq_col).alias("freq"),
+            F.split(F.col(word_col), "").alias("syms"),
+        ),
+        "bpe.bpe_merges.words",
+    )
 
     out = []
     for rank in range(n_merges):
@@ -172,10 +177,12 @@ def bpe_merges(
             break
         left, right, cnt = top["l"], top["r"], top["pair_count"]
         out.append((rank, left, right, left + right, cnt))
-        nxt = tbl.select(
-            "freq", _apply_merge(F.col("syms"), left, right).alias("syms")
-        ).localCheckpoint(eager=True)  # truncate per-iteration lineage
-        tbl = nxt
+        tbl = checkpoint(  # truncate per-iteration lineage
+            tbl.select(
+                "freq", _apply_merge(F.col("syms"), left, right).alias("syms")
+            ),
+            "bpe.bpe_merges.merged",
+        )
 
     return spark.createDataFrame(
         out, "rank int, left string, right string, merged string, pair_count bigint"

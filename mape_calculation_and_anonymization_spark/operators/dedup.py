@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .rebalance import ensure_min_partitions
+from .rebalance import checkpoint, ensure_min_partitions, persisted
 
 # ---------------------------------------------------------------------------
 # shingling (all JVM-side)
@@ -586,13 +586,31 @@ def signature_agreement(sig_a: Column, sig_b: Column) -> Column:
     )
 
 
+def _sorted_pairs(arr: str, a: str = "a", b: str = "b") -> Column:
+    """Every pair of a sorted array column, as ``struct(a, b)`` with
+    ``a`` before ``b``: element i pairs with each later element, so a
+    duplicate-free sorted array yields its C(s, 2) pairs ``a < b``
+    inside the row (the shape a bucket-keyed self-join with an
+    ``a < b`` predicate emits, without the join)."""
+    return F.flatten(
+        F.transform(
+            F.col(arr),
+            lambda x, i: F.transform(
+                F.slice(F.col(arr), i + F.lit(2), F.size(arr)),
+                lambda y: F.struct(x.alias(a), y.alias(b)),
+            ),
+        )
+    )
+
+
 def lsh_candidate_pairs(
     sigs: DataFrame,
     id_col: str,
     sig_col: str = "sig",
     bands: int = 16,
     max_bucket_size: int = 1000,
-    sig_len: int | None = None,
+    *,
+    sig_len: int,
 ) -> DataFrame:
     """Banded LSH: split each signature into ``bands`` equal slices,
     hash each slice, self-join on (band index, slice hash).
@@ -602,17 +620,8 @@ def lsh_candidate_pairs(
     than ``max_bucket_size`` are dropped before pair expansion (they
     are near-identical floods; route those through exact dedup).
 
-    Pass ``sig_len`` (the signature length, i.e. ``num_hashes``) when
-    known: probing it from the data costs an extra aggregation job
-    over the whole signature plan just to read one row's array size."""
-    if sig_len is None:
-        sig_len_row = sigs.select(F.size(sig_col).alias("n")).first()
-        if sig_len_row is None:
-            return sigs.sparkSession.createDataFrame(
-                [], T.StructType([T.StructField("id_a", T.LongType()),
-                                  T.StructField("id_b", T.LongType())])
-            )
-        sig_len = sig_len_row["n"]
+    ``sig_len`` is the signature length (``num_hashes``); the caller
+    knows it, and probing it from the data would cost a job."""
     rows_per_band = max(1, sig_len // bands)
 
     band_hash = F.posexplode(
@@ -641,18 +650,9 @@ def lsh_candidate_pairs(
     )
     if max_bucket_size:
         grouped = grouped.filter(F.size("_ids") <= max_bucket_size)
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("_ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("_ids"), i + F.lit(2), F.size("_ids")),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
     return (
         grouped.filter(F.size("_ids") >= 2)
-        .select(F.explode(pair_structs).alias("_p"))
+        .select(F.explode(_sorted_pairs("_ids")).alias("_p"))
         .select(F.col("_p.a").alias("id_a"), F.col("_p.b").alias("id_b"))
         .distinct()
     )
@@ -778,18 +778,9 @@ def md5_lsh_candidate_pairs(
     )
     if max_bucket_size:
         grouped = grouped.filter(F.size("_ids") <= max_bucket_size)
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("_ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("_ids"), i + F.lit(2), F.size("_ids")),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
     return (
         grouped.filter(F.size("_ids") >= 2)
-        .select(*group_cols, F.explode(pair_structs).alias("_p"))
+        .select(*group_cols, F.explode(_sorted_pairs("_ids")).alias("_p"))
         .select(
             *group_cols,
             F.col("_p.a").alias("id_a"),
@@ -853,9 +844,12 @@ def minhash_near_duplicates(
     """
     shingler = char_shingles if shingle_mode == "char" else word_ngrams
     if precomputed_sigs is not None:
-        cands = lsh_candidate_pairs(
-            precomputed_sigs, "_id", "sig", bands, sig_len=num_hashes
-        ).localCheckpoint(eager=True)  # answer-sized; feeds 2 consumers
+        cands = checkpoint(  # answer-sized; feeds 2 consumers
+            lsh_candidate_pairs(
+                precomputed_sigs, "_id", "sig", bands, sig_len=num_hashes
+            ),
+            "dedup.minhash_near_duplicates.cands",
+        )
         cand_ids = (
             cands.select(F.col("id_a").alias(id_col))
             .unionByName(cands.select(F.col("id_b").alias(id_col)))
@@ -869,10 +863,11 @@ def minhash_near_duplicates(
             shingle_src = docs.select(
                 F.col(id_col), shingler(text_col, shingle_k).alias("sh")
             )
-        cand_sh = (
-            shingle_src.join(cand_ids, id_col, "left_semi")
-            .select(F.col(id_col).alias("_id"), "sh")
-            .localCheckpoint(eager=True)  # shingled once, joined twice
+        cand_sh = checkpoint(  # shingled once, joined twice
+            shingle_src.join(cand_ids, id_col, "left_semi").select(
+                F.col(id_col).alias("_id"), "sh"
+            ),
+            "dedup.minhash_near_duplicates.cand_sh",
         )
         a = cand_sh.select(F.col("_id").alias("id_a"), F.col("sh").alias("sh_a"))
         b = cand_sh.select(F.col("_id").alias("id_b"), F.col("sh").alias("sh_b"))
@@ -891,15 +886,16 @@ def minhash_near_duplicates(
     # higher-order-function) shingling runs three times. MEMORY_AND_DISK
     # so an outsized corpus spills instead of OOMing. The cache's
     # lifetime is bounded to THIS call: the verified pair set (small —
-    # candidates only) is materialized via an eager localCheckpoint and
-    # the shingles are unpersisted before returning, so repeated corpus
-    # runs in one session don't accumulate cached shingle frames.
+    # candidates only) is checkpointed inside the block and the
+    # shingles are unpersisted on leaving it, so repeated corpus runs
+    # in one session don't accumulate cached shingle frames.
     # shingling is an interpreted HOF over every text — rebalance a
     # coarse scan before it so the hot loop runs on all cores
-    sh = ensure_min_partitions(docs).select(
-        F.col(id_col).alias("_id"), shingler(text_col, shingle_k).alias("sh")
-    ).persist()
-    try:
+    with persisted(
+        ensure_min_partitions(docs).select(
+            F.col(id_col).alias("_id"), shingler(text_col, shingle_k).alias("sh")
+        )
+    ) as sh:
         sigs = minhash_signatures(sh, "_id", F.col("sh"), num_hashes, seed)
         cands = lsh_candidate_pairs(sigs, "_id", "sig", bands, sig_len=num_hashes)
         a = sh.select(F.col("_id").alias("id_a"), F.col("sh").alias("sh_a"))
@@ -914,9 +910,7 @@ def minhash_near_duplicates(
             )
             .filter(F.col("jaccard_sim") >= threshold)
         )
-        return verified.localCheckpoint(eager=True)
-    finally:
-        sh.unpersist(blocking=False)
+        return checkpoint(verified, "dedup.minhash_near_duplicates.verified")
 
 
 # ---------------------------------------------------------------------------
@@ -1084,13 +1078,12 @@ def simhash_near_duplicates(
         # tiny): both sides of the bucket self-join consume it, and
         # without the barrier each side would re-run the pandas-UDF
         # projection
-        sigs = (
-            ensure_min_partitions(docs)
-            .select(
+        sigs = checkpoint(
+            ensure_min_partitions(docs).select(
                 F.col(id_col).alias("_id"),
                 sig_udf(F.col(text_col)).alias("sim"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "dedup.simhash_near_duplicates.sigs",
         )
     def _chunk(j: int):
         c = F.shiftrightunsigned(F.col("sim"), offsets[j])
@@ -1263,15 +1256,12 @@ def minhash_incremental_pairs(
     # 9.9 s → 17.7 s per streaming drain when left lazy — round 17
     # tried and reverted the "lazy lets the semi-join push below the
     # shingle projection" variant).
-    new_sh = (
-        ensure_min_partitions(new_docs)
-        .select(
+    with persisted(
+        ensure_min_partitions(new_docs).select(
             F.col(id_col).alias("_id"),
             shingler(text_col, shingle_k).alias("sh"),
         )
-        .persist()
-    )
-    try:
+    ) as new_sh:
         # ``precomputed_new_sigs`` ((_id, sig) — minhash_signatures
         # over the SAME drop/params, round 17): a caller that also
         # lands the drop's signatures into a standing index (the
@@ -1342,14 +1332,14 @@ def minhash_incremental_pairs(
                 ),
             )
         )
-        cands = (
+        cands = checkpoint(  # answer-sized; feeds 2 joins
             grouped.select(F.explode(pair_structs).alias("_p"))
             .select("_p.id_a", "_p.id_b", "_p._other_new")
             .groupBy("id_a", "id_b")
             # a (new, new) pair surfaces from both directions — one
             # with _other_new true; MAX-fold makes the type stable
-            .agg(F.max("_other_new").alias("_both_new"))
-            .localCheckpoint(eager=True)  # answer-sized; feeds 2 joins
+            .agg(F.max("_other_new").alias("_both_new")),
+            "dedup.minhash_incremental_pairs.cands",
         )
         cand_ids = (
             cands.select(F.col("id_a").alias(id_col))
@@ -1366,9 +1356,10 @@ def minhash_incremental_pairs(
         new_cand_sh = new_sh.join(
             cand_ids.withColumnRenamed(id_col, "_id"), "_id", "left_semi"
         )
-        all_sh = new_cand_sh.unionByName(standing_cand_sh).localCheckpoint(
-            eager=True
-        )  # candidates only — answer-sized, not drop-sized
+        all_sh = checkpoint(  # candidates only — answer-sized, not drop-sized
+            new_cand_sh.unionByName(standing_cand_sh),
+            "dedup.minhash_incremental_pairs.all_sh",
+        )
         av = all_sh.select(F.col("_id").alias("id_a"), F.col("sh").alias("sh_a"))
         bv = all_sh.select(F.col("_id").alias("id_b"), F.col("sh").alias("sh_b"))
         verified = (
@@ -1387,10 +1378,8 @@ def minhash_incremental_pairs(
         # returned LAZY (round 18): after the cands and all_sh
         # barriers, the verify join's lineage depends only on those
         # two checkpointed frames — never on new_sh — so the
-        # unpersist below cannot force a shingle re-derivation and
-        # the former verified.localCheckpoint(eager=True) only added
-        # a materialization job plus a serialization round-trip
+        # unpersist on leaving the block cannot force a shingle
+        # re-derivation, and a checkpoint of ``verified`` would only
+        # add a materialization job plus a serialization round-trip
         # between the verify join and its single consumer.
         return verified
-    finally:
-        new_sh.unpersist()

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .rebalance import checkpoint
+
 
 def rrf_fuse(
     ranked_a: DataFrame,
@@ -101,7 +103,7 @@ def jaccard_top_k(
             F.explode(word_ngrams(text_col, n)).alias("sh"),
         )
 
-    q_sh = shingled(queries, "query_id").localCheckpoint(eager=True)
+    q_sh = checkpoint(shingled(queries, "query_id"), "fusion.jaccard_top_k.q_sh")
     c_sh = shingled(corpus, "doc_id")
     q_sizes = q_sh.groupBy("query_id").agg(F.count(F.lit(1)).alias("_qn"))
     c_sizes = c_sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("_cn"))

@@ -26,6 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import _sorted_pairs
+from .rebalance import checkpoint, persisted
+
 
 def connected_components(
     edges: DataFrame,
@@ -48,17 +51,17 @@ def connected_components(
     # Materialize the symmetrized edge list ONCE: every iteration joins
     # against it, and without this the upstream edge-derivation plan
     # (often an expensive LSH pipeline) would re-execute per round.
-    sym = (
+    sym = checkpoint(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .localCheckpoint(eager=True)
+        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))),
+        "graph.connected_components.sym",
     )
 
-    labels = (
+    labels = checkpoint(
         sym.select(F.col("u").alias("id"))
         .distinct()
-        .withColumn("component", F.col("id"))
-        .localCheckpoint(eager=True)
+        .withColumn("component", F.col("id")),
+        "graph.connected_components.labels",
     )
 
     n_changed = 0
@@ -69,16 +72,16 @@ def connected_components(
             .groupBy(F.col("v").alias("id"))
             .agg(F.min("component").alias("nbr_min"))
         )
-        updated = (
-            labels.join(neighbour_min, on="id", how="left")
-            .select(
+        updated = checkpoint(
+            labels.join(neighbour_min, on="id", how="left").select(
                 "id",
                 F.least(
                     F.col("component"), F.coalesce("nbr_min", F.col("component"))
                 ).alias("component"),
                 (F.col("nbr_min") < F.col("component")).alias("_changed"),
-            )
-        ).localCheckpoint(eager=True)
+            ),
+            "graph.connected_components.updated",
+        )
         n_changed = updated.filter(F.col("_changed")).count()
         labels = updated.drop("_changed")
         if n_changed == 0:
@@ -165,7 +168,7 @@ def cooccurrence_edges(
     # `is not None`, not truthiness: max_bucket_size=0 is a legitimate
     # (drop-everything) cap, not "disabled"
     if max_bucket_size is not None:
-        grouped = grouped.localCheckpoint(eager=True)
+        grouped = checkpoint(grouped, "graph.cooccurrence_edges.grouped")
         n_dropped = grouped.filter(F.col("_n") > max_bucket_size).count()
         if n_dropped:
             logging.getLogger(__name__).warning(
@@ -176,17 +179,8 @@ def cooccurrence_edges(
                 max_bucket_size,
             )
         grouped = grouped.filter(F.col("_n") <= max_bucket_size)
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("_ms"),
-            lambda x, i: F.transform(
-                F.slice(F.col("_ms"), i + F.lit(2), F.size("_ms")),
-                lambda y: F.struct(x.alias("u"), y.alias("v")),
-            ),
-        )
-    )
     return (
-        grouped.select(F.explode(pair_structs).alias("_p"))
+        grouped.select(F.explode(_sorted_pairs("_ms", "u", "v")).alias("_p"))
         .select("_p.u", "_p.v")
         .distinct()
     )
@@ -241,15 +235,15 @@ def pagerank(
         raise ValueError(
             f"checkpoint_every must be >= 1, got {checkpoint_every}"
         )
-    sym = (
+    sym = checkpoint(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "graph.pagerank.sym",
     )
-    deg = (
-        sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint(eager=True)
+    deg = checkpoint(
+        sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg")),
+        "graph.pagerank.deg",
     )
     n = deg.count()  # node-universe scalar (dimension-sized)
     if n == 0:
@@ -267,10 +261,11 @@ def pagerank(
     # partitioning is stable by default), so each iteration exchanges
     # only the node-sized rank table; the count() materializes the
     # cache eagerly, replacing the checkpoint's own job.
-    sym_w = sym.join(deg, "u").select(
-        "u", "v", (F.lit(1.0) / F.col("deg")).alias("w")
-    ).persist()
-    try:
+    # The final ranks checkpoint is materialized inside the block, so
+    # the cache has no consumer left on any exit path.
+    with persisted(
+        sym.join(deg, "u").select("u", "v", (F.lit(1.0) / F.col("deg")).alias("w"))
+    ) as sym_w:
         sym_w.count()
         ranks = deg.select("u", F.lit(1.0 / n).alias("rank"))
         for i in range(iterations):
@@ -282,10 +277,5 @@ def pagerank(
                 (F.lit(base) + F.lit(damping) * F.sum("c")).alias("rank")
             )
             if (i + 1) % checkpoint_every == 0 or i + 1 == iterations:
-                ranks = ranks.localCheckpoint(eager=True)
-    finally:
-        # the final ranks checkpoint is materialized — the cache has no
-        # remaining consumer on any exit path (don't leak it into the
-        # caller's session)
-        sym_w.unpersist()
+                ranks = checkpoint(ranks, "graph.pagerank.ranks")
     return ranks.select(F.col("u").alias("id"), "rank")

@@ -326,93 +326,3 @@ def ivf_recall_curve(
         .orderBy("nprobe")
     )
 
-
-def ivf_rebalance(
-    assigned: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, DataFrame]:
-    """One Lloyd refinement over the CURRENT inverted file — the
-    coarse-cadence maintenance job :func:`ivf_add`'s drift note
-    promises (round 16; library operator, registry-free): after
-    weeks of drop-sized appends the centroids no longer sit at their
-    cells' mass centers, routing recall decays, and the standard
-    repair short of a full KMeans re-fit is a single assign-step
-    refresh — (1) recompute every cell's centroid as the elementwise
-    MEAN of its current members, (2) re-assign every vector to its
-    nearest refreshed centroid (the same squared-Euclidean argmin
-    rule ``ivf_add`` and MLlib prediction use, lowest cluster id on
-    ties). Lloyd's monotonicity gives the checkable contract: total
-    within-cell squared distance never increases (pinned in
-    tests/test_similarity.py). The refreshed centroid table keeps
-    the FULL cell set: cells with members get the member mean,
-    memberless cells keep their previous centroid — so routing
-    tables that reference every cell id stay valid, and a cell
-    emptied by the re-assignment remains a routing target that
-    regains members on future :func:`ivf_add` drops.
-
-    Scale shape: the centroid refresh is one posexplode (rows × dim,
-    a stateless flat map) into a map-side-combinable
-    (cluster, dim)-mean aggregate and a per-cluster ordered re-pack
-    (array_sort over dim-count structs — k × dim total); the
-    re-assignment is a broadcast of the k × dim refreshed table and
-    ONE hash aggregate per vector (min_by over the distance struct —
-    no window, no sort), so the whole job is two shuffles of
-    corpus-proportional data. This is the WEEKLY full-pass job, not
-    the per-drop path — ``ivf_add`` stays drop-proportional.
-
-    Returns (assigned, centroids) with the same schemas the builder
-    emits."""
-    vecs = assigned.select(
-        id_col,
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(
-            "_v"
-        ),
-        F.col(vec_col),
-        "cluster",
-    )
-    # (1) refreshed centroids: per-cell elementwise mean
-    dims = (
-        vecs.select(
-            "cluster", F.posexplode(F.col("_v")).alias("_p", "_x")
-        )
-        .groupBy("cluster", "_p")
-        .agg(F.avg("_x").alias("_m"))
-    )
-    refreshed = dims.groupBy("cluster").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("_p", "_m"))),
-            lambda s: s["_m"],
-        ).alias("centroid")
-    )
-    # cells with no members keep their OLD centroid (stable cell set)
-    cents = refreshed.unionByName(
-        centroids.join(refreshed.select("cluster"), "cluster", "left_anti")
-    )
-    # (2) re-assign by broadcast argmin — ivf_add's distance rule,
-    # folded through ONE hash aggregate (min_by) instead of a window
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("_v"),
-            F.col("centroid"),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    scored = vecs.drop("cluster").join(F.broadcast(cents)).withColumn(
-        "_d2", d2
-    )
-    best = scored.groupBy(id_col).agg(
-        F.min_by(
-            F.struct(F.col(vec_col), F.col("cluster")),
-            F.struct(F.col("_d2"), F.col("cluster")),
-        ).alias("_best")
-    )
-    assigned2 = best.select(
-        id_col,
-        F.col("_best")[vec_col].alias(vec_col),
-        F.col("_best")["cluster"].alias("cluster"),
-    )
-    return assigned2, cents

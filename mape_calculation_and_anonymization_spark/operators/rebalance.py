@@ -1,4 +1,13 @@
-"""Compute-stage rebalancing for coarse-grained inputs.
+"""Materialization barriers and compute-stage rebalancing.
+
+Every eager barrier in the engine goes through this module:
+:func:`checkpoint` (an eager ``localCheckpoint`` under a Spark job
+description naming the barrier) and :func:`persisted` (a cache scoped
+to a ``with`` block). A checkpoint is never released early: the frames
+an operator returns keep their checkpointed lineage alive, so only the
+persisted frames have a lifetime, and it ends on every exit path.
+
+Rebalancing coarse-grained inputs (:func:`ensure_min_partitions`):
 
 Parquet scans parallelize at row-group granularity: a task only
 produces rows for row groups whose midpoint falls inside its byte
@@ -20,22 +29,53 @@ input immediately before the hot projection. The inserted round-robin
 shuffle moves the input ONCE; it pays for itself whenever
 (per-row compute × rows/partition) >> (partition bytes × shuffle
 constant), which holds for every caller here, and it is a complete
-no-op whenever the scan already yields ``min_partitions`` splits —
+no-op whenever the scan already yields a split per core —
 at 100 TB (~10^6 row groups at the parquet default 128 MB) the guard
 short-circuits and no shuffle is added.
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from typing import Iterator
+
 from pyspark.sql import DataFrame
 
+_DESCRIPTION = "spark.job.description"
 
-def ensure_min_partitions(
-    df: DataFrame, min_partitions: int | None = None
-) -> DataFrame:
-    """Round-robin repartition ``df`` iff it currently has fewer than
-    ``min_partitions`` partitions (default: the session's
-    ``defaultParallelism``, i.e. the core count in local mode).
+
+def checkpoint(df: DataFrame, label: str) -> DataFrame:
+    """Eager ``localCheckpoint`` of ``df`` whose jobs carry the Spark
+    job description ``label`` (``"<module>.<operator>.<frame>"``).
+
+    The caller's description is restored afterwards, also when the
+    checkpoint raises."""
+    sc = df.sparkSession.sparkContext
+    outer = sc.getLocalProperty(_DESCRIPTION)
+    sc.setLocalProperty(_DESCRIPTION, label)
+    try:
+        return df.localCheckpoint(eager=True)
+    finally:
+        sc.setLocalProperty(_DESCRIPTION, outer)
+
+
+@contextmanager
+def persisted(df: DataFrame) -> Iterator[DataFrame]:
+    """Persist ``df`` for the ``with`` block and unpersist it on the way
+    out, whether the block returns or raises. The cache fills on the
+    first action inside the block. A frame derived from it that
+    outlives the block recomputes it on use, unless a checkpoint inside
+    the block cut the frame loose."""
+    try:
+        yield df.persist()
+    finally:
+        df.unpersist()
+
+
+def ensure_min_partitions(df: DataFrame) -> DataFrame:
+    """Round-robin repartition ``df`` iff it currently has fewer
+    partitions than the session's ``defaultParallelism`` (the core
+    count in local mode).
 
     Call this ONLY in front of transforms whose per-row compute
     dominates scan cost (see module docstring); for ordinary
@@ -51,9 +91,7 @@ def ensure_min_partitions(
     -pruned, pre-transform) input once on first action and is reused
     by every consumer of the returned frame.
     """
-    spark = df.sparkSession
-    if min_partitions is None:
-        min_partitions = spark.sparkContext.defaultParallelism
+    min_partitions = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= min_partitions:
         return df
     return df.repartition(min_partitions).localCheckpoint(eager=False)

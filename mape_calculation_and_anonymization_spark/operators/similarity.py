@@ -2,16 +2,18 @@
 
 North-star extension: approximate-nearest-neighbor machinery for a
 training-data pipeline — brute-force cosine top-k as the exact
-baseline, random-hyperplane LSH bucketing as the scale path.
+baseline, random-hyperplane LSH buckets as the scale path of
+embedding near-duplicate detection.
 
 All vector math is built-in (``zip_with`` product + ``aggregate``
 sum, cast to double element-wise) so it runs inside codegen; no UDFs.
 
 Scale notes: brute-force is a broadcast of the (small) query set
 against the full corpus — linear scan, no shuffle of the corpus. The
-LSH path buckets the corpus once (linear) and only scores within
-buckets. Top-k uses a window over the query id — partition count =
-#queries; for huge query sets swap in a groupBy+min_by-k instead.
+LSH near-duplicate path buckets the corpus once (linear) and only
+scores within buckets. Top-k uses a window over the query id —
+partition count = #queries; for huge query sets swap in a
+groupBy+min_by-k instead.
 """
 
 from __future__ import annotations
@@ -22,6 +24,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .rebalance import checkpoint, ensure_min_partitions
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -98,22 +102,6 @@ def _hyperplanes(dim: int, n_bits: int, seed: int) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_bits)]
 
 
-def hyperplane_bucket(
-    vec: Column, planes: list[list[float]]
-) -> Column:
-    """Sign-bit bucket id: bit i = [dot(v, plane_i) > 0]. One long.
-
-    Column-expression form (interpreted HOF lambdas) — fine for a few
-    planes; the corpus-scale path is :func:`hyperplane_buckets_udf`.
-    """
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(float(x)) for x in plane])
-        bit = (dot(vec, lit_plane) > 0).cast("long")
-        bucket = bucket + F.shiftleft(bit, i)
-    return bucket
-
-
 def hyperplane_buckets_udf(n_tables: int, n_bits: int, dim: int, seed: int):
     """All LSH tables' buckets in one Arrow-batched matmul.
 
@@ -147,69 +135,11 @@ def hyperplane_buckets_udf(n_tables: int, n_bits: int, dim: int, seed: int):
 def _bucketed(df: DataFrame, vec_col: str, n_tables: int, n_bits: int, dim: int, seed: int) -> DataFrame:
     """Attach (table idx, bucket id) rows: one posexplode over the
     per-vector bucket array → single join key for all tables."""
-    from .rebalance import ensure_min_partitions
-
     b = hyperplane_buckets_udf(n_tables, n_bits, dim, seed)
     # the Arrow-batched matmul is the hot loop — spread a coarse scan
     # across cores before shipping batches to the Python workers
     return ensure_min_partitions(df).select(
         "*", F.posexplode(b(F.col(vec_col))).alias("_table", "_bucket")
-    )
-
-
-def lsh_top_k(
-    corpus: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_bits: int = 8,
-    n_tables: int = 4,
-    seed: int = 42,
-    round_scale: int | None = 6,
-) -> DataFrame:
-    """ANN top-k: ``n_tables`` independent sign-LSH bucketings; score
-    exact cosine only within matching buckets, union candidates, rank.
-
-    Recall is probabilistic (near vectors agree on sign bits with
-    probability 1−θ/π per bit); more tables → higher recall. Output
-    schema matches :func:`brute_force_top_k` — rank may include fewer
-    than k rows per query when buckets are sparse.
-    """
-    # per-vector norms ride the bucket table (round 18): computed once
-    # per vector before the posexplode, so the per-candidate cosine
-    # degrades to a single dot — same float expression as cosine()
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        norm(F.col(vec_col)).alias("_qn"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        norm(F.col(vec_col)).alias("_cn"),
-    )
-
-    qb = _bucketed(q, "_qv", n_tables, n_bits, dim, seed)
-    cb = _bucketed(c, "_cv", n_tables, n_bits, dim, seed)
-    cand = (
-        qb.join(cb, on=["_table", "_bucket"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "_qv", "_qn", "neighbor_id", "_cv", "_cn")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    sim = F.try_divide(
-        dot(F.col("_qv"), F.col("_cv")), F.col("_qn") * F.col("_cn")
-    )
-    if round_scale is not None:
-        sim = F.round(sim, round_scale)
-    scored = cand.select("query_id", "neighbor_id", sim.alias("cosine_sim"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
     )
 
 
@@ -240,8 +170,9 @@ def embedding_near_duplicates(
     # materialize the bucket table: both sides of the self-join consume
     # it, and without the barrier each side re-runs the Arrow-batched
     # hyperplane matmul (n_tables rows per vector — linear in corpus)
-    b = _bucketed(base, "_v", n_tables, n_bits, dim, seed).localCheckpoint(
-        eager=True
+    b = checkpoint(
+        _bucketed(base, "_v", n_tables, n_bits, dim, seed),
+        "similarity.embedding_near_duplicates.buckets",
     )
     l, r = b.alias("l"), b.alias("r")
     cand = (
@@ -399,10 +330,10 @@ def semantic_dedup(
     the repo-wide caveat), measured 2.7× slower at sf0.1 over the
     ~250k in-cell pairs. Rows-only by design: the centroid table
     comes from iterative k-means, not SQL."""
-    from .rebalance import ensure_min_partitions
-
     route = assign_to_centroids_udf(centroids)
-    scored = (
+    # both sides of the cell-keyed self-join consume this frame; the
+    # barrier stops the routing UDF re-running per side
+    scored = checkpoint(
         ensure_min_partitions(
             # NULL vectors carry no semantic content to dedup against —
             # drop them BEFORE the routing UDF (np.asarray(None) would
@@ -420,10 +351,8 @@ def semantic_dedup(
             # unit vector from the same matmul batch: pair cosine
             # below degrades to a single dot
             F.col("_r.unit").alias("_u"),
-        )
-        # both sides of the cell-keyed self-join consume this frame;
-        # the barrier stops the routing UDF re-running per side
-        .localCheckpoint(eager=True)
+        ),
+        "similarity.semantic_dedup.scored",
     )
     l = scored.select(
         F.col("cluster").alias("_cl_a"),
@@ -500,11 +429,9 @@ def semantic_dedup_gated(
     routing, the quadratic compare confined to cells, pair cosine =
     unit-dot; the gate boolean rides the routing frame, adding
     nothing to the shuffle."""
-    from .rebalance import ensure_min_partitions
-
     route = assign_to_centroids_udf(centroids)
     gate = F.coalesce(F.col(passed_col), F.lit(False))  # NULL gate = FAIL
-    scored = (
+    scored = checkpoint(
         ensure_min_partitions(
             corpus.filter(F.col(vec_col).isNotNull()).select(
                 F.col(id_col).alias("_id"),
@@ -519,8 +446,8 @@ def semantic_dedup_gated(
             F.col("_r.cluster").alias("cluster"),
             F.col("_r.centroid_sim").alias("centroid_sim"),
             F.col("_r.unit").alias("_u"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "similarity.semantic_dedup_gated.scored",
     )
     # domination key: passing members first (0 < 1 on the negated
     # gate), then SemDeDup's (centroid_sim, id) diverse-tail order
@@ -610,8 +537,6 @@ def semantic_dedup_incremental(
 
     Output: one row per non-null NEW vector —
     ``(id_col, cluster, centroid_sim, kept)``."""
-    from .rebalance import ensure_min_partitions
-
     route = assign_to_centroids_udf(centroids)
 
     # ONE routing pass over standing-kept ∪ drop (round 17): the two
@@ -631,7 +556,7 @@ def semantic_dedup_incremental(
             F.lit(True).alias("_is_new"),
         )
     )
-    routed_all = (
+    routed_all = checkpoint(  # all join legs consume it
         ensure_min_partitions(both.filter(F.col("_v").isNotNull()))
         .select("_id", "_is_new", route(F.col("_v")).alias("_r"))
         .select(
@@ -640,8 +565,8 @@ def semantic_dedup_incremental(
             F.col("_r.cluster").alias("cluster"),
             F.col("_r.centroid_sim").alias("centroid_sim"),
             F.col("_r.unit").alias("_u"),
-        )
-        .localCheckpoint(eager=True)  # all join legs consume it
+        ),
+        "similarity.semantic_dedup_incremental.routed_all",
     )
     n = routed_all.filter(F.col("_is_new")).drop("_is_new")
     # ONE cluster-keyed domination join (round 17): standing

@@ -721,8 +721,11 @@ def source_overlap_matrix(
     the totals — the testdata and every registered caller satisfy
     this)."""
     from mape_calculation_and_anonymization_spark.operators.dedup import (
+        _sorted_pairs,
         word_ngrams,
     )
+
+    from .rebalance import checkpoint
 
     # one hash aggregate keyed by the shingle string: partial
     # collect_set collapses per-task duplicates map-side, and the
@@ -730,7 +733,7 @@ def source_overlap_matrix(
     # frame is just the per-shingle sorted source arrays, which every
     # consumer below (totals, cap filter, pair expansion) reads
     # without touching the corpus again
-    per_g = (
+    per_g = checkpoint(
         docs.filter(F.col(text_col).isNotNull())
         .select(
             F.col(source_col).alias("_src"),
@@ -738,8 +741,8 @@ def source_overlap_matrix(
         )
         .groupBy("_g")
         .agg(F.sort_array(F.collect_set("_src")).alias("_srcs"))
-        .select("_srcs")
-        .localCheckpoint(eager=True)
+        .select("_srcs"),
+        "text.source_overlap_matrix.per_g",
     )
     totals = (
         per_g.select(F.explode("_srcs").alias("_src"))
@@ -749,21 +752,12 @@ def source_overlap_matrix(
     # in-row unordered pair expansion over the sorted set: element i
     # pairs with every later element, so source_a < source_b exactly
     # like the old self-join's a._src < b._src condition
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("_srcs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("_srcs"), i + F.lit(2), F.size("_srcs")),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
     pairs = (
         per_g.filter(
             (F.size("_srcs") >= 2)
             & (F.size("_srcs") <= max_sources_per_shingle)
         )
-        .select(F.explode(pair_structs).alias("_p"))
+        .select(F.explode(_sorted_pairs("_srcs")).alias("_p"))
         .groupBy(
             F.col("_p.a").alias("source_a"),
             F.col("_p.b").alias("source_b"),

@@ -96,10 +96,7 @@ def resolve_shuffle_partitions(n: str | int | None = None) -> int:
     Anything but a positive integer raises ValueError naming the variable."""
     if n is None:
         n = os.environ.get("SPARK_GRAFT_SHUFFLE", "32")
-    text = str(n)
-    if text.isdigit() and int(text) > 0:
-        return int(text)
-    raise ValueError(f"SPARK_GRAFT_SHUFFLE must be a positive integer, got {n!r}")
+    return _positive_int("SPARK_GRAFT_SHUFFLE", n)
 
 
 def resolve_driver_memory(mem: str | None = None) -> str:
@@ -115,6 +112,49 @@ def resolve_driver_memory(mem: str | None = None) -> str:
     raise ValueError(
         f"SPARK_GRAFT_DRIVER_MEM must be digits with an optional k/m/g/t suffix, got {mem!r}"
     )
+
+
+def _positive_int(var: str, value: str | int) -> int:
+    text = str(value)
+    if text.isdigit() and int(text) > 0:
+        return int(text)
+    raise ValueError(f"{var} must be a positive integer, got {value!r}")
+
+
+def _existing_dir(var: str, path: str) -> str:
+    if path and os.path.isdir(path):
+        return path
+    raise ValueError(f"{var} must name an existing directory, got {path!r}")
+
+
+def resolve_sf_dir(default: str, sf_dir: str | None = None) -> str:
+    """Table directory from ``sf_dir``, else $SPARK_GRAFT_SF_DIR, else
+    ``default``. Anything but an existing directory raises ValueError
+    naming the variable."""
+    if sf_dir is None:
+        sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", default)
+    return _existing_dir("SPARK_GRAFT_SF_DIR", sf_dir)
+
+
+def resolve_warmup_sf_dir(default: str, sf_dir: str | None = None) -> str | None:
+    """Warm-up table directory from ``sf_dir``, else
+    $SPARK_GRAFT_WARMUP_SF_DIR, else ``default``. ``''`` turns the
+    warm-up off and returns None; anything else but an existing
+    directory raises ValueError naming the variable."""
+    if sf_dir is None:
+        sf_dir = os.environ.get("SPARK_GRAFT_WARMUP_SF_DIR", default)
+    if sf_dir == "":
+        return None
+    return _existing_dir("SPARK_GRAFT_WARMUP_SF_DIR", sf_dir)
+
+
+def resolve_bench_runs(n: str | int | None = None) -> int:
+    """Timed passes per bench sample from ``n``, else
+    $SPARK_GRAFT_BENCH_RUNS, else 3. Anything but a positive integer
+    raises ValueError naming the variable."""
+    if n is None:
+        n = os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")
+    return _positive_int("SPARK_GRAFT_BENCH_RUNS", n)
 
 
 def _java() -> str | None:

@@ -232,34 +232,16 @@ def write_excel_workbook(filepath: str, **sheets: DataFrame) -> str:
     pass post-aggregation results (daily MAPE tables are ≤ a few
     thousand rows); raw fact tables would OOM the driver by design.
 
-    Engine order: pandas' ``to_excel`` with openpyxl/xlsxwriter when
-    one is installed; otherwise the dependency-free stdlib OOXML
-    writer (:func:`_write_xlsx_stdlib`) — a real ``.xlsx`` either way,
-    matching the reference's actual sink format. Read back with
+    The workbook is written by the dependency-free stdlib OOXML writer
+    (:func:`_write_xlsx_stdlib`) — a real ``.xlsx``, matching the
+    reference's actual sink format. Read back with
     ``sources.readers.read_xlsx_sheet``.
     """
-    import pandas as pd  # driver-side only
-
     pdfs = {
         name[:31]: (df.toPandas() if isinstance(df, DataFrame) else df)
         for name, df in sheets.items()
     }
-    try:
-        import openpyxl  # noqa: F401
-        engine_ok = True
-    except ImportError:
-        try:
-            import xlsxwriter  # noqa: F401
-            engine_ok = True
-        except ImportError:
-            engine_ok = False
-
-    if engine_ok:
-        with pd.ExcelWriter(filepath, mode="w") as writer:
-            for sheet_name, pdf in pdfs.items():
-                pdf.to_excel(writer, sheet_name=sheet_name, index=False)
-    else:
-        _write_xlsx_stdlib(filepath, pdfs)
+    _write_xlsx_stdlib(filepath, pdfs)
     return filepath
 
 

@@ -57,7 +57,7 @@ from ..operators.dedup import (
     minhash_signatures,
     word_ngrams,
 )
-from ..operators.rebalance import ensure_min_partitions
+from ..operators.rebalance import ensure_min_partitions, persisted
 from .windows import _drain
 
 
@@ -126,66 +126,61 @@ def streaming_minhash_ingest(
         # riding the FIRST consumer's job instead of a dedicated
         # checkpoint job each — two fewer jobs per micro-batch, and at
         # local volumes the fixed per-job cost IS the drain's cost.
-        batch = (
-            batch_df.select(id_col, text_col)
-            .filter(F.col(text_col).isNotNull())
-            .persist()
-        )
-        if os.path.isdir(sigs_dir):
-            standing_docs = bspark.read.parquet(docs_dir)
-            standing_sigs = bspark.read.parquet(sigs_dir)
-        else:  # first batch: empty standing index
-            standing_docs = bspark.createDataFrame([], empty_docs_schema)
-            standing_sigs = bspark.createDataFrame([], empty_sigs_schema)
-        # sign the batch ONCE (round 17): the same signatures feed the
-        # banding pass (precomputed_new_sigs) and the index append —
-        # previously each batch paid the shingle-explode signature
-        # aggregation twice.
-        # ensure_min_partitions first (round 17): a micro-batch often
-        # arrives as ONE file — one scan partition — so the
-        # shingle-explode + xxhash hot loop of the signing aggregate
-        # otherwise runs on a single core (measured 1.6 s → 1.1 s per
-        # sf0.1 batch). Same per-doc-deterministic signatures either
-        # way; this is the operator's own input-rebalance discipline
-        # applied to the streaming sign path.
-        batch_sh = ensure_min_partitions(batch).select(
-            F.col(id_col).alias("_id"),
-            shingler(text_col, shingle_k).alias("sh"),
-        )
-        sigs = minhash_signatures(
-            batch_sh, "_id", F.col("sh"), num_hashes, seed
-        ).persist()
-        try:
-            pairs = minhash_incremental_pairs(
-                batch,
-                standing_docs,
-                standing_sigs,
-                id_col=id_col,
-                text_col=text_col,
-                shingle_k=shingle_k,
-                num_hashes=num_hashes,
-                bands=bands,
-                threshold=threshold,
-                seed=seed,
-                shingle_mode=shingle_mode,
-                max_bucket_size=max_bucket_size,
-                precomputed_new_sigs=sigs,
+        # Both caches end with the micro-batch, also when it raises: a
+        # long-lived production stream must not accumulate one cached
+        # frame pair per micro-batch.
+        with persisted(
+            batch_df.select(id_col, text_col).filter(F.col(text_col).isNotNull())
+        ) as batch:
+            if os.path.isdir(sigs_dir):
+                standing_docs = bspark.read.parquet(docs_dir)
+                standing_sigs = bspark.read.parquet(sigs_dir)
+            else:  # first batch: empty standing index
+                standing_docs = bspark.createDataFrame([], empty_docs_schema)
+                standing_sigs = bspark.createDataFrame([], empty_sigs_schema)
+            # sign the batch ONCE (round 17): the same signatures feed the
+            # banding pass (precomputed_new_sigs) and the index append —
+            # previously each batch paid the shingle-explode signature
+            # aggregation twice.
+            # ensure_min_partitions first (round 17): a micro-batch often
+            # arrives as ONE file — one scan partition — so the
+            # shingle-explode + xxhash hot loop of the signing aggregate
+            # otherwise runs on a single core (measured 1.6 s → 1.1 s per
+            # sf0.1 batch). Same per-doc-deterministic signatures either
+            # way; this is the operator's own input-rebalance discipline
+            # applied to the streaming sign path.
+            batch_sh = ensure_min_partitions(batch).select(
+                F.col(id_col).alias("_id"),
+                shingler(text_col, shingle_k).alias("sh"),
             )
-            # pair_type (new_new vs new_standing) is a batch-boundary
-            # artifact, not a corpus property — excluded so the output
-            # is invariant to how the stream chunks into micro-batches.
-            pairs.select("id_a", "id_b", "jaccard_sim").write.mode(
-                "append"
-            ).parquet(pairs_dir)
-            # fold the batch into the standing index AFTER the pair
-            # pass (this batch must not band against itself twice)
-            sigs.write.mode("append").parquet(sigs_dir)
-            batch.write.mode("append").parquet(docs_dir)
-        finally:
-            # a long-lived production stream must not accumulate one
-            # cached frame pair per micro-batch
-            sigs.unpersist()
-            batch.unpersist()
+            with persisted(
+                minhash_signatures(batch_sh, "_id", F.col("sh"), num_hashes, seed)
+            ) as sigs:
+                pairs = minhash_incremental_pairs(
+                    batch,
+                    standing_docs,
+                    standing_sigs,
+                    id_col=id_col,
+                    text_col=text_col,
+                    shingle_k=shingle_k,
+                    num_hashes=num_hashes,
+                    bands=bands,
+                    threshold=threshold,
+                    seed=seed,
+                    shingle_mode=shingle_mode,
+                    max_bucket_size=max_bucket_size,
+                    precomputed_new_sigs=sigs,
+                )
+                # pair_type (new_new vs new_standing) is a batch-boundary
+                # artifact, not a corpus property — excluded so the output
+                # is invariant to how the stream chunks into micro-batches.
+                pairs.select("id_a", "id_b", "jaccard_sim").write.mode(
+                    "append"
+                ).parquet(pairs_dir)
+                # fold the batch into the standing index AFTER the pair
+                # pass (this batch must not band against itself twice)
+                sigs.write.mode("append").parquet(sigs_dir)
+                batch.write.mode("append").parquet(docs_dir)
 
     writer = docs_stream.writeStream.foreachBatch(_ingest)
     _drain(writer, spark, "neardup", timeout_s, shuffle_partitions)

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import blake2b_10hex
 from ..operators.keys import load_key_table, save_key_table
+from ..operators.rebalance import checkpoint
 from .windows import _drain
 
 
@@ -92,7 +93,7 @@ def merge_partial_aggregate(
         old = spark.read.parquet(table_path)
         # Materialize before the swap: lazy plans must not read the
         # directory we are about to replace.
-        merged = (
+        merged = checkpoint(
             old.withColumnRenamed("n_events", "n_old")
             .withColumnRenamed("total_value", "v_old")
             .join(partial, on=key, how="full_outer")
@@ -106,8 +107,8 @@ def merge_partial_aggregate(
                     F.coalesce("v_old", F.lit(0.0))
                     + F.coalesce("total_value", F.lit(0.0))
                 ).alias("total_value"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "upsert.merge_partial_aggregate.merged",
         )
     else:
         merged = partial

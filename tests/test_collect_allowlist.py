@@ -70,11 +70,7 @@ ALLOWLIST = {
         {"bpe_merges": 1},
         "ONE best-pair row per merge iteration (answer-sized scalar)",
     ),
-    # scalar probes: signature width, max timestamp/partition, stats
-    ("operators/dedup.py", "first"): (
-        {"lsh_candidate_pairs": 1},
-        "signature length probe — one scalar row",
-    ),
+    # scalar probes: max timestamp/partition, stats
     ("operators/layout.py", "first"): (
         {"quantile_rank_column": 1},
         "single aggregate scalar for layout sizing",

@@ -13,9 +13,12 @@ import pytest
 
 from mape_calculation_and_anonymization_spark import session
 from mape_calculation_and_anonymization_spark.session import (
+    resolve_bench_runs,
     resolve_cpus,
     resolve_driver_memory,
+    resolve_sf_dir,
     resolve_shuffle_partitions,
+    resolve_warmup_sf_dir,
 )
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -79,6 +82,57 @@ def test_resolve_driver_memory_rejects_invalid(monkeypatch, value):
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", value)
     with pytest.raises(ValueError, match="SPARK_GRAFT_DRIVER_MEM"):
         resolve_driver_memory()
+
+
+@pytest.mark.parametrize("value, expected", [(None, 3), ("1", 1), ("7", 7)])
+def test_resolve_bench_runs_env(monkeypatch, value, expected):
+    if value is None:
+        monkeypatch.delenv("SPARK_GRAFT_BENCH_RUNS", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_BENCH_RUNS", value)
+    assert resolve_bench_runs() == expected
+    assert resolve_bench_runs(5) == 5
+
+
+@pytest.mark.parametrize("value", ["0", "-1", "three", "", "1.5", " 3"])
+def test_resolve_bench_runs_rejects_invalid(monkeypatch, value):
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_RUNS", value)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_BENCH_RUNS"):
+        resolve_bench_runs()
+
+
+@pytest.mark.parametrize("var, resolve", [
+    ("SPARK_GRAFT_SF_DIR", resolve_sf_dir),
+    ("SPARK_GRAFT_WARMUP_SF_DIR", resolve_warmup_sf_dir),
+])
+def test_resolve_table_dirs(monkeypatch, tmp_path, var, resolve):
+    default, chosen = tmp_path / "sf1", tmp_path / "sf2"
+    default.mkdir()
+    chosen.mkdir()
+    monkeypatch.delenv(var, raising=False)
+    assert resolve(str(default)) == str(default)
+    monkeypatch.setenv(var, str(chosen))
+    assert resolve(str(default)) == str(chosen)
+    assert resolve(str(default), str(default)) == str(default)
+
+
+def test_empty_warmup_dir_turns_the_warmup_off(monkeypatch, tmp_path):
+    monkeypatch.setenv("SPARK_GRAFT_WARMUP_SF_DIR", "")
+    assert resolve_warmup_sf_dir(str(tmp_path)) is None
+
+
+@pytest.mark.parametrize("var, resolve, value", [
+    ("SPARK_GRAFT_SF_DIR", resolve_sf_dir, ""),
+    ("SPARK_GRAFT_SF_DIR", resolve_sf_dir, "nope"),
+    ("SPARK_GRAFT_SF_DIR", resolve_sf_dir, "a_file"),
+    ("SPARK_GRAFT_WARMUP_SF_DIR", resolve_warmup_sf_dir, "nope"),
+    ("SPARK_GRAFT_WARMUP_SF_DIR", resolve_warmup_sf_dir, "a_file"),
+])
+def test_resolve_table_dirs_reject_invalid(monkeypatch, tmp_path, var, resolve, value):
+    (tmp_path / "a_file").write_text("")
+    monkeypatch.setenv(var, str(tmp_path / value) if value else "")
+    with pytest.raises(ValueError, match=var):
+        resolve(str(tmp_path))
 
 
 # --- the class-data-sharing archive --------------------------------------

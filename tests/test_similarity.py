@@ -1,5 +1,5 @@
 """Similarity search: exact baseline vs numpy ground truth; LSH
-recall against the exact baseline."""
+near-duplicates against planted twins."""
 
 import random
 
@@ -12,7 +12,6 @@ from mape_calculation_and_anonymization_spark.operators.similarity import (
     cosine,
     dot,
     embedding_near_duplicates,
-    lsh_top_k,
 )
 
 DIM = 16
@@ -59,18 +58,6 @@ def test_brute_force_matches_numpy(spark):
             key=lambda t: (-t[0], t[1]),
         )[:3]
         assert [(n, s) for _, n, s in items] == [(j, pytest.approx(s)) for s, j in expect]
-
-
-def test_lsh_recall_on_planted_neighbors(spark):
-    rows = _vectors()
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    n = len(rows)
-    # queries = the originals of the planted twins
-    queries = df.filter(F.col("vec_id") < 5)
-    got = lsh_top_k(df, queries, dim=DIM, k=1, n_bits=6, n_tables=8)
-    top1 = {r["query_id"]: r["neighbor_id"] for r in got.filter(F.col("rank") == 1).collect()}
-    for i in range(5):
-        assert top1[i] == n - 1 - i  # its planted twin
 
 
 def test_embedding_near_duplicates(spark):
@@ -619,88 +606,6 @@ def test_ivf_add_partial_probe_recall(spark):
     # each original's nearest neighbor is its planted drop twin
     hits = sum(1 for q, n in top1.items() if n == 79 - q)
     assert hits >= 4, top1
-
-
-def test_ivf_rebalance_lloyd_monotone_and_conserving(spark):
-    """ivf_rebalance (round-16 library operator): one Lloyd step
-    after a skewing drop — (a) conservation: every vector exactly
-    once, untouched embedding values; (b) Lloyd monotonicity: total
-    within-cell squared distance never increases; (c) every vector
-    sits at its nearest REFRESHED centroid (ties to the lowest
-    cluster id); (d) the refreshed centroid of a populated cell is
-    its member mean; (e) the cell-id set is stable."""
-    from mape_calculation_and_anonymization_spark.operators.ivf import (
-        build_ivf_index,
-        ivf_add,
-        ivf_rebalance,
-    )
-
-    rows = _vectors(n=90)
-    standing = spark.createDataFrame(rows[:60], ["vec_id", "embedding"])
-    drop = spark.createDataFrame(rows[60:], ["vec_id", "embedding"])
-    assigned0, cents0 = build_ivf_index(standing, n_clusters=4)
-    drifted = ivf_add(assigned0, cents0, drop)  # drift accumulates
-    assigned1, cents1 = ivf_rebalance(drifted, cents0)
-
-    vecs = {vid: np.array(v, dtype=np.float64) for vid, v in rows}
-    a0 = {r["vec_id"]: r["cluster"] for r in drifted.collect()}
-    got = {
-        r["vec_id"]: (r["cluster"], np.array(r["embedding"]))
-        for r in assigned1.collect()
-    }
-    assert len(got) == 90  # (a) conservation
-    for vid, (cl, emb) in got.items():
-        assert np.allclose(emb, vecs[vid])
-
-    c0 = {r["cluster"]: np.array(r["centroid"]) for r in cents0.collect()}
-    c1 = {r["cluster"]: np.array(r["centroid"]) for r in cents1.collect()}
-    assert set(c1) == set(c0)  # (e) stable cell set
-
-    def sse(assignment, cents):
-        return sum(
-            float(((vecs[vid] - cents[cl]) ** 2).sum())
-            for vid, cl in assignment.items()
-        )
-
-    a1 = {vid: cl for vid, (cl, _) in got.items()}
-    assert sse(a1, c1) <= sse(a0, c0) + 1e-9  # (b) Lloyd monotone
-
-    for vid, cl in a1.items():  # (c) nearest refreshed centroid
-        d2 = {c: float(((vecs[vid] - cc) ** 2).sum()) for c, cc in c1.items()}
-        assert cl == min(d2, key=lambda c: (d2[c], c)), vid
-
-    # (d) populated refreshed centroids are the PRE-refresh member
-    # means (the assign step moves members afterwards)
-    from collections import defaultdict
-
-    members = defaultdict(list)
-    for vid, cl in a0.items():
-        members[cl].append(vecs[vid])
-    for cl, ms in members.items():
-        assert np.allclose(c1[cl], np.mean(ms, axis=0), atol=1e-9), cl
-
-
-def test_ivf_rebalance_empty_cell_keeps_old_centroid(spark):
-    """A cell with no members entering the refresh keeps its previous
-    centroid verbatim — routing tables referencing every cell id stay
-    valid."""
-    from mape_calculation_and_anonymization_spark.operators.ivf import (
-        ivf_rebalance,
-    )
-
-    assigned = spark.createDataFrame(
-        [(1, [0.0, 0.0], 0), (2, [1.0, 1.0], 0)],
-        ["vec_id", "embedding", "cluster"],
-    )
-    cents = spark.createDataFrame(
-        [(0, [0.2, 0.2]), (7, [9.0, 9.0])], ["cluster", "centroid"]
-    )
-    a2, c2 = ivf_rebalance(assigned, cents)
-    got = {r["cluster"]: list(r["centroid"]) for r in c2.collect()}
-    assert got[0] == [0.5, 0.5]  # member mean
-    assert got[7] == [9.0, 9.0]  # memberless: old centroid retained
-    # both vectors stay nearer the refreshed cell-0 centroid
-    assert {r["cluster"] for r in a2.collect()} == {0}
 
 
 def test_semantic_dedup_gated_keep_semantics(spark):

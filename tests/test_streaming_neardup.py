@@ -164,3 +164,21 @@ def test_drain_start_failure_restores_session(spark, tmp_path):
         )
     assert spark.conf.get(parts) == before
     assert spark.streams.active == []
+
+
+def test_ingest_failure_releases_the_batch_cache(spark, corpus, tmp_path, monkeypatch):
+    """A micro-batch that fails after its frame is persisted leaves no
+    cached frame in the caller's session."""
+    from mape_calculation_and_anonymization_spark.streaming import neardup
+
+    def failing(df):
+        raise RuntimeError("injected ingest failure")
+
+    src = str(tmp_path / "src")
+    _write_batches(corpus, [F.col("doc_id") % 2 == 0], src)
+    monkeypatch.setattr(neardup, "ensure_min_partitions", failing)
+    spark.catalog.clearCache()
+    with pytest.raises(Exception, match="injected ingest failure"):
+        _run_stream(spark, src, str(tmp_path / "state"))
+    assert spark.streams.active == []
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -33,12 +33,13 @@ import statistics
 import sys
 import time
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+import __spark_entry__ as entrymod
+from mape_calculation_and_anonymization_spark.session import get_spark, resolve_sf_dir
+
+SF_DIR = resolve_sf_dir(os.path.join(os.path.dirname(entrymod.SF0001), "sf0.1"))
 
 
 def _spark():
-    from mape_calculation_and_anonymization_spark.session import get_spark
-
     spark = get_spark(app_name="tools")
     spark.sparkContext.setLogLevel("ERROR")
     return spark
@@ -59,8 +60,6 @@ def _explain(df) -> str:
 
 
 def cmd_explain(out_dir: str, names: list[str], full: bool = False) -> None:
-    import __spark_entry__ as entrymod
-
     spark = _spark()
     os.makedirs(out_dir, exist_ok=True)
     qs = entrymod.queries()
@@ -68,21 +67,18 @@ def cmd_explain(out_dir: str, names: list[str], full: bool = False) -> None:
         if full:
             # capture-only monkeypatch: query construction sees a
             # no-op localCheckpoint so the dump shows the FULL plan
-            # (persist stays — it doesn't truncate lineage)
-            # patch the CLASSIC DataFrame class — under Spark 4 the
-            # runtime instances are pyspark.sql.classic.dataframe.
-            # DataFrame, whose localCheckpoint OVERRIDES the base
-            # pyspark.sql.DataFrame one (patching only the base is a
-            # silent no-op)
-            from pyspark.sql.classic.dataframe import DataFrame as _DF
-
-            orig = _DF.localCheckpoint
-            _DF.localCheckpoint = lambda self, *a, **k: self
+            # (persist stays — it doesn't truncate lineage). The class
+            # patched is the runtime frame's own: a subclass override
+            # (Spark 4's classic DataFrame) would ignore a patch of
+            # the base class.
+            cls = type(spark.range(0))
+            orig = cls.localCheckpoint
+            cls.localCheckpoint = lambda self, *a, **k: self
             try:
                 df = qs[name](spark, SF_DIR)
                 plan = _explain(df)
             finally:
-                _DF.localCheckpoint = orig
+                cls.localCheckpoint = orig
         else:
             df = qs[name](spark, SF_DIR)
             plan = _explain(df)
@@ -103,8 +99,6 @@ def _last_job_id(spark) -> int:
 def cmd_jobs(names: list[str]) -> None:
     """Jobs per query = job ids consumed by construction + noop write
     (after one untimed warm pass, so fixture builds don't count)."""
-    import __spark_entry__ as entrymod
-
     spark = _spark()
     qs = entrymod.queries()
     from mape_calculation_and_anonymization_spark.fixtures import load_table
@@ -127,8 +121,6 @@ def cmd_jobs(names: list[str]) -> None:
 
 
 def cmd_time(runs: int, names: list[str]) -> None:
-    import __spark_entry__ as entrymod
-
     spark = _spark()
     qs = entrymod.queries()
     # session warmup mirroring bench.py
