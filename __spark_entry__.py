@@ -725,11 +725,7 @@ def _jaccard_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHOLE pipeline end-to-end."""
     import os
 
-    root = (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"jaccard_toks_{_source_token(sf_dir, 'documents')}"
-    )
-    if not _fixture_ready(root):
+    def build(root: str) -> None:
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "lang", "source", "text"
         )
@@ -743,8 +739,9 @@ def _jaccard_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         # otherwise run the tokenize on one core
         ensure_min_partitions(docs.unionByName(twins)).select(
             "doc_id", "lang", "source", word_ngrams("text", 3).alias("toks")
-        ).write.mode("overwrite").parquet(os.path.join(root, "toks"))
-        _mark_fixture_ready(root)
+        ).write.parquet(os.path.join(root, "toks"))
+
+    root = _fixture(_fixture_path(sf_dir, "documents", "jaccard_toks"), build)
     # plain scan, no checkpoint: consumers (band derivation, both
     # verification sides, the cluster join) re-read the small columnar
     # fixture — cheaper than materializing blocks per session
@@ -786,22 +783,18 @@ _JACCARD_INDEX_VERSION = 2
 def _jaccard_index(spark: SparkSession, sf_dir: str) -> str:
     import os
 
-    root = (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"jaccard_index_v{_JACCARD_INDEX_VERSION}_"
-        f"{_source_token(sf_dir, 'documents')}"
-    )
-    if not _fixture_ready(root):
+    def build(root: str) -> None:
         corpus = _jaccard_corpus(spark, sf_dir)
-        _jaccard_verified_pairs(corpus).write.mode("overwrite").parquet(
+        _jaccard_verified_pairs(corpus).write.parquet(
             os.path.join(root, "pairs")
         )
         pairs = spark.read.parquet(os.path.join(root, "pairs"))
-        duplicate_clusters(corpus, pairs).write.mode("overwrite").parquet(
+        duplicate_clusters(corpus, pairs).write.parquet(
             os.path.join(root, "clusters")
         )
-        _mark_fixture_ready(root)
-    return root
+
+    name = f"jaccard_index_v{_JACCARD_INDEX_VERSION}"
+    return _fixture(_fixture_path(sf_dir, "documents", name), build)
 
 
 def _jaccard_verified_pairs(corpus: DataFrame) -> DataFrame:
@@ -989,13 +982,6 @@ def _docs_with_planted_twins(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.unionByName(twins)
 
 
-def _minhash_sigs_fixture_root(sf_dir: str) -> str:
-    return (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"minhash_sigs_{_source_token(sf_dir, 'documents')}"
-    )
-
-
 def _minhash_sigs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signature frame (doc → 32 hashes) as a disk fixture
     keyed by the documents source fingerprint — the same
@@ -1017,17 +1003,17 @@ def _minhash_sigs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         ensure_min_partitions,
     )
 
-    root = _minhash_sigs_fixture_root(sf_dir)
-    if not _fixture_ready(root):
+    def build(root: str) -> None:
         corpus = _docs_with_planted_twins(spark, sf_dir)
         sh = ensure_min_partitions(corpus).select(
             F.col("doc_id").alias("_id"),
             word_ngrams("text", 3).alias("sh"),
         )
-        minhash_signatures(sh, "_id", F.col("sh"), 32, 42).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(root, "sigs"))
-        _mark_fixture_ready(root)
+        minhash_signatures(sh, "_id", F.col("sh"), 32, 42).write.parquet(
+            os.path.join(root, "sigs")
+        )
+
+    root = _fixture(_fixture_path(sf_dir, "documents", "minhash_sigs"), build)
     return spark.read.parquet(os.path.join(root, "sigs"))
 
 
@@ -1076,15 +1062,6 @@ def _q_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
-def _minhash_sigs_glob(sf_dir: str) -> str:
-    """Glob of the landed MinHash signature parts the
-    dedup_minhash_pairs oracle reads (sf-keyed fixture path, same
-    class as the IVF cells and PQ codebook twins)."""
-    import os
-
-    return os.path.join(_minhash_sigs_fixture_root(sf_dir), "sigs", "*.parquet")
-
-
 def _dedup_minhash_oracle(sf_dir: str) -> str:
     """DuckDB twin for dedup_minhash_pairs — see the query docstring
     for the collision caveat. Bands are the 8 disjoint 4-value slices
@@ -1093,7 +1070,7 @@ def _dedup_minhash_oracle(sf_dir: str) -> str:
     groups; the verify re-derives word-3-gram set Jaccard from raw
     text with the UNROUNDED threshold compare minhash_near_duplicates
     applies (integer-ratio division — bit-identical cross-engine)."""
-    sigs = _minhash_sigs_glob(sf_dir)
+    sigs = f"{_fixture_path(sf_dir, 'documents', 'minhash_sigs')}/sigs/*.parquet"
     return rf"""
     WITH sigs AS (SELECT _id, sig FROM read_parquet('{sigs}')),
     buckets AS (
@@ -1190,7 +1167,7 @@ def _minhash_incremental_oracle(sf_dir: str) -> str:
     cap mirrored over the FULL union — the same cap the incremental
     operator applies) with candidates restricted to new-touching
     pairs, plus the pair_type label."""
-    sigs = _minhash_sigs_glob(sf_dir)
+    sigs = f"{_fixture_path(sf_dir, 'documents', 'minhash_sigs')}/sigs/*.parquet"
     return rf"""
     WITH sigs AS (SELECT _id, sig FROM read_parquet('{sigs}')),
     buckets AS (
@@ -1250,13 +1227,6 @@ def _minhash_incremental_oracle(sf_dir: str) -> str:
 """
 
 
-def _stream_neardup_fixture_root(sf_dir: str) -> str:
-    return (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"stream_neardup_{_source_token(sf_dir, 'documents')}"
-    )
-
-
 def _q_stream_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming near-dup ingest (round-15 debut;
     streaming/neardup.py:streaming_minhash_ingest) in its PRODUCTION
@@ -1285,20 +1255,14 @@ def _q_stream_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     corpus = _docs_with_planted_twins(spark, sf_dir).select("doc_id", "text")
-    root = _stream_neardup_fixture_root(sf_dir)
-    if not _fixture_ready(root):
+
+    def build(root: str) -> None:
         # day-0 state: standing docs + their landed signatures
-        # mode('overwrite') throughout (ADVICE r15): a crash between
-        # the first write and _mark_fixture_ready leaves a half-landed
-        # dir, and without overwrite every retry dies on
-        # path-already-exists (matches _minhash_sigs_cached et al.).
         standing = corpus.filter(F.col("doc_id") < 1_000_000)
-        standing.write.mode("overwrite").parquet(
-            os.path.join(root, "state0", "docs")
-        )
+        standing.write.parquet(os.path.join(root, "state0", "docs"))
         _minhash_sigs_cached(spark, sf_dir).filter(
             F.col("_id") < 1_000_000
-        ).select("_id", "sig").write.mode("overwrite").parquet(
+        ).select("_id", "sig").write.parquet(
             os.path.join(root, "state0", "sigs")
         )
         # the drop, one file per micro-batch (split by parity)
@@ -1308,12 +1272,13 @@ def _q_stream_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 & (F.pmod(F.col("doc_id"), F.lit(2)) == i)
             )
             tmp = os.path.join(root, f"_b{i}")
-            half.coalesce(1).write.mode("overwrite").parquet(tmp)
+            half.coalesce(1).write.parquet(tmp)
             part = globmod.glob(os.path.join(tmp, "part-*.parquet"))[0]
             os.makedirs(os.path.join(root, "drop"), exist_ok=True)
             os.rename(part, os.path.join(root, "drop", f"batch_{i}.parquet"))
             shutil.rmtree(tmp)
-        _mark_fixture_ready(root)
+
+    root = _fixture(_fixture_path(sf_dir, "documents", "stream_neardup"), build)
     _minhash_sigs_cached(spark, sf_dir)  # land the oracle's sig fixture
 
     from pyspark.sql import types as T
@@ -1331,8 +1296,9 @@ def _q_stream_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(os.path.join(root, "drop"))
     )
     # per-call state seeded from day-0 (the drain APPENDS to it)
-    state_dir = tempfile.mkdtemp(prefix="stream_neardup_state_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_neardup_state_", ignore_cleanup_errors=True
+    ) as state_dir:
         for store in ("docs", "sigs"):
             shutil.copytree(
                 os.path.join(root, "state0", store),
@@ -1352,8 +1318,6 @@ def _q_stream_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = checkpoint(
             pairs.orderBy("id_a", "id_b"), "query.stream_minhash_pairs.pairs"
         )
-    finally:
-        shutil.rmtree(state_dir, ignore_errors=True)
     return out
 
 
@@ -1366,13 +1330,6 @@ def _stream_minhash_oracle(sf_dir: str) -> str:
         "SELECT id_a, id_b, jaccard_sim FROM ("
         + _minhash_incremental_oracle(sf_dir)
         + ") ORDER BY id_a, id_b"
-    )
-
-
-def _simhash_sigs_fixture_root(sf_dir: str) -> str:
-    return (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"simhash_sigs_{_source_token(sf_dir, 'documents')}"
     )
 
 
@@ -1397,15 +1354,15 @@ def _simhash_sigs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         ensure_min_partitions,
     )
 
-    root = _simhash_sigs_fixture_root(sf_dir)
-    if not _fixture_ready(root):
+    def build(root: str) -> None:
         corpus = _docs_with_planted_twins(spark, sf_dir)
         sig_udf = make_simhash64_udf(3, "blake2b")
         ensure_min_partitions(corpus).select(
             F.col("doc_id").alias("_id"),
             sig_udf(F.col("text")).alias("sim"),
-        ).write.mode("overwrite").parquet(os.path.join(root, "sigs"))
-        _mark_fixture_ready(root)
+        ).write.parquet(os.path.join(root, "sigs"))
+
+    root = _fixture(_fixture_path(sf_dir, "documents", "simhash_sigs"), build)
     return spark.read.parquet(os.path.join(root, "sigs"))
 
 
@@ -1431,15 +1388,6 @@ def _q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
-def _simhash_sigs_glob(sf_dir: str) -> str:
-    """Glob of the landed blake2b SimHash signature parts the
-    dedup_simhash_pairs oracle reads (sf-keyed fixture path, same
-    class as the MinHash-signature and PQ-codebook twins)."""
-    import os
-
-    return os.path.join(_simhash_sigs_fixture_root(sf_dir), "sigs", "*.parquet")
-
-
 def _dedup_simhash_oracle(sf_dir: str) -> str:
     """DuckDB twin for dedup_simhash_pairs: brute-force Hamming over
     the landed signature fixture. xor() of two signed BIGINTs is the
@@ -1448,7 +1396,7 @@ def _dedup_simhash_oracle(sf_dir: str) -> str:
     bitwiseXOR + bit_count on LongType, so the compare is
     integer-exact. Quadratic, but oracle-only (the pigeonhole
     guarantee makes the banded Spark plan equal to this filter)."""
-    sigs = _simhash_sigs_glob(sf_dir)
+    sigs = f"{_fixture_path(sf_dir, 'documents', 'simhash_sigs')}/sigs/*.parquet"
     return f"""
     WITH sigs AS (SELECT _id, sim FROM read_parquet('{sigs}'))
     SELECT a._id AS id_a, b._id AS id_b,
@@ -1556,7 +1504,10 @@ def _pq_codebooks_cached(spark: SparkSession, sf_dir: str):
     be charged the training cost. Deterministic training (id-ordered
     sample, strided init), so the cached array is bit-identical to a
     fresh train; a regenerated source changes the token → retrain.
-    Atomic via tmp + os.replace."""
+    The fixture holds the array (``codebooks.npy``) and its parquet
+    twin (``codebooks.parquet``, one (b, j, centroid) row per code,
+    written driver-side — the array is sketch-sized by construction),
+    which the pq_ann_topk DuckDB oracle read_parquets."""
     import os
 
     import numpy as np
@@ -1565,70 +1516,32 @@ def _pq_codebooks_cached(spark: SparkSession, sf_dir: str):
         train_pq_codebooks,
     )
 
-    path = (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"pq_codebooks_{_source_token(sf_dir, 'embeddings')}.npy"
-    )
-    if os.path.exists(path):
-        cb = np.load(path)
-    else:
+    def build(root: str) -> None:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
         cb = train_pq_codebooks(load_table(spark, sf_dir, "embeddings"))
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + ".tmp.npy"
-        np.save(tmp, cb)
-        os.replace(tmp, path)
-    _ensure_pq_codebook_parquet(cb, _pq_codebook_parquet_path(sf_dir))
-    return cb
+        os.makedirs(root)
+        np.save(os.path.join(root, "codebooks.npy"), cb)
+        m, k, _sub = cb.shape
+        tbl = pa.table(
+            {
+                "b": pa.array(
+                    [b for b in range(m) for _ in range(k)], pa.int32()
+                ),
+                "j": pa.array(
+                    [j for _ in range(m) for j in range(k)], pa.int32()
+                ),
+                "centroid": pa.array(
+                    [cb[b, j].tolist() for b in range(m) for j in range(k)],
+                    pa.list_(pa.float64()),
+                ),
+            }
+        )
+        pq.write_table(tbl, os.path.join(root, "codebooks.parquet"))
 
-
-def _pq_codebook_parquet_path(sf_dir: str) -> str:
-    """Parquet twin of the PQ codebook artifact — what the
-    pq_ann_topk DuckDB oracle read_parquets (same sf-keyed-fixture
-    class as the semantic_dedup centroid table and K2's sidecar)."""
-    return (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"pq_codebooks_{_source_token(sf_dir, 'embeddings')}.parquet"
-    )
-
-
-def _ensure_pq_codebook_parquet(cb, path: str) -> None:
-    """Land the (m, k, sub) codebook array as (b, j, centroid) parquet
-    rows, written atomically via pyarrow (driver-side — the array is
-    sketch-sized by construction). Idempotent; also backfills the
-    parquet twin next to an npy that predates round 12."""
-    import os
-
-    if os.path.exists(path):
-        return
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    m, k, _sub = cb.shape
-    tbl = pa.table(
-        {
-            "b": pa.array(
-                [b for b in range(m) for _ in range(k)], pa.int32()
-            ),
-            "j": pa.array(
-                [j for _ in range(m) for j in range(k)], pa.int32()
-            ),
-            "centroid": pa.array(
-                [cb[b, j].tolist() for b in range(m) for j in range(k)],
-                pa.list_(pa.float64()),
-            ),
-        }
-    )
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + ".tmp.parquet"
-    pq.write_table(tbl, tmp)
-    os.replace(tmp, path)
-
-
-def _ivf_fixture_root(sf_dir: str, n_clusters: int) -> str:
-    return (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"ivf_{_source_token(sf_dir, 'embeddings')}_k{n_clusters}"
-    )
+    root = _fixture(_fixture_path(sf_dir, "embeddings", "pq_codebooks"), build)
+    return np.load(os.path.join(root, "codebooks.npy"))
 
 
 def _ivf_index_cached(spark: SparkSession, sf_dir: str, n_clusters: int):
@@ -1644,16 +1557,15 @@ def _ivf_index_cached(spark: SparkSession, sf_dir: str, n_clusters: int):
         build_ivf_index,
     )
 
-    root = _ivf_fixture_root(sf_dir, n_clusters)
-    if not _fixture_ready(root):
+    def build(root: str) -> None:
         assigned, centroids = build_ivf_index(
             load_table(spark, sf_dir, "embeddings"), n_clusters=n_clusters
         )
-        assigned.write.mode("overwrite").parquet(os.path.join(root, "assigned"))
-        centroids.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(root, "cells")
-        )
-        _mark_fixture_ready(root)
+        assigned.write.parquet(os.path.join(root, "assigned"))
+        centroids.coalesce(1).write.parquet(os.path.join(root, "cells"))
+
+    name = f"ivf_k{n_clusters}"
+    root = _fixture(_fixture_path(sf_dir, "embeddings", name), build)
     return (
         spark.read.parquet(os.path.join(root, "assigned")),
         spark.read.parquet(os.path.join(root, "cells")),
@@ -1697,7 +1609,7 @@ def _pq_ann_oracle(sf_dir: str) -> str:
     exactly the piece that is an offline artifact in production.
     Quadratic oracle, linear engine: the twin scores queries × corpus
     via the code join; the engine streams m-byte codes per vector."""
-    cbp = _pq_codebook_parquet_path(sf_dir)
+    cbp = f"{_fixture_path(sf_dir, 'embeddings', 'pq_codebooks')}/codebooks.parquet"
     return f"""
     WITH cb AS (SELECT b, j, centroid FROM read_parquet('{cbp}')),
     emb AS (
@@ -1809,9 +1721,9 @@ def _ivf_pq_ann_oracle(sf_dir: str) -> str:
     and shortlist-80 boundary margins are pinned in
     test_pq_oracle_margins, and the final rank uses the rounded
     cosine with the id tie-break on both sides."""
-    cbp = _pq_codebook_parquet_path(sf_dir)
-    cells = _ivf_fixture_glob(sf_dir, 16, "cells")
-    memb = _ivf_fixture_glob(sf_dir, 16, "assigned")
+    cbp = f"{_fixture_path(sf_dir, 'embeddings', 'pq_codebooks')}/codebooks.parquet"
+    cells = f"{_fixture_path(sf_dir, 'embeddings', 'ivf_k16')}/cells/*.parquet"
+    memb = f"{_fixture_path(sf_dir, 'embeddings', 'ivf_k16')}/assigned/*.parquet"
     return f"""
     WITH cb AS (SELECT b, j, centroid FROM read_parquet('{cbp}')),
     cents AS (SELECT cluster, centroid FROM read_parquet('{cells}')),
@@ -1943,8 +1855,8 @@ def _ann_recall_oracle(sf_dir: str) -> str:
     ivf_recall_curve uses), derives the exact baseline and each probe
     budget's top-10 from that one frame, and counts hits — identical
     rounded-cosine + id tie-break ordering on both sides."""
-    cells = _ivf_fixture_glob(sf_dir, 8, "cells")
-    memb = _ivf_fixture_glob(sf_dir, 8, "assigned")
+    cells = f"{_fixture_path(sf_dir, 'embeddings', 'ivf_k8')}/cells/*.parquet"
+    memb = f"{_fixture_path(sf_dir, 'embeddings', 'ivf_k8')}/assigned/*.parquet"
     return f"""
     WITH cents AS (SELECT cluster, centroid FROM read_parquet('{cells}')),
     memb AS (SELECT vec_id, cluster FROM read_parquet('{memb}')),
@@ -2075,22 +1987,15 @@ def _ivf_standing_index_cached(spark: SparkSession, sf_dir: str):
         build_ivf_index,
     )
 
-    root = (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"ivf_standing_{_source_token(sf_dir, 'embeddings')}_k8"
-    )
-    if not _fixture_ready(root):
+    def build(root: str) -> None:
         standing = load_table(spark, sf_dir, "embeddings").filter(
             F.pmod(F.col("vec_id"), F.lit(10)) != 7
         )
         assigned, centroids = build_ivf_index(standing, n_clusters=8)
-        assigned.write.mode("overwrite").parquet(
-            os.path.join(root, "assigned")
-        )
-        centroids.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(root, "cells")
-        )
-        _mark_fixture_ready(root)
+        assigned.write.parquet(os.path.join(root, "assigned"))
+        centroids.coalesce(1).write.parquet(os.path.join(root, "cells"))
+
+    root = _fixture(_fixture_path(sf_dir, "embeddings", "ivf_standing_k8"), build)
     return (
         spark.read.parquet(os.path.join(root, "assigned")),
         spark.read.parquet(os.path.join(root, "cells")),
@@ -2683,40 +2588,129 @@ _Q5_ORACLE = """
 
 
 # ---------------------------------------------------------------------------
+# On-disk fixtures: one path function, one build guard
+# ---------------------------------------------------------------------------
+
+_FIXTURE_ROOT = "/tmp/mape_spark_fixtures"
+
+# Longest wait for another session's build before giving up (the
+# largest build, the jaccard index at sf0.1, takes well under a minute).
+_FIXTURE_LOCK_WAIT_S = 3600.0
+
+
+def _fixture_sf_tag(sf_dir: str) -> str:
+    """Per-sf fixture key (mirrors the bucketed-table naming) so a
+    fixture written at one scale factor can never be silently reused
+    to validate another."""
+    return sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
+
+
+def _source_token(sf_dir: str, table: str) -> str:
+    """Content fingerprint (size + mtime) of a source table file.
+
+    Fixture paths embed this token: source tables can be regenerated
+    while fixtures survive, and an existence-only guard would then
+    happily validate a fixture derived from the PREVIOUS data against
+    the new source — a guaranteed red row. A regenerated source file
+    changes the token, which changes the path, which forces a rebuild.
+    (Fixture-to-fixture compares — s1/s3/s4/s5, where both engines read
+    the same file — are stale-consistent and keep their stable paths.)
+    """
+    import os
+
+    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
+    return f"{st.st_size}_{int(st.st_mtime)}"
+
+
+def _fixture_path(sf_dir: str, table: str, name: str) -> str:
+    """``<root>/<sf tag>/<name>_<source token of table>``: the path of
+    every sf-keyed fixture derived from ``table``."""
+    return (
+        f"{_FIXTURE_ROOT}/{_fixture_sf_tag(sf_dir)}/"
+        f"{name}_{_source_token(sf_dir, table)}"
+    )
+
+
+def _fixture(path: str, build: Callable[[str], object]) -> str:
+    """Run ``build(path)`` once per fixture and return ``path``.
+
+    A fixture is trusted only when its ``_COMPLETE`` marker exists
+    (written last; ``_`` hides it from Spark's readers). Otherwise take
+    an exclusive ``flock`` on ``<path>.lock`` and re-check the marker:
+    a session that waited reuses the finished build. A builder wipes
+    any half-build (a directory, or a plain file of an older layout),
+    builds, and writes the marker; a build that raises is wiped too.
+    The lock is released on every exit path, and the kernel drops it
+    when its holder dies. Lock files are never unlinked, since a lock
+    on an unlinked file excludes nobody."""
+    import fcntl
+    import os
+    import shutil
+    import time
+
+    def wipe() -> None:
+        shutil.rmtree(path, ignore_errors=True)
+        if os.path.lexists(path):
+            os.remove(path)
+
+    marker = os.path.join(path, "_COMPLETE")
+    if os.path.exists(marker):
+        return path
+    lock = path.rstrip("/") + ".lock"
+    os.makedirs(os.path.dirname(lock), exist_ok=True)
+    fd = os.open(lock, os.O_CREAT | os.O_RDWR)
+    try:
+        deadline = time.monotonic() + _FIXTURE_LOCK_WAIT_S
+        while True:
+            try:
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                break
+            except BlockingIOError:
+                if time.monotonic() > deadline:
+                    raise TimeoutError(
+                        f"fixture build lock {lock} held for more than "
+                        f"{_FIXTURE_LOCK_WAIT_S:.0f}s by a live session"
+                    ) from None
+                time.sleep(0.1)
+        if not os.path.exists(marker):
+            wipe()
+            try:
+                build(path)
+            except BaseException:
+                wipe()
+                raise
+            os.makedirs(path, exist_ok=True)
+            with open(marker, "w") as fh:
+                fh.write("ok\n")
+    finally:
+        os.close(fd)
+    return path
+
+
+# ---------------------------------------------------------------------------
 # Scan / sort / window micro-operators (SURVEY.md §2.1, §2.5, §2.6)
 # ---------------------------------------------------------------------------
 
-_CSV_FIXTURE = "/tmp/mape_spark_fixtures/events_schema_a.csv"
-_PARTITIONED_FIXTURE = "/tmp/mape_spark_fixtures/dated"
+_CSV_FIXTURE = f"{_FIXTURE_ROOT}/events_schema_a.csv"
+_PARTITIONED_FIXTURE = f"{_FIXTURE_ROOT}/dated"
 
 
 def _q_s1_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1 — header-CSV scan with inferred schema: export a
     deterministic CSV once, read it back through the engine's reader,
     aggregate. The oracle reads the same file via read_csv_auto."""
-    import os
-
     from mape_calculation_and_anonymization_spark.sources.readers import read_csv
 
-    os.makedirs(os.path.dirname(_CSV_FIXTURE), exist_ok=True)
-    if not os.path.exists(_CSV_FIXTURE):
-        # Distributed write (no driver-side collect): the aggregate
-        # below and the oracle both read the same file, so part-file
-        # row order is irrelevant — coalesce(1) only to get one file.
-        import glob
-        import shutil
-
-        tmp_dir = _CSV_FIXTURE + ".spark"
-        (
-            events_to_schema_a(load_events(spark, sf_dir))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("header", True)
-            .csv(tmp_dir)
-        )
-        part = glob.glob(os.path.join(tmp_dir, "part-*.csv"))[0]
-        os.replace(part, _CSV_FIXTURE)
-        shutil.rmtree(tmp_dir, ignore_errors=True)
+    # Distributed write (no driver-side collect): the aggregate below
+    # and the oracle both read the same file, so part-file row order is
+    # irrelevant — coalesce(1) only to get one file.
+    _fixture(
+        _CSV_FIXTURE,
+        lambda path: events_to_schema_a(load_events(spark, sf_dir))
+        .coalesce(1)
+        .write.option("header", True)
+        .csv(path),
+    )
     df = read_csv(spark, _CSV_FIXTURE)
     return df.groupBy("zone").agg(
         F.count(F.lit(1)).alias("n"),
@@ -2727,11 +2721,11 @@ def _q_s1_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 _S1_ORACLE = f"""
     SELECT zone, COUNT(*) AS n,
            ROUND(SUM(settlement), 4) AS total_settlement
-    FROM read_csv_auto('{_CSV_FIXTURE}')
+    FROM read_csv_auto('{_CSV_FIXTURE}/*.csv')
     GROUP BY zone
 """
 
-_MIXED_FOLDER_FIXTURE = "/tmp/mape_spark_fixtures/mixed_folder"
+_MIXED_FOLDER_FIXTURE = f"{_FIXTURE_ROOT}/mixed_folder"
 
 
 def _q_s4_folder_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2757,20 +2751,14 @@ def _q_s4_folder_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_input_folder,
     )
 
-    # ADVICE r13: the earlier gate (`metrics.csv exists?`) was
-    # non-atomic — metrics.csv lands before dims.parquet, so a run
-    # interrupted between the two writes left a torn fixture that was
-    # treated as complete forever after. Use the same crash-idempotent
-    # _COMPLETE-marker protocol as every other disk fixture (marker
-    # written LAST; torn dirs wiped and rebuilt). The marker FILE at
-    # the fixture root is invisible to both discovery paths:
-    # latest_partition lists only directories, read_input_folder only
-    # *.csv / *.parquet names.
-    if not _fixture_ready(_MIXED_FOLDER_FIXTURE):
-        newest = os.path.join(_MIXED_FOLDER_FIXTURE, "2024-06-01")
-        stale = os.path.join(_MIXED_FOLDER_FIXTURE, "2024-05-01")
-        os.makedirs(stale, exist_ok=True)
-        os.makedirs(newest, exist_ok=True)
+    # The fixture guard's marker FILE at the fixture root is invisible
+    # to both discovery paths: latest_partition lists only directories,
+    # read_input_folder only *.csv / *.parquet names.
+    def build(root: str) -> None:
+        newest = os.path.join(root, "2024-06-01")
+        stale = os.path.join(root, "2024-05-01")
+        os.makedirs(stale)
+        os.makedirs(newest)
         with open(os.path.join(stale, "metrics.csv"), "w") as fh:
             fh.write("zone,value\nstale,1\n")
         with open(os.path.join(newest, "metrics.csv"), "w") as fh:
@@ -2780,10 +2768,9 @@ def _q_s4_folder_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         spark.createDataFrame(
             [(i, f"name{i}") for i in range(7)], ["id", "name"]
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(newest, "dims.parquet")
-        )
-        _mark_fixture_ready(_MIXED_FOLDER_FIXTURE)
+        ).coalesce(1).write.parquet(os.path.join(newest, "dims.parquet"))
+
+    _fixture(_MIXED_FOLDER_FIXTURE, build)
     parts = []
     for meta, df in read_input_folder(spark, _MIXED_FOLDER_FIXTURE):
         num_col = next(
@@ -2817,7 +2804,7 @@ _S4_ORACLE = f"""
 """
 
 
-_JSONL_FIXTURE = "/tmp/mape_spark_fixtures/events_sample.jsonl"
+_JSONL_FIXTURE = f"{_FIXTURE_ROOT}/events_sample.jsonl"
 
 
 def _q_s5_jsonl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2829,27 +2816,17 @@ def _q_s5_jsonl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     immune to which round's data wrote it. Timestamps are deliberately
     excluded from the payload — JSON timestamp serialization is the
     classic cross-engine divergence."""
-    import glob
-    import os
-    import shutil
-
     from mape_calculation_and_anonymization_spark.sources.readers import (
         read_jsonl,
     )
 
-    os.makedirs(os.path.dirname(_JSONL_FIXTURE), exist_ok=True)
-    if not os.path.exists(_JSONL_FIXTURE):
-        tmp_dir = _JSONL_FIXTURE + ".spark"
-        (
-            load_events(spark, sf_dir)
-            .select("event_id", "user_id", "event_type", "value")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .json(tmp_dir)
-        )
-        part = glob.glob(os.path.join(tmp_dir, "part-*.json"))[0]
-        os.replace(part, _JSONL_FIXTURE)
-        shutil.rmtree(tmp_dir, ignore_errors=True)
+    _fixture(
+        _JSONL_FIXTURE,
+        lambda path: load_events(spark, sf_dir)
+        .select("event_id", "user_id", "event_type", "value")
+        .coalesce(1)
+        .write.json(path),
+    )
     df = read_jsonl(
         spark,
         _JSONL_FIXTURE,
@@ -2866,7 +2843,7 @@ _S5_ORACLE = f"""
     SELECT event_type, COUNT(*) AS n,
            COUNT(DISTINCT user_id) AS n_users,
            ROUND(SUM(value), 4) AS volume
-    FROM read_json_auto('{_JSONL_FIXTURE}')
+    FROM read_json_auto('{_JSONL_FIXTURE}/*.json')
     GROUP BY event_type
 """
 
@@ -2883,15 +2860,14 @@ def _q_s3_latest_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The marker FILE is invisible to latest_partition, which lists
     # only directories.
-    if not _fixture_ready(_PARTITIONED_FIXTURE):
+    def build(root: str) -> None:
         nation = load_table(spark, sf_dir, "nation")
-        nation.filter(F.col("n_nationkey") < 5).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(_PARTITIONED_FIXTURE, "2024-01-01"))
-        nation.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(_PARTITIONED_FIXTURE, "2024-02-01")
+        nation.filter(F.col("n_nationkey") < 5).coalesce(1).write.parquet(
+            os.path.join(root, "2024-01-01")
         )
-        _mark_fixture_ready(_PARTITIONED_FIXTURE)
+        nation.coalesce(1).write.parquet(os.path.join(root, "2024-02-01"))
+
+    _fixture(_PARTITIONED_FIXTURE, build)
     folder = latest_partition(_PARTITIONED_FIXTURE)
     df = read_parquet(spark, f"{_PARTITIONED_FIXTURE}/{folder}")
     return df.select("n_nationkey", "n_name", "n_regionkey")
@@ -2931,56 +2907,21 @@ def _q_k1_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the engine sink once (directory name derived via
     ``anonymized_output_name``), read it back, aggregate. The oracle
     reads the engine-written files directly."""
-    import os
-
     from mape_calculation_and_anonymization_spark.sources.readers import read_parquet
 
-    path = _k1_fixture_path(sf_dir)
-    if not _fixture_ready(path):
-        write_parquet_snappy(
+    path = _fixture(
+        _k1_fixture_path(sf_dir),
+        lambda path: write_parquet_snappy(
             load_table(spark, sf_dir, "supplier").select(
                 "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
             ),
             path,
-        )
-        _mark_fixture_ready(path)
+        ),
+    )
     df = read_parquet(spark, path)
     return df.groupBy("s_nationkey").agg(
         F.count(F.lit(1)).alias("n_suppliers"),
         F.round(F.sum("s_acctbal"), 2).alias("total_acctbal"),
-    )
-
-
-def _fixture_sf_tag(sf_dir: str) -> str:
-    """Per-sf fixture key (mirrors the bucketed-table naming) so a
-    fixture written at one scale factor can never be silently reused
-    to validate another."""
-    return sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-
-
-def _source_token(sf_dir: str, table: str) -> str:
-    """Content fingerprint (size + mtime) of a source table file.
-
-    Fixture paths that are checked against a SOURCE-reading oracle
-    (k1, stream_key, stream_sink) embed this token: the driver
-    regenerates /root/testdata between rounds while /tmp fixtures can
-    survive, and an existence-only guard would then happily validate a
-    fixture derived from the PREVIOUS round's data against this
-    round's source — a guaranteed red row. A regenerated source file
-    changes the token, which changes the path, which forces a rebuild.
-    (Fixture-to-fixture compares — k2/s1/s3, where both engines read
-    the same file — are stale-consistent and keep their stable paths.)
-    """
-    import os
-
-    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-    return f"{st.st_size}_{int(st.st_mtime)}"
-
-
-def _inc_agg_fixture_root(sf_dir: str) -> str:
-    return (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"inc_agg_{_source_token(sf_dir, 'events')}"
     )
 
 
@@ -3001,95 +2942,18 @@ def bench_reset(sf_dir: str) -> None:
     import shutil
 
     shutil.rmtree(
-        os.path.join(_inc_agg_fixture_root(sf_dir), "table"),
+        os.path.join(_fixture_path(sf_dir, "events", "inc_agg"), "table"),
         ignore_errors=True,
     )
 
 
-# path -> fd holding the flock on <path>.lock: _fixture_ready(p) ==
-# False takes p's build lock; the matching _mark_fixture_ready(p)
-# releases it
-_FIXTURE_BUILD_LOCKS: dict[str, int] = {}
-
-# Longest wait for another session's build before giving up (the
-# largest build, the jaccard index at sf0.1, takes well under a minute).
-_FIXTURE_LOCK_WAIT_S = 3600.0
-
-
-def _fixture_ready(path: str) -> bool:
-    """True iff the fixture at ``path`` was built to completion (its
-    ``_COMPLETE`` marker is written last; ``_`` hides it from Spark's
-    readers). Otherwise take an exclusive ``flock`` on ``<path>.lock``
-    until the caller's ``_mark_fixture_ready``, wipe any half-build and
-    return False. A session that waited re-checks the marker and reuses
-    the finished build. The kernel drops the lock when its holder dies;
-    lock files are never unlinked, since a lock on an unlinked file
-    excludes nobody."""
-    import fcntl
-    import os
-    import shutil
-    import time
-
-    marker = os.path.join(path, "_COMPLETE")
-    if os.path.exists(marker):
-        return True
-    # a path held already is this process retrying its own failed build
-    if path not in _FIXTURE_BUILD_LOCKS:
-        lock = path.rstrip("/") + ".lock"
-        os.makedirs(os.path.dirname(lock), exist_ok=True)
-        fd = os.open(lock, os.O_CREAT | os.O_RDWR)
-        deadline = time.monotonic() + _FIXTURE_LOCK_WAIT_S
-        while True:
-            try:
-                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-                break
-            except BlockingIOError:
-                if time.monotonic() > deadline:
-                    os.close(fd)
-                    raise TimeoutError(
-                        f"fixture build lock {lock} held for more than "
-                        f"{_FIXTURE_LOCK_WAIT_S:.0f}s by a live session"
-                    ) from None
-                time.sleep(0.1)
-        if os.path.exists(marker):
-            os.close(fd)
-            return True
-        _FIXTURE_BUILD_LOCKS[path] = fd
-    shutil.rmtree(path, ignore_errors=True)
-    return False
-
-
-def _mark_fixture_ready(path: str) -> None:
-    """Write the marker, then release the lock ``_fixture_ready`` took."""
-    import os
-
-    with open(os.path.join(path, "_COMPLETE"), "w") as fh:
-        fh.write("ok\n")
-    fd = _FIXTURE_BUILD_LOCKS.pop(path, None)
-    if fd is not None:
-        os.close(fd)
-
-
 def _k1_fixture_path(sf_dir: str) -> str:
     # K3 naming: clientx_suppliers.csv → client_demo_suppliers.snappy.parquet
-    return (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"src{_source_token(sf_dir, 'supplier')}/"
-        + anonymized_output_name("clientx_suppliers.csv", "clientx")
-    )
+    import os
 
-
-def _k2_workbook_path(sf_dir: str) -> str:
-    """The guarded directory holding K2's ``report.xlsx`` and its
-    ``daily.csv`` sidecar. The sheet compare is fixture-to-fixture
-    (stale-consistent), but the sheet CONTENT derives from events via
-    the mape pipeline — fingerprinting keeps a stale workbook from
-    surviving a source regeneration that also changed the sheet
-    schema. The oracle builds its path through this same function, so
-    query and oracle always agree on the token."""
-    return (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"mape_report_{_source_token(sf_dir, 'events')}"
+    return os.path.join(
+        _fixture_path(sf_dir, "supplier", "src"),
+        anonymized_output_name("clientx_suppliers.csv", "clientx"),
     )
 
 
@@ -3128,19 +2992,18 @@ def _q_k2_excel_sheets(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_xlsx_sheet,
     )
 
-    root = _k2_workbook_path(sf_dir)
-    workbook = os.path.join(root, "report.xlsx")
-    if not _fixture_ready(root):
+    def build(root: str) -> None:
         os.makedirs(root)
         daily_pdf = _q_mape_daily_portfolio(spark, sf_dir).toPandas()
         write_excel_workbook(
-            workbook,
+            os.path.join(root, "report.xlsx"),
             daily=daily_pdf,
             hourly=_q_mape_hourly_portfolio(spark, sf_dir),
         )
         daily_pdf.to_csv(os.path.join(root, "daily.csv"), index=False)
-        _mark_fixture_ready(root)
-    df = read_xlsx_sheet(spark, workbook, "daily")
+
+    root = _fixture(_fixture_path(sf_dir, "events", "mape_report"), build)
+    df = read_xlsx_sheet(spark, os.path.join(root, "report.xlsx"), "daily")
     return df.agg(
         F.count(F.lit(1)).alias("n_days"),
         F.round(F.sum("forecast_mape"), 6).alias("sum_forecast_mape"),
@@ -3157,7 +3020,7 @@ def _k2_oracle(sf_dir: str) -> str:
     SELECT COUNT(*) AS n_days,
            ROUND(SUM(forecast_mape), 6) AS sum_forecast_mape,
            ROUND(SUM(settlement), 2) AS sum_settlement
-    FROM read_csv_auto('{_k2_workbook_path(sf_dir)}/daily.csv')
+    FROM read_csv_auto('{_fixture_path(sf_dir, 'events', 'mape_report')}/daily.csv')
 """
 
 
@@ -3176,18 +3039,15 @@ def _q_k7_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_orc_zstd,
     )
 
-    path = (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"orc_{_source_token(sf_dir, 'orders')}"
-    )
-    if not _fixture_ready(path):
-        write_orc_zstd(
+    path = _fixture(
+        _fixture_path(sf_dir, "orders", "orc"),
+        lambda path: write_orc_zstd(
             load_table(spark, sf_dir, "orders").select(
                 "o_orderkey", "o_orderpriority", "o_totalprice"
             ),
             path,
-        )
-        _mark_fixture_ready(path)
+        ),
+    )
     df = read_orc(spark, path)
     return df.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
@@ -3201,13 +3061,6 @@ _K7_ORACLE = """
     FROM orders
     GROUP BY o_orderpriority
 """
-
-
-def _deleted_fixture_path(sf_dir: str) -> str:
-    return (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"deleted_{_source_token(sf_dir, 'events')}"
-    )
 
 
 def _q_k8_targeted_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3228,15 +3081,14 @@ def _q_k8_targeted_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         delete_keys,
     )
 
-    path = _deleted_fixture_path(sf_dir)
-    if not _fixture_ready(path):
+    def build(path: str) -> None:
         ev = load_events(spark, sf_dir).select(
             "event_id", "user_id", "event_type", "value"
         )
         # hash-partition on the erasure key so one user's rows live in
         # exactly one file — the layout that makes the delete's file
         # pruning real (a row-random layout would touch every file)
-        ev.repartition(8, "user_id").write.mode("overwrite").option(
+        ev.repartition(8, "user_id").write.option(
             "compression", "snappy"
         ).parquet(path)
         keys = (
@@ -3247,7 +3099,8 @@ def _q_k8_targeted_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         stats = delete_keys(spark, path, "user_id", keys)
         assert stats["files_rewritten"] <= stats["files_total"]
-        _mark_fixture_ready(path)
+
+    path = _fixture(_fixture_path(sf_dir, "events", "deleted"), build)
     df = spark.read.parquet(path)
     return df.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -4162,8 +4015,6 @@ def _q_stream_key_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction. The pseudonym VALUES are pinned by the blake2b
     digest-anchor unit test (DuckDB has no blake2b); the oracle checks
     the uid set the stream discovered."""
-    import os
-
     from mape_calculation_and_anonymization_spark.operators.keys import (
         load_key_table,
     )
@@ -4171,20 +4022,16 @@ def _q_stream_key_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_key_table_upsert,
     )
 
-    key_dir = (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"stream_key_{_source_token(sf_dir, 'events')}"
-    )
     # Guard on the completion marker, not mere table existence:
     # foreachBatch commits the key table per micro-batch, so an
     # interrupted ingest leaves a PARTIAL table that every later run
     # would otherwise read as an incomplete uid set.
-    if not _fixture_ready(key_dir):
-        stream_key_table_upsert(
+    key_dir = _fixture(
+        _fixture_path(sf_dir, "events", "stream_key"),
+        lambda key_dir: stream_key_table_upsert(
             read_events_stream(spark, sf_dir), key_dir, col="user_id"
-        )
-        os.makedirs(key_dir, exist_ok=True)
-        _mark_fixture_ready(key_dir)
+        ),
+    )
     return (
         load_key_table(spark, key_dir, "user_id")
         .select("user_id")
@@ -4266,10 +4113,16 @@ def _x5_pseudonym_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _x5_pseudonym_fixture_root(sf_dir: str) -> str:
-    return (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"uid_pseudonyms_{_source_token(sf_dir, 'customer')}"
+def _x5_pseudonyms_landed(spark: SparkSession, sf_dir: str) -> str:
+    """Land the (uid, pseudonym) mapping the x5_uid_pseudonym and
+    anonymization_fates oracles read, under ``<fixture>/map``."""
+    import os
+
+    return _fixture(
+        _fixture_path(sf_dir, "customer", "uid_pseudonyms"),
+        lambda root: _x5_pseudonym_map(spark, sf_dir).write.parquet(
+            os.path.join(root, "map")
+        ),
     )
 
 
@@ -4292,14 +4145,7 @@ def _q_x5_uid_pseudonym(spark: SparkSession, sf_dir: str) -> DataFrame:
     idempotence contract is separately oracle-backed
     (x5_idempotent_rerun). Reference semantics:
     reference/anonymize_datasets.py:60,74."""
-    import os
-
-    root = _x5_pseudonym_fixture_root(sf_dir)
-    if not _fixture_ready(root):
-        _x5_pseudonym_map(spark, sf_dir).write.mode("overwrite").parquet(
-            os.path.join(root, "map")
-        )
-        _mark_fixture_ready(root)
+    _x5_pseudonyms_landed(spark, sf_dir)
     return (
         _x5_pseudonym_map(spark, sf_dir)
         .withColumn("hex_len", F.length("pseudonym").cast("int"))
@@ -4310,9 +4156,7 @@ def _q_x5_uid_pseudonym(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _x5_pseudonym_oracle(sf_dir: str) -> str:
     """DuckDB twin for x5_uid_pseudonym: read the landed mapping and
     re-derive the shape invariants (see _q_x5_uid_pseudonym)."""
-    import os
-
-    glob = os.path.join(_x5_pseudonym_fixture_root(sf_dir), "map", "*.parquet")
+    glob = f"{_fixture_path(sf_dir, 'customer', 'uid_pseudonyms')}/map/*.parquet"
     return f"""
     SELECT c_custkey, pseudonym,
            CAST(length(pseudonym) AS INT) AS hex_len
@@ -4348,7 +4192,6 @@ def _q_x5_idempotent_rerun(spark: SparkSession, sf_dir: str) -> DataFrame:
     invalidate the first snapshot's plan, and the temp key dir is
     removed before returning. All outputs are scalar aggregates —
     the crossJoins are 1-row × 1-row."""
-    import shutil
     import tempfile
 
     from mape_calculation_and_anonymization_spark.operators.keys import (
@@ -4357,8 +4200,9 @@ def _q_x5_idempotent_rerun(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
-    key_dir = tempfile.mkdtemp(prefix="x5_idem_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="x5_idem_", ignore_cleanup_errors=True
+    ) as key_dir:
         uid_anonymization("c_custkey", cust, key_dir)  # run 1 (fresh)
         key1 = checkpoint(
             spark.read.parquet(key_table_path(key_dir, "c_custkey")),
@@ -4369,8 +4213,6 @@ def _q_x5_idempotent_rerun(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.read.parquet(key_table_path(key_dir, "c_custkey")),
             "query.x5_idempotent_rerun.key2",
         )
-    finally:
-        shutil.rmtree(key_dir, ignore_errors=True)
     a, b = key1.alias("a"), key2.alias("b")
     changed = (
         a.join(b, on="c_custkey", how="full_outer")
@@ -4446,8 +4288,6 @@ def _q_anonymization_fates(spark: SparkSession, sf_dir: str) -> DataFrame:
     table in SQL and reads pseudonyms from the landed x5 fixture
     (Class-B, golden-pinned in tests/test_anonymize.py), which this
     query lands marker-gated exactly like x5_uid_pseudonym."""
-    import os
-    import shutil
     import tempfile
     from datetime import datetime
 
@@ -4456,13 +4296,7 @@ def _q_anonymization_fates(spark: SparkSession, sf_dir: str) -> DataFrame:
         stamp_metadata,
     )
 
-    # land the pseudonym fixture for the oracle (marker-gated)
-    root = _x5_pseudonym_fixture_root(sf_dir)
-    if not _fixture_ready(root):
-        _x5_pseudonym_map(spark, sf_dir).write.mode("overwrite").parquet(
-            os.path.join(root, "map")
-        )
-        _mark_fixture_ready(root)
+    _x5_pseudonyms_landed(spark, sf_dir)  # the oracle's pseudonyms
 
     cust = load_table(spark, sf_dir, "customer")
     frame = cust.select(
@@ -4482,8 +4316,9 @@ def _q_anonymization_fates(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("uid"),
     ).withColumn("orig_label", F.col("CustomerCode"))
 
-    key_dir = tempfile.mkdtemp(prefix="anon_fates_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="anon_fates_", ignore_cleanup_errors=True
+    ) as key_dir:
         out = stamp_metadata(
             cdm_anonymization(frame, key_dir=key_dir),
             "America/New_York",
@@ -4492,8 +4327,6 @@ def _q_anonymization_fates(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the uid path's key-table write is the only materialized
         # state; force it before the key_dir is removed
         out = checkpoint(out, "query.anonymization_fates.out")
-    finally:
-        shutil.rmtree(key_dir, ignore_errors=True)
     return out.select(
         "row_id",
         F.col("customercode").alias("label_out"),
@@ -4525,9 +4358,7 @@ def _anonymization_fates_oracle(sf_dir: str) -> str:
     pseudonyms from the landed x5 fixture, perturbation and stamp as
     literals. Fates derive from (orig, out) with the same mechanical
     rules as the Spark side."""
-    import os
-
-    glob = os.path.join(_x5_pseudonym_fixture_root(sf_dir), "map", "*.parquet")
+    glob = f"{_fixture_path(sf_dir, 'customer', 'uid_pseudonyms')}/map/*.parquet"
     return f"""
     WITH src AS (
         SELECT c_custkey AS row_id,
@@ -7191,16 +7022,16 @@ def _q_stream_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_stream_to_parquet,
     )
 
-    sink_dir = (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"stream_sink_{_source_token(sf_dir, 'events')}"
+    sink_dir = _fixture(
+        _fixture_path(sf_dir, "events", "stream_sink"),
+        lambda sink_dir: run_stream_to_parquet(
+            read_events_stream(spark, sf_dir).select(
+                "event_id", "ts", "user_id", "event_type", "value"
+            ),
+            sink_dir,
+            shuffle_partitions=8,
+        ),
     )
-    if not _fixture_ready(sink_dir):
-        stream = read_events_stream(spark, sf_dir).select(
-            "event_id", "ts", "user_id", "event_type", "value"
-        )
-        run_stream_to_parquet(stream, sink_dir, shuffle_partitions=8)
-        _mark_fixture_ready(sink_dir)
     landed = spark.read.parquet(sink_dir)
     return landed.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -8684,7 +8515,7 @@ def _semantic_dedup_gated_oracle(sf_dir: str) -> str:
     routing CTEs off the landed k=48 centroid parquet, the gate
     fragment over documents, and the gated domination order —
     passing members first, then SemDeDup's (centroid_sim, id)."""
-    cells = _semantic_dedup_cells(sf_dir)
+    cells = f"{_fixture_path(sf_dir, 'embeddings', 'ivf_k48')}/cells/*.parquet"
     return f"""
     WITH base AS (SELECT doc_id, text FROM documents),
     g AS ({_quality_gates_sql()}),
@@ -9148,13 +8979,6 @@ _ANOMALY_ORACLE = """
 """
 
 
-def _evolving_fixture_path(sf_dir: str) -> str:
-    return (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"evolving_{_source_token(sf_dir, 'documents')}"
-    )
-
-
 def _q_s6_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S-family extension — schema-evolution read over an append-only
     lake dir: drop v1 (doc_id, lang) and a later, WIDER drop v2
@@ -9168,11 +8992,11 @@ def _q_s6_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_parquet_merged,
     )
 
-    path = _evolving_fixture_path(sf_dir)
     base = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    if not _fixture_ready(path):
+
+    def build(path: str) -> None:
         write_parquet_snappy(
             base.filter(F.col("doc_id") % 2 == 0).select("doc_id", "lang"),
             os.path.join(path, "drop=v1"),
@@ -9181,7 +9005,8 @@ def _q_s6_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             base.filter(F.col("doc_id") % 2 == 1),
             os.path.join(path, "drop=v2"),
         )
-        _mark_fixture_ready(path)
+
+    path = _fixture(_fixture_path(sf_dir, "documents", "evolving"), build)
     merged = read_parquet_merged(spark, path)
     return merged.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -9201,13 +9026,6 @@ _S6_ORACLE = """
 """
 
 
-def _compacted_fixture_path(sf_dir: str) -> str:
-    return (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"compacted_{_source_token(sf_dir, 'events')}"
-    )
-
-
 def _q_k4_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-family extension — small-file compaction: land an
     intentionally fragmented table (16 part files), compact it to 2
@@ -9222,19 +9040,19 @@ def _q_k4_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         compact_parquet,
     )
 
-    path = _compacted_fixture_path(sf_dir)
-    if not _fixture_ready(path):
+    def build(path: str) -> None:
         (
             load_events(spark, sf_dir)
             .select("event_id", "event_type", "value")
             .repartition(16)
-            .write.mode("overwrite")
+            .write
             .option("compression", "snappy")
             .parquet(path)
         )
         compact_parquet(spark, path, target_partitions=2)
         assert len(glob.glob(os.path.join(path, "part-*.parquet"))) <= 2
-        _mark_fixture_ready(path)
+
+    path = _fixture(_fixture_path(sf_dir, "events", "compacted"), build)
     df = spark.read.parquet(path)
     return df.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -9250,13 +9068,6 @@ _K4_ORACLE = """
 """
 
 
-def _versioned_fixture_path(sf_dir: str) -> str:
-    return (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"versioned_{_source_token(sf_dir, 'orders')}"
-    )
-
-
 def _q_k5_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-family extension — versioned snapshots with time travel
     (sinks.write_versioned / read_versioned): v0 is the orders price
@@ -9265,15 +9076,12 @@ def _q_k5_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     version's audit row. The manifest rename is the commit point, so
     a reader never sees a half-written snapshot. Oracle re-derives
     both versions' aggregates from the SOURCE table."""
-    import os
-
     from mape_calculation_and_anonymization_spark.sources.sinks import (
         read_versioned,
         write_versioned,
     )
 
-    path = _versioned_fixture_path(sf_dir)
-    if not _fixture_ready(path):
+    def build(path: str) -> None:
         v0 = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", F.round("o_totalprice", 2).alias("price")
         )
@@ -9287,7 +9095,8 @@ def _q_k5_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("price"),
         )
         write_versioned(v1, path)
-        _mark_fixture_ready(path)
+
+    path = _fixture(_fixture_path(sf_dir, "orders", "versioned"), build)
     out = []
     for v in (0, 1):
         out.append(
@@ -9313,13 +9122,6 @@ _K5_ORACLE = """
 """
 
 
-def _zorder_fixture_path(sf_dir: str) -> str:
-    return (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"zorder_{_source_token(sf_dir, 'events')}"
-    )
-
-
 def _q_k6_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-family extension — Z-ordered layout (operators/layout.py):
     events written clustered on the interleaved (user_id, day) Morton
@@ -9331,14 +9133,11 @@ def _q_k6_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate (span tightening pinned by the unit test); the oracle
     re-derives the filtered aggregate from the SOURCE table, proving
     the layout rewrite preserved content."""
-    import os
-
     from mape_calculation_and_anonymization_spark.operators.layout import (
         zorder_write_auto,
     )
 
-    path = _zorder_fixture_path(sf_dir)
-    if not _fixture_ready(path):
+    def build(path: str) -> None:
         ev = load_events(spark, sf_dir).select(
             "event_id",
             "user_id",
@@ -9350,7 +9149,8 @@ def _q_k6_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Morton dimension); equal-population bucketing keeps skipping
         # quality at ANY cardinality
         zorder_write_auto(ev, path, cols=["user_id", "day"], bits=8, n_files=8)
-        _mark_fixture_ready(path)
+
+    path = _fixture(_fixture_path(sf_dir, "events", "zorder"), build)
     df = spark.read.parquet(path).filter(F.col("user_id") < 15)
     return df.groupBy("day").agg(
         F.count(F.lit(1)).alias("n"),
@@ -9384,35 +9184,31 @@ def _sentinel_stream_fixture(spark: SparkSession, sf_dir: str) -> str:
     import shutil
     import time
 
-    path = (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"sentinel_stream_{_source_token(sf_dir, 'events')}"
-    )
-    all_dir = os.path.join(path, "all")
-    if _fixture_ready(path):
-        return all_dir
-    ev = load_events(spark, sf_dir).select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    ev.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "b1"))
-    mx = ev.agg(F.max("ts")).first()[0]
-    spark.createDataFrame(
-        [(-1, mx + datetime.timedelta(hours=6), -1, "sentinel", 0.0)],
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double",
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "b2"))
-    os.makedirs(all_dir)
-    for i, f in enumerate(
-        sorted(glob.glob(os.path.join(path, "b1", "part-*.parquet")))
-    ):
-        shutil.copy(f, os.path.join(all_dir, f"a{i}.parquet"))
-    time.sleep(1.1)  # mtime granularity: sentinel must sort strictly later
-    for i, f in enumerate(
-        sorted(glob.glob(os.path.join(path, "b2", "part-*.parquet")))
-    ):
-        shutil.copy(f, os.path.join(all_dir, f"b{i}.parquet"))
-    _mark_fixture_ready(path)
-    return all_dir
+    def build(path: str) -> None:
+        ev = load_events(spark, sf_dir).select(
+            "event_id", "ts", "user_id", "event_type", "value"
+        )
+        ev.coalesce(1).write.parquet(os.path.join(path, "b1"))
+        mx = ev.agg(F.max("ts")).first()[0]
+        spark.createDataFrame(
+            [(-1, mx + datetime.timedelta(hours=6), -1, "sentinel", 0.0)],
+            "event_id long, ts timestamp, user_id long, event_type string,"
+            " value double",
+        ).coalesce(1).write.parquet(os.path.join(path, "b2"))
+        all_dir = os.path.join(path, "all")
+        os.makedirs(all_dir)
+        for i, f in enumerate(
+            sorted(glob.glob(os.path.join(path, "b1", "part-*.parquet")))
+        ):
+            shutil.copy(f, os.path.join(all_dir, f"a{i}.parquet"))
+        time.sleep(1.1)  # mtime granularity: sentinel must sort strictly later
+        for i, f in enumerate(
+            sorted(glob.glob(os.path.join(path, "b2", "part-*.parquet")))
+        ):
+            shutil.copy(f, os.path.join(all_dir, f"b{i}.parquet"))
+
+    path = _fixture(_fixture_path(sf_dir, "events", "sentinel_stream"), build)
+    return os.path.join(path, "all")
 
 
 def _q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9741,17 +9537,17 @@ def _q_stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # OPERATOR's output). bench_reset removes only ``table`` so the
     # timed pass measures the drain, not a tiny parquet read. The
     # stream lists ``input/files``, so the input marker sits beside it.
-    root = _inc_agg_fixture_root(sf_dir)
-    inp, table = os.path.join(root, "input"), os.path.join(root, "table")
-    files = os.path.join(inp, "files")
-    if not _fixture_ready(inp):
+    root = _fixture_path(sf_dir, "events", "inc_agg")
+    files = os.path.join(root, "input", "files")
+
+    def land_input(inp: str) -> None:
         ev = load_events(spark, sf_dir).select(
             "event_id", "event_type", "value"
         )
         for tag, pred in (("h0", 0), ("h1", 1)):
-            ev.filter(F.col("event_id") % 2 == pred).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(inp, tag))
+            ev.filter(F.col("event_id") % 2 == pred).coalesce(1).write.parquet(
+                os.path.join(inp, tag)
+            )
         os.makedirs(files)
         for tag, prefix in (("h0", "a"), ("h1", "b")):
             for i, f in enumerate(
@@ -9759,8 +9555,8 @@ def _q_stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             ):
                 shutil.copy(f, os.path.join(files, f"{prefix}{i}.parquet"))
             time.sleep(1.1)  # mtime order fixes batch order
-        _mark_fixture_ready(inp)
-    if not _fixture_ready(table):
+
+    def drain(table: str) -> None:
         stream = (
             spark.readStream.schema(
                 "event_id long, event_type string, value double"
@@ -9770,7 +9566,9 @@ def _q_stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(files)
         )
         stream_incremental_agg(stream, table, key="event_type")
-        _mark_fixture_ready(table)
+
+    _fixture(os.path.join(root, "input"), land_input)
+    table = _fixture(os.path.join(root, "table"), drain)
     return spark.read.parquet(table).select(
         "event_type",
         "n_events",
@@ -10053,14 +9851,7 @@ def _pipeline_stages_shared(spark: SparkSession, sf_dir: str) -> dict:
         ngram_repetition_stats,
     )
 
-    root = (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        # v1 suffix = derivation-logic version (same rationale as
-        # _JACCARD_INDEX_VERSION: a semantics change must miss the
-        # cache, not silently serve value-stale stage tables)
-        f"pipeline_stages_v1_{_source_token(sf_dir, 'documents')}"
-    )
-    if not _fixture_ready(root):
+    def build(root: str) -> None:
         docs = ensure_min_partitions(
             load_table(spark, sf_dir, "documents").select("doc_id", "text")
         )
@@ -10071,7 +9862,7 @@ def _pipeline_stages_shared(spark: SparkSession, sf_dir: str) -> dict:
             "text",
             (language_id("text") == "en").alias("g_lang"),
             (F.round(quality_score("text"), 6) >= 0.4).alias("g_qual"),
-        ).write.mode("overwrite").parquet(os.path.join(root, "gated"))
+        ).write.parquet(os.path.join(root, "gated"))
         passing = spark.read.parquet(os.path.join(root, "gated")).filter(
             F.col("g_lang") & F.col("g_qual")
         )
@@ -10080,15 +9871,19 @@ def _pipeline_stages_shared(spark: SparkSession, sf_dir: str) -> dict:
             .filter(F.round("rep3", 6) < 0.2)
             .select("doc_id"),
             "doc_id",
-        ).select("doc_id", "text").write.mode("overwrite").parquet(
+        ).select("doc_id", "text").write.parquet(
             os.path.join(root, "survivors")
         )
         exact_dedup(
             spark.read.parquet(os.path.join(root, "survivors")),
             ["text"],
             "doc_id",
-        ).write.mode("overwrite").parquet(os.path.join(root, "unique"))
-        _mark_fixture_ready(root)
+        ).write.parquet(os.path.join(root, "unique"))
+
+    # v1 suffix = derivation-logic version (same rationale as
+    # _JACCARD_INDEX_VERSION: a semantics change must miss the cache,
+    # not silently serve value-stale stage tables)
+    root = _fixture(_fixture_path(sf_dir, "documents", "pipeline_stages_v1"), build)
     return {
         name: spark.read.parquet(os.path.join(root, name))
         for name in ("gated", "survivors", "unique")
@@ -10536,13 +10331,6 @@ _TOUCH_ATTRIBUTION_ORACLE = """
 """
 
 
-def _bpe_merges_fixture_root(sf_dir: str) -> str:
-    return (
-        f"/tmp/mape_spark_fixtures/{_fixture_sf_tag(sf_dir)}/"
-        f"bpe_merges12_{_source_token(sf_dir, 'documents')}"
-    )
-
-
 def _bpe_merges_cached(spark: SparkSession, sf_dir: str):
     """The trained 12-merge BPE list as a disk fixture (offline
     tokenizer training, the PQ-codebook posture: the artifact
@@ -10557,23 +10345,15 @@ def _bpe_merges_cached(spark: SparkSession, sf_dir: str):
         word_frequencies,
     )
 
-    root = _bpe_merges_fixture_root(sf_dir)
-    if not _fixture_ready(root):
+    def build(root: str) -> None:
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
         words = word_frequencies(docs, limit=2000)
-        bpe_merges_local(words, n_merges=12).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(root, "merges"))
-        _mark_fixture_ready(root)
+        bpe_merges_local(words, n_merges=12).coalesce(1).write.parquet(
+            os.path.join(root, "merges")
+        )
+
+    root = _fixture(_fixture_path(sf_dir, "documents", "bpe_merges12"), build)
     return spark.read.parquet(os.path.join(root, "merges"))
-
-
-def _bpe_merges_glob(sf_dir: str) -> str:
-    """Glob of the landed merge-list parts the bpe_token_stats oracle
-    reads (sf-keyed fixture path)."""
-    import os
-
-    return os.path.join(_bpe_merges_fixture_root(sf_dir), "merges", "*.parquet")
 
 
 def _q_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10614,7 +10394,7 @@ def _bpe_token_stats_oracle(sf_dir: str) -> str:
     Σ_m |word| ≈ merges × word length — bounded and tiny over the
     DISTINCT vocabulary. Everything is integer/string arithmetic:
     no cross-engine float surface at all."""
-    mg = _bpe_merges_glob(sf_dir)
+    mg = f"{_fixture_path(sf_dir, 'documents', 'bpe_merges12')}/merges/*.parquet"
     return rf"""
     WITH RECURSIVE merges AS (
         SELECT rank, "left" AS lft, "right" AS rgt
@@ -10873,26 +10653,12 @@ def _q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("vec_id")
 
 
-def _ivf_fixture_glob(sf_dir: str, n_clusters: int, part: str) -> str:
-    """Glob of one part (``cells`` or ``assigned``) of the IVF index
-    fixture — the on-disk artifacts the ANN-family oracles
-    read_parquet (sf-keyed like K2's sidecar: the path embeds the
-    source fingerprint, so a regenerated corpus re-derives both the
-    fixture and this path together)."""
-    import os
-
-    return os.path.join(_ivf_fixture_root(sf_dir, n_clusters), part, "*.parquet")
-
-
-def _semantic_dedup_cells(sf_dir: str = _ORACLE_SF_DIR) -> str:
-    """The k=48 centroid glob the semantic_dedup oracle reads."""
-    return _ivf_fixture_glob(sf_dir, 48, "cells")
 
 
 def _semantic_dedup_oracle(sf_dir: str) -> str:
     """DuckDB twin for semantic_dedup (VERDICT r11 item 3) — the
     rows-only→oracle upgrade. The centroid table is the OFFLINE
-    k-means artifact (a disk parquet under /tmp/mape_spark_fixtures,
+    k-means artifact (a disk parquet fixture under _FIXTURE_ROOT,
     the same fixture the Spark query routes against), so the oracle
     reads it with read_parquet — the K2-sidecar precedent: the one
     non-SQL ingredient enters as a query-side artifact, and the twin
@@ -10919,7 +10685,7 @@ def _semantic_dedup_oracle(sf_dir: str) -> str:
     summation rounding in the ROUTING leg is the only cross-engine
     risk, and only for exact centroid-distance ties — k-means
     centroids are far apart relative to 1e-13."""
-    cells = _semantic_dedup_cells(sf_dir)
+    cells = f"{_fixture_path(sf_dir, 'embeddings', 'ivf_k48')}/cells/*.parquet"
     return f"""
     WITH cents AS (
         SELECT cluster,
@@ -11032,7 +10798,7 @@ def _semantic_dedup_incremental_oracle(sf_dir: str) -> str:
     re-derived standing-only, then the frozen-standing rule — (a)
     kept-standing in-cell duplicate, (b) preceding-new in-cell
     duplicate — over the drop."""
-    cells = _semantic_dedup_cells(sf_dir)
+    cells = f"{_fixture_path(sf_dir, 'embeddings', 'ivf_k48')}/cells/*.parquet"
     return f"""
     WITH cents AS (
         SELECT cluster,

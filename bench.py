@@ -718,9 +718,7 @@ def main() -> None:
         # timed pass still runs the full route+dedup
         "semantic_dedup",
     ):
-        fn = entrymod.queries().get(name)
-        if fn is None:
-            continue
+        fn = entrymod.queries()[name]  # a renamed query fails loudly
         try:
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         except Exception:
@@ -746,8 +744,7 @@ def main() -> None:
     # ratio departs from its siblings', not a uniform scale shift.
     samples: dict[str, list[float]] = {}
     for _ in range(n_runs):
-        if hasattr(entrymod, "bench_reset"):
-            entrymod.bench_reset(sf_dir)
+        entrymod.bench_reset(sf_dir)
         for name, fn in entrymod.queries().items():
             # fn() is inside the timed region: streaming queries execute
             # during construction (AvailableNow into a memory sink), and

@@ -183,25 +183,25 @@ def _group_weights_unrounded(
 ) -> DataFrame:
     """Shared core of :func:`mixture_weights` and
     :func:`token_budget_allocation`: the |groups|-row frame with the
-    UNROUNDED share / pow / normalizer columns (``_share``, ``_pw``,
-    ``_z``) — callers project and round at their own precision, so the
-    weighting arithmetic lives in exactly one place."""
+    UNROUNDED total / share / pow / normalizer columns (``_n``,
+    ``_share``, ``_pw``, ``_z``) — callers project and round at their
+    own precision, so the weighting arithmetic lives in exactly one
+    place. The corpus is aggregated once; the total and the normalizer
+    are window sums over the |groups| rows of that one aggregate."""
     n = (
         F.sum(count_col).alias(count_alias)
         if count_col
         else F.count(F.lit(1)).alias(count_alias)
     )
-    counts = df.groupBy(group_col).agg(n)
-    total = counts.agg(F.sum(count_alias).cast("double").alias("_n"))
-    s = (
-        counts.join(F.broadcast(total))
-        .withColumn(
-            "_share", F.col(count_alias).cast("double") / F.col("_n")
-        )
+    every = Window.partitionBy()
+    return (
+        df.groupBy(group_col)
+        .agg(n)
+        .withColumn("_n", F.sum(count_alias).over(every).cast("double"))
+        .withColumn("_share", F.col(count_alias).cast("double") / F.col("_n"))
         .withColumn("_pw", F.pow("_share", F.lit(float(alpha))))
+        .withColumn("_z", F.sum("_pw").over(every))
     )
-    z = s.agg(F.sum("_pw").alias("_z"))
-    return s.join(F.broadcast(z))
 
 
 def mixture_weights(
@@ -222,8 +222,8 @@ def mixture_weights(
 
     Scale shape: one map-side-combinable count aggregate collapses
     the corpus to |groups| rows; everything after is arithmetic over
-    that answer-sized frame (two scalar broadcasts, zero extra passes
-    over the data)."""
+    that answer-sized frame (two window sums over the |groups| rows,
+    zero extra passes over the data)."""
     s = _group_weights_unrounded(df, group_col, alpha, count_col, "n_docs")
     return s.select(
         group_col,

@@ -22,10 +22,15 @@ def physical_plan(df: DataFrame) -> str:
 
 
 def count_exchanges(df: DataFrame) -> int:
-    """Number of shuffle exchanges (excludes broadcast exchanges and
-    AQE reuse markers)."""
-    plan = physical_plan(df)
-    return len(re.findall(r"^\s*\+?-?\s*Exchange (?:hash|range|Single)", plan, re.M))
+    """Number of shuffle Exchange nodes (hashpartitioning,
+    rangepartitioning, SinglePartition, RoundRobinPartitioning, ...),
+    at any depth of the tree, including under a ``:``-prefixed join
+    branch. Line-anchored on the tree-drawing prefix, so a
+    BroadcastExchange is excluded and a ReusedExchange node's inline
+    reprint of its referenced exchange ("ReusedExchange [...],
+    Exchange hashpartitioning(...)") is not counted again: a reused
+    shuffle is paid once."""
+    return len(re.findall(r"^[\s+:|-]*Exchange \w+", physical_plan(df), re.M))
 
 
 def count_nodes(df: DataFrame, node: str) -> int:

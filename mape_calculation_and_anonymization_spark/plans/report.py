@@ -13,22 +13,16 @@ from __future__ import annotations
 
 import re
 
-from mape_calculation_and_anonymization_spark.plans.audit import physical_plan
+from mape_calculation_and_anonymization_spark.plans.audit import (
+    count_exchanges,
+    physical_plan,
+)
 
 
 def audit_query(df) -> dict:
     plan = physical_plan(df)
     return {
-        # any shuffle Exchange node (hashpartitioning, rangepartitioning,
-        # SinglePartition, RoundRobinPartitioning from repartition/
-        # ensure_min_partitions, ...). Line-anchored on the tree-drawing
-        # prefix so BroadcastExchange is excluded AND a ReusedExchange
-        # node's inline reprint of its referenced exchange
-        # ("ReusedExchange [...], Exchange hashpartitioning(...)") is
-        # not double-counted — a reused shuffle is paid once.
-        "exchanges": len(
-            re.findall(r"^[\s+:|-]*Exchange \w+", plan, re.M)
-        ),
+        "exchanges": count_exchanges(df),
         "broadcasts": plan.count("BroadcastExchange"),
         "cartesian": "CartesianProduct" in plan,
         "bnlj": "BroadcastNestedLoopJoin" in plan,

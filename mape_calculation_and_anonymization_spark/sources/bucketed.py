@@ -6,8 +6,8 @@ sides. Hive-style bucketing pays that shuffle ONCE at write time —
 join or groupBy on the bucket key reads co-located buckets and Catalyst
 drops the Exchange entirely (both sides report the same
 HashPartitioning output partitioning). This module wraps the write
-path and a helper that proves the plan shape; tests/test_plans.py
-asserts the no-Exchange guarantee.
+path and the co-located join; tests/test_bucketed.py asserts the
+no-Exchange guarantee with ``plans.count_exchanges``.
 
 The reference has no analogue (single-node pandas); this is pure scale
 surface. Bucket-count guidance: pick `n_buckets` so one bucket of the
@@ -71,13 +71,3 @@ def bucketed_join(
     plan contains NO Exchange (verify: ``df.explain()``)."""
     return spark.table(left_table).join(spark.table(right_table), on=on)
 
-
-def exchange_count(df: DataFrame) -> int:
-    """Number of shuffle Exchange operators in the executed plan —
-    the metric the bucketing tests pin to zero."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return sum(
-        1
-        for line in plan.splitlines()
-        if "Exchange hashpartitioning" in line or "Exchange rangepartitioning" in line
-    )

@@ -8,7 +8,7 @@ that changes iff something its result could depend on changed:
   * the query function's own source, and the source of every
     entry-file helper reachable from it (transitive closure over the
     entry file's top-level def graph — ``_q_dedup_clusters`` reaches
-    ``_jaccard_index`` reaches ``_fixture_ready`` ...);
+    ``_jaccard_index`` reaches ``_fixture`` ...);
   * its oracle SQL string (absent for rows-only queries);
   * the file hash of every package module the closure references —
     via module-level ``from mape_calculation_and_anonymization_spark.X

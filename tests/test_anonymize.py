@@ -173,7 +173,7 @@ def test_x5_pseudonym_fixture_matches_live(spark):
     sf_dir = "/root/testdata/sf0.001"
     live = e._q_x5_uid_pseudonym(spark, sf_dir)  # builds fixture on first touch
     landed = spark.read.parquet(
-        os.path.join(e._x5_pseudonym_fixture_root(sf_dir), "map")
+        os.path.join(e._fixture_path(sf_dir, "customer", "uid_pseudonyms"), "map")
     )
     live_rows = {
         r["c_custkey"]: r["pseudonym"] for r in live.collect()

@@ -6,9 +6,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from mape_calculation_and_anonymization_spark.fixtures import load_table
+from mape_calculation_and_anonymization_spark.plans import count_exchanges
 from mape_calculation_and_anonymization_spark.sources.bucketed import (
     bucketed_join,
-    exchange_count,
 )
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -38,7 +38,7 @@ def bucketed_tables(spark, tmp_path_factory):
 def test_bucketed_join_no_exchange(spark, bucketed_tables):
     left, right = bucketed_tables
     joined = bucketed_join(spark, left, right, on="o_custkey")
-    assert exchange_count(joined) == 0
+    assert count_exchanges(joined) == 0
     # row parity with the plain (shuffling) join
     plain = load_table(spark, SF_DIR, "orders").join(
         load_table(spark, SF_DIR, "customer").withColumnRenamed(
@@ -80,7 +80,7 @@ def test_bucketed_agg_no_exchange(spark, bucketed_tables):
         .groupBy("o_custkey")
         .agg(F.sum("o_totalprice").alias("total"))
     )
-    assert exchange_count(agg) == 0
+    assert count_exchanges(agg) == 0
     assert agg.count() == spark.table(left).select("o_custkey").distinct().count()
 
 

@@ -106,12 +106,12 @@ ALLOWLIST = {
         "(the reference's xlsx surface is driver-side by nature)",
     ),
     ("__spark_entry__.py", "toPandas"): (
-        {"_q_k2_excel_sheets": 1},
+        {"_q_k2_excel_sheets.build": 1},
         "daily MAPE report frame (days x zones, dimension-sized) "
         "feeding the Excel sink query",
     ),
     ("__spark_entry__.py", "first"): (
-        {"_sentinel_stream_fixture": 1},
+        {"_sentinel_stream_fixture.build": 1},
         "MAX(ts) scalar for the sentinel stream fixture",
     ),
 }

@@ -1,11 +1,12 @@
-"""Cross-process fixture build lock: concurrent sessions sharing
-/tmp/mape_spark_fixtures (bench + pytest) must not wipe each other's
-in-progress builds. ``_fixture_ready`` returning False holds an
-exclusive ``flock`` on ``<path>.lock`` until the matching
-``_mark_fixture_ready``; racers wait, then observe ``_COMPLETE`` and
-reuse the finished fixture. The kernel releases the lock of a holder
-that dies. No SparkSession needed — the guard is pure filesystem."""
+"""Cross-process fixture build lock: concurrent sessions sharing the
+fixture root (bench + pytest) must not wipe each other's in-progress
+builds. ``_fixture(path, build)`` holds an exclusive ``flock`` on
+``<path>.lock`` while ``build`` runs and releases it on every exit
+path; racers wait, then observe ``_COMPLETE`` and reuse the finished
+fixture. The kernel releases the lock of a holder that dies. No
+SparkSession needed — the guard is pure filesystem."""
 
+import ast
 import fcntl
 import multiprocessing
 import os
@@ -30,18 +31,37 @@ def _lock_is_free(path):
     return True
 
 
+def _fds_open_on(path):
+    """This process's open file descriptors that point at ``path``."""
+    target = os.path.realpath(path)
+    fds = []
+    for fd in os.listdir("/proc/self/fd"):
+        try:
+            if os.readlink(f"/proc/self/fd/{fd}") == target:
+                fds.append(fd)
+        except OSError:  # the descriptor listdir itself used
+            pass
+    return fds
+
+
+def _never(path):
+    raise AssertionError(f"{path} was rebuilt although it is complete")
+
+
 def _racer(path, build_sleep, q):
     import __spark_entry__ as e
 
-    if not e._fixture_ready(path):
-        os.makedirs(path, exist_ok=True)
+    built = []
+
+    def build(p):
+        os.makedirs(p)
         time.sleep(build_sleep)  # widen the race window
-        with open(os.path.join(path, "data"), "w") as fh:
+        with open(os.path.join(p, "data"), "w") as fh:
             fh.write("built\n")
-        e._mark_fixture_ready(path)
-        q.put("built")
-    else:
-        q.put("reused")
+        built.append(p)
+
+    assert e._fixture(path, build) == path
+    q.put("built" if built else "reused")
 
 
 def _race(path, n):
@@ -72,28 +92,37 @@ def test_half_build_is_wiped_and_lock_cycle_is_reentrant(tmp_path):
     os.makedirs(path)
     with open(os.path.join(path, "partial"), "w") as fh:
         fh.write("junk\n")
-    assert entrymod._fixture_ready(path) is False
-    assert not os.path.exists(os.path.join(path, "partial"))  # wiped
-    assert not _lock_is_free(path)  # build lock held
-    # same-process retry after a failed build must not self-deadlock
-    assert entrymod._fixture_ready(path) is False
-    os.makedirs(path, exist_ok=True)
-    entrymod._mark_fixture_ready(path)
+
+    def failing(p):
+        assert not os.path.exists(os.path.join(p, "partial"))  # wiped
+        assert not _lock_is_free(p)  # build lock held
+        os.makedirs(p)
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError):
+        entrymod._fixture(path, failing)
+    assert not os.path.exists(path)  # the failed build is wiped too
     assert _lock_is_free(path)
-    assert entrymod._fixture_ready(path) is True
+    # same-process retry after a failed build must not self-deadlock;
+    # a build that makes no directory still gets one for its marker
+    assert entrymod._fixture(path, lambda p: None) == path
+    assert _lock_is_free(path)
+    assert os.path.exists(os.path.join(path, "_COMPLETE"))
+    assert entrymod._fixture(path, _never) == path
 
 
 def _holder(path, held, done):
     """Take the build lock, leave a partial build, and wait."""
     import __spark_entry__ as e
 
-    assert e._fixture_ready(path) is False
-    os.makedirs(path)
-    with open(os.path.join(path, "partial"), "w") as fh:
-        fh.write("junk\n")
-    held.set()
-    done.wait(60)
-    e._mark_fixture_ready(path)
+    def build(p):
+        os.makedirs(p)
+        with open(os.path.join(p, "partial"), "w") as fh:
+            fh.write("junk\n")
+        held.set()
+        done.wait(60)
+
+    e._fixture(path, build)
 
 
 def _kill_holder_mid_build(path):
@@ -114,15 +143,17 @@ def test_stale_lock_from_crashed_holder_is_broken(tmp_path):
     the partial files before rebuilding."""
     path = str(tmp_path / "fx3")
     _kill_holder_mid_build(path)
+
+    def build(p):
+        assert not os.path.exists(os.path.join(p, "partial"))
+        assert not _lock_is_free(p)  # the new builder holds it
+        os.makedirs(p)
+
     t0 = time.monotonic()
-    assert entrymod._fixture_ready(path) is False
+    entrymod._fixture(path, build)
     assert time.monotonic() - t0 < 5
-    assert not os.path.exists(os.path.join(path, "partial"))
-    assert not _lock_is_free(path)  # the new builder holds it
-    os.makedirs(path, exist_ok=True)
-    entrymod._mark_fixture_ready(path)
     assert _lock_is_free(path)
-    assert entrymod._fixture_ready(path) is True
+    assert entrymod._fixture(path, _never) == path
 
 
 def test_concurrent_stale_break_is_atomic(tmp_path):
@@ -152,8 +183,8 @@ def test_stale_aged_lock_with_live_holder_is_not_broken(
         os.utime(path + ".lock", (old, old))
         monkeypatch.setattr(entrymod, "_FIXTURE_LOCK_WAIT_S", 0.5)
         with pytest.raises(TimeoutError):
-            entrymod._fixture_ready(path)
-        assert path not in entrymod._FIXTURE_BUILD_LOCKS
+            entrymod._fixture(path, _never)
+        assert _fds_open_on(path + ".lock") == []
         assert not _lock_is_free(path)
         assert os.path.exists(os.path.join(path, "partial"))
     finally:
@@ -161,25 +192,68 @@ def test_stale_aged_lock_with_live_holder_is_not_broken(
         child.join(30)
     assert child.exitcode == 0
     assert _lock_is_free(path)
-    assert entrymod._fixture_ready(path) is True
+    assert entrymod._fixture(path, _never) == path
+
+
+def _failing_builder(path, failed, done):
+    """A session whose build raises, and which then carries on."""
+    import __spark_entry__ as e
+
+    def build(p):
+        os.makedirs(p)
+        with open(os.path.join(p, "partial"), "w") as fh:
+            fh.write("junk\n")
+        raise RuntimeError("build failed")
+
+    try:
+        e._fixture(path, build)
+    except RuntimeError:
+        failed.set()
+    done.wait(60)
+
+
+def test_failed_build_releases_the_lock_in_a_live_session(
+    tmp_path, monkeypatch
+):
+    """A build that raises gives its lock back at once: a live
+    session that failed does not make the next session wait for the
+    whole _FIXTURE_LOCK_WAIT_S (3600 s in production)."""
+    path = str(tmp_path / "fx6")
+    failed, done = multiprocessing.Event(), multiprocessing.Event()
+    child = multiprocessing.Process(
+        target=_failing_builder, args=(path, failed, done)
+    )
+    child.start()
+    try:
+        assert failed.wait(30)
+        assert child.is_alive()
+        monkeypatch.setattr(entrymod, "_FIXTURE_LOCK_WAIT_S", 5.0)
+        t0 = time.monotonic()
+        entrymod._fixture(path, lambda p: os.makedirs(p))
+        assert time.monotonic() - t0 < 5
+        assert not os.path.exists(os.path.join(path, "partial"))
+        assert os.path.exists(os.path.join(path, "_COMPLETE"))
+    finally:
+        done.set()
+        child.join(30)
+    assert child.exitcode == 0
+
+
+def _entry_tree():
+    with open(entrymod.__file__) as fh:
+        return ast.parse(fh.read())
 
 
 def test_every_marker_gated_fixture_uses_the_one_guard():
     """One fixture protocol: no string naming a completion marker
-    appears in the entry file outside _fixture_ready and
-    _mark_fixture_ready, so no fixture gates on a marker of its own
-    that bypasses the build lock."""
-    import ast
-
-    with open(entrymod.__file__) as fh:
-        tree = ast.parse(fh.read())
+    appears in the entry file outside _fixture, so no fixture gates on
+    a marker of its own that bypasses the build lock."""
+    tree = _entry_tree()
     guard = set()
     for node in tree.body:
-        if isinstance(node, ast.FunctionDef) and node.name in (
-            "_fixture_ready",
-            "_mark_fixture_ready",
-        ):
+        if isinstance(node, ast.FunctionDef) and node.name == "_fixture":
             guard.update(id(n) for n in ast.walk(node))
+    assert guard
     stray = [
         (node.lineno, node.value)
         for node in ast.walk(tree)
@@ -189,3 +263,28 @@ def test_every_marker_gated_fixture_uses_the_one_guard():
         and id(node) not in guard
     ]
     assert stray == []
+
+
+def test_one_fixture_root_and_no_unguarded_publish():
+    """Every fixture path derives from the one root constant, and no
+    fixture is published by a tmp write plus ``os.replace`` beside the
+    guard."""
+    tree = _entry_tree()
+    roots = [
+        (node.lineno, node.value)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and "mape_spark_fixtures" in node.value
+    ]
+    assert len(roots) == 1, roots
+    replaces = [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "replace"
+        and isinstance(node.func.value, ast.Name)
+        and node.func.value.id == "os"
+    ]
+    assert replaces == []

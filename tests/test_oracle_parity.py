@@ -79,51 +79,27 @@ def test_oracle_sf_contract():
     #    never diverge regardless of the sf the fixture was written at;
     #  - sf-keyed path bound to _ORACLE_SF_DIR (k2) — safe exactly
     #    because the driver contract pins oracle runs to that sf.
+    sf = entrymod._ORACLE_SF_DIR
+    fixture = entrymod._fixture_path
     allowed = {
         "s1_csv_scan": entrymod._CSV_FIXTURE,
         "s3_latest_partition": entrymod._PARTITIONED_FIXTURE,
         "s5_jsonl_scan": entrymod._JSONL_FIXTURE,
         "s4_folder_loop": entrymod._MIXED_FOLDER_FIXTURE,
-        "k2_excel_sheets": entrymod._k2_workbook_path(entrymod._ORACLE_SF_DIR),
-        "semantic_dedup": entrymod._semantic_dedup_cells(
-            entrymod._ORACLE_SF_DIR
-        ),
-        "pq_ann_topk": entrymod._pq_codebook_parquet_path(
-            entrymod._ORACLE_SF_DIR
-        ),
-        "ivf_pq_ann_topk": entrymod._ivf_fixture_glob(
-            entrymod._ORACLE_SF_DIR, 16, "assigned"
-        ),
-        "ann_recall_eval": entrymod._ivf_fixture_glob(
-            entrymod._ORACLE_SF_DIR, 8, "assigned"
-        ),
-        "dedup_minhash_pairs": entrymod._minhash_sigs_glob(
-            entrymod._ORACLE_SF_DIR
-        ),
-        "minhash_incremental": entrymod._minhash_sigs_glob(
-            entrymod._ORACLE_SF_DIR
-        ),
-        "stream_minhash_pairs": entrymod._minhash_sigs_glob(
-            entrymod._ORACLE_SF_DIR
-        ),
-        "semantic_dedup_gated": entrymod._semantic_dedup_cells(
-            entrymod._ORACLE_SF_DIR
-        ),
-        "semantic_dedup_incremental": entrymod._semantic_dedup_cells(
-            entrymod._ORACLE_SF_DIR
-        ),
-        "dedup_simhash_pairs": entrymod._simhash_sigs_glob(
-            entrymod._ORACLE_SF_DIR
-        ),
-        "bpe_token_stats": entrymod._bpe_merges_glob(
-            entrymod._ORACLE_SF_DIR
-        ),
-        "x5_uid_pseudonym": entrymod._x5_pseudonym_fixture_root(
-            entrymod._ORACLE_SF_DIR
-        ),
-        "anonymization_fates": entrymod._x5_pseudonym_fixture_root(
-            entrymod._ORACLE_SF_DIR
-        ),
+        "k2_excel_sheets": fixture(sf, "events", "mape_report"),
+        "semantic_dedup": fixture(sf, "embeddings", "ivf_k48"),
+        "pq_ann_topk": fixture(sf, "embeddings", "pq_codebooks"),
+        "ivf_pq_ann_topk": fixture(sf, "embeddings", "ivf_k16"),
+        "ann_recall_eval": fixture(sf, "embeddings", "ivf_k8"),
+        "dedup_minhash_pairs": fixture(sf, "documents", "minhash_sigs"),
+        "minhash_incremental": fixture(sf, "documents", "minhash_sigs"),
+        "stream_minhash_pairs": fixture(sf, "documents", "minhash_sigs"),
+        "semantic_dedup_gated": fixture(sf, "embeddings", "ivf_k48"),
+        "semantic_dedup_incremental": fixture(sf, "embeddings", "ivf_k48"),
+        "dedup_simhash_pairs": fixture(sf, "documents", "simhash_sigs"),
+        "bpe_token_stats": fixture(sf, "documents", "bpe_merges12"),
+        "x5_uid_pseudonym": fixture(sf, "customer", "uid_pseudonyms"),
+        "anonymization_fates": fixture(sf, "customer", "uid_pseudonyms"),
     }
     for name, sql in _ORACLES.items():
         if name in allowed:
@@ -247,16 +223,24 @@ def test_rotation_hygiene():
 def test_fixture_ready_wipes_incomplete(tmp_path):
     """Crash-idempotence contract of the fixture guard: a dir without
     the completion marker is a half-build — wiped and rebuilt; a
-    marked dir is trusted."""
+    marked dir is trusted. A plain file at the path (an older layout)
+    is a half-build too."""
+    import os
+
     d = tmp_path / "fix"
     d.mkdir()
     (d / "part-0.parquet").write_text("partial")
-    assert entrymod._fixture_ready(str(d)) is False
-    assert not d.exists()  # half-build wiped
-    d.mkdir()
-    entrymod._mark_fixture_ready(str(d))
-    assert entrymod._fixture_ready(str(d)) is True
-    assert (d / "part-0.parquet").exists() is False  # only the marker
+    seen = []
+    entrymod._fixture(str(d), lambda p: seen.append(os.path.exists(p)))
+    assert seen == [False]  # half-build wiped before the build ran
+    assert sorted(os.listdir(d)) == ["_COMPLETE"]  # only the marker
+    entrymod._fixture(str(d), seen.append)
+    assert seen == [False]  # a marked dir is trusted, never rebuilt
+    f = tmp_path / "events.csv"
+    f.write_text("old layout")
+    entrymod._fixture(str(f), lambda p: seen.append(os.path.exists(p)))
+    assert seen == [False, False]
+    assert sorted(os.listdir(f)) == ["_COMPLETE"]
 
 
 def test_s3_torn_partition_fixture_is_rebuilt(spark, tmp_path, monkeypatch):
@@ -279,14 +263,12 @@ def test_bench_reset_removes_only_the_drained_table():
     import shutil
 
     sf = "/root/testdata/sf0.001"
-    root = entrymod._inc_agg_fixture_root(sf)
+    root = entrymod._fixture_path(sf, "events", "inc_agg")
     table, inp = os.path.join(root, "table"), os.path.join(root, "input")
     shutil.rmtree(root, ignore_errors=True)
     try:
-        os.makedirs(table)
-        os.makedirs(os.path.join(inp, "files"))
-        entrymod._mark_fixture_ready(table)
-        entrymod._mark_fixture_ready(inp)
+        entrymod._fixture(table, os.makedirs)
+        entrymod._fixture(inp, lambda p: os.makedirs(os.path.join(p, "files")))
         entrymod.bench_reset(sf)
         assert not os.path.exists(table)  # with its marker inside
         assert os.path.isdir(os.path.join(inp, "files"))

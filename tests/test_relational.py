@@ -72,9 +72,11 @@ def test_k1_fixture_keyed_by_scale_factor(spark):
     assert entrymod._k1_fixture_path("/root/testdata/sf0.001") != (
         entrymod._k1_fixture_path("/root/testdata/sf0.01")
     )
-    assert entrymod._k2_workbook_path("/root/testdata/sf0.001") != (
-        entrymod._k2_workbook_path("/root/testdata/sf0.01")
-    )
+    report = [
+        entrymod._fixture_path(sf, "events", "mape_report")
+        for sf in (entrymod.SF0001, entrymod._ORACLE_SF_DIR)
+    ]
+    assert report[0] != report[1]
     n_small = (
         entrymod._q_k1_parquet_roundtrip(spark, "/root/testdata/sf0.001")
         .agg(F.sum("n_suppliers"))
