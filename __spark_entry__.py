@@ -3088,9 +3088,7 @@ def _q_k8_targeted_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         # hash-partition on the erasure key so one user's rows live in
         # exactly one file — the layout that makes the delete's file
         # pruning real (a row-random layout would touch every file)
-        ev.repartition(8, "user_id").write.option(
-            "compression", "snappy"
-        ).parquet(path)
+        write_parquet_snappy(ev.repartition(8, "user_id"), path)
         keys = (
             spark.read.parquet(path)
             .filter(F.col("user_id") % 997 == 3)
@@ -4188,9 +4186,9 @@ def _q_x5_idempotent_rerun(spark: SparkSession, sf_dir: str) -> DataFrame:
         key count is ~1e-6).
 
     The key tables are dimension-sized; both snapshots are eagerly
-    localCheckpointed so the second run's atomic table swap cannot
-    invalidate the first snapshot's plan, and the temp key dir is
-    removed before returning. All outputs are scalar aggregates —
+    localCheckpointed so neither plan reads the temp key dir, which is
+    removed before returning (the rerun finds no new uid and leaves
+    the table's files untouched). All outputs are scalar aggregates —
     the crossJoins are 1-row × 1-row."""
     import tempfile
 
@@ -9041,13 +9039,11 @@ def _q_k4_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def build(path: str) -> None:
-        (
+        write_parquet_snappy(
             load_events(spark, sf_dir)
             .select("event_id", "event_type", "value")
-            .repartition(16)
-            .write
-            .option("compression", "snappy")
-            .parquet(path)
+            .repartition(16),
+            path,
         )
         compact_parquet(spark, path, target_partitions=2)
         assert len(glob.glob(os.path.join(path, "part-*.parquet"))) <= 2
@@ -9518,7 +9514,7 @@ def _q_stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     TWO micro-batches (event_id-parity split files, rate-limited to
     one file per trigger), and foreachBatch folds each batch's partial
     (count, sum) per event type into a running parquet aggregate via
-    full-outer merge + atomic swap
+    full-outer merge + ``replace_dir`` swap
     (streaming/upsert.py:merge_partial_aggregate). After the drain the
     table must equal the batch aggregate over ALL events — which is
     exactly what the oracle recomputes; both merges carry data, so a

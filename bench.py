@@ -552,6 +552,54 @@ def run_scale_stress(spark, sf_dir: str, factor: int = STRESS_FACTOR) -> dict:
     return results
 
 
+# Fixture-writing queries build on-disk state (CSV/JSONL exports,
+# key tables, workbooks, versioned/z-ordered/compacted dirs) on
+# their FIRST run per (sf, source-fingerprint) and read it back on
+# every later run. The fixture is the query's INPUT — like the
+# testdata itself — so construction belongs in setup, not in the
+# timed region; main() pre-builds these at the TARGET sf. One exception:
+# stream_incremental_agg's fixture TABLE is the query's output
+# (the drained materialized view), so after the pre-build we
+# reset exactly that table (entrymod.bench_reset) and the timed
+# pass re-runs the drain. Every other query recomputes fully in
+# the timed pass.
+# the three ANN entries are here for their INDEX fixtures (PQ
+# codebooks + IVF cells — offline index builds whose artifacts
+# outlive queries); their timed pass still runs the full search.
+# tests/test_fixture_lock.py checks that these reach every fixture.
+PREBUILD_QUERIES = (
+    "s1_csv_scan", "s3_latest_partition", "s5_jsonl_scan",
+    "s6_schema_evolution", "k1_parquet_roundtrip", "k2_excel_sheets",
+    "k4_compaction_roundtrip", "k5_time_travel", "k6_zorder_scan",
+    "k7_orc_roundtrip",
+    "stream_key_upsert", "stream_parquet_sink", "stream_outer_join",
+    "stream_incremental_agg", "pq_ann_topk", "ivf_ann_topk",
+    "ivf_pq_ann_topk", "dedup_minhash_pairs", "k8_targeted_delete",
+    # dedup_simhash_pairs lands its blake2b signature fixture on
+    # first touch (round 13 — same offline-index posture as the
+    # minhash signatures); the timed pass is banding + verify
+    "dedup_simhash_pairs",
+    # x5_uid_pseudonym lands its (uid, pseudonym) mapping fixture
+    # on first touch (round 14 Class-B oracle — the oracle-side
+    # artifact); its timed pass recomputes every digest live
+    "x5_uid_pseudonym",
+    # dedup_clusters builds the shingle-table fixture AND the
+    # near-dup index (verified pairs + cluster map) on first
+    # touch; pipeline_funnel_stats lands the per-stage pipeline
+    # tables — offline artifacts consumed as stage INPUTS by the
+    # dedup family (each query re-runs its OWN stage live in the
+    # timed pass — ADVICE r8: no query returns a bare read of its
+    # own precomputed output)
+    "dedup_clusters", "pipeline_funnel_stats",
+    # semantic_dedup routes against the k=48 coarse-index fixture
+    # (offline artifact, like the other ANN index builds); its
+    # timed pass still runs the full route+dedup
+    "semantic_dedup",
+    "bpe_token_stats", "ivf_incremental_topk", "stream_minhash_pairs",
+    "s4_folder_loop",
+)
+
+
 def _git_head() -> str:
     import subprocess
 
@@ -675,49 +723,7 @@ def main() -> None:
                     spark.catalog.dropTempView(tbl.name)
             gc.collect()
 
-    # Fixture-writing queries build on-disk state (CSV/JSONL exports,
-    # key tables, workbooks, versioned/z-ordered/compacted dirs) on
-    # their FIRST run per (sf, source-fingerprint) and read it back on
-    # every later run. The fixture is the query's INPUT — like the
-    # testdata itself — so construction belongs in setup, not in the
-    # timed region; pre-build at the TARGET sf here. One exception:
-    # stream_incremental_agg's fixture TABLE is the query's output
-    # (the drained materialized view), so after the pre-build we
-    # reset exactly that table (entrymod.bench_reset) and the timed
-    # pass re-runs the drain. Every other query recomputes fully in
-    # the timed pass.
-    # the three ANN entries are here for their INDEX fixtures (PQ
-    # codebooks + IVF cells — offline index builds whose artifacts
-    # outlive queries); their timed pass still runs the full search
-    for name in (
-        "s1_csv_scan", "s3_latest_partition", "s5_jsonl_scan",
-        "s6_schema_evolution", "k1_parquet_roundtrip", "k2_excel_sheets",
-        "k4_compaction_roundtrip", "k5_time_travel", "k6_zorder_scan",
-        "k7_orc_roundtrip",
-        "stream_key_upsert", "stream_parquet_sink", "stream_outer_join",
-        "stream_incremental_agg", "pq_ann_topk", "ivf_ann_topk",
-        "ivf_pq_ann_topk", "dedup_minhash_pairs", "k8_targeted_delete",
-        # dedup_simhash_pairs lands its blake2b signature fixture on
-        # first touch (round 13 — same offline-index posture as the
-        # minhash signatures); the timed pass is banding + verify
-        "dedup_simhash_pairs",
-        # x5_uid_pseudonym lands its (uid, pseudonym) mapping fixture
-        # on first touch (round 14 Class-B oracle — the oracle-side
-        # artifact); its timed pass recomputes every digest live
-        "x5_uid_pseudonym",
-        # dedup_clusters builds the shingle-table fixture AND the
-        # near-dup index (verified pairs + cluster map) on first
-        # touch; pipeline_funnel_stats lands the per-stage pipeline
-        # tables — offline artifacts consumed as stage INPUTS by the
-        # dedup family (each query re-runs its OWN stage live in the
-        # timed pass — ADVICE r8: no query returns a bare read of its
-        # own precomputed output)
-        "dedup_clusters", "pipeline_funnel_stats",
-        # semantic_dedup routes against the k=48 coarse-index fixture
-        # (offline artifact, like the other ANN index builds); its
-        # timed pass still runs the full route+dedup
-        "semantic_dedup",
-    ):
+    for name in PREBUILD_QUERIES:
         fn = entrymod.queries()[name]  # a renamed query fails loudly
         try:
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()

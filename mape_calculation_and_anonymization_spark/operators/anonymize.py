@@ -33,6 +33,7 @@ from mape_calculation_and_anonymization_spark.sources.readers import (
 )
 from mape_calculation_and_anonymization_spark.sources.sinks import (
     anonymized_output_name,
+    write_parquet_snappy,
 )
 
 # Column-name universes, verbatim from reference/anonymize_datasets.py:118-120.
@@ -158,6 +159,6 @@ def anonymize_files(
         out_path = os.path.join(
             output_directory, anonymized_output_name(meta.filename, client, client_demo)
         )
-        df.write.mode("overwrite").option("compression", "snappy").parquet(out_path)
+        write_parquet_snappy(df, out_path)
         outputs.append(out_path)
     return outputs

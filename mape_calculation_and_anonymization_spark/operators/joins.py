@@ -380,9 +380,9 @@ def merge_upsert(
     Scale shape: ONE full-outer shuffle on the merge key (broadcast
     if the update batch is dim-sized — Catalyst picks it up from
     statistics or an explicit broadcast() on the caller's side); the
-    coalesce projection is codegen'd. The snapshot-swap write
-    (write merged → atomic rename) is the same pattern the key-table
-    upsert uses (operators/keys.py)."""
+    coalesce projection is codegen'd. To commit the merged snapshot
+    over the target's own directory, write it through
+    ``sources.sinks.replace_dir``, as the key-table upsert does."""
     if set(target.columns) != set(updates.columns):
         raise ValueError(
             f"merge_upsert: target columns {sorted(target.columns)} != "

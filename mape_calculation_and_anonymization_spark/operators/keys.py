@@ -4,8 +4,9 @@ The reference keeps one parquet per uid column
 (``./key/key_{col}.snappy.parquet``) mapping original → pseudonym and
 upserts it on every run (reference/anonymize_datasets.py:27-84). That
 read-modify-overwrite of a path currently being read fails naively in
-Spark, so the upsert here writes to a temp directory and atomically
-swaps it in (single-writer semantics, as in the reference).
+Spark, so :func:`upsert_key_table` (shared with the streaming ingest)
+commits through ``sources.sinks.replace_dir`` (single-writer, as in
+the reference).
 
 Scale notes: the key table is a dimension but can grow large (one row
 per distinct uid ever seen). Nothing here collects it: enrichment is
@@ -17,14 +18,16 @@ derivation runs distributed through the blake2b pandas UDF.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mape_calculation_and_anonymization_spark.functions.hashing import blake2b_10hex
+from mape_calculation_and_anonymization_spark.sources.sinks import (
+    replace_dir,
+    write_parquet_snappy,
+)
 
 
 def key_table_path(key_dir: str, col: str) -> str:
@@ -48,21 +51,38 @@ def load_key_table(spark: SparkSession, key_dir: str, col: str) -> DataFrame:
 
 
 def save_key_table(key_df: DataFrame, key_dir: str, col: str) -> None:
-    """Atomic overwrite: write to a temp dir, swap, drop the old one.
+    """Commit ``key_df`` (it may read the old table) via :func:`replace_dir`.
 
     Unlike the reference (which assumes ./key/ exists and crashes on
     fresh checkouts — Q6), the directory is created on demand.
     """
     os.makedirs(key_dir, exist_ok=True)
-    final_path = key_table_path(key_dir, col)
-    tmp_path = f"{final_path}.__tmp_{uuid.uuid4().hex[:8]}"
-    key_df.write.mode("overwrite").option("compression", "snappy").parquet(tmp_path)
-    old_path = f"{final_path}.__old_{uuid.uuid4().hex[:8]}"
-    if os.path.exists(final_path):
-        os.rename(final_path, old_path)
-    os.rename(tmp_path, final_path)
-    if os.path.exists(old_path):
-        shutil.rmtree(old_path, ignore_errors=True)
+    replace_dir(
+        key_table_path(key_dir, col),
+        lambda stage: write_parquet_snappy(key_df, stage),
+    )
+
+
+def upsert_key_table(
+    key_df: DataFrame, uids: DataFrame, key_dir: str, col: str
+) -> None:
+    """F4+U1+A4 — append a blake2b pseudonym for each distinct non-null
+    ``col`` of ``uids`` missing from ``key_df`` (the table as
+    :func:`load_key_table` just read it; left_anti = the reference's
+    null-match filter). Existing mappings win; an existing table with
+    no new uid is not rewritten, a missing one is always written."""
+    hcol = f"{col}_"
+    new_keys = (
+        uids.select(F.col(col).cast("string"))
+        .dropna()
+        .distinct()
+        .join(key_df.select(col), on=col, how="left_anti")
+        .withColumn(hcol, blake2b_10hex(F.col(col)))
+    )
+    if os.path.exists(key_table_path(key_dir, col)) and new_keys.isEmpty():
+        return
+    updated = key_df.unionByName(new_keys).dropDuplicates([col, hcol])
+    save_key_table(updated, key_dir, col)
 
 
 def uid_anonymization(
@@ -85,17 +105,7 @@ def uid_anonymization(
     hcol = f"{col}_"
 
     if hcol in key_df.columns and len(key_df.columns) >= 2:
-        # F4+U1+A4: distinct unmatched uids → new pseudonyms → upsert.
-        # (left_anti against the key table = the reference's
-        # null-match filter after its left join.)
-        new_keys = (
-            df.select(col)
-            .distinct()
-            .join(key_df.select(col), on=col, how="left_anti")
-            .withColumn(hcol, blake2b_10hex(F.col(col)))
-        )
-        updated = key_df.unionByName(new_keys).dropDuplicates([col, hcol])
-        save_key_table(updated, key_dir, col)
+        upsert_key_table(key_df, df, key_dir, col)
         # Enrich from the freshly-written table: the pre-swap key_df
         # plan must not leak into the returned (lazy) DataFrame, or it
         # would re-read a path the swap just replaced. The updated
@@ -105,8 +115,9 @@ def uid_anonymization(
         result = df.join(fresh.select(col, hcol), on=col, how="left")
         return result.drop(col).withColumnRenamed(hcol, col)
 
-    # fresh key table (or legacy file missing the hash column — Q6:
-    # the reference rebuilds from scratch in that case)
+    # legacy file missing the hash column — Q6: the reference
+    # rebuilds from scratch in that case (a missing table loads as the
+    # empty two-column frame and takes the upsert above)
     hashed = df.withColumn(hcol, blake2b_10hex(F.col(col)))
     save_key_table(hashed.select(col, hcol).dropDuplicates(), key_dir, col)
     return hashed.drop(col).withColumnRenamed(hcol, col)

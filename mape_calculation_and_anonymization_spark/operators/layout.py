@@ -18,6 +18,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mape_calculation_and_anonymization_spark.sources.sinks import (
+    write_parquet_snappy,
+)
+
 
 def zvalue(cols: list[Column | str], bits: int = 16) -> Column:
     """Interleave the low ``bits`` bits of each column into one Z
@@ -69,13 +73,9 @@ def zorder_write(
     skip row groups via the tightened min/max spans.
     """
     keyed = df.withColumn("_z", zvalue(cols, bits))
-    (
-        keyed.repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .option("compression", "snappy")
-        .parquet(path)
+    write_parquet_snappy(
+        keyed.repartitionByRange(n_files, "_z").sortWithinPartitions("_z").drop("_z"),
+        path,
     )
 
 
@@ -129,11 +129,9 @@ def zorder_write_auto(
         bucketed = bucketed.withColumn(bc, quantile_rank_column(df, c, bits))
         tmp_cols.append(bc)
     keyed = bucketed.withColumn("_z", zvalue(tmp_cols, bits))
-    (
+    write_parquet_snappy(
         keyed.repartitionByRange(n_files, "_z")
         .sortWithinPartitions("_z")
-        .drop("_z", *tmp_cols)
-        .write.mode("overwrite")
-        .option("compression", "snappy")
-        .parquet(path)
+        .drop("_z", *tmp_cols),
+        path,
     )

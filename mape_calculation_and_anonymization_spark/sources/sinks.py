@@ -8,22 +8,53 @@ Reference parity (SURVEY.md §2.1):
 
 from __future__ import annotations
 
+import os
+from typing import Callable
+
 from pyspark.sql import DataFrame
 
 
-def write_parquet_snappy(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """K1 — distributed snappy parquet write.
+def replace_dir(path: str, build: Callable[[str], object]) -> object:
+    """Replace the directory ``path`` by the one ``build(stage)`` writes
+    into the sibling ``<path>.__new_<uuid8>``: rename the live directory
+    (if any) to ``<path>.__old_<uuid8>``, the stage to ``path``, then
+    remove the old one. On any exception the stage is removed and the
+    old directory moved back. ``build`` may read ``path``, which stays
+    untouched until the stage is complete. A reader between the two
+    renames finds no table (single-writer, like the reference's
+    key-table rewrite). Returns what ``build`` returned.
+    """
+    import shutil
+    import uuid
+
+    path = path.rstrip("/")
+    tag = uuid.uuid4().hex[:8]
+    stage, old = f"{path}.__new_{tag}", f"{path}.__old_{tag}"
+    try:
+        built = build(stage)
+        if os.path.exists(path):
+            os.rename(path, old)
+        os.rename(stage, path)
+    except BaseException:
+        shutil.rmtree(stage, ignore_errors=True)
+        if os.path.exists(old):
+            os.rename(old, path)
+        raise
+    shutil.rmtree(old, ignore_errors=True)
+    return built
+
+
+def write_parquet_snappy(df: DataFrame, path: str) -> None:
+    """K1 — distributed snappy parquet write (overwrites ``path``).
 
     Unlike the reference (single ``df.to_parquet`` file) this writes a
     directory of part files — the scalable layout. Partition count
     follows the upstream plan / AQE coalesce.
     """
-    df.write.mode(mode).option("compression", "snappy").parquet(path)
+    df.write.mode("overwrite").option("compression", "snappy").parquet(path)
 
 
-def compact_parquet(
-    spark, path: str, target_partitions: int, mode: str = "overwrite"
-) -> None:
+def compact_parquet(spark, path: str, target_partitions: int) -> None:
     """Small-file compaction: rewrite a parquet directory into
     ``target_partitions`` files — the maintenance job every streaming
     or micro-batch sink needs, since each trigger lands its own part
@@ -31,25 +62,18 @@ def compact_parquet(
 
     coalesce (not repartition): collapsing partitions needs NO
     shuffle — each output task reads several input files and streams
-    them through. The rewrite lands in a sibling temp dir first and
-    swaps in atomically-enough for a single writer; readers mid-swap
-    see the old or new listing, never a mix of half-written files.
+    them through. Commits through :func:`replace_dir`: a failed rewrite
+    leaves the table as it was; a reader never sees a mix of old and
+    new part files, but one between the two renames finds no table.
     """
-    import shutil
-
-    tmp = path.rstrip("/") + ".compact_tmp"
-    spark.read.parquet(path).coalesce(target_partitions).write.mode(
-        "overwrite"
-    ).option("compression", "snappy").parquet(tmp)
-    shutil.rmtree(path, ignore_errors=True)
-    shutil.move(tmp, path)
+    compacted = spark.read.parquet(path).coalesce(target_partitions)
+    replace_dir(path, lambda stage: write_parquet_snappy(compacted, stage))
 
 
 def write_partitioned_parquet(
     df: DataFrame,
     path: str,
     partition_cols: list[str],
-    mode: str = "overwrite",
     dynamic: bool = False,
 ) -> None:
     """Hive-style partitioned parquet layout (``col=value/`` dirs) —
@@ -65,7 +89,7 @@ def write_partitioned_parquet(
     writer = df.write.option("compression", "snappy")
     if dynamic:
         writer = writer.option("partitionOverwriteMode", "dynamic")
-    writer.partitionBy(*partition_cols).mode(mode).parquet(path)
+    writer.partitionBy(*partition_cols).mode("overwrite").parquet(path)
 
 
 def read_latest_partition(spark, path: str, partition_col: str) -> DataFrame:
@@ -235,8 +259,10 @@ def write_excel_workbook(filepath: str, **sheets: DataFrame) -> str:
     The workbook is written by the dependency-free stdlib OOXML writer
     (:func:`_write_xlsx_stdlib`) — a real ``.xlsx``, matching the
     reference's actual sink format. Read back with
-    ``sources.readers.read_xlsx_sheet``.
+    ``sources.readers.read_xlsx_sheet``. The parent directory is created
+    on demand (the reference assumes ``./output/`` exists).
     """
+    os.makedirs(os.path.dirname(filepath) or ".", exist_ok=True)
     pdfs = {
         name[:31]: (df.toPandas() if isinstance(df, DataFrame) else df)
         for name, df in sheets.items()
@@ -257,7 +283,6 @@ def write_versioned(df: DataFrame, path: str) -> int:
     table format's conditional commit.
     """
     import json
-    import os
 
     os.makedirs(path, exist_ok=True)
     manifest = os.path.join(path, "_manifest.json")
@@ -266,9 +291,7 @@ def write_versioned(df: DataFrame, path: str) -> int:
         with open(manifest) as fh:
             current = json.load(fh)["version"]
     version = current + 1
-    df.write.mode("overwrite").option("compression", "snappy").parquet(
-        os.path.join(path, f"v={version}")
-    )
+    write_parquet_snappy(df, os.path.join(path, f"v={version}"))
     tmp = manifest + ".tmp"
     with open(tmp, "w") as fh:
         json.dump({"version": version}, fh)
@@ -281,7 +304,6 @@ def read_versioned(spark, path: str, version: int | None = None) -> DataFrame:
     snapshot; an explicit version reads that historical snapshot. A
     version never committed (no manifest entry reached it) raises."""
     import json
-    import os
 
     manifest = os.path.join(path, "_manifest.json")
     with open(manifest) as fh:
@@ -295,13 +317,13 @@ def read_versioned(spark, path: str, version: int | None = None) -> DataFrame:
     return spark.read.parquet(os.path.join(path, f"v={version}"))
 
 
-def write_orc_zstd(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_orc_zstd(df: DataFrame, path: str) -> None:
     """K7 — ORC sink (zstd): the other mainstream columnar lake format
     (Hive/Trino ecosystems standardize on it), supported natively by
     Spark's vectorized ORC reader/writer — same pruning + predicate
     pushdown story as parquet, so a reference user with ORC-consuming
     downstream tooling can switch sinks with one call."""
-    df.write.mode(mode).option("compression", "zstd").orc(path)
+    df.write.mode("overwrite").option("compression", "zstd").orc(path)
 
 
 def delete_keys(
@@ -327,21 +349,14 @@ def delete_keys(
     collected to list affected files); route bulk deletes through a
     partition-level overwrite instead.
 
-    Commit is a directory swap (build complete replacement dir → two
-    renames), the same single-writer contract as
-    :func:`compact_parquet`: a reader never sees a half-rewritten MIX
-    of files; a crash before the swap leaves the original table fully
-    intact (the orphaned ``.delete_*`` siblings are garbage, not
-    damage). The brief window between the two renames is the
-    single-writer caveat both functions document; snapshot isolation
-    needs :func:`write_versioned`.
+    Commit is :func:`replace_dir` (untouched files hard-linked beside
+    the rewrite), with the same guarantees and single-writer caveat as
+    :func:`compact_parquet`; snapshot isolation needs
+    :func:`write_versioned`.
 
     Returns ``{"files_total", "files_rewritten", "rows_deleted"}``.
     """
     import glob
-    import os
-    import shutil
-    import uuid
     from urllib.parse import unquote, urlparse
 
     from pyspark.sql import functions as F
@@ -368,33 +383,28 @@ def delete_keys(
         }
     aff = sorted(affected)
     before_n = spark.read.parquet(*aff).count()
-    tmp = root + ".delete_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    # ONE evaluation of the anti join: the write; rows_deleted comes
-    # from counting the (affected-files-sized) inputs and outputs
-    spark.read.parquet(*aff).join(
-        F.broadcast(keys_df), key_col, "left_anti"
-    ).write.mode("overwrite").option("compression", "snappy").parquet(tmp)
-    kept_n = spark.read.parquet(tmp).count()
 
-    stamp = uuid.uuid4().hex[:8]
-    new_dir = root + f".delete_new_{stamp}"
-    os.makedirs(new_dir)
-    # hard-link every untouched regular file (incl. _SUCCESS-style
-    # markers) — no data copy; move the rewritten parts in; then swap
-    for name in sorted(os.listdir(root)):
-        src_f = os.path.join(root, name)
-        if os.path.isfile(src_f) and os.path.abspath(src_f) not in affected:
-            os.link(src_f, os.path.join(new_dir, name))
-    for i, f in enumerate(sorted(glob.glob(os.path.join(tmp, "part-*")))):
-        os.replace(
-            f, os.path.join(new_dir, f"part-delete-{stamp}-{i:05d}.parquet")
+    def build(stage: str) -> int:
+        # ONE evaluation of the anti join: the write; rows_deleted comes
+        # from counting the (affected-files-sized) inputs and outputs
+        write_parquet_snappy(
+            spark.read.parquet(*aff).join(
+                F.broadcast(keys_df), key_col, "left_anti"
+            ),
+            stage,
         )
-    shutil.rmtree(tmp, ignore_errors=True)
-    old_dir = root + f".delete_old_{stamp}"
-    os.rename(root, old_dir)
-    os.rename(new_dir, root)  # the commit point
-    shutil.rmtree(old_dir, ignore_errors=True)
+        kept_n = spark.read.parquet(stage).count()
+        # hard-link every untouched file and its checksum sidecar (no
+        # data copy); the rewrite's own _SUCCESS markers are in the stage
+        gone = {os.path.basename(f) for f in affected}
+        gone |= {f".{name}.crc" for name in gone}
+        for name in sorted(set(os.listdir(root)) - gone):
+            src_f, dst_f = os.path.join(root, name), os.path.join(stage, name)
+            if os.path.isfile(src_f) and not os.path.exists(dst_f):
+                os.link(src_f, dst_f)
+        return kept_n
+
+    kept_n = replace_dir(root, build)
     return {
         "files_total": files_total,
         "files_rewritten": len(affected),

@@ -1,6 +1,5 @@
 from mape_calculation_and_anonymization_spark.streaming.upsert import (
     stream_key_table_upsert,
-    upsert_batch_into_key_table,
 )
 from mape_calculation_and_anonymization_spark.streaming.windows import (
     read_events_stream,
@@ -25,5 +24,4 @@ __all__ = [
     "user_session_windows",
     "stateful_distinct_users",
     "stream_key_table_upsert",
-    "upsert_batch_into_key_table",
 ]

@@ -98,6 +98,37 @@ def test_uid_key_table_lifecycle(spark, tmp_path):
     assert keys.select("uid").distinct().count() == 3
 
 
+def test_uid_rerun_with_known_uids_leaves_the_key_table_untouched(
+    spark, tmp_path
+):
+    """One upsert path: NULL uids never enter the key table, and a rerun
+    that brings no new uid does not rewrite it (same files, same
+    inodes)."""
+    key_dir = str(tmp_path / "key")
+    key_path = os.path.join(key_dir, "key_uid.snappy.parquet")
+    df = spark.createDataFrame(
+        [("12345", 1), ("9", 2), (None, 3)], "uid string, v int"
+    )
+
+    def files():
+        return {
+            name: (st.st_ino, st.st_mtime_ns)
+            for name in os.listdir(key_path)
+            for st in [os.stat(os.path.join(key_path, name))]
+        }
+
+    out1 = {r["v"]: r["uid"] for r in uid_anonymization("uid", df, key_dir).collect()}
+    assert out1[3] is None
+    assert [r["uid"] for r in spark.read.parquet(key_path).collect()] in (
+        ["12345", "9"],
+        ["9", "12345"],
+    )
+    landed = files()
+    out2 = {r["v"]: r["uid"] for r in uid_anonymization("uid", df, key_dir).collect()}
+    assert out2 == out1
+    assert files() == landed
+
+
 def test_uid_manual_override_honored(spark, tmp_path):
     # a hand-edited key table must win over the digest
     key_dir = str(tmp_path / "key")

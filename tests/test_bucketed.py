@@ -110,6 +110,11 @@ def test_delete_keys_rewrites_only_affected(spark, tmp_path):
     after = set(glob.glob(os.path.join(path, "part-*")))
     untouched = before & after
     assert len(untouched) == 4 - stats["files_rewritten"]
+    # no checksum sidecar of a rewritten file is carried over
+    sidecars = glob.glob(os.path.join(path, ".part-*.crc"))
+    assert sorted(os.path.basename(c)[1:-4] for c in sidecars) == sorted(
+        os.path.basename(f) for f in after
+    )
 
     got = spark.read.parquet(path)
     assert got.count() == 960

@@ -288,3 +288,44 @@ def test_one_fixture_root_and_no_unguarded_publish():
         and node.func.value.id == "os"
     ]
     assert replaces == []
+
+
+def test_bench_prebuilds_every_fixture_a_query_reaches():
+    """bench.py builds the fixtures before its timed passes: every
+    function of the entry file that calls ``_fixture`` and that a
+    registered builder reaches through the module's call graph is also
+    reached from a name in ``bench.PREBUILD_QUERIES``. Otherwise the
+    first timed pass includes that fixture's build. AST walk; starts no
+    Spark."""
+    import bench
+
+    tree = _entry_tree()
+    funcs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+    calls = {
+        name: {
+            n.id
+            for n in ast.walk(fn)
+            if isinstance(n, ast.Name) and n.id in funcs and n.id != name
+        }
+        for name, fn in funcs.items()
+    }
+    sites = {
+        name
+        for name in calls
+        if name != "_fixture" and "_fixture" in calls[name]
+    }
+
+    def reached(roots):
+        seen, todo = set(), list(roots)
+        while todo:
+            name = todo.pop()
+            if name not in seen:
+                seen.add(name)
+                todo.extend(calls[name])
+        return seen & sites
+
+    queries = entrymod.queries()
+    registered = reached(fn.__name__ for fn in queries.values())
+    prebuilt = reached(queries[name].__name__ for name in bench.PREBUILD_QUERIES)
+    assert len(registered) > 20
+    assert sorted(registered - prebuilt) == []

@@ -64,9 +64,7 @@ def test_dynamic_overwrite_touches_only_present_partitions(
     one_day = events.filter(F.col("event_date") == target).withColumn(
         "value", F.col("value") * 2.0
     )
-    write_partitioned_parquet(
-        one_day, path, ["event_date"], mode="overwrite", dynamic=True
-    )
+    write_partitioned_parquet(one_day, path, ["event_date"], dynamic=True)
 
     after = spark.read.parquet(path)
     # untouched partitions survived the overwrite

@@ -211,3 +211,19 @@ def test_xlsx_big_integers_exact(tmp_path):
     _write_xlsx_stdlib(path, {"s": pdf})
     got = read_xlsx_sheet_pandas(path, "s")
     assert got["n"].tolist() == [big, -big]
+
+
+def test_excel_facade_creates_the_output_dir(tmp_path, monkeypatch):
+    """``MapeCalculation.save_to_excelspreadsheet`` writes
+    ``./output/<client>_performance.xlsx`` on a fresh checkout, where
+    ``./output`` does not exist yet."""
+    from mape_calculation_and_anonymization_spark.operators.mape import (
+        MapeCalculation,
+    )
+
+    monkeypatch.chdir(tmp_path)
+    daily = pd.DataFrame({"day": ["2024-06-01"], "wape": [0.125]})
+    out = MapeCalculation(None).save_to_excelspreadsheet("client", daily=daily)
+    assert out == "./output/client_performance.xlsx"
+    back = read_xlsx_sheet_pandas(str(tmp_path / out), "daily")
+    assert back.to_dict("list") == {"day": ["2024-06-01"], "wape": [0.125]}
