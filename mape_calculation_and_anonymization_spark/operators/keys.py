@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mape_calculation_and_anonymization_spark.functions.hashing import blake2b_10hex
+from mape_calculation_and_anonymization_spark.operators.rebalance import checkpoint
 from mape_calculation_and_anonymization_spark.sources.sinks import (
     replace_dir,
     write_parquet_snappy,
@@ -57,10 +58,8 @@ def save_key_table(key_df: DataFrame, key_dir: str, col: str) -> None:
     fresh checkouts — Q6), the directory is created on demand.
     """
     os.makedirs(key_dir, exist_ok=True)
-    replace_dir(
-        key_table_path(key_dir, col),
-        lambda stage: write_parquet_snappy(key_df, stage),
-    )
+    path = key_table_path(key_dir, col)
+    replace_dir(path, lambda stage: write_parquet_snappy(key_df, stage))
 
 
 def upsert_key_table(
@@ -79,8 +78,11 @@ def upsert_key_table(
         .join(key_df.select(col), on=col, how="left_anti")
         .withColumn(hcol, blake2b_10hex(F.col(col)))
     )
-    if os.path.exists(key_table_path(key_dir, col)) and new_keys.isEmpty():
-        return
+    if os.path.exists(key_table_path(key_dir, col)):
+        # discover once: the emptiness probe and the write read it
+        new_keys = checkpoint(new_keys, "keys.upsert_key_table.new_keys")
+        if new_keys.isEmpty():
+            return
     updated = key_df.unionByName(new_keys).dropDuplicates([col, hcol])
     save_key_table(updated, key_dir, col)
 
@@ -106,11 +108,10 @@ def uid_anonymization(
 
     if hcol in key_df.columns and len(key_df.columns) >= 2:
         upsert_key_table(key_df, df, key_dir, col)
-        # Enrich from the freshly-written table: the pre-swap key_df
-        # plan must not leak into the returned (lazy) DataFrame, or it
-        # would re-read a path the swap just replaced. The updated
-        # table covers every uid, so no digest fallback is needed —
-        # existing mappings win by construction.
+        # Enrich from the committed table, rewritten or not: the
+        # pre-upsert key_df plan must not leak into the returned (lazy)
+        # frame, where it would re-read a path a swap may replace. The
+        # table covers every uid: existing mappings win, no fallback.
         fresh = spark.read.parquet(key_table_path(key_dir, col))
         result = df.join(fresh.select(col, hcol), on=col, how="left")
         return result.drop(col).withColumnRenamed(hcol, col)

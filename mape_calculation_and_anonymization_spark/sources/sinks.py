@@ -395,13 +395,13 @@ def delete_keys(
         )
         kept_n = spark.read.parquet(stage).count()
         # hard-link every untouched file and its checksum sidecar (no
-        # data copy); the rewrite's own _SUCCESS markers are in the stage
+        # data copy); the stage keeps its own _SUCCESS markers, and any
+        # other name clash raises FileExistsError instead of losing rows
         gone = {os.path.basename(f) for f in affected}
-        gone |= {f".{name}.crc" for name in gone}
+        gone |= {f".{n}.crc" for n in gone} | {"_SUCCESS", "._SUCCESS.crc"}
         for name in sorted(set(os.listdir(root)) - gone):
-            src_f, dst_f = os.path.join(root, name), os.path.join(stage, name)
-            if os.path.isfile(src_f) and not os.path.exists(dst_f):
-                os.link(src_f, dst_f)
+            if os.path.isfile(os.path.join(root, name)):
+                os.link(os.path.join(root, name), os.path.join(stage, name))
         return kept_n
 
     kept_n = replace_dir(root, build)

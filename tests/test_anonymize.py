@@ -1,6 +1,7 @@
 """Anonymization pipeline semantics, pinned to the reference's
 observable behavior (SURVEY.md §2 rows X3/X4/X5, J1/F4/U1/A4, Q1/Q6)."""
 
+import hashlib
 import os
 from datetime import datetime
 
@@ -127,6 +128,31 @@ def test_uid_rerun_with_known_uids_leaves_the_key_table_untouched(
     out2 = {r["v"]: r["uid"] for r in uid_anonymization("uid", df, key_dir).collect()}
     assert out2 == out1
     assert files() == landed
+
+
+def test_uid_upsert_discovers_new_uids_once(spark, tmp_path, monkeypatch):
+    """On an existing key table the new-uid discovery (distinct +
+    left_anti) runs once: the table write reads its checkpoint rather
+    than planning the anti join again after the emptiness probe."""
+    from mape_calculation_and_anonymization_spark.operators import keys
+
+    key_dir = str(tmp_path / "key")
+    uid_anonymization("uid", spark.createDataFrame([("1", 1)], ["uid", "v"]), key_dir)
+    plans = []
+    real = keys.save_key_table
+
+    def recording(key_df, *args):
+        plans.append(key_df._jdf.queryExecution().optimizedPlan().toString())
+        real(key_df, *args)
+
+    monkeypatch.setattr(keys, "save_key_table", recording)
+    df = spark.createDataFrame([("1", 1), ("2", 2)], ["uid", "v"])
+    out = {r["v"]: r["uid"] for r in uid_anonymization("uid", df, key_dir).collect()}
+    assert out == {
+        v: hashlib.blake2b(str(v).encode(), digest_size=5).hexdigest()
+        for v in (1, 2)
+    }
+    assert len(plans) == 1 and "LeftAnti" not in plans[0]
 
 
 def test_uid_manual_override_honored(spark, tmp_path):

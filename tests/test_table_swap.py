@@ -6,6 +6,7 @@ leaves the original table readable and no staging sibling behind."""
 import ast
 import glob
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -160,3 +161,33 @@ def test_failed_merge_keeps_the_running_aggregate(
     monkeypatch.undo()
     merge_partial_aggregate(batch, table)
     assert _rows(spark, table) == [("click", 4, 10.0), ("view", 2, 5.0)]
+
+
+def test_delete_keys_name_clash_fails_and_keeps_the_table(
+    spark, tmp_path, monkeypatch
+):
+    """An untouched file whose name is already in the stage raises
+    instead of being dropped; the table keeps all its rows."""
+    path = str(tmp_path / "t")
+    spark.range(100).select(
+        "id", (F.col("id") % 10).alias("user_id")
+    ).repartition(4, "user_id").write.parquet(path)
+    before = _rows(spark, path)
+    keys = spark.createDataFrame([(3,)], ["user_id"])
+    real = sinks.write_parquet_snappy
+
+    def write_then_clash(df, stage):
+        real(df, stage)
+        # a readable copy of one untouched part under its own name
+        name = next(
+            n
+            for n in sorted(os.listdir(path))
+            if n.startswith("part-") and not os.path.exists(os.path.join(stage, n))
+        )
+        shutil.copyfile(os.path.join(path, name), os.path.join(stage, name))
+
+    monkeypatch.setattr(sinks, "write_parquet_snappy", write_then_clash)
+    with pytest.raises(FileExistsError):
+        sinks.delete_keys(spark, path, "user_id", keys)
+    assert _rows(spark, path) == before
+    assert os.listdir(tmp_path) == ["t"]
