@@ -2855,7 +2855,6 @@ def _q_s3_latest_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from mape_calculation_and_anonymization_spark.sources.readers import (
         latest_partition,
-        read_parquet,
     )
 
     # The marker FILE is invisible to latest_partition, which lists
@@ -2869,7 +2868,7 @@ def _q_s3_latest_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _fixture(_PARTITIONED_FIXTURE, build)
     folder = latest_partition(_PARTITIONED_FIXTURE)
-    df = read_parquet(spark, f"{_PARTITIONED_FIXTURE}/{folder}")
+    df = spark.read.parquet(f"{_PARTITIONED_FIXTURE}/{folder}")
     return df.select("n_nationkey", "n_name", "n_regionkey")
 
 
@@ -2907,8 +2906,6 @@ def _q_k1_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the engine sink once (directory name derived via
     ``anonymized_output_name``), read it back, aggregate. The oracle
     reads the engine-written files directly."""
-    from mape_calculation_and_anonymization_spark.sources.readers import read_parquet
-
     path = _fixture(
         _k1_fixture_path(sf_dir),
         lambda path: write_parquet_snappy(
@@ -2918,7 +2915,7 @@ def _q_k1_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             path,
         ),
     )
-    df = read_parquet(spark, path)
+    df = spark.read.parquet(path)
     return df.groupBy("s_nationkey").agg(
         F.count(F.lit(1)).alias("n_suppliers"),
         F.round(F.sum("s_acctbal"), 2).alias("total_acctbal"),
@@ -3026,7 +3023,7 @@ def _k2_oracle(sf_dir: str) -> str:
 
 def _q_k7_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K7 — ORC sink/scan roundtrip (sources/sinks.py:write_orc_zstd,
-    sources/readers.py:read_orc): orders priced slice written once
+    ``spark.read.orc``): orders priced slice written once
     through the engine's zstd ORC sink, read back through the
     vectorized ORC scan, aggregated per priority. The oracle
     re-derives from the SOURCE table, so a green row proves the ORC
@@ -3034,7 +3031,6 @@ def _q_k7_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORC file — same source-side oracle pattern as K1). ORC is the
     second mainstream columnar lake format (Hive/Trino); same
     pruning/pushdown story as parquet. Crash-idempotent fixture."""
-    from mape_calculation_and_anonymization_spark.sources.readers import read_orc
     from mape_calculation_and_anonymization_spark.sources.sinks import (
         write_orc_zstd,
     )
@@ -3048,7 +3044,7 @@ def _q_k7_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             path,
         ),
     )
-    df = read_orc(spark, path)
+    df = spark.read.orc(path)
     return df.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.round(F.sum("o_totalprice"), 2).alias("total_price"),
@@ -3439,7 +3435,7 @@ def _q_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     event type: every event contributes to exactly two hourly-aligned
     windows, which is precisely what the oracle re-derives by
     unnesting the two window starts per event."""
-    from mape_calculation_and_anonymization_spark.streaming import (
+    from mape_calculation_and_anonymization_spark.streaming.windows import (
         sliding_event_counts,
     )
 
@@ -3481,7 +3477,7 @@ def _q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark + event-time interval condition, so at production scale
     the state store holds one hour of clicks per user, not the stream
     history."""
-    from mape_calculation_and_anonymization_spark.streaming import (
+    from mape_calculation_and_anonymization_spark.streaming.windows import (
         stream_stream_interval_join,
     )
 
@@ -4016,7 +4012,7 @@ def _q_stream_key_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mape_calculation_and_anonymization_spark.operators.keys import (
         load_key_table,
     )
-    from mape_calculation_and_anonymization_spark.streaming import (
+    from mape_calculation_and_anonymization_spark.streaming.upsert import (
         stream_key_table_upsert,
     )
 
@@ -7016,7 +7012,7 @@ def _q_stream_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     — equality proves the sink landed every row exactly once. Stateless
     stream (projection only), so append mode emits everything; fixture
     is per-sf with a completion marker, partial landings deleted."""
-    from mape_calculation_and_anonymization_spark.streaming import (
+    from mape_calculation_and_anonymization_spark.streaming.windows import (
         run_stream_to_parquet,
     )
 
@@ -9225,7 +9221,7 @@ def _q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     =1 staging (sentinel as its own second batch) was one whole
     micro-batch of pure state-store machinery: dropping it measured
     2.9s → 2.3s warm at sf0.1 with rows identical (20088)."""
-    from mape_calculation_and_anonymization_spark.streaming import (
+    from mape_calculation_and_anonymization_spark.streaming.windows import (
         stream_stream_left_outer_join,
     )
 

@@ -535,16 +535,14 @@ def run_scale_stress(spark, sf_dir: str, factor: int = STRESS_FACTOR) -> dict:
             # 1× purely because 1× paid worker spawn) — the
             # denominator must be steady-state
             make(build_corpus(spark, sf_dir, 1)).count()
-            spark.catalog.clearCache()
-            gc.collect()
+            release(spark)
             for tag, f in (("1x", 1), (f"{factor}x", factor)):
                 corpus = build_corpus(spark, sf_dir, f)
                 t0 = time.perf_counter()
                 n = make(corpus).count()
                 entry[f"wall_{tag}"] = round(time.perf_counter() - t0, 2)
                 entry[f"rows_{tag}"] = n
-                spark.catalog.clearCache()
-                gc.collect()
+                release(spark)
             entry["ratio"] = round(
                 entry[f"wall_{factor}x"] / max(entry["wall_1x"], 1e-9), 2
             )
@@ -598,6 +596,35 @@ PREBUILD_QUERIES = (
     "bpe_token_stats", "ivf_incremental_topk", "stream_minhash_pairs",
     "s4_folder_loop",
 )
+
+
+def warm_tables(spark, sf_dir: str) -> None:
+    """First-touch the fact/corpus tables through the engine reader:
+    footer parsing, schema adaptation (nanos ts probe) and file listing
+    otherwise land entirely on whichever query runs first."""
+    from mape_calculation_and_anonymization_spark.fixtures import load_table
+
+    for t in ("events", "documents", "lineitem", "orders", "embeddings"):
+        load_table(spark, sf_dir, t).count()
+
+
+def release(spark) -> None:
+    """Release what one query left in the session before the next runs.
+
+    * Cached frames: operators that persist intermediates (minhash
+      shingles) must not pressure later queries' memory.
+    * Memory-sink tables (``mem_<uuid>``) hold their full result rows
+      on the driver for the session's lifetime; once the query's
+      result is consumed they only ratchet driver heap pressure.
+    * localCheckpoint blocks are released only when the driver-side
+      DataFrame is garbage-collected (ContextCleaner): collect promptly
+      so one query's barriers don't pressure the next's.
+    """
+    spark.catalog.clearCache()
+    for tbl in spark.catalog.listTables():
+        if tbl.isTemporary and tbl.name.startswith("mem_"):
+            spark.catalog.dropTempView(tbl.name)
+    gc.collect()
 
 
 def _git_head() -> str:
@@ -674,14 +701,7 @@ def main() -> None:
     # first query's timing isn't session bootstrap
     spark.range(1_000_000).groupBy(F.col("id") % 7).count().collect()
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
-    # first-touch the fact/corpus tables through the engine reader:
-    # footer parsing, schema adaptation (nanos ts probe), and file
-    # listing otherwise land entirely on whichever query the registry
-    # happens to order first, skewing its per-query number
-    from mape_calculation_and_anonymization_spark.fixtures import load_table
-
-    for t in ("events", "documents", "lineitem", "orders", "embeddings"):
-        load_table(spark, sf_dir, t).count()
+    warm_tables(spark, sf_dir)
     # ... and the noop sink + broadcast-join machinery (ServiceLoader
     # scan and broadcast thread pool init are one-time session costs)
     warm = spark.range(10_000).withColumn("k", F.col("id") % 100)
@@ -717,11 +737,7 @@ def main() -> None:
                 ).save()
             except Exception:
                 pass  # warmup is best-effort; the timed pass surfaces errors
-            spark.catalog.clearCache()
-            for tbl in spark.catalog.listTables():
-                if tbl.isTemporary and tbl.name.startswith("mem_"):
-                    spark.catalog.dropTempView(tbl.name)
-            gc.collect()
+            release(spark)
 
     for name in PREBUILD_QUERIES:
         fn = entrymod.queries()[name]  # a renamed query fails loudly
@@ -729,8 +745,7 @@ def main() -> None:
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         except Exception:
             pass
-        spark.catalog.clearCache()
-        gc.collect()
+        release(spark)
 
     # Median-of-N timed passes: single-run per-query timings at sf0.1
     # swing ±50% with machine load, so one sample cannot distinguish a
@@ -759,21 +774,7 @@ def main() -> None:
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             samples.setdefault(name, []).append(time.perf_counter() - t0)
-            # operators that persist intermediates (minhash shingles) must
-            # not pressure later queries' memory
-            spark.catalog.clearCache()
-            # memory-sink tables (mem_<uuid>) accumulate their full
-            # result rows on the driver for the session's lifetime —
-            # once the noop write has consumed the result, drop them
-            # so 15+ stream queries x 3 passes don't ratchet driver
-            # heap pressure onto later queries
-            for tbl in spark.catalog.listTables():
-                if tbl.isTemporary and tbl.name.startswith("mem_"):
-                    spark.catalog.dropTempView(tbl.name)
-            # localCheckpoint blocks release only when the driver-side
-            # DataFrame is garbage-collected (ContextCleaner) — collect
-            # promptly so one query's barriers don't pressure the next's
-            gc.collect()
+            release(spark)
 
     import statistics
 

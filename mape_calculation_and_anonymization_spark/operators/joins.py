@@ -1,6 +1,6 @@
 """Join operators beyond the reference's single left-equi join:
-as-of joins (Spark has no native operator) and skew-safe salted
-joins/aggregations for hot keys at scale.
+as-of joins (Spark has no native operator) and a skew-safe salted
+join for hot keys at scale.
 
 As-of join strategy: Spark lacks ASOF JOIN, so it is composed from
 built-ins — union the right ("quotes") stream into the left ("trades")
@@ -20,7 +20,7 @@ applies to sort-merge joins on statistics it can see.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -166,27 +166,6 @@ def salted_join(
     return out.drop("_salt")
 
 
-def salted_aggregate(
-    df: DataFrame,
-    keys: list[str],
-    sum_cols: list[str],
-    salt: int = 8,
-) -> DataFrame:
-    """Two-phase SUM aggregation with an explicit salt stage.
-
-    NOTE: for plain algebraic aggregates Spark's partial aggregation
-    already collapses hot keys map-side, so this exists for the cases
-    where partial agg is defeated (high-cardinality intermediate
-    states, e.g. collect_list/distinct-agg pipelines) — and as the
-    documented pattern. Results are identical to a direct groupBy.
-    """
-    salted = df.withColumn("_salt", (F.rand(seed=7) * salt).cast("int"))
-    phase1 = salted.groupBy(*keys, "_salt").agg(
-        *[F.sum(c).alias(c) for c in sum_cols]
-    )
-    return phase1.groupBy(*keys).agg(*[F.sum(c).alias(c) for c in sum_cols])
-
-
 def key_skew_stats(
     df: DataFrame, key_col: str, top_k: int = 10
 ) -> DataFrame:
@@ -212,85 +191,6 @@ def key_skew_stats(
         .orderBy(F.col("n_rows").desc(), key_col)
         .limit(top_k)
     )
-
-
-def choose_salt(
-    probe: DataFrame,
-    on: str,
-    skew_threshold: float = 4.0,
-    max_salt: int = 16,
-) -> int:
-    """Decide a salt factor for a probe-side join key: returns 1 (no
-    salting needed) when the max-key/mean-key count ratio is below
-    ``skew_threshold``, otherwise a salt ≈ the observed ratio capped
-    at ``max_salt``.
-
-    The probe is a full per-key count — deliberately NOT a sample:
-    key-hash sampling keeps or drops a key WHOLESALE, so a single hot
-    key evades a 5% sample 95% of the time, and row-level sampling
-    would need a row identity the frame may not have. The count is
-    one scan with map-side partial aggregation, so only
-    key-cardinality records shuffle — negligible next to the join
-    being planned, deterministic, and exact. Two driver scalars
-    (max, mean) come back — never row data.
-    """
-    row = (
-        probe.groupBy(on)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.max("n").alias("mx"), F.avg("n").alias("mean"))
-        .first()
-    )
-    if row is None or row["mx"] is None or not row["mean"]:
-        return 1
-    ratio = row["mx"] / row["mean"]
-    if ratio < skew_threshold:
-        return 1
-    return min(max_salt, int(ratio))
-
-
-def auto_salted_join(
-    probe: DataFrame,
-    build: DataFrame,
-    on: str,
-    how: str = "inner",
-    skew_threshold: float = 4.0,
-    max_salt: int = 16,
-) -> DataFrame:
-    """Skew-adaptive equi join: measure probe-key skew with an exact
-    per-key count probe (see :func:`choose_salt` for why it is
-    deliberately NOT sampled), then run either the plain join or the
-    salted join — row-identical either way (pinned by tests), the
-    only difference is where the hot keys' rows land. Complements AQE
-    skew handling: AQE can only split post-shuffle partitions of a
-    sort-merge join; salting also covers the shuffled-hash path and
-    keeps the decision explicit and logged.
-
-    Only ``inner`` and ``left`` are supported — the same contract as
-    :func:`salted_join` (the build side is replicated per salt, which
-    would duplicate unmatched build rows under right/full). Validated
-    eagerly so the failure is not data-dependent: without this check,
-    ``how='right'`` would succeed on uniform data and only raise once
-    skew was detected."""
-    if how not in ("inner", "left"):
-        raise ValueError(
-            f"auto_salted_join supports how='inner'|'left', got {how!r} "
-            "(build-side salt replication would duplicate unmatched "
-            "build rows under right/full joins)"
-        )
-    import logging
-
-    salt = choose_salt(probe, on, skew_threshold, max_salt)
-    if salt <= 1:
-        return probe.join(build, on, how)
-    logging.getLogger(__name__).info(
-        "auto_salted_join: probe key %r exceeds skew threshold %.1f — "
-        "salting with factor %d (build side replicated %dx)",
-        on,
-        skew_threshold,
-        salt,
-        salt,
-    )
-    return salted_join(probe, build, on, salt=salt, how=how)
 
 
 def touch_attribution(

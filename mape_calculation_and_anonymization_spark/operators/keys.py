@@ -37,11 +37,15 @@ def key_table_path(key_dir: str, col: str) -> str:
 
 
 def load_key_table(spark: SparkSession, key_dir: str, col: str) -> DataFrame:
-    """Existing key table, or an empty two-column frame (fresh run —
-    reference/anonymize_datasets.py:41-44)."""
+    """Existing key table, or an empty two-column frame: on a fresh run
+    (reference/anonymize_datasets.py:41-44) and for a legacy file
+    without the ``<col>_`` hash column, which the next upsert then
+    rebuilds from scratch (Q6)."""
     path = key_table_path(key_dir, col)
     if os.path.exists(path):
-        return spark.read.parquet(path)
+        table = spark.read.parquet(path)
+        if {col, f"{col}_"} <= set(table.columns):
+            return table
     schema = T.StructType(
         [
             T.StructField(col, T.StringType()),
@@ -103,22 +107,12 @@ def uid_anonymization(
     """
     spark = df.sparkSession
     df = df.withColumn(col, F.col(col).cast("string"))
-    key_df = load_key_table(spark, key_dir, col)
     hcol = f"{col}_"
-
-    if hcol in key_df.columns and len(key_df.columns) >= 2:
-        upsert_key_table(key_df, df, key_dir, col)
-        # Enrich from the committed table, rewritten or not: the
-        # pre-upsert key_df plan must not leak into the returned (lazy)
-        # frame, where it would re-read a path a swap may replace. The
-        # table covers every uid: existing mappings win, no fallback.
-        fresh = spark.read.parquet(key_table_path(key_dir, col))
-        result = df.join(fresh.select(col, hcol), on=col, how="left")
-        return result.drop(col).withColumnRenamed(hcol, col)
-
-    # legacy file missing the hash column — Q6: the reference
-    # rebuilds from scratch in that case (a missing table loads as the
-    # empty two-column frame and takes the upsert above)
-    hashed = df.withColumn(hcol, blake2b_10hex(F.col(col)))
-    save_key_table(hashed.select(col, hcol).dropDuplicates(), key_dir, col)
-    return hashed.drop(col).withColumnRenamed(hcol, col)
+    upsert_key_table(load_key_table(spark, key_dir, col), df, key_dir, col)
+    # Enrich from the committed table, rewritten or not: the pre-upsert
+    # key table plan must not leak into the returned (lazy) frame, where
+    # it would re-read a path a swap may replace. The table covers every
+    # non-null uid: existing mappings win, no fallback.
+    fresh = load_key_table(spark, key_dir, col)
+    result = df.join(fresh.select(col, hcol), on=col, how="left")
+    return result.drop(col).withColumnRenamed(hcol, col)

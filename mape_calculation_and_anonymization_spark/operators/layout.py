@@ -60,25 +60,6 @@ def zvalue(cols: list[Column | str], bits: int = 16) -> Column:
     return z
 
 
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 16,
-    n_files: int = 8,
-) -> None:
-    """Write ``df`` Z-ordered on ``cols``: range-partition by the
-    Z key (so each output file owns a contiguous Z range), sort within
-    partitions, drop the key. Later scans filtering on ANY of ``cols``
-    skip row groups via the tightened min/max spans.
-    """
-    keyed = df.withColumn("_z", zvalue(cols, bits))
-    write_parquet_snappy(
-        keyed.repartitionByRange(n_files, "_z").sortWithinPartitions("_z").drop("_z"),
-        path,
-    )
-
-
 def quantile_rank_column(
     df: DataFrame, col: str, bits: int = 8, rel_err: float = 0.001
 ) -> Column:
@@ -120,8 +101,9 @@ def zorder_write_auto(
 ) -> None:
     """Z-order write for ARBITRARY numeric columns: each dimension is
     quantile-bucketed onto [0, 2^bits) first (one sketch aggregate per
-    column), then written via :func:`zorder_write`'s range shuffle on
-    the interleaved key."""
+    column), then range-partitioned on the interleaved key (each output
+    file owns a contiguous Z range) and sorted within partitions, so
+    later scans filtering on ANY of ``cols`` skip row groups."""
     bucketed = df
     tmp_cols = []
     for c in cols:

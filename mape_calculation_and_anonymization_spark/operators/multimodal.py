@@ -2,16 +2,11 @@
 
 North-star extension: image/audio/video as ``binary`` columns with a
 metadata struct, processed through Arrow-batched ``mapInPandas``. The
-container has no image/audio libraries, so the DECODE step is stubbed
-two ways (per the build contract):
-
-  * :func:`decode_image` — real decode behind an import-try (raises
-    ``NotImplementedError`` when PIL is absent), so the call site and
-    signature are production-shaped;
-  * :func:`extract_features` — a clearly-marked DETERMINISTIC FAKE
-    featurizer (blake2b-seeded vector per payload) so the Spark-side
-    plumbing — schema, batch iteration, partitioning — is real and
-    testable end-to-end.
+container has no image/audio libraries, so the DECODE step is stubbed:
+:func:`extract_features` is a clearly-marked DETERMINISTIC FAKE
+featurizer (blake2b-seeded vector per payload) so the Spark-side
+plumbing — schema, batch iteration, partitioning — is real and
+testable end-to-end.
 
 Scale notes: payloads never pass through Python row-at-a-time; every
 transform is mapInPandas over Arrow batches. Metadata extraction is a
@@ -27,8 +22,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 FEATURE_DIM = 8
-
-METADATA_FIELDS = "format string, n_bytes long, modality string"
 
 
 def attach_binary_payload(
@@ -46,33 +39,6 @@ def attach_binary_payload(
             F.lit("text").alias("modality"),
         ),
     )
-
-
-def decode_image(df: DataFrame, bin_col: str = "payload") -> DataFrame:
-    """Decode image bytes → (height, width, mode). REAL decode path;
-    requires PIL, which this container does not ship."""
-    try:
-        import PIL.Image  # noqa: F401
-    except ImportError as e:  # pragma: no cover - environment-dependent
-        raise NotImplementedError(
-            "image decode requires PIL; install pillow or use "
-            "extract_features (deterministic fake) for plumbing tests"
-        ) from e
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:  # pragma: no cover
-        import io
-
-        import PIL.Image as Image
-
-        for pdf in batches:
-            dims = [Image.open(io.BytesIO(b)).size for b in pdf[bin_col]]
-            pdf = pdf.assign(
-                width=[d[0] for d in dims], height=[d[1] for d in dims]
-            )
-            yield pdf
-
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    return df.mapInPandas(decode, schema=f"{schema}, width int, height int")
 
 
 def extract_features(
@@ -155,8 +121,7 @@ def audio_chunk(
     duration chunks (stand-in for VAD/segment extraction), one row per
     chunk with its time bounds — the shape an ASR/data pipeline feeds
     to a transcription or embedding stage. Arrow-batched mapInPandas;
-    the real codec decode would slot into the same loop
-    (see decode_image's import-gated pattern)."""
+    the real codec decode would slot into the same loop."""
     chunk_bytes = int(sample_rate * bytes_per_sample * chunk_seconds)
     if chunk_bytes < 1:
         raise ValueError("chunk too small for the given rate/width")

@@ -29,16 +29,6 @@ def rate_to_hex_threshold(rate: float) -> str:
     return format(int(rate * (16 ** _HEX_DIGITS)), f"0{_HEX_DIGITS}x")
 
 
-def hash_sample_predicate(
-    key: str | Column, rate: float, salt: str = "sample"
-) -> Column:
-    """True iff the row is in the sample: the first 4 hex chars of
-    ``md5(salt || ':' || key)`` fall below the rate's threshold."""
-    c = F.col(key) if isinstance(key, str) else key
-    prefix = F.substring(F.md5(F.concat(F.lit(f"{salt}:"), c.cast("string"))), 1, _HEX_DIGITS)
-    return prefix < F.lit(rate_to_hex_threshold(rate))
-
-
 def hash_split(
     key: str | Column, fractions: dict[str, float], salt: str = "split"
 ) -> Column:

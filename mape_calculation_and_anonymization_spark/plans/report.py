@@ -62,20 +62,3 @@ def report(spark, sf_dir: str, queries: dict) -> list[tuple[str, dict]]:
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
     return rows
-
-
-def to_markdown(rows: list[tuple[str, dict]]) -> str:
-    out = [
-        "| query | exchanges | broadcasts | cartesian | BNLJ | codegen | py-eval |",
-        "|---|---|---|---|---|---|---|",
-    ]
-    for name, r in rows:
-        if "error" in r:
-            out.append(f"| {name} | ERROR: {r['error']} | | | | | |")
-            continue
-        out.append(
-            f"| {name} | {r['exchanges']} | {r['broadcasts']} | "
-            f"{'X' if r['cartesian'] else ''} | {'X' if r['bnlj'] else ''} | "
-            f"{r['codegen_spans']} | {'X' if r['python_eval'] else ''} |"
-        )
-    return "\n".join(out)

@@ -1,17 +1,18 @@
-"""Sources: CSV / parquet scans, latest-partition discovery.
+"""Sources: CSV / JSONL / schema-merging parquet scans, latest-partition
+discovery.
 
 Reference parity (see SURVEY.md §2.1):
   S1  CSV scan            — reference/main.py:159,183; anonymize_datasets.py:164
-  S2  Parquet scan        — reference/anonymize_datasets.py:39,191
   S3  Latest-partition    — reference/anonymize_datasets.py:154-159
   S4  Mixed-format folder — reference/anonymize_datasets.py:159-213
   P3  Lowercase columns   — reference/main.py:160,184; anonymize_datasets.py:133
 
-Scale notes: S1/S2 are plain ``spark.read`` so Catalyst gets predicate
-pushdown + column pruning for free. S3 supports two layouts: Hive-style
-``date=YYYY-MM-DD/`` partitioned data (filter → partition pruning, no
-listing on the driver) and the reference's plain dated folders (driver
-lists one directory level — metadata-only, O(#folders)).
+Scale notes: S1 is a plain ``spark.read``, and the S2 parquet scan
+(reference/anonymize_datasets.py:39,191) is ``spark.read.parquet`` at
+its callers, so Catalyst gets predicate pushdown + column pruning for
+free. S3 reads the reference's plain
+dated folders (the driver lists one directory level — metadata-only,
+O(#folders)).
 """
 
 from __future__ import annotations
@@ -37,7 +38,6 @@ def read_csv(
     spark: SparkSession,
     path: str,
     lowercase: bool = True,
-    infer_schema: bool = True,
 ) -> DataFrame:
     """S1 — header CSV scan with schema inference (as the reference's
     ``pd.read_csv`` does). Prefer passing an explicit schema via
@@ -45,15 +45,9 @@ def read_csv(
     an extra pass over the file."""
     df = (
         spark.read.option("header", "true")
-        .option("inferSchema", str(infer_schema).lower())
+        .option("inferSchema", "true")
         .csv(path)
     )
-    return lowercase_columns(df) if lowercase else df
-
-
-def read_parquet(spark: SparkSession, path: str, lowercase: bool = False) -> DataFrame:
-    """S2 — parquet scan (vectorized reader, pruning/pushdown free)."""
-    df = spark.read.parquet(path)
     return lowercase_columns(df) if lowercase else df
 
 
@@ -61,7 +55,6 @@ def read_jsonl(
     spark: SparkSession,
     path: str,
     schema: str | None = None,
-    lowercase: bool = False,
 ) -> DataFrame:
     """Newline-delimited JSON scan (the interchange format most
     crawl/event feeds arrive in). Pass ``schema`` (DDL string) in
@@ -72,13 +65,10 @@ def read_jsonl(
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
-    df = reader.json(path)
-    return lowercase_columns(df) if lowercase else df
+    return reader.json(path)
 
 
-def read_parquet_merged(
-    spark: SparkSession, path: str, lowercase: bool = False
-) -> DataFrame:
+def read_parquet_merged(spark: SparkSession, path: str) -> DataFrame:
     """Schema-evolution parquet scan: ``mergeSchema`` unions the
     footers of every drop under ``path``, so a dataset whose later
     drops ADDED columns reads as one frame (old drops yield NULL for
@@ -89,8 +79,7 @@ def read_parquet_merged(
     100 TB prefer declaring the superset schema explicitly via
     ``spark.read.schema(...)`` and leave mergeSchema for exploration
     or migration backfills."""
-    df = spark.read.option("mergeSchema", "true").parquet(path)
-    return lowercase_columns(df) if lowercase else df
+    return spark.read.option("mergeSchema", "true").parquet(path)
 
 
 def latest_partition(input_directory: str) -> str:
@@ -138,7 +127,7 @@ def read_input_folder(
         if filename.endswith(".csv"):
             out.append((FolderFile(filename, path, "csv"), read_csv(spark, path, lowercase=False)))
         elif filename.endswith(".parquet"):
-            out.append((FolderFile(filename, path, "parquet"), read_parquet(spark, path)))
+            out.append((FolderFile(filename, path, "parquet"), spark.read.parquet(path)))
     return out
 
 
@@ -255,9 +244,3 @@ def read_xlsx_sheet(spark: SparkSession, filepath: str, sheet: str) -> DataFrame
     """K2 read-back surface: one workbook sheet as a Spark DataFrame
     (schema inferred by createDataFrame from the pandas frame)."""
     return spark.createDataFrame(read_xlsx_sheet_pandas(filepath, sheet))
-
-
-def read_orc(spark: SparkSession, path: str, lowercase: bool = False) -> DataFrame:
-    """S7 — ORC scan (vectorized, pruning/pushdown like parquet)."""
-    df = spark.read.orc(path)
-    return lowercase_columns(df) if lowercase else df

@@ -70,43 +70,6 @@ def compact_parquet(spark, path: str, target_partitions: int) -> None:
     replace_dir(path, lambda stage: write_parquet_snappy(compacted, stage))
 
 
-def write_partitioned_parquet(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    dynamic: bool = False,
-) -> None:
-    """Hive-style partitioned parquet layout (``col=value/`` dirs) —
-    the scale-out form of the reference's dated-folder convention
-    (reference/anonymize_datasets.py:154-159 picks ``max(listdir)``;
-    here the date is a partition column and Catalyst prunes to it).
-
-    ``dynamic=True`` switches to dynamic partition overwrite: an
-    incremental daily job rewrites ONLY the partitions present in
-    ``df`` instead of truncating the whole dataset — the idempotent
-    re-run semantics a 100 TB date-partitioned table needs.
-    """
-    writer = df.write.option("compression", "snappy")
-    if dynamic:
-        writer = writer.option("partitionOverwriteMode", "dynamic")
-    writer.partitionBy(*partition_cols).mode("overwrite").parquet(path)
-
-
-def read_latest_partition(spark, path: str, partition_col: str) -> DataFrame:
-    """S3 at scale: newest partition of a ``col=value/`` layout.
-
-    The max is computed over partition *metadata* (directory names —
-    a listing-only job, no data rows read), then the main read filters
-    on the partition column so the scan plans PartitionFilters and
-    touches only that directory's files.
-    """
-    from pyspark.sql import functions as F
-
-    part_values = spark.read.parquet(path).select(partition_col).distinct()
-    latest = part_values.agg(F.max(partition_col)).first()[0]
-    return spark.read.parquet(path).filter(F.col(partition_col) == latest)
-
-
 def anonymized_output_name(filename: str, client: str, client_demo: str = "client_demo") -> str:
     """K3 — rewrite ``{client}*.csv`` → ``{client_demo}*.snappy.parquet``."""
     return filename.replace(client, client_demo).replace(".csv", ".snappy.parquet")

@@ -73,7 +73,6 @@ def streaming_minhash_ingest(
     seed: int = 42,
     shingle_mode: str = "char",
     max_bucket_size: int = 1000,
-    timeout_s: int = 300,
     shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Drain ``docs_stream`` (Trigger.AvailableNow) through the
@@ -183,7 +182,7 @@ def streaming_minhash_ingest(
                 batch.write.mode("append").parquet(docs_dir)
 
     writer = docs_stream.writeStream.foreachBatch(_ingest)
-    _drain(writer, spark, "neardup", timeout_s, shuffle_partitions)
+    _drain(writer, spark, "neardup", shuffle_partitions)
     if not os.path.isdir(pairs_dir):  # empty stream: no pairs ever
         return spark.createDataFrame(
             [],

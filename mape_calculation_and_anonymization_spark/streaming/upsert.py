@@ -31,7 +31,6 @@ def stream_key_table_upsert(
     stream_df: DataFrame,
     key_dir: str,
     col: str = "user_id",
-    timeout_s: int = 300,
 ) -> None:
     """Drain ``stream_df`` with Trigger.AvailableNow, upserting the
     persistent key table once per micro-batch. Raises on timeout
@@ -42,7 +41,7 @@ def stream_key_table_upsert(
         upsert_key_table(key_df, batch_df, key_dir, col)
 
     writer = stream_df.writeStream.foreachBatch(_upsert)
-    _drain(writer, stream_df.sparkSession, "key_upsert", timeout_s)
+    _drain(writer, stream_df.sparkSession, "key_upsert")
 
 
 # ---------------------------------------------------------------------------
@@ -98,7 +97,6 @@ def stream_incremental_agg(
     stream_df: DataFrame,
     table_path: str,
     key: str = "event_type",
-    timeout_s: int = 300,
 ) -> None:
     """Drain ``stream_df`` with Trigger.AvailableNow, merging each
     micro-batch's partial aggregate into the running table. After the
@@ -109,4 +107,4 @@ def stream_incremental_agg(
         merge_partial_aggregate(batch_df, table_path, key)
 
     writer = stream_df.writeStream.foreachBatch(_merge)
-    _drain(writer, stream_df.sparkSession, "inc_agg", timeout_s)
+    _drain(writer, stream_df.sparkSession, "inc_agg")

@@ -256,13 +256,13 @@ def unload_ephemeral_state(spark) -> None:
 
 _PARTS_CONF = "spark.sql.shuffle.partitions"
 _FLUSH_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
+_DRAIN_TIMEOUT_S = 300
 
 
 def _drain(
     writer: DataStreamWriter,
     spark: SparkSession,
     name: str,
-    timeout_s: int,
     shuffle_partitions: int | None = None,
     final_flush: bool = True,
 ) -> None:
@@ -324,7 +324,7 @@ def _drain(
     On every exit path the query is stopped if still active, both
     confs are restored, the checkpoint is removed and the state-store
     providers are unloaded (:func:`unload_ephemeral_state`). A drain
-    that does not finish within ``timeout_s`` has only partially
+    that does not finish within ``_DRAIN_TIMEOUT_S`` has only partially
     drained the source, so it raises TimeoutError instead of handing
     the caller a truncated sink."""
     import os
@@ -346,7 +346,7 @@ def _drain(
             .trigger(availableNow=True)
             .start()
         )
-        finished = query.awaitTermination(timeout_s)
+        finished = query.awaitTermination(_DRAIN_TIMEOUT_S)
     finally:
         if query is not None and query.isActive:
             query.stop()
@@ -356,14 +356,13 @@ def _drain(
         unload_ephemeral_state(spark)
     if not finished:
         raise TimeoutError(
-            f"streaming drain {name!r} did not finish within {timeout_s}s"
+            f"streaming drain {name!r} did not finish within {_DRAIN_TIMEOUT_S}s"
         )
 
 
 def run_stream_to_memory(
     stream_df: DataFrame,
     output_mode: str = "append",
-    timeout_s: int = 300,
     shuffle_partitions: int | None = None,
     final_flush: bool = True,
 ) -> DataFrame:
@@ -379,14 +378,13 @@ def run_stream_to_memory(
         .queryName(name)
         .outputMode(output_mode)
     )
-    _drain(writer, spark, name, timeout_s, shuffle_partitions, final_flush)
+    _drain(writer, spark, name, shuffle_partitions, final_flush)
     return spark.table(name)
 
 
 def run_stream_to_parquet(
     stream_df: DataFrame,
     out_dir: str,
-    timeout_s: int = 300,
     shuffle_partitions: int | None = None,
 ) -> None:
     """Drain a (stateless or append-emitting) streaming DataFrame into
@@ -403,9 +401,7 @@ def run_stream_to_parquet(
         .option("path", out_dir)
         .outputMode("append")
     )
-    _drain(
-        writer, stream_df.sparkSession, "parquet_sink", timeout_s, shuffle_partitions
-    )
+    _drain(writer, stream_df.sparkSession, "parquet_sink", shuffle_partitions)
 
 
 def stream_static_enrich(

@@ -166,6 +166,31 @@ def test_uid_manual_override_honored(spark, tmp_path):
     assert out["uid"] == "CUSTOM0000"
 
 
+def test_uid_legacy_key_table_is_rebuilt_without_null_rows(spark, tmp_path):
+    """Q6: a key file without the ``uid_`` hash column is rebuilt from
+    scratch through the one upsert, so a NULL uid in the batch stays
+    out of the table and every non-null uid gets one row."""
+    key_dir = str(tmp_path / "key")
+    key_path = os.path.join(key_dir, "key_uid.snappy.parquet")
+    os.makedirs(key_dir)
+    spark.createDataFrame([("12345",)], ["uid"]).write.parquet(key_path)
+    df = spark.createDataFrame(
+        [("12345", 1), ("9", 2), ("9", 3), (None, 4)], "uid string, v int"
+    )
+    out = {r["v"]: r["uid"] for r in uid_anonymization("uid", df, key_dir).collect()}
+
+    def digest(uid):
+        return hashlib.blake2b(uid.encode(), digest_size=5).hexdigest()
+
+    assert out == {1: digest("12345"), 2: digest("9"), 3: digest("9"), 4: None}
+    table = spark.read.parquet(key_path)
+    assert table.columns == ["uid", "uid_"]
+    assert sorted(map(tuple, table.collect()), key=repr) == [
+        ("12345", digest("12345")),
+        ("9", digest("9")),
+    ]
+
+
 def test_anonymize_files_end_to_end(spark, tmp_path):
     # newest dated folder wins; CSV+parquet both handled; labels,
     # values, uids, stamping, lowercase, filename rewrite all applied

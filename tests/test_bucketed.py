@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mape_calculation_and_anonymization_spark.fixtures import load_table
-from mape_calculation_and_anonymization_spark.plans import count_exchanges
+from mape_calculation_and_anonymization_spark.plans.audit import count_exchanges
 from mape_calculation_and_anonymization_spark.sources.bucketed import (
     bucketed_join,
 )

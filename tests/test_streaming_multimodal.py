@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 from mape_calculation_and_anonymization_spark.fixtures import load_events
 from mape_calculation_and_anonymization_spark.operators.multimodal import (
     attach_binary_payload,
-    decode_image,
     extract_features,
     frame_sample,
 )
@@ -219,12 +218,6 @@ def test_frame_sample(spark):
         assert sorted(idxs) == list(range(len(idxs)))  # contiguous from 0
 
 
-def test_decode_image_stub_raises_cleanly(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet").limit(1)
-    with pytest.raises(NotImplementedError, match="PIL"):
-        decode_image(attach_binary_payload(docs))
-
-
 def test_stream_static_enrich_matches_batch(spark):
     from mape_calculation_and_anonymization_spark.streaming.windows import (
         read_events_stream,
@@ -268,7 +261,7 @@ def test_stream_static_enrich_matches_batch(spark):
 
 def test_stream_stream_join_equals_batch(spark):
     from mape_calculation_and_anonymization_spark.fixtures import load_events
-    from mape_calculation_and_anonymization_spark.streaming import (
+    from mape_calculation_and_anonymization_spark.streaming.windows import (
         stream_stream_interval_join,
     )
 
@@ -324,7 +317,7 @@ def test_stream_key_upsert_incremental_and_idempotent(spark, tmp_path):
     from mape_calculation_and_anonymization_spark.operators.keys import (
         load_key_table,
     )
-    from mape_calculation_and_anonymization_spark.streaming import (
+    from mape_calculation_and_anonymization_spark.streaming.upsert import (
         stream_key_table_upsert,
     )
 
@@ -425,6 +418,19 @@ def test_stream_checkpoint_lands_on_tmpfs_and_is_cleaned(spark, tmp_path):
         if new:
             leaks[name] = new
     assert not leaks, f"drains left checkpoint entries behind: {leaks}"
+
+
+def test_drain_timeout_raises_and_restores_the_session(spark, monkeypatch):
+    """A drain that outlives ``_DRAIN_TIMEOUT_S`` raises TimeoutError
+    with its query stopped and the shuffle-partition conf restored."""
+    from mape_calculation_and_anonymization_spark.streaming import windows
+
+    monkeypatch.setattr(windows, "_DRAIN_TIMEOUT_S", 0.001)
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    with pytest.raises(TimeoutError, match="did not finish within"):
+        run_stream_to_memory(read_events_stream(spark, SF), shuffle_partitions=3)
+    assert spark.streams.active == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
 
 
 def test_drain_protocol_is_written_once():

@@ -26,7 +26,6 @@ session the bench uses.
 """
 from __future__ import annotations
 
-import gc
 import json
 import os
 import statistics
@@ -34,6 +33,7 @@ import sys
 import time
 
 import __spark_entry__ as entrymod
+from bench import release, warm_tables
 from mape_calculation_and_anonymization_spark.session import get_spark, resolve_sf_dir
 
 SF_DIR = resolve_sf_dir(os.path.join(os.path.dirname(entrymod.SF0001), "sf0.1"))
@@ -43,14 +43,6 @@ def _spark():
     spark = get_spark(app_name="tools")
     spark.sparkContext.setLogLevel("ERROR")
     return spark
-
-
-def _cleanup(spark):
-    spark.catalog.clearCache()
-    for tbl in spark.catalog.listTables():
-        if tbl.isTemporary and tbl.name.startswith("mem_"):
-            spark.catalog.dropTempView(tbl.name)
-    gc.collect()
 
 
 def _explain(df) -> str:
@@ -88,7 +80,7 @@ def cmd_explain(out_dir: str, names: list[str], full: bool = False) -> None:
         n_ex = plan.count("Exchange")
         print(f"{name}: {len(plan.splitlines())} lines, "
               f"{n_ex} Exchange, -> {path}")
-        _cleanup(spark)
+        release(spark)
 
 
 def _last_job_id(spark) -> int:
@@ -101,21 +93,18 @@ def cmd_jobs(names: list[str]) -> None:
     (after one untimed warm pass, so fixture builds don't count)."""
     spark = _spark()
     qs = entrymod.queries()
-    from mape_calculation_and_anonymization_spark.fixtures import load_table
-
-    for t in ("events", "documents", "lineitem", "orders", "embeddings"):
-        load_table(spark, SF_DIR, t).count()
+    warm_tables(spark, SF_DIR)
     out = {}
     for name in names:
         fn = qs[name]
         fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        _cleanup(spark)
+        release(spark)
         spark.range(1).count()  # marker job
         before = _last_job_id(spark)
         fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
         after = _last_job_id(spark)
         out[name] = after - before
-        _cleanup(spark)
+        release(spark)
         print(name, out[name])
     print("RESULT " + json.dumps(out))
 
@@ -127,23 +116,20 @@ def cmd_time(runs: int, names: list[str]) -> None:
     from pyspark.sql import functions as F
 
     spark.range(1_000_000).groupBy(F.col("id") % 7).count().collect()
-    from mape_calculation_and_anonymization_spark.fixtures import load_table
-
-    for t in ("events", "documents", "lineitem", "orders", "embeddings"):
-        load_table(spark, SF_DIR, t).count()
+    warm_tables(spark, SF_DIR)
     out = {}
     for name in names:
         fn = qs[name]
         # one untimed warm pass (codegen/fixtures)
         fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        _cleanup(spark)
+        release(spark)
         samples = []
         for _ in range(runs):
             t0 = time.perf_counter()
             df = fn(spark, SF_DIR)
             df.write.format("noop").mode("overwrite").save()
             samples.append(time.perf_counter() - t0)
-            _cleanup(spark)
+            release(spark)
         out[name] = {
             "median": round(statistics.median(samples), 3),
             "samples": [round(s, 3) for s in samples],
