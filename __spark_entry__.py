@@ -4092,16 +4092,21 @@ def _q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("feature_value", F.round("feature_value", 6))
 
 
-def _x5_pseudonym_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The live (uid, pseudonym) derivation X5 publishes: every
-    customer key plus ONE planted NULL uid (pinning the Arrow UDF's
-    null passthrough on both sides of the compare), digested through
-    the blake2b pandas UDF (reference/anonymize_datasets.py:60,74)."""
+def _x5_uids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The uids X5 digests: every customer key plus ONE planted NULL
+    uid (pinning the Arrow UDF's null passthrough on both sides of the
+    compare). The NULL row is one partition, not one per core, so no
+    task runs an empty split."""
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
-    base = cust.unionByName(
-        spark.range(1).select(F.lit(None).cast("long").alias("c_custkey"))
+    return cust.unionByName(
+        spark.range(1, numPartitions=1).select(F.lit(None).cast("long").alias("c_custkey"))
     )
-    return base.select(
+
+
+def _x5_pseudonymize(uids: DataFrame) -> DataFrame:
+    """The (uid, pseudonym) derivation X5 publishes, through the
+    blake2b pandas UDF (reference/anonymize_datasets.py:60,74)."""
+    return uids.select(
         "c_custkey",
         blake2b_10hex(F.col("c_custkey").cast("string")).alias("pseudonym"),
     )
@@ -4114,7 +4119,7 @@ def _x5_pseudonyms_landed(spark: SparkSession, sf_dir: str) -> str:
 
     return _fixture(
         _fixture_path(sf_dir, "customer", "uid_pseudonyms"),
-        lambda root: _x5_pseudonym_map(spark, sf_dir).write.parquet(
+        lambda root: _x5_pseudonymize(_x5_uids(spark, sf_dir)).write.parquet(
             os.path.join(root, "map")
         ),
     )
@@ -4138,13 +4143,13 @@ def _q_x5_uid_pseudonym(spark: SparkSession, sf_dir: str) -> DataFrame:
     (test_x5_pseudonym_fixture_matches_live); the cross-run key-table
     idempotence contract is separately oracle-backed
     (x5_idempotent_rerun). Reference semantics:
-    reference/anonymize_datasets.py:60,74."""
+    reference/anonymize_datasets.py:60,74. The uids are sorted before
+    they are digested: above the sort's exchange the UDF runs once per
+    row, below it the range-partition sampling job would run it too."""
     _x5_pseudonyms_landed(spark, sf_dir)
-    return (
-        _x5_pseudonym_map(spark, sf_dir)
-        .withColumn("hex_len", F.length("pseudonym").cast("int"))
-        .orderBy(F.col("c_custkey").asc_nulls_first())
-    )
+    return _x5_pseudonymize(
+        _x5_uids(spark, sf_dir).orderBy(F.col("c_custkey").asc_nulls_first())
+    ).withColumn("hex_len", F.length("pseudonym").cast("int"))
 
 
 def _x5_pseudonym_oracle(sf_dir: str) -> str:

@@ -527,7 +527,9 @@ def test_round14_debut_plan_shapes(spark):
     x5 = e._q_x5_uid_pseudonym(spark, SF)
     p3 = physical_plan(x5)
     assert "CartesianProduct" not in p3
-    # live recompute: scan + union + Arrow digest pass + final sort —
-    # exactly one exchange (the orderBy's range partitioning)
+    # live recompute: scan + union + sort + Arrow digest pass —
+    # exactly one exchange (the orderBy's range partitioning), with the
+    # UDF above it, so the range-partition sampling job never runs it
     assert count_exchanges(x5) <= 1, count_exchanges(x5)
-    assert "ArrowEvalPython" in p3 or "BatchEvalPython" in p3
+    assert p3.count("ArrowEvalPython") == 1, p3
+    assert p3.index("ArrowEvalPython") < p3.index("Exchange"), p3

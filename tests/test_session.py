@@ -1,8 +1,9 @@
-"""Session settings and the class-data-sharing archive.
+"""Session settings, the class-data-sharing archive and the codegen cache.
 
 Everything here runs without a Spark session except
 ``test_archive_lifecycle_in_a_fresh_interpreter``, which starts its own
-in a subprocess (the tier-1 session is already up in this one)."""
+in a subprocess (the tier-1 session is already up in this one), and
+``test_warm_cycle_recompiles_nothing``, which runs on the shared one."""
 
 import os
 import subprocess
@@ -403,3 +404,22 @@ def test_archive_lifecycle_in_a_fresh_interpreter(tmp_path):
     assert start() == ["off", "10"]
     assert os.listdir(root) == ["conf"]  # the junk is gone; the next start dumps
     assert not [n for n in os.listdir(tmp_path) if n.startswith("hs_err")]
+
+
+def test_warm_cycle_recompiles_nothing(spark):
+    """A second cycle over 80 distinct one-expression plans compiles no
+    class again. Each plan generates 2 classes, so one cycle (160) is
+    more than Spark's default 100-entry codegen cache holds; under that
+    default the second cycle recompiled all 160 when run alone."""
+    from pyspark.sql import functions as F
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def cycle() -> int:
+        before = compiles.getCount()
+        for i in range(80):
+            spark.range(3).select(F.col("id") * F.lit(i) + F.lit(i)).collect()
+        return compiles.getCount() - before
+
+    assert cycle() >= 160  # the metric counts these plans' compiles
+    assert cycle() == 0

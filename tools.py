@@ -13,7 +13,9 @@ between queries).
 * ``time``: median wall time of ``runs`` noop-sink drains after one
   untimed warm pass.
 * ``jobs``: count Spark JOBS a query launches (construction +
-  noop-sink write), via the monotone job-id counter.
+  noop-sink write), via the monotone job-id counter, and the classes
+  whole-stage codegen compiled in that warm run (CodegenMetrics): a
+  nonzero count means the codegen cache evicted the query's classes.
 
 Usage:
   python tools.py explain <out_dir> <query> [<query> ...]
@@ -40,7 +42,8 @@ SF_DIR = resolve_sf_dir(os.path.join(os.path.dirname(entrymod.SF0001), "sf0.1"))
 
 
 def _spark():
-    spark = get_spark(app_name="tools")
+    # no progress bar: its \r lines overwrite the per-query prints
+    spark = get_spark(app_name="tools", extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 
@@ -88,9 +91,16 @@ def _last_job_id(spark) -> int:
     return max(ids) if ids else -1
 
 
+def _compiles(spark) -> int:
+    """Classes whole-stage codegen has compiled in this JVM."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def cmd_jobs(names: list[str]) -> None:
     """Jobs per query = job ids consumed by construction + noop write
-    (after one untimed warm pass, so fixture builds don't count)."""
+    (after one untimed warm pass, so fixture builds don't count), and
+    the classes compiled in that warm run."""
     spark = _spark()
     qs = entrymod.queries()
     warm_tables(spark, SF_DIR)
@@ -100,12 +110,12 @@ def cmd_jobs(names: list[str]) -> None:
         fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
         release(spark)
         spark.range(1).count()  # marker job
-        before = _last_job_id(spark)
+        jobs0, compiles0 = _last_job_id(spark), _compiles(spark)
         fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        after = _last_job_id(spark)
-        out[name] = after - before
+        out[name] = _last_job_id(spark) - jobs0
+        compiled = _compiles(spark) - compiles0
         release(spark)
-        print(name, out[name])
+        print(name, out[name], f"warm_compiles={compiled}")
     print("RESULT " + json.dumps(out))
 
 
