@@ -10,9 +10,7 @@ per label column over the *sorted global distinct* label list:
     label appears as a word substring → substitute it with
     ``ANON_CLIENT 1``; otherwise pass through. (The reference's loop
     tests ``list_items[0]`` instead of ``item`` on the substring
-    branch — SURVEY.md Q1. ``strict_reference=True`` replicates that
-    bug for golden parity; ``False`` implements the intended
-    first-matching-item semantics.)
+    branch — SURVEY.md Q1. That bug is replicated for golden parity.)
 
 Everything here is JVM-side: the exact path is a literal map lookup
 and the substring path is ``rlike``/``regexp_replace`` — no Python in
@@ -41,12 +39,7 @@ def _word_pattern(label: str) -> str:
     return rf"(?i)\b{re.escape(label)}\b"
 
 
-def anonymize_label_column(
-    col: str,
-    labels: list[str],
-    name: str = "ANON_CLIENT",
-    strict_reference: bool = True,
-) -> Column:
+def anonymize_label_column(col: str, labels: list[str]) -> Column:
     """Build the replacement expression for one label column."""
     labels = sorted(labels)
     c = F.col(col)
@@ -56,8 +49,8 @@ def anonymize_label_column(
     if len(labels) == 1:
         p0 = _word_pattern(labels[0])
         return (
-            F.when(c == F.lit(labels[0]), F.lit(name))
-            .when(c.rlike(p0), F.regexp_replace(c, p0, name))
+            F.when(c == F.lit(labels[0]), F.lit("ANON_CLIENT"))
+            .when(c.rlike(p0), F.regexp_replace(c, p0, "ANON_CLIENT"))
             .otherwise(c)
         )
 
@@ -69,22 +62,12 @@ def anonymize_label_column(
     # Universe size is dimension-scale (collected), so the chain stays
     # small; huge-cardinality identifier columns belong in the uid
     # pseudonymization path instead.
+    # Q1 bug-faithful: only the FIRST sorted label is ever tested/
+    # substituted on the substring branch, tagged index 1.
     p0 = _word_pattern(labels[0])
-    if strict_reference:
-        # Q1 bug-faithful: only the FIRST sorted label is ever tested/
-        # substituted on the substring branch, tagged index 1.
-        chain = F.when(c == F.lit(labels[0]), F.lit(f"{name} 1")).when(
-            c.rlike(p0), F.regexp_replace(c, p0, f"{name} 1")
-        )
-        for i, label in enumerate(labels[1:], start=2):
-            chain = chain.when(c == F.lit(label), F.lit(f"{name} {i}"))
-    else:
-        # intended semantics: per sorted label i — exact match, then
-        # word-substring of label i itself; first hit wins.
-        chain = None
-        for i, label in enumerate(labels, start=1):
-            p = _word_pattern(label)
-            exact = (c == F.lit(label), F.lit(f"{name} {i}"))
-            chain = F.when(*exact) if chain is None else chain.when(*exact)
-            chain = chain.when(c.rlike(p), F.regexp_replace(c, p, f"{name} {i}"))
+    chain = F.when(c == F.lit(labels[0]), F.lit("ANON_CLIENT 1")).when(
+        c.rlike(p0), F.regexp_replace(c, p0, "ANON_CLIENT 1")
+    )
+    for i, label in enumerate(labels[1:], start=2):
+        chain = chain.when(c == F.lit(label), F.lit(f"ANON_CLIENT {i}"))
     return chain.otherwise(c)

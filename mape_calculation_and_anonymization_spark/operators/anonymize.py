@@ -59,20 +59,18 @@ def _resolve(df: DataFrame, name: str) -> str | None:
     return None
 
 
-def perturb_values(df: DataFrame, factor: float = PERTURBATION_FACTOR) -> DataFrame:
-    """X3 — multiply every present value column by ``factor`` (single
-    projection, JVM-side)."""
+def perturb_values(df: DataFrame) -> DataFrame:
+    """X3 — multiply every present value column by
+    ``PERTURBATION_FACTOR`` (single projection, JVM-side)."""
     exprs = {}
     for name in VALUE_COLS:
         actual = _resolve(df, name)
         if actual is not None:
-            exprs[actual] = F.col(actual) * F.lit(factor)
+            exprs[actual] = F.col(actual) * F.lit(PERTURBATION_FACTOR)
     return df.withColumns(exprs) if exprs else df
 
 
-def anonymize_labels(
-    df: DataFrame, strict_reference: bool = True, name: str = "ANON_CLIENT"
-) -> DataFrame:
+def anonymize_labels(df: DataFrame) -> DataFrame:
     """X4 — replace client/brand labels in every present label column.
 
     One tiny distinct-collect per label column (the universe drives
@@ -84,9 +82,7 @@ def anonymize_labels(
         actual = _resolve(df, cand)
         if actual is not None:
             labels = label_universe(df, actual)
-            exprs[actual] = anonymize_label_column(
-                actual, labels, name=name, strict_reference=strict_reference
-            )
+            exprs[actual] = anonymize_label_column(actual, labels)
     return df.withColumns(exprs) if exprs else df
 
 
@@ -99,15 +95,11 @@ def anonymize_uids(df: DataFrame, key_dir: str = "./key") -> DataFrame:
     return df
 
 
-def cdm_anonymization(
-    df: DataFrame,
-    key_dir: str = "./key",
-    strict_reference: bool = True,
-) -> DataFrame:
+def cdm_anonymization(df: DataFrame, key_dir: str = "./key") -> DataFrame:
     """Full anonymization composition (reference/anonymize_datasets.py:112-135):
     perturb → labels → uids → lowercase all column names."""
     df = perturb_values(df)
-    df = anonymize_labels(df, strict_reference=strict_reference)
+    df = anonymize_labels(df)
     df = anonymize_uids(df, key_dir=key_dir)
     return lowercase_columns(df)
 
@@ -136,7 +128,6 @@ def anonymize_files(
     timezone: str = "America/Chicago",
     client_demo: str = "client_demo",
     key_dir: str = "./key",
-    strict_reference: bool = True,
     now: datetime | None = None,
 ) -> list[str]:
     """Batch driver (reference/anonymize_datasets.py:137-215): newest
@@ -154,7 +145,7 @@ def anonymize_files(
 
     outputs: list[str] = []
     for meta, df in read_input_folder(spark, input_directory):
-        df = cdm_anonymization(df, key_dir=key_dir, strict_reference=strict_reference)
+        df = cdm_anonymization(df, key_dir=key_dir)
         df = stamp_metadata(df, timezone, now=now)
         out_path = os.path.join(
             output_directory, anonymized_output_name(meta.filename, client, client_demo)

@@ -36,7 +36,7 @@ from .rebalance import checkpoint
 
 
 def word_frequencies(
-    docs: DataFrame, text_col: str = "text", limit: int | None = None
+    docs: DataFrame, limit: int | None = None
 ) -> DataFrame:
     """Corpus → (word, freq) table: lowercase, split on non-letters.
     ``limit`` keeps the top-N words by (freq desc, word asc) — a
@@ -46,7 +46,7 @@ def word_frequencies(
     words = (
         docs.select(
             F.explode(
-                F.split(F.lower(F.col(text_col)), "[^a-z]+")
+                F.split(F.lower(F.col("text")), "[^a-z]+")
             ).alias("word")
         )
         .filter(F.length("word") > 0)
@@ -81,30 +81,28 @@ def _apply_merge(syms, left: str, right: str):
     )
 
 
-def bpe_merges_local(
-    words: DataFrame,
-    n_merges: int,
-    word_col: str = "word",
-    freq_col: str = "freq",
-    max_words: int = 100_000,
-) -> DataFrame:
+# vocabulary rows bpe_merges_local may collect to the driver
+_MAX_WORDS = 100_000
+
+
+def bpe_merges_local(words: DataFrame, n_merges: int) -> DataFrame:
     """BPE merges with the greedy loop on the driver — the production
     steady state (HuggingFace/SentencePiece trainers do exactly this):
     the corpus-sized work is the ONE distributed word-frequency
     aggregate upstream; the loop's input is the vocabulary-sized word
-    table, bounded here by ``max_words`` (fail-loudly guard, same
-    discipline as pq.py's max_queries — a corpus-sized frame must
+    table, bounded here by ``_MAX_WORDS`` (fail-loudly guard, same
+    discipline as pq.py's ``_MAX_QUERIES`` — a corpus-sized frame must
     never be collected). Identical output to :func:`bpe_merges`
     (pinned in tests/test_bpe.py); use the distributed variant when
     the symbol table genuinely exceeds driver memory."""
     rows = (
-        words.select(F.col(word_col), F.col(freq_col))
-        .limit(max_words + 1)
+        words.select(F.col("word"), F.col("freq"))
+        .limit(_MAX_WORDS + 1)
         .collect()
     )
-    if len(rows) > max_words:
+    if len(rows) > _MAX_WORDS:
         raise ValueError(
-            f"word table exceeds max_words={max_words}: the merge loop "
+            f"word table exceeds max_words={_MAX_WORDS}: the merge loop "
             "collects the vocabulary to the driver; cap it upstream "
             "(word_frequencies(limit=...)) or use bpe_merges()"
         )
@@ -209,11 +207,7 @@ def _encode_word(word: str, merges: list[tuple[str, str]]) -> list[str]:
     return syms
 
 
-def bpe_encode_words(
-    words: DataFrame,
-    merges: DataFrame,
-    word_col: str = "word",
-) -> DataFrame:
+def bpe_encode_words(words: DataFrame, merges: DataFrame) -> DataFrame:
     """Encode a DISTINCT word table against a learned merge list:
     adds ``tokens`` (array<string>) and ``n_tokens``.
 
@@ -250,16 +244,11 @@ def bpe_encode_words(
             else None
         )
 
-    out = words.withColumn("tokens", _encode(F.col(word_col)))
+    out = words.withColumn("tokens", _encode(F.col("word")))
     return out.withColumn("n_tokens", F.size("tokens"))
 
 
-def bpe_token_stats(
-    docs: DataFrame,
-    merges: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_token_stats(docs: DataFrame, merges: DataFrame) -> DataFrame:
     """Per-document subword token counts under a learned BPE merge
     list — the sizing pass every packing/costing stage needs after
     tokenizer training. One corpus explode to (doc, word) counts, one
@@ -272,13 +261,13 @@ def bpe_token_stats(
     table the merges were trained on."""
     doc_words = (
         docs.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.explode(
-                F.split(F.lower(F.col(text_col)), "[^a-z]+")
+                F.split(F.lower(F.col("text")), "[^a-z]+")
             ).alias("word"),
         )
         .filter(F.length("word") > 0)
-        .groupBy(id_col, "word")
+        .groupBy("doc_id", "word")
         .agg(F.count(F.lit(1)).alias("n_occ"))
     )
     vocab = bpe_encode_words(
@@ -286,7 +275,7 @@ def bpe_token_stats(
     ).select("word", "n_tokens")
     per_doc = (
         doc_words.join(vocab, "word")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("n_occ").alias("n_words"),
             F.sum(F.col("n_occ") * F.col("n_tokens")).alias("n_subword_tokens"),
@@ -294,11 +283,11 @@ def bpe_token_stats(
     )
     # left join back so word-free documents report zeros, not absence
     return (
-        docs.select(id_col)
+        docs.select("doc_id")
         .distinct()
-        .join(per_doc, id_col, "left")
+        .join(per_doc, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_words", F.lit(0)).alias("n_words"),
             F.coalesce("n_subword_tokens", F.lit(0)).alias("n_subword_tokens"),
         )

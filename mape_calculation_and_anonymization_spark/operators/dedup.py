@@ -39,20 +39,17 @@ from .rebalance import checkpoint, ensure_min_partitions, persisted
 # ---------------------------------------------------------------------------
 
 
-def tokens(col: str | Column, lowercase: bool = True) -> Column:
-    """Distinct whitespace tokens as an array (unigram set)."""
-    c = F.col(col) if isinstance(col, str) else col
-    if lowercase:
-        c = F.lower(c)
+def tokens(col: str | Column) -> Column:
+    """Distinct lowercased whitespace tokens as an array (unigram set)."""
+    c = F.lower(F.col(col) if isinstance(col, str) else col)
     return F.array_distinct(F.split(F.trim(c), r"\s+"))
 
 
-def char_shingles(col: str | Column, k: int = 5, lowercase: bool = True) -> Column:
-    """Distinct character k-grams. Built from sequence+transform so the
-    whole shingling stays in codegen (no UDF)."""
-    c = F.col(col) if isinstance(col, str) else col
-    if lowercase:
-        c = F.lower(c)
+def char_shingles(col: str | Column, k: int = 5) -> Column:
+    """Distinct lowercased character k-grams. Built from
+    sequence+transform so the whole shingling stays in codegen (no
+    UDF)."""
+    c = F.lower(F.col(col) if isinstance(col, str) else col)
     # substring is 1-based; guard short strings with greatest(…,1)
     return F.array_distinct(
         F.transform(
@@ -62,8 +59,8 @@ def char_shingles(col: str | Column, k: int = 5, lowercase: bool = True) -> Colu
     )
 
 
-def word_ngrams(col: str | Column, n: int = 3, lowercase: bool = True) -> Column:
-    """Distinct word n-grams (space-joined).
+def word_ngrams(col: str | Column, n: int = 3) -> Column:
+    """Distinct lowercased word n-grams (space-joined).
 
     Built as n−1 chained zip_with ops over shifted slices — one walk
     of the token array per zip (the same trick as
@@ -73,9 +70,7 @@ def word_ngrams(col: str | Column, n: int = 3, lowercase: bool = True) -> Column
     corpus. Documents shorter than ``n`` tokens yield their whole
     text as one (short) gram — identical to the historical
     slice-takes-what-exists behavior."""
-    c = F.col(col) if isinstance(col, str) else col
-    if lowercase:
-        c = F.lower(c)
+    c = F.lower(F.col(col) if isinstance(col, str) else col)
     toks = F.split(F.trim(c), r"\s+")
     m = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0))
     grams = F.slice(toks, 1, m)
@@ -311,15 +306,9 @@ def exact_substring_spans(
     )
 
 
-def gated_cluster_representatives(
-    members: DataFrame,
-    cluster_col: str = "cluster",
-    id_col: str = "doc_id",
-    quality_col: str = "quality",
-    passed_col: str = "passed",
-) -> DataFrame:
+def gated_cluster_representatives(members: DataFrame) -> DataFrame:
     """Quality-GATE-aware near-dup representative selection: the
-    keep/drop fusion of the keep-best pick (highest ``quality_col``,
+    keep/drop fusion of the keep-best pick (highest ``quality``,
     id tie-break) with hard quality gates — a cluster's
     representative must PASS the gates, and a cluster none of whose
     members pass is an explicit whole-cluster DROP (``kept_id``
@@ -328,8 +317,9 @@ def gated_cluster_representatives(
     copy is boilerplate-flooded should yield nothing, not their
     least-bad copy.
 
-    Input: one row per cluster member with a boolean ``passed_col``
-    (NULLs treated as FAIL upstream) and a numeric ``quality_col``.
+    Input: one row per cluster member (``cluster``, ``doc_id``) with a
+    boolean ``passed`` (NULLs treated as FAIL upstream) and a numeric
+    ``quality``.
     Output per cluster: ``kept_id``/``kept_quality`` (NULL when no
     member passes), ``n_members``, ``n_pass``.
 
@@ -341,21 +331,21 @@ def gated_cluster_representatives(
     corpus, only the cluster map."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(cluster_col).orderBy(
-        F.col(passed_col).desc(), F.col(quality_col).desc(), F.col(id_col)
+    w = Window.partitionBy("cluster").orderBy(
+        F.col("passed").desc(), F.col("quality").desc(), F.col("doc_id")
     )
-    w_all = Window.partitionBy(cluster_col)
+    w_all = Window.partitionBy("cluster")
     return (
         members.withColumn("_rn", F.row_number().over(w))
         .withColumn("n_members", F.count(F.lit(1)).over(w_all))
         .withColumn(
-            "n_pass", F.sum(F.col(passed_col).cast("long")).over(w_all)
+            "n_pass", F.sum(F.col("passed").cast("long")).over(w_all)
         )
         .filter(F.col("_rn") == 1)
         .select(
-            cluster_col,
-            F.when(F.col(passed_col), F.col(id_col)).alias("kept_id"),
-            F.when(F.col(passed_col), F.col(quality_col)).alias(
+            "cluster",
+            F.when(F.col("passed"), F.col("doc_id")).alias("kept_id"),
+            F.when(F.col("passed"), F.col("quality")).alias(
                 "kept_quality"
             ),
             "n_members",
@@ -364,8 +354,12 @@ def gated_cluster_representatives(
     )
 
 
-def _bloom_probes(df: DataFrame, col: str, num_bits: int, num_hashes: int):
-    """Per-row Bloom probe positions: ``num_hashes`` independent
+# Bloom probes per key, shared by the bitmap build and its probe
+_BLOOM_HASHES = 5
+
+
+def _bloom_probes(df: DataFrame, col: str, num_bits: int):
+    """Per-row Bloom probe positions: ``_BLOOM_HASHES`` independent
     64-bit hashes (xxhash64 seeded by a literal salt column) mapped
     onto the ``num_bits`` bitmap, each emitted as the bitmap WORD it
     lands in plus the single-bit mask within that word. All built-in
@@ -373,7 +367,7 @@ def _bloom_probes(df: DataFrame, col: str, num_bits: int, num_hashes: int):
     probes = F.array(
         *[
             F.pmod(F.xxhash64(F.col(col), F.lit(i)), F.lit(num_bits))
-            for i in range(num_hashes)
+            for i in range(_BLOOM_HASHES)
         ]
     )
     return (
@@ -387,9 +381,7 @@ def _bloom_probes(df: DataFrame, col: str, num_bits: int, num_hashes: int):
     )
 
 
-def bloom_bitmap(
-    df: DataFrame, col: str, num_bits: int = 1 << 17, num_hashes: int = 5
-) -> DataFrame:
+def bloom_bitmap(df: DataFrame, col: str, num_bits: int = 1 << 17) -> DataFrame:
     """Distributed Bloom-filter build as a plain DataFrame aggregate:
     one row per bitmap WORD that has at least one set bit —
     ``(_word, _bits)`` with ``_bits = bit_or`` of the members' masks.
@@ -402,7 +394,7 @@ def bloom_bitmap(
     probe join declarative (Catalyst broadcasts it) instead of
     smuggling a sketch blob through a scalar subquery."""
     return (
-        _bloom_probes(df.select(F.col(col)), col, num_bits, num_hashes)
+        _bloom_probes(df.select(F.col(col)), col, num_bits)
         .groupBy("_word")
         .agg(F.bit_or("_mask").alias("_bits"))
     )
@@ -413,7 +405,6 @@ def bloom_prefilter_anti_join(
     store: DataFrame,
     fp_col: str,
     num_bits: int = 1 << 17,
-    num_hashes: int = 5,
 ) -> DataFrame:
     """EXACTNESS-PRESERVING Bloom pre-filter for incremental dedup:
     returns exactly ``increment LEFT ANTI JOIN store ON fp_col`` —
@@ -449,9 +440,9 @@ def bloom_prefilter_anti_join(
             f"before calling (the probe rollup would collapse or "
             f"mis-join on them)"
         )
-    bitmap = bloom_bitmap(store, fp_col, num_bits, num_hashes)
+    bitmap = bloom_bitmap(store, fp_col, num_bits)
     probed = (
-        _bloom_probes(increment, fp_col, num_bits, num_hashes)
+        _bloom_probes(increment, fp_col, num_bits)
         .join(F.broadcast(bitmap), "_word", "left")
         .withColumn(
             "_hit",
@@ -463,7 +454,7 @@ def bloom_prefilter_anti_join(
             ).cast("int"),
         )
         .groupBy(*increment.columns)
-        .agg((F.sum("_hit") == F.lit(num_hashes)).alias("_maybe"))
+        .agg((F.sum("_hit") == F.lit(_BLOOM_HASHES)).alias("_maybe"))
     )
     definite_new = probed.filter(~F.col("_maybe")).drop("_maybe")
     confirmed_new = (
@@ -607,28 +598,26 @@ def lsh_candidate_pairs(
     sigs: DataFrame,
     id_col: str,
     sig_col: str = "sig",
-    bands: int = 16,
-    max_bucket_size: int = 1000,
     *,
     sig_len: int,
 ) -> DataFrame:
-    """Banded LSH: split each signature into ``bands`` equal slices,
+    """Banded LSH: split each signature into 8 equal slices (bands),
     hash each slice, self-join on (band index, slice hash).
 
     Returns distinct candidate pairs (id_a < id_b). The join shuffles
     on the bucket key — linear scan, no cross join. Buckets larger
-    than ``max_bucket_size`` are dropped before pair expansion (they
+    than 1000 ids are dropped before pair expansion (they
     are near-identical floods; route those through exact dedup).
 
     ``sig_len`` is the signature length (``num_hashes``); the caller
     knows it, and probing it from the data would cost a job."""
-    rows_per_band = max(1, sig_len // bands)
+    rows_per_band = max(1, sig_len // 8)
 
     band_hash = F.posexplode(
         F.array(
             *[
                 F.hash(F.slice(F.col(sig_col), j * rows_per_band + 1, rows_per_band))
-                for j in range(bands)
+                for j in range(8)
             ]
         )
     )
@@ -640,7 +629,7 @@ def lsh_candidate_pairs(
     # bucket frame plus a materialization barrier. Grouping once and
     # expanding the C(s, 2) pairs inside the row costs a single
     # shuffle of the same frame, the flood cap becomes a plain size
-    # predicate on the collected array (≤``max_bucket_size`` ids ·
+    # predicate on the collected array (≤1000 ids ·
     # 8 bytes per row — bounded by the cap itself), and a doc
     # appears at most once per (band, bh), so the sorted-array
     # expansion reproduces the self-join's ``a._id < b._id`` pairs
@@ -648,10 +637,9 @@ def lsh_candidate_pairs(
     grouped = buckets.groupBy("band", "bh").agg(
         F.sort_array(F.collect_list("_id")).alias("_ids")
     )
-    if max_bucket_size:
-        grouped = grouped.filter(F.size("_ids") <= max_bucket_size)
     return (
-        grouped.filter(F.size("_ids") >= 2)
+        grouped.filter(F.size("_ids") <= 1000)
+        .filter(F.size("_ids") >= 2)
         .select(F.explode(_sorted_pairs("_ids")).alias("_p"))
         .select(F.col("_p.a").alias("id_a"), F.col("_p.b").alias("id_b"))
         .distinct()
@@ -792,13 +780,8 @@ def md5_lsh_candidate_pairs(
 
 def minhash_near_duplicates(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     shingle_k: int = 5,
-    num_hashes: int = 32,
-    bands: int = 8,
     threshold: float = 0.6,
-    seed: int = 42,
     shingle_mode: str = "char",
     precomputed_sigs: DataFrame | None = None,
     precomputed_shingles: DataFrame | None = None,
@@ -816,13 +799,13 @@ def minhash_near_duplicates(
     touching answer-sized data. Results are identical by construction
     (same signatures → same candidates → same exact verify).
 
-    Default signature width is 32 hashes / 8 bands (band width 4):
+    The signature is 32 hashes (seed 42) / 8 bands (band width 4):
     the S-curve midpoint sits at (1/b)^(1/4) ≈ 0.59, so pairs near
     real near-dup similarity (≥0.8) are caught with >0.999
     probability per run while the signature aggregation costs half of
-    the 64-hash variant. Raise num_hashes/bands together (constant
-    width 4) when the decision threshold must dip toward 0.5 —
-    candidate recall at sim≈threshold is what bands buy.
+    the 64-hash variant. A threshold toward 0.5 would need more
+    hashes and bands together (constant width 4) — candidate recall
+    at sim≈threshold is what bands buy.
 
     ``shingle_mode``: 'char' (k-grams, robust to small edits inside
     words) or 'word' (word shingle_k-grams — the right signal for
@@ -830,8 +813,8 @@ def minhash_near_duplicates(
     shingles over such corpora are dense, which floods the candidate
     set with genuinely-similar-at-char-level pairs).
 
-    ``precomputed_shingles`` ((id_col, sh) — the same shingle space as
-    ``shingler(text_col, shingle_k)`` over the SAME corpus, e.g. a
+    ``precomputed_shingles`` ((doc_id, sh) — the same shingle space as
+    ``shingler("text", shingle_k)`` over the SAME corpus, e.g. a
     landed shingle-table fixture): the verification stage then reads
     the materialized tokens instead of re-running the interpreted HOF
     shingling over every candidate document. Only meaningful together
@@ -846,26 +829,26 @@ def minhash_near_duplicates(
     if precomputed_sigs is not None:
         cands = checkpoint(  # answer-sized; feeds 2 consumers
             lsh_candidate_pairs(
-                precomputed_sigs, "_id", "sig", bands, sig_len=num_hashes
+                precomputed_sigs, "_id", "sig", sig_len=32
             ),
             "dedup.minhash_near_duplicates.cands",
         )
         cand_ids = (
-            cands.select(F.col("id_a").alias(id_col))
-            .unionByName(cands.select(F.col("id_b").alias(id_col)))
+            cands.select(F.col("id_a").alias("doc_id"))
+            .unionByName(cands.select(F.col("id_b").alias("doc_id")))
             .distinct()
         )
         if precomputed_shingles is not None:
             shingle_src = precomputed_shingles.select(
-                F.col(id_col), F.col("sh")
+                F.col("doc_id"), F.col("sh")
             )
         else:
             shingle_src = docs.select(
-                F.col(id_col), shingler(text_col, shingle_k).alias("sh")
+                F.col("doc_id"), shingler("text", shingle_k).alias("sh")
             )
         cand_sh = checkpoint(  # shingled once, joined twice
-            shingle_src.join(cand_ids, id_col, "left_semi").select(
-                F.col(id_col).alias("_id"), "sh"
+            shingle_src.join(cand_ids, "doc_id", "left_semi").select(
+                F.col("doc_id").alias("_id"), "sh"
             ),
             "dedup.minhash_near_duplicates.cand_sh",
         )
@@ -893,11 +876,11 @@ def minhash_near_duplicates(
     # coarse scan before it so the hot loop runs on all cores
     with persisted(
         ensure_min_partitions(docs).select(
-            F.col(id_col).alias("_id"), shingler(text_col, shingle_k).alias("sh")
+            F.col("doc_id").alias("_id"), shingler("text", shingle_k).alias("sh")
         )
     ) as sh:
-        sigs = minhash_signatures(sh, "_id", F.col("sh"), num_hashes, seed)
-        cands = lsh_candidate_pairs(sigs, "_id", "sig", bands, sig_len=num_hashes)
+        sigs = minhash_signatures(sh, "_id", F.col("sh"), 32, 42)
+        cands = lsh_candidate_pairs(sigs, "_id", "sig", sig_len=32)
         a = sh.select(F.col("_id").alias("id_a"), F.col("sh").alias("sh_a"))
         b = sh.select(F.col("_id").alias("id_b"), F.col("sh").alias("sh_b"))
         verified = (
@@ -1015,18 +998,17 @@ def make_simhash64_udf(shingle_n: int = 1, feature_hash: str = "blake2b"):
 
 
 # token-level instance (the historical surface; tests pin its digest
-# behavior) — near-dup detection should prefer the 3-gram space via
-# simhash_near_duplicates' default
+# behavior) — near-dup detection should prefer the 3-gram space of
+# simhash_near_duplicates
 simhash64_udf = make_simhash64_udf(1)
+
+# word n-gram width of simhash_near_duplicates' features
+_SIMHASH_SHINGLE_N = 3
 
 
 def simhash_near_duplicates(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_hamming: int = 3,
-    chunks: int | None = None,
-    shingle_n: int = 3,
     feature_hash: str = "blake2b",
     precomputed_sigs: DataFrame | None = None,
 ) -> DataFrame:
@@ -1034,36 +1016,35 @@ def simhash_near_duplicates(
     distance ``chunks-1`` share at least one identical chunk — so
     bucket-join on chunks, then verify with bit_count(xor) ≤ max.
 
-    ``chunks`` defaults to ``max_hamming+1`` (the smallest count with
+    It bands on ``max_hamming+1`` chunks (the smallest count with
     guaranteed recall). Narrow chunks mean bigger buckets — keep
     max_hamming small (≤3 typical) at corpus scale, where 4 chunks of
     16 bits keep bucket-join fan-out tiny.
 
-    ``shingle_n=3`` hashes word-3-gram feature sets (shared PHRASING);
-    pass 1 for the historical unigram space — see make_simhash64_udf
-    for why unigrams saturate on templated corpora. ``feature_hash``
-    passes through to make_simhash64_udf ("md5" = the
-    external-engine-portable signature).
+    Features are word ``_SIMHASH_SHINGLE_N``-grams (3: shared
+    PHRASING, not the historical unigram space — see
+    make_simhash64_udf for why unigrams saturate on templated
+    corpora). ``feature_hash`` passes through to make_simhash64_udf
+    ("md5" = the external-engine-portable signature).
 
     Recall note the oracle relies on: with ``chunks = max_hamming+1``
-    (the default) the pigeonhole guarantee makes the bucketed output
+    the pigeonhole guarantee makes the bucketed output
     EQUAL to the brute-force all-pairs Hamming filter — so a quadratic
     SQL twin can verify the linear banded plan exactly.
 
     ``precomputed_sigs`` — a ``(_id, sim)`` frame (the offline-index
     posture: signatures are an artifact that outlives queries, same
     as minhash_near_duplicates' option). When provided, the pandas-UDF
-    signature pass is skipped entirely and ``docs``/``text_col``/
-    ``shingle_n``/``feature_hash`` are ignored; the frame must carry
+    signature pass is skipped entirely and ``docs`` and
+    ``feature_hash`` are ignored; the frame must carry
     exactly the columns ``_id`` (doc key) and ``sim`` (signed 64-bit
     signature). The UDF is deterministic, so a landed fixture is
     value-equal to a fresh derivation (pinned by
     tests/test_dedup.py::test_simhash_precomputed_sigs_equivalent).
     """
-    if chunks is None:
-        chunks = min(64, max_hamming + 1)
-    if max_hamming >= chunks:
-        raise ValueError("guaranteed recall requires max_hamming < chunks")
+    if max_hamming >= 64:
+        raise ValueError("guaranteed recall requires max_hamming < 64")
+    chunks = max_hamming + 1
     # nearly-equal chunk widths covering all 64 bits
     base_w, extra = divmod(64, chunks)
     widths = [base_w + (1 if j < extra else 0) for j in range(chunks)]
@@ -1073,15 +1054,15 @@ def simhash_near_duplicates(
     else:
         # the pandas-UDF signature is the hot loop — parallelize a
         # coarse scan before shipping Arrow batches to the workers
-        sig_udf = make_simhash64_udf(shingle_n, feature_hash)
+        sig_udf = make_simhash64_udf(_SIMHASH_SHINGLE_N, feature_hash)
         # materialize the signature table (id + one long per doc —
         # tiny): both sides of the bucket self-join consume it, and
         # without the barrier each side would re-run the pandas-UDF
         # projection
         sigs = checkpoint(
             ensure_min_partitions(docs).select(
-                F.col(id_col).alias("_id"),
-                sig_udf(F.col(text_col)).alias("sim"),
+                F.col("doc_id").alias("_id"),
+                sig_udf(F.col("text")).alias("sim"),
             ),
             "dedup.simhash_near_duplicates.sigs",
         )
@@ -1124,12 +1105,7 @@ def simhash_near_duplicates(
     return pairs.filter(F.col("hamming") <= max_hamming)
 
 
-def apply_remove_spans(
-    docs: DataFrame,
-    spans: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def apply_remove_spans(docs: DataFrame, spans: DataFrame) -> DataFrame:
     """APPLY an ExactSubstr remove-span plan — the deduped corpus
     :func:`exact_substring_spans` only *plans* (round-15-ready; the
     Lee et al. 2021 pipeline's second half: the paper cuts every
@@ -1157,7 +1133,7 @@ def apply_remove_spans(
     array (bounded by doc length), and the cut itself is a per-row
     array filter on the joined frame — no window, one shuffle on the
     document key plus the docs-side join."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     # one document-key aggregate (round 17): the former
     # explode→distinct→groupBy chain hash-partitioned the covered
     # index stream TWICE — once on (id, idx) for the distinct, once
@@ -1166,18 +1142,18 @@ def apply_remove_spans(
     # sort_array(collect_set(x)) equals the old
     # sort_array(collect_list(distinct x)) value exactly.
     covered = spans.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.sequence(F.col("span_start"), F.col("span_end"))
         ).alias("_idx"),
     )
-    removed = covered.groupBy(id_col).agg(
+    removed = covered.groupBy("doc_id").agg(
         F.sort_array(F.collect_set("_idx")).alias("_rm")
     )
-    base = docs.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col), toks.alias("_toks")
+    base = docs.filter(F.col("text").isNotNull()).select(
+        F.col("doc_id"), toks.alias("_toks")
     )
-    joined = base.join(removed, id_col, "left")
+    joined = base.join(removed, "doc_id", "left")
     rm = F.coalesce(F.col("_rm"), F.array().cast("array<int>"))
     clean = F.filter(F.col("_toks"), lambda x, i: ~F.array_contains(rm, i))
     gaps = F.zip_with(
@@ -1189,7 +1165,7 @@ def apply_remove_spans(
         F.size(F.filter(gaps, lambda x: x)) + F.lit(1)
     )
     return joined.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.when(F.size(rm) > 0, F.lit("cut"))
         .otherwise(F.lit("kept"))
         .alias("action"),
@@ -1204,15 +1180,12 @@ def minhash_incremental_pairs(
     new_docs: DataFrame,
     standing_docs: DataFrame,
     standing_sigs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     shingle_k: int = 5,
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.6,
     seed: int = 42,
     shingle_mode: str = "char",
-    max_bucket_size: int = 1000,
     precomputed_new_sigs: DataFrame | None = None,
 ) -> DataFrame:
     """INCREMENTAL near-dup — the daily-drop path (round-15-ready):
@@ -1258,8 +1231,8 @@ def minhash_incremental_pairs(
     # shingle projection" variant).
     with persisted(
         ensure_min_partitions(new_docs).select(
-            F.col(id_col).alias("_id"),
-            shingler(text_col, shingle_k).alias("sh"),
+            F.col("doc_id").alias("_id"),
+            shingler("text", shingle_k).alias("sh"),
         )
     ) as new_sh:
         # ``precomputed_new_sigs`` ((_id, sig) — minhash_signatures
@@ -1311,13 +1284,11 @@ def minhash_incremental_pairs(
         buckets = sigs_all.select(
             "_id", "_new", band_hash.alias("band", "bh")
         )
-        grouped = buckets.groupBy("band", "bh").agg(
-            F.collect_list(F.struct("_id", "_new")).alias("_ms")
+        grouped = (
+            buckets.groupBy("band", "bh")
+            .agg(F.collect_list(F.struct("_id", "_new")).alias("_ms"))
+            .filter(F.size("_ms") <= 1000)
         )
-        if max_bucket_size:
-            grouped = grouped.filter(
-                F.size("_ms") <= max_bucket_size
-            )
         news = F.filter("_ms", lambda m: m["_new"])
         pair_structs = F.flatten(
             F.transform(
@@ -1342,19 +1313,19 @@ def minhash_incremental_pairs(
             "dedup.minhash_incremental_pairs.cands",
         )
         cand_ids = (
-            cands.select(F.col("id_a").alias(id_col))
-            .unionByName(cands.select(F.col("id_b").alias(id_col)))
+            cands.select(F.col("id_a").alias("doc_id"))
+            .unionByName(cands.select(F.col("id_b").alias("doc_id")))
             .distinct()
         )
         standing_cand_sh = (
-            standing_docs.join(cand_ids, id_col, "left_semi")
+            standing_docs.join(cand_ids, "doc_id", "left_semi")
             .select(
-                F.col(id_col).alias("_id"),
-                shingler(text_col, shingle_k).alias("sh"),
+                F.col("doc_id").alias("_id"),
+                shingler("text", shingle_k).alias("sh"),
             )
         )
         new_cand_sh = new_sh.join(
-            cand_ids.withColumnRenamed(id_col, "_id"), "_id", "left_semi"
+            cand_ids.withColumnRenamed("doc_id", "_id"), "_id", "left_semi"
         )
         all_sh = checkpoint(  # candidates only — answer-sized, not drop-sized
             new_cand_sh.unionByName(standing_cand_sh),

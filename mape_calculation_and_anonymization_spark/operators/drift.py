@@ -53,6 +53,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+# PSI's additive smoothing s and its drift-flag threshold, shared by
+# the fused scorecard and the PSI fold
+_PSI_SMOOTHING = 0.5
+_PSI_THRESHOLD = 0.2
+
+
 def _binned_cells(
     ref: DataFrame,
     cur: DataFrame,
@@ -158,9 +164,6 @@ def drift_scorecard(
     group_cols: list[str],
     value_col: str,
     bin_width: float,
-    smoothing: float = 0.5,
-    psi_threshold: float = 0.2,
-    ks_threshold: float = 0.1,
 ) -> DataFrame:
     """PSI **and** KS between two drops in ONE pass — the fusion of
     :func:`population_stability` and :func:`ks_statistic` (VERDICT r15
@@ -174,7 +177,7 @@ def drift_scorecard(
     (Jeffreys-smoothed, defined even for one-sided groups), ``ks`` +
     ``ks_flag`` (NULL for one-sided groups — no ECDF to compare; the
     try_divide convention of :func:`ks_statistic`). Each statistic
-    keeps its own published threshold convention.
+    keeps its own published threshold convention: PSI > 0.2, KS > 0.1.
 
     Scale shape: identical to the parents' — the ordered cumulative
     window and the unordered totals window share the group hash
@@ -189,7 +192,7 @@ def drift_scorecard(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     w_all = Window.partitionBy("_g")
-    s = float(smoothing)
+    s = _PSI_SMOOTHING
     tot = cells.select(
         "_g",
         "_n_ref",
@@ -220,9 +223,9 @@ def drift_scorecard(
         "n_cur",
         "n_bins",
         "psi",
-        (F.col("psi") > F.lit(float(psi_threshold))).alias("psi_flag"),
+        (F.col("psi") > F.lit(_PSI_THRESHOLD)).alias("psi_flag"),
         "ks",
-        (F.col("ks") > F.lit(float(ks_threshold))).alias("ks_flag"),
+        (F.col("ks") > F.lit(0.1)).alias("ks_flag"),
     )
 
 
@@ -232,13 +235,11 @@ def population_stability(
     group_cols: list[str],
     value_col: str,
     bin_width: float,
-    smoothing: float = 0.5,
-    threshold: float = 0.2,
 ) -> DataFrame:
     """PSI of ``value_col`` between a reference and a current frame,
     one row per ``group_cols`` tuple: ``n_ref``/``n_cur`` (window row
     counts), ``n_bins`` (union-of-windows bin count), ``psi`` (rounded
-    to 6), and ``drift_flag`` (``psi > threshold``). Rows with a NULL
+    to 6), and ``drift_flag`` (``psi > 0.2``). Rows with a NULL
     value are excluded from both windows (they are the profiler's
     ``n_nulls`` concern, not a distribution bin). NULL group keys are
     a single group (GROUP BY semantics), matched NULL-safely across
@@ -251,7 +252,7 @@ def population_stability(
     cells = _binned_cells(ref, cur, group_cols, value_col, bin_width).drop(
         "_bin"
     )
-    folded = smoothed_psi(cells, ["_g"], smoothing, threshold)
+    folded = smoothed_psi(cells, ["_g"])
     return folded.select(
         *[F.col("_g")[c].alias(c) for c in group_cols],
         "n_ref",
@@ -262,12 +263,7 @@ def population_stability(
     )
 
 
-def smoothed_psi(
-    cells: DataFrame,
-    group_cols: list[str],
-    smoothing: float = 0.5,
-    threshold: float = 0.2,
-) -> DataFrame:
+def smoothed_psi(cells: DataFrame, group_cols: list[str]) -> DataFrame:
     """Jeffreys-smoothed PSI fold over a pre-binned cell frame: one
     input row per (group, bin) carrying ``_n_ref``/``_n_cur`` counts
     (zero-filled where a bin is one-sided), one output row per group
@@ -287,7 +283,7 @@ def smoothed_psi(
     keys start with the group key, so the window's hash partitioning
     already satisfies its distribution — no second exchange."""
     w = Window.partitionBy(*group_cols)
-    s = float(smoothing)
+    s = _PSI_SMOOTHING
     tot = cells.select(
         *group_cols,
         "_n_ref",
@@ -311,5 +307,5 @@ def smoothed_psi(
         "n_cur",
         "n_bins",
         "psi",
-        (F.col("psi") > F.lit(float(threshold))).alias("drift_flag"),
+        (F.col("psi") > F.lit(_PSI_THRESHOLD)).alias("drift_flag"),
     )

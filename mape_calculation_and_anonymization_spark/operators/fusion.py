@@ -28,28 +28,24 @@ from .rebalance import checkpoint
 def rrf_fuse(
     ranked_a: DataFrame,
     ranked_b: DataFrame,
-    query_col: str = "query_id",
-    id_col: str = "doc_id",
-    rank_col: str = "rank",
     k: int = 10,
     rrf_k: int = 60,
-    round_scale: int | None = 6,
 ) -> DataFrame:
     """Fuse two per-query rankings into a top-``k``.
 
-    Inputs carry (query_col, id_col, rank_col) with rank 1-based
+    Inputs carry (query_id, doc_id, rank) with rank 1-based
     within each query; a document absent from one list simply
     contributes no term from it (the standard RRF convention).
-    Output: (query_col, id_col, rrf_score, fused_rank ≤ k), ranked by
+    Output: (query_id, doc_id, rrf_score, fused_rank ≤ k), ranked by
     (rrf_score DESC, id) — the id tie-break makes reruns byte-stable.
     The reciprocal terms are IEEE-identical on any engine given the
     same integer ranks, so the fused ordering is engine-portable; the
     displayed score is rounded AFTER ranking."""
-    contrib = F.lit(1.0) / (F.lit(rrf_k) + F.col(rank_col))
+    contrib = F.lit(1.0) / (F.lit(rrf_k) + F.col("rank"))
     legs = [
         df.select(
-            F.col(query_col),
-            F.col(id_col),
+            F.col("query_id"),
+            F.col("doc_id"),
             contrib.alias("_c"),
         )
         for df in (ranked_a, ranked_b)
@@ -57,28 +53,26 @@ def rrf_fuse(
     fused = (
         legs[0]
         .unionByName(legs[1])
-        .groupBy(query_col, id_col)
+        .groupBy("query_id", "doc_id")
         .agg(F.sum("_c").alias("_score"))
     )
-    w = Window.partitionBy(query_col).orderBy(
-        F.col("_score").desc(), F.col(id_col).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("_score").desc(), F.col("doc_id").asc()
     )
     out = fused.withColumn("fused_rank", F.row_number().over(w)).filter(
         F.col("fused_rank") <= k
     )
-    score = F.col("_score")
-    if round_scale is not None:
-        score = F.round(score, round_scale)
     return out.select(
-        query_col, id_col, score.alias("rrf_score"), "fused_rank"
+        "query_id",
+        "doc_id",
+        F.round("_score", 6).alias("rrf_score"),
+        "fused_rank",
     )
 
 
 def jaccard_top_k(
     queries: DataFrame,
     corpus: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 3,
     k: int = 10,
 ) -> DataFrame:
@@ -99,8 +93,8 @@ def jaccard_top_k(
 
     def shingled(df, out_id):
         return df.select(
-            F.col(id_col).alias(out_id),
-            F.explode(word_ngrams(text_col, n)).alias("sh"),
+            F.col("doc_id").alias(out_id),
+            F.explode(word_ngrams("text", n)).alias("sh"),
         )
 
     q_sh = checkpoint(shingled(queries, "query_id"), "fusion.jaccard_top_k.q_sh")

@@ -29,31 +29,29 @@ from pyspark.sql import functions as F
 from .dedup import _sorted_pairs
 from .rebalance import checkpoint, persisted
 
+# label-propagation rounds before connected_components gives up
+_CC_MAX_ITERATIONS = 20
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iterations: int = 20,
-) -> DataFrame:
-    """Minimum-label connected components over an undirected edge list.
+# pagerank checkpoints its ranks every this many rounds (and after the
+# last): lineage depth against one materialization job per checkpoint
+_PAGERANK_CHECKPOINT_EVERY = 3
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
+    """Minimum-label connected components over an undirected
+    ``(id_a, id_b)`` edge list.
 
     Returns (id, component) with ``component`` = the smallest node id
     reachable from ``id``. Isolated nodes don't appear (callers join
     back to the full node set with a coalesce-to-self default).
     Deterministic: pure min-aggregation, no RNG, no ordering reliance.
     """
-    if max_iterations < 1:
-        # A zero/negative budget would skip the loop and silently return
-        # the initial self-labels — exactly the wrong-labels outcome the
-        # non-convergence guard below exists to prevent.
-        raise ValueError(f"max_iterations must be >= 1, got {max_iterations}")
     # Materialize the symmetrized edge list ONCE: every iteration joins
     # against it, and without this the upstream edge-derivation plan
     # (often an expensive LSH pipeline) would re-execute per round.
     sym = checkpoint(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))),
+        edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+        .union(edges.select(F.col("id_b").alias("u"), F.col("id_a").alias("v"))),
         "graph.connected_components.sym",
     )
 
@@ -65,7 +63,7 @@ def connected_components(
     )
 
     n_changed = 0
-    for _ in range(max_iterations):
+    for _ in range(_CC_MAX_ITERATIONS):
         # candidate label for v = min over neighbours u of label(u)
         neighbour_min = (
             sym.join(labels, sym.u == labels.id)
@@ -88,36 +86,29 @@ def connected_components(
             break
     if n_changed > 0:
         # Exhausting the budget with labels still moving means the
-        # component map is WRONG (a >max_iterations-hop chain would
-        # silently split/merge clusters). Fail loudly; callers with
-        # genuinely deep graphs raise max_iterations.
+        # component map is WRONG (a longer chain would silently
+        # split/merge clusters). Fail loudly.
         raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
+            f"connected_components did not converge in {_CC_MAX_ITERATIONS} "
             f"iterations ({n_changed} labels still changing); the graph "
-            f"diameter exceeds the iteration budget — raise max_iterations"
+            f"diameter exceeds the iteration budget"
         )
     return labels
 
 
-def duplicate_clusters(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    src: str = "id_a",
-    dst: str = "id_b",
-) -> DataFrame:
+def duplicate_clusters(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Cluster assignment for every document: component id for matched
     docs, its own id for singletons — the keep/drop decision surface
     (keep ``id == cluster`` representatives, drop the rest).
     One broadcast-or-shuffle left join against the (tiny relative to
     the corpus) component map."""
-    comp = connected_components(pairs, src=src, dst=dst)
+    comp = connected_components(pairs)
     return (
-        docs.select(F.col(id_col))
-        .join(comp.withColumnRenamed("id", id_col), on=id_col, how="left")
+        docs.select(F.col("doc_id"))
+        .join(comp.withColumnRenamed("id", "doc_id"), on="doc_id", how="left")
         .select(
-            id_col,
-            F.coalesce("component", F.col(id_col)).alias("cluster"),
+            "doc_id",
+            F.coalesce("component", F.col("doc_id")).alias("cluster"),
         )
     )
 
@@ -186,17 +177,10 @@ def cooccurrence_edges(
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    damping: float = 0.85,
-    iterations: int = 10,
-    checkpoint_every: int = 3,
-) -> DataFrame:
-    """PageRank over an UNDIRECTED edge list (each edge contributes
-    both directions), fixed iteration count. Returns (id, rank);
-    ranks over all nodes sum to ~1.
+def pagerank(edges: DataFrame, iterations: int = 10) -> DataFrame:
+    """PageRank (damping 0.85) over an UNDIRECTED ``(id_a, id_b)``
+    edge list (each edge contributes both directions), fixed iteration
+    count. Returns (id, rank); ranks over all nodes sum to ~1.
 
     Same distributed shape as :func:`connected_components`: the
     symmetrized edge list and per-node degree are materialized once
@@ -210,14 +194,14 @@ def pagerank(
     residual-checked: a residual test would add a per-round scalar
     aggregate for little benefit at the typical 10-20 rounds.
 
-    ``checkpoint_every`` trades lineage depth against materialization
-    jobs: an EAGER localCheckpoint every round costs one extra Spark
-    job per round, and between checkpoints the plan is only
-    ``checkpoint_every`` join+agg layers deep — trivially analyzable,
-    while checkpointing 3× less often. 1 restores the
-    checkpoint-per-round shape; raising it much further makes Catalyst
-    re-analyze a deep recursive plan every round (the exact pathology
-    checkpointing exists to prevent).
+    ``_PAGERANK_CHECKPOINT_EVERY`` trades lineage depth against
+    materialization jobs: an EAGER localCheckpoint every round costs
+    one extra Spark job per round, and between checkpoints the plan is
+    only 3 join+agg layers deep — trivially analyzable, while
+    checkpointing 3× less often. 1 would be the checkpoint-per-round
+    shape; raising it much further makes Catalyst re-analyze a deep
+    recursive plan every round (the exact pathology checkpointing
+    exists to prevent).
 
     Oracle posture (ADVICE r8): the GENERIC operator is not
     recursive-CTE-portable (grouped aggregation inside recursion is
@@ -231,13 +215,14 @@ def pagerank(
     """
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    if checkpoint_every < 1:
+    if _PAGERANK_CHECKPOINT_EVERY < 1:
         raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}"
+            "_PAGERANK_CHECKPOINT_EVERY must be >= 1, got "
+            f"{_PAGERANK_CHECKPOINT_EVERY}"
         )
     sym = checkpoint(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+        .union(edges.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
         .distinct(),
         "graph.pagerank.sym",
     )
@@ -250,7 +235,7 @@ def pagerank(
         # empty graph: no nodes, no ranks (mirrors connected_components
         # returning no labels for an empty edge list)
         return edges.sparkSession.createDataFrame([], "id long, rank double")
-    base = (1.0 - damping) / n
+    base = (1.0 - 0.85) / n
     # fold 1/deg into the edge list ONCE: each iteration is then a
     # single join + aggregate instead of join+join+aggregate.
     # persist, NOT localCheckpoint (round 18): a checkpointed RDD scan
@@ -274,8 +259,8 @@ def pagerank(
                 (F.col("rank") * F.col("w")).alias("c"),
             )
             ranks = contrib.groupBy("u").agg(
-                (F.lit(base) + F.lit(damping) * F.sum("c")).alias("rank")
+                (F.lit(base) + F.lit(0.85) * F.sum("c")).alias("rank")
             )
-            if (i + 1) % checkpoint_every == 0 or i + 1 == iterations:
+            if (i + 1) % _PAGERANK_CHECKPOINT_EVERY == 0 or i + 1 == iterations:
                 ranks = checkpoint(ranks, "graph.pagerank.ranks")
     return ranks.select(F.col("u").alias("id"), "rank")

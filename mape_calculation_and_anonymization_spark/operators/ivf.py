@@ -21,11 +21,7 @@ from mape_calculation_and_anonymization_spark.operators.similarity import cosine
 
 def build_ivf_index(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_clusters: int = 16,
-    seed: int = 42,
-    max_iter: int = 8,
 ) -> tuple[DataFrame, DataFrame]:
     """Fit KMeans and assign every vector to a cell.
 
@@ -40,7 +36,7 @@ def build_ivf_index(
     data = corpus.withColumn(
         "_feat",
         array_to_vector(
-            F.transform(F.col(vec_col), lambda x: x.cast("double"))
+            F.transform(F.col("embedding"), lambda x: x.cast("double"))
         ),
     )
     # routing quality saturates quickly — tight iteration cap keeps the
@@ -50,7 +46,7 @@ def build_ivf_index(
     # quantizer doesn't need (measured 3.4s -> 1.1s for the sf0.1
     # build at equal partial-probe recall).
     model = KMeans(
-        k=n_clusters, seed=seed, maxIter=max_iter, initMode="random",
+        k=n_clusters, seed=42, maxIter=8, initMode="random",
         featuresCol="_feat", predictionCol="cluster",
     ).fit(data)
     assigned = model.transform(data).drop("_feat")
@@ -65,11 +61,8 @@ def ivf_top_k(
     assigned: DataFrame,
     centroids: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
     nprobe: int = 4,
-    round_scale: int | None = 6,
 ) -> DataFrame:
     """ANN top-k: route each query to its ``nprobe`` nearest centroids
     (broadcast centroid table), score exact cosine only inside those
@@ -83,9 +76,9 @@ def ivf_top_k(
     from .similarity import dot as _dot, norm as _norm
 
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        _norm(F.col(vec_col)).alias("_qn"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("_qv"),
+        _norm(F.col("embedding")).alias("_qn"),
     )
 
     routed = (
@@ -114,16 +107,17 @@ def ivf_top_k(
     )
 
     c = assigned.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("_cv"),
         "cluster",
-        _norm(F.col(vec_col)).alias("_cn"),
+        _norm(F.col("embedding")).alias("_cn"),
     )
-    sim = F.try_divide(
-        _dot(F.col("_qv"), F.col("_cv")), F.col("_qn") * F.col("_cn")
+    sim = F.round(
+        F.try_divide(
+            _dot(F.col("_qv"), F.col("_cv")), F.col("_qn") * F.col("_cn")
+        ),
+        6,
     )
-    if round_scale is not None:
-        sim = F.round(sim, round_scale)
     scored = (
         routed.join(c, on="cluster")
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -141,8 +135,6 @@ def ivf_add(
     assigned: DataFrame,
     centroids: DataFrame,
     new_vecs: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """INCREMENTAL index update — the embeddings-side daily-drop path
     (the ANN analogue of ``dedup.minhash_incremental_pairs``): assign
@@ -160,22 +152,22 @@ def ivf_add(
     :func:`ivf_top_k` re-scores true vectors, not centroids.
 
     Returns the updated ``assigned`` frame
-    ``(id_col, vec_col, cluster)`` — standing rows pass through
+    ``(vec_id, embedding, cluster)`` — standing rows pass through
     untouched, each new vector appears exactly once (row-conservation
     and nearest-centroid assignment pinned in tests/test_similarity.py).
     """
-    standing = assigned.select(id_col, vec_col, "cluster")
-    n = new_vecs.select(id_col, vec_col)
+    standing = assigned.select("vec_id", "embedding", "cluster")
+    n = new_vecs.select("vec_id", "embedding")
     d2 = F.aggregate(
         F.zip_with(
-            F.transform(F.col(vec_col), lambda x: x.cast("double")),
+            F.transform(F.col("embedding"), lambda x: x.cast("double")),
             F.col("centroid"),
             lambda x, y: (x - y) * (x - y),
         ),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("vec_id").orderBy(
         F.col("_d2").asc(), F.col("cluster").asc()
     )
     newly = (
@@ -183,7 +175,7 @@ def ivf_add(
         .withColumn("_d2", d2)
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .select(id_col, vec_col, "cluster")
+        .select("vec_id", "embedding", "cluster")
     )
     return standing.unionByName(newly)
 
@@ -192,11 +184,8 @@ def ivf_recall_curve(
     assigned: DataFrame,
     centroids: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
     budgets: tuple[int, ...] = (1, 2, 4, 8),
-    round_scale: int | None = 6,
 ) -> DataFrame:
     """Mean recall@k of the IVF index per probe budget, in ONE
     corpus-scoring pass.
@@ -220,7 +209,7 @@ def ivf_recall_curve(
     Output: (nprobe, n_hits, mean_recall_at_k), one row per budget.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv")
     )
     routed = (
         q.join(F.broadcast(centroids))
@@ -246,16 +235,17 @@ def ivf_recall_curve(
 
     routed = routed.withColumn("_qn", _norm(F.col("_qv")))
     c = assigned.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("_cv"),
         "cluster",
-        _norm(F.col(vec_col)).alias("_cn"),
+        _norm(F.col("embedding")).alias("_cn"),
     )
-    sim = F.try_divide(
-        _dot(F.col("_qv"), F.col("_cv")), F.col("_qn") * F.col("_cn")
+    sim = F.round(
+        F.try_divide(
+            _dot(F.col("_qv"), F.col("_cv")), F.col("_qn") * F.col("_cn")
+        ),
+        6,
     )
-    if round_scale is not None:
-        sim = F.round(sim, round_scale)
     scored = (
         routed.join(c, on="cluster")
         .filter(F.col("query_id") != F.col("neighbor_id"))

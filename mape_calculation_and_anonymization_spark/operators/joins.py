@@ -30,13 +30,11 @@ def asof_join(
     on: str,
     by: list[str] | None = None,
     right_cols: list[str] | None = None,
-    direction: str = "backward",
-    allow_unpartitioned: bool = False,
     tolerance: str | None = None,
 ) -> DataFrame:
     """Enrich each left row with the most recent right row at-or-before
-    (``backward``) or the earliest at-or-after (``forward``) its ``on``
-    timestamp, optionally matching ``by`` keys exactly.
+    its ``on`` timestamp (a backward as-of join), matching ``by`` keys
+    exactly.
 
     Equivalent to pandas ``merge_asof`` / DuckDB ``ASOF JOIN``
     (with allow_exact_matches=True). Implemented as union + windowed
@@ -48,22 +46,18 @@ def asof_join(
     The matched right timestamp rides along through the fill, so the
     gap test is a pure projection afterwards.
 
-    ``by`` may only be empty with ``allow_unpartitioned=True``: an
-    unpartitioned window collapses the whole frame onto ONE task —
-    fine for dimension-sized rate tables, a scale-killer on facts.
+    ``by`` may not be empty: an unpartitioned window collapses the
+    whole frame onto ONE task, a scale-killer on facts.
 
     Left and right must not share non-key column names (pandas
     suffixes; here the union would silently NULL the shared column,
     so it is an error — rename before joining).
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError("direction must be 'backward' or 'forward'")
     by = by or []
-    if not by and not allow_unpartitioned:
+    if not by:
         raise ValueError(
             "asof_join with by=[] runs the whole frame through a single "
-            "unpartitioned window; pass by keys, or acknowledge with "
-            "allow_unpartitioned=True for dimension-sized inputs"
+            "unpartitioned window; pass by keys"
         )
     right_cols = right_cols or [
         c for c in right.columns if c != on and c not in by
@@ -107,31 +101,18 @@ def asof_join(
     )
 
     # Right rows order BEFORE left rows at the same timestamp so an
-    # exact-timestamp match is visible to the left row (backward);
-    # mirror for forward.
-    if direction == "backward":
-        w = (
-            Window.partitionBy(*by)
-            .orderBy(F.col(on).asc(), F.col("_is_left").asc())
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        fill = {c: F.last(F.col(c), ignorenulls=True).over(w) for c in fill_cols}
-    else:
-        w = (
-            Window.partitionBy(*by)
-            .orderBy(F.col(on).desc(), F.col("_is_left").asc())
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        fill = {c: F.last(F.col(c), ignorenulls=True).over(w) for c in fill_cols}
+    # exact-timestamp match is visible to the left row.
+    w = (
+        Window.partitionBy(*by)
+        .orderBy(F.col(on).asc(), F.col("_is_left").asc())
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    fill = {c: F.last(F.col(c), ignorenulls=True).over(w) for c in fill_cols}
 
     filled = unioned.withColumns(fill)
     out = filled.filter(F.col("_is_left") == 1).drop("_is_left")
     if tolerance is not None:
-        gap_ok = (
-            F.col(on) - F.col("_r_on") <= F.expr(f"INTERVAL {tolerance}")
-            if direction == "backward"
-            else F.col("_r_on") - F.col(on) <= F.expr(f"INTERVAL {tolerance}")
-        )
+        gap_ok = F.col(on) - F.col("_r_on") <= F.expr(f"INTERVAL {tolerance}")
         out = out.withColumns(
             {
                 c: F.when(gap_ok, F.col(c)).otherwise(
@@ -148,21 +129,18 @@ def salted_join(
     build: DataFrame,
     on: str,
     salt: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi join with the probe side's keys splintered across ``salt``
-    sub-keys and the build side replicated ``salt`` ways — hot probe
-    keys no longer collapse onto one reducer.
+    """Inner equi join with the probe side's keys splintered across
+    ``salt`` sub-keys and the build side replicated ``salt`` ways —
+    hot probe keys no longer collapse onto one reducer.
 
-    Row-identical to ``probe.join(build, on, how)`` for inner/left.
+    Row-identical to ``probe.join(build, on)``.
     """
-    if how not in ("inner", "left"):
-        raise ValueError("salted_join supports inner/left")
     p = probe.withColumn("_salt", (F.rand(seed=7) * salt).cast("int"))
     b = build.withColumn(
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
     )
-    out = p.join(b, on=[on, "_salt"], how=how)
+    out = p.join(b, on=[on, "_salt"])
     return out.drop("_salt")
 
 
@@ -197,8 +175,6 @@ def touch_attribution(
     conversions: DataFrame,
     touches: DataFrame,
     on: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
     lookback: str = "INTERVAL 7 DAYS",
 ) -> DataFrame:
     """First-touch / last-touch attribution: for each conversion, the
@@ -222,13 +198,13 @@ def touch_attribution(
     join."""
     c = conversions.select(
         F.col(on).alias("_k"),
-        F.col(id_col).alias("conversion_id"),
-        F.col(ts_col).alias("conversion_ts"),
+        F.col("event_id").alias("conversion_id"),
+        F.col("ts").alias("conversion_ts"),
     )
     t = touches.select(
         F.col(on).alias("_k"),
-        F.col(id_col).alias("_t_id"),
-        F.col(ts_col).alias("_t_ts"),
+        F.col("event_id").alias("_t_id"),
+        F.col("ts").alias("_t_ts"),
     )
     cond = (
         (c["_k"] == t["_k"])
@@ -255,12 +231,7 @@ def touch_attribution(
     )
 
 
-def merge_upsert(
-    target: DataFrame,
-    updates: DataFrame,
-    key: str,
-    action_col: str = "action",
-) -> DataFrame:
+def merge_upsert(target: DataFrame, updates: DataFrame, key: str) -> DataFrame:
     """Batch MERGE (upsert) expressed as pure dataflow: full-outer
     join on ``key``; matched rows take the UPDATE side's values,
     unmatched update rows INSERT, unmatched target rows pass through
@@ -327,5 +298,5 @@ def merge_upsert(
             F.coalesce(F.col(f"_u_{c}"), F.col(f"_t_{c}")).alias(c)
             for c in value_cols
         ],
-        action.alias(action_col),
+        action.alias("action"),
     )

@@ -60,9 +60,7 @@ def zvalue(cols: list[Column | str], bits: int = 16) -> Column:
     return z
 
 
-def quantile_rank_column(
-    df: DataFrame, col: str, bits: int = 8, rel_err: float = 0.001
-) -> Column:
+def quantile_rank_column(df: DataFrame, col: str, bits: int = 8) -> Column:
     """Map an arbitrary numeric column onto the bounded integer domain
     ``[0, 2^bits)`` by approximate-quantile bucketing — the standard
     prep that makes :func:`zvalue` applicable to real-valued or skewed
@@ -70,7 +68,8 @@ def quantile_rank_column(
     rows evenly no matter the distribution).
 
     The quantile probe is one approx_percentile aggregate (a mergeable
-    sketch — one pass, map-side combinable); the returned expression
+    sketch at accuracy 1000, i.e. 0.1% relative error — one pass,
+    map-side combinable); the returned expression
     is a pure projection against the broadcast cut list."""
     n_buckets = 1 << bits
     cuts = (
@@ -78,7 +77,7 @@ def quantile_rank_column(
             F.percentile_approx(
                 col,
                 [i / n_buckets for i in range(1, n_buckets)],
-                int(1.0 / rel_err),
+                1000,
             )
         ).first()[0]
     )

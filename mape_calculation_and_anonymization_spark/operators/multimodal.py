@@ -24,26 +24,22 @@ from pyspark.sql import functions as F
 FEATURE_DIM = 8
 
 
-def attach_binary_payload(
-    df: DataFrame, text_col: str = "text", fmt: str = "utf8-text"
-) -> DataFrame:
+def attach_binary_payload(df: DataFrame) -> DataFrame:
     """Testdata shim: materialize an opaque binary column (+ metadata
-    struct) from a text column — the shape a real ingest would carry
-    for image/audio bytes."""
-    payload = F.encode(F.col(text_col), "UTF-8")
+    struct) from the ``text`` column — the shape a real ingest would
+    carry for image/audio bytes."""
+    payload = F.encode(F.col("text"), "UTF-8")
     return df.withColumn("payload", payload).withColumn(
         "media_meta",
         F.struct(
-            F.lit(fmt).alias("format"),
+            F.lit("utf8-text").alias("format"),
             F.octet_length(payload).alias("n_bytes"),
             F.lit("text").alias("modality"),
         ),
     )
 
 
-def extract_features(
-    df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload"
-) -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """DETERMINISTIC FAKE featurizer (stands in for a real image/audio
     encoder): 8 floats derived from the payload's blake2b digest,
     normalized to [0,1). The mapInPandas batch shape, output schema,
@@ -55,7 +51,7 @@ def extract_features(
 
         for pdf in batches:
             feats = []
-            for b in pdf[bin_col]:
+            for b in pdf["payload"]:
                 if b is None:
                     feats.append(None)
                     continue
@@ -66,19 +62,12 @@ def extract_features(
                         for i in range(FEATURE_DIM)
                     ]
                 )
-            yield pd.DataFrame({id_col: pdf[id_col], "features": feats})
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "features": feats})
 
-    return df.mapInPandas(
-        featurize, schema=f"{id_col} long, features array<double>"
-    )
+    return df.mapInPandas(featurize, schema="doc_id long, features array<double>")
 
 
-def frame_sample(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    bin_col: str = "payload",
-    n_frames: int = 4,
-) -> DataFrame:
+def frame_sample(df: DataFrame, n_frames: int = 4) -> DataFrame:
     """Video-style frame sampling stub: split the payload into
     ``n_frames`` evenly-spaced byte chunks (stand-in for keyframe
     extraction), emitted one row per frame — the explode-shaped output
@@ -87,7 +76,7 @@ def frame_sample(
     def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, frame_idx, frames = [], [], []
-            for i, b in zip(pdf[id_col], pdf[bin_col]):
+            for i, b in zip(pdf["doc_id"], pdf["payload"]):
                 if b is None:
                     continue
                 b = bytes(b)
@@ -100,36 +89,27 @@ def frame_sample(
                     frame_idx.append(j)
                     frames.append(chunk)
             yield pd.DataFrame(
-                {id_col: ids, "frame_idx": frame_idx, "frame": frames}
+                {"doc_id": ids, "frame_idx": frame_idx, "frame": frames}
             )
 
     return df.mapInPandas(
-        sample, schema=f"{id_col} long, frame_idx int, frame binary"
+        sample, schema="doc_id long, frame_idx int, frame binary"
     )
 
 
-def audio_chunk(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    bin_col: str = "payload",
-    sample_rate: int = 16_000,
-    bytes_per_sample: int = 2,
-    chunk_seconds: float = 0.25,
-) -> DataFrame:
-    """Audio segmentation stub: treat the payload as PCM at
-    ``sample_rate``×``bytes_per_sample`` and split it into fixed-
-    duration chunks (stand-in for VAD/segment extraction), one row per
-    chunk with its time bounds — the shape an ASR/data pipeline feeds
-    to a transcription or embedding stage. Arrow-batched mapInPandas;
-    the real codec decode would slot into the same loop."""
-    chunk_bytes = int(sample_rate * bytes_per_sample * chunk_seconds)
-    if chunk_bytes < 1:
-        raise ValueError("chunk too small for the given rate/width")
+def audio_chunk(df: DataFrame) -> DataFrame:
+    """Audio segmentation stub: treat the payload as 16 kHz 16-bit PCM
+    (32 000 bytes a second) and split it into 0.25 s chunks (stand-in
+    for VAD/segment extraction), one row per chunk with its time
+    bounds — the shape an ASR/data pipeline feeds to a transcription
+    or embedding stage. Arrow-batched mapInPandas; the real codec
+    decode would slot into the same loop."""
+    chunk_bytes = 8000  # 0.25 s × 32 000 bytes/s
 
     def chunker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, idxs, starts, ends, chunks = [], [], [], [], []
-            for i, b in zip(pdf[id_col], pdf[bin_col]):
+            for i, b in zip(pdf["doc_id"], pdf["payload"]):
                 if b is None:
                     continue
                 b = bytes(b)
@@ -139,15 +119,12 @@ def audio_chunk(
                         break
                     ids.append(i)
                     idxs.append(j)
-                    starts.append(j * chunk_seconds)
-                    ends.append(
-                        j * chunk_seconds
-                        + len(chunk) / (sample_rate * bytes_per_sample)
-                    )
+                    starts.append(j * 0.25)
+                    ends.append(j * 0.25 + len(chunk) / 32_000)
                     chunks.append(chunk)
             yield pd.DataFrame(
                 {
-                    id_col: ids,
+                    "doc_id": ids,
                     "chunk_idx": idxs,
                     "start_s": starts,
                     "end_s": ends,
@@ -158,7 +135,7 @@ def audio_chunk(
     return df.mapInPandas(
         chunker,
         schema=(
-            f"{id_col} long, chunk_idx int, start_s double, end_s double,"
+            "doc_id long, chunk_idx int, start_s double, end_s double,"
             " chunk binary"
         ),
     )

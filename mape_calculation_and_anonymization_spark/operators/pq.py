@@ -37,67 +37,59 @@ from pyspark.sql import types as T
 # per-query LUTs — correct only while the query side is dimension-sized
 # (query batches ≪ corpus, by contract). This guard makes a
 # corpus-sized query frame fail loudly instead of OOMing the driver —
-# the same discipline as max_bucket_size in the LSH paths.
-_DEFAULT_MAX_QUERIES = 100_000
+# the same discipline as the bucket cap in the LSH paths.
+_MAX_QUERIES = 100_000
 
 
-def _collect_query_batch(
-    queries: DataFrame, id_col: str, vec_col: str, max_queries: int
-) -> list:
+def _collect_query_batch(queries: DataFrame) -> list:
     rows = (
-        queries.select(F.col(id_col), F.col(vec_col))
-        .limit(max_queries + 1)
+        queries.select(F.col("vec_id"), F.col("embedding"))
+        .limit(_MAX_QUERIES + 1)
         .collect()
     )
-    if len(rows) > max_queries:
+    if len(rows) > _MAX_QUERIES:
         raise ValueError(
-            f"query batch exceeds max_queries={max_queries}: the ADC "
+            f"query batch exceeds max_queries={_MAX_QUERIES}: the ADC "
             "LUT build collects the query side to the driver; pass a "
-            "bounded query batch (or raise max_queries deliberately)"
+            "bounded query batch"
         )
     return rows
 
 
-def train_pq_codebooks(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    m: int = 8,
-    k: int = 16,
-    iterations: int = 10,
-    sample_limit: int = 20_000,
-) -> np.ndarray:
-    """Train per-subvector codebooks on a bounded deterministic sample.
+def train_pq_codebooks(corpus: DataFrame) -> np.ndarray:
+    """Train per-subvector codebooks on a bounded deterministic sample:
+    8 subvectors, 16 centroids each, 10 Lloyd iterations over the
+    first 20 000 vectors by id.
 
-    Returns ``(m, k, d//m)`` float64 centroids. The sample is id-ordered
+    Returns ``(8, 16, d//8)`` float64 centroids. The sample is id-ordered
     (``orderBy(id).limit(n)`` — a plain ``limit`` has no deterministic
     row choice across partitions) and collected to the driver: codebook
     training is sketch-sized BY DESIGN; production PQ trains on a
     sample regardless of corpus size.
     """
     rows = (
-        corpus.select(F.col(id_col), F.col(vec_col))
-        .orderBy(id_col)
-        .limit(sample_limit)
+        corpus.select(F.col("vec_id"), F.col("embedding"))
+        .orderBy("vec_id")
+        .limit(20_000)
         .collect()
     )
     x = np.asarray([r[1] for r in rows], dtype=np.float64)
     n, d = x.shape
-    if d % m != 0:
-        raise ValueError(f"dim {d} not divisible by m={m} subvectors")
-    sub = d // m
-    codebooks = np.empty((m, k, sub), dtype=np.float64)
-    for b in range(m):
+    if d % 8 != 0:
+        raise ValueError(f"dim {d} not divisible by 8 subvectors")
+    sub = d // 8
+    codebooks = np.empty((8, 16, sub), dtype=np.float64)
+    for b in range(8):
         xb = x[:, b * sub : (b + 1) * sub]
         # evenly-strided init over the id-ordered sample: deterministic
-        # with no RNG; k <= n enforced by taking unique stride points
-        idx = (np.arange(k, dtype=np.int64) * max(n // k, 1)) % n
+        # with no RNG; 16 <= n enforced by taking unique stride points
+        idx = (np.arange(16, dtype=np.int64) * max(n // 16, 1)) % n
         cent = xb[idx].copy()
-        for _ in range(iterations):
-            # Lloyd step, fully vectorized: (n, k) squared distances
+        for _ in range(10):
+            # Lloyd step, fully vectorized: (n, 16) squared distances
             d2 = ((xb[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
             assign = d2.argmin(axis=1)
-            for j in range(k):
+            for j in range(16):
                 mask = assign == j
                 if mask.any():
                     cent[j] = xb[mask].mean(axis=0)
@@ -108,15 +100,13 @@ def train_pq_codebooks(
 def encode_pq(
     corpus: DataFrame,
     codebooks: np.ndarray,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """Encode every corpus vector as ``m`` small-int codes (argmin
     centroid per subvector block). One Arrow-batched pass; the einsum
     expansion ``|x - c|² = |x|² - 2x·c + |c|²`` scores a whole batch
     against a block's centroids in one matmul. Output:
-    (id_col, codes array<int>).
+    (vec_id, codes array<int>).
     """
     mm, kk, sub = codebooks.shape
     cb = codebooks  # closure capture; broadcast with each task binary
@@ -142,7 +132,7 @@ def encode_pq(
 
     extra = [F.col(c) for c in (keep_cols or [])]
     return corpus.select(
-        F.col(id_col), *extra, _codes(F.col(vec_col)).alias("codes")
+        F.col("vec_id"), *extra, _codes(F.col("embedding")).alias("codes")
     )
 
 
@@ -150,11 +140,8 @@ def pq_top_k(
     corpus: DataFrame,
     queries: DataFrame,
     codebooks: np.ndarray,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     k: int = 10,
     shortlist_factor: int = 4,
-    max_queries: int = _DEFAULT_MAX_QUERIES,
 ) -> DataFrame:
     """ADC search + exact cosine re-rank.
 
@@ -171,7 +158,7 @@ def pq_top_k(
     """
     mm, kk, sub = codebooks.shape
     cb = codebooks
-    q_rows = _collect_query_batch(queries, id_col, vec_col, max_queries)
+    q_rows = _collect_query_batch(queries)
     q_ids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
     q_mat = np.asarray([np.asarray(r[1], np.float64) for r in q_rows])
     # (nq, m, k) LUTs
@@ -185,7 +172,7 @@ def pq_top_k(
             + (cent * cent).sum(axis=1)[None, :]
         )
 
-    codes_df = encode_pq(corpus, codebooks, vec_col, id_col)
+    codes_df = encode_pq(corpus, codebooks)
     out_schema = T.StructType(
         [
             T.StructField("query_id", T.LongType()),
@@ -201,7 +188,7 @@ def pq_top_k(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
+            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             codes = np.asarray(list(pdf["codes"]), dtype=np.int64)  # (n, m)
             # (nq, n): gather each block's LUT column by code, sum blocks
             dist = np.zeros((len(q_ids), len(ids)), dtype=np.float64)
@@ -243,10 +230,10 @@ def pq_top_k(
     )
 
     qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv")
     )
     cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_cv")
     )
     w_final = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
@@ -271,12 +258,9 @@ def ivf_pq_top_k(
     centroids: DataFrame,
     queries: DataFrame,
     codebooks: np.ndarray,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     k: int = 10,
     nprobe: int = 4,
     shortlist_factor: int = 8,
-    max_queries: int = _DEFAULT_MAX_QUERIES,
 ) -> DataFrame:
     """The full IVF+PQ stack: coarse cell routing (touch ~nprobe/k of
     the corpus) × compressed-code ADC scoring (m bytes per candidate)
@@ -295,7 +279,7 @@ def ivf_pq_top_k(
     )
 
     mm, kk, sub = codebooks.shape
-    q_rows = _collect_query_batch(queries, id_col, vec_col, max_queries)
+    q_rows = _collect_query_batch(queries)
     q_ids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
     q_mat = np.asarray([np.asarray(r[1], np.float64) for r in q_rows])
     luts = np.empty((len(q_ids), mm, kk), dtype=np.float64)
@@ -311,7 +295,7 @@ def ivf_pq_top_k(
 
     # coarse routing: query -> nprobe nearest cells (broadcast centroids)
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv")
     )
     routed = (
         q.join(F.broadcast(centroids))
@@ -328,13 +312,11 @@ def ivf_pq_top_k(
         .select("query_id", "cluster")
     )
 
-    codes_df = encode_pq(
-        assigned, codebooks, vec_col, id_col, keep_cols=["cluster"]
-    )
+    codes_df = encode_pq(assigned, codebooks, keep_cols=["cluster"])
     pairs = (
         routed.join(codes_df, on="cluster")
-        .filter(F.col("query_id") != F.col(id_col))
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "codes")
+        .filter(F.col("query_id") != F.col("vec_id"))
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), "codes")
     )
 
     out_schema = T.StructType(
@@ -377,7 +359,7 @@ def ivf_pq_top_k(
         .select("query_id", "neighbor_id")
     )
     cv = assigned.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_cv")
     )
     w_final = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id").asc()

@@ -119,8 +119,8 @@ def equivalence_class_histogram(
     )
 
 
-def laplace_noise(key: Column, epsilon: float, seed: int, sensitivity: float = 1.0) -> Column:
-    """Deterministic Laplace(sensitivity/epsilon) draw keyed on
+def laplace_noise(key: Column, epsilon: float, seed: int) -> Column:
+    """Deterministic Laplace(1/epsilon) draw (sensitivity 1) keyed on
     ``(seed, key)`` — REPRODUCIBLE TEST-ORACLE NOISE, NOT PRODUCTION
     DP. Anyone who knows (or guesses) the seed can recompute and
     subtract the noise exactly, and a float inverse-CDF draw is
@@ -143,7 +143,7 @@ def laplace_noise(key: Column, epsilon: float, seed: int, sensitivity: float = 1
     x = F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
     m = (x - F.lit(2**31)) * F.lit(2) + F.lit(1)
     t = F.abs(m).cast("double") / F.lit(float(2**32))
-    b = sensitivity / epsilon
+    b = 1.0 / epsilon
     return -F.lit(b) * F.signum(m.cast("double")) * F.log(F.lit(1.0) - t)
 
 

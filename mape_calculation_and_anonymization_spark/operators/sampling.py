@@ -29,9 +29,7 @@ def rate_to_hex_threshold(rate: float) -> str:
     return format(int(rate * (16 ** _HEX_DIGITS)), f"0{_HEX_DIGITS}x")
 
 
-def hash_split(
-    key: str | Column, fractions: dict[str, float], salt: str = "split"
-) -> Column:
+def hash_split(key: str | Column, fractions: dict[str, float]) -> Column:
     """Deterministic dataset-split assignment (train/val/test): maps
     the md5-prefix of the salted key into cumulative-fraction hex
     bands. Content-stable — a document keeps its split across re-runs
@@ -47,7 +45,7 @@ def hash_split(
         raise ValueError(f"fractions must sum to 1.0, got {total}")
     c = F.col(key) if isinstance(key, str) else key
     prefix = F.substring(
-        F.md5(F.concat(F.lit(f"{salt}:"), c.cast("string"))), 1, _HEX_DIGITS
+        F.md5(F.concat(F.lit("split:"), c.cast("string"))), 1, _HEX_DIGITS
     )
     expr = None
     cum = 0.0
@@ -70,7 +68,6 @@ def stratified_sample(
     strata_col: str,
     rates: dict[str, float],
     default_rate: float = 0.0,
-    salt: str = "sample",
 ) -> DataFrame:
     """Per-stratum deterministic sampling (e.g. keep 50% of 'en' docs,
     10% of everything else) — the mixture-weighting step of a training
@@ -84,7 +81,7 @@ def stratified_sample(
     prefix = F.substring(
         F.md5(
             F.concat(
-                F.lit(f"{salt}:"),
+                F.lit("sample:"),
                 c.cast("string"),
                 F.lit(":"),
                 F.col(key_col).cast("string"),
@@ -101,10 +98,13 @@ def stratified_sample(
 _U_HEX_DIGITS = 12
 _U_DENOM = float(16 ** _U_HEX_DIGITS)
 
+# hash_uniform's salt; pps_sample is its one caller
+_UNIFORM_SALT = "pps"
 
-def hash_uniform(key: str | Column, salt: str = "u") -> Column:
+
+def hash_uniform(key: str | Column) -> Column:
     """Portable deterministic uniform in [0, 1): the first 12 hex
-    chars of ``md5(salt || ':' || key)`` as a 48-bit integer over
+    chars of ``md5(_UNIFORM_SALT || ':' || key)`` as a 48-bit integer over
     2^48. Content-stable (same key → same u forever) and exactly
     re-derivable outside Spark — DuckDB:
     ``CAST(concat('0x', substr(md5(...), 1, 12)) AS BIGINT) /
@@ -115,7 +115,7 @@ def hash_uniform(key: str | Column, salt: str = "u") -> Column:
     c = F.col(key) if isinstance(key, str) else key
     n = F.conv(
         F.substring(
-            F.md5(F.concat(F.lit(f"{salt}:"), c.cast("string"))),
+            F.md5(F.concat(F.lit(f"{_UNIFORM_SALT}:"), c.cast("string"))),
             1,
             _U_HEX_DIGITS,
         ),
@@ -130,7 +130,6 @@ def pps_sample(
     key_col: str,
     weight_col: str,
     expected_k: int,
-    salt: str = "pps",
 ) -> DataFrame:
     """Probability-proportional-to-size Bernoulli sample: row ``i``
     is kept with ``p_i = min(1, k·w_i / Σw)``, giving an expected
@@ -159,7 +158,7 @@ def pps_sample(
     return (
         known.join(F.broadcast(tot))
         .withColumn("incl_p", p)
-        .filter(hash_uniform(key_col, salt) < F.col("incl_p"))
+        .filter(hash_uniform(key_col) < F.col("incl_p"))
         .drop("_tot")
     )
 
@@ -194,12 +193,7 @@ def _group_weights_unrounded(
     )
 
 
-def mixture_weights(
-    df: DataFrame,
-    group_col: str,
-    alpha: float = 0.7,
-    count_col: str | None = None,
-) -> DataFrame:
+def mixture_weights(df: DataFrame, group_col: str, alpha: float = 0.7) -> DataFrame:
     """Temperature-based mixture reweighting over a grouping column
     (source, language): ``share_g = n_g / N``, ``weight_g ∝
     share_g^alpha`` normalized to 1 — the exponential-smoothing
@@ -214,7 +208,7 @@ def mixture_weights(
     the corpus to |groups| rows; everything after is arithmetic over
     that answer-sized frame (two window sums over the |groups| rows,
     zero extra passes over the data)."""
-    s = _group_weights_unrounded(df, group_col, alpha, count_col, "n_docs")
+    s = _group_weights_unrounded(df, group_col, alpha, None, "n_docs")
     return s.select(
         group_col,
         "n_docs",
@@ -226,29 +220,26 @@ def mixture_weights(
     )
 
 
-def shuffle_manifest(
-    df: DataFrame,
-    key_col: str,
-    salt: str = "shuffle",
-    n_shards: int = 256,
-) -> DataFrame:
+# shuffle_manifest's shard count: the first md5 byte, at most 256 ways
+_SHUFFLE_SHARDS = 256
+
+
+def shuffle_manifest(df: DataFrame, key_col: str) -> DataFrame:
     """Deterministic, content-stable GLOBAL training order: every row
-    gets a dense ``shuffle_rank`` (0-based) in salted-md5 order — the
-    reproducible corpus shuffle a training run consumes (same salt →
-    same order forever, on any engine; change the salt to reshuffle).
+    gets a dense ``shuffle_rank`` (0-based) in md5 order of the key
+    salted with ``shuffle:`` — the reproducible corpus shuffle a
+    training run consumes (same order forever, on any engine).
 
     Scale shape — global ranking WITHOUT a global window: a bare
     ``row_number() OVER (ORDER BY hash)`` collapses the corpus into
     ONE partition. Instead the hash's first byte shards the corpus
-    (256 ways), ranks are assigned within each shard (window
+    (``_SHUFFLE_SHARDS`` ways), ranks are assigned within each shard (window
     partitioned BY shard — parallel), and each shard adds the total
     count of all preceding shards (an answer-sized 256-row cumulative
     offset, broadcast back). Because the shard id is a PREFIX of the
     sort key, (shard asc, hash asc) IS global hash order — the
     per-shard ranks plus offsets reproduce the exact global
     row_number at any corpus size."""
-    if not 1 <= n_shards <= 256:
-        raise ValueError(f"n_shards must be in [1, 256], got {n_shards}")
     # NULL keys have no hash → no position in the order: exclude them
     # (same contract as pps_sample). Left in, they would corrupt EVERY
     # rank: md5(concat(..NULL)) is NULL, the NULL shard sorts FIRST in
@@ -256,14 +247,14 @@ def shuffle_manifest(
     # while the equi-join back drops the NULL rows themselves.
     df = df.filter(F.col(key_col).isNotNull())
     c = F.col(key_col)
-    h = F.md5(F.concat(F.lit(f"{salt}:"), c.cast("string")))
+    h = F.md5(F.concat(F.lit("shuffle:"), c.cast("string")))
     # MONOTONE bucketing of the first hash byte (floor-scaled, never
     # modulo): the global-order reconstruction REQUIRES shard id to be
     # non-decreasing in the sort key — `byte % n` would interleave
     # shards across the hash range and silently break the rank math
-    # for any n_shards < 256
+    # for any shard count below 256
     byte = F.conv(F.substring(h, 1, 2), 16, 10).cast("int")
-    shard = F.floor(byte * n_shards / F.lit(256)).cast("int")
+    shard = F.floor(byte * _SHUFFLE_SHARDS / F.lit(256)).cast("int")
     keyed = df.withColumn("_h", h).withColumn("_shard", shard)
     w = Window.partitionBy("_shard").orderBy("_h", key_col)
     ranked = keyed.withColumn("_rk", F.row_number().over(w))
@@ -273,7 +264,7 @@ def shuffle_manifest(
         .withColumn(
             # running offset over the 256-row shard-count frame: the
             # unpartitioned window is ANSWER-SIZED by construction
-            # (n_shards rows), never corpus-sized
+            # (_SHUFFLE_SHARDS rows), never corpus-sized
             "_offset",
             F.coalesce(
                 F.sum("_n").over(
@@ -343,8 +334,7 @@ def token_budget_repetition(
     df: DataFrame,
     group_col: str,
     token_col: str,
-    budget_tokens: int | None = None,
-    budget_multiple: float | None = None,
+    budget_multiple: float,
     alpha: float = 0.7,
     max_epochs: float = 1.0,
 ) -> DataFrame:
@@ -367,27 +357,19 @@ def token_budget_repetition(
     (budget = multiple · Σ n_tokens) inside the plan itself — the
     over-budget regime then survives any scale factor without a
     driver-side total lookup; the ``_n`` total from the shared
-    weights frame is reused, so this costs nothing extra. Exactly one
-    of ``budget_tokens`` / ``budget_multiple`` must be given.
+    weights frame is reused, so this costs nothing extra.
 
     Same scale shape as the sibling: one corpus-sized sum aggregate,
     then arithmetic over the |groups|-row frame. Float discipline:
     ``(budget · pw) / z`` association preserved (never
     ``budget · (pw/z)``), and the FLOOR/LEAST operands keep the same
     expression shape the DuckDB oracle uses."""
-    if (budget_tokens is None) == (budget_multiple is None):
-        raise ValueError(
-            "exactly one of budget_tokens / budget_multiple required"
-        )
     if max_epochs <= 0:
         raise ValueError("max_epochs must be positive")
     s = _group_weights_unrounded(df, group_col, alpha, token_col, "n_tokens")
-    if budget_multiple is not None:
-        target = (
-            F.lit(float(budget_multiple)) * F.col("_n") * F.col("_pw")
-        ) / F.col("_z")
-    else:
-        target = (F.lit(float(budget_tokens)) * F.col("_pw")) / F.col("_z")
+    target = (
+        F.lit(float(budget_multiple)) * F.col("_n") * F.col("_pw")
+    ) / F.col("_z")
     cap = F.col("n_tokens").cast("double") * F.lit(float(max_epochs))
     planned = F.least(cap, target)
     return s.select(
@@ -407,12 +389,7 @@ def token_budget_repetition(
 
 
 def leakage_safe_split(
-    docs: DataFrame,
-    clusters: DataFrame,
-    fractions: dict[str, float],
-    id_col: str = "doc_id",
-    cluster_col: str = "cluster",
-    salt: str = "split",
+    docs: DataFrame, clusters: DataFrame, fractions: dict[str, float]
 ) -> DataFrame:
     """Near-dup-leakage-safe train/val/test split (round-16-ready):
     assign every document by the md5 band of its NEAR-DUP CLUSTER id
@@ -433,11 +410,11 @@ def leakage_safe_split(
 
     Output: docs + (cluster, split)."""
     c = clusters.select(
-        F.col(id_col), F.col(cluster_col).alias("_leak_cluster")
+        F.col("doc_id"), F.col("cluster").alias("_leak_cluster")
     )
-    joined = docs.join(c, id_col, "left").withColumn(
-        "_leak_cluster", F.coalesce(F.col("_leak_cluster"), F.col(id_col))
+    joined = docs.join(c, "doc_id", "left").withColumn(
+        "_leak_cluster", F.coalesce(F.col("_leak_cluster"), F.col("doc_id"))
     )
     return joined.withColumn(
-        "split", hash_split(F.col("_leak_cluster"), fractions, salt=salt)
-    ).withColumnRenamed("_leak_cluster", cluster_col)
+        "split", hash_split(F.col("_leak_cluster"), fractions)
+    ).withColumnRenamed("_leak_cluster", "cluster")

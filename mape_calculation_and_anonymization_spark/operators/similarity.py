@@ -46,10 +46,7 @@ def cosine(a: Column, b: Column) -> Column:
 def brute_force_top_k(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
-    round_scale: int | None = 6,
 ) -> DataFrame:
     """Exact cosine top-k: broadcast the query set, score every corpus
     vector, rank per query.
@@ -65,20 +62,21 @@ def brute_force_top_k(
     # identical float expression (same ops, same order) with the
     # per-pair HOF work cut to the single dot.
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        norm(F.col(vec_col)).alias("_qn"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("_qv"),
+        norm(F.col("embedding")).alias("_qn"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        norm(F.col(vec_col)).alias("_cn"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("_cv"),
+        norm(F.col("embedding")).alias("_cn"),
     )
-    sim = F.try_divide(
-        dot(F.col("_qv"), F.col("_cv")), F.col("_qn") * F.col("_cn")
+    sim = F.round(
+        F.try_divide(
+            dot(F.col("_qv"), F.col("_cv")), F.col("_qn") * F.col("_cn")
+        ),
+        6,
     )
-    if round_scale is not None:
-        sim = F.round(sim, round_scale)
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", sim.alias("cosine_sim"))
@@ -145,17 +143,13 @@ def _bucketed(df: DataFrame, vec_col: str, n_tables: int, n_bits: int, dim: int,
 
 def embedding_near_duplicates(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.95,
-    n_bits: int = 10,
-    n_tables: int = 6,
-    seed: int = 42,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs (id_a < id_b, cosine ≥ τ) via
-    sign-LSH candidate buckets + exact verification — the
-    embedding-space analogue of MinHash near-dup."""
-    dim_row = corpus.select(F.size(vec_col).alias("d")).first()
+    sign-LSH candidate buckets (6 tables of 10 hyperplanes, seed 42)
+    + exact verification — the embedding-space analogue of MinHash
+    near-dup."""
+    dim_row = corpus.select(F.size("embedding").alias("d")).first()
     if dim_row is None:
         return corpus.sparkSession.createDataFrame([], "id_a long, id_b long, cosine_sim double")
     dim = dim_row["d"]
@@ -163,15 +157,15 @@ def embedding_near_duplicates(
     # per-vector norm computed once, before the posexplode — the
     # per-candidate cosine below degrades to a single dot (round 18)
     base = corpus.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        norm(F.col(vec_col)).alias("_n"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").alias("_v"),
+        norm(F.col("embedding")).alias("_n"),
     )
     # materialize the bucket table: both sides of the self-join consume
     # it, and without the barrier each side re-runs the Arrow-batched
-    # hyperplane matmul (n_tables rows per vector — linear in corpus)
+    # hyperplane matmul (6 rows per vector — linear in corpus)
     b = checkpoint(
-        _bucketed(base, "_v", n_tables, n_bits, dim, seed),
+        _bucketed(base, "_v", 6, 10, dim, 42),
         "similarity.embedding_near_duplicates.buckets",
     )
     l, r = b.alias("l"), b.alias("r")
@@ -289,8 +283,6 @@ def assign_to_centroids_udf(centroids: DataFrame):
 def semantic_dedup(
     corpus: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.95,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -339,8 +331,8 @@ def semantic_dedup(
             # drop them BEFORE the routing UDF (np.asarray(None) would
             # raise inside the executor; same guard class as ADVICE
             # r9's bpe_encode_words null-word fix)
-            corpus.filter(F.col(vec_col).isNotNull()).select(
-                F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
+            corpus.filter(F.col("embedding").isNotNull()).select(
+                F.col("vec_id").alias("_id"), F.col("embedding").alias("_v")
             )
         )
         .select("_id", route(F.col("_v")).alias("_r"))
@@ -389,7 +381,7 @@ def semantic_dedup(
         .groupBy(scored["_id"], scored["cluster"], scored["centroid_sim"])
         .agg((dominated_cnt == 0).alias("kept"))
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("vec_id"),
             "cluster",
             "centroid_sim",
             "kept",
@@ -400,9 +392,6 @@ def semantic_dedup(
 def semantic_dedup_gated(
     corpus: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    passed_col: str = "passed",
     threshold: float = 0.95,
 ) -> DataFrame:
     """GATE-aware SemDeDup (round-15-ready) — :func:`semantic_dedup`
@@ -430,12 +419,12 @@ def semantic_dedup_gated(
     unit-dot; the gate boolean rides the routing frame, adding
     nothing to the shuffle."""
     route = assign_to_centroids_udf(centroids)
-    gate = F.coalesce(F.col(passed_col), F.lit(False))  # NULL gate = FAIL
+    gate = F.coalesce(F.col("passed"), F.lit(False))  # NULL gate = FAIL
     scored = checkpoint(
         ensure_min_partitions(
-            corpus.filter(F.col(vec_col).isNotNull()).select(
-                F.col(id_col).alias("_id"),
-                F.col(vec_col).alias("_v"),
+            corpus.filter(F.col("embedding").isNotNull()).select(
+                F.col("vec_id").alias("_id"),
+                F.col("embedding").alias("_v"),
                 gate.alias("_p"),
             )
         )
@@ -488,7 +477,7 @@ def semantic_dedup_gated(
         )
         .agg((F.count(F.col("_id_a")) == 0).alias("_nodom"))
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("vec_id"),
             "cluster",
             "centroid_sim",
             F.col("_p").alias("passed"),
@@ -501,9 +490,6 @@ def semantic_dedup_incremental(
     standing: DataFrame,
     new_vecs: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    kept_col: str = "kept",
     threshold: float = 0.95,
 ) -> DataFrame:
     """INCREMENTAL SemDeDup — the embeddings daily-drop policy
@@ -514,7 +500,7 @@ def semantic_dedup_incremental(
     yesterday's keeps already shipped to training and cannot be
     un-kept by today's arrivals.
 
-    ``standing`` carries (id_col, vec_col, kept_col) — a prior
+    ``standing`` carries (vec_id, embedding, kept) — a prior
     :func:`semantic_dedup` verdict joined back to its vectors. Only
     the KEPT standing members are routed and compared (dropped ones
     were already dominated inside their own ε-ball; re-testing
@@ -536,7 +522,7 @@ def semantic_dedup_incremental(
     new×(kept-in-cell) + new×new-in-cell, never corpus².
 
     Output: one row per non-null NEW vector —
-    ``(id_col, cluster, centroid_sim, kept)``."""
+    ``(vec_id, cluster, centroid_sim, kept)``."""
     route = assign_to_centroids_udf(centroids)
 
     # ONE routing pass over standing-kept ∪ drop (round 17): the two
@@ -545,14 +531,14 @@ def semantic_dedup_incremental(
     # round-trip + checkpoint job — routing is per-row, so splitting
     # the checkpointed result by the flag is exactly the two frames
     # the earlier per-side passes produced.
-    both = standing.filter(F.col(kept_col)).select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
+    both = standing.filter(F.col("kept")).select(
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").alias("_v"),
         F.lit(False).alias("_is_new"),
     ).unionByName(
         new_vecs.select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).alias("_v"),
+            F.col("vec_id").alias("_id"),
+            F.col("embedding").alias("_v"),
             F.lit(True).alias("_is_new"),
         )
     )
@@ -609,7 +595,7 @@ def semantic_dedup_incremental(
         .groupBy(n["_id"], n["cluster"], n["centroid_sim"])
         .agg((F.count(F.col("_id_a")) == 0).alias("kept"))
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("vec_id"),
             "cluster",
             "centroid_sim",
             "kept",

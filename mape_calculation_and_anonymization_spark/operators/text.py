@@ -31,6 +31,13 @@ STOPWORDS: dict[str, list[str]] = {
 _FP_PRIME = (1 << 31) - 1  # keeps acc*31+c < 2^36: overflow-safe in
 # both Spark (silent wrap) and DuckDB (errors on BIGINT overflow)
 
+# source_overlap_matrix's flood cap: a shingle in more sources is
+# universal boilerplate, left out of the pair expansion
+_MAX_SOURCES_PER_SHINGLE = 16
+
+# vocab_coverage_curve's candidate vocabulary sizes
+_COVERAGE_KS = (100, 1000, 10000)
+
 
 def _tokens(col: Column) -> Column:
     return F.split(F.trim(F.lower(col)), r"\s+")
@@ -57,11 +64,12 @@ def punct_ratio(col: str | Column) -> Column:
     return F.try_divide(n_punct.cast("double"), F.length(c).cast("double"))
 
 
-def stopword_ratio(col: str | Column, lang: str = "en") -> Column:
-    """Fraction of tokens that are stopwords (duplicates counted)."""
+def stopword_ratio(col: str | Column) -> Column:
+    """Fraction of tokens that are English stopwords (duplicates
+    counted)."""
     c = F.col(col) if isinstance(col, str) else col
     toks = _tokens(c)
-    sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
+    sw = F.array(*[F.lit(w) for w in STOPWORDS["en"]])
     hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
     return F.try_divide(hits.cast("double"), F.size(toks).cast("double"))
 
@@ -75,13 +83,13 @@ def mean_token_length(col: str | Column) -> Column:
     return F.try_divide(total.cast("double"), F.size(toks).cast("double"))
 
 
-def quality_score(col: str | Column, lang: str = "en") -> Column:
+def quality_score(col: str | Column) -> Column:
     """Composite [0,1]-ish quality heuristic: reward moderate length
     and healthy stopword density, penalize punctuation floods and
     degenerate token lengths. Deterministic arithmetic only."""
     c = F.col(col) if isinstance(col, str) else col
     length_term = F.least(F.length(c).cast("double") / F.lit(500.0), F.lit(1.0))
-    sw_term = F.least(stopword_ratio(c, lang) * F.lit(4.0), F.lit(1.0))
+    sw_term = F.least(stopword_ratio(c) * F.lit(4.0), F.lit(1.0))
     punct_term = F.greatest(
         F.lit(1.0) - punct_ratio(c) * F.lit(5.0), F.lit(0.0)
     )
@@ -104,7 +112,7 @@ def stopword_hits(col: str | Column, lang: str) -> Column:
     return F.size(F.filter(_tokens(c), lambda t: F.array_contains(sw, t)))
 
 
-def language_id(col: str | Column, langs: list[str] | None = None) -> Column:
+def language_id(col: str | Column) -> Column:
     """Heuristic language ID: argmax of per-language stopword hits
     (first max wins; zero hits everywhere → 'und'; NULL text → NULL
     — without the explicit isNull branch the all-NULL score array
@@ -113,11 +121,10 @@ def language_id(col: str | Column, langs: list[str] | None = None) -> Column:
     the bulk/per-row divergence; the per-row arm was the buggy one,
     matching neither the oracle's NULL nor anything sensible)."""
     c = F.col(col) if isinstance(col, str) else col
-    langs = langs or list(STOPWORDS)
-    scores = F.array(*[stopword_hits(c, lang) for lang in langs])
+    scores = F.array(*[stopword_hits(c, lang) for lang in STOPWORDS])
     best = F.array_max(scores)
     idx = F.array_position(scores, best)  # 1-based, first occurrence
-    lang_arr = F.array(*[F.lit(lang) for lang in langs])
+    lang_arr = F.array(*[F.lit(lang) for lang in STOPWORDS])
     return (
         F.when(c.isNull(), F.lit(None).cast("string"))
         .when(best <= 0, F.lit("und"))
@@ -125,13 +132,7 @@ def language_id(col: str | Column, langs: list[str] | None = None) -> Column:
     )
 
 
-def language_id_bulk(
-    df,
-    text_col: str,
-    id_cols: list[str],
-    langs: list[str] | None = None,
-    out_col: str = "predicted",
-):
+def language_id_bulk(df, text_col: str, id_cols: list[str]):
     """Corpus-scale :func:`language_id`: identical VALUES, explode +
     broadcast-join + argmax shape instead of per-row higher-order
     functions.
@@ -155,13 +156,10 @@ def language_id_bulk(
     Scale: one stateless explode, one broadcast (the dim is
     |langs|×|stopwords| ≈ 50 rows), two hash aggregates keyed by doc
     id — no corpus-wide shuffle beyond the doc-keyed counts."""
-    from pyspark.sql import DataFrame as _DF  # local, avoids cycle at import
-
-    langs = langs or list(STOPWORDS)
     spark = df.sparkSession
     dim_rows = [
         (i, lang, w)
-        for i, lang in enumerate(langs)
+        for i, lang in enumerate(STOPWORDS)
         for w in STOPWORDS[lang]
     ]
     dim = spark.createDataFrame(
@@ -182,7 +180,7 @@ def language_id_bulk(
                 (-F.col("lang_idx")).alias("_neg_idx"),
                 F.col("lang"),
             )
-        )["lang"].alias(out_col)
+        )["lang"].alias("predicted")
     )
     # NULL-in → NULL-out, matching the per-row language_id expression
     # and the DuckDB oracle (ADVICE r9): explode drops NULL-text rows,
@@ -190,16 +188,16 @@ def language_id_bulk(
     # the per-row path yields NULL — only docs with actual text fall
     # back to the unknown bucket.
     return df.join(best, on=id_cols, how="left").withColumn(
-        out_col,
+        "predicted",
         F.when(
-            F.col(text_col).isNotNull(), F.coalesce(out_col, F.lit("und"))
+            F.col(text_col).isNotNull(), F.coalesce("predicted", F.lit("und"))
         ),
     )
 
 
-def fingerprint(col: str | Column, base: int = 31, mod: int = _FP_PRIME) -> Column:
+def fingerprint(col: str | Column) -> Column:
     """Polynomial rolling hash over the character stream:
-    ``acc = (acc*base + ascii(ch)) % mod`` — a stable document
+    ``acc = (acc*31 + ascii(ch)) % _FP_PRIME`` — a stable document
     fingerprint reproducible in any engine (same arithmetic, no
     overflow: acc < 2³¹ so acc·31+c < 2³⁶)."""
     c = F.col(col) if isinstance(col, str) else col
@@ -208,7 +206,7 @@ def fingerprint(col: str | Column, base: int = 31, mod: int = _FP_PRIME) -> Colu
     return F.aggregate(
         codes,
         F.lit(0).cast("long"),
-        lambda acc, v: (acc * F.lit(base) + v) % F.lit(mod),
+        lambda acc, v: (acc * F.lit(31) + v) % F.lit(_FP_PRIME),
     )
 
 
@@ -239,17 +237,17 @@ def redact_pii(col: str | Column) -> Column:
     return c
 
 
-def ngram_repetition_ratio(col: str | Column, n: int = 3) -> Column:
-    """Within-document duplicate n-gram fraction
-    (1 − distinct/total word n-grams) — the Gopher-style repetition
+def ngram_repetition_ratio(col: str | Column) -> Column:
+    """Within-document duplicate word-trigram fraction
+    (1 − distinct/total trigrams) — the Gopher-style repetition
     quality signal. Pure higher-order-function arithmetic; documents
-    shorter than ``n`` tokens score 0."""
+    shorter than 3 tokens score 0."""
     c = F.col(col) if isinstance(col, str) else col
     toks = F.split(F.trim(F.lower(c)), r"\s+")
-    n_grams = F.size(toks) - F.lit(n - 1)
+    n_grams = F.size(toks) - F.lit(2)
     grams = F.transform(
         F.sequence(F.lit(0), F.greatest(n_grams - 1, F.lit(-1))),
-        lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
+        lambda i: F.array_join(F.slice(toks, i + 1, 3), " "),
     )
     return F.when(n_grams <= 0, F.lit(0.0)).otherwise(
         F.lit(1.0)
@@ -341,13 +339,7 @@ def ngram_repetition_stats(df, id_col: str, text_col: str, n: int = 3):
     )
 
 
-def pack_sequences(
-    docs,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    budget: int = 512,
-    shard_size: int = 256,
-):
+def pack_sequences(docs, budget: int = 512, shard_size: int = 256):
     """Concatenate-and-chunk sequence packing: assign every document to
     the training sequence (of ``budget`` tokens) in which its first
     token lands when the corpus is laid out as one id-ordered token
@@ -361,18 +353,18 @@ def pack_sequences(
     n_docs/shard_size rows, the only global-ordered window — at 100 TB
     with shard_size tuned up, millions of rows, not the corpus).
 
-    Output: (id_col, n_tokens, seq_id).
+    Output: (doc_id, n_tokens, seq_id).
     """
     from pyspark.sql import Window
 
     with_counts = docs.select(
-        F.col(id_col),
-        token_count(text_col).alias("n_tokens"),
-        F.floor(F.col(id_col) / F.lit(shard_size)).alias("_shard"),
+        F.col("doc_id"),
+        token_count("text").alias("n_tokens"),
+        F.floor(F.col("doc_id") / F.lit(shard_size)).alias("_shard"),
     )
     w_local = (
         Window.partitionBy("_shard")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     local = with_counts.withColumn(
@@ -391,7 +383,7 @@ def pack_sequences(
     return (
         local.join(offsets, on="_shard")
         .select(
-            id_col,
+            "doc_id",
             "n_tokens",
             F.floor(
                 (F.col("_shard_off") + F.col("_local_off")) / F.lit(budget)
@@ -400,13 +392,7 @@ def pack_sequences(
     )
 
 
-def contamination_check(
-    train,
-    bench,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 8,
-):
+def contamination_check(train, bench, n: int = 8):
     """Benchmark-contamination scan: training documents sharing at
     least one distinct word ``n``-gram with any benchmark document,
     with the count of shared distinct n-grams.
@@ -416,22 +402,22 @@ def contamination_check(
     shingles into a codegen'd hash join + per-doc aggregate — no
     all-pairs document comparison ever happens.
 
-    Output: (id_col, n_shared_shingles), contaminated docs only.
+    Output: (doc_id, n_shared_shingles), contaminated docs only.
     """
     from mape_calculation_and_anonymization_spark.operators.dedup import word_ngrams
 
     from .rebalance import ensure_min_partitions
 
     t = ensure_min_partitions(train).select(
-        F.col(id_col), F.explode(word_ngrams(text_col, n=n)).alias("_shingle")
+        F.col("doc_id"), F.explode(word_ngrams("text", n=n)).alias("_shingle")
     )
     b = (
-        bench.select(F.explode(word_ngrams(text_col, n=n)).alias("_shingle"))
+        bench.select(F.explode(word_ngrams("text", n=n)).alias("_shingle"))
         .distinct()
     )
     return (
         t.join(F.broadcast(b), on="_shingle")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.countDistinct("_shingle").alias("n_shared_shingles"))
     )
 
@@ -476,11 +462,7 @@ def word_bigrams(col: str | Column) -> Column:
     ).otherwise(pairs)
 
 
-def quality_gate_funnel(
-    docs: DataFrame,
-    text_col: str = "text",
-    gates: list[tuple[str, Column]] | None = None,
-) -> DataFrame:
+def quality_gate_funnel(docs: DataFrame) -> DataFrame:
     """C4-style document-quality filtering funnel: chain the quality
     gates in order and report per-gate attrition — ``(stage, gate,
     n_in, n_pass, pass_rate)``, where each gate's ``n_in`` is the
@@ -488,7 +470,7 @@ def quality_gate_funnel(
     pipeline publishes before training: WHICH gate is eating the
     corpus, not just the end-to-end keep rate.
 
-    Default gates (all deterministic expressions shared with
+    The gates (all deterministic expressions shared with
     :func:`quality_score` / the text_quality oracle): a token-count
     floor and ceiling, a punctuation-flood ceiling, a stopword-density
     floor, and a mean-token-length band. A NULL/failing-to-evaluate
@@ -501,17 +483,16 @@ def quality_gate_funnel(
     per-gate re-scan, no shuffle beyond the count's partial-agg
     exchange. Adding a gate costs one more conditional sum, never
     another pass over 100 TB."""
-    c = F.col(text_col)
-    if gates is None:
-        toks = token_count(c)
-        mlen = mean_token_length(c)
-        gates = [
-            ("min_tokens", toks >= 5),
-            ("max_tokens", toks <= 5000),
-            ("punct_ratio", punct_ratio(c) < 0.3),
-            ("stopword_ratio", stopword_ratio(c) >= 0.02),
-            ("mean_token_len", (mlen >= 2.0) & (mlen <= 12.0)),
-        ]
+    c = F.col("text")
+    toks = token_count(c)
+    mlen = mean_token_length(c)
+    gates = [
+        ("min_tokens", toks >= 5),
+        ("max_tokens", toks <= 5000),
+        ("punct_ratio", punct_ratio(c) < 0.3),
+        ("stopword_ratio", stopword_ratio(c) >= 0.02),
+        ("mean_token_len", (mlen >= 2.0) & (mlen <= 12.0)),
+    ]
     cum = None
     sums = []
     for i, (_, g) in enumerate(gates):
@@ -546,12 +527,7 @@ def quality_gate_funnel(
     )
 
 
-def ngram_novelty(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 5,
-) -> DataFrame:
+def ngram_novelty(docs: DataFrame, n: int = 5) -> DataFrame:
     """Per-document n-gram NOVELTY against everything that came
     before it (by ascending id — ingestion order): the fraction of
     the doc's distinct n-token shingles whose FIRST corpus occurrence
@@ -585,20 +561,20 @@ def ngram_novelty(
         word_ngrams,
     )
 
-    sh = docs.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col), F.explode(word_ngrams(text_col, n=n)).alias("_sh")
+    sh = docs.filter(F.col("text").isNotNull()).select(
+        F.col("doc_id"), F.explode(word_ngrams("text", n=n)).alias("_sh")
     )
-    totals = sh.groupBy(id_col).agg(
+    totals = sh.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_distinct_shingles")
     )
     novel = (
         sh.groupBy("_sh")
-        .agg(F.min(id_col).alias(id_col))
-        .groupBy(id_col)
+        .agg(F.min("doc_id").alias("doc_id"))
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("_n_novel"))
     )
-    return totals.join(novel, id_col, "left").select(
-        id_col,
+    return totals.join(novel, "doc_id", "left").select(
+        "doc_id",
         "n_distinct_shingles",
         F.coalesce("_n_novel", F.lit(0)).alias("n_novel"),
         F.round(
@@ -612,8 +588,6 @@ def ngram_novelty(
 def contamination_near_dup(
     train: DataFrame,
     benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
@@ -640,9 +614,9 @@ def contamination_near_dup(
     )
 
     def shingled(df: DataFrame, alias: str) -> DataFrame:
-        return df.filter(F.col(text_col).isNotNull()).select(
-            F.col(id_col).alias(alias),
-            F.explode(word_ngrams(text_col, n=n)).alias("_g"),
+        return df.filter(F.col("text").isNotNull()).select(
+            F.col("doc_id").alias(alias),
+            F.explode(word_ngrams("text", n=n)).alias("_g"),
         )
 
     # The train shingle stream feeds BOTH the size aggregate and the
@@ -678,13 +652,7 @@ def contamination_near_dup(
     )
 
 
-def source_overlap_matrix(
-    docs: DataFrame,
-    source_col: str = "source",
-    text_col: str = "text",
-    n: int = 8,
-    max_sources_per_shingle: int = 16,
-) -> DataFrame:
+def source_overlap_matrix(docs: DataFrame, n: int = 8) -> DataFrame:
     """Cross-source BOILERPLATE-FLOW matrix: for every source pair,
     how many distinct ``n``-token shingles appear in BOTH — the
     provenance-leakage diagnostic a corpus curator reads before
@@ -701,7 +669,7 @@ def source_overlap_matrix(
     exploded (source, shingle) stream hash-aggregates straight to a
     per-shingle SORTED SOURCE SET (``collect_set`` dedups, so the
     separate explode→distinct pass is gone), and the pair expansion
-    happens IN-ROW over those ≤``max_sources_per_shingle``-element
+    happens IN-ROW over those ≤``_MAX_SOURCES_PER_SHINGLE``-element
     arrays instead of self-joining the corpus-scale frame on the
     shingle string — the earlier shape paid five shingle-keyed
     corpus-scale shuffles (distinct, cap aggregate, cap join, both
@@ -716,7 +684,7 @@ def source_overlap_matrix(
     exploded source sets, broadcast onto the source-pair-sized
     matrix.
 
-    Contract: ``source_col`` must be non-null (``collect_set`` drops
+    Contract: ``source`` must be non-null (``collect_set`` drops
     NULLs, so a NULL source would neither count toward the cap nor
     the totals — the testdata and every registered caller satisfy
     this)."""
@@ -734,10 +702,10 @@ def source_overlap_matrix(
     # consumer below (totals, cap filter, pair expansion) reads
     # without touching the corpus again
     per_g = checkpoint(
-        docs.filter(F.col(text_col).isNotNull())
+        docs.filter(F.col("text").isNotNull())
         .select(
-            F.col(source_col).alias("_src"),
-            F.explode(word_ngrams(text_col, n=n)).alias("_g"),
+            F.col("source").alias("_src"),
+            F.explode(word_ngrams("text", n=n)).alias("_g"),
         )
         .groupBy("_g")
         .agg(F.sort_array(F.collect_set("_src")).alias("_srcs"))
@@ -755,7 +723,7 @@ def source_overlap_matrix(
     pairs = (
         per_g.filter(
             (F.size("_srcs") >= 2)
-            & (F.size("_srcs") <= max_sources_per_shingle)
+            & (F.size("_srcs") <= _MAX_SOURCES_PER_SHINGLE)
         )
         .select(F.explode(_sorted_pairs("_srcs")).alias("_p"))
         .groupBy(
@@ -786,17 +754,14 @@ def source_overlap_matrix(
     )
 
 
-def vocab_coverage_curve(
-    docs: DataFrame,
-    text_col: str = "text",
-    ks: tuple[int, ...] = (100, 1000, 10000),
-) -> DataFrame:
+def vocab_coverage_curve(docs: DataFrame) -> DataFrame:
     """Tokenizer-sizing COVERAGE CURVE: for each candidate vocabulary
-    size ``k``, the fraction of all corpus token OCCURRENCES covered
-    by the ``k`` most frequent terms — the table that answers "what
-    vocab size covers 95% of the corpus" before committing to a
-    tokenizer budget (the Zipf head is steep: the curve typically
-    saturates orders of magnitude below the full vocabulary).
+    size ``k`` in ``_COVERAGE_KS``, the fraction of all corpus token
+    OCCURRENCES covered by the ``k`` most frequent terms — the table
+    that answers "what vocab size covers 95% of the corpus" before
+    committing to a tokenizer budget (the Zipf head is steep: the
+    curve typically saturates orders of magnitude below the full
+    vocabulary).
 
     One row per ``k``: ``(vocab_k, n_terms, covered_tokens,
     total_tokens, coverage)`` — ``n_terms`` < ``k`` when the corpus
@@ -806,17 +771,17 @@ def vocab_coverage_curve(
 
     Scale shape: term frequencies are ONE explode → map-side-combined
     hash aggregate; the ranking never globally sorts the vocabulary —
-    ``orderBy().limit(max(ks))`` plans TakeOrderedAndProject
+    ``orderBy().limit(max(_COVERAGE_KS))`` plans TakeOrderedAndProject
     (distributed per-partition top-k, merge on the driver-side heap),
     and the row_number window + per-k conditional sums then run over
-    that ANSWER-SIZED top-``max(ks)`` frame only (same posture as the
-    BPE driver loop). ``total_tokens`` is a second 1-row aggregate of
+    that ANSWER-SIZED top-``max(_COVERAGE_KS)`` frame only (same
+    posture as the BPE driver loop). ``total_tokens`` is a second 1-row aggregate of
     the frequency table, joined in as a 1-row scalar broadcast.
     Empty-corpus input yields NULL-count rows (the SQL twin yields
     none) — callers gate on non-empty corpora."""
     from pyspark.sql import Window
 
-    c = F.col(text_col)
+    c = F.col("text")
     freqs = (
         docs.select(
             F.explode(F.split(F.trim(F.lower(c)), r"\s+")).alias("tok")
@@ -825,13 +790,13 @@ def vocab_coverage_curve(
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    max_k = max(ks)
+    max_k = max(_COVERAGE_KS)
     topk = freqs.orderBy(F.col("freq").desc(), F.col("tok")).limit(max_k)
-    # answer-sized frame: single-partition window over <= max(ks) rows
+    # answer-sized frame: single-partition window over <= max_k rows
     w = Window.orderBy(F.col("freq").desc(), F.col("tok"))
     ranked = topk.withColumn("_rn", F.row_number().over(w))
     aggs = []
-    for k in ks:
+    for k in _COVERAGE_KS:
         aggs += [
             F.sum(F.when(F.col("_rn") <= k, 1).otherwise(0))
             .cast("long")
@@ -845,9 +810,9 @@ def vocab_coverage_curve(
     one = ranked.agg(*aggs).crossJoin(
         freqs.agg(F.sum("freq").cast("long").alias("total_tokens"))
     )
-    stack_args = ", ".join(f"{k}, _nt{k}, _cov{k}" for k in ks)
+    stack_args = ", ".join(f"{k}, _nt{k}, _cov{k}" for k in _COVERAGE_KS)
     return one.selectExpr(
-        f"stack({len(ks)}, {stack_args})"
+        f"stack({len(_COVERAGE_KS)}, {stack_args})"
         " AS (vocab_k, n_terms, covered_tokens)",
         "total_tokens",
     ).withColumn(
@@ -860,11 +825,7 @@ def vocab_coverage_curve(
     )
 
 
-def corpus_datacard(
-    df,
-    group_cols: tuple[str, ...] = ("source", "lang"),
-    text_col: str = "text",
-):
+def corpus_datacard(df):
     """Per-group corpus DATA CARD: the one-table curation summary a
     training-data release publishes per (source, language) slice —
     volume (docs/chars/tokens), hygiene (NULL docs, exact-duplicate
@@ -883,18 +844,19 @@ def corpus_datacard(
     data, not sameness) and contribute NULL to the char/token/quality
     aggregates (skipped by SUM/AVG in both engines).
 
-    Output: (group_cols..., n_docs, n_null_text, total_chars,
+    Output: (source, lang, n_docs, n_null_text, total_chars,
     total_tokens, exact_dup_docs, dup_rate, mean_quality), rounded 6.
     """
     from pyspark.sql import Window
 
     per_doc = df.select(
-        *group_cols,
-        F.col(text_col).alias("_t"),
-        F.md5(F.col(text_col)).alias("_fp"),
-        F.length(F.col(text_col)).alias("_chars"),
-        token_count(F.col(text_col)).alias("_toks"),
-        quality_score(F.col(text_col)).alias("_q"),
+        "source",
+        "lang",
+        F.col("text").alias("_t"),
+        F.md5(F.col("text")).alias("_fp"),
+        F.length(F.col("text")).alias("_chars"),
+        token_count(F.col("text")).alias("_toks"),
+        quality_score(F.col("text")).alias("_q"),
     )
     gc = F.count(F.lit(1)).over(Window.partitionBy("_fp"))
     flagged = per_doc.withColumn(
@@ -903,7 +865,7 @@ def corpus_datacard(
     n_docs = F.count(F.lit(1))
     dup_docs = F.sum(F.col("_dup").cast("long"))
     return (
-        flagged.groupBy(*group_cols)
+        flagged.groupBy("source", "lang")
         .agg(
             n_docs.alias("n_docs"),
             F.sum(F.col("_t").isNull().cast("long")).alias("n_null_text"),
@@ -921,8 +883,6 @@ def corpus_datacard(
 def decontaminate_corpus(
     train: DataFrame,
     benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 3,
     drop_threshold: float = 0.5,
 ) -> DataFrame:
@@ -980,14 +940,14 @@ def decontaminate_corpus(
 
     dropped_ids = (
         contamination_near_dup(
-            train, benchmark, id_col, text_col, n, drop_threshold
+            train, benchmark, n, drop_threshold
         )
-        .select(F.col("train_id").alias(id_col))
+        .select(F.col("train_id").alias("doc_id"))
         .distinct()
     )
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    base = train.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col), toks.alias("_toks")
+    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    base = train.filter(F.col("text").isNotNull()).select(
+        F.col("doc_id"), toks.alias("_toks")
     )
     strict_grams = F.when(
         F.size("_toks") >= n,
@@ -997,17 +957,17 @@ def decontaminate_corpus(
         ),
     ).otherwise(F.array().cast("array<string>"))
     bench_set = (
-        benchmark.filter(F.col(text_col).isNotNull())
+        benchmark.filter(F.col("text").isNotNull())
         .select(toks.alias("_toks"))
         .select(F.explode(strict_grams).alias("_g"))
         .distinct()
     )
     cont_pos = (
         base.select(
-            F.col(id_col), F.posexplode(strict_grams).alias("pos", "_g")
+            F.col("doc_id"), F.posexplode(strict_grams).alias("pos", "_g")
         )
         .join(F.broadcast(bench_set), "_g")
-        .select(id_col, "pos")
+        .select("doc_id", "pos")
     )
     # one document-key aggregate (round 17): explode→distinct→groupBy
     # shuffled the covered index stream twice ((id, idx) then id);
@@ -1015,12 +975,12 @@ def decontaminate_corpus(
     # sort_array(collect_set) equals sort_array(collect_list(distinct))
     # exactly (same rewrite as dedup.apply_remove_spans).
     covered = cont_pos.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.sequence(F.col("pos"), F.col("pos") + F.lit(n - 1))
         ).alias("_idx"),
     )
-    removed = covered.groupBy(id_col).agg(
+    removed = covered.groupBy("doc_id").agg(
         F.sort_array(F.collect_set("_idx")).alias("_rm")
     )
     # ONE output pass, no per-action branch unions: a
@@ -1032,10 +992,10 @@ def decontaminate_corpus(
     flagged = (
         base.join(
             dropped_ids.withColumn("_dropped", F.lit(True)),
-            id_col,
+            "doc_id",
             "left",
         )
-        .join(removed, id_col, "left")
+        .join(removed, "doc_id", "left")
     )
     rm = F.coalesce(F.col("_rm"), F.array().cast("array<int>"))
     clean = F.filter(
@@ -1053,7 +1013,7 @@ def decontaminate_corpus(
     )
     dropped = F.coalesce(F.col("_dropped"), F.lit(False))
     return flagged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.when(dropped, F.lit("dropped"))
         .when(F.size(rm) > 0, F.lit("cut"))
         .otherwise(F.lit("kept"))

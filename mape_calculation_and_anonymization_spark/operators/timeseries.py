@@ -18,17 +18,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def fill_hourly_gaps(
-    hourly: DataFrame,
-    key_col: str = "zone",
-    ts_col: str = "hour_ts",
-    value_col: str = "settlement",
-) -> DataFrame:
-    """Densify an hourly series per key and forward-fill gaps.
+def fill_hourly_gaps(hourly: DataFrame) -> DataFrame:
+    """Densify an hourly series per zone and forward-fill gaps.
 
-    Input: one row per observed (key, hour) with ``value_col``.
-    Output: one row per (key, hour) over each key's [min, max] hour
-    span, with ``value_col`` forward-filled from the last observation
+    Input: one row per observed (zone, hour_ts) with ``settlement``.
+    Output: one row per (zone, hour_ts) over each zone's [min, max]
+    hour span, with ``settlement`` forward-filled from the last observation
     and ``was_gap`` marking synthesized rows. Leading gaps (before a
     key's first observation) cannot exist by construction since the
     spine starts at the key's own min.
@@ -38,26 +33,26 @@ def fill_hourly_gaps(
     partitioning, so Catalyst reuses one shuffle for join + window —
     and the fill never sorts globally.
     """
-    span = hourly.groupBy(key_col).agg(
-        F.min(ts_col).alias("_min_ts"), F.max(ts_col).alias("_max_ts")
+    span = hourly.groupBy("zone").agg(
+        F.min("hour_ts").alias("_min_ts"), F.max("hour_ts").alias("_max_ts")
     )
     spine = span.select(
-        key_col,
+        "zone",
         F.explode(
             F.sequence("_min_ts", "_max_ts", F.expr("INTERVAL 1 HOUR"))
-        ).alias(ts_col),
+        ).alias("hour_ts"),
     )
-    joined = spine.join(hourly, on=[key_col, ts_col], how="left")
+    joined = spine.join(hourly, on=["zone", "hour_ts"], how="left")
     w = (
-        Window.partitionBy(key_col)
-        .orderBy(ts_col)
+        Window.partitionBy("zone")
+        .orderBy("hour_ts")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     return joined.select(
-        key_col,
-        ts_col,
-        F.last(value_col, ignorenulls=True).over(w).alias(value_col),
-        F.col(value_col).isNull().alias("was_gap"),
+        "zone",
+        "hour_ts",
+        F.last("settlement", ignorenulls=True).over(w).alias("settlement"),
+        F.col("settlement").isNull().alias("was_gap"),
     )
 
 

@@ -111,14 +111,13 @@ def resolve_shuffle_partitions(n: str | int | None = None) -> int:
     return _positive_int("SPARK_GRAFT_SHUFFLE", n)
 
 
-def resolve_driver_memory(mem: str | None = None) -> str:
-    """Driver heap from ``mem``, else $SPARK_GRAFT_DRIVER_MEM, else ``8g``.
+def resolve_driver_memory() -> str:
+    """Driver heap from $SPARK_GRAFT_DRIVER_MEM, else ``8g``.
 
     Digits with an optional ``k``/``m``/``g``/``t`` suffix in either case,
     as ``-Xmx`` takes them; anything else raises ValueError naming the
     variable."""
-    if mem is None:
-        mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
     if re.fullmatch(r"\d+[kmgt]?", str(mem), re.IGNORECASE):
         return str(mem)
     raise ValueError(
@@ -139,33 +138,30 @@ def _existing_dir(var: str, path: str) -> str:
     raise ValueError(f"{var} must name an existing directory, got {path!r}")
 
 
-def resolve_sf_dir(default: str, sf_dir: str | None = None) -> str:
-    """Table directory from ``sf_dir``, else $SPARK_GRAFT_SF_DIR, else
-    ``default``. Anything but an existing directory raises ValueError
-    naming the variable."""
-    if sf_dir is None:
-        sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", default)
+def resolve_sf_dir(default: str) -> str:
+    """Table directory from $SPARK_GRAFT_SF_DIR, else ``default``.
+    Anything but an existing directory raises ValueError naming the
+    variable."""
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", default)
     return _existing_dir("SPARK_GRAFT_SF_DIR", sf_dir)
 
 
-def resolve_warmup_sf_dir(default: str, sf_dir: str | None = None) -> str | None:
-    """Warm-up table directory from ``sf_dir``, else
-    $SPARK_GRAFT_WARMUP_SF_DIR, else ``default``. ``''`` turns the
-    warm-up off and returns None; anything else but an existing
-    directory raises ValueError naming the variable."""
-    if sf_dir is None:
-        sf_dir = os.environ.get("SPARK_GRAFT_WARMUP_SF_DIR", default)
+def resolve_warmup_sf_dir(default: str) -> str | None:
+    """Warm-up table directory from $SPARK_GRAFT_WARMUP_SF_DIR, else
+    ``default``. ``''`` turns the warm-up off and returns None;
+    anything else but an existing directory raises ValueError naming
+    the variable."""
+    sf_dir = os.environ.get("SPARK_GRAFT_WARMUP_SF_DIR", default)
     if sf_dir == "":
         return None
     return _existing_dir("SPARK_GRAFT_WARMUP_SF_DIR", sf_dir)
 
 
-def resolve_bench_runs(n: str | int | None = None) -> int:
-    """Timed passes per bench sample from ``n``, else
-    $SPARK_GRAFT_BENCH_RUNS, else 3. Anything but a positive integer
-    raises ValueError naming the variable."""
-    if n is None:
-        n = os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")
+def resolve_bench_runs() -> int:
+    """Timed passes per bench sample from $SPARK_GRAFT_BENCH_RUNS, else
+    3. Anything but a positive integer raises ValueError naming the
+    variable."""
+    n = os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")
     return _positive_int("SPARK_GRAFT_BENCH_RUNS", n)
 
 

@@ -26,11 +26,8 @@ def write_bucketed_table(
     table_name: str,
     bucket_col: str,
     n_buckets: int = 8,
-    sort_col: str | None = None,
 ) -> None:
-    """Persist ``df`` as a bucketed (optionally bucket-sorted) managed
-    table. Sorting within buckets additionally enables merge-join
-    without a per-task sort."""
+    """Persist ``df`` as a bucketed managed table."""
     import os
     import shutil
     from urllib.parse import urlparse
@@ -53,14 +50,12 @@ def write_bucketed_table(
                 f"{parts[0]}.db", parts[1]
             )
             shutil.rmtree(os.path.join(warehouse, rel), ignore_errors=True)
-    writer = (
+    (
         df.write.mode("overwrite")
         .format("parquet")
         .bucketBy(n_buckets, bucket_col)
+        .saveAsTable(table_name)
     )
-    if sort_col is not None:
-        writer = writer.sortBy(sort_col)
-    writer.saveAsTable(table_name)
 
 
 def bucketed_join(

@@ -107,9 +107,7 @@ class FolderFile:
 
 
 def read_input_folder(
-    spark: SparkSession,
-    input_directory: str,
-    date_folder: str | None = None,
+    spark: SparkSession, input_directory: str
 ) -> list[tuple[FolderFile, DataFrame]]:
     """S3+S4 — discover the newest dated folder and open every CSV /
     parquet file in it as a (lazy) DataFrame.
@@ -119,8 +117,7 @@ def read_input_folder(
     intentionally *not* unioned: the anonymizer contract is
     one-output-file-per-input-file (reference/anonymize_datasets.py:159-213).
     """
-    folder = date_folder or latest_partition(input_directory)
-    base = os.path.join(input_directory, folder)
+    base = os.path.join(input_directory, latest_partition(input_directory))
     out: list[tuple[FolderFile, DataFrame]] = []
     for filename in sorted(os.listdir(base)):
         path = os.path.join(base, filename)

@@ -104,9 +104,12 @@ def _write_xlsx_stdlib(filepath: str, pdfs: dict) -> None:
     [Content_Types], package rels, workbook + rels, one worksheet per
     sheet). Strings go as inline strings (``t="inlineStr"``) so no
     sharedStrings table is needed; numbers as plain ``<v>``; booleans
-    as ``t="b"``; NaN/None as omitted cells; anything else (dates,
-    timestamps) as its ``str()`` inline. Valid OOXML — Excel,
-    openpyxl, and :func:`..readers.read_xlsx_sheet` all read it."""
+    as ``t="b"``; NaN/None as omitted cells; ±inf as the inline
+    strings ``inf``/``-inf`` (Excel has no infinity, and ``inf`` is no
+    ``xsd:double``; pandas ``to_excel`` writes the same strings);
+    anything else (dates, timestamps) as its ``str()`` inline. Valid
+    OOXML — Excel, openpyxl, and :func:`..readers.read_xlsx_sheet` all
+    read it."""
     import math
     import numbers
     import zipfile
@@ -128,7 +131,9 @@ def _write_xlsx_stdlib(filepath: str, pdfs: dict) -> None:
             fv = float(v)
             if math.isnan(fv):
                 return ""
-            return f'<c r="{ref}"><v>{fv!r}</v></c>'
+            if not math.isinf(fv):
+                return f'<c r="{ref}"><v>{fv!r}</v></c>'
+            v = "inf" if fv > 0 else "-inf"
         return (
             f'<c r="{ref}" t="inlineStr"><is><t xml:space="preserve">'
             f"{_xml_escape(str(v))}</t></is></c>"
@@ -224,7 +229,18 @@ def write_excel_workbook(filepath: str, **sheets: DataFrame) -> str:
     reference's actual sink format. Read back with
     ``sources.readers.read_xlsx_sheet``. The parent directory is created
     on demand (the reference assumes ``./output/`` exists).
+
+    Sheet names are cut to Excel's 31 characters; two names that cut
+    to the same sheet name raise ValueError naming both.
     """
+    seen: dict[str, str] = {}
+    for name in sheets:
+        other = seen.setdefault(name[:31], name)
+        if other != name:
+            raise ValueError(
+                f"write_excel_workbook: sheets {other!r} and {name!r} both "
+                f"cut to the 31-character sheet name {name[:31]!r}"
+            )
     os.makedirs(os.path.dirname(filepath) or ".", exist_ok=True)
     pdfs = {
         name[:31]: (df.toPandas() if isinstance(df, DataFrame) else df)

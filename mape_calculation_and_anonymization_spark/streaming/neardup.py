@@ -36,7 +36,7 @@ Determinism: signatures are per-doc deterministic and the pair
 two docs arrives — so the UNION of per-batch outputs equals the full
 batch pipeline's pair set regardless of how the corpus splits into
 micro-batches (pinned by tests/test_streaming_neardup.py), provided
-no band bucket crosses ``max_bucket_size`` mid-stream (the flood cap
+no band bucket crosses the 1000-id cap mid-stream (the flood cap
 is evaluated per batch over batch ∪ standing; a bucket that ends
 over-cap was necessarily over-cap for some suffix of batches — at the
 fixture scales the cap never binds: max observed bucket is 6 vs the
@@ -64,15 +64,12 @@ from .windows import _drain
 def streaming_minhash_ingest(
     docs_stream: DataFrame,
     state_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     shingle_k: int = 5,
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.6,
     seed: int = 42,
     shingle_mode: str = "char",
-    max_bucket_size: int = 1000,
     shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Drain ``docs_stream`` (Trigger.AvailableNow) through the
@@ -103,11 +100,11 @@ def streaming_minhash_ingest(
     os.makedirs(state_dir, exist_ok=True)
     shingler = char_shingles if shingle_mode == "char" else word_ngrams
 
-    id_type = docs_stream.schema[id_col].dataType
+    id_type = docs_stream.schema["doc_id"].dataType
     empty_docs_schema = T.StructType(
         [
-            T.StructField(id_col, id_type),
-            T.StructField(text_col, T.StringType()),
+            T.StructField("doc_id", id_type),
+            T.StructField("text", T.StringType()),
         ]
     )
     empty_sigs_schema = T.StructType(
@@ -129,7 +126,7 @@ def streaming_minhash_ingest(
         # long-lived production stream must not accumulate one cached
         # frame pair per micro-batch.
         with persisted(
-            batch_df.select(id_col, text_col).filter(F.col(text_col).isNotNull())
+            batch_df.select("doc_id", "text").filter(F.col("text").isNotNull())
         ) as batch:
             if os.path.isdir(sigs_dir):
                 standing_docs = bspark.read.parquet(docs_dir)
@@ -149,8 +146,8 @@ def streaming_minhash_ingest(
             # way; this is the operator's own input-rebalance discipline
             # applied to the streaming sign path.
             batch_sh = ensure_min_partitions(batch).select(
-                F.col(id_col).alias("_id"),
-                shingler(text_col, shingle_k).alias("sh"),
+                F.col("doc_id").alias("_id"),
+                shingler("text", shingle_k).alias("sh"),
             )
             with persisted(
                 minhash_signatures(batch_sh, "_id", F.col("sh"), num_hashes, seed)
@@ -159,15 +156,12 @@ def streaming_minhash_ingest(
                     batch,
                     standing_docs,
                     standing_sigs,
-                    id_col=id_col,
-                    text_col=text_col,
                     shingle_k=shingle_k,
                     num_hashes=num_hashes,
                     bands=bands,
                     threshold=threshold,
                     seed=seed,
                     shingle_mode=shingle_mode,
-                    max_bucket_size=max_bucket_size,
                     precomputed_new_sigs=sigs,
                 )
                 # pair_type (new_new vs new_standing) is a batch-boundary

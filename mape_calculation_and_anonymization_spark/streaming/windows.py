@@ -63,12 +63,7 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def streaming_fingerprint_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ts",
-    watermark: str = "2 days",
-) -> DataFrame:
+def streaming_fingerprint_dedup(docs: DataFrame) -> DataFrame:
     """Streaming NEAR-REALTIME exact dedup on content fingerprints —
     the ingest-time face of the batch fingerprint store
     (``dedup_incremental``): each arriving document's
@@ -89,18 +84,16 @@ def streaming_fingerprint_dedup(
     first-arrival-dependent)."""
     return (
         docs.select(
-            normalized_fingerprint(text_col).alias("fingerprint"),
-            F.col(ts_col).alias("ts"),
+            normalized_fingerprint("text").alias("fingerprint"),
+            "ts",
         )
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", "2 days")
         .dropDuplicatesWithinWatermark(["fingerprint"])
         .select("fingerprint")
     )
 
 
-def streaming_hourly_wape(
-    events: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
+def streaming_hourly_wape(events: DataFrame) -> DataFrame:
     """Watermarked tumbling-hour WAPE pre-aggregation.
 
     One stateful aggregation (Spark's supported streaming shape); the
@@ -110,7 +103,7 @@ def streaming_hourly_wape(
     the watermark are dropped instead of reopening closed hours.
     """
     hourly = (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type").alias("zone"))
         .agg(
             F.sum(F.col("value") * 1.05).alias("forecast"),
@@ -131,16 +124,12 @@ def streaming_hourly_wape(
     )
 
 
-def sliding_event_counts(
-    events: DataFrame,
-    window: str = "2 hours",
-    slide: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Sliding-window counts/volume per event type."""
+def sliding_event_counts(events: DataFrame) -> DataFrame:
+    """Two-hour windows sliding by one hour: counts/volume per event
+    type."""
     agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("volume"))
     )
     return agg.select(
@@ -151,14 +140,12 @@ def sliding_event_counts(
     )
 
 
-def user_session_windows(
-    events: DataFrame, gap: str = "5 minutes", watermark: str = "30 minutes"
-) -> DataFrame:
+def user_session_windows(events: DataFrame) -> DataFrame:
     """Session windows per user: a session extends while consecutive
-    events arrive within ``gap`` of the previous one."""
+    events arrive within 5 minutes of the previous one."""
     agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts", "30 minutes")
+        .groupBy(F.session_window("ts", "5 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("volume"))
     )
     return agg.select(
@@ -169,11 +156,11 @@ def user_session_windows(
     )
 
 
-def stateful_distinct_users(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def stateful_distinct_users(events: DataFrame) -> DataFrame:
     """Streaming dedup: first occurrence of each user passes through
     (state bounded by the watermark via dropDuplicatesWithinWatermark)."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "1 hour")
         .select("user_id", "ts")
         .dropDuplicatesWithinWatermark(["user_id"])
         .select("user_id")
@@ -185,7 +172,6 @@ def stream_stream_interval_join(
     right: DataFrame,
     on: str = "user_id",
     interval: str = "INTERVAL 1 HOUR",
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Watermarked stream-stream inner join: pair each left event with
     the right-stream events of the same key whose timestamp falls in
@@ -202,12 +188,12 @@ def stream_stream_interval_join(
     set source read limits on these streams; with rate limits the join
     is still correct streaming-wise but only watermark-complete, not
     batch-identical."""
-    l = left.withWatermark("ts", watermark).select(
+    l = left.withWatermark("ts", "2 hours").select(
         F.col("event_id").alias("l_id"),
         F.col(on).alias("l_key"),
         F.col("ts").alias("l_ts"),
     )
-    r = right.withWatermark("ts", watermark).select(
+    r = right.withWatermark("ts", "2 hours").select(
         F.col("event_id").alias("r_id"),
         F.col(on).alias("r_key"),
         F.col("ts").alias("r_ts"),
@@ -408,7 +394,6 @@ def stream_static_enrich(
     events: DataFrame,
     dim: DataFrame,
     on: str,
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Stream-static join + tumbling-hour rollup: each micro-batch is
     enriched against the (broadcast) static dimension — the standard
@@ -417,7 +402,7 @@ def stream_static_enrich(
     the only stateful operator remains the windowed aggregate.
     Unmatched stream rows keep flowing with a NULL dim payload (left
     join) — reference data must never drop fact rows."""
-    enriched = events.withWatermark("ts", watermark).join(
+    enriched = events.withWatermark("ts", "2 hours").join(
         F.broadcast(dim), on=on, how="left"
     )
     agg = enriched.groupBy(
@@ -434,7 +419,6 @@ def stream_stream_left_outer_join(
     right: DataFrame,
     on: str = "user_id",
     interval: str = "INTERVAL 1 HOUR",
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Watermarked stream-stream LEFT OUTER interval join: like
     :func:`stream_stream_interval_join`, but unmatched left events
@@ -458,12 +442,12 @@ def stream_stream_left_outer_join(
     micro-batch of state-store machinery for nothing (measured 2.9s
     → 2.3s warm at sf0.1 dropping it, rows identical). See the
     stream_outer_join registry query for the full recipe."""
-    l = left.withWatermark("ts", watermark).select(
+    l = left.withWatermark("ts", "2 hours").select(
         F.col("event_id").alias("l_id"),
         F.col(on).alias("l_key"),
         F.col("ts").alias("l_ts"),
     )
-    r = right.withWatermark("ts", watermark).select(
+    r = right.withWatermark("ts", "2 hours").select(
         F.col("event_id").alias("r_id"),
         F.col(on).alias("r_key"),
         F.col("ts").alias("r_ts"),

@@ -30,9 +30,9 @@ def test_blake2b_digest_anchor(spark):
     assert out[1]["h"] is None
 
 
-def _apply_labels(spark, values, labels, strict):
+def _apply_labels(spark, values, labels):
     df = spark.createDataFrame([(v,) for v in values], ["customer"])
-    expr = anonymize_label_column("customer", labels, strict_reference=strict)
+    expr = anonymize_label_column("customer", labels)
     return [r[0] for r in df.select(expr.alias("out")).collect()]
 
 
@@ -41,28 +41,23 @@ def test_label_q1_truth_table(spark):
     # with uniques ['Acme','Zen'] the buggy loop only substring-matches
     # list_items[0], so 'zen corp' passes through unanonymized.
     vals = ["Acme", "Zen", "acme corp", "zen corp", None, "other"]
-    strict = _apply_labels(spark, vals, ["Acme", "Zen"], strict=True)
+    strict = _apply_labels(spark, vals, ["Acme", "Zen"])
     assert strict == [
         "ANON_CLIENT 1", "ANON_CLIENT 2",
         "ANON_CLIENT 1 corp", "zen corp", None, "other",
-    ]
-    fixed = _apply_labels(spark, vals, ["Acme", "Zen"], strict=False)
-    assert fixed == [
-        "ANON_CLIENT 1", "ANON_CLIENT 2",
-        "ANON_CLIENT 1 corp", "ANON_CLIENT 2 corp", None, "other",
     ]
 
 
 def test_label_singleton_and_shadowing(spark):
     # singleton universe → unnumbered replacement
-    assert _apply_labels(spark, ["Acme", "acme inc", "x"], ["Acme"], True) == [
+    assert _apply_labels(spark, ["Acme", "acme inc", "x"], ["Acme"]) == [
         "ANON_CLIENT", "ANON_CLIENT inc", "x",
     ]
     # reference loop precedence: substring of label[0] shadows the
     # exact match of a later label that contains it
-    assert _apply_labels(
-        spark, ["Acme Corp"], ["Acme", "Acme Corp"], True
-    ) == ["ANON_CLIENT 1 Corp"]
+    assert _apply_labels(spark, ["Acme Corp"], ["Acme", "Acme Corp"]) == [
+        "ANON_CLIENT 1 Corp"
+    ]
 
 
 def test_perturbation(spark):

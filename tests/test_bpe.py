@@ -90,9 +90,10 @@ def test_bpe_local_equals_distributed(spark):
     assert dist == loc
 
 
-def test_bpe_local_max_words_guard(spark):
+def test_bpe_local_max_words_guard(spark, monkeypatch):
     import pytest
 
+    from mape_calculation_and_anonymization_spark.operators import bpe
     from mape_calculation_and_anonymization_spark.operators.bpe import (
         bpe_merges_local,
     )
@@ -100,8 +101,9 @@ def test_bpe_local_max_words_guard(spark):
     words = spark.createDataFrame(
         [(f"w{i}", 1) for i in range(20)], ["word", "freq"]
     )
+    monkeypatch.setattr(bpe, "_MAX_WORDS", 10)
     with pytest.raises(ValueError, match="max_words"):
-        bpe_merges_local(words, 2, max_words=10)
+        bpe_merges_local(words, 2)
 
 
 def test_encode_reproduces_training_symbol_table(spark):

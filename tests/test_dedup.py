@@ -244,7 +244,7 @@ def test_simhash_finds_planted(spark):
     assert planted <= truth
 
 
-def test_simhash_sign_boundary_recall(spark):
+def test_simhash_sign_boundary_recall(spark, monkeypatch):
     """Regression for the round-12 chunk-0 bug: Spark's % is a
     sign-preserving remainder, so the offset-0 chunk of a NEGATIVE
     signature (bit 63 set) came out negative while the identical low
@@ -253,6 +253,7 @@ def test_simhash_sign_boundary_recall(spark):
     silently dropped (the md5 oracle caught 3 such twin pairs at
     sf0.01). Banded output must equal brute force over a corpus that
     PROVABLY contains sign-straddling near-dup pairs."""
+    from mape_calculation_and_anonymization_spark.operators import dedup
     from mape_calculation_and_anonymization_spark.operators.dedup import (
         make_simhash64_udf,
     )
@@ -280,10 +281,11 @@ def test_simhash_sign_boundary_recall(spark):
     assert straddling, (
         "corpus no longer exercises the sign boundary — reseed _corpus"
     )
+    monkeypatch.setattr(dedup, "_SIMHASH_SHINGLE_N", 1)
     got = {
         (r["id_a"], r["id_b"])
         for r in simhash_near_duplicates(
-            df, max_hamming=12, shingle_n=1, feature_hash="md5"
+            df, max_hamming=12, feature_hash="md5"
         ).collect()
     }
     assert got == truth
@@ -420,20 +422,21 @@ def test_bloom_prefilter_no_false_negatives_and_split(spark):
     bitmap the definite-new path carries the bulk of genuinely new
     rows (false-positive rate under a loose 5% bound)."""
     from mape_calculation_and_anonymization_spark.operators.dedup import (
+        _BLOOM_HASHES,
         bloom_bitmap,
         _bloom_probes,
     )
 
-    num_bits, k = 1 << 17, 5
+    num_bits, k = 1 << 17, _BLOOM_HASHES
     store = spark.range(0, 2000).selectExpr("md5(cast(id as string)) AS fp")
-    bitmap = bloom_bitmap(store, "fp", num_bits, k)
+    bitmap = bloom_bitmap(store, "fp", num_bits)
     # probe members + 2000 disjoint non-members through the bitmap
     members = store.withColumn("is_member", F.lit(True))
     others = spark.range(10_000, 12_000).selectExpr(
         "md5(cast(id as string)) AS fp", "false AS is_member"
     )
     probed = (
-        _bloom_probes(members.unionByName(others), "fp", num_bits, k)
+        _bloom_probes(members.unionByName(others), "fp", num_bits)
         .join(bitmap, "_word", "left")
         .withColumn(
             "_hit",

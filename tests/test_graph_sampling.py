@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from mape_calculation_and_anonymization_spark.operators import graph, sampling
 from mape_calculation_and_anonymization_spark.operators.graph import (
     connected_components,
     duplicate_clusters,
@@ -42,18 +43,20 @@ def test_connected_components_converges_on_long_chain(spark):
     assert len(got) == n + 1
 
 
-def test_connected_components_raises_on_non_convergence(spark):
+def test_connected_components_raises_on_non_convergence(spark, monkeypatch):
     # a 10-hop chain cannot converge in 3 min-propagation rounds; the
     # operator must refuse to return wrong labels silently
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(10)], ["id_a", "id_b"]
     )
+    monkeypatch.setattr(graph, "_CC_MAX_ITERATIONS", 3)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iterations=3)
+        connected_components(edges)
     # the same graph with an adequate budget labels correctly
+    monkeypatch.setattr(graph, "_CC_MAX_ITERATIONS", 12)
     got = {
         r["id"]: r["component"]
-        for r in connected_components(edges, max_iterations=12).collect()
+        for r in connected_components(edges).collect()
     }
     assert set(got.values()) == {0}
 
@@ -145,7 +148,7 @@ def test_ngram_repetition_ratio(spark):
     )
     got = [
         round(r["r"], 6)
-        for r in df.select(ngram_repetition_ratio("t", 3).alias("r")).collect()
+        for r in df.select(ngram_repetition_ratio("t").alias("r")).collect()
     ]
     assert got[0] == round(1 - 3 / 7, 6)
     assert got[1] == 0.0
@@ -187,7 +190,7 @@ def test_fill_hourly_gaps_forward_fills(spark):
     hourly = spark.createDataFrame(rows, ["zone", "hour_ts", "settlement"])
     got = {
         (r["zone"], r["hour_ts"].hour): (r["settlement"], r["was_gap"])
-        for r in fill_hourly_gaps(hourly, key_col="zone").collect()
+        for r in fill_hourly_gaps(hourly).collect()
     }
     assert got == {
         ("a", 0): (1.0, False),
@@ -198,7 +201,7 @@ def test_fill_hourly_gaps_forward_fills(spark):
     }
 
 
-def test_pagerank_matches_numpy_power_iteration(spark):
+def test_pagerank_matches_numpy_power_iteration(spark, monkeypatch):
     import numpy as np
 
     from mape_calculation_and_anonymization_spark.operators.graph import pagerank
@@ -227,25 +230,28 @@ def test_pagerank_matches_numpy_power_iteration(spark):
 
     with pytest.raises(ValueError):
         pagerank(df, iterations=0)
+    monkeypatch.setattr(graph, "_PAGERANK_CHECKPOINT_EVERY", 0)
     with pytest.raises(ValueError):
-        pagerank(df, checkpoint_every=0)
+        pagerank(df)
 
 
-def test_pagerank_checkpoint_cadence_is_value_invariant(spark):
-    """checkpoint_every only trades lineage depth for materialization
-    jobs — it must never change a rank, including when the iteration
-    count is not a multiple of the cadence."""
+def test_pagerank_checkpoint_cadence_is_value_invariant(spark, monkeypatch):
+    """The checkpoint cadence only trades lineage depth for
+    materialization jobs — it must never change a rank, including when
+    the iteration count is not a multiple of the cadence."""
     from mape_calculation_and_anonymization_spark.operators.graph import pagerank
 
     edges = [(0, 1), (1, 2), (2, 3), (4, 0), (4, 1), (4, 2), (4, 3)]
     df = spark.createDataFrame(edges, ["id_a", "id_b"])
+    monkeypatch.setattr(graph, "_PAGERANK_CHECKPOINT_EVERY", 1)
     per_round = {
         r["id"]: r["rank"]
-        for r in pagerank(df, iterations=7, checkpoint_every=1).collect()
+        for r in pagerank(df, iterations=7).collect()
     }
+    monkeypatch.setattr(graph, "_PAGERANK_CHECKPOINT_EVERY", 3)
     batched = {
         r["id"]: r["rank"]
-        for r in pagerank(df, iterations=7, checkpoint_every=3).collect()
+        for r in pagerank(df, iterations=7).collect()
     }
     assert per_round.keys() == batched.keys()
     for i in per_round:
@@ -280,8 +286,9 @@ def test_pagerank_releases_cache_when_iteration_fails(spark, monkeypatch):
         return real(self, *a, **k)
 
     monkeypatch.setattr(cls, "localCheckpoint", flaky)
+    monkeypatch.setattr(graph, "_PAGERANK_CHECKPOINT_EVERY", 1)
     with pytest.raises(RuntimeError, match="injected"):
-        pagerank(df, iterations=5, checkpoint_every=1)
+        pagerank(df, iterations=5)
     assert len(calls) == 4
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
@@ -345,7 +352,7 @@ def test_cooccurrence_edges_hot_bucket_cap(spark, caplog):
     assert not caplog.messages
 
 
-def test_hash_uniform_is_portable_and_uniform(spark):
+def test_hash_uniform_is_portable_and_uniform(spark, monkeypatch):
     """u must be exactly re-derivable in DuckDB (the oracle contract)
     and roughly uniform."""
     import duckdb
@@ -355,9 +362,10 @@ def test_hash_uniform_is_portable_and_uniform(spark):
     )
 
     df = spark.range(2000).select(F.col("id"))
+    monkeypatch.setattr(sampling, "_UNIFORM_SALT", "t")
     got = {
         r["id"]: r["u"]
-        for r in df.select("id", hash_uniform("id", "t").alias("u")).collect()
+        for r in df.select("id", hash_uniform("id").alias("u")).collect()
     }
     want = {
         int(i): u
@@ -434,9 +442,9 @@ def test_pps_sample_null_weights_excluded(spark):
     assert sorted(r["doc_id"] for r in got) == [1, 3]
 
 
-def test_shuffle_manifest_is_exact_global_hash_order(spark):
+def test_shuffle_manifest_is_exact_global_hash_order(spark, monkeypatch):
     """shuffle_rank must equal the GLOBAL row_number over salted-md5
-    order — for n_shards=256 AND for a non-power split (the monotone
+    order — for 256 shards AND for a non-power split (the monotone
     floor-scaled bucketing; a modulo shard would interleave)."""
     import duckdb
 
@@ -452,10 +460,11 @@ def test_shuffle_manifest_is_exact_global_hash_order(spark):
             "CAST(i AS VARCHAR))), i) - 1 FROM range(2000) t(i)"
         ).fetchall()
     }
-    for shards in (256, 7):
+    for shards in (7, 256):
+        monkeypatch.setattr(sampling, "_SHUFFLE_SHARDS", shards)
         got = {
             r["doc_id"]: r["shuffle_rank"]
-            for r in shuffle_manifest(df, "doc_id", n_shards=shards).collect()
+            for r in shuffle_manifest(df, "doc_id").collect()
         }
         assert got == want, f"n_shards={shards}"
     # dense 0..n-1, content-stable under a different salt only
@@ -509,14 +518,14 @@ def test_token_budget_repetition_regimes(spark):
     docs = spark.createDataFrame(
         [("a", 100), ("b", 900)], "src string, toks long"
     )
-    # budget 1999 (same off-boundary discipline as the sibling test):
-    # weights .25/.75 at alpha=.5 → targets 499.75/1499.25; 'a' wants
-    # ~5 epochs of its 100 tokens → clipped at 3; 'b' wants ~1.67 →
-    # under the ceiling, fully placed
+    # budget 1.999 × the 1000 tokens (same off-boundary discipline as
+    # the sibling test): weights .25/.75 at alpha=.5 → targets
+    # 499.75/1499.25; 'a' wants ~5 epochs of its 100 tokens → clipped
+    # at 3; 'b' wants ~1.67 → under the ceiling, fully placed
     got = {
         r["src"]: r
         for r in token_budget_repetition(
-            docs, "src", "toks", budget_tokens=1999, alpha=0.5,
+            docs, "src", "toks", budget_multiple=1.999, alpha=0.5,
             max_epochs=3.0,
         ).collect()
     }
@@ -528,14 +537,8 @@ def test_token_budget_repetition_regimes(spark):
     assert 1 < got["b"]["epochs"] < 2
     assert got["b"]["deficit_tokens"] == 0
     with pytest.raises(ValueError):
-        token_budget_repetition(docs, "src", "toks")
-    with pytest.raises(ValueError):
         token_budget_repetition(
-            docs, "src", "toks", budget_tokens=10, budget_multiple=1.0
-        )
-    with pytest.raises(ValueError):
-        token_budget_repetition(
-            docs, "src", "toks", budget_tokens=10, max_epochs=0
+            docs, "src", "toks", budget_multiple=1.0, max_epochs=0
         )
 
 
@@ -553,16 +556,18 @@ def test_token_budget_repetition_one_epoch_matches_allocation(spark):
         [("a", 317), ("b", 911), ("c", 53), ("d", 4096)],
         "src string, toks long",
     )
+    # half the 5377 tokens: 0.5 · 5377 = 2688.5 exactly, so both plans
+    # multiply the same budget into the same weights
     base = {
         r["src"]: r
         for r in token_budget_allocation(
-            docs, "src", "toks", budget_tokens=2000, alpha=0.7
+            docs, "src", "toks", budget_tokens=2688.5, alpha=0.7
         ).collect()
     }
     rep = {
         r["src"]: r
         for r in token_budget_repetition(
-            docs, "src", "toks", budget_tokens=2000, alpha=0.7,
+            docs, "src", "toks", budget_multiple=0.5, alpha=0.7,
             max_epochs=1.0,
         ).collect()
     }

@@ -60,27 +60,6 @@ def test_asof_backward_matches_pandas(spark):
             assert g["px"] == e["px"]
 
 
-def test_asof_forward_matches_pandas(spark):
-    trades, quotes = _frames(spark)
-    got = (
-        asof_join(
-            spark.createDataFrame(trades),
-            spark.createDataFrame(quotes),
-            on="ts", by=["sym"], direction="forward",
-        )
-        .orderBy("sym", "ts")
-        .collect()
-    )
-    expect = pd.merge_asof(
-        trades.sort_values("ts"), quotes.sort_values("ts"),
-        on="ts", by="sym", direction="forward",
-    ).sort_values(["sym", "ts"])
-    for g, (_, e) in zip(got, expect.iterrows()):
-        assert (g["px"] is None) == pd.isna(e["px"])
-        if g["px"] is not None:
-            assert g["px"] == e["px"]
-
-
 def test_asof_empty_by_guarded(spark):
     trades, quotes = _frames(spark)
     l, r = spark.createDataFrame(trades.drop(columns="sym")), spark.createDataFrame(
@@ -88,9 +67,6 @@ def test_asof_empty_by_guarded(spark):
     )
     with pytest.raises(ValueError, match="unpartitioned"):
         asof_join(l, r, on="ts")
-    # acknowledged single-partition path still works for tiny dims
-    got = asof_join(l, r, on="ts", allow_unpartitioned=True)
-    assert got.count() == len(trades)
 
 
 def test_asof_shared_column_raises(spark):
@@ -114,10 +90,6 @@ def test_salted_join_equals_plain_join(spark):
     plain = probe.join(build, "k", "inner").groupBy("k").count()
     salted = salted_join(probe, build, "k", salt=4).groupBy("k").count()
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-    plain_l = probe.join(build, "k", "left").groupBy("k").count()
-    salted_l = salted_join(probe, build, "k", salt=4, how="left").groupBy("k").count()
-    assert sorted(map(tuple, plain_l.collect())) == sorted(map(tuple, salted_l.collect()))
 
 
 def test_asof_tolerance_matches_pandas(spark):

@@ -3,7 +3,9 @@ reached from the programs that run it — the entry file, the bench and
 tool scripts, the preflights, perfbench — or from the reference drop-in
 API (the top-level ``__all__``). A def that only a test calls must be a
 key of ``TEST_REFERENCES``, whose value names the reached operator or
-paper API it stands for. AST walk; starts no Spark."""
+paper API it stands for. Every defaulted parameter of the other defs is
+set by some call in those programs or the package. AST walks; start no
+Spark."""
 
 import ast
 import glob
@@ -109,3 +111,119 @@ def test_every_package_def_is_reached():
     )
     assert not unreached, f"package defs nothing reaches: {unreached}"
     assert not stale, f"TEST_REFERENCES entries reached or not defined: {stale}"
+
+
+
+def _defaulted(fn) -> list[str]:
+    """Names of ``fn``'s parameters that carry a default."""
+    a = fn.args
+    positional = a.posonlyargs + a.args
+    out = [p.arg for p in positional[len(positional) - len(a.defaults):]]
+    out += [p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    return out
+
+
+def _functions(tree, rel, exempt):
+    """Every def of a module, nested ones and methods included, as
+    ``(key, node, class name or None, exempt)``; a def inside an
+    exempt top-level def or class is exempt too."""
+    out = []
+
+    def walk(node, prefix, cls, ex):
+        for child in ast.iter_child_nodes(node):
+            top = not prefix
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                e = ex or (top and child.name in exempt)
+                out.append((f"{rel}:{prefix}{child.name}", child, cls, e))
+                walk(child, f"{prefix}{child.name}.", None, e)
+            elif isinstance(child, ast.ClassDef):
+                e = ex or (top and child.name in exempt)
+                walk(child, f"{prefix}{child.name}.", child.name, e)
+            else:
+                walk(child, prefix, cls, ex)
+
+    walk(tree, "", None, False)
+    return out
+
+
+def _unset_parameters() -> list[str]:
+    """``"<module>:<def> <parameter>"`` for every defaulted parameter of
+    a non-exempt package def that no call in a program or the package
+    sets. Calls resolve by name (``Cls(...)`` to ``Cls.__init__``). A
+    keyword, a positional argument and a ``*``/``**`` splat set a
+    parameter. An argument that is a bare defaulted parameter of the
+    innermost enclosing non-exempt package def passes that parameter
+    through: it sets the callee's only once the outer one is set."""
+    exempt = set(pkg.__all__) | set(TEST_REFERENCES)
+    pkg_files = sorted(glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True))
+    trees = {p: _parse(p) for p in ROOT_FILES + pkg_files}
+    by_name: dict[str, list] = {}
+    info = {}  # def node -> (key, exempt)
+    for path in pkg_files:
+        rel = os.path.relpath(path, REPO)
+        for key, fn, cls, ex in _functions(trees[path], rel, exempt):
+            info[fn] = (key, ex)
+            name = cls if fn.name == "__init__" else fn.name
+            by_name.setdefault(name, []).append((key, fn, cls is not None))
+
+    set_params: set[tuple[str, str]] = set()
+    through: list[tuple[tuple[str, str], tuple[str, str]]] = []
+
+    def visit(node, outer):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            outer = node
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            for key, fn, is_method in by_name.get(name, []):
+                params = [p.arg for p in fn.args.posonlyargs + fn.args.args]
+                params = params[1:] if is_method else params
+                given = []
+                for i, arg in enumerate(node.args):
+                    if isinstance(arg, ast.Starred):
+                        given += [(p, None) for p in params[i:]]
+                        break
+                    if i < len(params):
+                        given.append((params[i], arg))
+                for kw in node.keywords:
+                    if kw.arg is None:
+                        given += [(p, None) for p in _defaulted(fn)]
+                    else:
+                        given.append((kw.arg, kw.value))
+                for p, value in given:
+                    if (
+                        isinstance(value, ast.Name)
+                        and outer in info
+                        and not info[outer][1]
+                        and value.id in _defaulted(outer)
+                    ):
+                        through.append(((info[outer][0], value.id), (key, p)))
+                    else:
+                        set_params.add((key, p))
+        for child in ast.iter_child_nodes(node):
+            visit(child, outer)
+
+    for tree in trees.values():
+        visit(tree, None)
+    changed = True
+    while changed:
+        changed = False
+        for source, target in through:
+            if source in set_params and target not in set_params:
+                set_params.add(target)
+                changed = True
+    return sorted(
+        f"{key} {p}"
+        for fn, (key, ex) in info.items()
+        if not ex
+        for p in _defaulted(fn)
+        if (key, p) not in set_params
+    )
+
+
+def test_every_defaulted_parameter_is_set():
+    """A defaulted parameter that no program sets is an option with one
+    value in use: put the value in the body (or, when a test must vary
+    it, in a private module constant the test patches)."""
+    unset = _unset_parameters()
+    assert not unset, f"defaulted parameters no program sets: {unset}"

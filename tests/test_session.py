@@ -92,7 +92,8 @@ def test_resolve_bench_runs_env(monkeypatch, value, expected):
     else:
         monkeypatch.setenv("SPARK_GRAFT_BENCH_RUNS", value)
     assert resolve_bench_runs() == expected
-    assert resolve_bench_runs(5) == 5
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_RUNS", "5")
+    assert resolve_bench_runs() == 5
 
 
 @pytest.mark.parametrize("value", ["0", "-1", "three", "", "1.5", " 3"])
@@ -114,7 +115,8 @@ def test_resolve_table_dirs(monkeypatch, tmp_path, var, resolve):
     assert resolve(str(default)) == str(default)
     monkeypatch.setenv(var, str(chosen))
     assert resolve(str(default)) == str(chosen)
-    assert resolve(str(default), str(default)) == str(default)
+    monkeypatch.setenv(var, str(default))
+    assert resolve(str(chosen)) == str(default)
 
 
 def test_empty_warmup_dir_turns_the_warmup_off(monkeypatch, tmp_path):

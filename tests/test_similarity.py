@@ -84,9 +84,9 @@ def test_pq_codebooks_deterministic_and_codes_valid(spark):
     )
 
     emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
-    cb = train_pq_codebooks(emb, m=8, k=16)
+    cb = train_pq_codebooks(emb)
     assert cb.shape == (8, 16, 8)
-    assert np.array_equal(cb, train_pq_codebooks(emb, m=8, k=16))
+    assert np.array_equal(cb, train_pq_codebooks(emb))
     codes = encode_pq(emb, cb).collect()
     assert all(len(r["codes"]) == 8 for r in codes)
     assert all(0 <= c < 16 for r in codes for c in r["codes"])
@@ -126,11 +126,12 @@ def test_pq_recall_against_brute_force(spark):
     assert len(got16 & bf) >= len(got8 & bf)
 
 
-def test_pq_max_queries_guard(spark):
+def test_pq_max_queries_guard(spark, monkeypatch):
     """A corpus-sized query frame must fail loudly BEFORE the driver
     collects it to build ADC LUTs (operators/pq.py:_collect_query_batch
     — same discipline as max_bucket_size in the LSH paths)."""
     from mape_calculation_and_anonymization_spark.fixtures import load_table
+    from mape_calculation_and_anonymization_spark.operators import pq
     from mape_calculation_and_anonymization_spark.operators.pq import (
         pq_top_k,
         train_pq_codebooks,
@@ -138,8 +139,9 @@ def test_pq_max_queries_guard(spark):
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     cb = train_pq_codebooks(emb)
+    monkeypatch.setattr(pq, "_MAX_QUERIES", 10)
     with pytest.raises(ValueError, match="max_queries"):
-        pq_top_k(emb, emb, cb, k=5, max_queries=10)
+        pq_top_k(emb, emb, cb, k=5)
 
 
 def test_ivf_pq_exhaustive_probe_equals_pq_only(spark):

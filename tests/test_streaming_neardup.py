@@ -15,14 +15,9 @@ from mape_calculation_and_anonymization_spark.streaming.neardup import (
 
 SF = "/root/testdata/sf0.001"
 
-PARAMS = dict(
-    shingle_k=3,
-    num_hashes=32,
-    bands=8,
-    threshold=0.6,
-    seed=42,
-    shingle_mode="word",
-)
+# the batch pipeline's signature is fixed at 32 hashes, 8 bands, seed 42
+FULL_PARAMS = dict(shingle_k=3, threshold=0.6, shingle_mode="word")
+PARAMS = dict(FULL_PARAMS, num_hashes=32, bands=8, seed=42)
 
 
 def _pair_set(df):
@@ -80,7 +75,7 @@ def corpus(spark):
 @pytest.fixture(scope="module")
 def full_pairs(corpus):
     return _pair_set(
-        minhash_near_duplicates(corpus, **PARAMS).select(
+        minhash_near_duplicates(corpus, **FULL_PARAMS).select(
             "id_a", "id_b", "jaccard_sim"
         )
     )

@@ -319,24 +319,23 @@ def test_corpus_datacard(spark):
     assert 0.0 < b["mean_quality"] <= 1.0
 
 
-def test_vocab_coverage_curve(spark):
+def test_vocab_coverage_curve(spark, monkeypatch):
     """Known Zipf-toy corpus: a:3 b:2 c:1 (total 6). Coverage at
     k=1/2/10 must be 3/6, 5/6, 6/6 with n_terms capped by the
     actual vocabulary; frequency ties (none here) break on the term
     per the deterministic ordering contract."""
-    from mape_calculation_and_anonymization_spark.operators.text import (
-        vocab_coverage_curve,
-    )
+    from mape_calculation_and_anonymization_spark.operators import text
 
     df = spark.createDataFrame(
         [("a a a b",), ("b c",)], ["text"]
     )
+    monkeypatch.setattr(text, "_COVERAGE_KS", (1, 2, 10))
     got = {
         r["vocab_k"]: (
             r["n_terms"], r["covered_tokens"], r["total_tokens"],
             r["coverage"],
         )
-        for r in vocab_coverage_curve(df, ks=(1, 2, 10)).collect()
+        for r in text.vocab_coverage_curve(df).collect()
     }
     assert got == {
         1: (1, 3, 6, 0.5),
@@ -345,11 +344,12 @@ def test_vocab_coverage_curve(spark):
     }
 
 
-def test_source_overlap_matrix(spark):
+def test_source_overlap_matrix(spark, monkeypatch):
     """Hand-built provenance pin (n=3): shared distinct shingles per
     source pair, overlap coefficient over FULL per-source totals, and
     the sources-per-shingle flood cap dropping a shingle from the
     pair expansion entirely."""
+    from mape_calculation_and_anonymization_spark.operators import text
     from mape_calculation_and_anonymization_spark.operators.text import (
         source_overlap_matrix,
     )
@@ -375,11 +375,10 @@ def test_source_overlap_matrix(spark):
         ("B", "D"): (1, 0.333333),
     }
     # cap=2: 'a b c' lives in 3 sources -> dropped before the join
+    monkeypatch.setattr(text, "_MAX_SOURCES_PER_SHINGLE", 2)
     capped = {
         (r["source_a"], r["source_b"]): r["shared_shingles"]
-        for r in source_overlap_matrix(
-            docs, n=3, max_sources_per_shingle=2
-        ).collect()
+        for r in source_overlap_matrix(docs, n=3).collect()
     }
     assert capped == {("A", "D"): 1}
 

@@ -204,6 +204,29 @@ def test_xlsx_numpy_scalars_in_object_columns(tmp_path):
     assert "<v>7</v>" in ws and "<v>2.5</v>" in ws and 't="b"' in ws
 
 
+def test_xlsx_infinities_are_inline_strings(tmp_path):
+    """Excel has no infinity and ``inf`` is no ``xsd:double``: ±inf
+    cells are the inline strings pandas ``to_excel`` writes."""
+    path = str(tmp_path / "inf.xlsx")
+    pdf = pd.DataFrame({"a": [1.0, float("inf"), float("-inf")]})
+    _write_xlsx_stdlib(path, {"s": pdf})
+    with zipfile.ZipFile(path) as z:
+        sheet = z.read("xl/worksheets/sheet1.xml").decode()
+    assert "<v>inf" not in sheet and "<v>-inf" not in sheet
+    assert read_xlsx_sheet_pandas(path, "s")["a"].tolist() == [1.0, "inf", "-inf"]
+
+
+def test_excel_sheet_names_cut_to_the_same_name_fail(tmp_path):
+    """Excel cuts sheet names to 31 characters; two that cut to the
+    same name must not silently drop one sheet."""
+    path = str(tmp_path / "clash.xlsx")
+    one = pd.DataFrame({"x": [1]})
+    long_a, long_b = "s" * 31 + "_a", "s" * 31 + "_b"
+    with pytest.raises(ValueError, match=f"{long_a}.*{long_b}"):
+        write_excel_workbook(path, **{long_a: one, long_b: one})
+    assert not os.path.exists(path)
+
+
 def test_xlsx_big_integers_exact(tmp_path):
     path = str(tmp_path / "big.xlsx")
     big = 2**53 + 1  # not representable as a double
