@@ -55,6 +55,7 @@ from mape_calculation_and_anonymization_spark.sources.sinks import (
     write_excel_workbook,
     write_parquet_snappy,
 )
+from mape_calculation_and_anonymization_spark.operators import bpe, dedup, drift, graph
 from mape_calculation_and_anonymization_spark.operators.dedup import (
     exact_dedup_groups,
     jaccard,
@@ -107,11 +108,12 @@ from mape_calculation_and_anonymization_spark.operators.text import (
 SF0001 = "/root/testdata/sf0.001"
 
 
-def _round_doubles(df: DataFrame, scale: int = 6) -> DataFrame:
-    """Round every double column (value-hash stability, see module doc)."""
+def _round_doubles(df: DataFrame) -> DataFrame:
+    """Round every double column to 6 decimals (value-hash stability,
+    see module doc)."""
     return df.select(
         *[
-            F.round(F.col(f.name), scale).alias(f.name)
+            F.round(F.col(f.name), 6).alias(f.name)
             if f.dataType.typeName() == "double"
             else F.col(f.name)
             for f in df.schema.fields
@@ -477,7 +479,7 @@ _U1_ORACLE = """
 def _q_dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup bookkeeping: kept id + duplicate count per key."""
     docs = load_table(spark, sf_dir, "documents")
-    return exact_dedup_groups(docs, ["lang", "source"], "doc_id")
+    return exact_dedup_groups(docs)
 
 
 _DEDUP_EXACT_ORACLE = """
@@ -533,7 +535,7 @@ def _q_dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("fp_spaced").alias("fp"),
         )
     )
-    return bloom_prefilter_anti_join(increment, store, "fp").select(
+    return bloom_prefilter_anti_join(increment, store).select(
         "doc_id", "lang"
     )
 
@@ -619,7 +621,7 @@ def _q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    firsts = exact_dedup(increment, ["fp"], "doc_id")
+    firsts = exact_dedup(increment, ["fp"])
     # deliberately NOT broadcast: the store is corpus-sized (one fp
     # per historical doc) — at scale this is the shuffled anti join a
     # bucketed-on-fp store would make shuffle-free on the history side
@@ -687,10 +689,8 @@ _DEDUP_INCREMENTAL_ORACLE = r"""
 """
 
 
-# 4 bands × 2 rows = 8 md5s per shingle: at threshold 0.5 a twin pair
-# (s ≈ 0.95) is caught with p ≈ 1-(1-s²)⁴ > 0.9999; halving the band
-# count halves the dominant md5 cost. Recall misses are identical on
-# both sides (the oracle re-derives the same bands).
+# Banding is dedup._MD5_BANDS × dedup._MD5_ROWS_PER_BAND, and the
+# oracle mirrors it and the dedup._MD5_MAX_BUCKET flood cap.
 #
 # Shingle space: word 3-GRAMS, not unigrams — the same space the
 # MinHash path shingles into. Unigram-set Jaccard over a templated
@@ -700,15 +700,7 @@ _DEDUP_INCREMENTAL_ORACLE = r"""
 # 3-gram overlap requires shared phrasing, which is the actual
 # near-duplication signal, and keeps the verified pair set
 # answer-sized instead of quadratic.
-_JACCARD_BANDS = 4
-_JACCARD_ROWS_PER_BAND = 2
 _JACCARD_THRESHOLD = 0.5
-# Bucket-size guard shared by the Spark derivation AND the DuckDB
-# oracle — both must drop the same oversized band buckets or the
-# candidate sets diverge. Inert at test scale (max observed bucket at
-# sf0.1 is 168); binds against quadratic pair expansion at corpus
-# scale.
-_JACCARD_MAX_BUCKET = 1000
 
 
 def _jaccard_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -738,7 +730,7 @@ def _jaccard_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         # rebalance BEFORE tokenizing: the single-row-group scan would
         # otherwise run the tokenize on one core
         ensure_min_partitions(docs.unionByName(twins)).select(
-            "doc_id", "lang", "source", word_ngrams("text", 3).alias("toks")
+            "doc_id", "lang", "source", word_ngrams(3).alias("toks")
         ).write.parquet(os.path.join(root, "toks"))
 
     root = _fixture(_fixture_path(sf_dir, "documents", "jaccard_toks"), build)
@@ -800,15 +792,7 @@ def _jaccard_index(spark: SparkSession, sf_dir: str) -> str:
 def _jaccard_verified_pairs(corpus: DataFrame) -> DataFrame:
     """md5-banded LSH candidates verified by exact Jaccard ≥ threshold
     — a linear bucket self-join, never the O(n²) all-pairs join."""
-    cands = md5_lsh_candidate_pairs(
-        corpus,
-        "doc_id",
-        "toks",
-        group_cols=["lang", "source"],
-        bands=_JACCARD_BANDS,
-        rows_per_band=_JACCARD_ROWS_PER_BAND,
-        max_bucket_size=_JACCARD_MAX_BUCKET,
-    ).select("id_a", "id_b")
+    cands = md5_lsh_candidate_pairs(corpus).select("id_a", "id_b")
     a = corpus.select(F.col("doc_id").alias("id_a"), F.col("toks").alias("toks_a"))
     b = corpus.select(F.col("doc_id").alias("id_b"), F.col("toks").alias("toks_b"))
     return (
@@ -856,9 +840,9 @@ def _jaccard_ctes() -> str:
     band_selects = "\n        UNION ALL\n".join(
         f"        SELECT doc_id, lang, source, {j} AS band_idx,\n"
         f"               concat("
-        + ", '|', ".join(mh(j, r) for r in range(_JACCARD_ROWS_PER_BAND))
+        + ", '|', ".join(mh(j, r) for r in range(dedup._MD5_ROWS_PER_BAND))
         + ") AS band_key FROM t"
-        for j in range(_JACCARD_BANDS)
+        for j in range(dedup._MD5_BANDS)
     )
     return rf"""base AS (
         SELECT doc_id, lang, source, text FROM documents
@@ -890,7 +874,7 @@ def _jaccard_ctes() -> str:
             SELECT (lang, source, band_idx, band_key)
             FROM bands
             GROUP BY lang, source, band_idx, band_key
-            HAVING COUNT(*) <= {_JACCARD_MAX_BUCKET}
+            HAVING COUNT(*) <= {dedup._MD5_MAX_BUCKET}
         )
     ),
     cand AS (
@@ -1007,9 +991,9 @@ def _minhash_sigs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus = _docs_with_planted_twins(spark, sf_dir)
         sh = ensure_min_partitions(corpus).select(
             F.col("doc_id").alias("_id"),
-            word_ngrams("text", 3).alias("sh"),
+            word_ngrams(3).alias("sh"),
         )
-        minhash_signatures(sh, "_id", F.col("sh"), 32, 42).write.parquet(
+        minhash_signatures(sh, F.col("sh")).write.parquet(
             os.path.join(root, "sigs")
         )
 
@@ -1052,9 +1036,6 @@ def _q_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _docs_with_planted_twins(spark, sf_dir)
     return minhash_near_duplicates(
         corpus,
-        shingle_k=3,
-        threshold=0.6,
-        shingle_mode="word",
         precomputed_sigs=_minhash_sigs_cached(spark, sf_dir),
         precomputed_shingles=_jaccard_corpus(spark, sf_dir).select(
             "doc_id", F.col("toks").alias("sh")
@@ -1152,12 +1133,7 @@ def _q_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus.filter(F.col("doc_id") >= 1_000_000),
         corpus.filter(F.col("doc_id") < 1_000_000),
         standing_sigs,
-        shingle_k=3,
-        num_hashes=32,
-        bands=8,
-        threshold=0.6,
-        seed=42,
-        shingle_mode="word",
+        word_ngrams(dedup._MINHASH_SHINGLE_K),
     ).orderBy("id_a", "id_b")
 
 
@@ -1304,17 +1280,7 @@ def _q_stream_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.path.join(root, "state0", store),
                 os.path.join(state_dir, store),
             )
-        pairs = streaming_minhash_ingest(
-            stream,
-            state_dir,
-            shingle_k=3,
-            num_hashes=32,
-            bands=8,
-            threshold=0.6,
-            seed=42,
-            shingle_mode="word",
-            shuffle_partitions=4,
-        )
+        pairs = streaming_minhash_ingest(stream, state_dir)
         out = checkpoint(
             pairs.orderBy("id_a", "id_b"), "query.stream_minhash_pairs.pairs"
         )
@@ -1383,7 +1349,6 @@ def _q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     derivation) and the digest-anchor tests in tests/test_dedup.py."""
     return simhash_near_duplicates(
         _docs_with_planted_twins(spark, sf_dir),
-        max_hamming=3,
         precomputed_sigs=_simhash_sigs_cached(spark, sf_dir),
     ).orderBy("id_a", "id_b")
 
@@ -1422,9 +1387,7 @@ def _q_dedup_simhash_md5_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (chunks = max_hamming+1) makes the banded output EQUAL to the
     quadratic all-pairs filter, so only the oracle pays n²."""
     corpus = _docs_with_planted_twins(spark, sf_dir)
-    return simhash_near_duplicates(
-        corpus, max_hamming=3, feature_hash="md5"
-    ).orderBy("id_a", "id_b")
+    return simhash_near_duplicates(corpus, feature_hash="md5").orderBy("id_a", "id_b")
 
 
 # The twin recomputes the signature in SQL, bit for bit: same corpus
@@ -1592,7 +1555,7 @@ def _q_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 100 == 0)
     codebooks = _pq_codebooks_cached(spark, sf_dir)
-    return pq_top_k(emb, queries, codebooks, k=10, shortlist_factor=8).orderBy(
+    return pq_top_k(emb, queries, codebooks).orderBy(
         "query_id", "rank"
     )
 
@@ -1705,10 +1668,9 @@ def _q_ivf_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") % 100 == 0)
     assigned, centroids = _ivf_index_cached(spark, sf_dir, n_clusters=16)
     codebooks = _pq_codebooks_cached(spark, sf_dir)
-    return ivf_pq_top_k(
-        assigned, centroids, queries, codebooks, k=10, nprobe=4,
-        shortlist_factor=8,
-    ).orderBy("query_id", "rank")
+    return ivf_pq_top_k(assigned, centroids, queries, codebooks).orderBy(
+        "query_id", "rank"
+    )
 
 
 def _ivf_pq_ann_oracle(sf_dir: str) -> str:
@@ -1844,9 +1806,7 @@ def _q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 100 == 0)
     assigned, centroids = _ivf_index_cached(spark, sf_dir, n_clusters=8)
-    return ivf_recall_curve(
-        assigned, centroids, queries, k=10, budgets=(1, 2, 4, 8)
-    )
+    return ivf_recall_curve(assigned, centroids, queries)
 
 
 def _ann_recall_oracle(sf_dir: str) -> str:
@@ -1973,7 +1933,7 @@ def _q_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 100 == 0)
     assigned, centroids = _ivf_index_cached(spark, sf_dir, n_clusters=8)
-    return ivf_top_k(assigned, centroids, queries, k=3, nprobe=8)
+    return ivf_top_k(assigned, centroids, queries)
 
 
 def _ivf_standing_index_cached(spark: SparkSession, sf_dir: str):
@@ -2026,7 +1986,7 @@ def _q_ivf_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned0, centroids = _ivf_standing_index_cached(spark, sf_dir)
     assigned = ivf_add(assigned0, centroids, drop)
     queries = emb.filter(F.col("vec_id") % 100 == 0)
-    return ivf_top_k(assigned, centroids, queries, k=3, nprobe=8)
+    return ivf_top_k(assigned, centroids, queries)
 
 
 def _q_stream_stateful_wape(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2091,9 +2051,7 @@ def _q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") + F.lit(1_000_000)).alias("vec_id"),
         F.transform(F.col("embedding"), lambda x: x * F.lit(1.01)).alias("embedding"),
     )
-    return embedding_near_duplicates(
-        emb.unionByName(twins), threshold=0.98
-    ).orderBy("id_a", "id_b")
+    return embedding_near_duplicates(emb.unionByName(twins)).orderBy("id_a", "id_b")
 
 
 _EMBEDDING_NEAR_DUP_ORACLE = """
@@ -2125,7 +2083,7 @@ def _q_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         "doc_id",
         token_count("text").alias("n_tokens"),
-        bpeish_token_count("text").alias("n_bpeish"),
+        bpeish_token_count().alias("n_bpeish"),
     )
 
 
@@ -2281,7 +2239,7 @@ def _q_text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     (measured 0.44s per-row vs 1.55s bulk at sf0.1): decorate-in-place
     beats join-back when nothing downstream re-keys."""
     docs = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
-    return docs.select("doc_id", language_id("text").alias("lang_pred"))
+    return docs.select("doc_id", language_id().alias("lang_pred"))
 
 
 def _lang_id_oracle() -> str:
@@ -2315,7 +2273,7 @@ def _lang_id_oracle() -> str:
 
 def _q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return docs.select("doc_id", fingerprint("text").alias("fp"))
+    return docs.select("doc_id", fingerprint().alias("fp"))
 
 
 _TEXT_FP_ORACLE = """
@@ -2411,7 +2369,7 @@ def _q_asof_join_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("value").alias("hourly_volume"))
         .select("zone", F.col("w.start").alias("ts"), "hourly_volume")
     )
-    out = asof_join(ev, rates, on="ts", by=["zone"], right_cols=["hourly_volume"])
+    out = asof_join(ev, rates)
     return out.select(
         "event_id", "zone", F.round("value", 6).alias("value"),
         F.round("hourly_volume", 6).alias("hourly_volume"),
@@ -2827,11 +2785,7 @@ def _q_s5_jsonl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .coalesce(1)
         .write.json(path),
     )
-    df = read_jsonl(
-        spark,
-        _JSONL_FIXTURE,
-        schema="event_id bigint, user_id bigint, event_type string, value double",
-    )
+    df = read_jsonl(spark, _JSONL_FIXTURE)
     return df.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("user_id").alias("n_users"),
@@ -3091,7 +3045,7 @@ def _q_k8_targeted_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("user_id")
             .distinct()
         )
-        stats = delete_keys(spark, path, "user_id", keys)
+        stats = delete_keys(spark, path, keys)
         assert stats["files_rewritten"] <= stats["files_total"]
 
     path = _fixture(_fixture_path(sf_dir, "events", "deleted"), build)
@@ -3122,7 +3076,7 @@ def _q_salted_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("l_partkey"), "p_brand"
     )
-    joined = salted_join(li, part, on="l_partkey", salt=8)
+    joined = salted_join(li, part)
     return joined.groupBy("p_brand").agg(
         F.count(F.lit(1)).alias("n_lines"),
         F.round(
@@ -3157,18 +3111,14 @@ def _q_bucketed_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "o_orderkey", "o_custkey", "o_totalprice"
             ),
             t_orders,
-            "o_custkey",
-            n_buckets=8,
         )
         write_bucketed_table(
             load_table(spark, sf_dir, "customer").select(
                 F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
             ),
             t_cust,
-            "o_custkey",
-            n_buckets=8,
         )
-    joined = bucketed_join(spark, t_orders, t_cust, on="o_custkey")
+    joined = bucketed_join(spark, t_orders, t_cust)
     return joined.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.round(F.sum("o_totalprice"), 2).alias("total_price"),
@@ -3401,9 +3351,7 @@ def _q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     # complete mode: append would withhold the final ~watermark-delay
     # of windows (never finalized before the AvailableNow run ends)
     out = run_stream_to_memory(
-        stream_static_enrich(
-            read_events_stream(spark, sf_dir), dim, on="event_type"
-        ),
+        stream_static_enrich(read_events_stream(spark, sf_dir), dim),
         output_mode="complete",
         shuffle_partitions=4,
         final_flush=False,  # complete mode: flush batch duplicates output
@@ -3484,9 +3432,7 @@ def _q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = read_events_stream(spark, sf_dir)
     purchases = events.filter(F.col("event_type") == "purchase")
     clicks = events.filter(F.col("event_type") == "click")
-    joined = stream_stream_interval_join(
-        purchases, clicks, on="user_id", interval="INTERVAL 1 HOUR"
-    )
+    joined = stream_stream_interval_join(purchases, clicks)
     # 2 state partitions: stream-stream joins open TWO state stores
     # per partition per micro-batch, the dominant fixed cost at local
     # volume (measured 3.0s @ 8 → 2.1s @ 4 → 1.7s @ 2, same rows);
@@ -3830,7 +3776,7 @@ def _q_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     unique = _pipeline_stages_shared(spark, sf_dir)["unique"]
-    return pack_sequences(unique, budget=512, shard_size=256)
+    return pack_sequences(unique)
 
 
 def _training_stage_ctes() -> str:
@@ -3928,7 +3874,7 @@ def _q_key_skew_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     li = load_table(spark, sf_dir, "lineitem").select("l_suppkey")
-    return key_skew_stats(li, "l_suppkey", top_k=10)
+    return key_skew_stats(li)
 
 
 _KEY_SKEW_ORACLE = """
@@ -4023,7 +3969,7 @@ def _q_stream_key_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     key_dir = _fixture(
         _fixture_path(sf_dir, "events", "stream_key"),
         lambda key_dir: stream_key_table_upsert(
-            read_events_stream(spark, sf_dir), key_dir, col="user_id"
+            read_events_stream(spark, sf_dir), key_dir
         ),
     )
     return (
@@ -4064,7 +4010,7 @@ _MULTIMODAL_META_ORACLE = """
 
 def _q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    frames = frame_sample(attach_binary_payload(docs), n_frames=4)
+    frames = frame_sample(attach_binary_payload(docs))
     return frames.select(
         "doc_id", "frame_idx", F.octet_length("frame").alias("frame_bytes")
     )
@@ -4912,7 +4858,7 @@ def _q_text_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     )
-    return dirty.select("doc_id", redact_pii("dirty").alias("clean_text"))
+    return dirty.select("doc_id", redact_pii().alias("clean_text"))
 
 
 def _pii_oracle() -> str:
@@ -4938,7 +4884,7 @@ def _q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     form re-evaluates the interpreted gram list per consuming
     expression (~4× slower at sf0.1)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    stats = ngram_repetition_stats(docs, "doc_id", "text", 3)
+    stats = ngram_repetition_stats(docs)
     rep = F.round("rep3", 6)
     return stats.select(
         "doc_id",
@@ -4988,7 +4934,7 @@ def _q_seq_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return pack_sequences(docs, budget=512, shard_size=256)
+    return pack_sequences(docs)
 
 
 _SEQ_PACKING_ORACLE = r"""
@@ -5027,7 +4973,6 @@ def _q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     return contamination_check(
         docs.filter(F.col("doc_id") >= 20),
         docs.filter(F.col("doc_id") < 20),
-        n=8,
     )
 
 
@@ -5058,7 +5003,7 @@ def _q_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     prep): 32-token chunks, 8-token overlap — one posexplode
     projection, no shuffle."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return chunk_documents(docs, "doc_id", "text", chunk_tokens=32, overlap=8)
+    return chunk_documents(docs)
 
 
 _CHUNKING_ORACLE = r"""
@@ -5096,9 +5041,7 @@ def _q_sample_stratified_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source"
     )
-    return stratified_sample(
-        docs, "doc_id", "lang", {"en": 0.6, "de": 0.25}, default_rate=0.05
-    )
+    return stratified_sample(docs)
 
 
 def _sample_oracle() -> str:
@@ -5117,9 +5060,9 @@ def _sample_oracle() -> str:
 _SAMPLE_ORACLE = _sample_oracle()
 
 
-def _bpe_training_oracle_sql(n_merges: int = 12, limit: int = 2000) -> str:
+def _bpe_training_oracle_sql() -> str:
     """Generate the DuckDB twin for bpe_vocab_merges: BPE TRAINING in
-    pure SQL — n_merges unrolled blocks, each = weighted pair count
+    pure SQL — 12 unrolled merge blocks, each = weighted pair count
     over the current symbol table (lateral unnest of adjacent
     positions), argmax with the trainer's exact (-count, left, right)
     tie-break, and the left-to-right merge fold as a recursive
@@ -5140,7 +5083,7 @@ def _bpe_training_oracle_sql(n_merges: int = 12, limit: int = 2000) -> str:
         WHERE length(word) > 0
         GROUP BY word
         ORDER BY freq DESC, word ASC
-        LIMIT {limit}
+        LIMIT {bpe._VOCAB_WORDS}
     ),
     syms0 AS MATERIALIZED (
         SELECT word, freq,
@@ -5148,7 +5091,7 @@ def _bpe_training_oracle_sql(n_merges: int = 12, limit: int = 2000) -> str:
                               i -> word[i:i]) AS syms
         FROM vocab
     )"""]
-    for m in range(n_merges):
+    for m in range(bpe._MERGES):
         parts.append(f""",
     pairs{m} AS MATERIALIZED (
         SELECT s.syms[t.i] AS a, s.syms[t.i + 1] AS b,
@@ -5186,7 +5129,7 @@ def _bpe_training_oracle_sql(n_merges: int = 12, limit: int = 2000) -> str:
     sel = "\n    UNION ALL\n".join(
         f'    SELECT CAST({m} AS INT) AS rank, a AS "left", b AS "right",'
         f" a || b AS merged, c AS pair_count FROM best{m}"
-        for m in range(n_merges)
+        for m in range(bpe._MERGES)
     )
     parts.append(f"""
 {sel}
@@ -5217,8 +5160,8 @@ def _q_bpe_vocab_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents").select("text")
-    words = word_frequencies(docs, limit=2000)
-    return bpe_merges_local(words, n_merges=12)
+    words = word_frequencies(docs)
+    return bpe_merges_local(words)
 
 
 def _q_vocab_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5270,8 +5213,6 @@ def _q_contamination_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return contamination_near_dup(
         corpus.filter(F.col("doc_id") >= 20),
         corpus.filter(F.col("doc_id") < 20),
-        n=3,
-        threshold=0.5,
     ).orderBy("train_id", "bench_id")
 
 
@@ -5345,8 +5286,6 @@ def _q_decontamination_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decontaminate_corpus(
         corpus.filter(F.col("doc_id") >= 20),
         corpus.filter(F.col("doc_id") < 20),
-        n=3,
-        drop_threshold=0.5,
     ).orderBy("doc_id")
 
 
@@ -5507,7 +5446,7 @@ def _q_curation_fates(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(_jaccard_index(spark, sf_dir), "clusters")
     )
     contaminated = (
-        contamination_near_dup(train, bench, n=3, threshold=0.5)
+        contamination_near_dup(train, bench)
         .select(F.col("train_id").alias("doc_id"))
         .distinct()
         .withColumn("_cont", F.lit(True))
@@ -6891,7 +6830,7 @@ def _q_normalized_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return (
-        docs.select("doc_id", F.md5(normalize_text("text")).alias("norm_hash"))
+        docs.select("doc_id", F.md5(normalize_text()).alias("norm_hash"))
         .groupBy("norm_hash")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -6923,7 +6862,7 @@ def _q_bigram_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("text")
     return (
-        docs.select(F.explode(word_bigrams("text")).alias("bigram"))
+        docs.select(F.explode(word_bigrams()).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.col("n").desc(), "bigram")
@@ -7028,7 +6967,6 @@ def _q_stream_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "event_id", "ts", "user_id", "event_type", "value"
             ),
             sink_dir,
-            shuffle_partitions=8,
         ),
     )
     landed = spark.read.parquet(sink_dir)
@@ -7322,11 +7260,11 @@ def _q_hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     q_docs = docs.filter(F.col("doc_id") % 100 == 0)
     q_vecs = emb.filter(F.col("vec_id") % 100 == 0)
-    lex = jaccard_top_k(q_docs, docs, n=3, k=10)
+    lex = jaccard_top_k(q_docs, docs)
     vec = brute_force_top_k(emb, q_vecs, k=10).select(
         "query_id", F.col("neighbor_id").alias("doc_id"), "rank"
     )
-    return rrf_fuse(lex, vec, k=10, rrf_k=60).orderBy(
+    return rrf_fuse(lex, vec).orderBy(
         "query_id", "fused_rank"
     )
 
@@ -7699,7 +7637,7 @@ def _q_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         docs.withColumn(
             "split",
-            hash_split("doc_id", {"train": 0.8, "val": 0.1, "test": 0.1}),
+            hash_split("doc_id"),
         )
         .groupBy("split", "lang")
         .agg(F.count(F.lit(1)).alias("n_docs"))
@@ -7754,9 +7692,7 @@ def _q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + F.lit(1_000_000)).alias("doc_id")
     )
     corpus = docs.unionByName(twins)
-    return leakage_safe_split(
-        corpus, clusters, {"train": 0.8, "val": 0.1, "test": 0.1}
-    ).orderBy("doc_id")
+    return leakage_safe_split(corpus, clusters).orderBy("doc_id")
 
 
 def _leakage_split_oracle() -> str:
@@ -8138,7 +8074,6 @@ _PROFILE_APPROX_ORACLE = """
 
 
 _DRIFT_SPLIT = "2024-01-16"  # events span 2024-01-01..30 (TESTDATA.md)
-_DRIFT_BIN_WIDTH = 50.0  # value ∈ [0, ~500] → ≈10 bins per event type
 
 
 def _q_drift_events_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8163,16 +8098,13 @@ def _q_drift_events_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return drift_scorecard(
         ev.filter(F.col("ts") < split),
         ev.filter(F.col("ts") >= split),
-        ["event_type"],
-        "value",
-        bin_width=_DRIFT_BIN_WIDTH,
     )
 
 
 _DRIFT_SCORECARD_ORACLE = f"""
     WITH binned AS (
         SELECT event_type,
-               CAST(FLOOR(value / {_DRIFT_BIN_WIDTH}) AS BIGINT) AS bin,
+               CAST(FLOOR(value / {drift._SCORECARD_BIN_WIDTH}) AS BIGINT) AS bin,
                (ts < TIMESTAMP '{_DRIFT_SPLIT}') AS is_ref
         FROM events WHERE value IS NOT NULL AND ts IS NOT NULL
     ),
@@ -8226,9 +8158,6 @@ _DRIFT_SCORECARD_ORACLE = f"""
 """
 
 
-_DUP_SPAN_N = 5  # word-shingle width (≈9% dup positions on testdata)
-
-
 def _q_text_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document duplicated-span statistics (Lee et al. 2021's
     verbatim-substring dedup signal — operators/dedup.py:
@@ -8246,7 +8175,7 @@ def _q_text_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = ensure_min_partitions(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
-    return duplicated_span_stats(docs, "doc_id", "text", n=_DUP_SPAN_N)
+    return duplicated_span_stats(docs)
 
 
 _DUP_SPAN_ORACLE = rf"""
@@ -8257,9 +8186,9 @@ _DUP_SPAN_ORACLE = rf"""
     ),
     sh AS (
         SELECT doc_id,
-               array_to_string(raw[i+1:i+{_DUP_SPAN_N}], ' ') AS shingle
+               array_to_string(raw[i+1:i+{dedup._SPAN_N}], ' ') AS shingle
         FROM t, LATERAL unnest(
-            range(0, GREATEST(len(raw) - {_DUP_SPAN_N} + 1, 0))
+            range(0, GREATEST(len(raw) - {dedup._SPAN_N} + 1, 0))
         ) AS u(i)
     ),
     c AS (SELECT shingle, COUNT(*) AS cnt FROM sh GROUP BY shingle)
@@ -8296,7 +8225,7 @@ def _q_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = ensure_min_partitions(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
-    return exact_substring_spans(docs, "doc_id", "text", n=_DUP_SPAN_N)
+    return exact_substring_spans(docs)
 
 
 # Twin re-derives the whole plan: window-numbered canonical (rn=1 on
@@ -8310,9 +8239,9 @@ _EXACT_SUBSTRING_ORACLE = rf"""
     ),
     sh AS (
         SELECT doc_id, CAST(i AS INT) AS pos,
-               array_to_string(raw[i+1:i+{_DUP_SPAN_N}], ' ') AS shingle
+               array_to_string(raw[i+1:i+{dedup._SPAN_N}], ' ') AS shingle
         FROM t, LATERAL unnest(
-            range(0, GREATEST(len(raw) - {_DUP_SPAN_N} + 1, 0))
+            range(0, GREATEST(len(raw) - {dedup._SPAN_N} + 1, 0))
         ) AS u(i)
     ),
     marked AS (
@@ -8328,7 +8257,7 @@ _EXACT_SUBSTRING_ORACLE = rf"""
     ),
     isl AS (
         SELECT doc_id, pos,
-               CASE WHEN pos > COALESCE(MAX(pos + {_DUP_SPAN_N - 1}) OVER (
+               CASE WHEN pos > COALESCE(MAX(pos + {dedup._SPAN_N - 1}) OVER (
                    PARTITION BY doc_id ORDER BY pos
                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
                ), -2) + 1 THEN 1 ELSE 0 END AS new_island
@@ -8344,8 +8273,8 @@ _EXACT_SUBSTRING_ORACLE = rf"""
     )
     SELECT doc_id,
            MIN(pos) AS span_start,
-           CAST(MAX(pos) + {_DUP_SPAN_N - 1} AS INT) AS span_end,
-           CAST(MAX(pos) + {_DUP_SPAN_N - 1} - MIN(pos) + 1 AS INT)
+           CAST(MAX(pos) + {dedup._SPAN_N - 1} AS INT) AS span_end,
+           CAST(MAX(pos) + {dedup._SPAN_N - 1} - MIN(pos) + 1 AS INT)
                AS span_tokens
     FROM grp
     GROUP BY doc_id, island
@@ -8370,7 +8299,7 @@ def _q_exactsubstr_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = ensure_min_partitions(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
-    spans = exact_substring_spans(docs, "doc_id", "text", n=_DUP_SPAN_N)
+    spans = exact_substring_spans(docs)
     return apply_remove_spans(docs, spans).orderBy("doc_id")
 
 
@@ -8386,9 +8315,9 @@ _EXACTSUBSTR_CUT_ORACLE = rf"""
     ),
     sh AS (
         SELECT doc_id, CAST(i AS INT) AS pos,
-               array_to_string(raw[i+1:i+{_DUP_SPAN_N}], ' ') AS shingle
+               array_to_string(raw[i+1:i+{dedup._SPAN_N}], ' ') AS shingle
         FROM t, LATERAL unnest(
-            range(0, GREATEST(len(raw) - {_DUP_SPAN_N} + 1, 0))
+            range(0, GREATEST(len(raw) - {dedup._SPAN_N} + 1, 0))
         ) AS u(i)
     ),
     marked AS (
@@ -8404,7 +8333,7 @@ _EXACTSUBSTR_CUT_ORACLE = rf"""
     ),
     covered AS (
         SELECT DISTINCT doc_id, idx FROM (
-            SELECT doc_id, unnest(range(pos, pos + {_DUP_SPAN_N})) AS idx
+            SELECT doc_id, unnest(range(pos, pos + {dedup._SPAN_N})) AS idx
             FROM removable
         )
     ),
@@ -8504,9 +8433,7 @@ def _q_semantic_dedup_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.lit(False).alias("passed"),
     )
-    return semantic_dedup_gated(
-        orig.unionByName(twins), centroids, threshold=0.98
-    ).orderBy("vec_id")
+    return semantic_dedup_gated(orig.unionByName(twins), centroids).orderBy("vec_id")
 
 
 def _semantic_dedup_gated_oracle(sf_dir: str) -> str:
@@ -8607,7 +8534,7 @@ def _q_stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the oracle."""
     split = F.lit(_DRIFT_SPLIT).cast("timestamp")
     bin_col = (
-        F.floor(F.col("value") / F.lit(_DRIFT_BIN_WIDTH))
+        F.floor(F.col("value") / F.lit(drift._SCORECARD_BIN_WIDTH))
         .cast("long")
         .alias("_bin")
     )
@@ -8669,7 +8596,7 @@ def _q_stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STREAM_DRIFT_ORACLE = f"""
     WITH cur AS (
         SELECT date_trunc('hour', ts) AS hour_start, event_type,
-               CAST(FLOOR(value / {_DRIFT_BIN_WIDTH}) AS BIGINT) AS bin,
+               CAST(FLOOR(value / {drift._SCORECARD_BIN_WIDTH}) AS BIGINT) AS bin,
                COUNT(*) AS nc
         FROM events
         WHERE ts >= TIMESTAMP '{_DRIFT_SPLIT}' AND value IS NOT NULL
@@ -8677,7 +8604,7 @@ _STREAM_DRIFT_ORACLE = f"""
     ),
     ref AS (
         SELECT event_type,
-               CAST(FLOOR(value / {_DRIFT_BIN_WIDTH}) AS BIGINT) AS bin,
+               CAST(FLOOR(value / {drift._SCORECARD_BIN_WIDTH}) AS BIGINT) AS bin,
                COUNT(*) AS nr
         FROM events
         WHERE ts < TIMESTAMP '{_DRIFT_SPLIT}' AND value IS NOT NULL
@@ -8725,8 +8652,6 @@ _STREAM_DRIFT_ORACLE = f"""
 
 
 
-# embedding components span ≈[-0.5, 0.5]; width 0.1 → ~10 bins/dim
-_EMB_DRIFT_BIN_WIDTH = 0.1
 
 
 def _q_drift_embedding_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8761,9 +8686,6 @@ def _q_drift_embedding_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     return population_stability(
         comp.filter(F.col("vec_id") % 2 == 0).select("dim", "val"),
         comp.filter(F.col("vec_id") % 2 == 1).select("dim", "val"),
-        ["dim"],
-        "val",
-        bin_width=_EMB_DRIFT_BIN_WIDTH,
     )
 
 
@@ -8776,7 +8698,7 @@ _EMB_DRIFT_ORACLE = f"""
     ),
     cells AS (
         SELECT dim,
-               FLOOR(val / {_EMB_DRIFT_BIN_WIDTH}) * {_EMB_DRIFT_BIN_WIDTH} AS bin,
+               FLOOR(val / {drift._PSI_BIN_WIDTH}) * {drift._PSI_BIN_WIDTH} AS bin,
                SUM(CASE WHEN is_ref THEN 1 ELSE 0 END) AS nr,
                SUM(CASE WHEN NOT is_ref THEN 1 ELSE 0 END) AS nc
         FROM comp WHERE val IS NOT NULL
@@ -9046,7 +8968,7 @@ def _q_k4_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartition(16),
             path,
         )
-        compact_parquet(spark, path, target_partitions=2)
+        compact_parquet(spark, path)
         assert len(glob.glob(os.path.join(path, "part-*.parquet"))) <= 2
 
     path = _fixture(_fixture_path(sf_dir, "events", "compacted"), build)
@@ -9145,7 +9067,7 @@ def _q_k6_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         # factors (>256 users at sf>=0.1 would saturate a raw 8-bit
         # Morton dimension); equal-population bucketing keeps skipping
         # quality at ANY cardinality
-        zorder_write_auto(ev, path, cols=["user_id", "day"], bits=8, n_files=8)
+        zorder_write_auto(ev, path)
 
     path = _fixture(_fixture_path(sf_dir, "events", "zorder"), build)
     df = spark.read.parquet(path).filter(F.col("user_id") < 15)
@@ -9246,9 +9168,7 @@ def _q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").isin("purchase", "sentinel")
     )
     clicks = events.filter(F.col("event_type").isin("click", "sentinel"))
-    joined = stream_stream_left_outer_join(
-        purchases, clicks, on="user_id", interval="INTERVAL 1 HOUR"
-    )
+    joined = stream_stream_left_outer_join(purchases, clicks)
     # 2 state partitions — same stream-stream state-store argument as
     # the inner-join query (measured 3.8s @ 8 → 2.7s @ 4 → 2.6s @ 2,
     # same rows; ×3 micro-batches here, so the per-batch store cost
@@ -9295,7 +9215,7 @@ def _cooc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("minute", "ts").alias("m"),
     )
     return checkpoint(
-        cooccurrence_edges(ev, "user_id", ["event_type", "m"], max_bucket_size=256),
+        cooccurrence_edges(ev),
         "query.cooc_edges.edges",
     )
 
@@ -9325,19 +9245,19 @@ def _q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TRIANGLE_ORACLE = """
+_TRIANGLE_ORACLE = f"""
     WITH e AS (
         SELECT user_id, event_type,
                date_trunc('minute', make_timestamp(epoch_ns(ts) // 1000)) AS m
         FROM events
     ),
-    -- mirror the Spark side's max_bucket_size=256 hot-bucket guard
+    -- mirror the Spark side's max_bucket_size={graph._COOCCURRENCE_MAX_BUCKET} hot-bucket guard
     -- (row count per bucket, pre-dedup — same probe cooccurrence_edges
     -- runs) so parity holds at ANY scale factor, not just where no
     -- bucket exceeds the cap
     bucket_ok AS (
         SELECT event_type, m FROM e
-        GROUP BY event_type, m HAVING COUNT(*) <= 256
+        GROUP BY event_type, m HAVING COUNT(*) <= {graph._COOCCURRENCE_MAX_BUCKET}
     ),
     edges AS (
         SELECT DISTINCT a.user_id AS u, b.user_id AS v
@@ -9439,7 +9359,7 @@ def _q_pagerank_influencers(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _cooc_edges(spark, sf_dir).select(
         F.col("u").alias("id_a"), F.col("v").alias("id_b")
     )
-    ranks = pagerank(edges, iterations=10)
+    ranks = pagerank(edges)
     return (
         ranks.select("id", F.round("rank", 6).alias("rank"))
         .orderBy(F.col("rank").desc(), "id")
@@ -9447,9 +9367,9 @@ def _q_pagerank_influencers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pagerank_oracle(iterations: int = 10, damping: float = 0.85) -> str:
+def _pagerank_oracle() -> str:
     """DuckDB twin of _q_pagerank_influencers: the fixed-iteration
-    power method unrolled into ``iterations`` chained CTEs. Mirrors
+    power method (damping 0.85) unrolled into 10 chained CTEs. Mirrors
     operators/graph.py:pagerank exactly — undirected symmetrization
     (both directions, distinct), 1/deg folded into the edge list once,
     uniform 1/n start, r_k(v) = (1-d)/n + d * Σ_{(u,v)} w(u)·r_{k-1}(u)
@@ -9462,12 +9382,13 @@ def _pagerank_oracle(iterations: int = 10, damping: float = 0.85) -> str:
     ~1e-14, far inside the rounding margin."""
     rounds = []
     prev = "r0"
-    for k in range(1, iterations + 1):
+    d = graph._PAGERANK_DAMPING
+    for k in range(1, graph._PAGERANK_ITERATIONS + 1):
         rounds.append(
             f"""    r{k} AS (
         SELECT s.v AS u,
-               (1.0 - {damping}) / (SELECT n FROM n)
-                   + {damping} * SUM(s.w * {prev}.rank) AS rank
+               (1.0 - {d}) / (SELECT n FROM n)
+                   + {d} * SUM(s.w * {prev}.rank) AS rank
         FROM symw s JOIN {prev} ON s.u = {prev}.u
         GROUP BY s.v
     )"""
@@ -9480,11 +9401,11 @@ def _pagerank_oracle(iterations: int = 10, damping: float = 0.85) -> str:
                date_trunc('minute', make_timestamp(epoch_ns(ts) // 1000)) AS m
         FROM events
     ),
-    -- mirror cooccurrence_edges' max_bucket_size=256 hot-bucket guard
+    -- mirror cooccurrence_edges' max_bucket_size={graph._COOCCURRENCE_MAX_BUCKET} hot-bucket guard
     -- (same probe as _TRIANGLE_ORACLE)
     bucket_ok AS (
         SELECT event_type, m FROM e
-        GROUP BY event_type, m HAVING COUNT(*) <= 256
+        GROUP BY event_type, m HAVING COUNT(*) <= {graph._COOCCURRENCE_MAX_BUCKET}
     ),
     pairs AS (
         SELECT DISTINCT a.user_id AS u, b.user_id AS v
@@ -9562,7 +9483,7 @@ def _q_stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("latestFirst", "false")
             .parquet(files)
         )
-        stream_incremental_agg(stream, table, key="event_type")
+        stream_incremental_agg(stream, table)
 
     _fixture(os.path.join(root, "input"), land_input)
     table = _fixture(os.path.join(root, "table"), drain)
@@ -9636,14 +9557,7 @@ def _q_asof_tolerance_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("value").alias("hourly_volume"))
         .select("zone", F.col("w.start").alias("ts"), "hourly_volume")
     )
-    out = asof_join(
-        ev,
-        rates,
-        on="ts",
-        by=["zone"],
-        right_cols=["hourly_volume"],
-        tolerance="30 MINUTES",
-    )
+    out = asof_join(ev, rates, tolerance="30 MINUTES")
     return out.select(
         "event_id",
         "zone",
@@ -9857,14 +9771,14 @@ def _pipeline_stages_shared(spark: SparkSession, sf_dir: str) -> dict:
         docs.select(
             "doc_id",
             "text",
-            (language_id("text") == "en").alias("g_lang"),
+            (language_id() == "en").alias("g_lang"),
             (F.round(quality_score("text"), 6) >= 0.4).alias("g_qual"),
         ).write.parquet(os.path.join(root, "gated"))
         passing = spark.read.parquet(os.path.join(root, "gated")).filter(
             F.col("g_lang") & F.col("g_qual")
         )
         passing.join(
-            ngram_repetition_stats(passing, "doc_id", "text", 3)
+            ngram_repetition_stats(passing)
             .filter(F.round("rep3", 6) < 0.2)
             .select("doc_id"),
             "doc_id",
@@ -9874,7 +9788,6 @@ def _pipeline_stages_shared(spark: SparkSession, sf_dir: str) -> dict:
         exact_dedup(
             spark.read.parquet(os.path.join(root, "survivors")),
             ["text"],
-            "doc_id",
         ).write.parquet(os.path.join(root, "unique"))
 
     # v1 suffix = derivation-logic version (same rationale as
@@ -9959,7 +9872,7 @@ def _q_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text"
     )
-    predicted = language_id_bulk(docs, "text", ["doc_id"])
+    predicted = language_id_bulk(docs)
     return (
         predicted.select(F.col("lang").alias("actual"), "predicted")
         .groupBy("actual", "predicted")
@@ -10000,9 +9913,9 @@ def _q_kanon_generalize_suppress(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey",
         "c_nationkey",
         "c_mktsegment",
-        band("c_acctbal", 1000).alias("bal_band"),
+        band(1000).alias("bal_band"),
     )
-    return k_anonymize(cust, ["c_nationkey", "c_mktsegment"], k=8)
+    return k_anonymize(cust)
 
 
 _KANON_ORACLE = """
@@ -10033,12 +9946,10 @@ def _q_ldiversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cust = load_table(spark, sf_dir, "customer").select(
         "c_nationkey",
-        band("c_acctbal", 2000).alias("bal_band"),
+        band(2000).alias("bal_band"),
         "c_mktsegment",
     )
-    return l_diversity_report(
-        cust, ["c_nationkey", "bal_band"], "c_mktsegment", l=3
-    )
+    return l_diversity_report(cust)
 
 
 _LDIVERSITY_ORACLE = """
@@ -10068,11 +9979,9 @@ def _q_kanon_risk_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         "c_nationkey",
         "c_mktsegment",
-        band("c_acctbal", 1000).alias("bal_band"),
+        band(1000).alias("bal_band"),
     )
-    return equivalence_class_histogram(
-        cust, ["c_nationkey", "c_mktsegment", "bal_band"]
-    )
+    return equivalence_class_histogram(cust)
 
 
 _KANON_RISK_ORACLE = """
@@ -10098,25 +10007,15 @@ def _q_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derives the identical draw, so the compare verifies the whole
     mechanism, not just the true counts. Single hash aggregate; the
     noise is a scalar expression on the answer-sized result. The
-    noise key is the collision-free per-column-md5 encoding
-    (privacy.py:noise_key) — the '|'-concat of raw values was
-    ambiguous across multi-column groups and NULL-divergent vs the
-    oracle. seed=42 is the documented reproducible TEST seed (the
-    operator warns on it by design)."""
-    import warnings
-
+    noise key is the collision-free md5 encoding (privacy.py:noise_key)
+    — the raw value was NULL-divergent vs the oracle. The seed, 42, is
+    the documented reproducible TEST seed."""
     from mape_calculation_and_anonymization_spark.operators.privacy import (
         dp_noisy_counts,
     )
 
     ev = load_events(spark, sf_dir).select("event_type")
-    with warnings.catch_warnings():
-        # suppress ONLY the expected test-seed warning — anything else
-        # raised inside the call (deprecations etc.) must stay visible
-        warnings.filterwarnings(
-            "ignore", message=r".*reproducible TEST seed.*"
-        )
-        return dp_noisy_counts(ev, ["event_type"], epsilon=1.0, seed=42)
+    return dp_noisy_counts(ev)
 
 
 def _dp_noisy_counts_oracle() -> str:
@@ -10176,13 +10075,7 @@ def _q_forecast_metrics_by_zone(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("settlement").alias("actual"),
         )
     )
-    return forecast_accuracy(
-        hourly,
-        ["zone"],
-        forecast_col="forecast",
-        actual_col="actual",
-        order_cols=["proxy_date", "hour"],
-    )
+    return forecast_accuracy(hourly)
 
 
 _FORECAST_METRICS_ORACLE = f"""
@@ -10286,9 +10179,7 @@ def _q_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_events(spark, sf_dir).select("event_id", "user_id", "event_type", "ts")
     conversions = ev.filter(F.col("event_type") == "purchase")
     touches = ev.filter(F.col("event_type").isin("click", "view"))
-    return touch_attribution(
-        conversions, touches, on="user_id", lookback="INTERVAL 7 DAYS"
-    ).orderBy("conversion_id")
+    return touch_attribution(conversions, touches).orderBy("conversion_id")
 
 
 _TOUCH_ATTRIBUTION_ORACLE = """
@@ -10344,8 +10235,8 @@ def _bpe_merges_cached(spark: SparkSession, sf_dir: str):
 
     def build(root: str) -> None:
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        words = word_frequencies(docs, limit=2000)
-        bpe_merges_local(words, n_merges=12).coalesce(1).write.parquet(
+        words = word_frequencies(docs)
+        bpe_merges_local(words).coalesce(1).write.parquet(
             os.path.join(root, "merges")
         )
 
@@ -10480,9 +10371,7 @@ def _q_tcloseness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("high")
         .alias("bal_band"),
     )
-    return t_closeness_report(
-        cust, ["c_nationkey", "c_mktsegment"], "bal_band", t=0.2
-    ).orderBy("c_nationkey", "c_mktsegment")
+    return t_closeness_report(cust).orderBy("c_nationkey", "c_mktsegment")
 
 
 _TCLOSENESS_ORACLE = """
@@ -10539,7 +10428,7 @@ def _q_source_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents").select("source")
-    return mixture_weights(docs, "source", alpha=0.7).orderBy("source")
+    return mixture_weights(docs).orderBy("source")
 
 
 _MIXTURE_ORACLE = """
@@ -10580,7 +10469,7 @@ def _q_weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )
-    out = pps_sample(docs, "doc_id", "n_chars", expected_k=500)
+    out = pps_sample(docs)
     return out.select(
         "doc_id",
         "lang",
@@ -10645,9 +10534,7 @@ def _q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "embedding"
         ),
     )
-    return semantic_dedup(
-        emb.unionByName(twins), centroids, threshold=0.98
-    ).orderBy("vec_id")
+    return semantic_dedup(emb.unionByName(twins), centroids).orderBy("vec_id")
 
 
 
@@ -10764,7 +10651,7 @@ def _q_semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    day0 = semantic_dedup(emb, centroids, threshold=0.98).select(
+    day0 = semantic_dedup(emb, centroids).select(
         "vec_id", "kept"
     )
     standing = emb.join(day0, "vec_id")
@@ -10784,9 +10671,7 @@ def _q_semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
         .unionByName(scaled(10, 0, 2_000_000, 1.02))
         .unionByName(scaled(7, 1, 3_000_000, -1.0))
     )
-    return semantic_dedup_incremental(
-        standing, drop, centroids, threshold=0.98
-    ).orderBy("vec_id")
+    return semantic_dedup_incremental(standing, drop, centroids).orderBy("vec_id")
 
 
 def _semantic_dedup_incremental_oracle(sf_dir: str) -> str:
@@ -11001,7 +10886,7 @@ def _q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = ensure_min_partitions(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
-    return ngram_novelty(docs, n=5).orderBy("doc_id")
+    return ngram_novelty(docs).orderBy("doc_id")
 
 
 _NGRAM_NOVELTY_ORACLE = r"""
@@ -11065,9 +10950,7 @@ def _q_merge_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0.0).alias("c_acctbal"),
         F.lit("NEW").alias("c_mktsegment"),
     )
-    return merge_upsert(
-        cust, revisions.unionByName(inserts), "c_custkey"
-    ).orderBy("c_custkey")
+    return merge_upsert(cust, revisions.unionByName(inserts)).orderBy("c_custkey")
 
 
 _MERGE_UPSERT_ORACLE = """
@@ -11114,7 +10997,7 @@ def _q_shuffle_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source"
     )
-    return shuffle_manifest(docs, "doc_id").orderBy("shuffle_rank")
+    return shuffle_manifest(docs).orderBy("shuffle_rank")
 
 
 _SHUFFLE_MANIFEST_ORACLE = """
@@ -11145,9 +11028,7 @@ def _q_token_budget_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents").select("source", "n_chars")
-    return token_budget_allocation(
-        docs, "source", "n_chars", budget_tokens=1_000_000, alpha=0.7
-    ).orderBy("source")
+    return token_budget_allocation(docs).orderBy("source")
 
 
 _TOKEN_BUDGET_ORACLE = """
@@ -11197,14 +11078,7 @@ def _q_token_budget_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents").select("lang", "n_chars")
-    return token_budget_repetition(
-        docs,
-        "lang",
-        "n_chars",
-        budget_multiple=2.0,
-        alpha=0.5,
-        max_epochs=2.0,
-    ).orderBy("lang")
+    return token_budget_repetition(docs).orderBy("lang")
 
 
 _TOKEN_BUDGET_REPETITION_ORACLE = """

@@ -410,9 +410,7 @@ def _stress_ops():
         )
         # store = even ids, increment = all rows (half dup, half new)
         store = fps.filter(F.col("doc_id") % 2 == 0).select("fp")
-        return bloom_prefilter_anti_join(
-            fps, store, "fp", num_bits=1 << 21
-        )
+        return bloom_prefilter_anti_join(fps, store, num_bits=1 << 21)
 
     def minhash_inc(corpus):
         # the daily-drop path under dup-dense growth (round 16):
@@ -435,20 +433,17 @@ def _stress_ops():
         sigs = minhash_signatures(
             standing.select(
                 F.col("doc_id").alias("_id"),
-                char_shingles("text", 5).alias("sh"),
+                char_shingles().alias("sh"),
             ),
-            "_id",
             F.col("sh"),
-            32,
-            42,
         )
-        return minhash_incremental_pairs(drop, standing, sigs)
+        return minhash_incremental_pairs(drop, standing, sigs, char_shingles())
 
     return {
-        "exact_substring_spans": lambda c: exact_substring_spans(c, n=5),
-        "simhash_pairs": lambda c: simhash_near_duplicates(c, max_hamming=3),
-        "source_overlap_matrix": lambda c: source_overlap_matrix(c, n=8),
-        "vocab_coverage_curve": lambda c: vocab_coverage_curve(c),
+        "exact_substring_spans": exact_substring_spans,
+        "simhash_pairs": simhash_near_duplicates,
+        "source_overlap_matrix": source_overlap_matrix,
+        "vocab_coverage_curve": vocab_coverage_curve,
         "bloom_prefilter": bloom,
         "minhash_incremental": minhash_inc,
     }
@@ -489,16 +484,14 @@ def _stress_embedding_ops():
         standing_emb = corpus.filter(
             (F.col("vec_id") < 10_000_000) & (F.col("vec_id") % 2 == 0)
         )
-        day0 = semantic_dedup(standing_emb, cents, threshold=0.98).select(
+        day0 = semantic_dedup(standing_emb, cents).select(
             "vec_id", "kept"
         )
         standing = standing_emb.join(day0, "vec_id")
         drop = corpus.join(
             standing_emb.select("vec_id"), "vec_id", "left_anti"
         )
-        return semantic_dedup_incremental(
-            standing, drop, cents, threshold=0.98
-        )
+        return semantic_dedup_incremental(standing, drop, cents)
 
     return {"semantic_dedup_incremental": semdedup_inc}
 

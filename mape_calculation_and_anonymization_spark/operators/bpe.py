@@ -35,11 +35,9 @@ from pyspark.sql import functions as F
 from .rebalance import checkpoint
 
 
-def word_frequencies(
-    docs: DataFrame, limit: int | None = None
-) -> DataFrame:
-    """Corpus → (word, freq) table: lowercase, split on non-letters.
-    ``limit`` keeps the top-N words by (freq desc, word asc) — a
+def word_frequencies(docs: DataFrame) -> DataFrame:
+    """Corpus → (word, freq) table: lowercase, split on non-letters,
+    keeping the top ``_VOCAB_WORDS`` words by (freq desc, word asc) — a
     deterministic, DECLARED training parameter (rare words can shift
     late merges; choose the cap like any tokenizer-trainer vocab
     bound), planned as top-k, never a full sort."""
@@ -53,13 +51,11 @@ def word_frequencies(
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    if limit is not None:
-        # top-k, not a silent runtime drop: the cap is a declared
-        # training parameter (every production tokenizer trainer has
-        # one), deterministic via the (freq desc, word asc) tie-break,
-        # and plans as TakeOrderedAndProject — no full sort
-        words = words.orderBy(F.desc("freq"), F.asc("word")).limit(limit)
-    return words
+    # top-k, not a silent runtime drop: the cap is a declared training
+    # parameter (every production tokenizer trainer has one),
+    # deterministic via the (freq desc, word asc) tie-break, and plans
+    # as TakeOrderedAndProject — no full sort
+    return words.orderBy(F.desc("freq"), F.asc("word")).limit(_VOCAB_WORDS)
 
 
 def _apply_merge(syms, left: str, right: str):
@@ -84,9 +80,14 @@ def _apply_merge(syms, left: str, right: str):
 # vocabulary rows bpe_merges_local may collect to the driver
 _MAX_WORDS = 100_000
 
+# the tokenizer trainer's declared vocabulary cap (word_frequencies'
+# top-N words) and its merge count (bpe_merges_local)
+_VOCAB_WORDS = 2000
+_MERGES = 12
 
-def bpe_merges_local(words: DataFrame, n_merges: int) -> DataFrame:
-    """BPE merges with the greedy loop on the driver — the production
+
+def bpe_merges_local(words: DataFrame) -> DataFrame:
+    """``_MERGES`` BPE merges with the greedy loop on the driver — the production
     steady state (HuggingFace/SentencePiece trainers do exactly this):
     the corpus-sized work is the ONE distributed word-frequency
     aggregate upstream; the loop's input is the vocabulary-sized word
@@ -104,11 +105,11 @@ def bpe_merges_local(words: DataFrame, n_merges: int) -> DataFrame:
         raise ValueError(
             f"word table exceeds max_words={_MAX_WORDS}: the merge loop "
             "collects the vocabulary to the driver; cap it upstream "
-            "(word_frequencies(limit=...)) or use bpe_merges()"
+            "(word_frequencies' _VOCAB_WORDS) or use bpe_merges()"
         )
     freqs = [(list(r[0]), int(r[1])) for r in rows]
     out = []
-    for rank in range(n_merges):
+    for rank in range(_MERGES):
         counts: dict[tuple[str, str], int] = {}
         for syms, f in freqs:
             for a, b in zip(syms, syms[1:]):

@@ -45,22 +45,22 @@ def tokens(col: str | Column) -> Column:
     return F.array_distinct(F.split(F.trim(c), r"\s+"))
 
 
-def char_shingles(col: str | Column, k: int = 5) -> Column:
-    """Distinct lowercased character k-grams. Built from
+def char_shingles() -> Column:
+    """Distinct lowercased character 5-grams of ``text``. Built from
     sequence+transform so the whole shingling stays in codegen (no
     UDF)."""
-    c = F.lower(F.col(col) if isinstance(col, str) else col)
+    c = F.lower(F.col("text"))
     # substring is 1-based; guard short strings with greatest(…,1)
     return F.array_distinct(
         F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(c) - F.lit(k - 1), F.lit(1))),
-            lambda i: c.substr(i, F.lit(k)),
+            F.sequence(F.lit(1), F.greatest(F.length(c) - F.lit(4), F.lit(1))),
+            lambda i: c.substr(i, F.lit(5)),
         )
     )
 
 
-def word_ngrams(col: str | Column, n: int = 3) -> Column:
-    """Distinct lowercased word n-grams (space-joined).
+def word_ngrams(n: int) -> Column:
+    """Distinct lowercased word n-grams (space-joined) of ``text``.
 
     Built as n−1 chained zip_with ops over shifted slices — one walk
     of the token array per zip (the same trick as
@@ -70,8 +70,7 @@ def word_ngrams(col: str | Column, n: int = 3) -> Column:
     corpus. Documents shorter than ``n`` tokens yield their whole
     text as one (short) gram — identical to the historical
     slice-takes-what-exists behavior."""
-    c = F.lower(F.col(col) if isinstance(col, str) else col)
-    toks = F.split(F.trim(c), r"\s+")
+    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     m = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0))
     grams = F.slice(toks, 1, m)
     for j in range(1, n):
@@ -117,19 +116,20 @@ def normalized_fingerprint(col: str | Column) -> Column:
     return F.md5(F.lower(F.trim(F.regexp_replace(c, r"\s+", " "))))
 
 
-def duplicated_span_stats(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 5,
-) -> DataFrame:
+# word-shingle width of the duplicated-span statistics and remove-span
+# plan (about 9% duplicated positions on the testdata corpus)
+_SPAN_N = 5
+
+
+def duplicated_span_stats(docs: DataFrame) -> DataFrame:
     """Cross-document DUPLICATED-SPAN statistics — the verbatim-
     substring dedup signal of Lee et al., "Deduplicating Training
     Data Makes Language Models Better" (2021), at word-shingle
-    granularity: a position is duplicated when its ``n``-token
+    granularity: a position is duplicated when its ``_SPAN_N``-token
     shingle occurs ≥2 times in the whole corpus (counting
-    multiplicity — within-doc repetition flags itself too). One row
-    per document with ≥1 shingle: ``n_shingles``, ``n_dup_spans``,
+    multiplicity — within-doc repetition flags itself too). Input:
+    ``(doc_id, text)`` rows. One row per document (``doc_id``) with ≥1
+    shingle: ``n_shingles``, ``n_dup_spans``,
     ``dup_fraction`` — the drop/trim decision surface for
     boilerplate- and template-heavy training text (near-dup document
     matching misses PARTIAL overlap entirely; this is the
@@ -149,17 +149,15 @@ def duplicated_span_stats(
     re-aggregates on the id. Every primitive is engine-portable
     (split/lower/trim/concat), so a SQL oracle re-derives identical
     spans."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     grams = F.when(
-        F.size(toks) >= n,
+        F.size(toks) >= _SPAN_N,
         F.transform(
-            F.sequence(F.lit(1), F.size(toks) - n + 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+            F.sequence(F.lit(1), F.size(toks) - _SPAN_N + 1),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, _SPAN_N)),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    shingled = docs.select(
-        F.col(id_col), F.explode(grams).alias("_shingle")
-    )
+    shingled = docs.select(F.col("doc_id"), F.explode(grams).alias("_shingle"))
     # the frequency decision is a WINDOW count over the shingle key
     # (round 17), not the earlier groupBy(count) + join-back: the join
     # shape derived the corpus-scale shingle stream TWICE (the
@@ -171,7 +169,7 @@ def duplicated_span_stats(
     w = Window.partitionBy("_shingle")
     return (
         shingled.withColumn("_cnt", F.count(F.lit(1)).over(w))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_shingles"),
             F.sum((F.col("_cnt") >= 2).cast("long")).alias("n_dup_spans"),
@@ -185,18 +183,13 @@ def duplicated_span_stats(
     )
 
 
-def exact_substring_spans(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 5,
-) -> DataFrame:
+def exact_substring_spans(docs: DataFrame) -> DataFrame:
     """Cross-document EXACT-SUBSTRING remove-span plan — the
     actionable sequel to :func:`duplicated_span_stats` and the
     word-shingle rendition of Lee et al. 2021's ExactSubstr dedup
     (the paper removes every duplicated byte span, keeping one
     occurrence): one output row per maximal token interval to CUT
-    from a document. Every non-canonical occurrence of a duplicated
+    from a ``(doc_id, text)`` document. Every non-canonical occurrence of a duplicated
     shingle is covered by some span; the canonical occurrence's START
     is never one (though a merged neighbor span may clip its tail
     tokens — the same boundary fuzz the paper's byte-level cuts have).
@@ -206,7 +199,7 @@ def exact_substring_spans(
     repetition included) AND it is not the shingle's CANONICAL
     occurrence — the lexicographically minimal ``(doc_id, pos)`` —
     which is the one copy kept. Removable positions cover token
-    intervals ``[pos, pos+n-1]``; overlapping/adjacent intervals merge
+    intervals ``[pos, pos+_SPAN_N-1]``; overlapping/adjacent intervals merge
     (gaps-and-islands) into maximal spans. Docs with no removable
     position emit nothing.
 
@@ -222,17 +215,17 @@ def exact_substring_spans(
     Every primitive is engine-portable, so a SQL twin re-derives
     identical spans (window-numbered canonical + islands merge).
     """
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     grams = F.when(
-        F.size(toks) >= n,
+        F.size(toks) >= _SPAN_N,
         F.transform(
-            F.sequence(F.lit(1), F.size(toks) - n + 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+            F.sequence(F.lit(1), F.size(toks) - _SPAN_N + 1),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, _SPAN_N)),
         ),
     ).otherwise(F.array().cast("array<string>"))
     # 0-based token position via posexplode
     shingled = docs.select(
-        F.col(id_col), F.posexplode(grams).alias("pos", "_shingle")
+        F.col("doc_id"), F.posexplode(grams).alias("pos", "_shingle")
     )
     # count + canonical as WINDOW aggregates over the shingle key
     # (round 17, same rationale as duplicated_span_stats): the old
@@ -245,23 +238,23 @@ def exact_substring_spans(
     ws = Window.partitionBy("_shingle")
     removable = (
         shingled.select(
-            id_col,
+            "doc_id",
             "pos",
             F.count(F.lit(1)).over(ws).alias("_cnt"),
-            F.min(F.struct(F.col(id_col), F.col("pos")))
+            F.min(F.struct(F.col("doc_id"), F.col("pos")))
             .over(ws)
             .alias("_keep"),
         )
         .filter(
             (F.col("_cnt") >= 2)
             & ~(
-                (F.col(f"_keep.{id_col}") == F.col(id_col))
+                (F.col("_keep.doc_id") == F.col("doc_id"))
                 & (F.col("_keep.pos") == F.col("pos"))
             )
         )
-        .select(id_col, "pos")
+        .select("doc_id", "pos")
     )
-    w = Window.partitionBy(id_col).orderBy("pos")
+    w = Window.partitionBy("doc_id").orderBy("pos")
     # a position can carry several duplicated shingles but must merge
     # only once — deduplicate INSIDE the document window (round 17):
     # the former ``.distinct()`` paid its own exchange on (id, pos)
@@ -275,7 +268,7 @@ def exact_substring_spans(
         "_dup_pos", F.lag("pos").over(w) == F.col("pos")
     ).filter(~F.coalesce(F.col("_dup_pos"), F.lit(False))).drop("_dup_pos")
     # island break: this interval starts beyond every previous end + 1
-    prev_end = F.max(F.col("pos") + F.lit(n - 1)).over(
+    prev_end = F.max(F.col("pos") + F.lit(_SPAN_N - 1)).over(
         w.rowsBetween(Window.unboundedPreceding, -1)
     )
     islands = removable.withColumn(
@@ -290,13 +283,13 @@ def exact_substring_spans(
         ),
     )
     return (
-        islands.groupBy(id_col, "_island")
+        islands.groupBy("doc_id", "_island")
         .agg(
             F.min("pos").alias("span_start"),
-            (F.max("pos") + F.lit(n - 1)).alias("span_end"),
+            (F.max("pos") + F.lit(_SPAN_N - 1)).alias("span_end"),
         )
         .select(
-            id_col,
+            "doc_id",
             "span_start",
             "span_end",
             (F.col("span_end") - F.col("span_start") + 1).alias(
@@ -358,15 +351,15 @@ def gated_cluster_representatives(members: DataFrame) -> DataFrame:
 _BLOOM_HASHES = 5
 
 
-def _bloom_probes(df: DataFrame, col: str, num_bits: int):
-    """Per-row Bloom probe positions: ``_BLOOM_HASHES`` independent
+def _bloom_probes(df: DataFrame, num_bits: int):
+    """Per-row Bloom probe positions of ``fp``: ``_BLOOM_HASHES`` independent
     64-bit hashes (xxhash64 seeded by a literal salt column) mapped
     onto the ``num_bits`` bitmap, each emitted as the bitmap WORD it
     lands in plus the single-bit mask within that word. All built-in
     expressions — stays inside whole-stage codegen."""
     probes = F.array(
         *[
-            F.pmod(F.xxhash64(F.col(col), F.lit(i)), F.lit(num_bits))
+            F.pmod(F.xxhash64(F.col("fp"), F.lit(i)), F.lit(num_bits))
             for i in range(_BLOOM_HASHES)
         ]
     )
@@ -381,9 +374,9 @@ def _bloom_probes(df: DataFrame, col: str, num_bits: int):
     )
 
 
-def bloom_bitmap(df: DataFrame, col: str, num_bits: int = 1 << 17) -> DataFrame:
-    """Distributed Bloom-filter build as a plain DataFrame aggregate:
-    one row per bitmap WORD that has at least one set bit —
+def bloom_bitmap(df: DataFrame, num_bits: int) -> DataFrame:
+    """Distributed Bloom-filter build over the ``fp`` column as a plain
+    DataFrame aggregate: one row per bitmap WORD that has at least one set bit —
     ``(_word, _bits)`` with ``_bits = bit_or`` of the members' masks.
     A commutative bit-or is partition-order independent, so the
     bitmap is deterministic; at ``num_bits = 2^17`` it is ≤ 2048 rows
@@ -394,7 +387,7 @@ def bloom_bitmap(df: DataFrame, col: str, num_bits: int = 1 << 17) -> DataFrame:
     probe join declarative (Catalyst broadcasts it) instead of
     smuggling a sketch blob through a scalar subquery."""
     return (
-        _bloom_probes(df.select(F.col(col)), col, num_bits)
+        _bloom_probes(df.select(F.col("fp")), num_bits)
         .groupBy("_word")
         .agg(F.bit_or("_mask").alias("_bits"))
     )
@@ -403,11 +396,10 @@ def bloom_bitmap(df: DataFrame, col: str, num_bits: int = 1 << 17) -> DataFrame:
 def bloom_prefilter_anti_join(
     increment: DataFrame,
     store: DataFrame,
-    fp_col: str,
     num_bits: int = 1 << 17,
 ) -> DataFrame:
     """EXACTNESS-PRESERVING Bloom pre-filter for incremental dedup:
-    returns exactly ``increment LEFT ANTI JOIN store ON fp_col`` —
+    returns exactly ``increment LEFT ANTI JOIN store ON fp`` —
     but only the increment rows the Bloom filter of the store cannot
     rule out ever reach the anti join. A Bloom filter has no false
     negatives (every member's bits are all set), so rows with any
@@ -440,9 +432,9 @@ def bloom_prefilter_anti_join(
             f"before calling (the probe rollup would collapse or "
             f"mis-join on them)"
         )
-    bitmap = bloom_bitmap(store, fp_col, num_bits)
+    bitmap = bloom_bitmap(store, num_bits)
     probed = (
-        _bloom_probes(increment, fp_col, num_bits)
+        _bloom_probes(increment, num_bits)
         .join(F.broadcast(bitmap), "_word", "left")
         .withColumn(
             "_hit",
@@ -460,22 +452,22 @@ def bloom_prefilter_anti_join(
     confirmed_new = (
         probed.filter(F.col("_maybe"))
         .drop("_maybe")
-        .join(store.select(F.col(fp_col)).distinct(), fp_col, "left_anti")
+        .join(store.select(F.col("fp")).distinct(), "fp", "left_anti")
     )
     return definite_new.unionByName(confirmed_new)
 
 
-def exact_dedup_groups(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
-    """Hash-groupBy exact dedup: one row per distinct key with the
-    kept (minimum) id and the duplicate count. Partial aggregation
-    collapses duplicates map-side before the shuffle."""
-    return df.groupBy(*key_cols).agg(
-        F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_dups")
+def exact_dedup_groups(df: DataFrame) -> DataFrame:
+    """Hash-groupBy exact dedup: one row per distinct (lang, source)
+    with the kept (minimum) doc_id and the duplicate count. Partial
+    aggregation collapses duplicates map-side before the shuffle."""
+    return df.groupBy("lang", "source").agg(
+        F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_dups")
     )
 
 
-def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
-    """Keep exactly the min-id row per duplicate group (deterministic,
+def exact_dedup(df: DataFrame, key_cols: list[str]) -> DataFrame:
+    """Keep exactly the min-doc_id row per duplicate group (deterministic,
     unlike dropDuplicates). Window-free: min-id join back.
 
     NULL key values form their own group (groupBy keeps a NULL-key
@@ -485,12 +477,12 @@ def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
     left = df.alias("l")
     keep = (
         df.groupBy(*key_cols)
-        .agg(F.min(id_col).alias(id_col))
+        .agg(F.min("doc_id").alias("doc_id"))
         .alias("r")
     )
     cond = [
         F.col(f"l.{k}").eqNullSafe(F.col(f"r.{k}")) for k in key_cols
-    ] + [F.col(f"l.{id_col}") == F.col(f"r.{id_col}")]
+    ] + [F.col("l.doc_id") == F.col("r.doc_id")]
     return left.join(keep, on=cond, how="left_semi")
 
 
@@ -499,6 +491,15 @@ def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _MERSENNE_31 = (1 << 31) - 1
+
+# The MinHash near-dup pipelines (batch, incremental, streaming): word
+# 3-gram shingles, 32 hashes from seed 42 in 8 bands of 4, pairs kept
+# at exact Jaccard >= 0.6
+_MINHASH_SHINGLE_K = 3
+_MINHASH_HASHES = 32
+_MINHASH_SEED = 42
+_MINHASH_BANDS = 8
+_MINHASH_THRESHOLD = 0.6
 
 
 def _perm_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
@@ -533,38 +534,32 @@ def minhash_signature(
     return F.array(*comps)
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    id_col: str,
-    shingles: Column,
-    num_hashes: int = 64,
-    seed: int = 42,
-) -> DataFrame:
+def minhash_signatures(docs: DataFrame, shingles: Column) -> DataFrame:
     """Corpus-scale MinHash: explode shingles → one xxhash per
-    (doc, shingle) → groupBy(doc) with ``num_hashes`` min-aggregates.
+    (doc, shingle) → groupBy(doc) with ``_MINHASH_HASHES`` min-aggregates.
 
     Identical signatures to :func:`minhash_signature` (same
     permutation parameters), but the whole computation is plain
     arithmetic inside whole-stage codegen, and the partial aggregation
     collapses each document's shingle set map-side — the shuffle
-    carries only (id, num_hashes longs) per document.
+    carries only (_id, _MINHASH_HASHES longs) per document.
     Documents whose shingle set is empty/null are dropped.
 
-    Output: (id_col, sig: array<bigint>).
+    Output: (_id, sig: array<bigint>).
     """
     base = docs.select(
-        F.col(id_col), F.explode(shingles).alias("_sh")
+        F.col("_id"), F.explode(shingles).alias("_sh")
     ).select(
-        id_col, F.pmod(F.xxhash64("_sh"), F.lit(_MERSENNE_31)).alias("_h")
+        "_id", F.pmod(F.xxhash64("_sh"), F.lit(_MERSENNE_31)).alias("_h")
     )
     mins = [
         F.min((F.lit(a) * F.col("_h") + F.lit(b)) % F.lit(_MERSENNE_31)).alias(f"_m{i}")
-        for i, (a, b) in enumerate(_perm_params(num_hashes, seed))
+        for i, (a, b) in enumerate(_perm_params(_MINHASH_HASHES, _MINHASH_SEED))
     ]
     return (
-        base.groupBy(id_col)
+        base.groupBy("_id")
         .agg(*mins)
-        .select(id_col, F.array(*[f"_m{i}" for i in range(num_hashes)]).alias("sig"))
+        .select("_id", F.array(*[f"_m{i}" for i in range(_MINHASH_HASHES)]).alias("sig"))
     )
 
 
@@ -594,34 +589,26 @@ def _sorted_pairs(arr: str, a: str = "a", b: str = "b") -> Column:
     )
 
 
-def lsh_candidate_pairs(
-    sigs: DataFrame,
-    id_col: str,
-    sig_col: str = "sig",
-    *,
-    sig_len: int,
-) -> DataFrame:
-    """Banded LSH: split each signature into 8 equal slices (bands),
-    hash each slice, self-join on (band index, slice hash).
+def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
+    """Banded LSH over ``(_id, sig)``: split each signature into
+    ``_MINHASH_BANDS`` equal slices (bands), hash each slice, self-join
+    on (band index, slice hash).
 
     Returns distinct candidate pairs (id_a < id_b). The join shuffles
     on the bucket key — linear scan, no cross join. Buckets larger
     than 1000 ids are dropped before pair expansion (they
-    are near-identical floods; route those through exact dedup).
-
-    ``sig_len`` is the signature length (``num_hashes``); the caller
-    knows it, and probing it from the data would cost a job."""
-    rows_per_band = max(1, sig_len // 8)
+    are near-identical floods; route those through exact dedup)."""
+    rows_per_band = _MINHASH_HASHES // _MINHASH_BANDS
 
     band_hash = F.posexplode(
         F.array(
             *[
-                F.hash(F.slice(F.col(sig_col), j * rows_per_band + 1, rows_per_band))
-                for j in range(8)
+                F.hash(F.slice(F.col("sig"), j * rows_per_band + 1, rows_per_band))
+                for j in range(_MINHASH_BANDS)
             ]
         )
     )
-    buckets = sigs.select(F.col(id_col).alias("_id"), band_hash.alias("band", "bh"))
+    buckets = sigs.select("_id", band_hash.alias("band", "bh"))
     # ONE hash aggregate collects each bucket's member ids in-row
     # (round 17): the earlier shape paid a checkpoint job, a
     # bucket-count aggregate, an anti-join, and BOTH legs of a
@@ -677,17 +664,18 @@ def md5_band_keys(toks: Column, bands: int = 8, rows_per_band: int = 2) -> Colum
     )
 
 
-def md5_band_buckets(
-    docs: DataFrame,
-    id_col: str,
-    toks_col: str,
-    group_cols: list[str] | None = None,
-    bands: int = 8,
-    rows_per_band: int = 2,
-) -> DataFrame:
+# md5 banding of the per-(lang, source) Jaccard dedup: 4 bands of 2
+# rows; buckets above _MD5_MAX_BUCKET members are dropped
+_MD5_BANDS = 4
+_MD5_ROWS_PER_BAND = 2
+_MD5_MAX_BUCKET = 1000
+
+
+def md5_band_buckets(docs: DataFrame) -> DataFrame:
     """Corpus-scale derivation of the :func:`md5_band_keys` buckets:
     explode tokens once, take bands×rows_per_band ``min(md5(...))``
-    aggregates per document, then unpivot to (band_idx, band_key) rows.
+    aggregates per document (``_MD5_BANDS`` × ``_MD5_ROWS_PER_BAND``),
+    then unpivot to (band_idx, band_key) rows.
 
     Band keys are bit-identical to :func:`md5_band_keys` (same md5
     prefixes, same '|' join), but the whole computation is plain string
@@ -698,57 +686,49 @@ def md5_band_buckets(
     Documents with an empty/null token set get no buckets (they can
     never verify above threshold anyway: jaccard(∅,·) is NULL).
 
-    Output: (group_cols..., _id, band_idx, band_key).
+    Input: (lang, source, doc_id, toks). Output: (lang, source, _id,
+    band_idx, band_key).
     """
-    group_cols = group_cols or []
     # the bands×rows_per_band md5 computations per exploded token dwarf
     # the row's bytes — spread a coarse scan across cores first
     exploded = ensure_min_partitions(docs).select(
-        *group_cols,
-        F.col(id_col).alias("_id"),
-        F.explode(toks_col).alias("_tok"),
+        "lang",
+        "source",
+        F.col("doc_id").alias("_id"),
+        F.explode("toks").alias("_tok"),
     )
     mins = [
         F.min(F.md5(F.concat(F.lit(f"{j}-{r}:"), F.col("_tok")))).alias(f"_m{j}_{r}")
-        for j in range(bands)
-        for r in range(rows_per_band)
+        for j in range(_MD5_BANDS)
+        for r in range(_MD5_ROWS_PER_BAND)
     ]
-    per_doc = exploded.groupBy(*group_cols, "_id").agg(*mins)
+    per_doc = exploded.groupBy("lang", "source", "_id").agg(*mins)
     band_keys = F.array(
         *[
-            F.concat_ws("|", *[f"_m{j}_{r}" for r in range(rows_per_band)])
-            for j in range(bands)
+            F.concat_ws("|", *[f"_m{j}_{r}" for r in range(_MD5_ROWS_PER_BAND)])
+            for j in range(_MD5_BANDS)
         ]
     )
     return per_doc.select(
-        *group_cols,
+        "lang",
+        "source",
         "_id",
         F.posexplode(band_keys).alias("band_idx", "band_key"),
     )
 
 
-def md5_lsh_candidate_pairs(
-    docs: DataFrame,
-    id_col: str,
-    toks_col: str,
-    group_cols: list[str] | None = None,
-    bands: int = 8,
-    rows_per_band: int = 2,
-    max_bucket_size: int | None = 1000,
-) -> DataFrame:
-    """Candidate pairs from :func:`md5_band_buckets` buckets, optionally
-    scoped to equal ``group_cols`` (e.g. per-language dedup). Linear
+def md5_lsh_candidate_pairs(docs: DataFrame) -> DataFrame:
+    """Candidate pairs from :func:`md5_band_buckets` buckets of
+    ``(lang, source, doc_id, toks)`` rows, scoped to equal
+    ``(lang, source)`` (per-language, per-source dedup). Linear
     bucket self-join — never all-pairs; buckets larger than
-    ``max_bucket_size`` are dropped before pair expansion (same guard
+    ``_MD5_MAX_BUCKET`` are dropped before pair expansion (same guard
     as :func:`lsh_candidate_pairs` — a hot band over boilerplate-heavy
     docs would otherwise expand quadratically; route such floods
     through exact dedup). Callers with a SQL oracle must mirror the
     cap so both engines derive the identical candidate set. Output:
-    distinct (group_cols..., id_a, id_b)."""
-    group_cols = group_cols or []
-    bucketed = md5_band_buckets(
-        docs, id_col, toks_col, group_cols, bands, rows_per_band
-    )
+    distinct (lang, source, id_a, id_b)."""
+    bucketed = md5_band_buckets(docs)
     # ONE hash aggregate collects each bucket's member ids in-row
     # (round 17, mirroring lsh_candidate_pairs): the earlier shape
     # paid an eager checkpoint of the bucket frame, the flood-cap
@@ -761,16 +741,17 @@ def md5_lsh_candidate_pairs(
     # collected array (bounded by the cap itself), and a doc appears
     # at most once per bucket, so the sorted-array expansion
     # reproduces the self-join's ``a._id < b._id`` pairs exactly.
-    grouped = bucketed.groupBy(*group_cols, "band_idx", "band_key").agg(
-        F.sort_array(F.collect_list("_id")).alias("_ids")
+    grouped = (
+        bucketed.groupBy("lang", "source", "band_idx", "band_key")
+        .agg(F.sort_array(F.collect_list("_id")).alias("_ids"))
+        .filter(F.size("_ids") <= _MD5_MAX_BUCKET)
     )
-    if max_bucket_size:
-        grouped = grouped.filter(F.size("_ids") <= max_bucket_size)
     return (
         grouped.filter(F.size("_ids") >= 2)
-        .select(*group_cols, F.explode(_sorted_pairs("_ids")).alias("_p"))
+        .select("lang", "source", F.explode(_sorted_pairs("_ids")).alias("_p"))
         .select(
-            *group_cols,
+            "lang",
+            "source",
             F.col("_p.a").alias("id_a"),
             F.col("_p.b").alias("id_b"),
         )
@@ -780,9 +761,6 @@ def md5_lsh_candidate_pairs(
 
 def minhash_near_duplicates(
     docs: DataFrame,
-    shingle_k: int = 5,
-    threshold: float = 0.6,
-    shingle_mode: str = "char",
     precomputed_sigs: DataFrame | None = None,
     precomputed_shingles: DataFrame | None = None,
 ) -> DataFrame:
@@ -799,7 +777,11 @@ def minhash_near_duplicates(
     touching answer-sized data. Results are identical by construction
     (same signatures → same candidates → same exact verify).
 
-    The signature is 32 hashes (seed 42) / 8 bands (band width 4):
+    Shingles are word 3-grams — the right signal for corpora that
+    share vocabulary but differ in word order (character shingles over
+    such corpora are dense, which floods the candidate set with
+    genuinely-similar-at-char-level pairs). The signature is 32 hashes
+    (seed 42) / 8 bands (band width 4):
     the S-curve midpoint sits at (1/b)^(1/4) ≈ 0.59, so pairs near
     real near-dup similarity (≥0.8) are caught with >0.999
     probability per run while the signature aggregation costs half of
@@ -807,14 +789,8 @@ def minhash_near_duplicates(
     hashes and bands together (constant width 4) — candidate recall
     at sim≈threshold is what bands buy.
 
-    ``shingle_mode``: 'char' (k-grams, robust to small edits inside
-    words) or 'word' (word shingle_k-grams — the right signal for
-    corpora that share vocabulary but differ in word order; char
-    shingles over such corpora are dense, which floods the candidate
-    set with genuinely-similar-at-char-level pairs).
-
     ``precomputed_shingles`` ((doc_id, sh) — the same shingle space as
-    ``shingler("text", shingle_k)`` over the SAME corpus, e.g. a
+    ``word_ngrams(3)`` over the SAME corpus, e.g. a
     landed shingle-table fixture): the verification stage then reads
     the materialized tokens instead of re-running the interpreted HOF
     shingling over every candidate document. Only meaningful together
@@ -823,14 +799,11 @@ def minhash_near_duplicates(
     the caller's contract — tokenization is deterministic, so a
     fixture derived by the same shingler is bit-identical.
 
-    Output: (id_a, id_b, jaccard_sim) for verified pairs ≥ threshold.
+    Output: (id_a, id_b, jaccard_sim) for verified pairs ≥ 0.6.
     """
-    shingler = char_shingles if shingle_mode == "char" else word_ngrams
     if precomputed_sigs is not None:
         cands = checkpoint(  # answer-sized; feeds 2 consumers
-            lsh_candidate_pairs(
-                precomputed_sigs, "_id", "sig", sig_len=32
-            ),
+            lsh_candidate_pairs(precomputed_sigs),
             "dedup.minhash_near_duplicates.cands",
         )
         cand_ids = (
@@ -844,7 +817,7 @@ def minhash_near_duplicates(
             )
         else:
             shingle_src = docs.select(
-                F.col("doc_id"), shingler("text", shingle_k).alias("sh")
+                F.col("doc_id"), word_ngrams(_MINHASH_SHINGLE_K).alias("sh")
             )
         cand_sh = checkpoint(  # shingled once, joined twice
             shingle_src.join(cand_ids, "doc_id", "left_semi").select(
@@ -862,7 +835,7 @@ def minhash_near_duplicates(
                 "id_b",
                 jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard_sim"),
             )
-            .filter(F.col("jaccard_sim") >= threshold)
+            .filter(F.col("jaccard_sim") >= _MINHASH_THRESHOLD)
         )
     # Persist the shingle frame: it feeds the signature aggregation AND
     # both sides of the verification join — without it the (interpreted
@@ -876,11 +849,10 @@ def minhash_near_duplicates(
     # coarse scan before it so the hot loop runs on all cores
     with persisted(
         ensure_min_partitions(docs).select(
-            F.col("doc_id").alias("_id"), shingler("text", shingle_k).alias("sh")
+            F.col("doc_id").alias("_id"), word_ngrams(_MINHASH_SHINGLE_K).alias("sh")
         )
     ) as sh:
-        sigs = minhash_signatures(sh, "_id", F.col("sh"), 32, 42)
-        cands = lsh_candidate_pairs(sigs, "_id", "sig", sig_len=32)
+        cands = lsh_candidate_pairs(minhash_signatures(sh, F.col("sh")))
         a = sh.select(F.col("_id").alias("id_a"), F.col("sh").alias("sh_a"))
         b = sh.select(F.col("_id").alias("id_b"), F.col("sh").alias("sh_b"))
         verified = (
@@ -891,7 +863,7 @@ def minhash_near_duplicates(
                 "id_b",
                 jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard_sim"),
             )
-            .filter(F.col("jaccard_sim") >= threshold)
+            .filter(F.col("jaccard_sim") >= _MINHASH_THRESHOLD)
         )
         return checkpoint(verified, "dedup.minhash_near_duplicates.verified")
 
@@ -1004,22 +976,23 @@ simhash64_udf = make_simhash64_udf(1)
 
 # word n-gram width of simhash_near_duplicates' features
 _SIMHASH_SHINGLE_N = 3
+# Hamming distance at which simhash_near_duplicates keeps a pair
+_SIMHASH_MAX_HAMMING = 3
 
 
 def simhash_near_duplicates(
     docs: DataFrame,
-    max_hamming: int = 3,
     feature_hash: str = "blake2b",
     precomputed_sigs: DataFrame | None = None,
 ) -> DataFrame:
     """SimHash near-dup: by pigeonhole, two signatures within Hamming
     distance ``chunks-1`` share at least one identical chunk — so
-    bucket-join on chunks, then verify with bit_count(xor) ≤ max.
+    bucket-join on chunks, then verify with bit_count(xor) ≤
+    ``_SIMHASH_MAX_HAMMING`` (3).
 
-    It bands on ``max_hamming+1`` chunks (the smallest count with
-    guaranteed recall). Narrow chunks mean bigger buckets — keep
-    max_hamming small (≤3 typical) at corpus scale, where 4 chunks of
-    16 bits keep bucket-join fan-out tiny.
+    It bands on ``_SIMHASH_MAX_HAMMING+1`` chunks (the smallest count
+    with guaranteed recall). Narrow chunks mean bigger buckets — 4
+    chunks of 16 bits keep bucket-join fan-out tiny at corpus scale.
 
     Features are word ``_SIMHASH_SHINGLE_N``-grams (3: shared
     PHRASING, not the historical unigram space — see
@@ -1027,7 +1000,7 @@ def simhash_near_duplicates(
     corpora). ``feature_hash`` passes through to make_simhash64_udf
     ("md5" = the external-engine-portable signature).
 
-    Recall note the oracle relies on: with ``chunks = max_hamming+1``
+    Recall note the oracle relies on: with ``chunks = _SIMHASH_MAX_HAMMING+1``
     the pigeonhole guarantee makes the bucketed output
     EQUAL to the brute-force all-pairs Hamming filter — so a quadratic
     SQL twin can verify the linear banded plan exactly.
@@ -1042,9 +1015,7 @@ def simhash_near_duplicates(
     value-equal to a fresh derivation (pinned by
     tests/test_dedup.py::test_simhash_precomputed_sigs_equivalent).
     """
-    if max_hamming >= 64:
-        raise ValueError("guaranteed recall requires max_hamming < 64")
-    chunks = max_hamming + 1
+    chunks = _SIMHASH_MAX_HAMMING + 1
     # nearly-equal chunk widths covering all 64 bits
     base_w, extra = divmod(64, chunks)
     widths = [base_w + (1 if j < extra else 0) for j in range(chunks)]
@@ -1068,19 +1039,14 @@ def simhash_near_duplicates(
         )
     def _chunk(j: int):
         c = F.shiftrightunsigned(F.col("sim"), offsets[j])
-        # width 64 (chunks=1): the mask is the identity and 1<<64
-        # overflows a signed-long literal — skip it.
-        if widths[j] < 64:
-            # bitmask, NOT `%`: Spark's % is a sign-preserving
-            # remainder, so for the offset-0 chunk of a NEGATIVE
-            # signature (bit 63 set) `sim % 65536` came out negative
-            # while the same low bits of a positive partner came out
-            # positive — bucket equality silently failed and the
-            # pigeonhole recall guarantee with it (found by the
-            # round-12 md5 oracle: 3 hamming-3 twin pairs whose only
-            # shared chunk was chunk 0 across a sign boundary).
-            c = c.bitwiseAND(F.lit((1 << widths[j]) - 1))
-        return c
+        # bitmask, NOT `%`: Spark's % is a sign-preserving remainder,
+        # so for the offset-0 chunk of a NEGATIVE signature (bit 63
+        # set) `sim % 65536` came out negative while the same low bits
+        # of a positive partner came out positive — bucket equality
+        # silently failed and the pigeonhole recall guarantee with it
+        # (found by the round-12 md5 oracle: 3 hamming-3 twin pairs
+        # whose only shared chunk was chunk 0 across a sign boundary).
+        return c.bitwiseAND(F.lit((1 << widths[j]) - 1))
 
     chunk = F.posexplode(F.array(*[_chunk(j) for j in range(chunks)]))
     buckets = sigs.select("_id", "sim", chunk.alias("chunk_idx", "chunk_val"))
@@ -1102,7 +1068,7 @@ def simhash_near_duplicates(
         )
         .distinct()
     )
-    return pairs.filter(F.col("hamming") <= max_hamming)
+    return pairs.filter(F.col("hamming") <= _SIMHASH_MAX_HAMMING)
 
 
 def apply_remove_spans(docs: DataFrame, spans: DataFrame) -> DataFrame:
@@ -1180,12 +1146,7 @@ def minhash_incremental_pairs(
     new_docs: DataFrame,
     standing_docs: DataFrame,
     standing_sigs: DataFrame,
-    shingle_k: int = 5,
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.6,
-    seed: int = 42,
-    shingle_mode: str = "char",
+    shingles: Column,
     precomputed_new_sigs: DataFrame | None = None,
 ) -> DataFrame:
     """INCREMENTAL near-dup — the daily-drop path (round-15-ready):
@@ -1210,6 +1171,11 @@ def minhash_incremental_pairs(
     shingles the new drop plus ONLY the candidate standing docs
     (answer-sized semi-join, the precomputed_sigs discipline).
 
+    ``shingles`` is the shingle-set Column over ``text`` that
+    ``standing_sigs`` was signed from; both sides are signed and
+    verified in that space (word 3-grams in the registry query and the
+    stream, character 5-grams in the bench stress workload).
+
     Output: (id_a, id_b, jaccard_sim, pair_type ∈ new_new |
     new_standing), id_a < id_b.
 
@@ -1222,7 +1188,6 @@ def minhash_incremental_pairs(
     (:func:`minhash_near_duplicates`). If it ever flakes, band by the
     slice value itself (array grouping) on the Spark side.
     """
-    shingler = char_shingles if shingle_mode == "char" else word_ngrams
     # persisted even when signatures are precomputed: the verify leg
     # re-reads the shingle frame once per candidate-join stage, and an
     # un-persisted frame re-runs the shingle explode per read (measured
@@ -1232,7 +1197,7 @@ def minhash_incremental_pairs(
     with persisted(
         ensure_min_partitions(new_docs).select(
             F.col("doc_id").alias("_id"),
-            shingler("text", shingle_k).alias("sh"),
+            shingles.alias("sh"),
         )
     ) as new_sh:
         # ``precomputed_new_sigs`` ((_id, sig) — minhash_signatures
@@ -1245,16 +1210,14 @@ def minhash_incremental_pairs(
         new_sigs = (
             precomputed_new_sigs
             if precomputed_new_sigs is not None
-            else minhash_signatures(
-                new_sh, "_id", F.col("sh"), num_hashes, seed
-            )
+            else minhash_signatures(new_sh, F.col("sh"))
         )
         sigs_all = (
             standing_sigs.select("_id", "sig").withColumn(
                 "_new", F.lit(False)
             )
         ).unionByName(new_sigs.select("_id", "sig").withColumn("_new", F.lit(True)))
-        rows_per_band = max(1, num_hashes // bands)
+        rows_per_band = _MINHASH_HASHES // _MINHASH_BANDS
         band_hash = F.posexplode(
             F.array(
                 *[
@@ -1265,7 +1228,7 @@ def minhash_incremental_pairs(
                             rows_per_band,
                         )
                     )
-                    for j in range(bands)
+                    for j in range(_MINHASH_BANDS)
                 ]
             )
         )
@@ -1319,10 +1282,7 @@ def minhash_incremental_pairs(
         )
         standing_cand_sh = (
             standing_docs.join(cand_ids, "doc_id", "left_semi")
-            .select(
-                F.col("doc_id").alias("_id"),
-                shingler("text", shingle_k).alias("sh"),
-            )
+            .select(F.col("doc_id").alias("_id"), shingles.alias("sh"))
         )
         new_cand_sh = new_sh.join(
             cand_ids.withColumnRenamed("doc_id", "_id"), "_id", "left_semi"
@@ -1344,7 +1304,7 @@ def minhash_incremental_pairs(
                 .otherwise(F.lit("new_standing"))
                 .alias("pair_type"),
             )
-            .filter(F.col("jaccard_sim") >= threshold)
+            .filter(F.col("jaccard_sim") >= _MINHASH_THRESHOLD)
         )
         # returned LAZY (round 18): after the cands and all_sh
         # barriers, the verify join's lineage depends only on those

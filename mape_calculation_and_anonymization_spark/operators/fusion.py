@@ -24,24 +24,26 @@ from pyspark.sql import functions as F
 
 from .rebalance import checkpoint
 
+# documents returned per query by jaccard_top_k and rrf_fuse
+_TOP_K = 10
+
 
 def rrf_fuse(
     ranked_a: DataFrame,
     ranked_b: DataFrame,
-    k: int = 10,
-    rrf_k: int = 60,
 ) -> DataFrame:
-    """Fuse two per-query rankings into a top-``k``.
+    """Fuse two per-query rankings into a top-``_TOP_K`` by reciprocal
+    rank fusion with constant 60.
 
     Inputs carry (query_id, doc_id, rank) with rank 1-based
     within each query; a document absent from one list simply
     contributes no term from it (the standard RRF convention).
-    Output: (query_id, doc_id, rrf_score, fused_rank ≤ k), ranked by
+    Output: (query_id, doc_id, rrf_score, fused_rank ≤ _TOP_K), ranked by
     (rrf_score DESC, id) — the id tie-break makes reruns byte-stable.
     The reciprocal terms are IEEE-identical on any engine given the
     same integer ranks, so the fused ordering is engine-portable; the
     displayed score is rounded AFTER ranking."""
-    contrib = F.lit(1.0) / (F.lit(rrf_k) + F.col("rank"))
+    contrib = F.lit(1.0) / (F.lit(60) + F.col("rank"))
     legs = [
         df.select(
             F.col("query_id"),
@@ -60,7 +62,7 @@ def rrf_fuse(
         F.col("_score").desc(), F.col("doc_id").asc()
     )
     out = fused.withColumn("fused_rank", F.row_number().over(w)).filter(
-        F.col("fused_rank") <= k
+        F.col("fused_rank") <= _TOP_K
     )
     return out.select(
         "query_id",
@@ -73,11 +75,9 @@ def rrf_fuse(
 def jaccard_top_k(
     queries: DataFrame,
     corpus: DataFrame,
-    n: int = 3,
-    k: int = 10,
 ) -> DataFrame:
-    """Lexical retrieval leg: top-``k`` corpus docs per query doc by
-    word-``n``-gram Jaccard (the dedup family's proven tokenization).
+    """Lexical retrieval leg: top-``_TOP_K`` corpus docs per query doc
+    by word-3-gram Jaccard (the dedup family's proven tokenization).
 
     Scale shape: the query side is dimension-sized by contract (a
     search evaluates a query set, not corpus×corpus — that is
@@ -87,14 +87,14 @@ def jaccard_top_k(
     shingle with some query survive), and the Jaccard denominator
     reuses per-doc distinct-shingle counts computed once per side.
 
-    Output: (query_id, doc_id, jaccard_sim, rank ≤ k), ranked by
+    Output: (query_id, doc_id, jaccard_sim, rank ≤ _TOP_K), ranked by
     (jaccard_sim DESC, doc_id) per query; self-matches excluded."""
     from mape_calculation_and_anonymization_spark.operators.dedup import word_ngrams
 
     def shingled(df, out_id):
         return df.select(
             F.col("doc_id").alias(out_id),
-            F.explode(word_ngrams("text", n)).alias("sh"),
+            F.explode(word_ngrams(3)).alias("sh"),
         )
 
     q_sh = checkpoint(shingled(queries, "query_id"), "fusion.jaccard_top_k.q_sh")
@@ -123,5 +123,5 @@ def jaccard_top_k(
         F.col("jaccard_sim").desc(), F.col("doc_id").asc()
     )
     return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+        F.col("rank") <= _TOP_K
     )

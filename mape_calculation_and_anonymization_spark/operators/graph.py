@@ -36,6 +36,14 @@ _CC_MAX_ITERATIONS = 20
 # last): lineage depth against one materialization job per checkpoint
 _PAGERANK_CHECKPOINT_EVERY = 3
 
+# pagerank's fixed iteration count and damping
+_PAGERANK_ITERATIONS = 10
+_PAGERANK_DAMPING = 0.85
+
+# cooccurrence_edges' hot-bucket cap: a bucket with more rows is left
+# out of the pair expansion
+_COOCCURRENCE_MAX_BUCKET = 256
+
 
 def connected_components(edges: DataFrame) -> DataFrame:
     """Minimum-label connected components over an undirected
@@ -115,14 +123,11 @@ def duplicate_clusters(docs: DataFrame, pairs: DataFrame) -> DataFrame:
 
 def cooccurrence_edges(
     df: DataFrame,
-    id_col: str,
-    bucket_cols: list[str],
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Undirected co-occurrence edge list: one ``(u, v)`` row (with
-    ``u < v``) for every pair of distinct ids sharing a bucket — the
-    shared derivation behind the triangle-count and PageRank queries
-    (ids = users, bucket = (event_type, minute)).
+    ``u < v``) for every pair of distinct ``user_id`` values sharing a
+    bucket — the shared derivation behind the triangle-count and
+    PageRank queries (bucket = (``event_type``, minute ``m``)).
 
     The pair expansion runs IN-ROW over each bucket's sorted distinct
     member set (round 18 — the lsh_candidate_pairs /
@@ -132,14 +137,13 @@ def cooccurrence_edges(
     count-aggregate + semi-join + bucket-keyed self equi join — five
     corpus-scale shuffles of the keyed stream down to one. A bucket
     with k co-active ids still emits k·(k-1)/2 pairs — quadratic in
-    the hot bucket — which is what ``max_bucket_size`` bounds: the cap
+    the hot bucket — which is what ``_COOCCURRENCE_MAX_BUCKET`` bounds: the cap
     tests the PRE-dedup row count (same probe as before) and filters
     BEFORE the expansion, and the drop is logged driver-side
     (no-silent-caps rule: a capped graph must never read as the full
     graph). The aggregate is localCheckpointed — bucket-count-sized —
     so the drop-count probe and the expansion share one derivation.
-    ``None`` disables the guard (exact small-scale semantics — what
-    the DuckDB oracles re-derive). The cap bounds the pair expansion,
+    The cap bounds the pair expansion,
     not the aggregation: the count and the member set are built in the
     same pass, so an over-cap bucket is still collected whole into one
     aggregation buffer (members × 8-ish bytes, O(bucket) memory) and
@@ -149,27 +153,24 @@ def cooccurrence_edges(
     """
     import logging
 
-    keyed = df.select(F.col(id_col).alias("_id"), *bucket_cols)
-    grouped = keyed.groupBy(*bucket_cols).agg(
+    keyed = df.select(F.col("user_id").alias("_id"), "event_type", "m")
+    grouped = keyed.groupBy("event_type", "m").agg(
         F.count(F.lit(1)).alias("_n"),
         # collect_set drops NULL ids — the old a._id < b._id join
         # predicate excluded them identically
         F.sort_array(F.collect_set("_id")).alias("_ms"),
     )
-    # `is not None`, not truthiness: max_bucket_size=0 is a legitimate
-    # (drop-everything) cap, not "disabled"
-    if max_bucket_size is not None:
-        grouped = checkpoint(grouped, "graph.cooccurrence_edges.grouped")
-        n_dropped = grouped.filter(F.col("_n") > max_bucket_size).count()
-        if n_dropped:
-            logging.getLogger(__name__).warning(
-                "cooccurrence_edges: dropped %d hot bucket(s) larger than "
-                "max_bucket_size=%d before pair expansion — the edge list "
-                "is a capped subgraph",
-                n_dropped,
-                max_bucket_size,
-            )
-        grouped = grouped.filter(F.col("_n") <= max_bucket_size)
+    grouped = checkpoint(grouped, "graph.cooccurrence_edges.grouped")
+    n_dropped = grouped.filter(F.col("_n") > _COOCCURRENCE_MAX_BUCKET).count()
+    if n_dropped:
+        logging.getLogger(__name__).warning(
+            "cooccurrence_edges: dropped %d hot bucket(s) larger than "
+            "max_bucket_size=%d before pair expansion — the edge list "
+            "is a capped subgraph",
+            n_dropped,
+            _COOCCURRENCE_MAX_BUCKET,
+        )
+    grouped = grouped.filter(F.col("_n") <= _COOCCURRENCE_MAX_BUCKET)
     return (
         grouped.select(F.explode(_sorted_pairs("_ms", "u", "v")).alias("_p"))
         .select("_p.u", "_p.v")
@@ -177,10 +178,11 @@ def cooccurrence_edges(
     )
 
 
-def pagerank(edges: DataFrame, iterations: int = 10) -> DataFrame:
+def pagerank(edges: DataFrame) -> DataFrame:
     """PageRank (damping 0.85) over an UNDIRECTED ``(id_a, id_b)``
-    edge list (each edge contributes both directions), fixed iteration
-    count. Returns (id, rank); ranks over all nodes sum to ~1.
+    edge list (each edge contributes both directions), a fixed
+    ``_PAGERANK_ITERATIONS`` rounds. Returns (id, rank); ranks over all
+    nodes sum to ~1.
 
     Same distributed shape as :func:`connected_components`: the
     symmetrized edge list and per-node degree are materialized once
@@ -213,8 +215,6 @@ def pagerank(edges: DataFrame, iterations: int = 10) -> DataFrame:
     Semantics are additionally pinned against a numpy power-iteration
     in tests/test_graph_sampling.py.
     """
-    if iterations < 1:
-        raise ValueError(f"iterations must be >= 1, got {iterations}")
     if _PAGERANK_CHECKPOINT_EVERY < 1:
         raise ValueError(
             "_PAGERANK_CHECKPOINT_EVERY must be >= 1, got "
@@ -235,7 +235,7 @@ def pagerank(edges: DataFrame, iterations: int = 10) -> DataFrame:
         # empty graph: no nodes, no ranks (mirrors connected_components
         # returning no labels for an empty edge list)
         return edges.sparkSession.createDataFrame([], "id long, rank double")
-    base = (1.0 - 0.85) / n
+    base = (1.0 - _PAGERANK_DAMPING) / n
     # fold 1/deg into the edge list ONCE: each iteration is then a
     # single join + aggregate instead of join+join+aggregate.
     # persist, NOT localCheckpoint (round 18): a checkpointed RDD scan
@@ -253,14 +253,14 @@ def pagerank(edges: DataFrame, iterations: int = 10) -> DataFrame:
     ) as sym_w:
         sym_w.count()
         ranks = deg.select("u", F.lit(1.0 / n).alias("rank"))
-        for i in range(iterations):
+        for i in range(_PAGERANK_ITERATIONS):
             contrib = sym_w.join(ranks, "u").select(
                 F.col("v").alias("u"),
                 (F.col("rank") * F.col("w")).alias("c"),
             )
             ranks = contrib.groupBy("u").agg(
-                (F.lit(base) + F.lit(0.85) * F.sum("c")).alias("rank")
+                (F.lit(base) + F.lit(_PAGERANK_DAMPING) * F.sum("c")).alias("rank")
             )
-            if (i + 1) % _PAGERANK_CHECKPOINT_EVERY == 0 or i + 1 == iterations:
+            if (i + 1) % _PAGERANK_CHECKPOINT_EVERY == 0 or i + 1 == _PAGERANK_ITERATIONS:
                 ranks = checkpoint(ranks, "graph.pagerank.ranks")
     return ranks.select(F.col("u").alias("id"), "rank")

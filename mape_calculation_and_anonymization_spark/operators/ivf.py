@@ -18,6 +18,14 @@ from pyspark.sql import functions as F
 
 from mape_calculation_and_anonymization_spark.operators.similarity import cosine
 
+# ivf_top_k's neighbors per query and the cells it probes
+_IVF_TOP_K = 3
+_IVF_NPROBE = 8
+
+# ivf_recall_curve's recall depth and its probe budgets
+_RECALL_K = 10
+_RECALL_BUDGETS = (1, 2, 4, 8)
+
 
 def build_ivf_index(
     corpus: DataFrame,
@@ -61,10 +69,8 @@ def ivf_top_k(
     assigned: DataFrame,
     centroids: DataFrame,
     queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 4,
 ) -> DataFrame:
-    """ANN top-k: route each query to its ``nprobe`` nearest centroids
+    """ANN top-``_IVF_TOP_K``: route each query to its ``_IVF_NPROBE`` nearest centroids
     (broadcast centroid table), score exact cosine only inside those
     cells, rank. Output schema matches ``brute_force_top_k``."""
     # norms hoisted out of the per-pair cosine (round 18 — the
@@ -102,7 +108,7 @@ def ivf_top_k(
                 )
             ),
         )
-        .filter(F.col("_crank") <= nprobe)
+        .filter(F.col("_crank") <= _IVF_NPROBE)
         .select("query_id", "_qv", "_qn", "cluster")
     )
 
@@ -127,7 +133,7 @@ def ivf_top_k(
         F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
     )
     return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+        F.col("rank") <= _IVF_TOP_K
     )
 
 
@@ -184,8 +190,6 @@ def ivf_recall_curve(
     assigned: DataFrame,
     centroids: DataFrame,
     queries: DataFrame,
-    k: int = 10,
-    budgets: tuple[int, ...] = (1, 2, 4, 8),
 ) -> DataFrame:
     """Mean recall@k of the IVF index per probe budget, in ONE
     corpus-scoring pass.
@@ -270,25 +274,25 @@ def ivf_recall_curve(
     )
     wr = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     flagged = scored.withColumn("_exact_rk", F.row_number().over(w))
-    for p in budgets:
+    for p in _RECALL_BUDGETS:
         flagged = flagged.withColumn(
             f"_rk_{p}",
             F.sum(
                 F.when(F.col("_crank") <= p, 1).otherwise(0)
             ).over(wr),
         )
-    exact_member = F.col("_exact_rk") <= k
+    exact_member = F.col("_exact_rk") <= _RECALL_K
     agg_row = flagged.agg(
         *[
             F.sum(
                 F.when(
                     (F.col("_crank") <= p)
-                    & (F.col(f"_rk_{p}") <= k)
+                    & (F.col(f"_rk_{p}") <= _RECALL_K)
                     & exact_member,
                     1,
                 ).otherwise(0)
             ).alias(f"_h_{p}")
-            for p in budgets
+            for p in _RECALL_BUDGETS
         ],
         F.sum(F.when(exact_member, 1).otherwise(0)).alias("_n_exact"),
     )
@@ -298,7 +302,7 @@ def ivf_recall_curve(
                 F.lit(p).cast("long").alias("nprobe"),
                 F.col(f"_h_{p}").alias("n_hits"),
             )
-            for p in budgets
+            for p in _RECALL_BUDGETS
         ]
     )
     return (
@@ -307,7 +311,7 @@ def ivf_recall_curve(
             F.col("_b.nprobe").alias("nprobe"),
             F.col("_b.n_hits").alias("n_hits"),
             F.round(F.col("_b.n_hits") / F.col("_n_exact"), 6).alias(
-                f"mean_recall_at_{k}"
+                f"mean_recall_at_{_RECALL_K}"
             ),
         )
         # the join-based shape emitted a budget's row only when it had

@@ -27,18 +27,15 @@ from pyspark.sql import functions as F
 def asof_join(
     left: DataFrame,
     right: DataFrame,
-    on: str,
-    by: list[str] | None = None,
-    right_cols: list[str] | None = None,
     tolerance: str | None = None,
 ) -> DataFrame:
-    """Enrich each left row with the most recent right row at-or-before
-    its ``on`` timestamp (a backward as-of join), matching ``by`` keys
-    exactly.
+    """Enrich each left row with the ``hourly_volume`` of the most
+    recent right row at-or-before its ``ts`` timestamp (a backward
+    as-of join), matching ``zone`` exactly.
 
     Equivalent to pandas ``merge_asof`` / DuckDB ``ASOF JOIN``
     (with allow_exact_matches=True). Implemented as union + windowed
-    forward-fill: one shuffle on ``by``.
+    forward-fill: one shuffle on ``zone``.
 
     ``tolerance`` (an INTERVAL string, e.g. ``"1 hour"``) mirrors
     pandas merge_asof's: a match further than the tolerance from the
@@ -46,22 +43,11 @@ def asof_join(
     The matched right timestamp rides along through the fill, so the
     gap test is a pure projection afterwards.
 
-    ``by`` may not be empty: an unpartitioned window collapses the
-    whole frame onto ONE task, a scale-killer on facts.
-
     Left and right must not share non-key column names (pandas
     suffixes; here the union would silently NULL the shared column,
     so it is an error — rename before joining).
     """
-    by = by or []
-    if not by:
-        raise ValueError(
-            "asof_join with by=[] runs the whole frame through a single "
-            "unpartitioned window; pass by keys"
-        )
-    right_cols = right_cols or [
-        c for c in right.columns if c != on and c not in by
-    ]
+    right_cols = ["hourly_volume"]
     clashes = [c for c in right_cols if c in left.columns]
     if clashes:
         raise ValueError(
@@ -79,32 +65,26 @@ def asof_join(
         l_marked = l_marked.withColumn(c, F.lit(None).cast(right.schema[c].dataType))
     if tolerance is not None:
         l_marked = l_marked.withColumn(
-            "_r_on", F.lit(None).cast(right.schema[on].dataType)
+            "_r_on", F.lit(None).cast(right.schema["ts"].dataType)
         )
     r_marked = right.select(
-        *by, F.col(on), *right_cols
+        "zone", F.col("ts"), *right_cols
     ).withColumn("_is_left", F.lit(0))
     if tolerance is not None:
-        r_marked = r_marked.withColumn("_r_on", F.col(on))
-    for c in left.columns:
-        if c not in by and c != on:
-            r_marked = r_marked.withColumn(c, F.lit(None).cast(left.schema[c].dataType))
+        r_marked = r_marked.withColumn("_r_on", F.col("ts"))
+    left_cols = [c for c in left.columns if c not in ("zone", "ts")]
+    for c in left_cols:
+        r_marked = r_marked.withColumn(c, F.lit(None).cast(left.schema[c].dataType))
 
     unioned = l_marked.select(
-        *by, on, "_is_left", *fill_cols,
-        *[c for c in left.columns if c not in by and c != on],
-    ).unionByName(
-        r_marked.select(
-            *by, on, "_is_left", *fill_cols,
-            *[c for c in left.columns if c not in by and c != on],
-        )
-    )
+        "zone", "ts", "_is_left", *fill_cols, *left_cols
+    ).unionByName(r_marked.select("zone", "ts", "_is_left", *fill_cols, *left_cols))
 
     # Right rows order BEFORE left rows at the same timestamp so an
     # exact-timestamp match is visible to the left row.
     w = (
-        Window.partitionBy(*by)
-        .orderBy(F.col(on).asc(), F.col("_is_left").asc())
+        Window.partitionBy("zone")
+        .orderBy(F.col("ts").asc(), F.col("_is_left").asc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     fill = {c: F.last(F.col(c), ignorenulls=True).over(w) for c in fill_cols}
@@ -112,7 +92,7 @@ def asof_join(
     filled = unioned.withColumns(fill)
     out = filled.filter(F.col("_is_left") == 1).drop("_is_left")
     if tolerance is not None:
-        gap_ok = F.col(on) - F.col("_r_on") <= F.expr(f"INTERVAL {tolerance}")
+        gap_ok = F.col("ts") - F.col("_r_on") <= F.expr(f"INTERVAL {tolerance}")
         out = out.withColumns(
             {
                 c: F.when(gap_ok, F.col(c)).otherwise(
@@ -124,36 +104,29 @@ def asof_join(
     return out
 
 
-def salted_join(
-    probe: DataFrame,
-    build: DataFrame,
-    on: str,
-    salt: int = 8,
-) -> DataFrame:
-    """Inner equi join with the probe side's keys splintered across
-    ``salt`` sub-keys and the build side replicated ``salt`` ways —
+def salted_join(probe: DataFrame, build: DataFrame) -> DataFrame:
+    """Inner equi join on ``l_partkey`` with the probe side's keys
+    splintered across 8 sub-keys and the build side replicated 8 ways —
     hot probe keys no longer collapse onto one reducer.
 
-    Row-identical to ``probe.join(build, on)``.
+    Row-identical to ``probe.join(build, "l_partkey")``.
     """
-    p = probe.withColumn("_salt", (F.rand(seed=7) * salt).cast("int"))
+    p = probe.withColumn("_salt", (F.rand(seed=7) * 8).cast("int"))
     b = build.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
+        "_salt", F.explode(F.array(*[F.lit(i) for i in range(8)]))
     )
-    out = p.join(b, on=[on, "_salt"])
+    out = p.join(b, on=["l_partkey", "_salt"])
     return out.drop("_salt")
 
 
-def key_skew_stats(
-    df: DataFrame, key_col: str, top_k: int = 10
-) -> DataFrame:
-    """Heavy-hitter diagnostics for a join/aggregation key: the
-    ``top_k`` most frequent keys with their row share and the ratio of
+def key_skew_stats(df: DataFrame) -> DataFrame:
+    """Heavy-hitter diagnostics for the ``l_suppkey`` join key: the
+    10 most frequent keys with their row share and the ratio of
     each key's count to the mean per-key count — the number that tells
     you whether a plain shuffle join is safe or needs salting/AQE skew
     handling. One hash aggregate + a broadcast 1-row global stats
     frame; the top-k plans as TakeOrderedAndProject."""
-    counts = df.groupBy(key_col).agg(F.count(F.lit(1)).alias("n_rows"))
+    counts = df.groupBy("l_suppkey").agg(F.count(F.lit(1)).alias("n_rows"))
     totals = counts.agg(
         F.sum("n_rows").alias("_total"),
         F.avg("n_rows").alias("_mean"),
@@ -161,25 +134,20 @@ def key_skew_stats(
     return (
         counts.crossJoin(F.broadcast(totals))
         .select(
-            key_col,
+            "l_suppkey",
             "n_rows",
             F.round(F.col("n_rows") / F.col("_total"), 6).alias("row_share"),
             F.round(F.col("n_rows") / F.col("_mean"), 4).alias("skew_ratio"),
         )
-        .orderBy(F.col("n_rows").desc(), key_col)
-        .limit(top_k)
+        .orderBy(F.col("n_rows").desc(), "l_suppkey")
+        .limit(10)
     )
 
 
-def touch_attribution(
-    conversions: DataFrame,
-    touches: DataFrame,
-    on: str = "user_id",
-    lookback: str = "INTERVAL 7 DAYS",
-) -> DataFrame:
+def touch_attribution(conversions: DataFrame, touches: DataFrame) -> DataFrame:
     """First-touch / last-touch attribution: for each conversion, the
-    earliest and latest same-key touch inside
-    ``[conversion.ts − lookback, conversion.ts]`` — the standard
+    earliest and latest same-``user_id`` touch inside
+    ``[conversion.ts − 7 days, conversion.ts]`` — the standard
     marketing-attribution pair (first = acquisition credit, last =
     closing credit). One row per conversion; conversions with NO
     in-window touch keep NULL touch columns (they are the
@@ -197,30 +165,30 @@ def touch_attribution(
     routes through the salted-join helpers like any other hot-key
     join."""
     c = conversions.select(
-        F.col(on).alias("_k"),
+        F.col("user_id").alias("_k"),
         F.col("event_id").alias("conversion_id"),
         F.col("ts").alias("conversion_ts"),
     )
     t = touches.select(
-        F.col(on).alias("_k"),
+        F.col("user_id").alias("_k"),
         F.col("event_id").alias("_t_id"),
         F.col("ts").alias("_t_ts"),
     )
     cond = (
         (c["_k"] == t["_k"])
-        & (t["_t_ts"] >= c["conversion_ts"] - F.expr(lookback))
+        & (t["_t_ts"] >= c["conversion_ts"] - F.expr("INTERVAL 7 DAYS"))
         & (t["_t_ts"] <= c["conversion_ts"])
     )
     joined = c.join(t, cond, "left_outer")
     agg = joined.groupBy(
-        c["_k"].alias(on), "conversion_id", "conversion_ts"
+        c["_k"].alias("user_id"), "conversion_id", "conversion_ts"
     ).agg(
         F.min(F.struct("_t_ts", "_t_id")).alias("_first"),
         F.max(F.struct("_t_ts", "_t_id")).alias("_last"),
         F.count("_t_id").alias("n_touches"),
     )
     return agg.select(
-        on,
+        "user_id",
         "conversion_id",
         "conversion_ts",
         F.col("_first._t_id").alias("first_touch_id"),
@@ -231,9 +199,9 @@ def touch_attribution(
     )
 
 
-def merge_upsert(target: DataFrame, updates: DataFrame, key: str) -> DataFrame:
+def merge_upsert(target: DataFrame, updates: DataFrame) -> DataFrame:
     """Batch MERGE (upsert) expressed as pure dataflow: full-outer
-    join on ``key``; matched rows take the UPDATE side's values,
+    join on ``c_custkey``; matched rows take the UPDATE side's values,
     unmatched update rows INSERT, unmatched target rows pass through
     UNCHANGED — `MERGE INTO ... WHEN MATCHED THEN UPDATE WHEN NOT
     MATCHED THEN INSERT` for engines/table-formats without a native
@@ -266,6 +234,7 @@ def merge_upsert(target: DataFrame, updates: DataFrame, key: str) -> DataFrame:
     # the key twice, both 'updated'). Check eagerly — one
     # map-side-combinable aggregate over the update batch, which is
     # dim-sized by contract; the probe reads ONE scalar row.
+    key = "c_custkey"
     dup = (
         updates.groupBy(key)
         .agg(F.count(F.lit(1)).alias("_n"))

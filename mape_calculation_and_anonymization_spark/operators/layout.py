@@ -23,10 +23,14 @@ from mape_calculation_and_anonymization_spark.sources.sinks import (
 )
 
 
-def zvalue(cols: list[Column | str], bits: int = 16) -> Column:
-    """Interleave the low ``bits`` bits of each column into one Z
-    (Morton) key. Columns should already be non-negative integers in
-    ``[0, 2^bits)`` — bucketize upstream for unbounded/real-valued
+# bits per dimension of the Z-order key: 2^8 quantile buckets per column
+_Z_BITS = 8
+
+
+def zvalue(cols: list[Column | str]) -> Column:
+    """Interleave the low ``bits = _Z_BITS`` bits of each column into
+    one Z (Morton) key. Columns should already be non-negative integers
+    in ``[0, 2^bits)`` — bucketize upstream for unbounded/real-valued
     dimensions (:func:`quantile_rank_column` /
     :func:`zorder_write_auto`).
 
@@ -41,6 +45,7 @@ def zvalue(cols: list[Column | str], bits: int = 16) -> Column:
     Unrolled shift/or expression tree: ``bits × n_cols`` ops, all
     inside whole-stage codegen — no UDF.
     """
+    bits = _Z_BITS
     cs = [F.col(c) if isinstance(c, str) else c for c in cols]
     n = len(cs)
     if n == 0:
@@ -60,9 +65,9 @@ def zvalue(cols: list[Column | str], bits: int = 16) -> Column:
     return z
 
 
-def quantile_rank_column(df: DataFrame, col: str, bits: int = 8) -> Column:
+def quantile_rank_column(df: DataFrame, col: str) -> Column:
     """Map an arbitrary numeric column onto the bounded integer domain
-    ``[0, 2^bits)`` by approximate-quantile bucketing — the standard
+    ``[0, 2^_Z_BITS)`` by approximate-quantile bucketing — the standard
     prep that makes :func:`zvalue` applicable to real-valued or skewed
     dimensions (equal-POPULATION buckets, so the Morton key spreads
     rows evenly no matter the distribution).
@@ -71,7 +76,7 @@ def quantile_rank_column(df: DataFrame, col: str, bits: int = 8) -> Column:
     sketch at accuracy 1000, i.e. 0.1% relative error — one pass,
     map-side combinable); the returned expression
     is a pure projection against the broadcast cut list."""
-    n_buckets = 1 << bits
+    n_buckets = 1 << _Z_BITS
     cuts = (
         df.agg(
             F.percentile_approx(
@@ -91,27 +96,22 @@ def quantile_rank_column(df: DataFrame, col: str, bits: int = 8) -> Column:
     return expr.cast("long")
 
 
-def zorder_write_auto(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 8,
-    n_files: int = 8,
-) -> None:
-    """Z-order write for ARBITRARY numeric columns: each dimension is
-    quantile-bucketed onto [0, 2^bits) first (one sketch aggregate per
-    column), then range-partitioned on the interleaved key (each output
+def zorder_write_auto(df: DataFrame, path: str) -> None:
+    """Z-order write over the ``user_id`` and ``day`` columns, whatever
+    their numeric domain: each dimension is quantile-bucketed onto
+    [0, 2^_Z_BITS) first (one sketch aggregate per column), then
+    range-partitioned into 8 files on the interleaved key (each output
     file owns a contiguous Z range) and sorted within partitions, so
-    later scans filtering on ANY of ``cols`` skip row groups."""
+    later scans filtering on either column skip row groups."""
     bucketed = df
     tmp_cols = []
-    for c in cols:
+    for c in ("user_id", "day"):
         bc = f"_zb_{c}"
-        bucketed = bucketed.withColumn(bc, quantile_rank_column(df, c, bits))
+        bucketed = bucketed.withColumn(bc, quantile_rank_column(df, c))
         tmp_cols.append(bc)
-    keyed = bucketed.withColumn("_z", zvalue(tmp_cols, bits))
+    keyed = bucketed.withColumn("_z", zvalue(tmp_cols))
     write_parquet_snappy(
-        keyed.repartitionByRange(n_files, "_z")
+        keyed.repartitionByRange(8, "_z")
         .sortWithinPartitions("_z")
         .drop("_z", *tmp_cols),
         path,

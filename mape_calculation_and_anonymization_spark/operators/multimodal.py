@@ -67,9 +67,9 @@ def extract_features(df: DataFrame) -> DataFrame:
     return df.mapInPandas(featurize, schema="doc_id long, features array<double>")
 
 
-def frame_sample(df: DataFrame, n_frames: int = 4) -> DataFrame:
+def frame_sample(df: DataFrame) -> DataFrame:
     """Video-style frame sampling stub: split the payload into
-    ``n_frames`` evenly-spaced byte chunks (stand-in for keyframe
+    4 evenly-spaced byte chunks (stand-in for keyframe
     extraction), emitted one row per frame — the explode-shaped output
     a real sampler produces."""
 
@@ -80,8 +80,8 @@ def frame_sample(df: DataFrame, n_frames: int = 4) -> DataFrame:
                 if b is None:
                     continue
                 b = bytes(b)
-                step = max(1, len(b) // n_frames)
-                for j in range(n_frames):
+                step = max(1, len(b) // 4)
+                for j in range(4):
                     chunk = b[j * step : (j + 1) * step]
                     if not chunk:
                         break

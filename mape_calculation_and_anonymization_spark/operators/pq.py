@@ -40,6 +40,14 @@ from pyspark.sql import types as T
 # the same discipline as the bucket cap in the LSH paths.
 _MAX_QUERIES = 100_000
 
+# neighbors returned per query by pq_top_k and ivf_pq_top_k, and how
+# many times that many ADC candidates each re-ranks exactly
+_TOP_K = 10
+_SHORTLIST_FACTOR = 8
+
+# cells ivf_pq_top_k probes per query
+_IVF_PQ_NPROBE = 4
+
 
 def _collect_query_batch(queries: DataFrame) -> list:
     rows = (
@@ -140,8 +148,6 @@ def pq_top_k(
     corpus: DataFrame,
     queries: DataFrame,
     codebooks: np.ndarray,
-    k: int = 10,
-    shortlist_factor: int = 4,
 ) -> DataFrame:
     """ADC search + exact cosine re-rank.
 
@@ -149,7 +155,7 @@ def pq_top_k(
     distances is built once; the approximate distance of a corpus
     vector is then ``sum_b LUT[b, code[b]]`` — m byte-indexed adds per
     candidate, never a d-dimensional product. The top
-    ``k · shortlist_factor`` by approximate distance are re-ranked with
+    ``_TOP_K · _SHORTLIST_FACTOR`` by approximate distance are re-ranked with
     EXACT cosine against raw embeddings (a shortlist-sized join), so
     PQ affects recall only, never the correctness of returned
     similarities. Query set is collected and broadcast (dimension-sized
@@ -180,7 +186,7 @@ def pq_top_k(
             T.StructField("approx_dist", T.DoubleType()),
         ]
     )
-    shortlist_k = k * shortlist_factor
+    shortlist_k = _TOP_K * _SHORTLIST_FACTOR
 
     def _score(batches):
         import pandas as pd
@@ -249,7 +255,7 @@ def pq_top_k(
             ),
         )
         .withColumn("rank", F.row_number().over(w_final))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= _TOP_K)
     )
 
 
@@ -258,11 +264,8 @@ def ivf_pq_top_k(
     centroids: DataFrame,
     queries: DataFrame,
     codebooks: np.ndarray,
-    k: int = 10,
-    nprobe: int = 4,
-    shortlist_factor: int = 8,
 ) -> DataFrame:
-    """The full IVF+PQ stack: coarse cell routing (touch ~nprobe/k of
+    """The full IVF+PQ stack: coarse cell routing (touch ~_IVF_PQ_NPROBE/n_cells of
     the corpus) × compressed-code ADC scoring (m bytes per candidate)
     × exact cosine re-rank (shortlist-sized). This is the architecture
     a trillion-vector search actually deploys — IVF bounds how much is
@@ -308,7 +311,7 @@ def ivf_pq_top_k(
                 )
             ),
         )
-        .filter(F.col("_crank") <= nprobe)
+        .filter(F.col("_crank") <= _IVF_PQ_NPROBE)
         .select("query_id", "cluster")
     )
 
@@ -349,7 +352,7 @@ def ivf_pq_top_k(
             )
 
     scored = pairs.mapInPandas(_score, out_schema)
-    shortlist_k = k * shortlist_factor
+    shortlist_k = _TOP_K * _SHORTLIST_FACTOR
     w_short = Window.partitionBy("query_id").orderBy(
         F.col("approx_dist").asc(), F.col("neighbor_id").asc()
     )
@@ -373,5 +376,5 @@ def ivf_pq_top_k(
             F.round(cosine(F.col("_qv"), F.col("_cv")), 6).alias("cosine_sim"),
         )
         .withColumn("rank", F.row_number().over(w_final))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= _TOP_K)
     )

@@ -39,25 +39,31 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# k of k_anonymize: the smallest class size published
+_K_ANONYMITY = 8
 
-def band(col: str | Column, width: float) -> Column:
-    """Generalize a numeric column to the lower edge of its
+# the Laplace mechanism of dp_noisy_counts: privacy budget and the
+# reproducible test seed its noise is keyed on
+_DP_EPSILON = 1.0
+_DP_SEED = 42
+
+
+def band(width: float) -> Column:
+    """Generalize ``c_acctbal`` to the lower edge of its
     ``width``-sized band (floor semantics, so negatives band down).
     Integer widths return bigint edges (publishing exact band
     arithmetic in doubles would just re-leak the value); fractional
     widths keep the double edge — truncating the multiplier would
     produce wrong (width<1: all-zero) bands."""
-    c = F.col(col) if isinstance(col, str) else col
     w = float(width)
-    edge = F.floor(c / F.lit(w)) * F.lit(w)
+    edge = F.floor(F.col("c_acctbal") / F.lit(w)) * F.lit(w)
     return edge.cast("long") if w.is_integer() else edge
 
 
-def k_anonymize(
-    df: DataFrame, quasi_cols: list[str], k: int
-) -> DataFrame:
-    """Suppress every row whose quasi-identifier equivalence class has
-    fewer than ``k`` members. Input must already carry GENERALIZED
+def k_anonymize(df: DataFrame) -> DataFrame:
+    """Suppress every row whose quasi-identifier equivalence class
+    (``c_nationkey``, ``c_mktsegment``) has fewer than
+    ``_K_ANONYMITY`` members. Input must already carry GENERALIZED
     quasi columns (see :func:`band`); generalize-then-suppress is the
     standard k-anonymity recipe.
 
@@ -75,38 +81,39 @@ def k_anonymize(
     fill a sentinel generalization bucket BEFORE calling, making the
     choice explicit rather than a join-semantics accident.
     """
+    quasi_cols = ["c_nationkey", "c_mktsegment"]
     ok = (
         df.groupBy(*quasi_cols)
         .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") >= k)
+        .filter(F.col("_n") >= _K_ANONYMITY)
         .drop("_n")
     )
     return df.join(ok, quasi_cols, "left_semi")
 
 
-def l_diversity_report(
-    df: DataFrame, quasi_cols: list[str], sensitive_col: str, l: int
-) -> DataFrame:
-    """Per equivalence class: size, distinct sensitive values, and
-    whether the class meets distinct-l-diversity. Single hash
-    aggregate (count + count distinct over the same grouping)."""
-    return df.groupBy(*quasi_cols).agg(
+def l_diversity_report(df: DataFrame) -> DataFrame:
+    """Per equivalence class (``c_nationkey``, ``bal_band``): size,
+    distinct sensitive ``c_mktsegment`` values, and whether the class
+    meets distinct-3-diversity. Single hash aggregate (count + count
+    distinct over the same grouping)."""
+    return df.groupBy("c_nationkey", "bal_band").agg(
         F.count(F.lit(1)).alias("class_size"),
-        F.countDistinct(sensitive_col).alias("n_sensitive"),
-        (F.countDistinct(sensitive_col) >= F.lit(l)).alias("l_diverse"),
+        F.countDistinct("c_mktsegment").alias("n_sensitive"),
+        (F.countDistinct("c_mktsegment") >= F.lit(3)).alias("l_diverse"),
     )
 
 
-def equivalence_class_histogram(
-    df: DataFrame, quasi_cols: list[str]
-) -> DataFrame:
-    """Re-identification risk profile: for each equivalence-class size,
+def equivalence_class_histogram(df: DataFrame) -> DataFrame:
+    """Re-identification risk profile over the (``c_nationkey``,
+    ``c_mktsegment``, ``bal_band``) classes: for each equivalence-class size,
     how many classes and records sit at that size. A record in a class
     of size s is re-identified with probability 1/s by an adversary who
     knows the quasi-identifiers — the ``class_size = 1`` row is the
     population of unique, fully-exposed records. Two stacked hash
     aggregates; the second runs over the answer-sized class frame."""
-    sizes = df.groupBy(*quasi_cols).agg(F.count(F.lit(1)).alias("class_size"))
+    sizes = df.groupBy("c_nationkey", "c_mktsegment", "bal_band").agg(
+        F.count(F.lit(1)).alias("class_size")
+    )
     return (
         sizes.groupBy("class_size")
         .agg(F.count(F.lit(1)).alias("n_classes"))
@@ -119,9 +126,9 @@ def equivalence_class_histogram(
     )
 
 
-def laplace_noise(key: Column, epsilon: float, seed: int) -> Column:
-    """Deterministic Laplace(1/epsilon) draw (sensitivity 1) keyed on
-    ``(seed, key)`` — REPRODUCIBLE TEST-ORACLE NOISE, NOT PRODUCTION
+def laplace_noise(key: Column) -> Column:
+    """Deterministic Laplace(1/``_DP_EPSILON``) draw (sensitivity 1)
+    keyed on ``(_DP_SEED, key)`` — REPRODUCIBLE TEST-ORACLE NOISE, NOT PRODUCTION
     DP. Anyone who knows (or guesses) the seed can recompute and
     subtract the noise exactly, and a float inverse-CDF draw is
     subject to the Mironov floating-point attack (CCS 2012: the
@@ -139,86 +146,57 @@ def laplace_noise(key: Column, epsilon: float, seed: int) -> Column:
     All arithmetic is exact integer until the final log/multiply, so
     Spark and any SQL engine that agrees on md5 and IEEE doubles draw
     the SAME noise. Runs entirely inside whole-stage codegen."""
-    h = F.md5(F.concat(F.lit(f"{seed}:"), key.cast("string")))
+    h = F.md5(F.concat(F.lit(f"{_DP_SEED}:"), key.cast("string")))
     x = F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
     m = (x - F.lit(2**31)) * F.lit(2) + F.lit(1)
     t = F.abs(m).cast("double") / F.lit(float(2**32))
-    b = 1.0 / epsilon
+    b = 1.0 / _DP_EPSILON
     return -F.lit(b) * F.signum(m.cast("double")) * F.log(F.lit(1.0) - t)
 
 
-def noise_key(group_cols: list[str]) -> Column:
-    """Collision-free noise key for a multi-column group: each column
-    is md5-hashed individually (fixed 32-hex width), NULL maps to the
-    sentinel ``'-'`` (one char, so it can never collide with a
-    digest), then the per-column tokens join with ``'|'``. A plain
-    ``concat_ws('|', cols)`` is ambiguous — ('a|b','c') and
-    ('a','b|c') would share one noise draw — and silently skips
-    NULLs; the fixed-width encoding makes every distinct group tuple
-    a distinct key. Mirrored digit-for-digit by the DuckDB oracle
-    (``md5`` and ``COALESCE`` are engine-portable)."""
+def noise_key() -> Column:
+    """Collision-free noise key of the ``event_type`` group: the value
+    is md5-hashed (fixed 32-hex width) and NULL maps to the sentinel
+    ``'-'`` (one char, so it can never collide with a digest), so every
+    distinct group value, NULL included, is a distinct key. Mirrored
+    digit-for-digit by the DuckDB oracle (``md5``, ``COALESCE`` and
+    ``concat_ws`` are engine-portable)."""
     return F.concat_ws(
-        "|",
-        *[
-            F.coalesce(F.md5(F.col(c).cast("string")), F.lit("-"))
-            for c in group_cols
-        ],
+        "|", F.coalesce(F.md5(F.col("event_type").cast("string")), F.lit("-"))
     )
 
 
-def dp_noisy_counts(
-    df: DataFrame,
-    group_cols: list[str],
-    epsilon: float = 1.0,
-    seed: int = 42,
-) -> DataFrame:
-    """Differentially-private group counts: COUNT(*) per group plus
-    Laplace(1/epsilon) noise (count queries have sensitivity 1 under
-    add/remove-one-record adjacency). Noise is keyed on the
-    collision-free :func:`noise_key` encoding of the group values —
-    one draw per published cell. Output: group cols +
+def dp_noisy_counts(df: DataFrame) -> DataFrame:
+    """Differentially-private ``event_type`` counts: COUNT(*) per group
+    plus Laplace(1/``_DP_EPSILON``) noise (count queries have
+    sensitivity 1 under add/remove-one-record adjacency). Noise is
+    keyed on the collision-free :func:`noise_key` encoding of the group
+    value — one draw per published cell. Output: ``event_type`` +
     ``noisy_count`` (double; negative values are NOT clamped —
     post-processing is the consumer's choice and clamping
     asymmetrically would bias sums) + ``epsilon``.
 
-    See :func:`laplace_noise`: with the default ``seed=42`` this is
-    reproducible test-oracle noise, not a production DP release — a
-    Python warning fires on the default to make accidental misuse
-    loud."""
-    if seed == 42:
-        import warnings
-
-        warnings.warn(
-            "dp_noisy_counts(seed=42) is the reproducible TEST seed — "
-            "the noise is recomputable by anyone; pass a secret "
-            "per-release seed (and see laplace_noise's caveats) for "
-            "any real release",
-            stacklevel=2,
-        )
-    key = noise_key(group_cols)
+    See :func:`laplace_noise`: keyed on the fixed ``_DP_SEED`` this is
+    reproducible test-oracle noise, not a production DP release."""
     return (
-        df.groupBy(*group_cols)
+        df.groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("_n"))
         .select(
-            *group_cols,
+            "event_type",
             (
                 F.col("_n").cast("double")
-                + laplace_noise(key, epsilon, seed)
+                + laplace_noise(noise_key())
             ).alias("noisy_count"),
-            F.lit(float(epsilon)).alias("epsilon"),
+            F.lit(float(_DP_EPSILON)).alias("epsilon"),
         )
     )
 
 
-def t_closeness_report(
-    df: DataFrame,
-    quasi_cols: list[str],
-    sensitive_col: str,
-    t: float = 0.2,
-) -> DataFrame:
-    """Per equivalence class: the TOTAL VARIATION DISTANCE between the
-    class's sensitive-value distribution and the global one, plus the
-    t-closeness verdict — the third leg of the disclosure-risk stack
+def t_closeness_report(df: DataFrame) -> DataFrame:
+    """Per equivalence class (``c_nationkey``, ``c_mktsegment``): the
+    TOTAL VARIATION DISTANCE between the class's sensitive ``bal_band``
+    distribution and the global one, plus the t-closeness verdict at
+    t = 0.2 — the third leg of the disclosure-risk stack
     (k-anonymity bounds re-identification, l-diversity bounds
     value-homogeneity, t-closeness bounds ATTRIBUTE INFERENCE: a
     class whose sensitive distribution diverges from the population's
@@ -239,6 +217,8 @@ def t_closeness_report(
     the answer-sized global value distribution, one class-keyed
     rollup. At 100 TB the only corpus-sized pass is the first
     aggregate; everything after is |classes|·|domain|-bounded."""
+    quasi_cols = ["c_nationkey", "c_mktsegment"]
+    sensitive_col = "bal_band"
     cells = df.groupBy(*quasi_cols, sensitive_col).agg(
         F.count(F.lit(1)).alias("_n_cv")
     )
@@ -278,5 +258,5 @@ def t_closeness_report(
         F.col("_n_c").alias("class_size"),
         "n_sensitive",
         F.round("_tvd", 6).alias("tvd"),
-        (F.round("_tvd", 6) > F.lit(float(t))).alias("t_violation"),
+        (F.round("_tvd", 6) > F.lit(0.2)).alias("t_violation"),
     )

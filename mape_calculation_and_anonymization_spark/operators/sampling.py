@@ -20,6 +20,23 @@ from pyspark.sql import functions as F
 
 _HEX_DIGITS = 4  # 16^4 = 65536 buckets → rate granularity 1/65536
 
+# hash_split's bands, in band order
+_SPLIT_FRACTIONS = {"train": 0.8, "val": 0.1, "test": 0.1}
+
+# pps_sample's expected sample size
+_PPS_EXPECTED_K = 500
+
+# mixture temperature of mixture_weights and token_budget_allocation
+_MIXTURE_ALPHA = 0.7
+
+# token_budget_allocation's total token budget
+_TOKEN_BUDGET = 1_000_000
+
+# token_budget_repetition's budget, as a multiple of the corpus tokens,
+# and its per-group repetition ceiling in epochs
+_REPETITION_BUDGET_MULTIPLE = 2.0
+_REPETITION_MAX_EPOCHS = 2.0
+
 
 def rate_to_hex_threshold(rate: float) -> str:
     """Map a sample rate in [0, 1] to the md5-prefix hex threshold the
@@ -29,7 +46,7 @@ def rate_to_hex_threshold(rate: float) -> str:
     return format(int(rate * (16 ** _HEX_DIGITS)), f"0{_HEX_DIGITS}x")
 
 
-def hash_split(key: str | Column, fractions: dict[str, float]) -> Column:
+def hash_split(key: str | Column) -> Column:
     """Deterministic dataset-split assignment (train/val/test): maps
     the md5-prefix of the salted key into cumulative-fraction hex
     bands. Content-stable — a document keeps its split across re-runs
@@ -37,12 +54,9 @@ def hash_split(key: str | Column, fractions: dict[str, float]) -> Column:
     uncontaminated when the corpus is rebuilt. Pure projection: no
     shuffle, no RNG.
 
-    ``fractions`` are name → fraction; they must sum to 1.0 (within
-    1/65536). Iteration order of the dict defines the band order, so
-    pass an ordered mapping (dicts preserve insertion order)."""
-    total = sum(fractions.values())
-    if not 0.999984 <= total <= 1.000016:  # 1/65536 tolerance
-        raise ValueError(f"fractions must sum to 1.0, got {total}")
+    The bands are ``_SPLIT_FRACTIONS`` (name → fraction, summing to
+    1.0), in its insertion order."""
+    fractions = _SPLIT_FRACTIONS
     c = F.col(key) if isinstance(key, str) else key
     prefix = F.substring(
         F.md5(F.concat(F.lit("split:"), c.cast("string"))), 1, _HEX_DIGITS
@@ -59,24 +73,19 @@ def hash_split(key: str | Column, fractions: dict[str, float]) -> Column:
             else expr.when(prefix < thr, name)
         )
     # last band absorbs the remainder so the assignment is total
-    return F.lit(names[0]) if expr is None else expr.otherwise(names[-1])
+    return expr.otherwise(names[-1])
 
 
-def stratified_sample(
-    df: DataFrame,
-    key_col: str,
-    strata_col: str,
-    rates: dict[str, float],
-    default_rate: float = 0.0,
-) -> DataFrame:
-    """Per-stratum deterministic sampling (e.g. keep 50% of 'en' docs,
-    10% of everything else) — the mixture-weighting step of a training
-    corpus. One CASE-over-threshold filter, no shuffle; each stratum's
-    sample is independent of every other's (the salt includes the
-    stratum, so identical keys across strata decorrelate)."""
-    c = F.col(strata_col)
-    thr = F.lit(rate_to_hex_threshold(default_rate))
-    for stratum, rate in sorted(rates.items()):
+def stratified_sample(df: DataFrame) -> DataFrame:
+    """Per-language deterministic sampling of ``doc_id`` rows: keep 60%
+    of 'en' docs, 25% of 'de' and 5% of everything else — the
+    mixture-weighting step of a training corpus. One
+    CASE-over-threshold filter, no shuffle; each stratum's sample is
+    independent of every other's (the salt includes the stratum, so
+    identical keys across strata decorrelate)."""
+    c = F.col("lang")
+    thr = F.lit(rate_to_hex_threshold(0.05))
+    for stratum, rate in sorted({"en": 0.6, "de": 0.25}.items()):
         thr = F.when(c == stratum, F.lit(rate_to_hex_threshold(rate))).otherwise(thr)
     prefix = F.substring(
         F.md5(
@@ -84,7 +93,7 @@ def stratified_sample(
                 F.lit("sample:"),
                 c.cast("string"),
                 F.lit(":"),
-                F.col(key_col).cast("string"),
+                F.col("doc_id").cast("string"),
             )
         ),
         1,
@@ -102,9 +111,9 @@ _U_DENOM = float(16 ** _U_HEX_DIGITS)
 _UNIFORM_SALT = "pps"
 
 
-def hash_uniform(key: str | Column) -> Column:
+def hash_uniform() -> Column:
     """Portable deterministic uniform in [0, 1): the first 12 hex
-    chars of ``md5(_UNIFORM_SALT || ':' || key)`` as a 48-bit integer over
+    chars of ``md5(_UNIFORM_SALT || ':' || doc_id)`` as a 48-bit integer over
     2^48. Content-stable (same key → same u forever) and exactly
     re-derivable outside Spark — DuckDB:
     ``CAST(concat('0x', substr(md5(...), 1, 12)) AS BIGINT) /
@@ -112,10 +121,9 @@ def hash_uniform(key: str | Column) -> Column:
     denominator a power of two, so the division itself is exact IEEE
     — no cross-engine rounding drift enters before the caller's own
     arithmetic."""
-    c = F.col(key) if isinstance(key, str) else key
     n = F.conv(
         F.substring(
-            F.md5(F.concat(F.lit(f"{_UNIFORM_SALT}:"), c.cast("string"))),
+            F.md5(F.concat(F.lit(f"{_UNIFORM_SALT}:"), F.col("doc_id").cast("string"))),
             1,
             _U_HEX_DIGITS,
         ),
@@ -125,14 +133,10 @@ def hash_uniform(key: str | Column) -> Column:
     return n / F.lit(_U_DENOM)
 
 
-def pps_sample(
-    df: DataFrame,
-    key_col: str,
-    weight_col: str,
-    expected_k: int,
-) -> DataFrame:
-    """Probability-proportional-to-size Bernoulli sample: row ``i``
-    is kept with ``p_i = min(1, k·w_i / Σw)``, giving an expected
+def pps_sample(df: DataFrame) -> DataFrame:
+    """Probability-proportional-to-size Bernoulli sample of ``doc_id``
+    rows weighted by ``n_chars``: row ``i`` is kept with ``p_i = min(1,
+    k·w_i / Σw)``, ``k = _PPS_EXPECTED_K``, giving an expected
     sample size of ~``k`` with long/high-weight rows preferred — the
     corpus-subsampling pattern when quality or length should bias
     selection (weighted by tokens, not uniform by doc). Adds
@@ -151,14 +155,14 @@ def pps_sample(
     # F.least(1.0, NULL) would return 1.0 — Spark's least SKIPS NULLs
     # — silently keeping every unknown-weight row at incl_p = 1.0 and
     # biasing any Horvitz-Thompson estimate built on the sample.
-    known = df.filter(F.col(weight_col).isNotNull())
-    w = F.col(weight_col).cast("double")
-    tot = known.agg(F.sum(weight_col).cast("double").alias("_tot"))
-    p = F.least(F.lit(1.0), F.lit(float(expected_k)) * w / F.col("_tot"))
+    known = df.filter(F.col("n_chars").isNotNull())
+    w = F.col("n_chars").cast("double")
+    tot = known.agg(F.sum("n_chars").cast("double").alias("_tot"))
+    p = F.least(F.lit(1.0), F.lit(float(_PPS_EXPECTED_K)) * w / F.col("_tot"))
     return (
         known.join(F.broadcast(tot))
         .withColumn("incl_p", p)
-        .filter(hash_uniform(key_col) < F.col("incl_p"))
+        .filter(hash_uniform() < F.col("incl_p"))
         .drop("_tot")
     )
 
@@ -193,10 +197,10 @@ def _group_weights_unrounded(
     )
 
 
-def mixture_weights(df: DataFrame, group_col: str, alpha: float = 0.7) -> DataFrame:
-    """Temperature-based mixture reweighting over a grouping column
-    (source, language): ``share_g = n_g / N``, ``weight_g ∝
-    share_g^alpha`` normalized to 1 — the exponential-smoothing
+def mixture_weights(df: DataFrame) -> DataFrame:
+    """Temperature-based mixture reweighting over ``source``:
+    ``share_g = n_g / N``, ``weight_g ∝ share_g^alpha`` (alpha =
+    ``_MIXTURE_ALPHA``) normalized to 1 — the exponential-smoothing
     up/down-sampling rule multilingual and multi-source pretraining
     mixtures use (alpha < 1 upsamples the tail, alpha = 1 keeps raw
     shares, alpha = 0 is uniform). Output per group: ``n_docs``,
@@ -208,9 +212,9 @@ def mixture_weights(df: DataFrame, group_col: str, alpha: float = 0.7) -> DataFr
     the corpus to |groups| rows; everything after is arithmetic over
     that answer-sized frame (two window sums over the |groups| rows,
     zero extra passes over the data)."""
-    s = _group_weights_unrounded(df, group_col, alpha, None, "n_docs")
+    s = _group_weights_unrounded(df, "source", _MIXTURE_ALPHA, None, "n_docs")
     return s.select(
-        group_col,
+        "source",
         "n_docs",
         F.round("_share", 6).alias("raw_share"),
         F.round(F.col("_pw") / F.col("_z"), 6).alias("weight"),
@@ -224,9 +228,9 @@ def mixture_weights(df: DataFrame, group_col: str, alpha: float = 0.7) -> DataFr
 _SHUFFLE_SHARDS = 256
 
 
-def shuffle_manifest(df: DataFrame, key_col: str) -> DataFrame:
+def shuffle_manifest(df: DataFrame) -> DataFrame:
     """Deterministic, content-stable GLOBAL training order: every row
-    gets a dense ``shuffle_rank`` (0-based) in md5 order of the key
+    gets a dense ``shuffle_rank`` (0-based) in md5 order of ``doc_id``
     salted with ``shuffle:`` — the reproducible corpus shuffle a
     training run consumes (same order forever, on any engine).
 
@@ -245,8 +249,8 @@ def shuffle_manifest(df: DataFrame, key_col: str) -> DataFrame:
     # rank: md5(concat(..NULL)) is NULL, the NULL shard sorts FIRST in
     # the offset window (inflating all real offsets by the NULL count)
     # while the equi-join back drops the NULL rows themselves.
-    df = df.filter(F.col(key_col).isNotNull())
-    c = F.col(key_col)
+    df = df.filter(F.col("doc_id").isNotNull())
+    c = F.col("doc_id")
     h = F.md5(F.concat(F.lit("shuffle:"), c.cast("string")))
     # MONOTONE bucketing of the first hash byte (floor-scaled, never
     # modulo): the global-order reconstruction REQUIRES shard id to be
@@ -256,7 +260,7 @@ def shuffle_manifest(df: DataFrame, key_col: str) -> DataFrame:
     byte = F.conv(F.substring(h, 1, 2), 16, 10).cast("int")
     shard = F.floor(byte * _SHUFFLE_SHARDS / F.lit(256)).cast("int")
     keyed = df.withColumn("_h", h).withColumn("_shard", shard)
-    w = Window.partitionBy("_shard").orderBy("_h", key_col)
+    w = Window.partitionBy("_shard").orderBy("_h", "doc_id")
     ranked = keyed.withColumn("_rk", F.row_number().over(w))
     counts = (
         keyed.groupBy("_shard")
@@ -286,16 +290,11 @@ def shuffle_manifest(df: DataFrame, key_col: str) -> DataFrame:
     )
 
 
-def token_budget_allocation(
-    df: DataFrame,
-    group_col: str,
-    token_col: str,
-    budget_tokens: int,
-    alpha: float = 0.7,
-) -> DataFrame:
-    """Training-mixture PLANNING table: given a total token budget and
-    the temperature-reweighted mixture (:func:`mixture_weights` on
-    TOKEN counts), how many tokens to draw from each source and what
+def token_budget_allocation(df: DataFrame) -> DataFrame:
+    """Training-mixture PLANNING table: given a total token budget
+    (``_TOKEN_BUDGET``) and the temperature-reweighted mixture
+    (:func:`mixture_weights` on ``n_chars`` TOKEN counts), how many
+    tokens to draw from each source and what
     sampling rate that implies — the artifact a data-mixture config
     is generated from. ``planned_tokens = budget · weight`` capped at
     the group's actual tokens (you cannot draw more than exists
@@ -308,7 +307,7 @@ def token_budget_allocation(
     recomputed inline) — flooring budget × an already-rounded weight
     would put the integer boundary within rounding distance and make
     ``planned_tokens`` engine-fragile."""
-    s = _group_weights_unrounded(df, group_col, alpha, token_col, "n_tokens")
+    s = _group_weights_unrounded(df, "source", _MIXTURE_ALPHA, "n_chars", "n_tokens")
     w = F.col("_pw") / F.col("_z")
     # association matches the oracle EXACTLY: (budget · pw) / z, never
     # budget · (pw/z) — the two rounding sequences can differ by an
@@ -316,10 +315,10 @@ def token_budget_allocation(
     # plan that lands near an integer
     planned = F.least(
         F.col("n_tokens").cast("double"),
-        F.lit(float(budget_tokens)) * F.col("_pw") / F.col("_z"),
+        F.lit(float(_TOKEN_BUDGET)) * F.col("_pw") / F.col("_z"),
     )
     return s.select(
-        group_col,
+        "source",
         "n_tokens",
         F.round("_share", 6).alias("raw_share"),
         F.round(w, 6).alias("weight"),
@@ -330,30 +329,25 @@ def token_budget_allocation(
     )
 
 
-def token_budget_repetition(
-    df: DataFrame,
-    group_col: str,
-    token_col: str,
-    budget_multiple: float,
-    alpha: float = 0.7,
-    max_epochs: float = 1.0,
-) -> DataFrame:
+def token_budget_repetition(df: DataFrame) -> DataFrame:
     """Data-constrained mixture planning (Muennighoff et al. 2023,
     arXiv:2305.16264): :func:`token_budget_allocation` extended with
-    a REPETITION ceiling for the over-budget regime. When the budget
-    asks a group for more tokens than it has, the plan may repeat the
-    group's data up to ``max_epochs`` passes (the paper's finding:
-    value decays gently to ~4 epochs, sharply after), so the per-group
-    cap becomes ``n_tokens · max_epochs`` instead of ``n_tokens``.
+    a REPETITION ceiling for the over-budget regime, over ``lang``
+    groups of ``n_chars`` tokens at mixture temperature 0.5. When the
+    budget asks a group for more tokens than it has, the plan may
+    repeat the group's data up to ``_REPETITION_MAX_EPOCHS`` passes
+    (the paper's finding: value decays gently to ~4 epochs, sharply
+    after), so the per-group cap becomes ``n_tokens · _REPETITION_MAX_EPOCHS``
+    instead of ``n_tokens``.
 
     ``epochs`` (planned/n_tokens, the repeat factor — ≤ 1 means
     subsampling, > 1 means repetition) and ``deficit_tokens`` (budget
     the ceiling left unplaced — what a rebalancer redistributes) make
-    the regime explicit. With ``max_epochs=1.0`` the plan is exactly
+    the regime explicit. With a ceiling of 1.0 epochs the plan is exactly
     token_budget_allocation's (property-pinned in
-    tests/test_graph_sampling.py:535).
+    tests/test_graph_sampling.py).
 
-    ``budget_multiple`` sizes the budget RELATIVE to the corpus
+    ``_REPETITION_BUDGET_MULTIPLE`` sizes the budget RELATIVE to the corpus
     (budget = multiple · Σ n_tokens) inside the plan itself — the
     over-budget regime then survives any scale factor without a
     driver-side total lookup; the ``_n`` total from the shared
@@ -364,16 +358,14 @@ def token_budget_repetition(
     ``(budget · pw) / z`` association preserved (never
     ``budget · (pw/z)``), and the FLOOR/LEAST operands keep the same
     expression shape the DuckDB oracle uses."""
-    if max_epochs <= 0:
-        raise ValueError("max_epochs must be positive")
-    s = _group_weights_unrounded(df, group_col, alpha, token_col, "n_tokens")
+    s = _group_weights_unrounded(df, "lang", 0.5, "n_chars", "n_tokens")
     target = (
-        F.lit(float(budget_multiple)) * F.col("_n") * F.col("_pw")
+        F.lit(float(_REPETITION_BUDGET_MULTIPLE)) * F.col("_n") * F.col("_pw")
     ) / F.col("_z")
-    cap = F.col("n_tokens").cast("double") * F.lit(float(max_epochs))
+    cap = F.col("n_tokens").cast("double") * F.lit(float(_REPETITION_MAX_EPOCHS))
     planned = F.least(cap, target)
     return s.select(
-        group_col,
+        "lang",
         "n_tokens",
         F.round("_share", 6).alias("raw_share"),
         F.round(F.col("_pw") / F.col("_z"), 6).alias("weight"),
@@ -388,9 +380,7 @@ def token_budget_repetition(
     )
 
 
-def leakage_safe_split(
-    docs: DataFrame, clusters: DataFrame, fractions: dict[str, float]
-) -> DataFrame:
+def leakage_safe_split(docs: DataFrame, clusters: DataFrame) -> DataFrame:
     """Near-dup-leakage-safe train/val/test split (round-16-ready):
     assign every document by the md5 band of its NEAR-DUP CLUSTER id
     (:func:`hash_split` keyed on the cluster representative instead
@@ -416,5 +406,5 @@ def leakage_safe_split(
         "_leak_cluster", F.coalesce(F.col("_leak_cluster"), F.col("doc_id"))
     )
     return joined.withColumn(
-        "split", hash_split(F.col("_leak_cluster"), fractions)
+        "split", hash_split(F.col("_leak_cluster"))
     ).withColumnRenamed("_leak_cluster", "cluster")

@@ -95,12 +95,22 @@ def brute_force_top_k(
 # ---------------------------------------------------------------------------
 
 
-def _hyperplanes(dim: int, n_bits: int, seed: int) -> list[list[float]]:
+# sign-LSH of embedding_near_duplicates: 6 tables of 10 random
+# hyperplanes each, table t drawn from seed 42 + 1000·t
+_HYPERPLANE_TABLES = 6
+_HYPERPLANE_BITS = 10
+_HYPERPLANE_SEED = 42
+
+# cosine similarity at and above which two embeddings are duplicates
+_SEMANTIC_THRESHOLD = 0.98
+
+
+def _hyperplanes(dim: int, seed: int) -> list[list[float]]:
     rng = random.Random(seed)
-    return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_bits)]
+    return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(_HYPERPLANE_BITS)]
 
 
-def hyperplane_buckets_udf(n_tables: int, n_bits: int, dim: int, seed: int):
+def hyperplane_buckets_udf(dim: int):
     """All LSH tables' buckets in one Arrow-batched matmul.
 
     Higher-order-function dot products are interpreted row-by-row by
@@ -111,8 +121,9 @@ def hyperplane_buckets_udf(n_tables: int, n_bits: int, dim: int, seed: int):
     """
     import numpy as np
 
+    n_tables, n_bits = _HYPERPLANE_TABLES, _HYPERPLANE_BITS
     mat = np.array(
-        [p for t in range(n_tables) for p in _hyperplanes(dim, n_bits, seed + 1000 * t)],
+        [p for t in range(n_tables) for p in _hyperplanes(dim, _HYPERPLANE_SEED + 1000 * t)],
         dtype=np.float64,
     )  # (n_tables*n_bits, dim)
     weights = (1 << np.arange(n_bits, dtype=np.int64))
@@ -130,22 +141,21 @@ def hyperplane_buckets_udf(n_tables: int, n_bits: int, dim: int, seed: int):
     return buckets
 
 
-def _bucketed(df: DataFrame, vec_col: str, n_tables: int, n_bits: int, dim: int, seed: int) -> DataFrame:
-    """Attach (table idx, bucket id) rows: one posexplode over the
-    per-vector bucket array → single join key for all tables."""
-    b = hyperplane_buckets_udf(n_tables, n_bits, dim, seed)
+def _bucketed(df: DataFrame, dim: int) -> DataFrame:
+    """Attach (table idx, bucket id) rows of the ``_v`` vectors: one
+    posexplode over the per-vector bucket array → single join key for
+    all tables."""
+    b = hyperplane_buckets_udf(dim)
     # the Arrow-batched matmul is the hot loop — spread a coarse scan
     # across cores before shipping batches to the Python workers
     return ensure_min_partitions(df).select(
-        "*", F.posexplode(b(F.col(vec_col))).alias("_table", "_bucket")
+        "*", F.posexplode(b(F.col("_v"))).alias("_table", "_bucket")
     )
 
 
-def embedding_near_duplicates(
-    corpus: DataFrame,
-    threshold: float = 0.95,
-) -> DataFrame:
-    """Embedding-cosine near-dup pairs (id_a < id_b, cosine ≥ τ) via
+def embedding_near_duplicates(corpus: DataFrame) -> DataFrame:
+    """Embedding-cosine near-dup pairs (id_a < id_b, cosine ≥
+    ``_SEMANTIC_THRESHOLD``) via
     sign-LSH candidate buckets (6 tables of 10 hyperplanes, seed 42)
     + exact verification — the embedding-space analogue of MinHash
     near-dup."""
@@ -165,7 +175,7 @@ def embedding_near_duplicates(
     # it, and without the barrier each side re-runs the Arrow-batched
     # hyperplane matmul (6 rows per vector — linear in corpus)
     b = checkpoint(
-        _bucketed(base, "_v", 6, 10, dim, 42),
+        _bucketed(base, dim),
         "similarity.embedding_near_duplicates.buckets",
     )
     l, r = b.alias("l"), b.alias("r")
@@ -200,7 +210,7 @@ def embedding_near_duplicates(
                 6,
             ).alias("cosine_sim"),
         )
-        .filter(F.col("cosine_sim") >= threshold)
+        .filter(F.col("cosine_sim") >= _SEMANTIC_THRESHOLD)
     )
 
 
@@ -283,7 +293,6 @@ def assign_to_centroids_udf(centroids: DataFrame):
 def semantic_dedup(
     corpus: DataFrame,
     centroids: DataFrame,
-    threshold: float = 0.95,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): route every vector into a coarse-quantizer
@@ -374,7 +383,7 @@ def semantic_dedup(
                     < F.struct(scored["centroid_sim"], scored["_id"])
                 ),
                 F.round(dot(F.col("_ua"), F.col("_u")), 6)
-                >= F.lit(float(threshold)),
+                >= F.lit(float(_SEMANTIC_THRESHOLD)),
             ],
             how="left",
         )
@@ -392,7 +401,6 @@ def semantic_dedup(
 def semantic_dedup_gated(
     corpus: DataFrame,
     centroids: DataFrame,
-    threshold: float = 0.95,
 ) -> DataFrame:
     """GATE-aware SemDeDup (round-15-ready) — :func:`semantic_dedup`
     with the keep rule :func:`dedup.gated_cluster_representatives`
@@ -465,7 +473,7 @@ def semantic_dedup_gated(
                     scored["_p"], scored["centroid_sim"], scored["_id"]
                 ),
                 F.round(dot(F.col("_ua"), F.col("_u")), 6)
-                >= F.lit(float(threshold)),
+                >= F.lit(float(_SEMANTIC_THRESHOLD)),
             ],
             how="left",
         )
@@ -490,7 +498,6 @@ def semantic_dedup_incremental(
     standing: DataFrame,
     new_vecs: DataFrame,
     centroids: DataFrame,
-    threshold: float = 0.95,
 ) -> DataFrame:
     """INCREMENTAL SemDeDup — the embeddings daily-drop policy
     (round-16-ready; completes the incremental triple with
@@ -588,7 +595,7 @@ def semantic_dedup_incremental(
                     < F.struct(n["centroid_sim"], n["_id"])
                 ),
                 F.round(dot(F.col("_ua"), F.col("_u")), 6)
-                >= F.lit(float(threshold)),
+                >= F.lit(float(_SEMANTIC_THRESHOLD)),
             ],
             how="left",
         )

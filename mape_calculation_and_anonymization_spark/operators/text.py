@@ -38,6 +38,22 @@ _MAX_SOURCES_PER_SHINGLE = 16
 # vocab_coverage_curve's candidate vocabulary sizes
 _COVERAGE_KS = (100, 1000, 10000)
 
+# chunk_documents' chunk length and overlap, in tokens
+_CHUNK_TOKENS = 32
+_CHUNK_OVERLAP = 8
+
+# pack_sequences' sequence length in tokens and its doc-id shard width
+_PACK_BUDGET = 512
+_PACK_SHARD_SIZE = 256
+
+# source_overlap_matrix's shingle width in tokens
+_OVERLAP_N = 8
+
+# near-dup decontamination (contamination_near_dup, decontaminate_corpus):
+# word 3-gram sets, flagged at Jaccard >= 0.5
+_NEAR_DUP_N = 3
+_NEAR_DUP_THRESHOLD = 0.5
+
 
 def _tokens(col: Column) -> Column:
     return F.split(F.trim(F.lower(col)), r"\s+")
@@ -51,10 +67,10 @@ def token_count(col: str | Column) -> Column:
     )
 
 
-def bpeish_token_count(col: str | Column) -> Column:
-    """BPE-ish pre-token count: word runs + individual punctuation."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.size(F.regexp_extract_all(c, F.lit(BPEISH_PATTERN), 0))
+def bpeish_token_count() -> Column:
+    """BPE-ish pre-token count of ``text``: word runs + individual
+    punctuation."""
+    return F.size(F.regexp_extract_all(F.col("text"), F.lit(BPEISH_PATTERN), 0))
 
 
 def punct_ratio(col: str | Column) -> Column:
@@ -112,15 +128,15 @@ def stopword_hits(col: str | Column, lang: str) -> Column:
     return F.size(F.filter(_tokens(c), lambda t: F.array_contains(sw, t)))
 
 
-def language_id(col: str | Column) -> Column:
-    """Heuristic language ID: argmax of per-language stopword hits
+def language_id() -> Column:
+    """Heuristic language ID of ``text``: argmax of per-language stopword hits
     (first max wins; zero hits everywhere → 'und'; NULL text → NULL
     — without the explicit isNull branch the all-NULL score array
     fell through when(NULL <= 0)'s NULL condition into otherwise()
     and mislabeled NULL docs as the LAST language (ADVICE r9 found
     the bulk/per-row divergence; the per-row arm was the buggy one,
     matching neither the oracle's NULL nor anything sensible)."""
-    c = F.col(col) if isinstance(col, str) else col
+    c = F.col("text")
     scores = F.array(*[stopword_hits(c, lang) for lang in STOPWORDS])
     best = F.array_max(scores)
     idx = F.array_position(scores, best)  # 1-based, first occurrence
@@ -132,7 +148,7 @@ def language_id(col: str | Column) -> Column:
     )
 
 
-def language_id_bulk(df, text_col: str, id_cols: list[str]):
+def language_id_bulk(df):
     """Corpus-scale :func:`language_id`: identical VALUES, explode +
     broadcast-join + argmax shape instead of per-row higher-order
     functions.
@@ -151,7 +167,8 @@ def language_id_bulk(df, text_col: str, id_cols: list[str]):
     Docs with zero stopword hits never reach the join output and come
     back 'und' through the left join — the ``best <= 0`` branch.
     Equality with the per-row expression is pinned in
-    tests/test_text.py.
+    tests/test_text.py. Output: the (doc_id, text, ...) input plus
+    ``predicted``.
 
     Scale: one stateless explode, one broadcast (the dim is
     |langs|×|stopwords| ≈ 50 rows), two hash aggregates keyed by doc
@@ -165,15 +182,13 @@ def language_id_bulk(df, text_col: str, id_cols: list[str]):
     dim = spark.createDataFrame(
         dim_rows, "lang_idx int, lang string, word string"
     )
-    toks = df.select(
-        *id_cols, F.explode(_tokens(F.col(text_col))).alias("word")
-    )
+    toks = df.select("doc_id", F.explode(_tokens(F.col("text"))).alias("word"))
     per_lang = (
         toks.join(F.broadcast(dim), "word")
-        .groupBy(*id_cols, "lang_idx", "lang")
+        .groupBy("doc_id", "lang_idx", "lang")
         .agg(F.count(F.lit(1)).alias("_hits"))
     )
-    best = per_lang.groupBy(*id_cols).agg(
+    best = per_lang.groupBy("doc_id").agg(
         F.max(
             F.struct(
                 F.col("_hits"),
@@ -187,21 +202,18 @@ def language_id_bulk(df, text_col: str, id_cols: list[str]):
     # so an unconditional coalesce would label them 'und' here while
     # the per-row path yields NULL — only docs with actual text fall
     # back to the unknown bucket.
-    return df.join(best, on=id_cols, how="left").withColumn(
+    return df.join(best, on=["doc_id"], how="left").withColumn(
         "predicted",
-        F.when(
-            F.col(text_col).isNotNull(), F.coalesce("predicted", F.lit("und"))
-        ),
+        F.when(F.col("text").isNotNull(), F.coalesce("predicted", F.lit("und"))),
     )
 
 
-def fingerprint(col: str | Column) -> Column:
-    """Polynomial rolling hash over the character stream:
+def fingerprint() -> Column:
+    """Polynomial rolling hash over the character stream of ``text``:
     ``acc = (acc*31 + ascii(ch)) % _FP_PRIME`` — a stable document
     fingerprint reproducible in any engine (same arithmetic, no
     overflow: acc < 2³¹ so acc·31+c < 2³⁶)."""
-    c = F.col(col) if isinstance(col, str) else col
-    chars = F.filter(F.split(c, ""), lambda ch: F.length(ch) > 0)
+    chars = F.filter(F.split(F.col("text"), ""), lambda ch: F.length(ch) > 0)
     codes = F.transform(chars, lambda ch: F.ascii(ch))
     return F.aggregate(
         codes,
@@ -226,12 +238,12 @@ PII_PATTERNS: list[tuple[str, str]] = [
 ]
 
 
-def redact_pii(col: str | Column) -> Column:
-    """Regex PII scrub (emails, SSNs, IPv4s, US-style phone numbers)
+def redact_pii() -> Column:
+    """Regex PII scrub of ``dirty`` (emails, SSNs, IPv4s, US-style phone numbers)
     — a chained regexp_replace projection, shuffle-free and
     whole-stage-codegen'd. The pattern list is the module constant so
     the oracle SQL is generated from the same source of truth."""
-    c = F.col(col) if isinstance(col, str) else col
+    c = F.col("dirty")
     for pat, repl in PII_PATTERNS:
         c = F.regexp_replace(c, pat, repl)
     return c
@@ -256,26 +268,23 @@ def ngram_repetition_ratio(col: str | Column) -> Column:
     )
 
 
-def chunk_documents(
-    df, id_col: str, text_col: str, chunk_tokens: int = 64, overlap: int = 16
-):
-    """Split documents into fixed-token-budget chunks with overlap —
-    the training-sequence preparation step. One posexplode projection
-    per input row (no shuffle); chunk_idx is deterministic.
+def chunk_documents(df):
+    """Split ``(doc_id, text)`` documents into ``_CHUNK_TOKENS``-token
+    chunks that overlap by ``_CHUNK_OVERLAP`` tokens — the
+    training-sequence preparation step. One posexplode projection per
+    input row (no shuffle); chunk_idx is deterministic.
 
-    Output: (id_col, chunk_idx, chunk_text, n_tokens)."""
-    if overlap >= chunk_tokens:
-        raise ValueError("overlap must be smaller than chunk_tokens")
-    step = chunk_tokens - overlap
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    Output: (doc_id, chunk_idx, chunk_text, n_tokens)."""
+    step = _CHUNK_TOKENS - _CHUNK_OVERLAP
+    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     starts = F.sequence(
         F.lit(0), F.greatest(F.size(toks) - F.lit(1), F.lit(0)), F.lit(step)
     )
     chunks = F.transform(
-        starts, lambda s: F.array_join(F.slice(toks, s + 1, chunk_tokens), " ")
+        starts, lambda s: F.array_join(F.slice(toks, s + 1, _CHUNK_TOKENS), " ")
     )
     out = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(chunks).alias("chunk_idx", "chunk_text"),
     )
     return out.withColumn(
@@ -286,10 +295,10 @@ def chunk_documents(
     )
 
 
-def ngram_repetition_stats(df, id_col: str, text_col: str, n: int = 3):
+def ngram_repetition_stats(df):
     """Corpus-scale form of :func:`ngram_repetition_ratio`: explode the
-    n-grams and hash-aggregate count vs distinct-count per document,
-    then join back (docs shorter than ``n`` tokens score 0).
+    word 3-grams of ``text`` and hash-aggregate count vs distinct-count
+    per ``doc_id``, then join back (docs shorter than 3 tokens score 0).
 
     The inline column form builds the gram list with interpreted
     higher-order functions and re-evaluates it per consuming
@@ -297,10 +306,11 @@ def ngram_repetition_stats(df, id_col: str, text_col: str, n: int = 3):
     codegen'd aggregation with map-side partials — the same
     inline-vs-explode duality as minhash_signature/minhash_signatures.
 
-    Output: (id_col, rep{n}: double)."""
+    Output: (doc_id, rep3: double)."""
     from .rebalance import ensure_min_partitions
 
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    n = 3
+    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
 
     # n−1 chained zip_with ops over shifted slices (one array walk per
     # zip) — the transform(sequence(...), i -> slice) form re-slices
@@ -318,40 +328,41 @@ def ngram_repetition_stats(df, id_col: str, text_col: str, n: int = 3):
         return g
 
     exploded = (
-        ensure_min_partitions(df).select(F.col(id_col), toks.alias("_toks"))
+        ensure_min_partitions(df).select(F.col("doc_id"), toks.alias("_toks"))
         .filter(F.size("_toks") >= n)
-        .select(id_col, F.explode(_grams(F.col("_toks"))).alias("_gram"))
+        .select("doc_id", F.explode(_grams(F.col("_toks"))).alias("_gram"))
     )
-    agg = exploded.groupBy(id_col).agg(
+    agg = exploded.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("_total"),
         F.countDistinct("_gram").alias("_distinct"),
     )
     return (
-        df.select(id_col)
-        .join(agg, on=id_col, how="left")
+        df.select("doc_id")
+        .join(agg, on="doc_id", how="left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.coalesce(
                 F.lit(1.0) - F.col("_distinct").cast("double") / F.col("_total"),
                 F.lit(0.0),
-            ).alias(f"rep{n}"),
+            ).alias("rep3"),
         )
     )
 
 
-def pack_sequences(docs, budget: int = 512, shard_size: int = 256):
+def pack_sequences(docs):
     """Concatenate-and-chunk sequence packing: assign every document to
-    the training sequence (of ``budget`` tokens) in which its first
+    the training sequence (of ``_PACK_BUDGET`` tokens) in which its first
     token lands when the corpus is laid out as one id-ordered token
     stream — the GPT-style packing layout where documents may cross
     sequence boundaries.
 
     The global prefix sum is computed DISTRIBUTED, never through a
     single-partition window: a within-shard cumulative sum (window
-    partitioned by ``id div shard_size`` — parallel across shards)
-    plus a cumulative offset over the per-shard totals (a frame of
-    n_docs/shard_size rows, the only global-ordered window — at 100 TB
-    with shard_size tuned up, millions of rows, not the corpus).
+    partitioned by ``id div _PACK_SHARD_SIZE`` — parallel across
+    shards) plus a cumulative offset over the per-shard totals (a frame
+    of n_docs/_PACK_SHARD_SIZE rows, the only global-ordered window — at
+    100 TB with the shard width tuned up, millions of rows, not the
+    corpus).
 
     Output: (doc_id, n_tokens, seq_id).
     """
@@ -360,7 +371,7 @@ def pack_sequences(docs, budget: int = 512, shard_size: int = 256):
     with_counts = docs.select(
         F.col("doc_id"),
         token_count("text").alias("n_tokens"),
-        F.floor(F.col("doc_id") / F.lit(shard_size)).alias("_shard"),
+        F.floor(F.col("doc_id") / F.lit(_PACK_SHARD_SIZE)).alias("_shard"),
     )
     w_local = (
         Window.partitionBy("_shard")
@@ -386,15 +397,15 @@ def pack_sequences(docs, budget: int = 512, shard_size: int = 256):
             "doc_id",
             "n_tokens",
             F.floor(
-                (F.col("_shard_off") + F.col("_local_off")) / F.lit(budget)
+                (F.col("_shard_off") + F.col("_local_off")) / F.lit(_PACK_BUDGET)
             ).alias("seq_id"),
         )
     )
 
 
-def contamination_check(train, bench, n: int = 8):
+def contamination_check(train, bench):
     """Benchmark-contamination scan: training documents sharing at
-    least one distinct word ``n``-gram with any benchmark document,
+    least one distinct word 8-gram with any benchmark document,
     with the count of shared distinct n-grams.
 
     The benchmark shingle set is eval-suite-sized (thousands of docs,
@@ -409,10 +420,10 @@ def contamination_check(train, bench, n: int = 8):
     from .rebalance import ensure_min_partitions
 
     t = ensure_min_partitions(train).select(
-        F.col("doc_id"), F.explode(word_ngrams("text", n=n)).alias("_shingle")
+        F.col("doc_id"), F.explode(word_ngrams(8)).alias("_shingle")
     )
     b = (
-        bench.select(F.explode(word_ngrams("text", n=n)).alias("_shingle"))
+        bench.select(F.explode(word_ngrams(8)).alias("_shingle"))
         .distinct()
     )
     return (
@@ -422,8 +433,8 @@ def contamination_check(train, bench, n: int = 8):
     )
 
 
-def normalize_text(col: str | Column) -> Column:
-    """Canonical text form for normalization-aware dedup: lowercase,
+def normalize_text() -> Column:
+    """Canonical form of ``text`` for normalization-aware dedup: lowercase,
     every run of non-letter/non-digit characters collapsed to one
     space, trimmed. Two documents differing only in case, punctuation,
     or whitespace layout normalize to identical strings. The character
@@ -431,18 +442,17 @@ def normalize_text(col: str | Column) -> Column:
     regex and RE2): an ASCII-only class would delete every CJK/accented
     character and collapse whole non-Latin corpora into one giant
     false "duplicate" group. Pure column expression (codegen)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.trim(F.regexp_replace(F.lower(c), r"[^\p{L}\p{N}]+", " "))
+    return F.trim(F.regexp_replace(F.lower(F.col("text")), r"[^\p{L}\p{N}]+", " "))
 
 
-def word_bigrams(col: str | Column) -> Column:
-    """Adjacent lowercase word pairs ("a b") as an array — the n=2
+def word_bigrams() -> Column:
+    """Adjacent lowercase word pairs ("a b") of ``text`` as an array — the n=2
     slice of the n-gram family, kept as a dedicated helper because
     bigram frequency is the workhorse of corpus-quality dashboards.
     Documents with fewer than two tokens yield an empty array (the
     sequence() guard matters: Spark's sequence(1, 0) counts DOWN, it
     is not empty)."""
-    c = F.col(col) if isinstance(col, str) else col
+    c = F.col("text")
     w = F.split(F.trim(c), r"\s+")
     # zip_with over two shifted slices walks the array once; the
     # index-based alternative (transform(sequence(1, n-1), i ->
@@ -527,10 +537,10 @@ def quality_gate_funnel(docs: DataFrame) -> DataFrame:
     )
 
 
-def ngram_novelty(docs: DataFrame, n: int = 5) -> DataFrame:
-    """Per-document n-gram NOVELTY against everything that came
+def ngram_novelty(docs: DataFrame) -> DataFrame:
+    """Per-document 5-gram NOVELTY against everything that came
     before it (by ascending id — ingestion order): the fraction of
-    the doc's distinct n-token shingles whose FIRST corpus occurrence
+    the doc's distinct 5-token shingles whose FIRST corpus occurrence
     is this doc. The forward-looking complement of the duplicated-
     span statistic: dup_spans asks "how much of this doc appears
     elsewhere", novelty asks "how much NEW text does this doc
@@ -562,7 +572,7 @@ def ngram_novelty(docs: DataFrame, n: int = 5) -> DataFrame:
     )
 
     sh = docs.filter(F.col("text").isNotNull()).select(
-        F.col("doc_id"), F.explode(word_ngrams("text", n=n)).alias("_sh")
+        F.col("doc_id"), F.explode(word_ngrams(5)).alias("_sh")
     )
     totals = sh.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_distinct_shingles")
@@ -585,16 +595,11 @@ def ngram_novelty(docs: DataFrame, n: int = 5) -> DataFrame:
     )
 
 
-def contamination_near_dup(
-    train: DataFrame,
-    benchmark: DataFrame,
-    n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
+def contamination_near_dup(train: DataFrame, benchmark: DataFrame) -> DataFrame:
     """NEAR-DUP benchmark decontamination — the fuzzy sequel to
     :func:`contamination_check` (which flags ANY shared shingle):
-    training docs whose word-``n``-gram set Jaccard against some
-    benchmark doc reaches ``threshold`` — the lightly-paraphrased /
+    training docs whose word-``_NEAR_DUP_N``-gram set Jaccard against
+    some benchmark doc reaches ``_NEAR_DUP_THRESHOLD`` — the lightly-paraphrased /
     reformatted leakage an any-shared-shingle test over-flags and a
     whole-doc exact match misses. One row per contaminated
     (train, benchmark) pair with the EXACT similarity.
@@ -616,7 +621,7 @@ def contamination_near_dup(
     def shingled(df: DataFrame, alias: str) -> DataFrame:
         return df.filter(F.col("text").isNotNull()).select(
             F.col("doc_id").alias(alias),
-            F.explode(word_ngrams("text", n=n)).alias("_g"),
+            F.explode(word_ngrams(_NEAR_DUP_N)).alias("_g"),
         )
 
     # The train shingle stream feeds BOTH the size aggregate and the
@@ -643,7 +648,7 @@ def contamination_near_dup(
     return (
         inter.join(tr_sizes, "train_id")
         .join(F.broadcast(be_sizes), "bench_id")
-        .filter(jac >= F.lit(threshold))
+        .filter(jac >= F.lit(_NEAR_DUP_THRESHOLD))
         .select(
             "train_id",
             "bench_id",
@@ -652,9 +657,9 @@ def contamination_near_dup(
     )
 
 
-def source_overlap_matrix(docs: DataFrame, n: int = 8) -> DataFrame:
+def source_overlap_matrix(docs: DataFrame) -> DataFrame:
     """Cross-source BOILERPLATE-FLOW matrix: for every source pair,
-    how many distinct ``n``-token shingles appear in BOTH — the
+    how many distinct ``_OVERLAP_N``-token shingles appear in BOTH — the
     provenance-leakage diagnostic a corpus curator reads before
     trusting per-source dedup or mixture weights (two "independent"
     sources sharing thousands of 8-gram shingles are mirroring the
@@ -705,7 +710,7 @@ def source_overlap_matrix(docs: DataFrame, n: int = 8) -> DataFrame:
         docs.filter(F.col("text").isNotNull())
         .select(
             F.col("source").alias("_src"),
-            F.explode(word_ngrams("text", n=n)).alias("_g"),
+            F.explode(word_ngrams(_OVERLAP_N)).alias("_g"),
         )
         .groupBy("_g")
         .agg(F.sort_array(F.collect_set("_src")).alias("_srcs"))
@@ -880,12 +885,7 @@ def corpus_datacard(df):
     )
 
 
-def decontaminate_corpus(
-    train: DataFrame,
-    benchmark: DataFrame,
-    n: int = 3,
-    drop_threshold: float = 0.5,
-) -> DataFrame:
+def decontaminate_corpus(train: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Decontamination as REMOVAL (round 14; VERDICT r13 item 4a) —
     the operator a pipeline actually runs after the flagging passes:
     emit the cleaned training corpus, not just the contamination
@@ -895,11 +895,11 @@ def decontaminate_corpus(
     against the BENCHMARK shingle set instead of the corpus's own
     duplicated shingles:
 
-      * a train doc whose word-``n``-gram Jaccard against some
-        benchmark doc reaches ``drop_threshold`` is DROPPED whole
+      * a train doc whose word-``_NEAR_DUP_N``-gram Jaccard against
+        some benchmark doc reaches ``_NEAR_DUP_THRESHOLD`` is DROPPED whole
         (paraphrased leakage — no span cut can save it);
       * every other train doc has each token position covered by a
-        benchmark-matching ``n``-gram CUT (the Lee-et-al-style
+        benchmark-matching ``_NEAR_DUP_N``-gram CUT (the Lee-et-al-style
         remove-span plan, but exact-match against the benchmark set
         — recall 1.0 on verbatim leakage by construction);
       * untouched docs pass through as ``kept``.
@@ -916,7 +916,7 @@ def decontaminate_corpus(
     through a compare; NULL for dropped docs.
 
     Scale shape: the benchmark side BROADCASTS twice (the Jaccard
-    probe and the distinct strict-``n``-gram set — benchmark suites
+    probe and the distinct strict-``_NEAR_DUP_N``-gram set — benchmark suites
     are dimension-sized next to a 100 TB corpus); the span pass is
     one positional-shingle stream hash-joining that broadcast
     (linear in train tokens, output bounded by matches), the covered
@@ -929,7 +929,7 @@ def decontaminate_corpus(
 
     Note the two passes deliberately differ on short docs: the
     Jaccard probe uses :func:`dedup.word_ngrams` (docs shorter than
-    ``n`` tokens contribute their whole text as one gram — short
+    ``_NEAR_DUP_N`` tokens contribute their whole text as one gram — short
     benchmark docs can still trigger drops), while the span pass
     uses strict ``n``-token positional grams (a cut shorter than the
     shingle would be meaningless).
@@ -938,10 +938,9 @@ def decontaminate_corpus(
         word_ngrams,  # noqa: F401  (doc-level probe via contamination_near_dup)
     )
 
+    n = _NEAR_DUP_N
     dropped_ids = (
-        contamination_near_dup(
-            train, benchmark, n, drop_threshold
-        )
+        contamination_near_dup(train, benchmark)
         .select(F.col("train_id").alias("doc_id"))
         .distinct()
     )

@@ -58,12 +58,9 @@ def fill_hourly_gaps(hourly: DataFrame) -> DataFrame:
 
 def forecast_accuracy(
     df: DataFrame,
-    key_cols: list[str],
-    forecast_col: str = "forecast",
-    actual_col: str = "actual",
-    order_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Forecast-accuracy suite per key: the metrics a forecasting team
+    """Forecast-accuracy suite per ``zone`` of its ``forecast`` and
+    ``actual`` columns: the metrics a forecasting team
     publishes NEXT TO the reference's WAPE (operators/mape.py keeps the
     reference's sum-then-divide WAPE; this extends the scorecard):
 
@@ -78,14 +75,14 @@ def forecast_accuracy(
       * mase    — MAE scaled by the naive lag-1 forecast's MAE
                   (Hyndman & Koehler, "Another look at measures of
                   forecast accuracy", IJF 2006): < 1 beats persistence.
-                  Requires ``order_cols`` (the series order within each
-                  key); omitted → mase column is omitted.
+                  The series order within a zone is (``proxy_date``,
+                  ``hour``).
 
     One hash aggregate over the series; MASE adds a lag window
     partitioned by key (parallel across series, no global sort).
     Every expression stays inside whole-stage codegen.
     """
-    f, a = F.col(forecast_col), F.col(actual_col)
+    f, a = F.col("forecast"), F.col("actual")
     err = f - a
     ae = F.abs(err)
     denom = F.abs(f) + F.abs(a)
@@ -99,13 +96,8 @@ def forecast_accuracy(
         F.try_divide(F.sum(ae), F.sum(F.abs(a))).alias("wape"),
         F.avg(err).alias("bias"),
     ]
-    if order_cols:
-        w = Window.partitionBy(*key_cols).orderBy(*order_cols)
-        work = work.withColumn("_naive", F.lag(actual_col).over(w))
-        naive_ae = F.when(
-            F.col("_naive").isNotNull(), F.abs(a - F.col("_naive"))
-        )
-        aggs.append(
-            F.try_divide(F.avg(ae), F.avg(naive_ae)).alias("mase")
-        )
-    return work.groupBy(*key_cols).agg(*aggs)
+    w = Window.partitionBy("zone").orderBy("proxy_date", "hour")
+    work = work.withColumn("_naive", F.lag("actual").over(w))
+    naive_ae = F.when(F.col("_naive").isNotNull(), F.abs(a - F.col("_naive")))
+    aggs.append(F.try_divide(F.avg(ae), F.avg(naive_ae)).alias("mase"))
+    return work.groupBy("zone").agg(*aggs)

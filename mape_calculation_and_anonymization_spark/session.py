@@ -172,12 +172,12 @@ def _java() -> str | None:
     return os.path.realpath(java) if java else None
 
 
-def _private_root(root: str) -> bool:
-    """Create ``root`` (mode 0700) if missing; True only if it is a real
-    directory of this user that no one else can write to, so no other user
-    can plant an archive in it or a symlink where a candidate will go."""
-    os.makedirs(root, mode=0o700, exist_ok=True)
-    st = os.lstat(root)
+def _private_root() -> bool:
+    """Create ``_CDS_ROOT`` (mode 0700) if missing; True only if it is a
+    real directory of this user that no one else can write to, so no other
+    user can plant an archive in it or a symlink where a candidate will go."""
+    os.makedirs(_CDS_ROOT, mode=0o700, exist_ok=True)
+    st = os.lstat(_CDS_ROOT)
     return (
         stat.S_ISDIR(st.st_mode)
         and st.st_uid == os.getuid()
@@ -217,18 +217,18 @@ def _pid_alive(pid: int) -> bool:
     return True
 
 
-def _publish_cds(root: str, key: str, java: str, classpath: str, driver_mem: str) -> str:
-    """Publish a verified candidate of ``key`` and prune ``root``; return
-    the path of ``<key>.jsa`` (which may not exist).
+def _publish_cds(key: str, java: str, classpath: str, driver_mem: str) -> str:
+    """Publish a verified candidate of ``key`` and prune ``_CDS_ROOT``;
+    return the path of ``<key>.jsa`` (which may not exist).
 
     A candidate ``<key>.jsa.<pid>`` whose writer is alive is left alone.
     A dead writer's candidate is probed only while no ``<key>.jsa``
     exists; it is renamed if the probe exits 0 and deleted otherwise.
     Every file of another key is deleted."""
-    archive = os.path.join(root, f"{key}.jsa")
-    for name in os.listdir(root):
+    archive = os.path.join(_CDS_ROOT, f"{key}.jsa")
+    for name in os.listdir(_CDS_ROOT):
         stem, jsa, suffix = name.partition(".jsa")
-        path = os.path.join(root, name)
+        path = os.path.join(_CDS_ROOT, name)
         if not jsa or path == archive:
             continue
         writer = suffix[1:]
@@ -282,14 +282,14 @@ def _cds_plan(driver_mem: str, extra_conf: dict[str, str]) -> _CdsPlan | None:
             n.endswith(".template") for n in os.listdir(conf_dir)
         ):
             return None  # user config: never drop it
-        if not _private_root(_CDS_ROOT):
+        if not _private_root():
             return None
         key = _cds_key(java, spark_home)
         os.makedirs(empty_conf, mode=0o700, exist_ok=True)
         if os.listdir(empty_conf):
             return None
         classpath = _cds_classpath(empty_conf, spark_home)
-        archive = _publish_cds(_CDS_ROOT, key, java, classpath, driver_mem)
+        archive = _publish_cds(key, java, classpath, driver_mem)
     except (OSError, subprocess.SubprocessError):
         return None
     if os.path.exists(archive):
@@ -298,19 +298,19 @@ def _cds_plan(driver_mem: str, extra_conf: dict[str, str]) -> _CdsPlan | None:
 
 
 @contextlib.contextmanager
-def _env(name: str, value: str | None):
-    """Set (or leave, if ``value`` is None) one environment variable."""
-    old = os.environ.get(name)
+def _conf_dir_env(value: str | None):
+    """Set (or leave, if ``value`` is None) ``SPARK_CONF_DIR``."""
+    old = os.environ.get("SPARK_CONF_DIR")
     if value is not None:
-        os.environ[name] = value
+        os.environ["SPARK_CONF_DIR"] = value
     try:
         yield
     finally:
         if value is not None:
             if old is None:
-                del os.environ[name]
+                del os.environ["SPARK_CONF_DIR"]
             else:
-                os.environ[name] = old
+                os.environ["SPARK_CONF_DIR"] = old
 
 
 def _await_dump(proc: subprocess.Popen) -> None:
@@ -387,7 +387,7 @@ def get_spark(
     )
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
-    with _env("SPARK_CONF_DIR", plan and plan.conf_dir):
+    with _conf_dir_env(plan and plan.conf_dir):
         spark = builder.getOrCreate()
     if launching:  # the gateway JVM outlives stop(), so the state holds until exit
         _cds_state = _cds_outcome(spark, plan)

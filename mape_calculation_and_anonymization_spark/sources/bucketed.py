@@ -21,13 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_bucketed_table(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    n_buckets: int = 8,
-) -> None:
-    """Persist ``df`` as a bucketed managed table."""
+def write_bucketed_table(df: DataFrame, table_name: str) -> None:
+    """Persist ``df`` as a managed table in 8 buckets on ``o_custkey``."""
     import os
     import shutil
     from urllib.parse import urlparse
@@ -53,16 +48,14 @@ def write_bucketed_table(
     (
         df.write.mode("overwrite")
         .format("parquet")
-        .bucketBy(n_buckets, bucket_col)
+        .bucketBy(8, "o_custkey")
         .saveAsTable(table_name)
     )
 
 
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: str
-) -> DataFrame:
-    """Join two bucketed tables on their bucket key. When both sides
-    were written with the same bucket count on ``on``, the physical
-    plan contains NO Exchange (verify: ``df.explain()``)."""
-    return spark.table(left_table).join(spark.table(right_table), on=on)
+def bucketed_join(spark: SparkSession, left_table: str, right_table: str) -> DataFrame:
+    """Join two bucketed tables on their bucket key ``o_custkey``. When
+    both sides were written with the same bucket count on it, the
+    physical plan contains NO Exchange (verify: ``df.explain()``)."""
+    return spark.table(left_table).join(spark.table(right_table), on="o_custkey")
 

@@ -9,6 +9,7 @@ Reference parity (SURVEY.md §2.1):
 from __future__ import annotations
 
 import os
+import re
 from typing import Callable
 
 from pyspark.sql import DataFrame
@@ -54,9 +55,9 @@ def write_parquet_snappy(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").option("compression", "snappy").parquet(path)
 
 
-def compact_parquet(spark, path: str, target_partitions: int) -> None:
-    """Small-file compaction: rewrite a parquet directory into
-    ``target_partitions`` files — the maintenance job every streaming
+def compact_parquet(spark, path: str) -> None:
+    """Small-file compaction: rewrite a parquet directory into 2 files
+    — the maintenance job every streaming
     or micro-batch sink needs, since each trigger lands its own part
     files and a 100 TB table degrades into millions of footer reads.
 
@@ -66,7 +67,7 @@ def compact_parquet(spark, path: str, target_partitions: int) -> None:
     leaves the table as it was; a reader never sees a mix of old and
     new part files, but one between the two renames finds no table.
     """
-    compacted = spark.read.parquet(path).coalesce(target_partitions)
+    compacted = spark.read.parquet(path).coalesce(2)
     replace_dir(path, lambda stage: write_parquet_snappy(compacted, stage))
 
 
@@ -94,6 +95,12 @@ def _xml_escape(s: str) -> str:
     return escape(s, {'"': "&quot;", "'": "&apos;"})
 
 
+# characters XML 1.0 forbids (C0 controls, lone surrogates, U+FFFE and
+# U+FFFF): no escape can carry them, so a sheet holding one is not
+# well-formed and no reader opens it (a lone surrogate cannot even be
+# encoded as UTF-8)
+_XML_ILLEGAL = re.compile(r"[\x00-\x08\x0b\x0c\x0e-\x1f\ud800-\udfff\ufffe\uffff]")
+
 _XLSX_NS = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
 _REL_NS = "http://schemas.openxmlformats.org/officeDocument/2006/relationships"
 _PKG_REL_NS = "http://schemas.openxmlformats.org/package/2006/relationships"
@@ -109,14 +116,20 @@ def _write_xlsx_stdlib(filepath: str, pdfs: dict) -> None:
     ``xsd:double``; pandas ``to_excel`` writes the same strings);
     anything else (dates, timestamps) as its ``str()`` inline. Valid
     OOXML — Excel, openpyxl, and :func:`..readers.read_xlsx_sheet` all
-    read it."""
+    read it.
+
+    A sheet name, header or string cell holding a character XML 1.0
+    forbids (a control character, a lone surrogate, U+FFFE or U+FFFF)
+    raises ValueError naming the sheet and cell (as
+    openpyxl refuses them); every part is built before the file is
+    opened, so a refusal leaves no partial workbook."""
     import math
     import numbers
     import zipfile
 
     import numpy as np
 
-    def cell_xml(ref: str, v) -> str:
+    def cell_xml(sheet: str, ref: str, v) -> str:
         # numbers.Integral/Real (not bare int/float) so numpy scalars
         # inside object columns serialize as numbers, not inline
         # strings; values go through int()/float() because numpy 2's
@@ -134,16 +147,22 @@ def _write_xlsx_stdlib(filepath: str, pdfs: dict) -> None:
             if not math.isinf(fv):
                 return f'<c r="{ref}"><v>{fv!r}</v></c>'
             v = "inf" if fv > 0 else "-inf"
+        text = str(v)
+        if _XML_ILLEGAL.search(text):
+            raise ValueError(
+                f"_write_xlsx_stdlib: sheet {sheet!r} cell {ref} holds a "
+                f"character XML cannot carry: {text!r}"
+            )
         return (
             f'<c r="{ref}" t="inlineStr"><is><t xml:space="preserve">'
-            f"{_xml_escape(str(v))}</t></is></c>"
+            f"{_xml_escape(text)}</t></is></c>"
         )
 
-    def sheet_xml(pdf) -> str:
+    def sheet_xml(sheet: str, pdf) -> str:
         rows = [
             "<row r=\"1\">"
             + "".join(
-                cell_xml(f"{_col_ref(j)}1", str(c))
+                cell_xml(sheet, f"{_col_ref(j)}1", str(c))
                 for j, c in enumerate(pdf.columns)
             )
             + "</row>"
@@ -152,7 +171,8 @@ def _write_xlsx_stdlib(filepath: str, pdfs: dict) -> None:
             rows.append(
                 f'<row r="{i}">'
                 + "".join(
-                    cell_xml(f"{_col_ref(j)}{i}", v) for j, v in enumerate(rec)
+                    cell_xml(sheet, f"{_col_ref(j)}{i}", v)
+                    for j, v in enumerate(rec)
                 )
                 + "</row>"
             )
@@ -164,6 +184,13 @@ def _write_xlsx_stdlib(filepath: str, pdfs: dict) -> None:
         )
 
     names = list(pdfs)
+    for n in names:
+        if _XML_ILLEGAL.search(n):
+            raise ValueError(
+                f"_write_xlsx_stdlib: sheet name {n!r} holds a character "
+                "XML cannot carry"
+            )
+    sheets = [sheet_xml(n, pdfs[n]) for n in names]
     overrides = "".join(
         f'<Override PartName="/xl/worksheets/sheet{i + 1}.xml" '
         'ContentType="application/vnd.openxmlformats-officedocument.'
@@ -211,8 +238,8 @@ def _write_xlsx_stdlib(filepath: str, pdfs: dict) -> None:
         z.writestr("_rels/.rels", pkg_rels)
         z.writestr("xl/workbook.xml", workbook)
         z.writestr("xl/_rels/workbook.xml.rels", wb_rels)
-        for i, n in enumerate(names):
-            z.writestr(f"xl/worksheets/sheet{i + 1}.xml", sheet_xml(pdfs[n]))
+        for i, part in enumerate(sheets):
+            z.writestr(f"xl/worksheets/sheet{i + 1}.xml", part)
 
 
 def write_excel_workbook(filepath: str, **sheets: DataFrame) -> str:
@@ -305,14 +332,9 @@ def write_orc_zstd(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").option("compression", "zstd").orc(path)
 
 
-def delete_keys(
-    spark,
-    path: str,
-    key_col: str,
-    keys_df: DataFrame,
-) -> dict:
+def delete_keys(spark, path: str, keys_df: DataFrame) -> dict:
     """Targeted row deletion (GDPR right-to-erasure shape): remove
-    every row whose ``key_col`` appears in ``keys_df``, rewriting ONLY
+    every row whose ``user_id`` appears in ``keys_df``, rewriting ONLY
     the part files that actually contain a matching row — the
     copy-on-write DELETE of the lake-table formats (Delta/Iceberg),
     expressed directly over a parquet directory.
@@ -349,7 +371,7 @@ def delete_keys(
     # decoded absolute local paths so set membership below is exact
     affected = {
         os.path.abspath(unquote(urlparse(r["_f"]).path))
-        for r in tagged.join(F.broadcast(keys_df), key_col, "left_semi")
+        for r in tagged.join(F.broadcast(keys_df), "user_id", "left_semi")
         .select("_f")
         .distinct()
         .collect()
@@ -368,7 +390,7 @@ def delete_keys(
         # from counting the (affected-files-sized) inputs and outputs
         write_parquet_snappy(
             spark.read.parquet(*aff).join(
-                F.broadcast(keys_df), key_col, "left_anti"
+                F.broadcast(keys_df), "user_id", "left_anti"
             ),
             stage,
         )

@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.dedup import (
-    char_shingles,
+    _MINHASH_SHINGLE_K,
     minhash_incremental_pairs,
     minhash_signatures,
     word_ngrams,
@@ -64,13 +64,6 @@ from .windows import _drain
 def streaming_minhash_ingest(
     docs_stream: DataFrame,
     state_dir: str,
-    shingle_k: int = 5,
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.6,
-    seed: int = 42,
-    shingle_mode: str = "char",
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Drain ``docs_stream`` (Trigger.AvailableNow) through the
     incremental near-dup ingest and return the accumulated verified
@@ -78,10 +71,12 @@ def streaming_minhash_ingest(
     exactly once. ``state_dir`` holds the three stores (``sigs`` —
     the standing signature index, ``docs`` — the candidate-text
     lake, ``pairs`` — the output ledger); pass an existing populated
-    state dir to resume ingest against yesterday's index.
+    state dir to resume ingest against yesterday's index. Shingles,
+    signatures, bands and the verify threshold are those of
+    :func:`minhash_incremental_pairs`.
 
-    ``shuffle_partitions`` right-sizes the per-micro-batch exchanges
-    (the ``windows._drain`` knob): the incremental pipeline runs ~10
+    The per-micro-batch exchanges run at 4 shuffle partitions (the
+    ``windows._drain`` knob): the incremental pipeline runs ~10
     jobs per batch with several materialization points, and at local
     volumes that FIXED per-batch cost dominates — measured at sf0.1
     the per-batch wall (~5s) is flat whether the batch carries 2 500
@@ -98,7 +93,6 @@ def streaming_minhash_ingest(
     sigs_dir = os.path.join(state_dir, "sigs")
     pairs_dir = os.path.join(state_dir, "pairs")
     os.makedirs(state_dir, exist_ok=True)
-    shingler = char_shingles if shingle_mode == "char" else word_ngrams
 
     id_type = docs_stream.schema["doc_id"].dataType
     empty_docs_schema = T.StructType(
@@ -147,21 +141,14 @@ def streaming_minhash_ingest(
             # applied to the streaming sign path.
             batch_sh = ensure_min_partitions(batch).select(
                 F.col("doc_id").alias("_id"),
-                shingler("text", shingle_k).alias("sh"),
+                word_ngrams(_MINHASH_SHINGLE_K).alias("sh"),
             )
-            with persisted(
-                minhash_signatures(batch_sh, "_id", F.col("sh"), num_hashes, seed)
-            ) as sigs:
+            with persisted(minhash_signatures(batch_sh, F.col("sh"))) as sigs:
                 pairs = minhash_incremental_pairs(
                     batch,
                     standing_docs,
                     standing_sigs,
-                    shingle_k=shingle_k,
-                    num_hashes=num_hashes,
-                    bands=bands,
-                    threshold=threshold,
-                    seed=seed,
-                    shingle_mode=shingle_mode,
+                    word_ngrams(_MINHASH_SHINGLE_K),
                     precomputed_new_sigs=sigs,
                 )
                 # pair_type (new_new vs new_standing) is a batch-boundary
@@ -176,7 +163,7 @@ def streaming_minhash_ingest(
                 batch.write.mode("append").parquet(docs_dir)
 
     writer = docs_stream.writeStream.foreachBatch(_ingest)
-    _drain(writer, spark, "neardup", shuffle_partitions)
+    _drain(writer, spark, "neardup", 4)
     if not os.path.isdir(pairs_dir):  # empty stream: no pairs ever
         return spark.createDataFrame(
             [],

@@ -30,15 +30,14 @@ from .windows import _drain
 def stream_key_table_upsert(
     stream_df: DataFrame,
     key_dir: str,
-    col: str = "user_id",
 ) -> None:
     """Drain ``stream_df`` with Trigger.AvailableNow, upserting the
-    persistent key table once per micro-batch. Raises on timeout
+    persistent ``user_id`` key table once per micro-batch. Raises on timeout
     rather than leaving a partially-ingested table unreported."""
 
     def _upsert(batch_df: DataFrame, _batch_id: int) -> None:
-        key_df = load_key_table(batch_df.sparkSession, key_dir, col)
-        upsert_key_table(key_df, batch_df, key_dir, col)
+        key_df = load_key_table(batch_df.sparkSession, key_dir, "user_id")
+        upsert_key_table(key_df, batch_df, key_dir, "user_id")
 
     writer = stream_df.writeStream.foreachBatch(_upsert)
     _drain(writer, stream_df.sparkSession, "key_upsert")
@@ -50,9 +49,10 @@ def stream_key_table_upsert(
 
 
 def merge_partial_aggregate(
-    batch_df: DataFrame, table_path: str, key: str = "event_type"
+    batch_df: DataFrame, table_path: str
 ) -> None:
-    """Fold one micro-batch's partial (count, sum) per key into the
+    """Fold one micro-batch's partial (count, sum) of ``value`` per
+    ``event_type`` into the
     running aggregate table — the materialized-view maintenance every
     dashboard-serving pipeline runs instead of rescanning history.
 
@@ -66,7 +66,7 @@ def merge_partial_aggregate(
     import os
 
     spark = batch_df.sparkSession
-    partial = batch_df.groupBy(key).agg(
+    partial = batch_df.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum("value").alias("total_value"),
     )
@@ -75,9 +75,9 @@ def merge_partial_aggregate(
             spark.read.parquet(table_path)
             .withColumnRenamed("n_events", "n_old")
             .withColumnRenamed("total_value", "v_old")
-            .join(partial, on=key, how="full_outer")
+            .join(partial, on="event_type", how="full_outer")
             .select(
-                key,
+                "event_type",
                 (
                     F.coalesce("n_old", F.lit(0))
                     + F.coalesce("n_events", F.lit(0))
@@ -96,15 +96,15 @@ def merge_partial_aggregate(
 def stream_incremental_agg(
     stream_df: DataFrame,
     table_path: str,
-    key: str = "event_type",
 ) -> None:
     """Drain ``stream_df`` with Trigger.AvailableNow, merging each
-    micro-batch's partial aggregate into the running table. After the
+    micro-batch's partial aggregate of ``value`` per ``event_type``
+    (:func:`merge_partial_aggregate`) into the running table. After the
     stream finishes the table equals the batch aggregate over
     everything delivered — exactness pinned by the registry oracle."""
 
     def _merge(batch_df: DataFrame, _batch_id: int) -> None:
-        merge_partial_aggregate(batch_df, table_path, key)
+        merge_partial_aggregate(batch_df, table_path)
 
     writer = stream_df.writeStream.foreachBatch(_merge)
     _drain(writer, stream_df.sparkSession, "inc_agg")

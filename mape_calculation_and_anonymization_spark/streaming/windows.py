@@ -167,15 +167,10 @@ def stateful_distinct_users(events: DataFrame) -> DataFrame:
     )
 
 
-def stream_stream_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str = "user_id",
-    interval: str = "INTERVAL 1 HOUR",
-) -> DataFrame:
+def stream_stream_interval_join(left: DataFrame, right: DataFrame) -> DataFrame:
     """Watermarked stream-stream inner join: pair each left event with
-    the right-stream events of the same key whose timestamp falls in
-    ``[left.ts - interval, left.ts]``.
+    the right-stream events of the same ``user_id`` whose timestamp
+    falls in ``[left.ts - 1 hour, left.ts]``.
 
     Both sides carry a watermark AND the join condition bounds the
     event-time distance, so Spark can evict join state once the
@@ -190,22 +185,22 @@ def stream_stream_interval_join(
     batch-identical."""
     l = left.withWatermark("ts", "2 hours").select(
         F.col("event_id").alias("l_id"),
-        F.col(on).alias("l_key"),
+        F.col("user_id").alias("l_key"),
         F.col("ts").alias("l_ts"),
     )
     r = right.withWatermark("ts", "2 hours").select(
         F.col("event_id").alias("r_id"),
-        F.col(on).alias("r_key"),
+        F.col("user_id").alias("r_key"),
         F.col("ts").alias("r_ts"),
     )
     cond = (
         (l.l_key == r.r_key)
-        & (r.r_ts >= l.l_ts - F.expr(interval))
+        & (r.r_ts >= l.l_ts - F.expr("INTERVAL 1 HOUR"))
         & (r.r_ts <= l.l_ts)
     )
     return l.join(r, cond).select(
         F.col("l_id"),
-        F.col("l_key").alias(on),
+        F.col("l_key").alias("user_id"),
         F.col("r_id"),
     )
 
@@ -368,18 +363,15 @@ def run_stream_to_memory(
     return spark.table(name)
 
 
-def run_stream_to_parquet(
-    stream_df: DataFrame,
-    out_dir: str,
-    shuffle_partitions: int | None = None,
-) -> None:
+def run_stream_to_parquet(stream_df: DataFrame, out_dir: str) -> None:
     """Drain a (stateless or append-emitting) streaming DataFrame into
     a parquet file sink with Trigger.AvailableNow — the
     stream-to-lake ingestion half of the lambda-free pattern: land
     micro-batches as parquet, run every analytic as a batch query over
     the landed files. The file sink's _spark_metadata transaction log
     gives exactly-once file commits, so a completed run lands every
-    input row exactly once regardless of micro-batch boundaries.
+    input row exactly once regardless of micro-batch boundaries. The
+    drain runs at 8 shuffle partitions.
     Raises TimeoutError on an unfinished run (partially-landed files
     are the caller's cue to discard the directory)."""
     writer = (
@@ -387,23 +379,20 @@ def run_stream_to_parquet(
         .option("path", out_dir)
         .outputMode("append")
     )
-    _drain(writer, stream_df.sparkSession, "parquet_sink", shuffle_partitions)
+    _drain(writer, stream_df.sparkSession, "parquet_sink", 8)
 
 
-def stream_static_enrich(
-    events: DataFrame,
-    dim: DataFrame,
-    on: str,
-) -> DataFrame:
-    """Stream-static join + tumbling-hour rollup: each micro-batch is
-    enriched against the (broadcast) static dimension — the standard
+def stream_static_enrich(events: DataFrame, dim: DataFrame) -> DataFrame:
+    """Stream-static join on ``event_type`` + tumbling-hour rollup:
+    each micro-batch is enriched against the (broadcast) static
+    ``(event_type, tier)`` dimension — the standard
     "decorate the stream with reference data" pattern. The static side
     is planned once per batch; no stream-stream state is created, so
     the only stateful operator remains the windowed aggregate.
     Unmatched stream rows keep flowing with a NULL dim payload (left
     join) — reference data must never drop fact rows."""
     enriched = events.withWatermark("ts", "2 hours").join(
-        F.broadcast(dim), on=on, how="left"
+        F.broadcast(dim), on="event_type", how="left"
     )
     agg = enriched.groupBy(
         F.window("ts", "1 hour").alias("w"),
@@ -414,15 +403,11 @@ def stream_static_enrich(
     )
 
 
-def stream_stream_left_outer_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str = "user_id",
-    interval: str = "INTERVAL 1 HOUR",
-) -> DataFrame:
+def stream_stream_left_outer_join(left: DataFrame, right: DataFrame) -> DataFrame:
     """Watermarked stream-stream LEFT OUTER interval join: like
-    :func:`stream_stream_interval_join`, but unmatched left events
-    emit a NULL-right row once the watermark proves no match can
+    :func:`stream_stream_interval_join` (same ``user_id``, same
+    one-hour ``ts`` interval), but unmatched left events emit a
+    NULL-right row once the watermark proves no match can
     still arrive.
 
     Outer emission timing is the subtle part: Spark emits the NULL
@@ -444,21 +429,21 @@ def stream_stream_left_outer_join(
     stream_outer_join registry query for the full recipe."""
     l = left.withWatermark("ts", "2 hours").select(
         F.col("event_id").alias("l_id"),
-        F.col(on).alias("l_key"),
+        F.col("user_id").alias("l_key"),
         F.col("ts").alias("l_ts"),
     )
     r = right.withWatermark("ts", "2 hours").select(
         F.col("event_id").alias("r_id"),
-        F.col(on).alias("r_key"),
+        F.col("user_id").alias("r_key"),
         F.col("ts").alias("r_ts"),
     )
     cond = (
         (l.l_key == r.r_key)
-        & (r.r_ts >= l.l_ts - F.expr(interval))
+        & (r.r_ts >= l.l_ts - F.expr("INTERVAL 1 HOUR"))
         & (r.r_ts <= l.l_ts)
     )
     return l.join(r, cond, "left_outer").select(
         F.col("l_id"),
-        F.col("l_key").alias(on),
+        F.col("l_key").alias("user_id"),
         F.col("r_id"),
     )

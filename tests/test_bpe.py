@@ -66,14 +66,17 @@ def test_bpe_early_stop(spark):
     assert bpe_merges(words, 5).count() == 0  # no adjacent pairs at all
 
 
-def test_word_frequencies_cap_deterministic(spark):
+def test_word_frequencies_cap_deterministic(spark, monkeypatch):
+    from mape_calculation_and_anonymization_spark.operators import bpe
+
     docs = spark.createDataFrame(
         [(1, "the cat sat"), (2, "the cat ran"), (3, "a dog ran")],
         ["doc_id", "text"],
     )
     wf = {r["word"]: r["freq"] for r in word_frequencies(docs).collect()}
     assert wf == {"the": 2, "cat": 2, "sat": 1, "ran": 2, "a": 1, "dog": 1}
-    top = word_frequencies(docs, limit=3).collect()
+    monkeypatch.setattr(bpe, "_VOCAB_WORDS", 3)
+    top = word_frequencies(docs).collect()
     # freq desc then word asc: cat(2), ran(2), the(2)
     assert sorted(r["word"] for r in top) == ["cat", "ran", "the"]
 
@@ -85,8 +88,8 @@ def test_bpe_local_equals_distributed(spark):
 
     freqs = {"low": 5, "lower": 2, "newest": 6, "widest": 3, "new": 7}
     words = spark.createDataFrame(list(freqs.items()), ["word", "freq"])
-    dist = [tuple(r) for r in bpe_merges(words, 8).orderBy("rank").collect()]
-    loc = [tuple(r) for r in bpe_merges_local(words, 8).orderBy("rank").collect()]
+    dist = [tuple(r) for r in bpe_merges(words, 12).orderBy("rank").collect()]
+    loc = [tuple(r) for r in bpe_merges_local(words).orderBy("rank").collect()]
     assert dist == loc
 
 
@@ -103,7 +106,7 @@ def test_bpe_local_max_words_guard(spark, monkeypatch):
     )
     monkeypatch.setattr(bpe, "_MAX_WORDS", 10)
     with pytest.raises(ValueError, match="max_words"):
-        bpe_merges_local(words, 2)
+        bpe_merges_local(words)
 
 
 def test_encode_reproduces_training_symbol_table(spark):
@@ -120,8 +123,8 @@ def test_encode_reproduces_training_symbol_table(spark):
     from pyspark.sql import functions as F
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    words = word_frequencies(docs, limit=200)
-    merges = bpe_merges_local(words, n_merges=12)
+    words = word_frequencies(docs)
+    merges = bpe_merges_local(words)
 
     # trainer-side: fold the merges over the word table exactly as
     # bpe_merges does internally

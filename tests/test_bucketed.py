@@ -37,7 +37,7 @@ def bucketed_tables(spark, tmp_path_factory):
 
 def test_bucketed_join_no_exchange(spark, bucketed_tables):
     left, right = bucketed_tables
-    joined = bucketed_join(spark, left, right, on="o_custkey")
+    joined = bucketed_join(spark, left, right)
     assert count_exchanges(joined) == 0
     # row parity with the plain (shuffling) join
     plain = load_table(spark, SF_DIR, "orders").join(
@@ -54,18 +54,20 @@ def test_write_bucketed_table_rewrites_and_qualified_names(spark):
         write_bucketed_table,
     )
 
-    nation = load_table(spark, SF_DIR, "nation").select("n_nationkey", "n_name")
+    nation = load_table(spark, SF_DIR, "nation").select(
+        F.col("n_nationkey").alias("o_custkey"), "n_name"
+    )
     try:
         # unqualified: write twice — the second write must survive the
         # leftover-location cleanup path (LOCATION_ALREADY_EXISTS guard)
-        write_bucketed_table(nation, "bkt_guard_t", "n_nationkey", n_buckets=4)
-        write_bucketed_table(nation, "bkt_guard_t", "n_nationkey", n_buckets=4)
+        write_bucketed_table(nation, "bkt_guard_t")
+        write_bucketed_table(nation, "bkt_guard_t")
         assert spark.table("bkt_guard_t").count() == nation.count()
         # qualified db.tbl: cleanup must target warehouse/<db>.db/<tbl>,
         # not warehouse/<db.tbl>
         spark.sql("CREATE DATABASE IF NOT EXISTS bktdb")
-        write_bucketed_table(nation, "bktdb.guard_t", "n_nationkey", n_buckets=4)
-        write_bucketed_table(nation, "bktdb.guard_t", "n_nationkey", n_buckets=4)
+        write_bucketed_table(nation, "bktdb.guard_t")
+        write_bucketed_table(nation, "bktdb.guard_t")
         assert spark.table("bktdb.guard_t").count() == nation.count()
     finally:
         spark.sql("DROP TABLE IF EXISTS bkt_guard_t")
@@ -102,7 +104,7 @@ def test_delete_keys_rewrites_only_affected(spark, tmp_path):
     before = set(glob.glob(os.path.join(path, "part-*")))
     keys = spark.createDataFrame([(7,), (13,)], ["user_id"])
 
-    stats = delete_keys(spark, path, "user_id", keys)
+    stats = delete_keys(spark, path, keys)
     assert stats["files_total"] == 4
     assert 1 <= stats["files_rewritten"] <= 2  # 2 users -> <=2 hash files
     assert stats["rows_deleted"] == 40  # 2 users x 20 rows each
@@ -120,5 +122,5 @@ def test_delete_keys_rewrites_only_affected(spark, tmp_path):
     assert got.count() == 960
     assert got.filter(F.col("user_id").isin(7, 13)).count() == 0
 
-    again = delete_keys(spark, path, "user_id", keys)
+    again = delete_keys(spark, path, keys)
     assert again["files_rewritten"] == 0 and again["rows_deleted"] == 0

@@ -42,10 +42,15 @@ def _corpus(n=60, seed=7, dup_every=10):
     return docs
 
 
-def _brute_jaccard_pairs(docs, k=5, threshold=0.6):
+def _brute_jaccard_pairs(docs, threshold=0.6):
+    """Exact Jaccard over word 3-gram sets, the minhash pipelines'
+    shingle space."""
+
     def sh(t):
-        t = t.lower()
-        return {t[i : i + k] for i in range(max(1, len(t) - k + 1))}
+        toks = t.lower().split()
+        if len(toks) < 3:
+            return {" ".join(toks)}
+        return {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
 
     sets = {i: sh(t) for i, t in docs}
     out = {}
@@ -60,14 +65,14 @@ def _brute_jaccard_pairs(docs, k=5, threshold=0.6):
 def test_exact_dedup(spark):
     df = spark.createDataFrame(
         [(1, "x", "a"), (2, "x", "a"), (3, "y", "a"), (4, "x", "b")],
-        ["id", "k1", "k2"],
+        ["doc_id", "lang", "source"],
     )
     groups = {
-        (r["k1"], r["k2"]): (r["keep_id"], r["n_dups"])
-        for r in exact_dedup_groups(df, ["k1", "k2"], "id").collect()
+        (r["lang"], r["source"]): (r["keep_id"], r["n_dups"])
+        for r in exact_dedup_groups(df).collect()
     }
     assert groups == {("x", "a"): (1, 2), ("y", "a"): (3, 1), ("x", "b"): (4, 1)}
-    kept = sorted(r["id"] for r in exact_dedup(df, ["k1", "k2"], "id").collect())
+    kept = sorted(r["doc_id"] for r in exact_dedup(df, ["lang", "source"]).collect())
     assert kept == [1, 3, 4]
 
 
@@ -76,42 +81,28 @@ def test_exact_dedup_null_keys(spark):
     # semi join must keep exactly one row for it, not drop them all
     df = spark.createDataFrame(
         [(1, None, "a"), (2, None, "a"), (3, "y", None), (4, "y", None), (5, "y", "b")],
-        ["id", "k1", "k2"],
+        ["doc_id", "lang", "source"],
     )
-    kept = sorted(r["id"] for r in exact_dedup(df, ["k1", "k2"], "id").collect())
+    kept = sorted(r["doc_id"] for r in exact_dedup(df, ["lang", "source"]).collect())
     assert kept == [1, 3, 5]
     groups = {
-        (r["k1"], r["k2"]): (r["keep_id"], r["n_dups"])
-        for r in exact_dedup_groups(df, ["k1", "k2"], "id").collect()
+        (r["lang"], r["source"]): (r["keep_id"], r["n_dups"])
+        for r in exact_dedup_groups(df).collect()
     }
     assert groups[(None, "a")] == (1, 2)
     assert groups[("y", None)] == (3, 2)
 
 
-def test_simhash_zero_hamming_exact_match(spark):
-    # max_hamming=0 → one 64-bit chunk; the 1<<64 literal must not be
-    # built (LongType overflow) and only identical signatures pair up
-    df = spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "alpha beta gamma"), (3, "delta beta")],
-        ["doc_id", "text"],
-    )
-    got = {
-        (r["id_a"], r["id_b"], r["hamming"])
-        for r in simhash_near_duplicates(df, max_hamming=0).collect()
-    }
-    assert got == {(1, 2, 0)}
-
-
 def test_shingles_and_jaccard(spark):
-    df = spark.createDataFrame([Row(a="the cat sat", b="the cat sat here")])
+    df = spark.createDataFrame([Row(text="the cat sat", b="the cat sat here")])
     row = df.select(
-        tokens("a").alias("ta"),
-        char_shingles("a", 3).alias("ca"),
-        word_ngrams("a", 2).alias("wa"),
-        jaccard(tokens("a"), tokens("b")).alias("j"),
+        tokens("text").alias("ta"),
+        char_shingles().alias("ca"),
+        word_ngrams(2).alias("wa"),
+        jaccard(tokens("text"), tokens("b")).alias("j"),
     ).collect()[0]
     assert sorted(row["ta"]) == ["cat", "sat", "the"]
-    assert "the" in row["ca"] and "e c" in row["ca"]
+    assert sorted(row["ca"]) == [" cat ", "at sa", "cat s", "e cat", "he ca", "t sat", "the c"]
     assert sorted(row["wa"]) == ["cat sat", "the cat"]
     assert row["j"] == pytest.approx(3 / 4)
 
@@ -120,7 +111,7 @@ def test_minhash_estimates_jaccard(spark):
     # signature agreement should approximate true jaccard
     docs = _corpus()
     df = spark.createDataFrame(docs, ["doc_id", "text"])
-    sh = df.select("doc_id", char_shingles("text", 5).alias("sh"))
+    sh = df.select("doc_id", word_ngrams(3).alias("sh"))
     sigs = sh.select("doc_id", minhash_signature(F.col("sh"), 128).alias("sig"))
     a = sigs.alias("a")
     b = sigs.alias("b")
@@ -147,7 +138,7 @@ def test_minhash_near_duplicates_finds_planted(spark):
     df = spark.createDataFrame(docs, ["doc_id", "text"])
     found = {
         (r["id_a"], r["id_b"])
-        for r in minhash_near_duplicates(df, threshold=0.6).collect()
+        for r in minhash_near_duplicates(df).collect()
     }
     # verification step makes precision exact; LSH recall on ~0.9+
     # jaccard planted pairs with 16 bands × 4 rows is ≈1
@@ -165,19 +156,15 @@ def test_minhash_precomputed_sigs_equivalent(spark):
         minhash_signatures,
     )
 
-    sh = df.select(
-        F.col("doc_id").alias("_id"), char_shingles("text", 5).alias("sh")
-    )
-    sigs = minhash_signatures(sh, "_id", F.col("sh"), 32, 42)
+    sh = df.select(F.col("doc_id").alias("_id"), word_ngrams(3).alias("sh"))
+    sigs = minhash_signatures(sh, F.col("sh"))
     fresh = {
         (r["id_a"], r["id_b"], round(r["jaccard_sim"], 9))
-        for r in minhash_near_duplicates(df, threshold=0.6).collect()
+        for r in minhash_near_duplicates(df).collect()
     }
     cached = {
         (r["id_a"], r["id_b"], round(r["jaccard_sim"], 9))
-        for r in minhash_near_duplicates(
-            df, threshold=0.6, precomputed_sigs=sigs
-        ).collect()
+        for r in minhash_near_duplicates(df, precomputed_sigs=sigs).collect()
     }
     assert cached == fresh
 
@@ -206,21 +193,20 @@ def test_simhash_precomputed_sigs_equivalent(spark):
     )
     fresh = {
         (r["id_a"], r["id_b"], r["hamming"])
-        for r in simhash_near_duplicates(df, max_hamming=3).collect()
+        for r in simhash_near_duplicates(df).collect()
     }
     cached = {
         (r["id_a"], r["id_b"], r["hamming"])
-        for r in simhash_near_duplicates(
-            df, max_hamming=3, precomputed_sigs=sigs
-        ).collect()
+        for r in simhash_near_duplicates(df, precomputed_sigs=sigs).collect()
     }
     assert cached == fresh
     assert fresh, "planted corpus must produce at least one pair"
 
 
-def test_simhash_finds_planted(spark):
+def test_simhash_finds_planted(spark, monkeypatch):
     docs = _corpus()
     df = spark.createDataFrame(docs, ["doc_id", "text"])
+    from mape_calculation_and_anonymization_spark.operators import dedup
     from mape_calculation_and_anonymization_spark.operators.dedup import simhash64_udf
 
     sigs = {
@@ -234,9 +220,10 @@ def test_simhash_finds_planted(spark):
         for b in sigs
         if a < b and bin(sigs[a] ^ sigs[b]).count("1") <= 12
     }
+    monkeypatch.setattr(dedup, "_SIMHASH_MAX_HAMMING", 12)
     got = {
         (r["id_a"], r["id_b"])
-        for r in simhash_near_duplicates(df, max_hamming=12).collect()
+        for r in simhash_near_duplicates(df).collect()
     }
     assert got == truth
     # the corpus's planted one-word edits must be among them
@@ -282,11 +269,10 @@ def test_simhash_sign_boundary_recall(spark, monkeypatch):
         "corpus no longer exercises the sign boundary — reseed _corpus"
     )
     monkeypatch.setattr(dedup, "_SIMHASH_SHINGLE_N", 1)
+    monkeypatch.setattr(dedup, "_SIMHASH_MAX_HAMMING", 12)
     got = {
         (r["id_a"], r["id_b"])
-        for r in simhash_near_duplicates(
-            df, max_hamming=12, feature_hash="md5"
-        ).collect()
+        for r in simhash_near_duplicates(df, feature_hash="md5").collect()
     }
     assert got == truth
 
@@ -312,15 +298,18 @@ def test_md5_band_buckets_match_hof_form(spark):
 
     docs = spark.createDataFrame(
         [(i, t) for i, t in _corpus(n=30)], ["doc_id", "text"]
-    ).select("doc_id", tokens("text").alias("toks"))
+    ).select("doc_id", tokens("text").alias("toks"), F.lit("en").alias("lang"),
+             F.lit("web").alias("source"))
 
     hof = docs.select(
+        "lang",
+        "source",
         F.col("doc_id").alias("_id"),
         F.posexplode(md5_band_keys(F.col("toks"), 4, 2)).alias(
             "band_idx", "band_key"
         ),
     )
-    agg = md5_band_buckets(docs, "doc_id", "toks", bands=4, rows_per_band=2)
+    agg = md5_band_buckets(docs)
     got = {tuple(r) for r in agg.collect()}
     want = {tuple(r) for r in hof.collect()}
     assert got == want and len(got) == 30 * 4
@@ -390,9 +379,7 @@ def test_bloom_prefilter_exact_equivalence(spark):
     for num_bits in (64, 1 << 17):
         got = {
             r["row_id"]
-            for r in bloom_prefilter_anti_join(
-                inc, store, "fp", num_bits=num_bits
-            ).collect()
+            for r in bloom_prefilter_anti_join(inc, store, num_bits=num_bits).collect()
         }
         assert got == expected, f"num_bits={num_bits}"
 
@@ -413,7 +400,7 @@ def test_bloom_prefilter_reserved_columns_fail_fast(spark):
         "md5(cast(id as string)) AS fp", "id AS _mask"
     )
     with pytest.raises(ValueError, match="_mask"):
-        bloom_prefilter_anti_join(inc, store, "fp")
+        bloom_prefilter_anti_join(inc, store)
 
 
 def test_bloom_prefilter_no_false_negatives_and_split(spark):
@@ -429,14 +416,14 @@ def test_bloom_prefilter_no_false_negatives_and_split(spark):
 
     num_bits, k = 1 << 17, _BLOOM_HASHES
     store = spark.range(0, 2000).selectExpr("md5(cast(id as string)) AS fp")
-    bitmap = bloom_bitmap(store, "fp", num_bits)
+    bitmap = bloom_bitmap(store, num_bits)
     # probe members + 2000 disjoint non-members through the bitmap
     members = store.withColumn("is_member", F.lit(True))
     others = spark.range(10_000, 12_000).selectExpr(
         "md5(cast(id as string)) AS fp", "false AS is_member"
     )
     probed = (
-        _bloom_probes(members.unionByName(others), "fp", num_bits)
+        _bloom_probes(members.unionByName(others), num_bits)
         .join(bitmap, "_word", "left")
         .withColumn(
             "_hit",
@@ -475,7 +462,7 @@ def test_exact_substring_spans_semantics(spark):
     df = spark.createDataFrame(docs, ["doc_id", "text"])
     got = {
         (r["doc_id"], r["span_start"], r["span_end"], r["span_tokens"])
-        for r in exact_substring_spans(df, n=5).collect()
+        for r in exact_substring_spans(df).collect()
     }
     assert got == {
         # doc2: shingles at pos 2,3 duplicate doc1 pos 0,1 -> [2, 7]
@@ -593,12 +580,15 @@ def test_jaccard_index_cluster_fixture_matches_live_derivation(spark):
     assert fixture == live and fixture
 
 
-def test_duplicated_span_stats_hand_example(spark):
+def test_duplicated_span_stats_hand_example(spark, monkeypatch):
     """5 docs, n=2: duplicated spans counted with corpus-wide
     multiplicity (cross-doc AND within-doc), short docs absent."""
+    from mape_calculation_and_anonymization_spark.operators import dedup
     from mape_calculation_and_anonymization_spark.operators.dedup import (
         duplicated_span_stats,
     )
+
+    monkeypatch.setattr(dedup, "_SPAN_N", 2)
 
     rows = [
         (1, "a b c"),        # shingles: 'a b', 'b c'
@@ -610,7 +600,7 @@ def test_duplicated_span_stats_hand_example(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r["doc_id"]: (r["n_shingles"], r["n_dup_spans"], r["dup_fraction"])
-        for r in duplicated_span_stats(df, n=2).collect()
+        for r in duplicated_span_stats(df).collect()
     }
     assert got == {
         1: (2, 1, 0.5),   # 'a b' dup, 'b c' unique
@@ -619,19 +609,22 @@ def test_duplicated_span_stats_hand_example(spark):
     }
 
 
-def test_duplicated_span_stats_whitespace_normalization(spark):
+def test_duplicated_span_stats_whitespace_normalization(spark, monkeypatch):
     """Multi-space and case differences must not split shingles —
     normalization (trim/lower/\\s+) runs before shingling on both
     engines."""
+    from mape_calculation_and_anonymization_spark.operators import dedup
     from mape_calculation_and_anonymization_spark.operators.dedup import (
         duplicated_span_stats,
     )
+
+    monkeypatch.setattr(dedup, "_SPAN_N", 2)
 
     rows = [(1, "Foo  Bar baz"), (2, "foo bar   qux")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r["doc_id"]: (r["n_shingles"], r["n_dup_spans"])
-        for r in duplicated_span_stats(df, n=2).collect()
+        for r in duplicated_span_stats(df).collect()
     }
     assert got == {1: (2, 1), 2: (2, 1)}  # 'foo bar' shared
 
@@ -699,7 +692,7 @@ def test_apply_remove_spans_closes_exactsubstr_loop(spark):
         ],
         ["doc_id", "text"],
     )
-    spans = exact_substring_spans(docs, n=5)
+    spans = exact_substring_spans(docs)
     cleaned = apply_remove_spans(docs, spans)
     rows = {r["doc_id"]: r.asDict() for r in cleaned.collect()}
     # doc 1 holds the canonical (min (doc_id, pos)) occurrences? No:
@@ -729,7 +722,7 @@ def test_apply_remove_spans_closes_exactsubstr_loop(spark):
         ],
         ["doc_id", "text"],
     )
-    assert exact_substring_spans(rebuilt, n=5).count() == 0
+    assert exact_substring_spans(rebuilt).count() == 0
 
 
 def test_minhash_incremental_equals_full_restriction(spark):
@@ -754,25 +747,19 @@ def test_minhash_incremental_equals_full_restriction(spark):
     )
 
     standing_sigs = minhash_signatures(
-        df_standing.select(
-            F.col("doc_id").alias("_id"),
-            char_shingles("text", 5).alias("sh"),
-        ),
-        "_id",
+        df_standing.select(F.col("doc_id").alias("_id"), word_ngrams(3).alias("sh")),
         F.col("sh"),
-        32,
-        42,
     )
     got = {
         (r["id_a"], r["id_b"]): (round(r["jaccard_sim"], 9), r["pair_type"])
         for r in minhash_incremental_pairs(
-            df_drop, df_standing, standing_sigs, threshold=0.6
+            df_drop, df_standing, standing_sigs, word_ngrams(3)
         ).collect()
     }
     new_ids = {d for d, _ in drop}
     expected = {
         (r["id_a"], r["id_b"]): round(r["jaccard_sim"], 9)
-        for r in minhash_near_duplicates(df_full, threshold=0.6).collect()
+        for r in minhash_near_duplicates(df_full).collect()
         if r["id_a"] in new_ids or r["id_b"] in new_ids
     }
     assert {k: v[0] for k, v in got.items()} == expected

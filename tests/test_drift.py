@@ -8,6 +8,7 @@ import math
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
+from mape_calculation_and_anonymization_spark.operators import drift
 from mape_calculation_and_anonymization_spark.operators.drift import (
     population_stability,
 )
@@ -15,14 +16,15 @@ from mape_calculation_and_anonymization_spark.operators.drift import (
 SF_DIR = "/root/testdata/sf0.01"
 
 
-def _frame(spark, rows):
-    return spark.createDataFrame(rows, "grp string, value double")
+def _frame(spark, rows, schema="dim string, val double"):
+    return spark.createDataFrame(rows, schema)
 
 
-def test_identical_windows_score_near_zero(spark):
+def test_identical_windows_score_near_zero(spark, monkeypatch):
+    monkeypatch.setattr(drift, "_PSI_BIN_WIDTH", 25.0)
     rows = [("a", float(v % 100)) for v in range(400)]
     df = _frame(spark, rows)
-    out = population_stability(df, df, ["grp"], "value", 25.0).collect()
+    out = population_stability(df, df).collect()
     assert len(out) == 1
     r = out[0]
     assert r["n_ref"] == r["n_cur"] == 400
@@ -30,22 +32,24 @@ def test_identical_windows_score_near_zero(spark):
     assert r["drift_flag"] is False
 
 
-def test_planted_shift_flags_drift(spark):
+def test_planted_shift_flags_drift(spark, monkeypatch):
+    monkeypatch.setattr(drift, "_PSI_BIN_WIDTH", 25.0)
     ref = _frame(spark, [("a", float(v % 100)) for v in range(400)])
     cur = _frame(spark, [("a", float(v % 100) + 200.0) for v in range(400)])
-    r = population_stability(ref, cur, ["grp"], "value", 25.0).collect()[0]
+    r = population_stability(ref, cur).collect()[0]
     # disjoint bin ranges: PSI must be large, finite, and flagged
     assert math.isfinite(r["psi"]) and r["psi"] > 0.2
     assert r["drift_flag"] is True
     assert r["n_bins"] == 8  # 4 ref-only + 4 cur-only bins, unioned
 
 
-def test_one_sided_group_and_nulls_are_finite(spark):
+def test_one_sided_group_and_nulls_are_finite(spark, monkeypatch):
+    monkeypatch.setattr(drift, "_PSI_BIN_WIDTH", 50.0)
     ref = _frame(spark, [("a", 1.0), ("a", 2.0), ("b", 5.0), ("a", None)])
     cur = _frame(spark, [("a", 1.5), ("a", 60.0)])
     got = {
-        r["grp"]: r
-        for r in population_stability(ref, cur, ["grp"], "value", 50.0).collect()
+        r["dim"]: r
+        for r in population_stability(ref, cur).collect()
     }
     # group b has no current rows at all — smoothing keeps PSI finite
     assert got["b"]["n_cur"] == 0 and math.isfinite(got["b"]["psi"])
@@ -53,17 +57,18 @@ def test_one_sided_group_and_nulls_are_finite(spark):
     assert got["a"]["n_ref"] == 2
 
 
-def test_null_group_key_merges_across_windows(spark):
+def test_null_group_key_merges_across_windows(spark, monkeypatch):
     """A NULL group key is ONE group (GROUP BY semantics): its ref and
     cur histograms must merge cell-by-cell through the struct join key,
     not survive as disjoint one-sided cells. Regression for the
     null-unsafe column-list full_outer join, which left a NULL group's
     identical windows with n_bins=2 and psi>0."""
+    monkeypatch.setattr(drift, "_PSI_BIN_WIDTH", 50.0)
     ref = _frame(spark, [(None, 1.0), ("a", 1.0)])
     cur = _frame(spark, [(None, 1.5), ("a", 1.5)])
     got = {
-        r["grp"]: r
-        for r in population_stability(ref, cur, ["grp"], "value", 50.0).collect()
+        r["dim"]: r
+        for r in population_stability(ref, cur).collect()
     }
     assert set(got) == {None, "a"}
     # both values land in bin 0 on both sides: one merged cell, zero drift
@@ -74,11 +79,12 @@ def test_null_group_key_merges_across_windows(spark):
         assert r["psi"] == 0.0 and r["drift_flag"] is False
 
 
-def test_psi_matches_hand_computation(spark):
+def test_psi_matches_hand_computation(spark, monkeypatch):
+    monkeypatch.setattr(drift, "_PSI_BIN_WIDTH", 10.0)
     # ref: 3 rows in bin0, 1 in bin1; cur: 1 in bin0, 3 in bin1 (w=10)
     ref = _frame(spark, [("a", 1.0), ("a", 2.0), ("a", 3.0), ("a", 11.0)])
     cur = _frame(spark, [("a", 4.0), ("a", 12.0), ("a", 13.0), ("a", 14.0)])
-    r = population_stability(ref, cur, ["grp"], "value", 10.0).collect()[0]
+    r = population_stability(ref, cur).collect()[0]
     s, b, n = 0.5, 2, 4
     expected = 0.0
     for nr, nc in ((3, 1), (1, 3)):
@@ -108,7 +114,7 @@ def test_registry_scorecard_shape(spark):
         assert r["ks_flag"] is False, (r["event_type"], r["ks"])
 
 
-def test_scorecard_equals_parents(spark):
+def test_scorecard_equals_parents(spark, monkeypatch):
     """Fusion correctness: drift_scorecard's psi/ks columns (and both
     flags) must equal population_stability ⋈ ks_statistic run
     separately on the same frames — including a group present on only
@@ -119,27 +125,25 @@ def test_scorecard_equals_parents(spark):
         population_stability,
     )
 
-    ref = _frame(
-        spark,
-        [("a", 1.0), ("a", 2.0), ("a", 11.0), ("b", 3.0), ("only_ref", 1.0)],
-    )
-    cur = _frame(
-        spark,
-        [("a", 4.0), ("a", 12.0), ("a", 13.0), ("b", 30.0)],
-    )
+    ref_rows = [("a", 1.0), ("a", 2.0), ("a", 11.0), ("b", 3.0), ("only_ref", 1.0)]
+    cur_rows = [("a", 4.0), ("a", 12.0), ("a", 13.0), ("b", 30.0)]
+    ev = "event_type string, value double"
+    ref, cur = _frame(spark, ref_rows, ev), _frame(spark, cur_rows, ev)
+    monkeypatch.setattr(drift, "_SCORECARD_BIN_WIDTH", 10.0)
+    monkeypatch.setattr(drift, "_PSI_BIN_WIDTH", 10.0)
     fused = {
-        r["grp"]: r
-        for r in drift_scorecard(ref, cur, ["grp"], "value", 10.0).collect()
+        r["event_type"]: r
+        for r in drift_scorecard(ref, cur).collect()
     }
     psi = {
-        r["grp"]: r
+        r["dim"]: r
         for r in population_stability(
-            ref, cur, ["grp"], "value", 10.0
+            _frame(spark, ref_rows), _frame(spark, cur_rows)
         ).collect()
     }
     ks = {
-        r["grp"]: r
-        for r in ks_statistic(ref, cur, ["grp"], "value", 10.0).collect()
+        r["event_type"]: r
+        for r in ks_statistic(ref, cur, ["event_type"], "value", 10.0).collect()
     }
     assert set(fused) == set(psi) == set(ks) == {"a", "b", "only_ref"}
     for g, r in fused.items():
@@ -180,7 +184,7 @@ def test_ks_identical_windows_is_zero(spark):
 
     rows = [("a", float(v % 100)) for v in range(400)]
     df = _frame(spark, rows)
-    r = ks_statistic(df, df, ["grp"], "value", 25.0).collect()[0]
+    r = ks_statistic(df, df, ["dim"], "val", 25.0).collect()[0]
     assert r["ks"] == 0.0 and r["drift_flag"] is False
 
 
@@ -193,7 +197,7 @@ def test_ks_matches_hand_computation(spark):
         ks_statistic,
     )
 
-    r = ks_statistic(ref, cur, ["grp"], "value", 10.0).collect()[0]
+    r = ks_statistic(ref, cur, ["dim"], "val", 10.0).collect()[0]
     assert r["ks"] == 0.5
     assert r["n_bins"] == 2
     assert r["drift_flag"] is True  # 0.5 > 0.1
@@ -260,8 +264,8 @@ def test_ks_is_symmetric_and_bounded(spark):
 
     a = _frame(spark, [("g", float(v % 37)) for v in range(150)])
     b = _frame(spark, [("g", float((v * 7) % 61)) for v in range(90)])
-    r_ab = ks_statistic(a, b, ["grp"], "value", 10.0).collect()[0]
-    r_ba = ks_statistic(b, a, ["grp"], "value", 10.0).collect()[0]
+    r_ab = ks_statistic(a, b, ["dim"], "val", 10.0).collect()[0]
+    r_ba = ks_statistic(b, a, ["dim"], "val", 10.0).collect()[0]
     assert r_ab["ks"] == r_ba["ks"]
     assert 0.0 <= r_ab["ks"] <= 1.0
     assert (r_ab["n_ref"], r_ab["n_cur"]) == (r_ba["n_cur"], r_ba["n_ref"])

@@ -80,9 +80,7 @@ def test_hash_split_total_disjoint_stable(spark):
     from mape_calculation_and_anonymization_spark.operators.sampling import hash_split
 
     df = spark.range(20000).withColumnRenamed("id", "k")
-    out = df.withColumn(
-        "split", hash_split("k", {"train": 0.8, "val": 0.1, "test": 0.1})
-    )
+    out = df.withColumn("split", hash_split("k"))
     counts = {
         r["split"]: r["n"]
         for r in out.groupBy("split").agg(F.count("*").alias("n")).collect()
@@ -97,40 +95,33 @@ def test_hash_split_total_disjoint_stable(spark):
     again = {r["k"]: r["split"] for r in out.collect()}
     assert first == again
 
-    with pytest.raises(ValueError):
-        hash_split("k", {"train": 0.8, "val": 0.1})  # doesn't sum to 1
-
-    # single-band degenerate case assigns everything to that band
-    one = df.withColumn("split", hash_split("k", {"all": 1.0}))
-    assert one.filter(F.col("split") == "all").count() == 20000
-
 
 def test_stratified_sample_rates(spark):
     df = (
         spark.range(30000)
-        .withColumnRenamed("id", "k")
-        .withColumn("lang", F.when(F.col("k") % 2 == 0, "en").otherwise("de"))
+        .withColumnRenamed("id", "doc_id")
+        .withColumn("lang", F.when(F.col("doc_id") % 2 == 0, "en").otherwise("de"))
     )
-    out = stratified_sample(df, "k", "lang", {"en": 0.5, "de": 0.1})
+    out = stratified_sample(df)
     counts = {r["lang"]: r["n"] for r in out.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    assert abs(counts["en"] / 15000 - 0.5) < 0.03
-    assert abs(counts["de"] / 15000 - 0.1) < 0.03
-    # default rate 0 drops unknown strata entirely
+    assert abs(counts["en"] / 15000 - 0.6) < 0.03
+    assert abs(counts["de"] / 15000 - 0.25) < 0.03
+    # unknown strata keep the default 5%
     df2 = df.withColumn("lang", F.lit("fr"))
-    assert stratified_sample(df2, "k", "lang", {"en": 0.5}).count() == 0
+    assert abs(stratified_sample(df2).count() / 30000 - 0.05) < 0.01
 
 
 def test_redact_pii(spark):
     df = spark.createDataFrame(
         [
-            Row(t="mail bob.smith+x@corp.example.com now"),
-            Row(t="ssn 123-45-6789 phone 415-555-1234 done"),
-            Row(t="server at 192.168.1.250 port"),
-            Row(t="call (415) 555-0199 or +1 415.555.0123"),
-            Row(t="clean text stays untouched"),
+            Row(dirty="mail bob.smith+x@corp.example.com now"),
+            Row(dirty="ssn 123-45-6789 phone 415-555-1234 done"),
+            Row(dirty="server at 192.168.1.250 port"),
+            Row(dirty="call (415) 555-0199 or +1 415.555.0123"),
+            Row(dirty="clean text stays untouched"),
         ]
     )
-    got = [r["r"] for r in df.select(redact_pii("t").alias("r")).collect()]
+    got = [r["r"] for r in df.select(redact_pii().alias("r")).collect()]
     assert got[0] == "mail <EMAIL> now"
     assert got[1] == "ssn <SSN> phone <PHONE> done"
     assert got[2] == "server at <IP> port"
@@ -155,10 +146,14 @@ def test_ngram_repetition_ratio(spark):
     assert got[2] == 0.0
 
 
-def test_chunk_documents(spark):
+def test_chunk_documents(spark, monkeypatch):
+    from mape_calculation_and_anonymization_spark.operators import text as text_ops
+
+    monkeypatch.setattr(text_ops, "_CHUNK_TOKENS", 4)
+    monkeypatch.setattr(text_ops, "_CHUNK_OVERLAP", 2)
     text = " ".join(f"w{i}" for i in range(10))
     df = spark.createDataFrame([Row(doc_id=1, text=text)])
-    out = chunk_documents(df, "doc_id", "text", chunk_tokens=4, overlap=2).collect()
+    out = chunk_documents(df).collect()
     # starts at 0,2,4,6,8 → 5 chunks; last chunks shorter
     assert [r["chunk_idx"] for r in out] == [0, 1, 2, 3, 4]
     assert out[0]["chunk_text"] == "w0 w1 w2 w3"
@@ -170,8 +165,6 @@ def test_chunk_documents(spark):
     for r in out:
         covered.update(r["chunk_text"].split(" "))
     assert covered == set(text.split(" "))
-    with pytest.raises(ValueError):
-        chunk_documents(df, "doc_id", "text", chunk_tokens=4, overlap=4)
 
 
 def test_fill_hourly_gaps_forward_fills(spark):
@@ -209,7 +202,8 @@ def test_pagerank_matches_numpy_power_iteration(spark, monkeypatch):
     # path graph 0-1-2-3 plus a hub 4 connected to all
     edges = [(0, 1), (1, 2), (2, 3), (4, 0), (4, 1), (4, 2), (4, 3)]
     df = spark.createDataFrame(edges, ["id_a", "id_b"])
-    got = {r["id"]: r["rank"] for r in pagerank(df, iterations=15).collect()}
+    monkeypatch.setattr(graph, "_PAGERANK_ITERATIONS", 15)
+    got = {r["id"]: r["rank"] for r in pagerank(df).collect()}
 
     # numpy reference: identical undirected semantics, same iterations
     n, d = 5, 0.85
@@ -228,8 +222,6 @@ def test_pagerank_matches_numpy_power_iteration(spark, monkeypatch):
 
     import pytest
 
-    with pytest.raises(ValueError):
-        pagerank(df, iterations=0)
     monkeypatch.setattr(graph, "_PAGERANK_CHECKPOINT_EVERY", 0)
     with pytest.raises(ValueError):
         pagerank(df)
@@ -243,15 +235,16 @@ def test_pagerank_checkpoint_cadence_is_value_invariant(spark, monkeypatch):
 
     edges = [(0, 1), (1, 2), (2, 3), (4, 0), (4, 1), (4, 2), (4, 3)]
     df = spark.createDataFrame(edges, ["id_a", "id_b"])
+    monkeypatch.setattr(graph, "_PAGERANK_ITERATIONS", 7)
     monkeypatch.setattr(graph, "_PAGERANK_CHECKPOINT_EVERY", 1)
     per_round = {
         r["id"]: r["rank"]
-        for r in pagerank(df, iterations=7).collect()
+        for r in pagerank(df).collect()
     }
     monkeypatch.setattr(graph, "_PAGERANK_CHECKPOINT_EVERY", 3)
     batched = {
         r["id"]: r["rank"]
-        for r in pagerank(df, iterations=7).collect()
+        for r in pagerank(df).collect()
     }
     assert per_round.keys() == batched.keys()
     for i in per_round:
@@ -288,7 +281,7 @@ def test_pagerank_releases_cache_when_iteration_fails(spark, monkeypatch):
     monkeypatch.setattr(cls, "localCheckpoint", flaky)
     monkeypatch.setattr(graph, "_PAGERANK_CHECKPOINT_EVERY", 1)
     with pytest.raises(RuntimeError, match="injected"):
-        pagerank(df, iterations=5)
+        pagerank(df)
     assert len(calls) == 4
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
@@ -307,10 +300,10 @@ def test_cooccurrence_edges_uncapped_matches_bruteforce(spark):
         (1, "b", 1), (5, "b", 1),                        # cross-bucket edge
         (2, "a", 0),                                     # duplicate row: no dup edge
     ]
-    df = spark.createDataFrame(rows, ["user_id", "t", "m"])
+    df = spark.createDataFrame(rows, ["user_id", "event_type", "m"])
     got = {
         (r["u"], r["v"])
-        for r in cooccurrence_edges(df, "user_id", ["t", "m"]).collect()
+        for r in cooccurrence_edges(df).collect()
     }
     want = set()
     buckets = {}
@@ -321,7 +314,7 @@ def test_cooccurrence_edges_uncapped_matches_bruteforce(spark):
     assert got == want
 
 
-def test_cooccurrence_edges_hot_bucket_cap(spark, caplog):
+def test_cooccurrence_edges_hot_bucket_cap(spark, caplog, monkeypatch):
     import logging
 
     from mape_calculation_and_anonymization_spark.operators.graph import (
@@ -333,21 +326,21 @@ def test_cooccurrence_edges_hot_bucket_cap(spark, caplog):
     # dropped BEFORE expansion, the normal edge survives, and the drop
     # is logged (no-silent-caps)
     rows = [(i, "viral", 0) for i in range(8)] + [(100, "a", 1), (101, "a", 1)]
-    df = spark.createDataFrame(rows, ["user_id", "t", "m"])
+    df = spark.createDataFrame(rows, ["user_id", "event_type", "m"])
+    monkeypatch.setattr(graph, "_COOCCURRENCE_MAX_BUCKET", 4)
     with caplog.at_level(
         logging.WARNING, logger="mape_calculation_and_anonymization_spark.operators.graph"
     ):
         got = {
             (r["u"], r["v"])
-            for r in cooccurrence_edges(
-                df, "user_id", ["t", "m"], max_bucket_size=4
-            ).collect()
+            for r in cooccurrence_edges(df).collect()
         }
     assert got == {(100, 101)}
     assert any("dropped 1 hot bucket" in m for m in caplog.messages)
     # a cap ABOVE every bucket is a no-op and logs nothing
     caplog.clear()
-    full = cooccurrence_edges(df, "user_id", ["t", "m"], max_bucket_size=100)
+    monkeypatch.setattr(graph, "_COOCCURRENCE_MAX_BUCKET", 100)
+    full = cooccurrence_edges(df)
     assert full.count() == 28 + 1
     assert not caplog.messages
 
@@ -361,11 +354,11 @@ def test_hash_uniform_is_portable_and_uniform(spark, monkeypatch):
         hash_uniform,
     )
 
-    df = spark.range(2000).select(F.col("id"))
+    df = spark.range(2000).select(F.col("id").alias("doc_id"))
     monkeypatch.setattr(sampling, "_UNIFORM_SALT", "t")
     got = {
-        r["id"]: r["u"]
-        for r in df.select("id", hash_uniform("id").alias("u")).collect()
+        r["doc_id"]: r["u"]
+        for r in df.select("doc_id", hash_uniform().alias("u")).collect()
     }
     want = {
         int(i): u
@@ -386,11 +379,11 @@ def test_pps_sample_expected_size_and_determinism(spark):
 
     docs = spark.range(5000).select(
         F.col("id").alias("doc_id"),
-        (F.col("id") % 100 + 1).alias("w"),
+        (F.col("id") % 100 + 1).alias("n_chars"),
     )
-    s1 = pps_sample(docs, "doc_id", "w", expected_k=500)
+    s1 = pps_sample(docs)
     ids1 = sorted(r["doc_id"] for r in s1.collect())
-    ids2 = sorted(r["doc_id"] for r in pps_sample(docs, "doc_id", "w", 500).collect())
+    ids2 = sorted(r["doc_id"] for r in pps_sample(docs).collect())
     assert ids1 == ids2  # content-stable: identical sample on re-run
     assert 350 < len(ids1) < 650  # ~500 expected
     # high-weight rows must be overrepresented vs low-weight rows
@@ -402,26 +395,26 @@ def test_pps_sample_expected_size_and_determinism(spark):
     assert all(0 < p <= 1.0 for p in ps)
 
 
-def test_mixture_weights_temperature_semantics(spark):
+def test_mixture_weights_temperature_semantics(spark, monkeypatch):
     from mape_calculation_and_anonymization_spark.operators.sampling import (
         mixture_weights,
     )
 
     rows = [("big",)] * 900 + [("small",)] * 100
-    df = spark.createDataFrame(rows, "src string")
-    w = {
-        r["src"]: r
-        for r in mixture_weights(df, "src", alpha=0.5).collect()
-    }
+    df = spark.createDataFrame(rows, "source string")
+    monkeypatch.setattr(sampling, "_MIXTURE_ALPHA", 0.5)
+    w = {r["source"]: r for r in mixture_weights(df).collect()}
     assert w["big"]["raw_share"] == 0.9
     # alpha<1 upsamples the tail: small's weight > raw share, boost > 1
     assert w["small"]["weight"] > 0.1 and w["small"]["boost"] > 1.0
     assert abs(w["big"]["weight"] + w["small"]["weight"] - 1.0) < 1e-5
     # alpha=1 keeps raw shares exactly
-    w1 = {r["src"]: r for r in mixture_weights(df, "src", alpha=1.0).collect()}
+    monkeypatch.setattr(sampling, "_MIXTURE_ALPHA", 1.0)
+    w1 = {r["source"]: r for r in mixture_weights(df).collect()}
     assert w1["big"]["weight"] == 0.9 and w1["big"]["boost"] == 1.0
     # alpha=0 is uniform
-    w0 = {r["src"]: r for r in mixture_weights(df, "src", alpha=0.0).collect()}
+    monkeypatch.setattr(sampling, "_MIXTURE_ALPHA", 0.0)
+    w0 = {r["source"]: r for r in mixture_weights(df).collect()}
     assert w0["big"]["weight"] == 0.5 and w0["small"]["weight"] == 0.5
 
 
@@ -434,9 +427,9 @@ def test_pps_sample_null_weights_excluded(spark):
     )
 
     docs = spark.createDataFrame(
-        [(1, 10), (2, None), (3, 10)], "doc_id long, w long"
+        [(1, 10), (2, None), (3, 10)], "doc_id long, n_chars long"
     )
-    got = pps_sample(docs, "doc_id", "w", expected_k=10).collect()
+    got = pps_sample(docs).collect()
     assert all(r["doc_id"] != 2 for r in got)
     assert all(r["incl_p"] == 1.0 for r in got)  # k >= population
     assert sorted(r["doc_id"] for r in got) == [1, 3]
@@ -464,7 +457,7 @@ def test_shuffle_manifest_is_exact_global_hash_order(spark, monkeypatch):
         monkeypatch.setattr(sampling, "_SHUFFLE_SHARDS", shards)
         got = {
             r["doc_id"]: r["shuffle_rank"]
-            for r in shuffle_manifest(df, "doc_id").collect()
+            for r in shuffle_manifest(df).collect()
         }
         assert got == want, f"n_shards={shards}"
     # dense 0..n-1, content-stable under a different salt only
@@ -475,30 +468,27 @@ def test_shuffle_manifest_is_exact_global_hash_order(spark, monkeypatch):
     )
     g2 = {
         r["doc_id"]: r["shuffle_rank"]
-        for r in shuffle_manifest(with_null, "doc_id").collect()
+        for r in shuffle_manifest(with_null).collect()
     }
     assert None not in g2 and len(g2) == 50
     assert sorted(g2.values()) == list(range(50))  # still dense from 0
 
 
-def test_token_budget_allocation_caps_and_sums(spark):
+def test_token_budget_allocation_caps_and_sums(spark, monkeypatch):
     from mape_calculation_and_anonymization_spark.operators.sampling import (
         token_budget_allocation,
     )
 
     docs = spark.createDataFrame(
-        [("a", 100), ("b", 900)], "src string, toks long"
+        [("a", 100), ("b", 900)], "source string, n_chars long"
     )
     # budget=499 (NOT 500): with shares (.1,.9) and alpha=0.5 the
     # weights are exactly .25/.75, and 500·0.75 = 375.0 sits EXACTLY
     # on the floor boundary — a 1-ulp pow() difference would flip the
     # assertion. 499 keeps ~0.25 of real margin on both sides.
-    got = {
-        r["src"]: r
-        for r in token_budget_allocation(
-            docs, "src", "toks", budget_tokens=499, alpha=0.5
-        ).collect()
-    }
+    monkeypatch.setattr(sampling, "_TOKEN_BUDGET", 499)
+    monkeypatch.setattr(sampling, "_MIXTURE_ALPHA", 0.5)
+    got = {r["source"]: r for r in token_budget_allocation(docs).collect()}
     # raw plans 124.75/374.25; 'a' only HAS 100 tokens → capped
     assert got["a"]["planned_tokens"] == 100
     assert got["a"]["sampling_rate"] == 1.0
@@ -506,29 +496,23 @@ def test_token_budget_allocation_caps_and_sums(spark):
     assert 0 < got["b"]["sampling_rate"] < 1
 
 
-def test_token_budget_repetition_regimes(spark):
+def test_token_budget_repetition_regimes(spark, monkeypatch):
     """Over-budget groups repeat up to the epoch ceiling; the deficit
-    accounts for what the ceiling refused; param validation bites."""
-    import pytest
-
+    accounts for what the ceiling refused."""
     from mape_calculation_and_anonymization_spark.operators.sampling import (
         token_budget_repetition,
     )
 
     docs = spark.createDataFrame(
-        [("a", 100), ("b", 900)], "src string, toks long"
+        [("a", 100), ("b", 900)], "lang string, n_chars long"
     )
     # budget 1.999 × the 1000 tokens (same off-boundary discipline as
     # the sibling test): weights .25/.75 at alpha=.5 → targets
     # 499.75/1499.25; 'a' wants ~5 epochs of its 100 tokens → clipped
     # at 3; 'b' wants ~1.67 → under the ceiling, fully placed
-    got = {
-        r["src"]: r
-        for r in token_budget_repetition(
-            docs, "src", "toks", budget_multiple=1.999, alpha=0.5,
-            max_epochs=3.0,
-        ).collect()
-    }
+    monkeypatch.setattr(sampling, "_REPETITION_BUDGET_MULTIPLE", 1.999)
+    monkeypatch.setattr(sampling, "_REPETITION_MAX_EPOCHS", 3.0)
+    got = {r["lang"]: r for r in token_budget_repetition(docs).collect()}
     assert got["a"]["target_tokens"] == 499
     assert got["a"]["planned_tokens"] == 300
     assert got["a"]["epochs"] == 3.0
@@ -536,13 +520,9 @@ def test_token_budget_repetition_regimes(spark):
     assert got["b"]["planned_tokens"] == got["b"]["target_tokens"] == 1499
     assert 1 < got["b"]["epochs"] < 2
     assert got["b"]["deficit_tokens"] == 0
-    with pytest.raises(ValueError):
-        token_budget_repetition(
-            docs, "src", "toks", budget_multiple=1.0, max_epochs=0
-        )
 
 
-def test_token_budget_repetition_one_epoch_matches_allocation(spark):
+def test_token_budget_repetition_one_epoch_matches_allocation(spark, monkeypatch):
     """The property the VERDICT r11 item-5 mandate pins: with
     max_epochs=1.0 (budget ≤ what exists, no repetition allowed) the
     repetition plan is EXACTLY token_budget_allocation's — same
@@ -554,23 +534,17 @@ def test_token_budget_repetition_one_epoch_matches_allocation(spark):
 
     docs = spark.createDataFrame(
         [("a", 317), ("b", 911), ("c", 53), ("d", 4096)],
-        "src string, toks long",
-    )
+        "source string, n_chars long",
+    ).withColumn("lang", F.col("source"))
     # half the 5377 tokens: 0.5 · 5377 = 2688.5 exactly, so both plans
-    # multiply the same budget into the same weights
-    base = {
-        r["src"]: r
-        for r in token_budget_allocation(
-            docs, "src", "toks", budget_tokens=2688.5, alpha=0.7
-        ).collect()
-    }
-    rep = {
-        r["src"]: r
-        for r in token_budget_repetition(
-            docs, "src", "toks", budget_multiple=0.5, alpha=0.7,
-            max_epochs=1.0,
-        ).collect()
-    }
+    # multiply the same budget into the same weights (the repetition
+    # plan's temperature is 0.5)
+    monkeypatch.setattr(sampling, "_TOKEN_BUDGET", 2688.5)
+    monkeypatch.setattr(sampling, "_MIXTURE_ALPHA", 0.5)
+    monkeypatch.setattr(sampling, "_REPETITION_BUDGET_MULTIPLE", 0.5)
+    monkeypatch.setattr(sampling, "_REPETITION_MAX_EPOCHS", 1.0)
+    base = {r["source"]: r for r in token_budget_allocation(docs).collect()}
+    rep = {r["lang"]: r for r in token_budget_repetition(docs).collect()}
     assert set(base) == set(rep)
     for k in base:
         assert rep[k]["planned_tokens"] == base[k]["planned_tokens"], k
@@ -614,7 +588,7 @@ def test_leakage_safe_split_guarantee(spark):
         [(i,) for i in split], ["doc_id"]
     ).withColumn(
         "split",
-        hash_split("doc_id", {"train": 0.8, "val": 0.1, "test": 0.1}),
+        hash_split("doc_id"),
     )
     naive = {r["doc_id"]: r["split"] for r in corpus.collect()}
     naive_straddling = [

@@ -4,6 +4,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from mape_calculation_and_anonymization_spark.operators import ivf
 from mape_calculation_and_anonymization_spark.operators.ivf import (
     build_ivf_index,
     ivf_top_k,
@@ -28,15 +29,16 @@ def _vectors(n=120, dim=16, seed=5):
     return [(i, [float(x) for x in vecs[i]]) for i in range(n)]
 
 
-def test_ivf_full_probe_equals_brute_force(spark):
+def test_ivf_full_probe_equals_brute_force(spark, monkeypatch):
     rows = _vectors()
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
     queries = df.filter(F.col("vec_id") < 8)
     assigned, centroids = build_ivf_index(df, n_clusters=6)
-    # nprobe = k → exact: must equal brute force
+    # nprobe = n_clusters → exact: must equal brute force
+    monkeypatch.setattr(ivf, "_IVF_NPROBE", 6)
     ivf_all = {
         (r["query_id"], r["rank"]): r["neighbor_id"]
-        for r in ivf_top_k(assigned, centroids, queries, k=3, nprobe=6).collect()
+        for r in ivf_top_k(assigned, centroids, queries).collect()
     }
     bf = {
         (r["query_id"], r["rank"]): r["neighbor_id"]
@@ -45,14 +47,16 @@ def test_ivf_full_probe_equals_brute_force(spark):
     assert ivf_all == bf
 
 
-def test_ivf_partial_probe_recall(spark):
+def test_ivf_partial_probe_recall(spark, monkeypatch):
     rows = _vectors()
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
     queries = df.filter(F.col("vec_id") < 20)
     assigned, centroids = build_ivf_index(df, n_clusters=8)
+    monkeypatch.setattr(ivf, "_IVF_TOP_K", 1)
+    monkeypatch.setattr(ivf, "_IVF_NPROBE", 3)
     got = {
         (r["query_id"], r["neighbor_id"])
-        for r in ivf_top_k(assigned, centroids, queries, k=1, nprobe=3).collect()
+        for r in ivf_top_k(assigned, centroids, queries).collect()
         if r["rank"] == 1
     }
     bf = {

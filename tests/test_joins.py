@@ -14,7 +14,7 @@ from mape_calculation_and_anonymization_spark.operators.joins import (
 def _frames(spark):
     trades = pd.DataFrame(
         {
-            "sym": ["A", "A", "A", "B", "B", "A"],
+            "zone": ["A", "A", "A", "B", "B", "A"],
             "ts": pd.to_datetime(
                 ["2024-01-01 09:00:01", "2024-01-01 09:00:05",
                  "2024-01-01 09:00:10", "2024-01-01 09:00:03",
@@ -25,12 +25,12 @@ def _frames(spark):
     )
     quotes = pd.DataFrame(
         {
-            "sym": ["A", "A", "B", "B"],
+            "zone": ["A", "A", "B", "B"],
             "ts": pd.to_datetime(
                 ["2024-01-01 09:00:00", "2024-01-01 09:00:05",
                  "2024-01-01 09:00:02", "2024-01-01 09:00:08"]
             ),
-            "px": [100.0, 101.0, 200.0, 201.0],
+            "hourly_volume": [100.0, 101.0, 200.0, 201.0],
         }
     )
     return trades, quotes
@@ -42,53 +42,40 @@ def test_asof_backward_matches_pandas(spark):
         asof_join(
             spark.createDataFrame(trades),
             spark.createDataFrame(quotes),
-            on="ts",
-            by=["sym"],
         )
-        .orderBy("sym", "ts")
+        .orderBy("zone", "ts")
         .collect()
     )
     expect = pd.merge_asof(
         trades.sort_values("ts"), quotes.sort_values("ts"),
-        on="ts", by="sym", direction="backward",
-    ).sort_values(["sym", "ts"])
+        on="ts", by="zone", direction="backward",
+    ).sort_values(["zone", "ts"])
     for g, (_, e) in zip(got, expect.iterrows()):
-        assert g["sym"] == e["sym"] and g["qty"] == e["qty"]
-        if pd.isna(e["px"]):
-            assert g["px"] is None  # 08:59:59 trade precedes all quotes
+        assert g["zone"] == e["zone"] and g["qty"] == e["qty"]
+        if pd.isna(e["hourly_volume"]):
+            assert g["hourly_volume"] is None  # 08:59:59 trade precedes all quotes
         else:
-            assert g["px"] == e["px"]
-
-
-def test_asof_empty_by_guarded(spark):
-    trades, quotes = _frames(spark)
-    l, r = spark.createDataFrame(trades.drop(columns="sym")), spark.createDataFrame(
-        quotes.drop(columns="sym")
-    )
-    with pytest.raises(ValueError, match="unpartitioned"):
-        asof_join(l, r, on="ts")
+            assert g["hourly_volume"] == e["hourly_volume"]
 
 
 def test_asof_shared_column_raises(spark):
     trades, quotes = _frames(spark)
-    quotes = quotes.rename(columns={"px": "qty"})  # clash with left's qty
+    trades = trades.rename(columns={"qty": "hourly_volume"})  # clash with right's
     with pytest.raises(ValueError, match="both sides"):
         asof_join(
             spark.createDataFrame(trades),
             spark.createDataFrame(quotes),
-            on="ts",
-            by=["sym"],
         )
 
 
 def test_salted_join_equals_plain_join(spark):
     # skewed probe: one hot key
     probe = spark.createDataFrame(
-        [(1, i) for i in range(500)] + [(k, 0) for k in range(2, 20)], ["k", "v"]
+        [(1, i) for i in range(500)] + [(k, 0) for k in range(2, 20)], ["l_partkey", "v"]
     )
-    build = spark.createDataFrame([(k, f"d{k}") for k in range(0, 15)], ["k", "d"])
-    plain = probe.join(build, "k", "inner").groupBy("k").count()
-    salted = salted_join(probe, build, "k", salt=4).groupBy("k").count()
+    build = spark.createDataFrame([(k, f"d{k}") for k in range(0, 15)], ["l_partkey", "d"])
+    plain = probe.join(build, "l_partkey", "inner").groupBy("l_partkey").count()
+    salted = salted_join(probe, build).groupBy("l_partkey").count()
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
 
 
@@ -98,25 +85,23 @@ def test_asof_tolerance_matches_pandas(spark):
         asof_join(
             spark.createDataFrame(trades),
             spark.createDataFrame(quotes),
-            on="ts",
-            by=["sym"],
             tolerance="5 SECONDS",
         )
-        .orderBy("sym", "ts")
+        .orderBy("zone", "ts")
         .collect()
     )
     expect = pd.merge_asof(
         trades.sort_values("ts"), quotes.sort_values("ts"),
-        on="ts", by="sym", direction="backward",
+        on="ts", by="zone", direction="backward",
         tolerance=pd.Timedelta(seconds=5),
-    ).sort_values(["sym", "ts"])
+    ).sort_values(["zone", "ts"])
     assert len(got) == len(expect)
     for g, (_, e) in zip(got, expect.iterrows()):
-        assert g["sym"] == e["sym"] and g["qty"] == e["qty"]
-        if pd.isna(e["px"]):
-            assert g["px"] is None  # match exists but beyond tolerance
+        assert g["zone"] == e["zone"] and g["qty"] == e["qty"]
+        if pd.isna(e["hourly_volume"]):
+            assert g["hourly_volume"] is None  # match exists but beyond tolerance
         else:
-            assert g["px"] == e["px"]
+            assert g["hourly_volume"] == e["hourly_volume"]
 
 
 def test_touch_attribution_hand_example(spark):
@@ -169,7 +154,6 @@ def test_touch_attribution_never_cartesian(spark):
     out = touch_attribution(
         ev.filter(F.col("event_type") == "purchase"),
         ev.filter(F.col("event_type") == "click"),
-        lookback="INTERVAL 1 HOUR",
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
@@ -187,15 +171,15 @@ def test_merge_upsert_hand_example(spark):
 
     target = spark.createDataFrame(
         [(1, 10.0, "a"), (2, 20.0, "b"), (3, 30.0, "c")],
-        "k long, v double, tag string",
+        "c_custkey long, v double, tag string",
     )
     updates = spark.createDataFrame(
         [(2, 99.0, None), (4, 40.0, "d")],
-        "k long, v double, tag string",
+        "c_custkey long, v double, tag string",
     )
     got = {
-        r["k"]: (r["v"], r["tag"], r["action"])
-        for r in merge_upsert(target, updates, "k").collect()
+        r["c_custkey"]: (r["v"], r["tag"], r["action"])
+        for r in merge_upsert(target, updates).collect()
     }
     assert got == {
         1: (10.0, "a", "unchanged"),
@@ -212,10 +196,10 @@ def test_merge_upsert_schema_mismatch_raises(spark):
         merge_upsert,
     )
 
-    t = spark.createDataFrame([(1, 1.0)], "k long, v double")
-    u = spark.createDataFrame([(1, 1.0)], "k long, other double")
+    t = spark.createDataFrame([(1, 1.0)], "c_custkey long, v double")
+    u = spark.createDataFrame([(1, 1.0)], "c_custkey long, other double")
     with pytest.raises(ValueError, match="share a schema"):
-        merge_upsert(t, u, "k")
+        merge_upsert(t, u)
 
 
 def test_merge_upsert_duplicate_update_keys_raise(spark):
@@ -227,7 +211,7 @@ def test_merge_upsert_duplicate_update_keys_raise(spark):
         merge_upsert,
     )
 
-    t = spark.createDataFrame([(1, 1.0)], "k long, v double")
-    u = spark.createDataFrame([(1, 2.0), (1, 3.0)], "k long, v double")
+    t = spark.createDataFrame([(1, 1.0)], "c_custkey long, v double")
+    u = spark.createDataFrame([(1, 2.0), (1, 3.0)], "c_custkey long, v double")
     with pytest.raises(ValueError, match="at most one source row"):
-        merge_upsert(t, u, "k")
+        merge_upsert(t, u)

@@ -15,7 +15,7 @@ def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
     import glob
 
     assert len(glob.glob(f"{path}/part-*.parquet")) == 16
-    compact_parquet(spark, path, target_partitions=2)
+    compact_parquet(spark, path)
     assert len(glob.glob(f"{path}/part-*.parquet")) <= 2
     back = spark.read.parquet(path)
     assert back.count() == 10_000
@@ -39,15 +39,17 @@ def test_read_parquet_merged_schema_evolution(spark, tmp_path):
     assert rows[0] is None and rows[7] == 14
 
 
-def test_zvalue_interleaves_bits(spark):
+def test_zvalue_interleaves_bits(spark, monkeypatch):
+    from mape_calculation_and_anonymization_spark.operators import layout
     from mape_calculation_and_anonymization_spark.operators.layout import zvalue
 
     df = spark.createDataFrame(
         [(1, 0), (0, 1), (3, 0), (0, 3), (3, 3)], ["x", "y"]
     )
+    monkeypatch.setattr(layout, "_Z_BITS", 2)
     got = [
         r["z"]
-        for r in df.select(zvalue(["x", "y"], bits=2).alias("z"))
+        for r in df.select(zvalue(["x", "y"]).alias("z"))
         .orderBy("x", "y")
         .collect()
     ]
@@ -57,8 +59,9 @@ def test_zvalue_interleaves_bits(spark):
 
     import pytest
 
+    monkeypatch.setattr(layout, "_Z_BITS", 8)
     with pytest.raises(ValueError):
-        zvalue(["x", "y"], bits=32)  # 64 bits > signed long
+        zvalue([f"c{i}" for i in range(8)])  # 8 x 8 = 64 bits > signed long
 
 
 def test_zorder_write_tightens_rowgroup_spans(spark, tmp_path):
@@ -71,14 +74,14 @@ def test_zorder_write_tightens_rowgroup_spans(spark, tmp_path):
     df = (
         spark.range(40_000)
         .select(
-            (F.col("id") % 199).alias("a"),
-            ((F.col("id") * 7919) % 211).alias("b"),
+            (F.col("id") % 199).alias("user_id"),
+            ((F.col("id") * 7919) % 211).alias("day"),
             F.col("id").alias("payload"),
         )
     )
     plain, zed = str(tmp_path / "plain"), str(tmp_path / "zed")
     df.repartition(8).write.parquet(plain)
-    zorder_write_auto(df, zed, cols=["a", "b"], bits=8, n_files=8)
+    zorder_write_auto(df, zed)
 
     def avg_span(path, col):
         import glob
@@ -101,8 +104,8 @@ def test_zorder_write_tightens_rowgroup_spans(spark, tmp_path):
     # with Morton bit boundaries, so each file straddles two prefix
     # blocks in the worst case — still a strict span win on every
     # participating column, which is the property skipping needs.
-    assert avg_span(zed, "a") < avg_span(plain, "a") * 0.75
-    assert avg_span(zed, "b") < avg_span(plain, "b") * 0.75
+    assert avg_span(zed, "user_id") < avg_span(plain, "user_id") * 0.75
+    assert avg_span(zed, "day") < avg_span(plain, "day") * 0.75
     # content preserved
     assert (
         spark.read.parquet(zed).agg(F.sum("payload")).first()[0]
@@ -127,9 +130,10 @@ def test_versioned_write_read_time_travel(spark, tmp_path):
         read_versioned(spark, path, version=2)
 
 
-def test_quantile_rank_column_uniform_buckets(spark):
+def test_quantile_rank_column_uniform_buckets(spark, monkeypatch):
     import numpy as np
 
+    from mape_calculation_and_anonymization_spark.operators import layout
     from mape_calculation_and_anonymization_spark.operators.layout import (
         quantile_rank_column,
     )
@@ -139,7 +143,8 @@ def test_quantile_rank_column_uniform_buckets(spark):
         (F.exp(F.col("id") % 11) + F.col("id") / 1000.0).alias("x")
     )
     bits = 4
-    out = df.select(quantile_rank_column(df, "x", bits=bits).alias("b"))
+    monkeypatch.setattr(layout, "_Z_BITS", bits)
+    out = df.select(quantile_rank_column(df, "x").alias("b"))
     counts = {
         r["b"]: r["n"] for r in out.groupBy("b").agg(F.count("*").alias("n")).collect()
     }
@@ -150,7 +155,7 @@ def test_quantile_rank_column_uniform_buckets(spark):
     assert max(counts.values()) < 3 * ideal
     # monotone: larger x never gets a smaller bucket
     rows = sorted(
-        df.select("x", quantile_rank_column(df, "x", bits=bits).alias("b")).collect(),
+        df.select("x", quantile_rank_column(df, "x").alias("b")).collect(),
         key=lambda r: r["x"],
     )
     bs = [r["b"] for r in rows]
@@ -163,15 +168,15 @@ def test_zorder_write_auto_on_doubles(spark, tmp_path):
     )
 
     df = spark.range(10_000).select(
-        (F.col("id") % 977 * 1.37).alias("x"),
-        ((F.col("id") * 7919) % 983 / 3.0).alias("y"),
+        (F.col("id") % 977 * 1.37).alias("user_id"),
+        ((F.col("id") * 7919) % 983 / 3.0).alias("day"),
         F.col("id").alias("payload"),
     )
     path = str(tmp_path / "zauto")
-    zorder_write_auto(df, path, cols=["x", "y"], bits=4, n_files=4)
+    zorder_write_auto(df, path)
     back = spark.read.parquet(path)
     assert back.count() == 10_000
-    assert set(back.columns) == {"x", "y", "payload"}  # helper cols dropped
+    assert set(back.columns) == {"user_id", "day", "payload"}  # helper cols dropped
     assert back.agg(F.sum("payload")).first()[0] == sum(range(10_000))
 
 
@@ -205,7 +210,7 @@ def test_zvalue_saturates_out_of_range(spark):
     df = spark.createDataFrame(rows, ["x"])
     got = {
         r["x"]: r["z"]
-        for r in df.select("x", zvalue(["x"], bits=8).alias("z")).collect()
+        for r in df.select("x", zvalue(["x"]).alias("z")).collect()
     }
     assert got[1] == 1
     assert got[255] == 255

@@ -8,6 +8,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from mape_calculation_and_anonymization_spark.operators import privacy
 from mape_calculation_and_anonymization_spark.operators.privacy import (
     band,
     dp_noisy_counts,
@@ -18,43 +19,48 @@ from mape_calculation_and_anonymization_spark.operators.privacy import (
 )
 
 
-def _people(spark):
-    # (id, nation, segment): nation 'A' has 5 rows, 'B' has 2, 'C' has 1
+def _people(spark, segment="c_mktsegment"):
+    # (id, nation, segment): nation 'A' has 5 rows, 'B' has 2, 'C' has 1;
+    # the segment lands in column ``segment`` (None: nowhere), and the
+    # other quasi column is constant
     rows = [
         (1, "A", "x"), (2, "A", "x"), (3, "A", "y"), (4, "A", "y"),
         (5, "A", "z"), (6, "B", "x"), (7, "B", "x"), (8, "C", "y"),
     ]
-    return spark.createDataFrame(rows, ["id", "nation", "segment"])
+    df = spark.createDataFrame(rows, ["id", "c_nationkey", "_seg"])
+    for c in ("c_mktsegment", "bal_band"):
+        df = df.withColumn(c, F.col("_seg") if c == segment else F.lit("m"))
+    return df.drop("_seg")
 
 
 def test_band_floors_negatives(spark):
     df = spark.createDataFrame(
-        [(1, -0.5), (2, 999.9), (3, 1000.0), (4, -1000.0)], ["id", "v"]
+        [(1, -0.5), (2, 999.9), (3, 1000.0), (4, -1000.0)], ["id", "c_acctbal"]
     )
-    got = {r["id"]: r["b"] for r in df.select("id", band("v", 1000).alias("b")).collect()}
+    got = {r["id"]: r["b"] for r in df.select("id", band(1000).alias("b")).collect()}
     assert got == {1: -1000, 2: 0, 3: 1000, 4: -1000}
 
 
-def test_k_anonymize_suppresses_small_classes(spark):
-    out = k_anonymize(_people(spark), ["nation"], k=5)
-    kept = sorted(r["id"] for r in out.collect())
+def test_k_anonymize_suppresses_small_classes(spark, monkeypatch):
+    people = _people(spark, segment="bal_band")
+    monkeypatch.setattr(privacy, "_K_ANONYMITY", 5)
+    kept = sorted(r["id"] for r in k_anonymize(people).collect())
     assert kept == [1, 2, 3, 4, 5]  # only nation A reaches k=5
     # k=1 suppresses nothing
-    assert k_anonymize(_people(spark), ["nation"], k=1).count() == 8
+    monkeypatch.setattr(privacy, "_K_ANONYMITY", 1)
+    assert k_anonymize(people).count() == 8
 
 
 def test_l_diversity_report(spark):
     rep = {
-        r["nation"]: (r["class_size"], r["n_sensitive"], r["l_diverse"])
-        for r in l_diversity_report(
-            _people(spark), ["nation"], "segment", l=2
-        ).collect()
+        r["c_nationkey"]: (r["class_size"], r["n_sensitive"], r["l_diverse"])
+        for r in l_diversity_report(_people(spark)).collect()
     }
     assert rep == {"A": (5, 3, True), "B": (2, 1, False), "C": (1, 1, False)}
 
 
 def test_equivalence_class_histogram_conserves_records(spark):
-    hist = equivalence_class_histogram(_people(spark), ["nation"]).collect()
+    hist = equivalence_class_histogram(_people(spark, segment=None)).collect()
     by_size = {r["class_size"]: r for r in hist}
     assert by_size[5]["n_classes"] == 1 and by_size[5]["n_records"] == 5
     assert by_size[1]["reident_risk"] == 1.0
@@ -76,19 +82,20 @@ def test_laplace_noise_matches_reference_draw(spark):
     got = {
         r["k"]: r["n"]
         for r in df.select(
-            "k", laplace_noise(F.col("k"), epsilon=1.0, seed=42).alias("n")
+            "k", laplace_noise(F.col("k")).alias("n")
         ).collect()
     }
     for k, v in got.items():
         assert v == pytest.approx(_py_laplace(k, 1.0, 42), rel=1e-12)
 
 
-def test_laplace_noise_scales_inverse_epsilon(spark):
+def test_laplace_noise_scales_inverse_epsilon(spark, monkeypatch):
     keys = [(f"k{i}",) for i in range(200)]
     df = spark.createDataFrame(keys, ["k"])
     def mean_abs(eps):
+        monkeypatch.setattr(privacy, "_DP_EPSILON", eps)
         return (
-            df.select(F.abs(laplace_noise(F.col("k"), eps, 7)).alias("a"))
+            df.select(F.abs(laplace_noise(F.col("k"))).alias("a"))
             .agg(F.avg("a"))
             .first()[0]
         )
@@ -96,15 +103,16 @@ def test_laplace_noise_scales_inverse_epsilon(spark):
     assert mean_abs(0.1) / mean_abs(1.0) == pytest.approx(10.0, rel=1e-9)
 
 
-def test_dp_noisy_counts_deterministic_and_near_truth(spark):
-    df = _people(spark)
-    a = {r["nation"]: r["noisy_count"] for r in dp_noisy_counts(df, ["nation"], 1.0, 42).collect()}
-    b = {r["nation"]: r["noisy_count"] for r in dp_noisy_counts(df, ["nation"], 1.0, 42).collect()}
+def test_dp_noisy_counts_deterministic_and_near_truth(spark, monkeypatch):
+    df = _people(spark).withColumnRenamed("c_nationkey", "event_type")
+    a = {r["event_type"]: r["noisy_count"] for r in dp_noisy_counts(df).collect()}
+    b = {r["event_type"]: r["noisy_count"] for r in dp_noisy_counts(df).collect()}
     assert a == b  # deterministic under fixed seed
     truth = {"A": 5, "B": 2, "C": 1}
     for k, v in a.items():
         assert abs(v - truth[k]) < 15  # P(|Laplace(1)| > 15) ≈ 3e-7
-    c = {r["nation"]: r["noisy_count"] for r in dp_noisy_counts(df, ["nation"], 1.0, 43).collect()}
+    monkeypatch.setattr(privacy, "_DP_SEED", 43)
+    c = {r["event_type"]: r["noisy_count"] for r in dp_noisy_counts(df).collect()}
     assert a != c  # seed actually keys the draw
 
 
@@ -115,10 +123,8 @@ def test_forecast_accuracy_known_values(spark):
 
     # one series: actuals 10, 20, 30; forecasts 12, 18, 30
     rows = [("z", 1, 12.0, 10.0), ("z", 2, 18.0, 20.0), ("z", 3, 30.0, 30.0)]
-    df = spark.createDataFrame(rows, ["zone", "t", "forecast", "actual"])
-    m = forecast_accuracy(
-        df, ["zone"], order_cols=["t"]
-    ).collect()[0]
+    df = spark.createDataFrame(rows, ["zone", "hour", "forecast", "actual"])
+    m = forecast_accuracy(df.withColumn("proxy_date", F.lit(0))).collect()[0]
     assert m["mae"] == pytest.approx(4.0 / 3)
     assert m["rmse"] == pytest.approx(math.sqrt(8.0 / 3))
     assert m["bias"] == pytest.approx(0.0)
@@ -136,43 +142,31 @@ def test_forecast_accuracy_perfect_and_zero(spark):
     )
 
     rows = [("z", 1, 0.0, 0.0), ("z", 2, 5.0, 5.0)]
-    df = spark.createDataFrame(rows, ["zone", "t", "forecast", "actual"])
-    m = forecast_accuracy(df, ["zone"], order_cols=["t"]).collect()[0]
+    df = spark.createDataFrame(rows, ["zone", "hour", "forecast", "actual"])
+    m = forecast_accuracy(df.withColumn("proxy_date", F.lit(0))).collect()[0]
     # both-zero slot contributes 0 to smape (reference convention)
     assert m["smape"] == 0.0 and m["mae"] == 0.0 and m["rmse"] == 0.0
-    # without order_cols the mase column is absent
-    cols = forecast_accuracy(df, ["zone"]).columns
-    assert "mase" not in cols
 
 
 def test_noise_key_collision_free_and_null_safe(spark):
-    """ADVICE r7: the raw concat_ws('|') key let ('a|b','c') and
-    ('a','b|c') share one noise draw and skipped NULLs. The md5-per-
-    column encoding must give every distinct group tuple a distinct
-    key, and NULL must differ from every real value (including '')."""
+    """ADVICE r7: the raw key skipped NULLs. The md5 encoding must give
+    every distinct group value a distinct key, and NULL must differ
+    from every real value (including '' and the '-' sentinel)."""
     from mape_calculation_and_anonymization_spark.operators.privacy import noise_key
 
     df = spark.createDataFrame(
-        [("a|b", "c"), ("a", "b|c"), (None, "c"), ("", "c"), ("-", "c")],
-        ["x", "y"],
+        [("a|b",), ("a",), (None,), ("",), ("-",)], "event_type string"
     )
-    keys = [r["k"] for r in df.select(noise_key(["x", "y"]).alias("k")).collect()]
+    keys = [r["k"] for r in df.select(noise_key().alias("k")).collect()]
     assert len(set(keys)) == len(keys)
 
 
-def test_dp_noisy_counts_warns_on_test_seed(spark):
-    """The default seed=42 is reproducible test noise, not DP — the
-    operator must say so loudly (ADVICE r7)."""
-    import warnings
-
-    df = _people(spark)
-    with pytest.warns(UserWarning, match="TEST seed"):
-        dp_noisy_counts(df, ["nation"]).collect()
-    with warnings.catch_warnings():
-        # a non-default seed must be silent (UserWarning only — py4j's
-        # socket ResourceWarnings are not under test)
-        warnings.simplefilter("error", UserWarning)
-        dp_noisy_counts(df, ["nation"], 1.0, 7).collect()
+def _classes(spark, rows):
+    """(class, sensitive value) rows as t_closeness_report input: the
+    class in c_nationkey, one c_mktsegment, the value in bal_band."""
+    return spark.createDataFrame(
+        rows, "c_nationkey string, bal_band string"
+    ).withColumn("c_mktsegment", F.lit("m"))
 
 
 def test_t_closeness_hand_example(spark):
@@ -187,10 +181,10 @@ def test_t_closeness_hand_example(spark):
         ("g1", "a"), ("g1", "a"), ("g1", "b"), ("g1", "c"),
         ("g2", "a"), ("g2", "a"), ("g2", "b"), ("g2", "c"),
     ]
-    df = spark.createDataFrame(rows, "grp string, s string")
+    df = _classes(spark, rows)
     got = {
-        r["grp"]: (r["class_size"], r["n_sensitive"], r["tvd"], r["t_violation"])
-        for r in t_closeness_report(df, ["grp"], "s", t=0.1).collect()
+        r["c_nationkey"]: (r["class_size"], r["n_sensitive"], r["tvd"], r["t_violation"])
+        for r in t_closeness_report(df).collect()
     }
     # both classes have the exact global distribution → tvd = 0
     assert got == {"g1": (4, 3, 0.0, False), "g2": (4, 3, 0.0, False)}
@@ -198,8 +192,8 @@ def test_t_closeness_hand_example(spark):
     # skewed class: g3 all-a (p=(1,0,0)); global becomes a×8,b×2,c×2
     # → q=(2/3,1/6,1/6); tvd(g3) = 0.5*(|1-2/3|) + 0.5*(1-2/3) = 1/3
     rows2 = rows + [("g3", "a")] * 4
-    df2 = spark.createDataFrame(rows2, "grp string, s string")
-    got2 = {r["grp"]: r["tvd"] for r in t_closeness_report(df2, ["grp"], "s").collect()}
+    df2 = _classes(spark, rows2)
+    got2 = {r["c_nationkey"]: r["tvd"] for r in t_closeness_report(df2).collect()}
     assert abs(got2["g3"] - (1 / 3)) < 1e-6
     # g1/g2: p=(0.5,0.25,0.25) vs q=(2/3,1/6,1/6):
     # tvd = 0.5*(1/6 + 1/12 + 1/12) = 1/6
@@ -212,8 +206,8 @@ def test_t_closeness_violation_flag(spark):
     )
 
     rows = [("g1", "a")] * 9 + [("g2", "b")]
-    df = spark.createDataFrame(rows, "grp string, s string")
-    got = {r["grp"]: r["t_violation"] for r in t_closeness_report(df, ["grp"], "s", t=0.2).collect()}
+    df = _classes(spark, rows)
+    got = {r["c_nationkey"]: r["t_violation"] for r in t_closeness_report(df).collect()}
     # g2 is all-b while global is 90% a → tvd 0.9 > 0.2
     assert got["g2"] is True and got["g1"] is False
 
@@ -226,10 +220,10 @@ def test_t_closeness_null_sensitive_is_a_category(spark):
     )
 
     rows = [("g1", "a"), ("g1", None), ("g2", "a"), ("g2", None)]
-    df = spark.createDataFrame(rows, "grp string, s string")
+    df = _classes(spark, rows)
     got = {
-        r["grp"]: (r["class_size"], r["n_sensitive"], r["tvd"])
-        for r in t_closeness_report(df, ["grp"], "s").collect()
+        r["c_nationkey"]: (r["class_size"], r["n_sensitive"], r["tvd"])
+        for r in t_closeness_report(df).collect()
     }
     # both classes exactly match the global distribution (a: .5, NULL: .5)
     assert got == {"g1": (2, 2, 0.0), "g2": (2, 2, 0.0)}

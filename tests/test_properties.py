@@ -46,8 +46,8 @@ def test_normalize_text_idempotent(spark, texts):
     )
 
     df = spark.createDataFrame([(t,) for t in texts], ["text"])
-    once = df.select(normalize_text("text").alias("text"))
-    twice = once.select(normalize_text("text").alias("n2"))
+    once = df.select(normalize_text().alias("text"))
+    twice = once.select(normalize_text().alias("n2"))
     pairs = zip(
         [r["text"] for r in once.collect()],
         [r["n2"] for r in twice.collect()],
@@ -68,7 +68,7 @@ def test_word_bigrams_count_invariant(spark, texts):
 
     df = spark.createDataFrame([(t,) for t in texts], ["text"])
     rows = df.select(
-        F.size(word_bigrams("text")).alias("nb"),
+        F.size(word_bigrams()).alias("nb"),
         token_count("text").alias("nt"),
     ).collect()
     for r in rows:
@@ -116,6 +116,9 @@ def test_pack_sequences_partition_invariants(spark, texts, budget):
     """Packing is a PARTITION of the corpus: every doc assigned exactly
     once, seq ids non-negative and equal to floor(prefix/budget) under
     id order, n_tokens faithful to the tokenizer."""
+    from unittest import mock
+
+    from mape_calculation_and_anonymization_spark.operators import text
     from mape_calculation_and_anonymization_spark.operators.text import (
         pack_sequences,
     )
@@ -123,10 +126,13 @@ def test_pack_sequences_partition_invariants(spark, texts, budget):
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
     )
-    out = pack_sequences(docs, budget=budget, shard_size=3)
-    rows = sorted(
-        (r["doc_id"], r["n_tokens"], r["seq_id"]) for r in out.collect()
-    )
+    with mock.patch.object(text, "_PACK_BUDGET", budget), mock.patch.object(
+        text, "_PACK_SHARD_SIZE", 3
+    ):
+        rows = sorted(
+            (r["doc_id"], r["n_tokens"], r["seq_id"])
+            for r in pack_sequences(docs).collect()
+        )
     assert [d for d, _, _ in rows] == list(range(len(texts)))
     prefix = 0
     for _, n_tokens, seq_id in rows:
@@ -155,7 +161,7 @@ def test_zvalue_injective_and_bounded(spark, pairs):
 
     df = spark.createDataFrame(pairs, ["x", "y"])
     zs = [
-        r["z"] for r in df.select(zvalue(["x", "y"], bits=8).alias("z")).collect()
+        r["z"] for r in df.select(zvalue(["x", "y"]).alias("z")).collect()
     ]
     assert len(set(zs)) == len(pairs)  # injective
     assert all(0 <= z < (1 << 16) for z in zs)
@@ -163,13 +169,16 @@ def test_zvalue_injective_and_bounded(spark, pairs):
 
 @given(
     fracs=st.lists(
-        st.floats(min_value=0.05, max_value=1.0), min_size=1, max_size=5
+        st.floats(min_value=0.05, max_value=1.0), min_size=2, max_size=5
     )
 )
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 def test_hash_split_total_for_arbitrary_fractions(spark, fracs):
     """Any normalized fraction vector yields a TOTAL assignment: every
     row lands in exactly one band, band names exhaust the input."""
+    from unittest import mock
+
+    from mape_calculation_and_anonymization_spark.operators import sampling
     from mape_calculation_and_anonymization_spark.operators.sampling import (
         hash_split,
     )
@@ -178,7 +187,8 @@ def test_hash_split_total_for_arbitrary_fractions(spark, fracs):
     names = [f"b{i}" for i in range(len(fracs))]
     fractions = {n: f / total for n, f in zip(names, fracs)}
     df = spark.range(2000).withColumnRenamed("id", "k")
-    out = df.withColumn("split", hash_split("k", fractions))
+    with mock.patch.object(sampling, "_SPLIT_FRACTIONS", fractions):
+        out = df.withColumn("split", hash_split("k"))
     counts = {
         r["split"]: r["n"]
         for r in out.groupBy("split").agg(F.count("*").alias("n")).collect()
@@ -223,25 +233,23 @@ def test_asof_join_matches_pandas_on_random_frames(spark, data, tol_s):
     )
     left = pd.DataFrame(
         {
-            "sym": [k for k, _ in left_rows],
+            "zone": [k for k, _ in left_rows],
             "ts": [base + pd.Timedelta(seconds=s) for _, s in left_rows],
             "qty": list(range(len(left_rows))),
         }
     )
     right = pd.DataFrame(
         {
-            "sym": [k for k, _ in right_rows],
+            "zone": [k for k, _ in right_rows],
             "ts": [base + pd.Timedelta(seconds=s) for _, s in right_rows],
-            "px": [float(100 + s) for _, s in right_rows],
+            "hourly_volume": [float(100 + s) for _, s in right_rows],
         }
     )
     got = {
-        (r["sym"], r["ts"], r["qty"]): r["px"]
+        (r["zone"], r["ts"], r["qty"]): r["hourly_volume"]
         for r in asof_join(
             spark.createDataFrame(left),
             spark.createDataFrame(right),
-            on="ts",
-            by=["sym"],
             tolerance=None if tol_s is None else f"{tol_s} SECONDS",
         ).collect()
     }
@@ -249,17 +257,17 @@ def test_asof_join_matches_pandas_on_random_frames(spark, data, tol_s):
         left.sort_values(["ts", "qty"]),
         right.sort_values("ts"),
         on="ts",
-        by="sym",
+        by="zone",
         direction="backward",
         tolerance=None if tol_s is None else pd.Timedelta(seconds=tol_s),
     )
     assert len(got) == len(expect)
     for _, e in expect.iterrows():
-        g = got[(e["sym"], e["ts"], e["qty"])]
-        if pd.isna(e["px"]):
-            assert g is None, (e["sym"], e["ts"], g)
+        g = got[(e["zone"], e["ts"], e["qty"])]
+        if pd.isna(e["hourly_volume"]):
+            assert g is None, (e["zone"], e["ts"], g)
         else:
-            assert g == e["px"], (e["sym"], e["ts"], g, e["px"])
+            assert g == e["hourly_volume"], (e["zone"], e["ts"], g, e["hourly_volume"])
 
 
 @given(
@@ -280,12 +288,16 @@ def test_k_anonymize_never_emits_small_class(spark, rows, k):
     exactly the input rows of qualifying classes (no mutation)."""
     from collections import Counter
 
+    from unittest import mock
+
+    from mape_calculation_and_anonymization_spark.operators import privacy
     from mape_calculation_and_anonymization_spark.operators.privacy import (
         k_anonymize,
     )
 
-    df = spark.createDataFrame(rows, ["qa", "qb", "s"])
-    out = [tuple(r) for r in k_anonymize(df, ["qa", "qb"], k).collect()]
+    df = spark.createDataFrame(rows, ["c_nationkey", "c_mktsegment", "s"])
+    with mock.patch.object(privacy, "_K_ANONYMITY", k):
+        out = [tuple(r) for r in k_anonymize(df).collect()]
     sizes = Counter((qa, qb) for qa, qb, _ in out)
     assert all(n >= k for n in sizes.values())
     expected_classes = {
@@ -303,12 +315,18 @@ def test_laplace_noise_bounded_and_seeded(spark, seed, eps):
     CDF endpoints), and keyed deterministically on (seed, key)."""
     import math
 
+    from unittest import mock
+
+    from mape_calculation_and_anonymization_spark.operators import privacy
     from mape_calculation_and_anonymization_spark.operators.privacy import (
         laplace_noise,
     )
 
     df = spark.createDataFrame([(f"k{i}",) for i in range(16)], ["k"])
-    col = laplace_noise(F.col("k"), eps, seed)
+    with mock.patch.object(privacy, "_DP_EPSILON", eps), mock.patch.object(
+        privacy, "_DP_SEED", seed
+    ):
+        col = laplace_noise(F.col("k"))
     a = [r["n"] for r in df.select(col.alias("n")).collect()]
     b = [r["n"] for r in df.select(col.alias("n")).collect()]
     assert a == b
@@ -336,7 +354,9 @@ def test_drift_folds_match_numpy_model(spark, hist):
     groups) are exactly the guards the Jeffreys smoothing and
     try_divide exist for."""
     import math
+    from unittest import mock
 
+    from mape_calculation_and_anonymization_spark.operators import drift
     from mape_calculation_and_anonymization_spark.operators.drift import (
         ks_statistic,
         population_stability,
@@ -351,14 +371,16 @@ def test_drift_folds_match_numpy_model(spark, hist):
         ref_rows = [("g", None)]
     if not cur_rows:
         cur_rows = [("g", None)]
-    ref = spark.createDataFrame(ref_rows, "grp string, value double")
-    cur = spark.createDataFrame(cur_rows, "grp string, value double")
+    ref = spark.createDataFrame(ref_rows, "dim string, val double")
+    cur = spark.createDataFrame(cur_rows, "dim string, val double")
 
     live = [(b, nr, nc) for b, nr, nc in hist if nr + nc > 0]
+    psi_of = mock.patch.object(drift, "_PSI_BIN_WIDTH", w)
     if not live:
         # both windows empty -> no cells at all -> empty results
-        assert population_stability(ref, cur, ["grp"], "value", w).count() == 0
-        assert ks_statistic(ref, cur, ["grp"], "value", w).count() == 0
+        with psi_of:
+            assert population_stability(ref, cur).count() == 0
+        assert ks_statistic(ref, cur, ["dim"], "val", w).count() == 0
         return
 
     nrt = sum(nr for _, nr, _ in live)
@@ -370,11 +392,12 @@ def test_drift_folds_match_numpy_model(spark, hist):
         * math.log(((nr + s) / (nrt + s * nb)) / ((nc + s) / (nct + s * nb)))
         for _, nr, nc in live
     )
-    r = population_stability(ref, cur, ["grp"], "value", w).collect()[0]
+    with psi_of:
+        r = population_stability(ref, cur).collect()[0]
     assert (r["n_ref"], r["n_cur"], r["n_bins"]) == (nrt, nct, nb)
     assert r["psi"] == round(psi_exp, 6)
 
-    k = ks_statistic(ref, cur, ["grp"], "value", w).collect()[0]
+    k = ks_statistic(ref, cur, ["dim"], "val", w).collect()[0]
     if nrt == 0 or nct == 0:
         assert k["ks"] is None and k["drift_flag"] is None
     else:
@@ -411,11 +434,11 @@ def test_merge_upsert_key_set_and_action_invariants(spark, tgt, upd):
         merge_upsert,
     )
 
-    t = spark.createDataFrame(tgt, "k long, v double")
-    u = spark.createDataFrame(upd, "k long, v double") if upd else (
-        spark.createDataFrame([], "k long, v double")
+    t = spark.createDataFrame(tgt, "c_custkey long, v double")
+    u = spark.createDataFrame(upd, "c_custkey long, v double") if upd else (
+        spark.createDataFrame([], "c_custkey long, v double")
     )
-    got = {r["k"]: r for r in merge_upsert(t, u, "k").collect()}
+    got = {r["c_custkey"]: r for r in merge_upsert(t, u).collect()}
     tk, uk = {k for k, _ in tgt}, {k for k, _ in upd}
     assert set(got) == tk | uk
     tv, uv = dict(tgt), dict(upd)
@@ -436,21 +459,25 @@ def test_merge_upsert_key_set_and_action_invariants(spark, tgt, upd):
 def test_pps_sample_subset_probability_invariants(spark, weights, k):
     """Sample ⊆ corpus, NULL/zero weights never sampled, incl_p ∈
     (0, 1], and the sample is identical on rerun (content-stable)."""
+    from unittest import mock
+
+    from mape_calculation_and_anonymization_spark.operators import sampling
     from mape_calculation_and_anonymization_spark.operators.sampling import (
         pps_sample,
     )
 
     rows = [(i, w if w > 0 else None) for i, w in enumerate(weights)]
-    df = spark.createDataFrame(rows, "doc_id long, w long")
-    got = pps_sample(df, "doc_id", "w", expected_k=k).collect()
+    df = spark.createDataFrame(rows, "doc_id long, n_chars long")
+    patch = mock.patch.object(sampling, "_PPS_EXPECTED_K", k)
+    with patch:
+        got = pps_sample(df).collect()
     ids = sorted(r["doc_id"] for r in got)
     assert len(set(ids)) == len(ids)
     valid = {i for i, w in rows if w is not None}
     assert set(ids) <= valid
     assert all(0.0 < r["incl_p"] <= 1.0 for r in got)
-    again = sorted(
-        r["doc_id"] for r in pps_sample(df, "doc_id", "w", expected_k=k).collect()
-    )
+    with patch:
+        again = sorted(r["doc_id"] for r in pps_sample(df).collect())
     assert ids == again
 
 
@@ -463,13 +490,17 @@ def test_mixture_weights_normalization_and_monotonicity(spark, counts, alpha):
     """Weights form a distribution (sum 1 within rounding); alpha=1
     reproduces raw shares; alpha=0 is uniform; alpha<1 never DOWN-
     boosts the smallest group below the largest's boost."""
+    from unittest import mock
+
+    from mape_calculation_and_anonymization_spark.operators import sampling
     from mape_calculation_and_anonymization_spark.operators.sampling import (
         mixture_weights,
     )
 
     rows = [(f"s{i}",) for i, n in enumerate(counts) for _ in range(n)]
-    df = spark.createDataFrame(rows, "src string")
-    got = {r["src"]: r for r in mixture_weights(df, "src", alpha=alpha).collect()}
+    df = spark.createDataFrame(rows, "source string")
+    with mock.patch.object(sampling, "_MIXTURE_ALPHA", alpha):
+        got = {r["source"]: r for r in mixture_weights(df).collect()}
     assert abs(sum(r["weight"] for r in got.values()) - 1.0) < 1e-4
     if alpha == 1.0:
         for r in got.values():
@@ -499,13 +530,12 @@ def test_t_closeness_tvd_bounds_and_identity(spark, rows):
         t_closeness_report,
     )
 
-    df = spark.createDataFrame(rows, "grp string, s string")
-    got = t_closeness_report(df, ["grp"], "s").collect()
+    schema = "c_nationkey string, c_mktsegment string, bal_band string"
+    df = spark.createDataFrame([(g, "m", s) for g, s in rows], schema)
+    got = t_closeness_report(df).collect()
     assert all(-1e-9 <= r["tvd"] <= 1.0 + 1e-9 for r in got)
-    one = spark.createDataFrame(
-        [("g", s) for _, s in rows], "grp string, s string"
-    )
-    got1 = t_closeness_report(one, ["grp"], "s").collect()
+    one = spark.createDataFrame([("g", "m", s) for _, s in rows], schema)
+    got1 = t_closeness_report(one).collect()
     assert len(got1) == 1 and abs(got1[0]["tvd"]) < 1e-9
 
 
@@ -524,6 +554,9 @@ def test_exact_substring_spans_matches_bruteforce(spark, docs):
     hard cases). Docs are single-space word joins so both tokenizers
     agree by construction; tokenizer edge semantics are pinned by the
     example tests."""
+    from unittest import mock
+
+    from mape_calculation_and_anonymization_spark.operators import dedup
     from mape_calculation_and_anonymization_spark.operators.dedup import (
         exact_substring_spans,
     )
@@ -560,10 +593,11 @@ def test_exact_substring_spans_matches_bruteforce(spark, docs):
             expected.add((d, start, prev_end, prev_end - start + 1))
 
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = {
-        (r["doc_id"], r["span_start"], r["span_end"], r["span_tokens"])
-        for r in exact_substring_spans(df, n=n).collect()
-    }
+    with mock.patch.object(dedup, "_SPAN_N", n):
+        got = {
+            (r["doc_id"], r["span_start"], r["span_end"], r["span_tokens"])
+            for r in exact_substring_spans(df).collect()
+        }
     assert got == expected
 
 
@@ -629,6 +663,9 @@ def test_contamination_near_dup_matches_bruteforce(
     random small-alphabet corpora (dense collisions; whole-text
     fallback grams for sub-3-token docs exercised by the size-0..2
     word lists)."""
+    from unittest import mock
+
+    from mape_calculation_and_anonymization_spark.operators import text
     from mape_calculation_and_anonymization_spark.operators.text import (
         contamination_near_dup,
     )
@@ -655,15 +692,14 @@ def test_contamination_near_dup_matches_bruteforce(
             if j >= thr:
                 expected[(td, bd)] = round(j, 6)
 
-    got = {
-        (r["train_id"], r["bench_id"]): r["jaccard_sim"]
-        for r in contamination_near_dup(
-            spark.createDataFrame(train, ["doc_id", "text"]),
-            spark.createDataFrame(bench, ["doc_id", "text"]),
-            n=n,
-            threshold=thr,
-        ).collect()
-    }
+    with mock.patch.object(text, "_NEAR_DUP_THRESHOLD", thr):
+        got = {
+            (r["train_id"], r["bench_id"]): r["jaccard_sim"]
+            for r in contamination_near_dup(
+                spark.createDataFrame(train, ["doc_id", "text"]),
+                spark.createDataFrame(bench, ["doc_id", "text"]),
+            ).collect()
+        }
     assert got == expected
 
 
@@ -682,6 +718,9 @@ def test_source_overlap_matrix_matches_bruteforce(spark, docs):
     """source_overlap_matrix == set-arithmetic reference on random
     corpora (n=3, cap inert at 3 sources): shared distinct shingles
     per pair, coefficient over full per-source sets."""
+    from unittest import mock
+
+    from mape_calculation_and_anonymization_spark.operators import text
     from mape_calculation_and_anonymization_spark.operators.text import (
         source_overlap_matrix,
     )
@@ -718,12 +757,13 @@ def test_source_overlap_matrix_matches_bruteforce(spark, docs):
                 )
 
     df = spark.createDataFrame(rows, ["source", "text"])
-    got = {
-        (r["source_a"], r["source_b"]): (
-            r["shared_shingles"], r["overlap_coeff"]
-        )
-        for r in source_overlap_matrix(df, n=n).collect()
-    }
+    with mock.patch.object(text, "_OVERLAP_N", n):
+        got = {
+            (r["source_a"], r["source_b"]): (
+                r["shared_shingles"], r["overlap_coeff"]
+            )
+            for r in source_overlap_matrix(df).collect()
+        }
     assert got == expected
 
 
@@ -885,8 +925,6 @@ def test_decontaminate_corpus_matches_python_reference(spark, train, bench):
         for r in decontaminate_corpus(
             spark.createDataFrame(train_rows, ["doc_id", "text"]),
             spark.createDataFrame(bench_rows, ["doc_id", "text"]),
-            n=n,
-            drop_threshold=thr,
         ).collect()
     }
     assert got == expected

@@ -334,12 +334,13 @@ def _dump(java: str, classpath: str, path) -> None:
 
 
 @pytest.fixture
-def real_java(tmp_path):
+def real_java(tmp_path, monkeypatch):
     java = session._java()
     if java is None:
         pytest.skip("no java")
     root = tmp_path / "root"
     (root / "conf").mkdir(parents=True)
+    monkeypatch.setattr(session, "_CDS_ROOT", str(root))
     jars = tmp_path / "spark" / "jars"
     jars.mkdir(parents=True)
     return java, root, session._cds_classpath(str(root / "conf"), str(tmp_path / "spark"))
@@ -349,7 +350,7 @@ def test_publish_leaves_a_live_writers_candidate_alone(real_java):
     java, root, cp = real_java
     live = root / f"k.jsa.{os.getpid()}"
     live.write_bytes(b"\0" * 4096)  # junk: it would fail a probe
-    archive = session._publish_cds(str(root), "k", java, cp, "1g")
+    archive = session._publish_cds("k", java, cp, "1g")
     assert archive == str(root / "k.jsa")
     assert sorted(os.listdir(root)) == ["conf", live.name]
 
@@ -362,14 +363,14 @@ def test_publish_deletes_a_truncated_candidate_and_renames_a_good_one(real_java,
     with open(truncated, "wb") as out:
         subprocess.run(["head", "-c", str(good.stat().st_size // 2), str(good)],
                        stdout=out, check=True)
-    session._publish_cds(str(root), "k", java, cp, "1g")
+    session._publish_cds("k", java, cp, "1g")
     assert sorted(os.listdir(root)) == ["conf"]  # deleted, never renamed
 
     candidate = root / f"k.jsa.{_dead_pid()}"
     os.rename(good, candidate)
     (root / "other.jsa").write_bytes(b"\0")  # another key's archive
     (root / f"other.jsa.{_dead_pid()}").write_bytes(b"\0")
-    archive = session._publish_cds(str(root), "k", java, cp, "1g")
+    archive = session._publish_cds("k", java, cp, "1g")
     assert sorted(os.listdir(root)) == ["conf", "k.jsa"]
     assert os.path.getsize(archive) > 8192
 

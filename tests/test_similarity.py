@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from mape_calculation_and_anonymization_spark.operators import ivf, pq
 from mape_calculation_and_anonymization_spark.operators.similarity import (
     brute_force_top_k,
     cosine,
@@ -66,11 +67,11 @@ def test_embedding_near_duplicates(spark):
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
     pairs = {
         (r["id_a"], r["id_b"])
-        for r in embedding_near_duplicates(df, threshold=0.95).collect()
+        for r in embedding_near_duplicates(df).collect()
     }
     planted = {(i, n - 1 - i) for i in range(5)}
     assert planted <= pairs
-    # random gaussian vectors in 16-d essentially never hit 0.95 cosine
+    # random gaussian vectors in 16-d essentially never hit 0.98 cosine
     assert pairs == planted
 
 
@@ -92,7 +93,7 @@ def test_pq_codebooks_deterministic_and_codes_valid(spark):
     assert all(0 <= c < 16 for r in codes for c in r["codes"])
 
 
-def test_pq_recall_against_brute_force(spark):
+def test_pq_recall_against_brute_force(spark, monkeypatch):
     """ADC + exact re-rank recall on RANDOM vectors (PQ's adversarial
     case — no cluster structure to exploit): >=0.7 of brute-force
     top-10 at an 8x shortlist, and more shortlist must never hurt."""
@@ -116,11 +117,12 @@ def test_pq_recall_against_brute_force(spark):
     }
     got8 = {
         (r["query_id"], r["neighbor_id"])
-        for r in pq_top_k(emb, queries, cb, k=10, shortlist_factor=8).collect()
+        for r in pq_top_k(emb, queries, cb).collect()
     }
+    monkeypatch.setattr(pq, "_SHORTLIST_FACTOR", 16)
     got16 = {
         (r["query_id"], r["neighbor_id"])
-        for r in pq_top_k(emb, queries, cb, k=10, shortlist_factor=16).collect()
+        for r in pq_top_k(emb, queries, cb).collect()
     }
     assert len(got8 & bf) / len(bf) >= 0.7
     assert len(got16 & bf) >= len(got8 & bf)
@@ -141,10 +143,10 @@ def test_pq_max_queries_guard(spark, monkeypatch):
     cb = train_pq_codebooks(emb)
     monkeypatch.setattr(pq, "_MAX_QUERIES", 10)
     with pytest.raises(ValueError, match="max_queries"):
-        pq_top_k(emb, emb, cb, k=5)
+        pq_top_k(emb, emb, cb)
 
 
-def test_ivf_pq_exhaustive_probe_equals_pq_only(spark):
+def test_ivf_pq_exhaustive_probe_equals_pq_only(spark, monkeypatch):
     """With nprobe = n_clusters the coarse routing excludes nothing, so
     IVF+PQ must return the identical result set as the PQ-only path
     (same codebooks -> same approx distances -> same shortlist -> same
@@ -165,34 +167,21 @@ def test_ivf_pq_exhaustive_probe_equals_pq_only(spark):
     queries = emb.filter(F.col("vec_id") % 100 == 0)
     assigned, centroids = build_ivf_index(emb, n_clusters=16)
     cb = train_pq_codebooks(emb)
+    partial = {
+        (r["query_id"], r["neighbor_id"])
+        for r in ivf_pq_top_k(assigned, centroids, queries, cb).collect()
+    }
+    monkeypatch.setattr(pq, "_IVF_PQ_NPROBE", 16)
     full = {
         (r["query_id"], r["neighbor_id"], r["cosine_sim"])
-        for r in ivf_pq_top_k(
-            assigned, centroids, queries, cb, k=10, nprobe=16,
-            shortlist_factor=8,
-        ).collect()
+        for r in ivf_pq_top_k(assigned, centroids, queries, cb).collect()
     }
     pq_only = {
         (r["query_id"], r["neighbor_id"], r["cosine_sim"])
-        for r in pq_top_k(
-            emb, queries, cb, k=10, shortlist_factor=8
-        ).collect()
+        for r in pq_top_k(emb, queries, cb).collect()
     }
     assert full == pq_only
-    partial = {
-        (r["query_id"], r["neighbor_id"])
-        for r in ivf_pq_top_k(
-            assigned, centroids, queries, cb, k=10, nprobe=4,
-            shortlist_factor=8,
-        ).collect()
-    }
-    bf = {
-        (r["query_id"], r["neighbor_id"], r["cosine_sim"])
-        for r in ivf_pq_top_k(
-            assigned, centroids, queries, cb, k=10, nprobe=16,
-            shortlist_factor=8,
-        ).collect()
-    }
+    bf = full
     # partial probe recall against the exhaustive-probe answer
     full_pairs = {(q, n) for q, n, _ in bf}
     assert len(partial & full_pairs) / len(full_pairs) >= 0.5
@@ -216,7 +205,7 @@ def test_ann_recall_eval_curve(spark):
     assert vals[-1] == 1.0  # exhaustive probe == brute force
 
 
-def test_ivf_recall_curve_sets_match_ivf_top_k(spark):
+def test_ivf_recall_curve_sets_match_ivf_top_k(spark, monkeypatch):
     """ivf_recall_curve's single-scoring-pass derivation must produce,
     per budget, EXACTLY the result set of running ivf_top_k at that
     nprobe — the equivalence the one-pass optimization rests on. Pinned
@@ -231,12 +220,13 @@ def test_ivf_recall_curve_sets_match_ivf_top_k(spark):
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
     assigned, centroids = build_ivf_index(emb, n_clusters=4)
+    monkeypatch.setattr(ivf, "_IVF_TOP_K", 5)
+    monkeypatch.setattr(ivf, "_RECALL_K", 5)
     for p in (1, 2, 4):
+        monkeypatch.setattr(ivf, "_IVF_NPROBE", p)
         via_op = {
             (r["query_id"], r["neighbor_id"])
-            for r in ivf_top_k(
-                assigned, centroids, queries, k=5, nprobe=p
-            ).collect()
+            for r in ivf_top_k(assigned, centroids, queries).collect()
         }
         # reconstruct the same set through the curve operator's scored
         # frame by asking for the budget's hits against ITSELF: with
@@ -250,17 +240,15 @@ def test_ivf_recall_curve_sets_match_ivf_top_k(spark):
             ivf_recall_curve,
         )
 
+        monkeypatch.setattr(ivf, "_IVF_NPROBE", 4)
         exact = {
             (r["query_id"], r["neighbor_id"])
-            for r in ivf_top_k(
-                assigned, centroids, queries, k=5, nprobe=4
-            ).collect()
+            for r in ivf_top_k(assigned, centroids, queries).collect()
         }
+        monkeypatch.setattr(ivf, "_RECALL_BUDGETS", (p,))
         curve = {
             r["nprobe"]: r["n_hits"]
-            for r in ivf_recall_curve(
-                assigned, centroids, queries, k=5, budgets=(p,)
-            ).collect()
+            for r in ivf_recall_curve(assigned, centroids, queries).collect()
         }
         assert curve[p] == len(via_op & exact)
 
@@ -289,7 +277,7 @@ def test_semantic_dedup_planted_twins(spark):
     )
 
     _, centroids = build_ivf_index(emb, n_clusters=8)
-    out = semantic_dedup(corpus, centroids, threshold=0.98).collect()
+    out = semantic_dedup(corpus, centroids).collect()
     kept = {r["vec_id"] for r in out if r["kept"]}
     n_base = emb.count()
     assert len(out) == 2 * n_base
@@ -303,7 +291,7 @@ def test_semantic_dedup_planted_twins(spark):
     # deterministic rerun
     kept2 = {
         r["vec_id"]
-        for r in semantic_dedup(corpus, centroids, threshold=0.98).collect()
+        for r in semantic_dedup(corpus, centroids).collect()
         if r["kept"]
     }
     assert kept == kept2
@@ -323,7 +311,7 @@ def test_semantic_dedup_no_duplicates_keeps_everything(spark):
     )
 
     _, centroids = build_ivf_index(emb, n_clusters=8)
-    out = semantic_dedup(emb, centroids, threshold=0.98).collect()
+    out = semantic_dedup(emb, centroids).collect()
     assert all(r["kept"] for r in out)
     assert len(out) == emb.count()
 
@@ -343,7 +331,7 @@ def test_semantic_dedup_null_vectors_dropped(spark):
         "vec_id long, embedding array<double>",
     )
     _, centroids = build_ivf_index(base.filter("embedding IS NOT NULL"), n_clusters=2)
-    out = semantic_dedup(base, centroids, threshold=0.98).collect()
+    out = semantic_dedup(base, centroids).collect()
     assert sorted(r["vec_id"] for r in out) == [1, 2]
     assert all(r["kept"] for r in out)
 
@@ -366,7 +354,7 @@ def test_semantic_dedup_zero_vector_is_never_a_duplicate(spark):
     _, centroids = build_ivf_index(
         base.filter("vec_id < 3"), n_clusters=2
     )
-    out = {r["vec_id"]: r for r in semantic_dedup(base, centroids, threshold=0.99).collect()}
+    out = {r["vec_id"]: r for r in semantic_dedup(base, centroids).collect()}
     assert out[3]["centroid_sim"] is None
     assert out[3]["kept"] is True
     assert len(out) == 3
@@ -505,7 +493,7 @@ def test_semantic_dedup_gated_keep_rule(spark):
     out = {
         r["vec_id"]: r
         for r in semantic_dedup_gated(
-            gated, centroids, threshold=0.98
+            gated, centroids
         ).collect()
     }
     n_base = emb.count()
@@ -518,7 +506,7 @@ def test_semantic_dedup_gated_keep_rule(spark):
     assert not [
         r
         for r in semantic_dedup_gated(
-            none_pass, centroids, threshold=0.98
+            none_pass, centroids
         ).collect()
         if r["kept"]
     ]
@@ -530,7 +518,7 @@ def test_semantic_dedup_gated_keep_rule(spark):
     assert not [
         r
         for r in semantic_dedup_gated(
-            null_gate, centroids, threshold=0.98
+            null_gate, centroids
         ).collect()
         if r["kept"]
     ]
@@ -540,13 +528,13 @@ def test_semantic_dedup_gated_keep_rule(spark):
     kept_gated = {
         r["vec_id"]
         for r in semantic_dedup_gated(
-            all_pass, centroids, threshold=0.98
+            all_pass, centroids
         ).collect()
         if r["kept"]
     }
     kept_plain = {
         r["vec_id"]
-        for r in semantic_dedup(corpus, centroids, threshold=0.98).collect()
+        for r in semantic_dedup(corpus, centroids).collect()
         if r["kept"]
     }
     assert kept_gated == kept_plain
@@ -584,7 +572,7 @@ def test_ivf_add_conservation_and_assignment(spark):
         assert got[vid] == best, (vid, got[vid], best)
 
 
-def test_ivf_add_partial_probe_recall(spark):
+def test_ivf_add_partial_probe_recall(spark, monkeypatch):
     """Searching the incrementally-updated index at a partial probe
     budget still finds the planted near-twins that arrived in the
     drop: a twin's vector routes to (nearly) the same cell as its
@@ -603,7 +591,8 @@ def test_ivf_add_partial_probe_recall(spark):
     assigned0, centroids = build_ivf_index(standing, n_clusters=4)
     updated = ivf_add(assigned0, centroids, drop)
     queries = spark.createDataFrame(rows[:5], ["vec_id", "embedding"])
-    got = ivf_top_k(updated, centroids, queries, k=3, nprobe=2).collect()
+    monkeypatch.setattr(ivf, "_IVF_NPROBE", 2)
+    got = ivf_top_k(updated, centroids, queries).collect()
     top1 = {r["query_id"]: r["neighbor_id"] for r in got if r["rank"] == 1}
     # each original's nearest neighbor is its planted drop twin
     hits = sum(1 for q, n in top1.items() if n == 79 - q)
@@ -667,7 +656,7 @@ def test_rrf_fuse_both_lists_dominate(spark):
     )
     out = {
         r["doc_id"]: (r["rrf_score"], r["fused_rank"])
-        for r in rrf_fuse(a, b, k=10).collect()
+        for r in rrf_fuse(a, b).collect()
     }
     assert out[10][1] == 1  # in both lists at rank 1 → wins
     # scores are rounded to 6 decimals in the projection
@@ -695,7 +684,7 @@ def test_jaccard_top_k_self_excluded_and_ranked(spark):
     q = docs.filter(F.col("doc_id") == 0)
     got = {
         r["doc_id"]: r["rank"]
-        for r in jaccard_top_k(q, docs, n=3, k=10).collect()
+        for r in jaccard_top_k(q, docs).collect()
     }
     assert 0 not in got  # self excluded
     assert got[3] == 1 and got[1] == 2  # 3 shares 2 grams, 1 shares 1
@@ -748,11 +737,11 @@ def test_semantic_dedup_incremental_empty_standing_equals_full(spark):
     inc = {
         r["vec_id"]: (r["cluster"], r["centroid_sim"], r["kept"])
         for r in semantic_dedup_incremental(
-            empty, drop, centroids, threshold=0.98
+            empty, drop, centroids
         ).collect()
     }
     full = {
         r["vec_id"]: (r["cluster"], r["centroid_sim"], r["kept"])
-        for r in semantic_dedup(drop, centroids, threshold=0.98).collect()
+        for r in semantic_dedup(drop, centroids).collect()
     }
     assert inc == full and len(inc) > 0

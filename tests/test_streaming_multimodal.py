@@ -64,9 +64,7 @@ def test_final_flush_skip_is_output_equal_for_join_and_dedup(spark):
         )
         c = read_events_stream(spark, SF).filter(F.col("event_type") == "click")
         out = run_stream_to_memory(
-            stream_stream_interval_join(
-                p, c, on="user_id", interval="INTERVAL 1 HOUR"
-            ),
+            stream_stream_interval_join(p, c),
             shuffle_partitions=2,
             **kw,
         )
@@ -233,7 +231,7 @@ def test_stream_static_enrich_matches_batch(spark):
     # every window still inside the 2h watermark delay when the AvailableNow
     # run terminates, leaving the stream short of the batch twin's tail.
     got = run_stream_to_memory(
-        stream_static_enrich(read_events_stream(spark, sf), dim, "event_type"),
+        stream_static_enrich(read_events_stream(spark, sf), dim),
         output_mode="complete",
     )
     batch = (
@@ -270,8 +268,6 @@ def test_stream_stream_join_equals_batch(spark):
         stream_stream_interval_join(
             read_events_stream(spark, sf).filter(F.col("event_type") == "purchase"),
             read_events_stream(spark, sf).filter(F.col("event_type") == "click"),
-            on="user_id",
-            interval="INTERVAL 1 HOUR",
         )
     )
     ev = load_events(spark, sf)
@@ -323,7 +319,7 @@ def test_stream_key_upsert_incremental_and_idempotent(spark, tmp_path):
 
     key_dir = str(tmp_path / "key")
     stream_key_table_upsert(
-        read_events_stream(spark, "/root/testdata/sf0.001"), key_dir, "user_id"
+        read_events_stream(spark, "/root/testdata/sf0.001"), key_dir
     )
     first = {
         r["user_id"]: r["user_id_"]
@@ -333,7 +329,7 @@ def test_stream_key_upsert_incremental_and_idempotent(spark, tmp_path):
     # second ingest at a larger sf: existing mappings must survive
     # untouched, new uids appended
     stream_key_table_upsert(
-        read_events_stream(spark, "/root/testdata/sf0.01"), key_dir, "user_id"
+        read_events_stream(spark, "/root/testdata/sf0.01"), key_dir
     )
     second = {
         r["user_id"]: r["user_id_"]
@@ -344,7 +340,7 @@ def test_stream_key_upsert_incremental_and_idempotent(spark, tmp_path):
         assert second[uid] == pseudo
     # idempotent: re-draining the same stream changes nothing
     stream_key_table_upsert(
-        read_events_stream(spark, "/root/testdata/sf0.01"), key_dir, "user_id"
+        read_events_stream(spark, "/root/testdata/sf0.01"), key_dir
     )
     third = {
         r["user_id"]: r["user_id_"]
@@ -403,7 +399,6 @@ def test_stream_checkpoint_lands_on_tmpfs_and_is_cleaned(spark, tmp_path):
         "streaming_minhash_ingest": lambda: streaming_minhash_ingest(
             read_documents_stream(spark, SF),
             str(tmp_path / "neardup"),
-            shuffle_partitions=2,
         ).count(),
     }
     # the first drain of a session unpacks the JVM's native codecs and

@@ -15,10 +15,6 @@ from mape_calculation_and_anonymization_spark.streaming.neardup import (
 
 SF = "/root/testdata/sf0.001"
 
-# the batch pipeline's signature is fixed at 32 hashes, 8 bands, seed 42
-FULL_PARAMS = dict(shingle_k=3, threshold=0.6, shingle_mode="word")
-PARAMS = dict(FULL_PARAMS, num_hashes=32, bands=8, seed=42)
-
 
 def _pair_set(df):
     return {
@@ -58,7 +54,7 @@ def _run_stream(spark, src_dir, state_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
-    return streaming_minhash_ingest(stream, state_dir, **PARAMS)
+    return streaming_minhash_ingest(stream, state_dir)
 
 
 @pytest.fixture(scope="module")
@@ -75,7 +71,7 @@ def corpus(spark):
 @pytest.fixture(scope="module")
 def full_pairs(corpus):
     return _pair_set(
-        minhash_near_duplicates(corpus, **FULL_PARAMS).select(
+        minhash_near_duplicates(corpus).select(
             "id_a", "id_b", "jaccard_sim"
         )
     )
@@ -147,7 +143,6 @@ def test_drain_start_failure_restores_session(spark, tmp_path):
         streaming_minhash_ingest(
             spark.range(3).selectExpr("id AS doc_id", "'x' AS text"),
             str(tmp_path / "state"),
-            shuffle_partitions=3,
         )
     assert spark.conf.get(parts) == before
     assert spark.streams.active == []

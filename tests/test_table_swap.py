@@ -136,7 +136,7 @@ def test_failed_compaction_keeps_the_table(spark, tmp_path, monkeypatch, failure
     files = sorted(os.listdir(path))
     _inject(monkeypatch, sinks, failure)
     with pytest.raises((RuntimeError, OSError), match="injected"):
-        compact_parquet(spark, path, target_partitions=2)
+        compact_parquet(spark, path)
     assert sorted(os.listdir(path)) == files
     assert _rows(spark, path) == before
     assert os.listdir(tmp_path) == ["frag"]
@@ -188,6 +188,6 @@ def test_delete_keys_name_clash_fails_and_keeps_the_table(
 
     monkeypatch.setattr(sinks, "write_parquet_snappy", write_then_clash)
     with pytest.raises(FileExistsError):
-        sinks.delete_keys(spark, path, "user_id", keys)
+        sinks.delete_keys(spark, path, keys)
     assert _rows(spark, path) == before
     assert os.listdir(tmp_path) == ["t"]

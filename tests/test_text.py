@@ -25,8 +25,8 @@ def test_token_counts(spark):
     assert _one(spark, "", token_count("text")) == 0
     assert _one(spark, "   ", token_count("text")) == 0
     # BPE-ish: words + punctuation marks separately
-    assert _one(spark, "hi, world!", bpeish_token_count("text")) == 4
-    assert _one(spark, "", bpeish_token_count("text")) == 0
+    assert _one(spark, "hi, world!", bpeish_token_count()) == 4
+    assert _one(spark, "", bpeish_token_count()) == 0
 
 
 def test_ratios(spark):
@@ -45,23 +45,23 @@ def test_quality_monotonic(spark):
 
 
 def test_language_id(spark):
-    assert _one(spark, "the cat is in the house", language_id("text")) == "en"
-    assert _one(spark, "der hund ist nicht auf der straße", language_id("text")) == "de"
-    assert _one(spark, "el perro es un animal que vive en la casa", language_id("text")) == "es"
-    assert _one(spark, "xyzzy qwerty", language_id("text")) == "und"
+    assert _one(spark, "the cat is in the house", language_id()) == "en"
+    assert _one(spark, "der hund ist nicht auf der straße", language_id()) == "de"
+    assert _one(spark, "el perro es un animal que vive en la casa", language_id()) == "es"
+    assert _one(spark, "xyzzy qwerty", language_id()) == "und"
 
 
 def test_fingerprint_deterministic_and_sensitive(spark):
-    f1 = _one(spark, "hello world", fingerprint("text"))
-    f2 = _one(spark, "hello world", fingerprint("text"))
-    f3 = _one(spark, "hello worle", fingerprint("text"))
+    f1 = _one(spark, "hello world", fingerprint())
+    f2 = _one(spark, "hello world", fingerprint())
+    f3 = _one(spark, "hello worle", fingerprint())
     assert f1 == f2 != f3
     # matches the straightforward Python reduction
     expect = 0
     for ch in "hello world":
         expect = (expect * 31 + ord(ch)) % ((1 << 31) - 1)
     assert f1 == expect
-    assert _one(spark, "", fingerprint("text")) == 0
+    assert _one(spark, "", fingerprint()) == 0
 
 
 def test_pack_sequences_matches_serial_prefix_sum(spark):
@@ -76,13 +76,13 @@ def test_pack_sequences_matches_serial_prefix_sum(spark):
     )
     got = {
         r["doc_id"]: (r["n_tokens"], r["seq_id"])
-        for r in pack_sequences(docs, budget=50, shard_size=100).collect()
+        for r in pack_sequences(docs).collect()
     }
     # independent serial reference: exclusive running sum over id order
     off = 0
     for i in range(600):
         n = (i * 7) % 13 + 1
-        assert got[i] == (n, off // 50), f"doc {i}"
+        assert got[i] == (n, off // 512), f"doc {i}"
         off += n
     # seq ids are contiguous from 0
     seqs = sorted({s for _, s in got.values()})
@@ -108,7 +108,7 @@ def test_contamination_check_planted_overlap(spark):
     )
     got = {
         r["doc_id"]: r["n_shared_shingles"]
-        for r in contamination_check(train, bench, n=8).collect()
+        for r in contamination_check(train, bench).collect()
     }
     assert 100 in got and got[100] >= 1
     assert 101 not in got
@@ -141,7 +141,7 @@ def test_normalize_text_canonical_forms(spark):
         normalize_text,
     )
 
-    n = lambda t: _one(spark, t, normalize_text("text"))  # noqa: E731
+    n = lambda t: _one(spark, t, normalize_text())  # noqa: E731
     # case / punctuation / whitespace-layout variants converge
     assert n("Hello,   World!") == n("hello world") == "hello world"
     assert n("a-b_c") == "a b c"
@@ -160,7 +160,7 @@ def test_word_bigrams_edges(spark):
         word_bigrams,
     )
 
-    b = lambda t: _one(spark, t, word_bigrams("text"))  # noqa: E731
+    b = lambda t: _one(spark, t, word_bigrams())  # noqa: E731
     assert b("The cat  sat down") == ["the cat", "cat sat", "sat down"]
     assert b("solo") == []
     assert b("") == []
@@ -185,12 +185,12 @@ def test_language_id_bulk_equals_per_row_expression(spark):
     per_row = {
         r["doc_id"]: r["p"]
         for r in docs.select(
-            "doc_id", language_id("text").alias("p")
+            "doc_id", language_id().alias("p")
         ).collect()
     }
     bulk = {
         r["doc_id"]: r["predicted"]
-        for r in language_id_bulk(docs, "text", ["doc_id"]).collect()
+        for r in language_id_bulk(docs).collect()
     }
     assert per_row == bulk
     # synthetic corpus exercises both branches
@@ -215,11 +215,11 @@ def test_language_id_bulk_tie_and_und_cases(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     per_row = {
         r["doc_id"]: r["p"]
-        for r in df.select("doc_id", language_id("text").alias("p")).collect()
+        for r in df.select("doc_id", language_id().alias("p")).collect()
     }
     bulk = {
         r["doc_id"]: r["predicted"]
-        for r in language_id_bulk(df, "text", ["doc_id"]).collect()
+        for r in language_id_bulk(df).collect()
     }
     assert bulk == per_row
     assert bulk[2] == "und" and bulk[4] == "und"
@@ -275,7 +275,7 @@ def test_ngram_novelty_hand_example(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r["doc_id"]: (r["n_distinct_shingles"], r["n_novel"], r["novelty_rate"])
-        for r in ngram_novelty(df, n=5).collect()
+        for r in ngram_novelty(df).collect()
     }
     assert got[1] == (1, 1, 1.0)
     assert got[2] == (1, 0, 0.0)
@@ -354,6 +354,7 @@ def test_source_overlap_matrix(spark, monkeypatch):
         source_overlap_matrix,
     )
 
+    monkeypatch.setattr(text, "_OVERLAP_N", 3)
     docs = spark.createDataFrame(
         [
             ("A", "a b c d e"),   # {abc, bcd, cde}
@@ -367,7 +368,7 @@ def test_source_overlap_matrix(spark, monkeypatch):
         (r["source_a"], r["source_b"]): (
             r["shared_shingles"], r["overlap_coeff"]
         )
-        for r in source_overlap_matrix(docs, n=3).collect()
+        for r in source_overlap_matrix(docs).collect()
     }
     assert got == {
         ("A", "B"): (1, 0.333333),
@@ -378,20 +379,22 @@ def test_source_overlap_matrix(spark, monkeypatch):
     monkeypatch.setattr(text, "_MAX_SOURCES_PER_SHINGLE", 2)
     capped = {
         (r["source_a"], r["source_b"]): r["shared_shingles"]
-        for r in source_overlap_matrix(docs, n=3).collect()
+        for r in source_overlap_matrix(docs).collect()
     }
     assert capped == {("A", "D"): 1}
 
 
-def test_contamination_near_dup(spark):
+def test_contamination_near_dup(spark, monkeypatch):
     """Near-dup decontamination pin: a lightly-edited train copy of a
     benchmark doc is flagged with its exact Jaccard; an unrelated doc
     and a one-shared-shingle doc (the case contamination_check WOULD
     flag) stay below the threshold."""
+    from mape_calculation_and_anonymization_spark.operators import text
     from mape_calculation_and_anonymization_spark.operators.text import (
         contamination_near_dup,
     )
 
+    monkeypatch.setattr(text, "_NEAR_DUP_THRESHOLD", 0.4)
     bench = spark.createDataFrame(
         [(1, "the quick brown fox jumps over the lazy dog today")],
         ["doc_id", "text"],
@@ -401,7 +404,7 @@ def test_contamination_near_dup(spark):
             # one word changed -> high jaccard, must be flagged
             (10, "the quick brown fox leaps over the lazy dog today"),
             # shares exactly one 3-gram ("the quick brown") -> tiny
-            # jaccard, must NOT be flagged at 0.5
+            # jaccard, must NOT be flagged at 0.4
             (11, "the quick brown bear sleeps in a very deep cave"),
             (12, "completely unrelated text about parquet files"),
         ],
@@ -409,7 +412,7 @@ def test_contamination_near_dup(spark):
     )
     got = {
         (r["train_id"], r["bench_id"]): r["jaccard_sim"]
-        for r in contamination_near_dup(train, bench, threshold=0.4).collect()
+        for r in contamination_near_dup(train, bench).collect()
     }
     assert set(got) == {(10, 1)}
     # 8 shingles each; the changed word breaks the 3 grams covering
@@ -451,9 +454,7 @@ def test_decontaminate_corpus_decision_surface(spark):
     )
     got = {
         r["doc_id"]: r.asDict()
-        for r in decontaminate_corpus(
-            train, bench, n=3, drop_threshold=0.5
-        ).collect()
+        for r in decontaminate_corpus(train, bench).collect()
     }
     assert set(got) == {1, 2, 3, 4}
     assert (
@@ -513,7 +514,7 @@ def test_decontaminate_corpus_two_spans(spark):
         [(1, "alpha beta gamma filler words delta epsilon zeta tail")],
         ["doc_id", "text"],
     )
-    r = decontaminate_corpus(train, bench, n=3, drop_threshold=0.9).collect()[0]
+    r = decontaminate_corpus(train, bench).collect()[0]
     assert (r["action"], r["n_spans_cut"], r["tokens_removed"]) == ("cut", 2, 6)
     assert r["n_tokens_clean"] == 3  # filler words tail
 
@@ -529,7 +530,7 @@ def test_repetition_stats_columns_and_ratios(spark):
     df = spark.createDataFrame(
         [(1, "a b c a b c"), (2, "x y"), (3, None)], ["doc_id", "text"]
     )
-    out = ngram_repetition_stats(df, "doc_id", "text", 3)
+    out = ngram_repetition_stats(df)
     assert out.columns == ["doc_id", "rep3"]
     rows = {r["doc_id"]: r["rep3"] for r in out.collect()}
     # "a b c a b c": grams [abc,bca,cab,abc] → 1 - 3/4

@@ -5,6 +5,7 @@ through our own reader plus a raw-XML structure check is the gate."""
 
 import math
 import os
+import re
 import zipfile
 import xml.etree.ElementTree as ET
 
@@ -224,6 +225,30 @@ def test_excel_sheet_names_cut_to_the_same_name_fail(tmp_path):
     long_a, long_b = "s" * 31 + "_a", "s" * 31 + "_b"
     with pytest.raises(ValueError, match=f"{long_a}.*{long_b}"):
         write_excel_workbook(path, **{long_a: one, long_b: one})
+    assert not os.path.exists(path)
+
+
+@pytest.mark.parametrize(
+    "sheet, pdf, where",
+    [
+        ("daily", pd.DataFrame({"a": ["ok", "bad\x01char"]}), "'daily' cell A3"),
+        ("daily", pd.DataFrame({"a\x1fb": [1]}), "'daily' cell A1"),
+        ("da\x0bily", pd.DataFrame({"a": [1]}), "sheet name 'da\\x0bily'"),
+        ("daily", pd.DataFrame({"a": ["bad\uffffchar"]}), "'daily' cell A2"),
+        ("daily", pd.DataFrame({"a": ["bad\ufffechar"]}), "'daily' cell A2"),
+        ("daily", pd.DataFrame({"a\ud800": [1]}), "'daily' cell A1"),
+        ("da\udfffily", pd.DataFrame({"a": [1]}), "sheet name 'da\\udfffily'"),
+    ],
+)
+def test_xlsx_control_characters_fail_before_writing(tmp_path, sheet, pdf, where):
+    """XML 1.0 forbids most control characters, lone surrogates and
+    U+FFFE/U+FFFF outright: a data cell, header or sheet name holding
+    one must raise naming the sheet and cell, not write a workbook no
+    reader can parse, and must leave no partial file."""
+    path = str(tmp_path / "ctl.xlsx")
+    good = pd.DataFrame({"x": [1]})
+    with pytest.raises(ValueError, match=re.escape(where)):
+        write_excel_workbook(path, first=good, **{sheet: pdf})
     assert not os.path.exists(path)
 
 
